@@ -4,23 +4,11 @@
 # Snapshots the classes dir first: Spark's ClosureCleaner re-reads class
 # bytes at job-submit time, so an sbt recompile under a running JVM crashes
 # it (NPE: "capturingClassReader is null").
+# Cores and heap come from the host (scripts/host_env.sh).
 # Usage: scripts/run_main.sh graft.BenchPipeline [args...]
-cd /root/repo
+. "$(dirname "$0")/host_env.sh"
+cd "$GRAFT_ROOT"
 SNAP=$(mktemp -d /tmp/graft_classes_XXXX)
 cp -r target/scala-2.13/classes/. "$SNAP/"
 trap 'rm -rf "$SNAP"' EXIT
-java -Xmx100g \
-  --add-opens=java.base/java.lang=ALL-UNNAMED \
-  --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
-  --add-opens=java.base/java.lang.reflect=ALL-UNNAMED \
-  --add-opens=java.base/java.io=ALL-UNNAMED \
-  --add-opens=java.base/java.net=ALL-UNNAMED \
-  --add-opens=java.base/java.nio=ALL-UNNAMED \
-  --add-opens=java.base/java.util=ALL-UNNAMED \
-  --add-opens=java.base/java.util.concurrent=ALL-UNNAMED \
-  --add-opens=java.base/java.util.concurrent.atomic=ALL-UNNAMED \
-  --add-opens=java.base/sun.nio.ch=ALL-UNNAMED \
-  --add-opens=java.base/sun.nio.cs=ALL-UNNAMED \
-  --add-opens=java.base/sun.security.action=ALL-UNNAMED \
-  --add-opens=java.base/sun.util.calendar=ALL-UNNAMED \
-  -cp "$SNAP:/opt/spark/jars/*" "$@"
+"${GRAFT_JAVA[@]}" -cp "$SNAP:/opt/spark/jars/*" "$@"

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Bench harness: runs every SparkEntry query against
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line
   * `{"metric":"total","value":<sec>,...,"queries":{name:sec},"sf":...}`.
@@ -14,7 +12,6 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // optional comma-separated key subset — the fresh-JVM isolation loop for
     // chasing per-query regressions without the shared-JVM ordering noise
     val only: Option[Set[String]] =
@@ -32,18 +29,10 @@ object Bench {
     // of one extra bench pass. Set SPARK_GRAFT_REPS=1 for quick dev loops.
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
     require(reps >= 1, s"SPARK_GRAFT_REPS must be >= 1, got $reps")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // ERROR, not WARN: the driver parses the bench JSON from process output,
-    // and a stray late WARN line (e.g. round 1's WindowExec warning) can
-    // land after the JSON and break that parse.
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftConf.ensure(spark)
+    // log level ERROR (the factory's), not WARN: the driver parses the bench
+    // JSON from process output, and a stray late WARN line (e.g. round 1's
+    // WindowExec warning) can land after the JSON and break that parse.
+    val spark = GraftSession.local(GraftSession.cpus)
     // Untimed JVM warm-up: the first timed keys otherwise absorb 5-9 s of
     // one-time classloader/janino/scheduler cost (measured in BASELINE.md's
     // round-3 adjudication — cold rep1 5-8 s vs warm 0.6-1.1 s on UNCHANGED
@@ -81,34 +70,6 @@ object Bench {
     // break downstream parsers).
     def r3(v: Double): String =
       BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
-    // Suite-contention fix (round-8): most keys localCheckpoint an
-    // intermediate frame; those blocks live in the BlockManager until the
-    // ContextCleaner happens to GC the referencing RDD. Across 215 keys the
-    // un-collected blocks pile up and pressure later sort/shuffle-bound keys
-    // (round-7 floors: graph_triangles 23.3 s in-suite vs 7.3 s isolated).
-    // Dropping each key's persisted blocks right after its timing window
-    // returns the JVM to a near-isolated state for the next key. Safe: every
-    // query fn is self-contained; nothing is shared across keys.
-    // SPARK_GRAFT_CLEANUP: per-key persisted-block cleanup knob (round-8
-    // suite-contention experiment). "async"/"blocking" unpersist every
-    // localCheckpoint block after each key's timed window; "none" is the
-    // r7 behavior (lazy ContextCleaner). The first A/B (async 431 s,
-    // blocking 524 s, none 571 s, run back to back) was confounded by
-    // visibly rising host noise; a round-8 INTERLEAVED ABAB on the 218-key
-    // suite (REPS=1, alternating async/none twice) settled it: async
-    // 409.9 / 403.1 s vs none 372.7 / 365.1 s — "none" wins ~10%
-    // consistently. Eagerly dropping blocks forces later consumers of the
-    // session's still-warm executor memory to refetch/recompute more than
-    // the freed memory buys on this 128 GiB box. Default stays "none"
-    // (measured best AND the judged configuration); the knob remains for
-    // memory-constrained hosts where eviction pressure may flip the trade.
-    val cleanup = sys.env.getOrElse("SPARK_GRAFT_CLEANUP", "none")
-    def dropBlocks(): Unit = cleanup match {
-      case "none" => ()
-      case mode =>
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(mode == "blocking"))
-        spark.sharedState.cacheManager.clearCache()
-    }
     def timeOne(name: String): Double = {
       val t0 = System.nanoTime()
       val v =
@@ -118,7 +79,6 @@ object Bench {
           System.err.println(s"[bench fail] $name: ${e.getClass.getName}: " +
             String.valueOf(e.getMessage).take(300))
           -1.0 }
-      dropBlocks() // untimed: cleanup belongs to the suite, not the key
       // immediate SELF-STAMPED per-key stderr record (epoch ms at line
       // emit): reconstructs each key's wall-clock window for correlation
       // with GC/vmstat logs. Self-stamped because a downstream pipe

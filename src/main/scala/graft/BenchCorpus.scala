@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.llm.CorpusPipeline
 
 /** End-to-end bench of the COMPOSED training-data pipeline
@@ -25,16 +23,7 @@ object BenchCorpus {
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val workDir = if (args.length > 1) args(1) else "/tmp/graft_bench_corpus"
     val outFile = if (args.length > 2) args(2) else "BENCH_corpus.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftConf.ensure(spark)
+    val spark = GraftSession.local(GraftSession.cpus)
 
     val stages = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     // SPARK_GRAFT_LINE_W > 0 enables the CCNet line-dedup stage (0.5) at

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.analog.{OccurrenceAnalog => OA}
@@ -32,16 +31,7 @@ object BenchPipeline {
     // artifact name: BENCH_pipeline.json for the sf0.1 contract run, an
     // explicit suffix (e.g. BENCH_pipeline_10x.json) for scale studies
     val outFile = if (args.length > 4) args(4) else "BENCH_pipeline.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftConf.ensure(spark)
+    val spark = GraftSession.local(GraftSession.cpus)
 
     val occ = Tables.events(spark, sfDir).filter(OA.qualityFilter)
       .select(col("event_id"), col("user_id"), col("event_type"),

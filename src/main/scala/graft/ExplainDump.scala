@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dump `.explain("formatted")` for a comma-separated key list to files —
@@ -8,8 +7,8 @@ import java.nio.file.{Files, Paths}
   *
   * Usage: ExplainDump <outDir> <tag> <key1,key2,...> [sfDir]
   *
-  * Runs at the BENCH width (local[$SPARK_GRAFT_CPUS], shuffle.partitions =
-  * cpus, AQE on) so the captured plans are the ones the bench actually
+  * Runs at the BENCH width ([[GraftSession.local]] on [[GraftSession.cpus]])
+  * so the captured plans are the ones the bench actually
   * executes. Keys with eager localCheckpoint stages run their build jobs at
   * construction time; the formatted plan of the final frame is what the
   * timed action executes.
@@ -21,18 +20,9 @@ object ExplainDump {
     val tag = args(1)
     val keys = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val d = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val unknown = keys.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown keys: ${unknown.mkString(", ")}")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftConf.ensure(spark)
+    val spark = GraftSession.local(GraftSession.cpus)
     Files.createDirectories(outDir)
     for (k <- keys) {
       val df = SparkEntry.queries(k)(spark, d)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 object Plans {
   def main(args: Array[String]): Unit = {
@@ -10,108 +9,10 @@ object Plans {
     // output path so a width-sweep never clobbers the canonical audit.
     val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "4")
     val outPath = if (args.length > 0) args(0) else "/root/repo/PLANS.md"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftConf.ensure(spark)
+    val spark = GraftSession.local(4, shuffle.toInt)
     val d = "/root/testdata/sf0.01"
-    val keys = Seq("scan_project", "q1_agg", "semi_join_threshold", "join_broadcast",
-      "agg_collect_pixel_features", "dedup_minhash", "similarity_topk", "sessionize_batch",
-      // round 2: the rewritten scale shapes
-      "window_ntile", "vocab_topk", "similarity_lsh", "dedup_verified", "dedup_clusters",
-      // round 2: corpus-hygiene additions
-      "doc_repetition", "decontaminate", "pii_redact",
-      // round 2: trained quantizer, mixing, packing, incremental + composed
-      "similarity_ivf_trained", "sample_stratified", "pack_sequences",
-      "dedup_incremental", "tfidf_topk", "corpus_clean",
-      // round 3: ngram LM counts, embedding CC, mixing report, bounded-error HLL
-      "ngram_counts", "semantic_clusters", "mix_report", "agg_approx_distinct",
-      // round 3 (late): banded range join, z-order layout, reservoir sample,
-      // edit-distance verification, NFC, semantic incremental
-      "join_range", "zorder_layout", "sample_reservoir", "dedup_editdistance",
-      "text_normalize", "semantic_incremental",
-      // round 4: recall audit, production-shape percentile sketch,
-      // decimal-safe heavy hitters
-      "similarity_recall", "agg_approx_percentile_sketch", "heavy_hitters",
-      "agg_skew_salted", "join_skew_salted",
-      // round 4 (late): recall trio completion, shard export, mixing loop
-      "similarity_recall_ivf", "similarity_recall_pq", "export_shards",
-      "mix_rates", "mix_apply",
-      // round 4 (cont.): ngram hygiene, event analytics, bloom pre-filter
-      "boilerplate_flag", "lm_score", "bpe_pairs", "events_retention",
-      "events_funnel", "state_intervals", "events_anomaly", "join_bloom",
-      "multimodal_neardup", "sketch_kmv_overlap", "bpe_merges", "bpe_apply",
-      "events_anomaly_robust", "events_value_rank", "events_top_paths",
-      "curriculum_buckets", "export_manifest",
-      // round 5: single-pass funnel, sampled-training quantizer, scaled
-      // pack buckets, tokenizer fertility, seeded corpus shuffle
-      "quantizer_kmeans", "bpe_fertility", "corpus_shuffle",
-      // round 5 (cont.): triangle counting, containment, novelty,
-      // RANGE frame, Markov transitions, temperature mixing
-      "graph_triangles", "dedup_containment", "corpus_novelty",
-      "window_range_frame", "events_transitions", "mix_temperature",
-      "market_basket", "join_asof_nearest",
-      // round 6: span-level dedup, distribution diagnostics, importance
-      // sampling
-      "substring_dedup", "doc_dup_frac", "corpus_divergence",
-      "source_classifier", "sample_importance",
-      // round 6 (cont.): no-split packing, head-mass, one-pass profiling
-      "pack_nosplit", "vocab_coverage", "stats_profile",
-      // round 6 (cont.): span islands, span admission, skew reports,
-      // zone maps, incremental pyramid, grouped percentiles, DAU/WAU,
-      // exact Gram
-      "doc_dup_spans", "substring_incremental", "skew_histogram",
-      "skew_salt_plan", "zonemap_prune", "pyramid_incremental",
-      "quality_report", "events_active_users", "embedding_gram",
-      // round 6 (cont.): SCD2 islands, k-anonymity audit, seasonal
-      // baseline, prefix-sum compaction binning
-      "scd2_history", "k_anonymity", "events_seasonal", "compaction_plan",
-      // round 6 (cont.): integer power-iteration PCA, LSH recall audit,
-      // mutual-kNN graph
-      "embedding_pc1", "dedup_recall", "knn_mutual",
-      // round 6 (cont.): dimension-snapshot join, CDC diff, exact corr
-      "join_scd2", "cdc_changelog", "stats_corr",
-      // round 6 (cont.): suppression release, winsorized stats, contract
-      // checks, degree diagnostics
-      "k_anonymity_release", "agg_winsorized", "dq_report",
-      "graph_degree_dist",
-      // round 6 (cont.): l-diversity audit, fixed-round k-core peel,
-      // eval-hygiene split pair
-      "l_diversity", "graph_kcore", "corpus_split", "split_leak_audit",
-      // round 6 (cont.): sparse lexical retrieval + hybrid fusion
-      "sparse_topk", "bm25_topk", "sparse_recall", "hybrid_topk",
-      // round 6 (cont.): t-closeness fold, dense time fill, Heaps' curve,
-      // co-occurrence lift
-      "t_closeness", "events_gapfill", "vocab_growth", "pmi_topk",
-      // round 6 (cont.): support-filtered co-purchase components, linear
-      // value interpolation
-      "graph_components", "events_interpolate", "sketch_countmin",
-      "quality_sweep",
-      // round 7: span-scrub emitter, URL stage-0 dedup, per-domain caps,
-      // data-constrained epoch planning
-      "substring_scrub", "dedup_url", "domain_caps", "mix_epochs",
-      // round 7 (cont.): retrieval-quality audit, contrastive mining,
-      // semantic split audit, tuning sweeps, kNN label propagation,
-      // domain-disjoint splitting
-      "similarity_mrr", "hard_negatives", "split_leak_semantic",
-      "semantic_sweep", "lsh_param_sweep", "knn_classify",
-      "split_domain_disjoint",
-      // round 7 (cont.): packing-config sweep, shard-balance audit,
-      // quality-aware dedup keeper, SemDeDup diversity keeper,
-      // Bloom admission gate
-      "pack_sweep", "export_balance", "dedup_keep_best",
-      "semantic_keep_diverse", "dedup_bloom_gate",
-      // round 7 (cont.): domain review list, cluster-label purity
-      "quality_by_domain", "semantic_purity",
-      // round 8: RHO-LOSS selection, DoReMi reweighting, release card,
-      // winnowing fingerprints + overlap
-      "rholoss_select", "mix_doremi", "dataset_card",
-      "winnow_fingerprint", "winnow_overlap", "winnow_incremental",
-      "events_ewma", "events_ewma_backtest")
     val sb = new StringBuilder
-    sb.append(s"# PLANS — executed-plan review of headline queries (sf0.01, local[4], AQE on, shuffle.partitions=$shuffle)\n\n")
+    sb.append(s"# PLANS — executed-plan review of every query key (sf0.01, local[4], AQE on, shuffle.partitions=$shuffle)\n\n")
     sb.append("Width audit (round 9, 2026-08-16): regenerated at shuffle.partitions=200\n")
     sb.append("and diffed against this width-4 baseline — 0 skeleton flips across all\n")
     sb.append("260 keys (exchanges/broadcasts/scans identical), so the committed audit's\n")
@@ -179,10 +80,10 @@ object Plans {
       }
       sb.append("```\n\n")
     }
-    for (q <- keys) {
+    // per-key final-plan skeletons, every key in name order
+    for (q <- plans.keys.toSeq.sorted) {
       val plan = plans(q)
       val nEx = "Exchange".r.findAllIn(plan).length
-      
       sb.append(s"## $q — $nEx exchanges\n\n```\n")
       plan.linesIterator
         .filter(l => l.contains("Exchange") || l.contains("Scan parquet") ||

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.analog.{OccurrenceAnalog => OA}
 
@@ -16,15 +15,7 @@ object RunPipeline {
     val workDir = if (args.length > 1) args(1) else "/tmp/graft_pipeline"
     val maxZoom = if (args.length > 2) args(2).toInt else 2
     val configYml = if (args.length > 3) Some(args(3)) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftConf.ensure(spark)
+    val spark = GraftSession.local(GraftSession.cpus)
 
     val occ = Tables.events(spark, sfDir).filter(OA.qualityFilter)
       .select(col("event_id"), col("user_id"), col("event_type"),

@@ -1,16 +1,16 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 import graft.analog.{OccurrenceAnalog => OA}
-import graft.expr.{BorYear, IntMath, Salt}
-import org.apache.spark.sql.types.DecimalType
+import graft.keys._
 import graft.tiles._
 
 /** Driver contract — one `queries` entry + oracle SQL per operator from
-  * SURVEY.md §2 (+ engine additions §7). Every query ends with a total-order
+  * SURVEY.md §2 (+ engine additions §7). Each key is declared once, as a
+  * [[graft.keys.Key]] in its family's file under `graft/keys/`, with its
+  * builder next to its oracle. Every query ends with a total-order
   * ORDER BY; doubles that aggregate are computed on DECIMAL (exact,
   * order-independent) and cast back; collect_lists are array_sort'ed and
   * serialized to canonical strings so the DuckDB compare is bit-stable.
@@ -24,8656 +24,29 @@ object SparkEntry {
   val SaltModulo = 10
   val Threshold = 500L
 
-  private def events(s: SparkSession, d: String) = Tables.events(s, d)
-  private def lineitem(s: SparkSession, d: String) = Tables.lineitem(s, d)
-  private def orders(s: SparkSession, d: String) = Tables.orders(s, d)
-
-  /** Occurrence-analog frame (keeps raw id cols for mapKeys derivation). */
-  private def occ(s: SparkSession, d: String): DataFrame =
-    events(s, d)
-      .filter(OA.qualityFilter)
-      .select(
-        col("event_id"), col("user_id"), col("event_type"),
-        OA.lat.as("lat"), OA.lng.as("lng"),
-        col("event_type").as("basisOfRecord"),
-        OA.yearCol.as("year"))
-
-  /** event_id × exploded map view key (G1). */
-  private def exploded(s: SparkSession, d: String): DataFrame =
-    events(s, d)
-      .filter(OA.qualityFilter)
-      .select(col("event_id"), explode(OA.mapKeysArray).as("map_key"))
-
-  /** Canonical co-purchase edge frame (a < b, distinct) — the shared
-    * graph-family edge build. The distinct (ok, pk) item list is hash-
-    * repartitioned on `ok` FIRST, so the per-order pairing self-join
-    * needs NO exchange of its own (both sides inherit the partitioning;
-    * the identical scan+shuffle subtrees collapse via exchange/stage
-    * reuse inside one action): 1 shuffle of the raw pair stream where
-    * the old shape paid 3 (distinct on (ok,pk) + both SMJ sides) plus an
-    * eager li checkpoint job. A/B at sf0.1 (degree_dist consumer,
-    * interleaved): old min 4.39 s, new min 1.88 s. Callers that consume
-    * the result across MULTIPLE actions (iterative peels/BFS) must still
-    * localCheckpoint the returned frame, as before — within one action
-    * stage reuse covers repeated reads.
-    */
-  private def coPurchaseCanon(s: SparkSession, d: String): DataFrame = {
-    val li = lineitem(s, d)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-      .repartition(col("ok")).distinct()
-    val edges = li.as("l").join(li.as("r"),
-        col("l.ok") === col("r.ok") && col("l.pk") < col("r.pk"))
-      .select(col("l.pk").as("src"), col("r.pk").as("dst"))
-    graft.ops.Triangles.canonical(edges, "src", "dst")
-  }
-
-  /** Pre-aggregated (map_key, lat, lng, bor_year) counts (A2 / prepareInput). */
-  private def preAgg(s: SparkSession, d: String): DataFrame =
-    Pyramid.prepareInput(occ(s, d), OA.mapKeysArray)
-      .withColumnRenamed("mapKey", "map_key")
-      .withColumnRenamed("borYear", "bor_year")
-      .withColumnRenamed("occCount", "occ_count")
-
-  /** Exact money arithmetic: tight precisions so products never hit Spark's
-    * 38-digit cap (which would trigger precision-loss rounding and break the
-    * bit-exact oracle compare).
-    */
-  private def decimal2(c: Column) = c.cast("decimal(12,2)")
-  private def decimalFrac(c: Column) = c.cast("decimal(4,2)")
-
-  // ---------------------------------------------------------------- SQL CTEs
-
-  /** Occurrence-analog CTE prefix shared by oracle queries. */
-  private val sqlOcc: String =
-    s"""WITH occ AS (
-       |  SELECT event_id, user_id, event_type, value, ts,
-       |         ${OA.sqlLat} AS lat, ${OA.sqlLng} AS lng,
-       |         ${OA.sqlYear} AS yr,
-       |         ${OA.sqlMapKeys} AS mks
-       |  FROM events WHERE ${OA.sqlQualityFilter}),
-       |ex AS (SELECT event_id, unnest(mks) AS map_key FROM occ),
-       |pre AS (
-       |  SELECT map_key, lat, lng, bor_year, count(*) AS occ_count
-       |  FROM (SELECT ${BorYear.sqlEncode("event_type", "yr")} AS bor_year,
-       |               lat, lng, unnest(mks) AS map_key FROM occ)
-       |  GROUP BY 1, 2, 3, 4)
-       |""".stripMargin
-
-  // ---------------------------------------------------------------- queries
+  /** Every key, family by family (RegistrySpec pins its shape). */
+  private[graft] lazy val all: Seq[Key] = Key.unique(
+    PyramidKeys.keys ++ RelationalKeys.keys ++ EventKeys.keys ++
+      WarehouseKeys.keys ++ StatsKeys.keys ++ GraphKeys.keys ++
+      SimilarityKeys.keys ++ DedupKeys.keys ++ VocabKeys.keys ++
+      CorpusKeys.keys ++ MixKeys.keys)
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    baseQueries ++ llmQueries
+    all.map(k => k.name -> k.build).toMap
 
-  private def baseQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- S1/S2: scan + projection + quality filter (MapBuilder.java:134-164)
-    "scan_project" -> ((s, d) =>
-      occ(s, d)
-        .select(
-          col("event_id"), col("user_id"), col("lat"), col("lng"),
-          col("basisOfRecord").as("bor"), col("year").as("yr"),
-          OA.datasetKey.as("dataset_key"), OA.publisherKey.as("publisher_key"),
-          OA.countryCode.as("country_code"), OA.pubCountry.as("pub_country"),
-          array_join(coalesce(OA.networkKeys, array()), ",").as("network_keys"))
-        .orderBy("event_id")),
+  def oracleSql: Map[String, String] =
+    all.map(k => k.name -> k.oracle()).toMap
 
-    "filter_quality" -> ((s, d) =>
-      events(s, d).filter(OA.qualityFilter)
-        .groupBy(col("event_type")).agg(count(lit(1)).as("n"))
-        .orderBy("event_type")),
-
-    // ---- S3: fixed-width repartition (MapBuilder.java:166-169) — content-
-    // preserving; verified via a post-shuffle aggregation.
-    "repartition_fixed" -> ((s, d) =>
-      occ(s, d).repartition(32)
-        .groupBy(col("year").as("yr"))
-        .agg(count(lit(1)).as("n"), sum("user_id").as("uid_sum"))
-        .orderBy("yr")),
-
-    // ---- G1: map-view fan-out (MapKeysUDF.java:99-151)
-    "explode_map_keys" -> ((s, d) =>
-      exploded(s, d).orderBy("event_id", "map_key")),
-
-    // ---- F1: borYear codec (EncodeBorYearUDF.java:28-71)
-    "encode_bor_year" -> ((s, d) => {
-      val enc = BorYear.encode(col("event_type"), col("year"))
-      occ(s, d)
-        .select(
-          col("event_id"), enc.as("bor_year"),
-          BorYear.decodeYear(enc).as("yr"), BorYear.decodeBor(enc).as("bor"))
-        .orderBy("event_id")
-    }),
-
-    // ---- F2: global pixel projection, all four SRS (GlobalPixelUDF.java:31-58)
-    "project_pixel_3857" -> projectPixelQuery(Mercator3857, 8),
-    "project_pixel_4326" -> projectPixelQuery(PlateCarree4326, 8),
-    "project_pixel_3575" -> projectPixelQuery(NorthPolarLaea3575, 6),
-    "project_pixel_3031" -> projectPixelQuery(SouthPolarStereo3031, 6),
-
-    // ---- F3/F4: salted keys (HBaseKeyUDF.java:41-59)
-    // The md5 salt key is projected AFTER the total-order sort (opt guide
-    // §2.3 "project before the exchange", inverted for derived columns):
-    // with the key inside the pre-sort projection, the range partitioner's
-    // sampling pass re-executed scan+explode+md5 a second time and the
-    // ~60-byte key string rode the range exchange; post-sort projection
-    // computes the md5 exactly once and shuffles only (event_id, map_key).
-    // Row set and final order are unchanged (the sort keys are untouched).
-    "hbase_key_tile" -> ((s, d) =>
-      exploded(s, d)
-        .orderBy("event_id", "map_key")
-        .select(col("event_id"), col("map_key"),
-          Salt.tileKey(col("map_key"), lit(3),
-            (col("event_id") % 8).cast("int"), (col("event_id") % 5).cast("int"),
-            SaltModulo).as("key"))),
-
-    "hbase_key_point" -> ((s, d) =>
-      exploded(s, d).select(col("map_key")).distinct()
-        .select(col("map_key"), Salt.pointKey(col("map_key"), SaltModulo).as("key"))
-        .orderBy("map_key")),
-
-    // ---- A1: per-view counts + threshold (MapBuilder.java:180-206)
-    "agg_count_by_view" -> ((s, d) =>
-      exploded(s, d)
-        .groupBy("map_key").agg(count(lit(1)).as("occ_count"))
-        .filter(col("occ_count") >= Threshold)
-        .orderBy("map_key")),
-
-    // Salted two-phase aggregation over the structurally skewed map_key
-    // (the ALL view carries EVERY record, MapKeysUDF.java:115, so a plain
-    // group-by parks the whole dataset on one reducer): phase 1 splits each
-    // key across 8 deterministic salt buckets, phase 2 merges partials.
-    // Values are identical to the direct group-by — exactly what the
-    // oracle pins — while no reducer ever holds a hot key alone.
-    "agg_skew_salted" -> ((s, d) =>
-      graft.ops.Skew.saltedAgg(exploded(s, d), Seq("map_key"), col("event_id"), 8)(
-        Seq(count(lit(1)).as("c1")),
-        Seq(sum("c1").as("n_events")))
-        .orderBy("map_key")),
-
-    // Salted equi-join against the same structural skew: the left
-    // (exploded events) gets a deterministic salt, the moderate right side
-    // (per-view coordinate stats — too large to broadcast at corpus scale)
-    // replicates across the 8 salt buckets, so the hot view's probe rows
-    // spread over 8 reducers. Results identical to the plain join.
-    "join_skew_salted" -> ((s, d) => {
-      val stats = preAgg(s, d).groupBy("map_key")
-        .agg(count(lit(1)).as("n_coords"))
-      graft.ops.Skew.saltedJoin(exploded(s, d), stats, "map_key", col("event_id"), 8)
-        .groupBy("map_key")
-        .agg(count(lit(1)).as("n_events"), max("n_coords").as("n_coords"))
-        .orderBy("map_key")
-    }),
-
-    // Key-size histogram over the structurally-skewed map_key fan-out (the
-    // ALL view holds every record) — the ≤64-row report read BEFORE
-    // choosing a salt factor. Bucket = floor(log2 n) via exact bit
-    // arithmetic (length(bin(n))-1): a float log2 flips bucket boundaries
-    // at exact powers of two across engines.
-    "skew_histogram" -> ((s, d) =>
-      graft.ops.Skew.sizeHistogram(exploded(s, d), "map_key")
-        .orderBy("bucket")),
-
-    // Per-heavy-key salt plan: keys above SaltPlanMult× the mean group size
-    // with the exact-integer salt factor that spreads them to mean-sized
-    // reducer shares — the config agg_skew_salted/join_skew_salted consume.
-    "skew_salt_plan" -> ((s, d) =>
-      graft.ops.Skew.saltPlan(exploded(s, d), "map_key", SaltPlanMult)
-        .orderBy("map_key")),
-
-    // ---- A2: the core pre-aggregation (TileMapBuilder.java:86-104)
-    "agg_count_by_coord" -> ((s, d) =>
-      preAgg(s, d)
-        .select(col("map_key"), latC, lngC, col("bor_year"), col("occ_count"))
-        .orderBy("map_key", "lat_c", "lng_c", "bor_year")),
-
-    // ---- A3: per-pixel sums at zoom 4 (TileMapBuilder.java:113-127)
-    // Round 12: t1 via pixelCountsDirect — the standalone single-zoom
-    // query never reuses the lat/lng-grain pre-aggregation, so the
-    // intermediate exchange bought nothing (2 exchanges -> 1, identical
-    // values; the pipeline's shared-CTAS path keeps prepareInput).
-    "agg_sum_by_pixel" -> ((s, d) => {
-      val t1 = Pyramid.pixelCountsDirect(occ(s, d), OA.mapKeysArray,
-        Mercator3857, 4, TileSize)
-      t1.filter(col("xy").isNotNull)
-        .select(col("mapKey").as("map_key"),
-          col("xy.x").as("px"), col("xy.y").as("py"),
-          col("borYearCount.borYear").as("bor_year"),
-          col("borYearCount.occCount").as("occ_count"))
-        .orderBy("map_key", "px", "py", "bor_year")
-    }),
-
-    // ---- A4: per-pixel feature collection at zoom 2 (TileMapBuilder.java:130-136)
-    // Each feature is serialized to its canonical string BEFORE collecting:
-    // sorting strings is a codegen-cheap binary compare, while
-    // array_sort(collect_list(struct)) runs an interpreted struct comparator
-    // (measured ~2× the stage cost). Same grouping topology and determinism.
-    "agg_collect_pixel_features" -> ((s, d) => {
-      // t1 via pixelCountsDirect — see agg_sum_by_pixel note
-      val t1 = Pyramid.pixelCountsDirect(occ(s, d), OA.mapKeysArray,
-        Mercator3857, 2, TileSize)
-      t1.filter(col("xy").isNotNull)
-        .select(col("mapKey").as("map_key"),
-          col("xy.x").as("px"), col("xy.y").as("py"),
-          concat_ws(":", col("borYearCount.borYear").cast("string"),
-                         col("borYearCount.occCount").cast("string")).as("f"))
-        .groupBy("map_key", "px", "py")
-        .agg(array_join(sort_array(collect_list(col("f"))), ";").as("features_str"))
-        .orderBy("map_key", "px", "py")
-    }),
-
-    // ---- G2: buffered tile re-addressing at zoom 2 (TileXYUDF.java:74-229)
-    "explode_tile_addresses" -> ((s, d) => {
-      val adr = TileAddressing(Mercator3857, TileSize, BufferSize)
-      occ(s, d)
-        .select(col("event_id"),
-          Mercator3857.globalPixel(col("lat"), col("lng"), 2, TileSize).as("xy"))
-        .filter(col("xy").isNotNull)
-        .select(col("event_id"),
-          explode(adr.addresses(2, col("xy.x"), col("xy.y"))).as("t"))
-        .select(col("event_id"),
-          col("t.tileX").as("tile_x"), col("t.tileY").as("tile_y"),
-          col("t.pixelX").as("pixel_x"), col("t.pixelY").as("pixel_y"))
-        .orderBy("event_id", "tile_x", "tile_y", "pixel_x", "pixel_y")
-    }),
-
-    // ---- A5: full tile assembly at zoom 1 (TileMapBuilder.java:139-156)
-    // String-serialized pre-collect, as in A4 (struct path stays exercised
-    // by MapPipeline/PipelineSpec, where Sinks.encodeTiles needs structs).
-    "agg_collect_tile" -> ((s, d) => {
-      val zoom = 1
-      // t1 via pixelCountsDirect — see agg_sum_by_pixel note
-      val t1 = Pyramid.pixelCountsDirect(occ(s, d), OA.mapKeysArray,
-        Mercator3857, zoom, TileSize)
-      val t2s = t1.filter(col("xy").isNotNull)
-        .select(col("mapKey"), col("xy"),
-          concat_ws(":", col("borYearCount.borYear").cast("string"),
-                         col("borYearCount.occCount").cast("string")).as("f"))
-        .groupBy("mapKey", "xy")
-        .agg(array_join(sort_array(collect_list(col("f"))), ";").as("features_str"))
-      val adr = TileAddressing(Mercator3857, TileSize, BufferSize)
-      t2s.select(col("mapKey"),
-          explode(adr.addresses(zoom, col("xy.x"), col("xy.y"))).as("t"),
-          col("features_str"))
-        .select(
-          Salt.tileKey(col("mapKey"), lit(zoom), col("t.tileX"), col("t.tileY"),
-            SaltModulo).as("key"),
-          concat_ws("|",
-            concat_ws(",", col("t.pixelX").cast("string"),
-                           col("t.pixelY").cast("string")),
-            col("features_str")).as("p"))
-        .groupBy("key")
-        .agg(array_join(sort_array(collect_list(col("p"))), "#").as("tile_str"))
-        .orderBy("key")
-    }),
-
-    // ---- A6/F4: point-map path (PointMapBuilder.java:49-93) —
-    // string-serialized pre-collect (see A4 note; struct path in PointMap
-    // stays exercised by MapPipeline/PipelineSpec)
-    "agg_collect_point_features" -> ((s, d) =>
-      preAgg(s, d)
-        .select(Salt.pointKey(col("map_key"), SaltModulo).as("key"),
-          concat_ws(",",
-            round(col("lat") * 100).cast("int").cast("string"),
-            round(col("lng") * 100).cast("int").cast("string"),
-            col("bor_year").cast("string"), col("occ_count").cast("string")).as("f"))
-        .groupBy("key")
-        .agg(array_join(sort_array(collect_list(col("f"))), ";").as("features_str"))
-        .orderBy("key")),
-
-    // ---- J1/J2: threshold allow/deny as real semi/anti joins — the 100 TB
-    // replacement for the reference's driver-side collect
-    // (MapBuilder.java:199-202, MapKeysUDF.java:134-144).
-    "semi_join_threshold" -> ((s, d) => {
-      val ex = exploded(s, d)
-      val big = ex.groupBy("map_key").agg(count(lit(1)).as("c"))
-        .filter(col("c") >= Threshold).select("map_key")
-      ex.join(big, Seq("map_key"), "left_semi").orderBy("event_id", "map_key")
-    }),
-
-    "anti_join_threshold" -> ((s, d) => {
-      val ex = exploded(s, d)
-      val big = ex.groupBy("map_key").agg(count(lit(1)).as("c"))
-        .filter(col("c") >= Threshold).select("map_key")
-      ex.join(big, Seq("map_key"), "left_anti").orderBy("event_id", "map_key")
-    }),
-
-    // ---- S7-analog: sorted salted sink — per-key content verified via the
-    // oracle; the salt-aligned partition layout is tested in SinksSpec.
-    "sorted_sink" -> ((s, d) => {
-      val pts = graft.points.PointMap.pointFeatures(
-        preAgg(s, d)
-          .select(col("map_key").as("mapKey"), col("lat"), col("lng"),
-            col("bor_year").as("borYear"), col("occ_count").as("occCount")),
-        SaltModulo)
-      pts.select(col("key"), size(col("features")).as("n_features"))
-        .orderBy("key")
-    }),
-
-    // Zone-map build + prune report: per pseudo-file (orderkey bucket),
-    // row count and min/max ship-day, plus whether a date predicate could
-    // SKIP the file entirely — the min/max-statistics file-skipping that
-    // decides how much of 100 TB a scan touches (the same contract parquet
-    // row-group stats / Iceberg manifests serve). One aggregate; the zone
-    // map is bucket-count rows, never data-sized.
-    "zonemap_prune" -> ((s, d) =>
-      lineitem(s, d)
-        .select(expr(s"l_orderkey div $ZoneBucketOrders").as("bucket"),
-          expr("unix_micros(l_shipdate) div 86400000000").as("day"))
-        .groupBy("bucket")
-        .agg(count(lit(1)).as("n_rows"), min("day").as("min_day"),
-          max("day").as("max_day"))
-        .withColumn("skipped", col("max_day") < PruneCutoffDay)
-        .orderBy("bucket")),
-
-    // Incremental pyramid refresh: the NEW event batch's pixel deltas
-    // merged onto the existing pre-aggregation — only TOUCHED cells emitted
-    // (the tiles a refresh re-renders), linear in the batch, never a
-    // full-corpus re-aggregation. The left join direction is the point:
-    // delta drives, the old table only answers point lookups.
-    "pyramid_incremental" -> ((s, d) => {
-      // ONE explode+aggregate pass computes BOTH generations' counts as
-      // conditional sums per cell (opt guide §2.4 remove shuffles
-      // outright): the old shape ran two full scan+explode+agg passes
-      // (old batch, delta batch) and a cell-keyed left join; the flag
-      // partitions rows disjointly, so per-cell conditional counts equal
-      // the separately-filtered counts and the join collapses into a
-      // filter (delta cells only) + null-when-absent projection. 2 scans
-      // + 3 exchanges -> 1 scan + 1 exchange; identical rows and values.
-      occ(s, d)
-        .select(explode(OA.mapKeysArray).as("map_key"),
-          col("lat"), col("lng"),
-          BorYear.encode(col("basisOfRecord"), col("year")).as("bor_year"),
-          (pmod(col("event_id"), lit(10)) === 9).as("is_delta"))
-        .groupBy("map_key", "lat", "lng", "bor_year")
-        .agg(sum(when(!col("is_delta"), 1L).otherwise(0L)).as("o_cnt"),
-          sum(when(col("is_delta"), 1L).otherwise(0L)).as("occ_delta"))
-        .filter(col("occ_delta") > 0)
-        .select(col("map_key"), col("lat"), col("lng"), col("bor_year"),
-          coalesce(when(col("o_cnt") > 0, col("o_cnt")), lit(0L)).as("occ_old"),
-          col("occ_delta"),
-          (coalesce(when(col("o_cnt") > 0, col("o_cnt")), lit(0L)) +
-            col("occ_delta")).as("occ_new"))
-        .orderBy("map_key", "lat", "lng", "bor_year")
-    }),
-
-    // ---------------------------------------------------- relational surface
-    // (engine additions per SURVEY §2.5/§2.6/§7 — TPC-H-shaped)
-
-    "q1_agg" -> ((s, d) => {
-      val li = lineitem(s, d)
-        .filter(col("l_shipdate") <= lit("1998-09-02 00:00:00").cast("timestamp"))
-      val discPrice = decimal2(col("l_extendedprice")) * (lit(1).cast("decimal(4,2)") - decimalFrac(col("l_discount")))
-      val charge = discPrice * (lit(1).cast("decimal(4,2)") + decimalFrac(col("l_tax")))
-      li.groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          sum("l_quantity").as("sum_qty"),
-          sum(decimal2(col("l_extendedprice"))).cast("double").as("sum_base_price"),
-          sum(discPrice).cast("double").as("sum_disc_price"),
-          sum(charge).cast("double").as("sum_charge"),
-          (sum("l_quantity") / count(lit(1))).as("avg_qty"),
-          (sum(decimal2(col("l_extendedprice"))).cast("double") / count(lit(1))).as("avg_price"),
-          (sum(decimalFrac(col("l_discount"))).cast("double") / count(lit(1))).as("avg_disc"),
-          count(lit(1)).as("count_order"))
-        .orderBy("l_returnflag", "l_linestatus")
-    }),
-
-    "join_broadcast" -> ((s, d) => {
-      val li = lineitem(s, d); val p = Tables.part(s, d)
-      li.join(broadcast(p), li("l_partkey") === p("p_partkey"))
-        .groupBy("p_brand")
-        .agg(count(lit(1)).as("n_items"),
-          sum("l_quantity").as("sum_qty"),
-          sum(decimal2(col("l_extendedprice"))).cast("double").as("revenue"))
-        .orderBy("p_brand")
-    }),
-
-    "join_sortmerge" -> ((s, d) => {
-      val li = lineitem(s, d); val o = orders(s, d)
-      li.join(o, li("l_orderkey") === o("o_orderkey"))
-        .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("n_items"), sum("l_quantity").as("sum_qty"))
-        .orderBy("o_orderpriority")
-    }),
-
-    "join_multiway" -> ((s, d) => {
-      val c = Tables.customer(s, d); val o = orders(s, d)
-      val n = Tables.nation(s, d); val r = Tables.region(s, d)
-      c.join(o, c("c_custkey") === o("o_custkey"))
-        .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-        .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
-        .groupBy("r_name")
-        .agg(count(lit(1)).as("n_orders"),
-          sum(decimal2(col("o_totalprice"))).cast("double").as("revenue"))
-        .orderBy("r_name")
-    }),
-
-    "window_topk" -> ((s, d) => {
-      val w = Window.partitionBy("o_custkey")
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      orders(s, d)
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3)
-        .select("o_custkey", "o_orderkey", "o_totalprice", "rn")
-        .orderBy("o_custkey", "rn", "o_orderkey")
-    }),
-
-    "window_running" -> ((s, d) => {
-      val w = Window.partitionBy("l_suppkey")
-        .orderBy("l_shipdate", "l_orderkey", "l_linenumber")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      lineitem(s, d)
-        .withColumn("running_qty", sum("l_quantity").over(w))
-        .select("l_suppkey", "l_orderkey", "l_linenumber", "running_qty")
-        // (l_orderkey, l_linenumber) is not unique in the fixture; include
-        // running_qty so the output order is total on the output columns.
-        .orderBy("l_suppkey", "l_orderkey", "l_linenumber", "running_qty")
-    }),
-
-    "set_ops" -> ((s, d) => {
-      val ck = Tables.customer(s, d).select(col("c_custkey").as("k"))
-      val ok = orders(s, d).select(col("o_custkey").as("k"))
-      ck.intersect(ok).withColumn("src", lit("both"))
-        .unionAll(ck.except(ok).withColumn("src", lit("cust_only")))
-        .orderBy("k", "src")
-    }),
-
-    "agg_distinct" -> ((s, d) =>
-      orders(s, d)
-        .groupBy("o_orderpriority")
-        .agg(countDistinct(col("o_custkey")).as("n_cust"), count(lit(1)).as("n"))
-        .orderBy("o_orderpriority")),
-
-    // Event-time tumbling window, batch form (SURVEY §2.8).
-    "events_window_hourly" -> ((s, d) =>
-      events(s, d)
-        .groupBy(window(OA.tsCol, "1 hour").as("w"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast("decimal(12,2)")).cast("double").as("sum_value"))
-        .select(unix_timestamp(col("w.start")).as("hour_epoch"), col("n"), col("sum_value"))
-        .orderBy("hour_epoch")),
-
-    "json_extract" -> ((s, d) =>
-      events(s, d)
-        .select(get_json_object(col("props"), "$.k").cast("int").as("k_val"))
-        .groupBy("k_val").agg(count(lit(1)).as("n"))
-        .orderBy("k_val")),
-
-    // Sliding event-time windows (1 h window, 30 min slide — every event in
-    // exactly two windows).
-    "events_window_sliding" -> ((s, d) =>
-      events(s, d)
-        .groupBy(window(OA.tsCol, "1 hour", "30 minutes").as("w"))
-        .agg(count(lit(1)).as("n"))
-        .select(unix_timestamp(col("w.start")).as("win_epoch"), col("n"))
-        .orderBy("win_epoch")),
-
-    // Batch twin of the streaming sessionization (EventStream.sessionize) —
-    // identical session boundaries, oracle-checkable (SURVEY §2.8).
-    "sessionize_batch" -> ((s, d) =>
-      graft.streaming.EventStream.sessionizeBatch(
-          events(s, d).select(col("user_id"), IntMath.floorDiv(col("ts"), 1000L).as("ts_us")),
-          gapSec = 1800)
-        .orderBy("user_id", "session_start_us")),
-
-    // Multi-level aggregation: ROLLUP over region/nation order counts.
-    "agg_rollup" -> ((s, d) => {
-      // via the SQL front end: Dataset-API rollup over any join-derived
-      // frame trips Spark 4.1's ambiguous-self-join detector (grouping-set
-      // expansion duplicates the grouping attrs); SQL resolution does not.
-      Tables.customer(s, d).createOrReplaceTempView("customer")
-      Tables.nation(s, d).createOrReplaceTempView("nation")
-      Tables.region(s, d).createOrReplaceTempView("region")
-      orders(s, d).createOrReplaceTempView("orders")
-      s.sql(
-        """SELECT r_name, n_name, count(*) AS n_orders,
-          |  CAST(sum(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS revenue
-          |FROM customer
-          |JOIN orders ON c_custkey = o_custkey
-          |JOIN nation ON c_nationkey = n_nationkey
-          |JOIN region ON n_regionkey = r_regionkey
-          |GROUP BY ROLLUP (r_name, n_name)
-          |ORDER BY r_name ASC NULLS FIRST, n_name ASC NULLS FIRST""".stripMargin)
-    }),
-
-    // Pivot: per-year event counts, one column per event type; empty cells
-    // coalesced to 0 to match the oracle's FILTER aggregation.
-    "agg_pivot" -> ((s, d) => {
-      val types = Seq("click", "error", "purchase", "signup", "view")
-      val p = events(s, d)
-        .groupBy(year(OA.tsCol).as("yr"))
-        .pivot("event_type", types)
-        .agg(count(lit(1)))
-      p.select(col("yr") +: types.map(t => coalesce(col(t), lit(0L)).as(t)): _*)
-        .orderBy("yr")
-    }),
-
-    // CUBE over the same join (all four grouping-set combinations).
-    "agg_cube" -> ((s, d) => {
-      Tables.customer(s, d).createOrReplaceTempView("customer")
-      Tables.nation(s, d).createOrReplaceTempView("nation")
-      Tables.region(s, d).createOrReplaceTempView("region")
-      orders(s, d).createOrReplaceTempView("orders")
-      s.sql(
-        """SELECT r_name, n_name, count(*) AS n_orders
-          |FROM customer
-          |JOIN orders ON c_custkey = o_custkey
-          |JOIN nation ON c_nationkey = n_nationkey
-          |JOIN region ON n_regionkey = r_regionkey
-          |GROUP BY CUBE (r_name, n_name)
-          |ORDER BY r_name ASC NULLS FIRST, n_name ASC NULLS FIRST""".stripMargin)
-    }),
-
-    // Quartile assignment — bit-identical to `ntile(4) OVER (ORDER BY ...)`
-    // (the oracle still says exactly that) but computed via the distributed
-    // range-bucketed global rank (ops/GlobalRank): no partition-less Window,
-    // no single-task sort of the whole table.
-    "window_ntile" -> ((s, d) =>
-      graft.ops.GlobalRank.withNtile(
-          orders(s, d).select(col("o_orderkey"), col("o_totalprice")),
-          rangeCol = "o_totalprice", tieBreak = Seq("o_orderkey"),
-          buckets = graft.ops.GlobalRank.Auto, tiles = 4, out = "quartile")
-        .select("o_orderkey", "o_totalprice", "quartile")
-        .orderBy("o_orderkey")),
-
-    // Exact global row_number over the full orders table — the distributed
-    // range-bucketed rank itself as a first-class operator (same oracle
-    // shape as a partition-less row_number window, without its single-task
-    // sort).
-    "window_rank_global" -> ((s, d) =>
-      graft.ops.GlobalRank.withGlobalRowNumber(
-          orders(s, d).select(col("o_orderkey"), col("o_totalprice")),
-          rangeCol = "o_totalprice", tieBreak = Seq("o_orderkey"),
-          buckets = graft.ops.GlobalRank.Auto, out = "rn")
-        .select("o_orderkey", "o_totalprice", "rn")
-        .orderBy("o_orderkey")),
-
-    // Exact global percent_rank + cume_dist — the peer-aware window ranks
-    // (ties share a value, unlike row_number) from the same distributed
-    // bucketed rank: rank = min row_number among value peers, cume_dist's
-    // numerator = max. The peer aggregate groups by the VALUE (|distinct
-    // prices| rows), never a partition-less window.
-    "window_cume_dist" -> ((s, d) => {
-      val (ranked, n) = graft.ops.GlobalRank.withGlobalRowNumberAndCount(
-        orders(s, d).select(col("o_orderkey"), col("o_totalprice")),
-        rangeCol = "o_totalprice", tieBreak = Seq("o_orderkey"),
-        buckets = graft.ops.GlobalRank.Auto, out = "rn")
-      val peers = ranked.groupBy("o_totalprice")
-        .agg(min("rn").as("mn"), max("rn").as("mx"))
-      ranked.join(peers, Seq("o_totalprice"))
-        .select(col("o_orderkey"), col("o_totalprice"),
-          round((col("mn") - 1).cast("double") / lit((n - 1).toDouble), 6)
-            .as("pct_rank_r"),
-          round(col("mx").cast("double") / lit(n.toDouble), 6).as("cume_dist_r"))
-        .orderBy("o_orderkey")
-    }),
-
-    // Theta join: lineitems matched to parts by quantity within ±2 of the
-    // part's size — an inequality-predicate join (engine addition, §2.5).
-    "join_theta" -> ((s, d) => {
-      val li = lineitem(s, d); val p = Tables.part(s, d)
-      li.join(broadcast(p),
-          li("l_partkey") === p("p_partkey") &&
-            li("l_quantity").between(p("p_size") - 2, p("p_size") + 2))
-        .groupBy("p_brand")
-        .agg(count(lit(1)).as("n_matched"), sum("l_quantity").as("sum_qty"))
-        .orderBy("p_brand")
-    }),
-
-    // As-of lookup: for every event, the same user's most recent prior (or
-    // simultaneous) signup timestamp — the as-of-join shape expressed with a
-    // running conditional max (no shuffle beyond the user partition).
-    "asof_signup" -> ((s, d) => {
-      val w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      events(s, d)
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          IntMath.floorDiv(col("ts"), 1000L).as("ts_us"))
-        .withColumn("last_signup_us",
-          max(when(col("event_type") === "signup", col("ts_us"))).over(w))
-        .select("event_id", "user_id", "ts_us", "last_signup_us")
-        .orderBy("event_id")
-    }),
-
-    // Explicit GROUPING SETS (beyond rollup/cube: an arbitrary set list).
-    "agg_grouping_sets" -> ((s, d) => {
-      Tables.customer(s, d).createOrReplaceTempView("customer")
-      Tables.nation(s, d).createOrReplaceTempView("nation")
-      Tables.region(s, d).createOrReplaceTempView("region")
-      orders(s, d).createOrReplaceTempView("orders")
-      s.sql(
-        """SELECT r_name, o_orderpriority, count(*) AS n_orders
-          |FROM customer
-          |JOIN orders ON c_custkey = o_custkey
-          |JOIN nation ON c_nationkey = n_nationkey
-          |JOIN region ON n_regionkey = r_regionkey
-          |GROUP BY GROUPING SETS ((r_name), (r_name, o_orderpriority), ())
-          |ORDER BY r_name ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin)
-    }),
-
-    // lag/lead neighbors per user (the remaining window-function family).
-    "window_lag" -> ((s, d) => {
-      val w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-      events(s, d)
-        .select(col("event_id"), col("user_id"), IntMath.floorDiv(col("ts"), 1000L).as("ts_us"))
-        .withColumn("prev_us", lag("ts_us", 1).over(w))
-        .withColumn("next_us", lead("ts_us", 1).over(w))
-        .orderBy("event_id")
-    }),
-
-    // HLL approximate distinct. The sketch VALUE is engine-specific (DuckDB
-    // can't replay Spark's HLL++), so the oracle-checkable output is the
-    // bounded-error CONTRACT: the exact distinct count plus a boolean
-    // asserting |approx - exact| <= max(2, 5% of exact). rsd=0.01 makes the
-    // 5% tolerance a 5-sigma band (rsd is a STANDARD DEVIATION, not a
-    // bound — at the default 0.05 about a third of groups sit outside 1
-    // sigma, measured 17/130 on the fixture). The oracle emits the same
-    // exact count and a literal `true`, so the hash matches iff every
-    // group's HLL estimate is inside the band (deterministic per dataset:
-    // HLL++ has no RNG). Shape matters: mixing countDistinct with the HLL
-    // in ONE agg makes Catalyst expand + partially aggregate keyed by
-    // (map_key, event_id) — allocating a ~22 KB rsd=0.01 sketch per
-    // DISTINCT VALUE (~1M sketches at sf0.1, measured 77-106 s). HLL
-    // registers are max-based and duplicate-insensitive, so dedup the
-    // pairs first and run count + HLL over the distinct frame: identical
-    // estimates, one distinct shuffle, 130 sketches (measured ~3 s).
-    "agg_approx_distinct" -> ((s, d) =>
-      exploded(s, d)
-        .select("map_key", "event_id").distinct()
-        .groupBy("map_key")
-        .agg(
-          approx_count_distinct(col("event_id"), 0.01).as("approx_events"),
-          count(col("event_id")).as("n_events"))
-        .select(col("map_key"), col("n_events"),
-          (abs(col("approx_events") - col("n_events")) <=
-            greatest(lit(2L), ceil(col("n_events") * lit(0.05)).cast("bigint")))
-            .as("hll_ok"))
-        .orderBy("map_key")),
-
-    // Approximate percentiles (GK sketch) under a BOUNDED-RANK-ERROR
-    // contract — the same pattern as agg_approx_distinct's HLL check: the
-    // oracle can't replay an engine-specific sketch, so the engine verifies
-    // its own guarantee (approx_percentile(acc) bounds rank error by n/acc)
-    // and ships booleans the oracle pins to TRUE. The returned quantile is
-    // a real data element whose rank lies in (rank_lt, rank_le]; ok iff
-    // that interval is within n/acc + 1 of the target rank p·n. The
-    // verification join re-scans the fact table — that's the check, not the
-    // production query; at scale the sketch alone is one map-side pass.
-    "agg_approx_percentile" -> ((s, d) => {
-      val acc = 1000
-      val approx = lineitem(s, d).groupBy("l_returnflag")
-        .agg(expr(s"approx_percentile(l_quantity, array(0.5, 0.9), $acc)").as("ap"),
-          count(lit(1)).as("n"))
-        .select(col("l_returnflag"), col("n"),
-          element_at(col("ap"), 1).as("ap50"), element_at(col("ap"), 2).as("ap90"))
-      def okCol(p: Double, apCol: String) = {
-        val tol = col("n").cast("double") / acc + 1
-        val target = col("n") * p
-        (col(s"rank_lt_$apCol") - tol <= target && target <= col(s"rank_le_$apCol") + tol)
-      }
-      lineitem(s, d).join(broadcast(approx), Seq("l_returnflag"))
-        .groupBy("l_returnflag")
-        .agg(max("n").as("n"),
-          sum(when(col("l_quantity") < col("ap50"), 1L).otherwise(0L)).as("rank_lt_ap50"),
-          sum(when(col("l_quantity") <= col("ap50"), 1L).otherwise(0L)).as("rank_le_ap50"),
-          sum(when(col("l_quantity") < col("ap90"), 1L).otherwise(0L)).as("rank_lt_ap90"),
-          sum(when(col("l_quantity") <= col("ap90"), 1L).otherwise(0L)).as("rank_le_ap90"))
-        .select(col("l_returnflag"), col("n"),
-          okCol(0.5, "ap50").as("ok50"), okCol(0.9, "ap90").as("ok90"))
-        .orderBy("l_returnflag")
-    }),
-
-    // Approximate percentiles under a self-verifying rank-band contract,
-    // HLL-style: the SAME single aggregate computes the exact percentiles
-    // at the band edges p ± eps (eps = 2/acc covers the sketch's n/acc
-    // rank guarantee plus the ±1-element granularity — PRECONDITION
-    // n ≥ acc per group, which every fixture scale satisfies: sf0.001 has
-    // ~2k rows/group vs acc=1000) and ships booleans the oracle pins to
-    // TRUE. One scan, one shuffle, no verification join — but note the
-    // exact band computation buffers each group's values, so this is the
-    // CHECK shape; the production sketch-only pass is this aggregate minus
-    // the `px` column (pure GK, constant memory), and the cost the bench
-    // reads here includes the check. The sketch's element CHOICE stays
-    // engine-specific; its rank CONTRACT is hash-checked.
-    "agg_approx_percentile_sketch" -> ((s, d) => {
-      val acc = 1000
-      val eps = 2.0 / acc
-      lineitem(s, d).groupBy("l_returnflag")
-        .agg(expr(s"approx_percentile(l_quantity, array(0.5, 0.9), $acc)").as("ap"),
-          expr(s"percentile(l_quantity, array(${0.5 - eps}, ${0.5 + eps}, " +
-            s"${0.9 - eps}, ${0.9 + eps}))").as("px"),
-          count(lit(1)).as("n"))
-        .select(col("l_returnflag"), col("n"),
-          (element_at(col("ap"), 1) >= element_at(col("px"), 1) &&
-            element_at(col("ap"), 1) <= element_at(col("px"), 2)).as("ok50"),
-          (element_at(col("ap"), 2) >= element_at(col("px"), 3) &&
-            element_at(col("ap"), 2) <= element_at(col("px"), 4)).as("ok90"))
-        .orderBy("l_returnflag")
-    }),
-
-    // Exact interpolated percentiles (both engines use the same
-    // linear-interpolation definition).
-    "agg_percentile" -> ((s, d) =>
-      lineitem(s, d)
-        .groupBy("l_returnflag")
-        .agg(
-          round(expr("percentile(l_quantity, 0.25)"), 6).as("p25"),
-          round(expr("percentile(l_quantity, 0.5)"), 6).as("p50"),
-          round(expr("percentile(l_quantity, 0.9)"), 6).as("p90"))
-        .orderBy("l_returnflag")),
-
-    // Schema-directed JSON parsing (from_json vs the path-based
-    // get_json_object in `json_extract`).
-    "json_from_schema" -> ((s, d) =>
-      events(s, d)
-        .select(expr("from_json(props, 'k INT').k").as("k_val"))
-        .groupBy("k_val").agg(count(lit(1)).as("n"))
-        .orderBy("k_val")),
-
-    // Banded interval join (attribution windows): purchases landing inside
-    // a signup's 6-hour window, WITHOUT a BroadcastNestedLoopJoin — ranges
-    // explode into fixed-width buckets, points key by their bucket, and the
-    // match is an equi-join on the bucket id (graft.ops.RangeJoin).
-    "join_range" -> ((s, d) => {
-      val ev = events(s, d).select(col("event_id"),
-        IntMath.floorDiv(col("ts"), 1000L).as("t_us"), col("event_type"), col("value"))
-      val windows = ev
-        .filter(col("event_type") === "signup" && pmod(col("event_id"), lit(50)) === 0)
-        .select(col("event_id").as("signup_id"), col("t_us").as("lo_us"),
-          (col("t_us") + lit(RangeJoinWindowUs)).as("hi_us"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("t_us"), col("value"))
-      graft.ops.RangeJoin
-        .pointInRange(purchases, "t_us", windows, "lo_us", "hi_us", RangeJoinWindowUs)
-        .groupBy("signup_id")
-        .agg(count(lit(1)).as("n_purchases"),
-          sum(col("value").cast("decimal(12,2)")).cast("double").as("sum_value"))
-        .orderBy("signup_id")
-    }),
-
-    // Z-order (Morton) layout key: bit-interleaved 16-bit grid coords over
-    // the event coordinates, aggregated per 12-bit z prefix — the per-file
-    // min/max stats a z-ordered write would give a data-skipping reader
-    // (each prefix bucket's bounding box is tight on BOTH dims; see
-    // graft.ops.ZOrder.layout for the write-side repartitionByRange shape).
-    "zorder_layout" -> ((s, d) => {
-      import graft.ops.ZOrder
-      val q = occ(s, d).select(
-        ZOrder.quantize16(col("lng"), -180, 180).as("qx"),
-        ZOrder.quantize16(col("lat"), -90, 90).as("qy"))
-      q.select(col("qx"), col("qy"),
-          ZOrder.interleave(col("qx"), col("qy")).as("z"))
-        .groupBy(shiftright(col("z"), 20).as("z_prefix"))
-        .agg(count(lit(1)).as("n"),
-          min("qx").as("min_qx"), max("qx").as("max_qx"),
-          min("qy").as("min_qy"), max("qy").as("max_qy"))
-        .orderBy("z_prefix")
-    }),
-
-    // Hilbert-curve layout key: the locality-superior sibling of
-    // zorder_layout (no diagonal jumps — contiguous index ranges make
-    // tighter per-file bounding boxes for data skipping). Same 16-bit
-    // quantized grid, same per-prefix min/max report; the 16 bit-descent
-    // levels are STAGED projections (see graft.ops.Hilbert — inlining the
-    // recursion grows the expression tree 6x per level), all fused by
-    // whole-stage codegen into one narrow pass.
-    "hilbert_layout" -> ((s, d) => {
-      import graft.ops.{Hilbert, ZOrder}
-      val q = occ(s, d).select(
-        ZOrder.quantize16(col("lng"), -180, 180).as("qx"),
-        ZOrder.quantize16(col("lat"), -90, 90).as("qy"))
-      Hilbert.withIndex(q, "qx", "qy", order = 16, out = "h")
-        .groupBy(shiftright(col("h"), 20).as("h_prefix"))
-        .agg(count(lit(1)).as("n"),
-          min("qx").as("min_qx"), max("qx").as("max_qx"),
-          min("qy").as("min_qy"), max("qy").as("max_qy"))
-        .orderBy("h_prefix")
-    }),
-
-    // Deterministic MODE aggregate (most frequent value, smallest wins
-    // ties) — the aggregate SQL engines bolt on as a builtin but Spark
-    // expresses as two map-side-combinable hash aggregates + a struct
-    // argmax: no window over the data, no sort, scale-safe on any key
-    // cardinality.
-    "agg_mode" -> ((s, d) => {
-      val c = lineitem(s, d)
-        .groupBy(col("l_returnflag"), col("l_quantity").cast("long").as("qty"))
-        .agg(count(lit(1)).as("n"))
-      c.groupBy("l_returnflag")
-        .agg(max(struct(col("n"), (-col("qty")).as("nq"))).as("b"))
-        .select(col("l_returnflag"), (-col("b.nq")).as("mode_qty"),
-          col("b.n").as("n_mode"))
-        .orderBy("l_returnflag")
-    }),
-
-    // Cohort retention matrix: users bucketed by first-active day, distinct
-    // activity counted per (cohort, day-offset) cell. Two hash aggs + one
-    // equi-join on user_id; the (user, day) frame is already distinct so
-    // the cell count is a plain count — no count-distinct shuffle. Day ids
-    // are exact integer floor-division on the raw nano timestamps (the
-    // repo-wide IntMath.floorDiv contract; double math drifts past 2^53).
-    // Exact DAU/WAU: one distinct (day, user) pass; WAU materializes each
-    // activity row into its 7 covered report-days (a bounded ×7 fan-out)
-    // and re-distincts — never a per-day re-scan and never a sliding
-    // distinct-state window. Only days with actual activity are reported
-    // (inner join), so sparse calendars don't emit empty rows.
-    "events_active_users" -> ((s, d) => {
-      val au = events(s, d)
-        .select(IntMath.floorDiv(col("ts"), NanosPerDay).as("day"), col("user_id"))
-        .distinct()
-        .localCheckpoint() // feeds the DAU agg and the WAU fan-out
-      val dau = au.groupBy("day").agg(count(lit(1)).as("dau"))
-      val wau = au
-        .select(explode(sequence(col("day"), col("day") + 6)).as("day"), col("user_id"))
-        .distinct()
-        .groupBy("day").agg(count(lit(1)).as("wau"))
-      dau.join(wau, Seq("day")).orderBy("day")
-    }),
-
-    // Week-over-week churn transitions: full outer join of the distinct
-    // (week, user) frame against itself shifted one week. n_active =
-    // n_retained + n_churned by construction; the max week's churn is
-    // right-censored (no next week observed) — reported as-is, the
-    // standard caveat of any churn table's last row.
-    "events_churn" -> ((s, d) => {
-      val uw = events(s, d)
-        .select(IntMath.floorDiv(col("ts"), NanosPerWeek).as("wk"), col("user_id"))
-        .distinct()
-        .localCheckpoint() // both join sides
-      val cur = uw.select(col("wk"), col("user_id"), lit(1L).as("in_cur"))
-      val nxt = uw.select((col("wk") - 1).as("wk"), col("user_id"), lit(1L).as("in_next"))
-      cur.join(nxt, Seq("wk", "user_id"), "full_outer")
-        .groupBy("wk")
-        .agg(sum(coalesce(col("in_cur"), lit(0L))).as("n_active"),
-          sum(when(col("in_cur").isNotNull && col("in_next").isNotNull, 1L)
-            .otherwise(0L)).as("n_retained"),
-          sum(when(col("in_cur").isNotNull && col("in_next").isNull, 1L)
-            .otherwise(0L)).as("n_churned"),
-          sum(when(col("in_cur").isNull && col("in_next").isNotNull, 1L)
-            .otherwise(0L)).as("n_new_next"))
-        .orderBy("wk")
-    }),
-
-    "events_retention" -> ((s, d) => {
-      // checkpointed: the distinct (user, day) frame feeds BOTH the cohort
-      // agg and the cell join; without the barrier each side re-scans the
-      // fact table (the frame itself is tiny — one row per user-day)
-      val ud = events(s, d)
-        .select(col("user_id"), IntMath.floorDiv(col("ts"), NanosPerDay).as("day"))
-        .distinct()
-        .localCheckpoint()
-      val cohort = ud.groupBy("user_id").agg(min("day").as("cohort_day"))
-      ud.join(cohort, Seq("user_id"))
-        .groupBy(col("cohort_day"), (col("day") - col("cohort_day")).as("day_offset"))
-        .agg(count(lit(1)).as("n_users"))
-        .orderBy("cohort_day", "day_offset")
-    }),
-
-    // DAU / trailing-7-day WAU / stickiness per observed day
-    // (graft.ops.Engagement — user×calendar-bounded at any corpus scale).
-    "events_dau_wau" -> ((s, d) => graft.ops.Engagement.dauWau(events(s, d))),
-
-    // Ordered conversion funnel: per user, the first signup, then the first
-    // view AFTER it, first click after that, first purchase after that.
-    // Single-pass shape (round 5; the round-4 plan was a 4-stage join
-    // chain at 17 exchanges): ONE shuffle groups each user's funnel events
-    // into a sorted array, a codegen'd `aggregate` lambda folds the
-    // 4-stage chain over it in event order (ties break by stage index, so
-    // the fold visits the stage-k setter before any ts-equal stage-k+1
-    // candidate — exactly the join chain's `ts >= t_prev` semantics), and
-    // one conditional aggregation counts survivors per stage. Per-user
-    // history is bounded (the state_intervals assumption), so the array
-    // never sees corpus-scale rows.
-    "events_funnel" -> ((s, d) => {
-      val stages = Seq("signup", "view", "click", "purchase")
-      val stageIdx = stages.zipWithIndex
-        .foldLeft(lit(-1)) { case (acc, (nm, i)) =>
-          when(col("event_type") === nm, i).otherwise(acc)
-        }
-      val perUser = events(s, d)
-        .filter(col("event_type").isin(stages.map(x => x: Any): _*))
-        .select(col("user_id"), stageIdx.as("st"),
-          IntMath.floorDiv(col("ts"), 1000L).as("ts_us"))
-        .groupBy("user_id")
-        .agg(array_sort(collect_list(struct(col("ts_us"), col("st")))).as("evs"))
-      val nilT = lit(null).cast("bigint")
-      val folded = perUser.select(aggregate(
-        col("evs"),
-        struct(nilT.as("t1"), nilT.as("t2"), nilT.as("t3"), nilT.as("t4")),
-        (acc, x) => {
-          val ts = x.getField("ts_us"); val st = x.getField("st")
-          val t1 = coalesce(acc.getField("t1"), when(st === 0, ts))
-          val t2 = coalesce(acc.getField("t2"),
-            when(st === 1 && t1.isNotNull && ts >= t1, ts))
-          val t3 = coalesce(acc.getField("t3"),
-            when(st === 2 && t2.isNotNull && ts >= t2, ts))
-          val t4 = coalesce(acc.getField("t4"),
-            when(st === 3 && t3.isNotNull && ts >= t3, ts))
-          struct(t1.as("t1"), t2.as("t2"), t3.as("t3"), t4.as("t4"))
-        }).as("f"))
-      folded
-        .agg(count(col("f.t1")).as("c1"), count(col("f.t2")).as("c2"),
-          count(col("f.t3")).as("c3"), count(col("f.t4")).as("c4"))
-        .select(explode(array(
-          stages.zipWithIndex.map { case (nm, i) =>
-            struct(lit(i + 1).as("stage_idx"), lit(nm).as("stage"),
-              col(s"c${i + 1}").as("n_users"))
-          }: _*)).as("r"))
-        .select(col("r.stage_idx"), col("r.stage"), col("r.n_users"))
-        .orderBy("stage_idx")
-    }),
-
-    // SCD2-style state intervals (gaps-and-islands): collapse each user's
-    // consecutive runs of the same event_type into validity intervals
-    // (from_us, to_us, n_events). One shuffle on user_id funds both
-    // windows AND the final group-by; per-user history is bounded, so the
-    // window never sees corpus-scale partitions.
-    "state_intervals" -> ((s, d) =>
-      graft.streaming.EventStream.stateIntervalsBatch(
-          events(s, d).select(col("user_id"), col("event_type"),
-            IntMath.floorDiv(col("ts"), 1000L).as("ts_us"), col("event_id")))
-        .orderBy("user_id", "from_us")),
-
-    // Per-group z-score outliers: population mean/variance from EXACT
-    // decimal sums (order-independent — double summation would make the
-    // answer depend on partitioning), tiny stats table broadcast back,
-    // flag |z| > 3. The inputs to every float op are identical in Spark
-    // and DuckDB (decimal→double is correctly rounded in both), so the
-    // rounded z agrees bit-for-bit.
-    "events_anomaly" -> ((s, d) => {
-      val e = events(s, d).select(col("event_id"), col("event_type"), col("value"))
-      val stats = e.groupBy("event_type").agg(
-        count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,2)")).as("s1"),
-        sum((col("value") * col("value")).cast("decimal(28,6)")).as("s2"))
-      val mean = col("s1").cast("double") / col("n")
-      val varp = greatest(col("s2").cast("double") / col("n") - mean * mean, lit(0.0))
-      e.join(broadcast(stats), Seq("event_type"))
-        .withColumn("z", (col("value") - mean) / sqrt(varp))
-        .filter(abs(col("z")) > 3.0)
-        .select(col("event_id"), col("event_type"), col("value"),
-          round(col("z"), 6).as("z_r"))
-        .orderBy("event_id")
-    }),
-
-    // KMV distinct-sketch overlap: daily-active-user sketches (k smallest
-    // element hashes — the deterministic, mergeable, oracle-replayable
-    // sketch HLL's registers can't be) and pairwise distinct / Jaccard-
-    // overlap estimates between day cohorts from the merged k-sets (the
-    // audience-overlap dashboard). The estimator runs on ≤2k rows per
-    // pair; only the sketch build touches the data. Grouping is by day,
-    // not event_type, because day cohorts genuinely partially overlap.
-    "sketch_kmv_overlap" -> ((s, d) => {
-      val dp = events(s, d)
-        .select(IntMath.floorDiv(col("ts"), NanosPerDay).as("g"),
-          col("user_id").as("id"))
-        .distinct()
-      val sk = graft.ops.Kmv.sketchByGroup(dp, "g", "id", k = KmvK, seed = KmvSeed)
-      graft.ops.Kmv.overlapEstimates(sk, "g", "id", k = KmvK)
-        .orderBy("group_a", "group_b")
-    }),
-
-    // Path analysis: the most common initial event-type sequences (first 3
-    // events per user). Per-user window (bounded history), order-stable
-    // path via sorted-struct collect (collect_list alone is order-unstable
-    // — the repo-wide canonicalized-collect contract), then a tiny path
-    // frequency agg with the TakeOrderedAndProject top-k shape.
-    "events_top_paths" -> ((s, d) => {
-      val w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-      events(s, d)
-        .select(col("user_id"), col("event_type"),
-          IntMath.floorDiv(col("ts"), 1000L).as("ts_us"), col("event_id"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3)
-        .groupBy("user_id")
-        .agg(concat_ws(">", transform(
-          sort_array(collect_list(struct(col("rn"), col("event_type")))),
-          x => x.getField("event_type"))).as("path"))
-        .groupBy("path").agg(count(lit(1)).as("n_users"))
-        .orderBy(col("n_users").desc, col("path"))
-        .limit(20)
-    }),
-
-    // Per-group percent rank WITHOUT Window.partitionBy(group): one heavy
-    // group (half the corpus can be one event_type) would funnel through a
-    // single task. ops.GlobalRank.withGroupedRowNumber range-buckets each
-    // group (boundaries + per-bucket counts are groups×buckets metadata),
-    // so the rank is distributed across (group, bucket) partitions. The
-    // oracle states the same result as a plain grouped window — simple to
-    // state, unscalable to run, which is exactly the point.
-    "events_value_rank" -> ((s, d) => {
-      val e = events(s, d).select(col("event_id"), col("event_type"), col("value"))
-      graft.ops.GlobalRank
-        .withGroupedRowNumber(e, "event_type", "value", Seq("event_id"),
-          buckets = graft.ops.GlobalRank.Auto, out = "rnk", outN = "n_g")
-        .select(col("event_id"), col("event_type"), col("rnk"),
-          when(col("n_g") === 1, 0L)
-            .otherwise(expr("(rnk - 1) * 1000000 div (n_g - 1)")).as("prank_ppm"))
-        .orderBy("event_id")
-    }),
-
-    // Robust (median/MAD) outliers — the z-score twin for heavy-tailed
-    // data where mean/variance are themselves dragged by the outliers.
-    // Exact interpolated percentiles (the established percentile ↔
-    // quantile_cont pairing), 1.4826·MAD normalization; the narrow frame
-    // is checkpointed so the med pass, the MAD pass and the flag pass
-    // share one scan.
-    "events_anomaly_robust" -> ((s, d) => {
-      val e = events(s, d).select(col("event_id"), col("event_type"), col("value"))
-        .localCheckpoint()
-      val med = e.groupBy("event_type").agg(expr("percentile(value, 0.5)").as("med"))
-      val stats = e.join(broadcast(med), Seq("event_type"))
-        .groupBy("event_type")
-        .agg(expr("percentile(abs(value - med), 0.5)").as("mad"), max("med").as("med"))
-      val score = (col("value") - col("med")) /
-        greatest(col("mad") * lit(1.4826), lit(1e-9))
-      e.join(broadcast(stats), Seq("event_type"))
-        .filter(abs(score) > 3.5)
-        .select(col("event_id"), col("event_type"), col("value"),
-          round(score, 6).as("rscore_r"))
-        .orderBy("event_id")
-    }),
-
-    // Bloom-filter pre-filtered semi join: the dim side (high-value signup
-    // users) is sketched into ONE bounded bloom, the fact side is filtered
-    // by might_contain BEFORE its shuffle, and an exact semi join removes
-    // the bloom's false positives — Spark's runtime-filter pattern exposed
-    // as a library operator (see graft.ops.BloomJoin).
-    "join_bloom" -> ((s, d) => {
-      val e = events(s, d).select(col("event_id"), col("user_id"), col("event_type"),
-        col("value"))
-      val dim = e.filter(col("event_type") === "signup" && col("value") > 300.0)
-        .select(col("user_id"))
-      graft.ops.BloomJoin.semiJoin(e, dim, "user_id", estItems = 10000L)
-        .select("event_id", "user_id", "event_type")
-        .orderBy("event_id")
-    }),
-
-    // Iterative damped PageRank over the symmetrized customer–supplier
-    // purchase graph: who-buys-from-whom as an influence measure. Exact
-    // fixed-point integer arithmetic (picoranks) so the oracle replays the
-    // identical 5 supersteps; lineage cut per iteration — see
-    // graft.ops.PageRank for the 100 TB design notes.
-    "graph_pagerank" -> ((s, d) => {
-      val pairs = lineitem(s, d).select(col("l_orderkey"), col("l_suppkey"))
-        .join(orders(s, d).select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("c"), col("l_suppkey").as("sp"))
-        .distinct()
-        .localCheckpoint() // consumed twice by the symmetric union
-      val edges = pairs.select(concat(lit("c"), col("c")).as("src"),
-          concat(lit("s"), col("sp")).as("dst"))
-        .unionAll(pairs.select(concat(lit("s"), col("sp")).as("src"),
-          concat(lit("c"), col("c")).as("dst")))
-      graft.ops.PageRank.run(edges, 5).orderBy("node")
-    }),
-
-    // MERGE INTO (dimension upsert): a stale customer snapshot (every 3rd
-    // key missing, simulating a dim behind the fact feed) merged with
-    // per-customer order aggregates — matched rows roll the balance
-    // forward, unmatched updates insert, untouched dim rows pass through,
-    // each tagged with its MERGE action. Exact DECIMAL money math.
-    "merge_upsert" -> ((s, d) => {
-      val dim = Tables.customer(s, d).filter(col("c_custkey") % 3 =!= 0)
-        .select(col("c_custkey"), col("c_mktsegment"),
-          decimal2(col("c_acctbal")).as("bal"))
-      val upd = orders(s, d)
-        .groupBy(col("o_custkey").as("c_custkey"))
-        .agg(sum(decimal2(col("o_totalprice"))).as("spend"),
-          count(lit(1)).as("n_orders"))
-      graft.ops.Merge.outerMerge(dim, upd, "c_custkey")
-        .select(col("c_custkey"), col("action"),
-          coalesce(col("c_mktsegment"), lit("NEW")).as("segment"),
-          when(col("action") === "updated", col("bal") + col("spend"))
-            .when(col("action") === "inserted", col("spend"))
-            .otherwise(col("bal")).cast("double").as("bal_d"),
-          coalesce(col("n_orders"), lit(0L)).as("n_orders"))
-        .orderBy("c_custkey")
-    }),
-
-    // Interval×interval OVERLAP join (banded, dedup-free): per-user click
-    // activity runs vs ±30 min incident windows around every error event —
-    // "whose activity did each incident touch". Both interval sets explode
-    // into 1 h buckets, the join is a LONG equi-join, and each overlapping
-    // pair is claimed exactly once by the bucket holding the overlap start
-    // (graft.ops.IntervalJoin — no BroadcastNestedLoopJoin, no DISTINCT).
-    "join_interval_overlap" -> ((s, d) => {
-      val e = events(s, d).select(col("user_id"), col("event_type"),
-        IntMath.floorDiv(col("ts"), 1000L).as("ts_us"), col("event_id"))
-        .localCheckpoint() // consumed by both the runs and incidents sides
-      val runs = graft.streaming.EventStream.stateIntervalsBatch(e)
-        .filter(col("event_type") === "click")
-        .select(col("user_id"), col("from_us").as("a_lo"),
-          (col("to_us") + 1L).as("a_hi"))
-      val incidents = e.filter(col("event_type") === "error")
-        .select(col("event_id").as("incident_id"),
-          (col("ts_us") - IncidentHalfUs).as("b_lo"),
-          (col("ts_us") + IncidentHalfUs).as("b_hi"))
-      graft.ops.IntervalJoin.overlapJoin(
-          runs, "a_lo", "a_hi", incidents, "b_lo", "b_hi", OverlapBucketUs)
-        .groupBy("incident_id")
-        .agg(count(lit(1)).as("n_runs"),
-          countDistinct("user_id").as("n_users"),
-          sum("overlap_len").as("overlap_us"))
-        .orderBy("incident_id")
-    }),
-
-    // One-pass column profiling (the ANALYZE/data-quality report an ingest
-    // runs before trusting a snapshot): per column, row/null/distinct
-    // counts + min/max, all from a single scan (multi-DISTINCT via Expand)
-    // unpivoted by stack — never a per-column re-scan, never a collect.
-    "stats_profile" -> ((s, d) =>
-      graft.ops.Profile.profile(lineitem(s, d), ProfileCols)
-        .orderBy("col_name"))
-  )
-
-  /** `stats_profile` column contract: BIGINT/INTEGER/VARCHAR only — their
-    * min/max strings render identically across engines (doubles and
-    * timestamps don't).
+  /** The occupancy-scaled LSH band width every similarity/semantic key runs
+    * on for the corpus at `d` (OccupancySpec pins that it tracks the corpus).
     */
-  private val ProfileCols = Seq("l_orderkey", "l_partkey", "l_suppkey",
-    "l_linenumber", "l_returnflag", "l_linestatus")
+  def lshBitsFor(s: SparkSession, d: String): Int = KeySupport.lshBitsFor(s, d)
 
-  /** `vocab_coverage` head sizes (shared with the oracle). */
-  private val CoverageKs = Seq(10L, 100L, 1000L)
-
-  /** `quality_report` percentiles (shared with the oracle). */
-  private val QualityPs = Seq(25L, 50L, 75L)
-
-  /** Exact nanoseconds per day for retention-day bucketing. */
-  private val NanosPerDay = 86400L * 1000000000L
-
-  /** Exact nanoseconds per week for churn-week bucketing. */
-  private val NanosPerWeek = 7L * 86400L * 1000000000L
-
-  /** Exact nanoseconds per hour for hour-of-day bucketing
-    * (`events_seasonal`).
-    */
-  private val NanosPerHour = 3600L * 1000000000L
-
-  /** `k_anonymity` re-identification risk threshold (groups smaller than
-    * this are flagged) — shared with the oracle.
-    */
-  private val KAnonRiskK = 5L
-
-  /** `compaction_plan` simulated-listing shape: docs per file and the
-    * target compacted bin size in (char-mass) bytes — shared with the
-    * oracle.
-    */
-  private val CompactDocsPerFile = 8L
-  private val CompactTargetBytes = 8192L
-
-  /** `dedup_recall` audit-sample geometry and ground-truth Jaccard
-    * threshold (ppm). The sample is corpus-size-INDEPENDENT: the audit's
-    * ground truth is exact all-pairs Jaccard, so a modulus proportional
-    * to nothing (a fixed `% 5`) would grow the quadratic side 100× per
-    * 10× corpus — [[recallModFor]] scales the modulus so ~[[RecallSampleTarget]]
-    * docs are admitted at ANY corpus size (the same corpus-independent
-    * trick as [[lshBitsFor]] and `Quantizer.trainSampled`). The oracle
-    * pins the sf0.01 value (n=500 → mod 5), like the LSH band constants.
-    */
-  private val RecallSampleMod = 5L
-  private val RecallSampleTarget = 100L
-  private val RecallJacPpm = 500000L
-
-  private val docCounts = scala.collection.concurrent.TrieMap.empty[String, Long]
-  private def recallModFor(s: SparkSession, d: String): Long = {
-    val n = docCounts.getOrElseUpdate(d, docs(s, d).count())
-    math.max(RecallSampleMod, n / RecallSampleTarget)
-  }
-
-  /** `knn_mutual` neighbor-list depth — shared with the oracle. */
-  private val KnnMutualK = 3
-
-  /** `dq_report` event-type contract enum — shared with the oracle. */
-  private val EventTypeEnum = Seq("click", "error", "purchase", "signup", "view")
-
-  /** `l_diversity` minimum distinct-sensitive-values threshold — shared
-    * with the oracle.
-    */
-  private val LDiversityL = 2L
-
-  /** `t_closeness` release threshold in ppm of total-variation distance
-    * (t = 0.3): a cell whose sensitive-value distribution sits further
-    * than t from the global one is flagged. Shared with the oracle. */
-  private val TClosePpm = 300000L
-
-  /** `vocab_growth` doc_id-range bucket count (the Heaps'-curve x-axis
-    * resolution). Shared with the oracle. */
-  private val VocabGrowthBuckets = 10L
-
-  /** `pmi_topk` gates, all shared with the oracle: df floor (hapax cut),
-    * df ceiling in ppm of corpus size (ubiquity cut — terms in > 80% of
-    * docs carry no association signal), per-doc rarest-M pairing bound
-    * (the quadratic guard), absolute pair-support floor, and the
-    * reported list length. */
-  private val PmiMinDf = 2L
-  private val PmiMaxDfPpm = 800000L
-  private val PmiPerDocM = 32
-  private val PmiMinSupport = 3L
-  private val PmiTopK = 30
-
-  /** Hour bucket of the nanos `ts` column as BIGINT epoch seconds — the
-    * shared axis unit of events_gapfill / events_interpolate (no
-    * timestamp round-trip to drift; mirrored by [[SqlHourEpoch]]). */
-  private def hourEpochCol =
-    (graft.expr.IntMath.floorDiv(col("ts"), NanosPerHour) * 3600L).as("he")
-  private val SqlHourEpoch = "epoch(date_trunc('hour', ts))::BIGINT"
-
-  /** Dense (event_type, hour_epoch) grid over `h`'s GLOBAL hour span —
-    * the sparse→dense scaffold shared by events_gapfill and
-    * events_interpolate (one grid contract, mirrored by
-    * [[SqlHourAxisCtes]]): the axis comes from ONE 1-row span aggregate,
-    * so the grid is (types × hours) — time-bounded, independent of event
-    * cardinality. `h` must carry (event_type, he). */
-  private def denseHourGrid(h: DataFrame): DataFrame = {
-    val span = h.agg(min("he").as("lo"), max("he").as("hi"))
-    val hours = span.select(
-      explode(sequence(col("lo"), col("hi"), lit(3600L))).as("hour_epoch"))
-    h.select("event_type").distinct().crossJoin(broadcast(hours))
-  }
-
-  /** Oracle CTEs sp/hrs/ty over a prior CTE `h(event_type, he, …)` — the
-    * [[denseHourGrid]] axis in SQL; consumers cross-join ty × hrs. */
-  private val SqlHourAxisCtes: String =
-    """sp AS (SELECT min(he) AS lo, max(he) AS hi FROM h),
-      |hrs AS (SELECT unnest(generate_series(lo, hi, 3600)) AS hour_epoch
-      |  FROM sp),
-      |ty AS (SELECT DISTINCT event_type FROM h)""".stripMargin
-
-  /** `sketch_countmin` dimensions (shared with the oracle): depth = number
-    * of independent seeded hash rows, width = counters per row, probe =
-    * how many top tokens get exact-vs-estimate audit rows. */
-  private val CmDepth = 4
-  private val CmWidth = 256L
-  private val CmProbeK = 20
-
-  /** `dedup_bloom_gate` dimensions (shared with the oracle): K seeded hash
-    * functions into an M-bit filter. M is sized for the gate's CONTRACT to
-    * be visible at fixture scale (some false positives, zero false
-    * negatives); production sizes M from the corpus cardinality and target
-    * FPR — the structure stays a constant-size broadcast either way. */
-  private val BloomK = 4
-  private val BloomM = 4096L
-
-  /** `quality_by_domain` review-list thresholds (shared with the oracle):
-    * flag a host when its MEAN doc quality sits at least this margin (ppm)
-    * below the CORPUS mean, with at least this many docs of support — a
-    * domain-level action is a bigger hammer than a doc drop, so it demands
-    * evidence, and the relative cut tracks whatever quality regime the
-    * corpus is in (an absolute floor would be vacuous on a clean corpus
-    * and block everything on a dirty one). */
-  private val DomainQualityMarginPpm = 10000L
-  private val DomainBlockMinDocs = 3L
-
-  /** `graph_kcore` core order and peel-round budget — shared with the
-    * oracle (the budget is part of the key's contract; `converged`
-    * proves it sufficed).
-    */
-  private val KCoreK = 8
-  private val KCoreRounds = 6
-
-  /** `corpus_split`/`split_leak_audit` seed and ppm boundaries
-    * (train < [[SplitTrainPpm]] ≤ val < [[SplitValPpm]] ≤ test) —
-    * shared with the oracle.
-    */
-  private val SplitSeed = "split-v1"
-  private val SplitTrainPpm = 900000L
-  private val SplitValPpm = 950000L
-
-  /** Deterministic split assignment from an arbitrary string key — the
-    * doc-id path hashes ids, the domain-disjoint path hashes canonical
-    * hosts (so every doc of a host lands in ONE split).
-    */
-  private def splitOfKey(key: Column): Column = {
-    val g = pmod(graft.expr.PortableHash.phash(
-      concat(lit(s"$SplitSeed:"), key)), lit(SamplePpmScale))
-    when(g < SplitTrainPpm, "train").when(g < SplitValPpm, "val")
-      .otherwise("test")
-  }
-
-  /** Deterministic split assignment from the doc id alone. */
-  private def splitOf(docId: Column): Column = splitOfKey(docId.cast("string"))
-
-  /** Oracle twin of [[splitOfKey]] over a VARCHAR expression. */
-  private def sqlSplitOfKey(e: String): String =
-    s"""CASE WHEN ${graft.expr.PortableHash.sqlPhash(s"'$SplitSeed:' || $e")}
-       | % $SamplePpmScale < $SplitTrainPpm THEN 'train'
-       | WHEN ${graft.expr.PortableHash.sqlPhash(s"'$SplitSeed:' || $e")}
-       | % $SamplePpmScale < $SplitValPpm THEN 'val'
-       | ELSE 'test' END""".stripMargin.replace("\n", "")
-
-  /** Oracle twin of [[splitOf]] over a doc_id expression. */
-  private def sqlSplitOf(e: String): String = sqlSplitOfKey(s"$e::VARCHAR")
-
-  /** `stats_corr` measure pairs (alphabetical, matching the output
-    * order) — shared with the oracle.
-    */
-  private val CorrPairs = Seq(
-    ("dc", "p"), ("dc", "q"), ("dc", "tx"),
-    ("p", "q"), ("p", "tx"), ("q", "tx"))
-
-  /** Oracle CTE chain for the SCD2 build, ending in
-    * `scd(user_id, ver, event_type, valid_from, valid_to, n_events)` —
-    * shared by `scd2_history` and `join_scd2`.
-    */
-  private def sqlScd2Cte: String =
-    """e AS (SELECT user_id, event_id, event_type,
-      |  epoch_us(ts) * 1000 AS ts_ns FROM events),
-      |l AS (SELECT *, lag(event_type) OVER
-      |  (PARTITION BY user_id ORDER BY ts_ns, event_id) AS prev FROM e),
-      |c AS (SELECT *, CASE WHEN prev IS NULL OR prev <> event_type
-      |  THEN 1 ELSE 0 END AS chg FROM l),
-      |v AS (SELECT *, (sum(chg) OVER (PARTITION BY user_id
-      |  ORDER BY ts_ns, event_id ROWS UNBOUNDED PRECEDING))::BIGINT AS ver
-      |  FROM c),
-      |r AS (SELECT user_id, ver, min(event_type) AS event_type,
-      |  min({'t': ts_ns, 'i': event_id}) AS vf,
-      |  count(*)::BIGINT AS n_events
-      |  FROM v GROUP BY 1, 2),
-      |r2 AS (SELECT user_id, ver, event_type,
-      |  vf['t'] AS valid_from, vf['i'] AS valid_from_id, n_events FROM r),
-      |scd AS (SELECT user_id, ver, event_type, valid_from, valid_from_id,
-      |  coalesce(lead(valid_from) OVER (PARTITION BY user_id ORDER BY ver),
-      |    -1) AS valid_to,
-      |  coalesce(lead(valid_from_id) OVER (PARTITION BY user_id ORDER BY ver),
-      |    -1) AS valid_to_id, n_events
-      |  FROM r2)""".stripMargin
-
-  /** Type-2 SCD build shared by `scd2_history` and `join_scd2`: per-user
-    * change runs with half-open validity intervals, valid_to = -1 open.
-    * Classic islands shape: per-user windows only (bounded history per
-    * key, no global funnel); the successor lookup runs over the runs
-    * frame, 1 row per version.
-    *
-    * Intervals carry the run-start EVENT ID too: the run order is the
-    * composite (ts, event_id), so when a type change happens between two
-    * events sharing one timestamp the ts-only interval would be empty and
-    * the earlier event would fall through to the successor run.
-    * `join_scd2` therefore compares composite ordinates, keeping the
-    * "every event joins its own run" contract under ties.
-    */
-  private def scd2(s: SparkSession, d: String): DataFrame = {
-    val runsOf = graft.ops.Islands.withRunId(
-        events(s, d).select(col("user_id"), col("ts"), col("event_id"),
-          col("event_type")),
-        "user_id", Seq("ts", "event_id"), "event_type", out = "ver")
-      .groupBy("user_id", "ver")
-      .agg(min("event_type").as("event_type"), // constant within a run
-        min(struct(col("ts"), col("event_id"))).as("vf"), // run start ordinate
-        count(lit(1)).as("n_events"))
-      .select(col("user_id"), col("ver"), col("event_type"),
-        col("vf.ts").as("valid_from"), col("vf.event_id").as("valid_from_id"),
-        col("n_events"))
-    val wRun = Window.partitionBy("user_id").orderBy("ver")
-    runsOf
-      .withColumn("valid_to",
-        coalesce(lead("valid_from", 1).over(wRun), lit(-1L)))
-      .withColumn("valid_to_id",
-        coalesce(lead("valid_from_id", 1).over(wRun), lit(-1L)))
-      .select("user_id", "ver", "event_type", "valid_from", "valid_from_id",
-        "valid_to", "valid_to_id", "n_events")
-  }
-
-  /** Incident half-window (±30 min) and bucket width (1 h) for
-    * `join_interval_overlap` — shared with the oracle SQL.
-    */
-  private val IncidentHalfUs = 1800L * 1000000L
-  private val OverlapBucketUs = 3600L * 1000000L
-
-  /** `skew_salt_plan` heavy-key threshold: keys above this multiple of the
-    * mean group size get a salt factor (shared with the oracle).
-    */
-  private val SaltPlanMult = 4L
-
-  /** `zonemap_prune` pseudo-file width (orders per bucket) and the scan
-    * predicate's cutoff day (1999-01-01 as epoch days) — shared with the
-    * oracle.
-    */
-  private val ZoneBucketOrders = 1000L
-  private val PruneCutoffDay = 10592L
-
-  /** KMV sketch size + seed for `sketch_kmv_overlap` (shared with oracle). */
-  private val KmvK = 64
-  private val KmvSeed = "kmv-v1"
-
-  /** Attribution-window span for `join_range` — shared with the streaming
-    * twin so batch and streaming attribution can never drift apart.
-    */
-  private val RangeJoinWindowUs = graft.streaming.EventStream.AttributionWindowUs
-
-  // ------------------------------------------------- LLM-pipeline operators
-  // (training-data ops over documents/embeddings — SURVEY §7 north star)
-
-  import graft.llm.{Dedup, Similarity, TextAnalysis => TA, MultiModal, Scrub, Quantizer}
-
-  private def docs(s: SparkSession, d: String) = Tables.documents(s, d)
-  private def emb(s: SparkSession, d: String) = Tables.embeddings(s, d)
-
-  /** Per-directory embedding-corpus count, cached for the JVM lifetime: one
-    * cheap count job funds the occupancy-scaled LSH band width
-    * ([[Similarity.autoBitsPerBand]]) that EVERY similarity/semantic key
-    * runs on — the 100 TB posture (cell occupancy pinned, not the fixture
-    * constant) is the default, not a caller knob. Public so the occupancy
-    * spec can pin that the keys' width tracks the corpus.
-    */
-  private val embCounts = scala.collection.concurrent.TrieMap.empty[String, Long]
-  def lshBitsFor(s: SparkSession, d: String): Int =
-    Similarity.autoBitsPerBand(embCounts.getOrElseUpdate(d, emb(s, d).count()))
-
-  /** LSH-verified near-dup edges (jac ≥ 0.5) — shared by the clustering and
-    * decision keys.
-    */
-  private def verifiedPairs(s: SparkSession, d: String): DataFrame =
-    Dedup.verifiedJaccard(docs(s, d), shingleSize = 3, numPerms = 16, numBands = 4)
-      .select(col("a"), col("b"), round(col("jaccard"), 6).as("jac_r"))
-      .filter(col("jac_r") >= 0.5)
-
-  private def llmQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_exact" -> ((s, d) =>
-      Dedup.exact(docs(s, d)).orderBy("fp")),
-
-    // URL/metadata-level dedup — web-corpus stage 0 (CCNet/FineWeb run it
-    // before any content hashing): canonicalize the URL (strip scheme/
-    // query/fragment/www/default port, lowercase host) and exact-dedup on
-    // the canonical string; keep = min doc_id per group. Pure codegen'd
-    // Column regex + one hash aggregate; verdict joins corpus_clean on
-    // doc_id. The fixture has no raw URL column, so the key derives one
-    // deterministically from (source, doc_id) — identically in the oracle.
-    "dedup_url" -> ((s, d) =>
-      graft.llm.Url.dedupUrl(docs(s, d)).orderBy("doc_id")),
-
-    "dedup_minhash" -> ((s, d) =>
-      Dedup.minhashCandidates(docs(s, d), shingleSize = 3, numPerms = 16, numBands = 4)
-        .orderBy("a", "b")),
-
-    "dedup_simhash" -> ((s, d) =>
-      TA.simhash32ByKey(docs(s, d), "doc_id", "text").orderBy("doc_id")),
-
-    // Exact n-gram jaccard over minhash-LSH candidates (round 2: replaces
-    // prefix-blocking, whose boilerplate-prefix blocks go quadratic at
-    // corpus scale; ngramJaccard stays as a test-only shape in LlmSpec).
-    "dedup_ngram_jaccard" -> ((s, d) =>
-      Dedup.verifiedJaccard(docs(s, d), shingleSize = 3, numPerms = 16, numBands = 4)
-        .select(col("a"), col("b"), round(col("jaccard"), 6).as("jac_r"))
-        .filter(col("jac_r") >= 0.2)
-        .orderBy("a", "b")),
-
-    // Full candidate-verification frame: every LSH candidate with its band
-    // collision count, exact jaccard, and the keep/drop verdict — the audit
-    // artifact of a dedup pipeline (false-positive candidates visible).
-    "dedup_verified" -> ((s, d) =>
-      Dedup.verifiedJaccard(docs(s, d), shingleSize = 3, numPerms = 16, numBands = 4)
-        .select(col("a"), col("b"), col("n_bands"),
-          round(col("jaccard"), 6).as("jac_r"),
-          (round(col("jaccard"), 6) >= 0.5).as("is_dup"))
-        .orderBy("a", "b")),
-
-    "embedding_neardup" -> ((s, d) =>
-      Similarity.nearDupPairs(emb(s, d), 0.4, bitsPerBand = lshBitsFor(s, d))
-        .orderBy("a", "b")),
-
-    "text_stats" -> ((s, d) => {
-      val toks = TA.tokens(col("text"))
-      val nTok = size(toks)
-      val nUniq = size(array_distinct(toks))
-      val stopHits = size(filter(toks, t => t.isInCollection(TA.LangStopwords.head._2)))
-      docs(s, d)
-        .select(col("doc_id"), nTok.as("n_tokens"), nUniq.as("n_uniq"),
-          TA.subtokenCount(col("text")).as("n_subtokens"),
-          when(nTok === 0, 0.0).otherwise(round(nUniq.cast("double") / nTok, 6)).as("ttr_r"),
-          when(nTok === 0, 0.0).otherwise(round(stopHits.cast("double") / nTok, 6)).as("stop_ratio_r"))
-        .orderBy("doc_id")
-    }),
-
-    // Flesch reading-ease + Flesch-Kincaid grade in exact integer
-    // micro-units (vowel-group syllables, terminal-punctuation-run
-    // sentences) — the classic difficulty feature beside the published
-    // quality gates (graft.llm.Readability).
-    // The empty-doc probe row rides along on both engines so the oracle
-    // gate exercises the w = 0 path every round (round-10 ADVICE fix).
-    // Kept IN the result by design (r11 adjudication of the follow-up
-    // advice): filtering doc_id = -1 back out would push past the compute
-    // and un-exercise the very path the probe exists for, and a
-    // verify-only injection seam doesn't exist in the driver contract.
-    // The probe is part of this key's documented output contract; an
-    // upstream user wanting plain fixture rows calls Readability.fk
-    // directly.
-    "readability_fk" -> ((s, d) => graft.llm.Readability.fk(
-      graft.llm.Readability.withEmptyDocProbe(docs(s, d)))),
-
-    // Per-doc unigram surprisal in whole bits (the deterministic
-    // perplexity-bucket feature — graft.llm.Surprisal).
-    "quality_surprisal" -> ((s, d) => graft.llm.Surprisal.perDoc(docs(s, d))),
-
-    // Per-doc character entropy in whole bits — the mojibake/base64/
-    // key-mash screen token scores miss (graft.llm.Surprisal.perDocChars,
-    // same bin-width exactness contract).
-    "quality_char_entropy" -> ((s, d) =>
-      graft.llm.Surprisal.perDocChars(docs(s, d))),
-
-    // SoftDeDup frequency downweighting: keep every exact-dup copy but
-    // weight it 1/m so the group contributes one doc's gradient mass
-    // (graft.llm.Weighting.softDedup — the soft twin of dedup_exact).
-    "dedup_softdedup" -> ((s, d) => graft.llm.Weighting.softDedup(docs(s, d))),
-
-    // Deterministic per-epoch Poisson subsampling — a DIFFERENT
-    // reproducible subset each training epoch (graft.llm.Weighting
-    // .poissonEpochs, the data-constrained multi-epoch recipe).
-    "sample_poisson_epochs" -> ((s, d) =>
-      graft.llm.Weighting.poissonEpochs(docs(s, d))),
-
-    // Per-source tokenizer-compression profile: chars per token / per
-    // subtoken / fertility, in exact integer ppm. The standard "how well
-    // does the tokenizer fit this source" gauge (bytes-per-token in the
-    // compression-as-quality literature); one corpus pass, one
-    // |sources|-row hash aggregate, zero-token sources pin 0.
-    "tokenizer_compression" -> ((s, d) => {
-      val t = docs(s, d).select(col("source"),
-        length(col("text")).cast("long").as("n_chars"),
-        size(TA.tokens(col("text"))).cast("long").as("n_tok"),
-        TA.subtokenCount(col("text")).cast("long").as("n_sub"))
-      t.groupBy("source")
-        .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("sum_chars"),
-          sum("n_tok").as("sum_tokens"), sum("n_sub").as("sum_subtokens"))
-        .select(col("source"), col("n_docs"), col("sum_chars"),
-          col("sum_tokens"), col("sum_subtokens"),
-          when(col("sum_tokens") === 0, 0L)
-            .otherwise(expr("(sum_chars * 1000000) div sum_tokens"))
-            .as("chars_per_token_ppm"),
-          when(col("sum_subtokens") === 0, 0L)
-            .otherwise(expr("(sum_chars * 1000000) div sum_subtokens"))
-            .as("chars_per_subtoken_ppm"),
-          when(col("sum_tokens") === 0, 0L)
-            .otherwise(expr("(sum_subtokens * 1000000) div sum_tokens"))
-            .as("fertility_ppm"))
-        .orderBy("source")
-    }),
-
-    // URL blocklist gate — the FineWeb stage-0 URL filter re-expressed on
-    // the synthetic URLs: canonical-host blocklist membership plus a
-    // tracking-parameter flag on the RAW url (canonicalization strips the
-    // query, so the flag must read pre-canonical text). Pure per-row
-    // Column math inside codegen; the blocklist is a query literal.
-    "quality_url_blocklist" -> ((s, d) => {
-      val raw = graft.llm.Url.syntheticUrl(col("doc_id"), col("source"))
-      val host = graft.llm.Url.canonicalHost(raw)
-      docs(s, d).select(col("doc_id"), host.as("host"),
-          host.isInCollection(UrlBlocklist).as("host_blocked"),
-          raw.contains("session=").as("tracking_flag"))
-        .withColumn("keep", !col("host_blocked"))
-        .orderBy("doc_id")
-    }),
-
-    // Embedding-norm hygiene: exact quantized norm² per vector plus
-    // low/ok/high flags against 4× bands around the corpus mean —
-    // zero-ish and exploded norms are the classic ANN-index poison
-    // (degenerate cosine, distance blowup). One scan, one 1-row mean
-    // broadcast; integers end-to-end (the Quantizer contract).
-    "embedding_norm_outliers" -> ((s, d) => {
-      val q = emb(s, d).select(col("vec_id"),
-        aggregate(Quantizer.quantize(col("embedding")),
-          lit(0L), (acc, x) => acc + x * x).as("norm2_q"))
-        .localCheckpoint() // feeds the 1-row mean AND the flag pass
-      val m = q.agg(expr("sum(norm2_q) div count(1)").as("mean_norm2"))
-      q.crossJoin(broadcast(m))
-        .select(col("vec_id"), col("norm2_q"),
-          when(col("norm2_q") * 4 < col("mean_norm2"), "low")
-            .when(col("norm2_q") > col("mean_norm2") * 4, "high")
-            .otherwise("ok").as("flag"))
-        .orderBy("vec_id")
-    }),
-
-    // Conditional bigram surprisal — the fluency proxy that catches
-    // scrambled/template-stitched text with a normal unigram profile.
-    "quality_bigram_surprisal" -> ((s, d) =>
-      graft.llm.Surprisal.perDocBigram(docs(s, d))),
-
-    // The CCNet move itself: partition the corpus into surprisal DECILES
-    // (doc/token mass + score range per decile) — the distributed ntile
-    // rides GlobalRank at Auto buckets, never a single-partition window;
-    // empty docs (no score) are excluded from the ranked frame.
-    "quality_perplexity_buckets" -> ((s, d) => {
-      val sc = graft.llm.Surprisal.perDoc(docs(s, d)).filter(col("n_tok") > 0)
-      graft.ops.GlobalRank.withNtile(sc, "mean_bits_micro", Seq("doc_id"),
-          buckets = graft.ops.GlobalRank.Auto, tiles = 10, out = "decile")
-        .groupBy("decile")
-        .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("n_tokens"),
-          min("mean_bits_micro").as("min_bits_micro"),
-          max("mean_bits_micro").as("max_bits_micro"))
-        .orderBy("decile")
-    }),
-
-    // Hapax spectrum + Good-Turing unseen-mass estimate — the vocabulary
-    // saturation gauge (graft.llm.Diversity.hapax).
-    "vocab_hapax" -> ((s, d) => graft.llm.Diversity.hapax(docs(s, d))),
-
-    // log2 histogram of per-user inter-arrival gaps — the burstiness
-    // fingerprint beside events_acf (graft.ops.Interarrival).
-    "events_interarrival" -> ((s, d) =>
-      graft.ops.Interarrival.histogram(events(s, d))),
-
-    // EXACT per-type median (2·median in whole cents — always an integer)
-    // from order statistics over the distinct-value frame; the exactness
-    // anchor next to agg_approx_percentile (graft.ops.Stats.medianTypes).
-    "stats_median_exact" -> ((s, d) => graft.ops.Stats.medianTypes(events(s, d))),
-
-    // Pairwise Mann–Whitney U with tie-corrected z — welchPairs' rank-based
-    // twin (graft.ops.Stats.mannWhitneyPairs).
-    "stats_mannwhitney" -> ((s, d) => graft.ops.Stats.mannWhitneyPairs(events(s, d))),
-
-    // Brown–Forsythe variance-equality screen: the one-way F over
-    // median-centered absolute deviations |2c − median_x2| — exact-median
-    // + anova devices composed (graft.ops.Stats.leveneTypes).
-    "stats_levene" -> ((s, d) => graft.ops.Stats.leveneTypes(events(s, d))),
-
-    // Cohen's d effect size per type pair — the magnitude companion of
-    // welch t / mann-whitney (graft.ops.Stats.cohensDPairs).
-    "stats_cohens_d" -> ((s, d) => graft.ops.Stats.cohensDPairs(events(s, d))),
-
-    // Two-sample KS statistic per type pair — the CDF-shape screen next
-    // to mann-whitney's location test (graft.ops.Stats.ksPairs; exact
-    // cross-multiplied integer CDFs on the value-bounded cent frame).
-    "stats_ks_pairs" -> ((s, d) => graft.ops.Stats.ksPairs(events(s, d))),
-
-    // Spearman ρ between document length and quality score — "do longer
-    // docs score better?", the monotone-association screen on tie-averaged
-    // ranks over the distributed prefix sum (graft.ops.Stats.spearman;
-    // never a partition-less window).
-    "stats_spearman" -> ((s, d) => graft.ops.Stats.spearman(
-      docs(s, d).select(col("doc_id"),
-        size(TA.tokens(col("text"))).cast("long").as("x"),
-        round(TA.qualityScore(col("text")) * SamplePpmScale, 0)
-          .cast("long").as("y")),
-      "x", "y")),
-
-    // Per-user burstiness histogram (Goh–Barabási B over inter-event
-    // gaps) — the scalar companion of events_interarrival's spectrum
-    // (graft.ops.Stats.burstiness; the user axis is the window partition,
-    // never global).
-    "events_gap_burstiness" -> ((s, d) => graft.ops.Stats.burstiness(events(s, d))),
-
-    // Exact Gini of the co-purchase degree distribution — the one-number
-    // hub-skew gauge next to graph_degree_dist (graft.ops.Gini, ranked by
-    // the corpus-scaled GlobalRank, never a single-partition window).
-    "graph_degree_gini" -> ((s, d) => {
-      val canon = coPurchaseCanon(s, d)
-      val deg = canon.select(col("a").as("node"))
-        .unionAll(canon.select(col("b").as("node")))
-        .groupBy("node").agg(count(lit(1)).as("deg"))
-      graft.ops.Gini.ppm(deg, "node", "deg")
-    }),
-
-    // Exact Gini of per-user event counts — engagement inequality, the
-    // skew gauge next to events_pareto's cumulative-share rows.
-    "events_user_gini" -> ((s, d) =>
-      graft.ops.Gini.ppm(
-        events(s, d).groupBy("user_id").agg(count(lit(1)).as("n_ev")),
-        "user_id", "n_ev")),
-
-    // Global clustering coefficient: 3·triangles / wedges over the
-    // co-purchase graph — the one-number closure screen composing
-    // graph_triangles' degree-oriented count with the degree frame.
-    "graph_clustering" -> ((s, d) => {
-      val canon = coPurchaseCanon(s, d)
-        .localCheckpoint() // consumed by degrees + the 4-pass triangle count
-      val deg = canon.select(col("a").as("node"))
-        .unionAll(canon.select(col("b").as("node")))
-        .groupBy("node").agg(count(lit(1)).cast("decimal(38,0)").as("deg"))
-      // Σ deg·(deg−1) is even, so one DIV 2 after the exact DECIMAL sum is
-      // exact; wedge mass is the hub-quadratic quantity, hence DECIMAL.
-      val wd = deg.agg(count(lit(1)).as("n_nodes"),
-        sum(col("deg") * (col("deg") - 1)).as("w2"))
-      val tri = graft.ops.Triangles.perNode(canon)
-        .agg(coalesce(sum(col("tri_count")), lit(0L)).as("tri3")) // = 3·T
-      val ne = canon.agg(count(lit(1)).as("n_edges"))
-      wd.crossJoin(broadcast(tri)).crossJoin(broadcast(ne)) // 1-row totals
-        .select(col("n_nodes"), col("n_edges"),
-          expr("CAST(w2 DIV 2 AS BIGINT)").as("n_wedges"),
-          expr("CAST(tri3 DIV 3 AS BIGINT)").as("n_triangles"),
-          when(col("w2") === 0, 0L)
-            // tri3 rides DECIMAL(38,0) into the ×2e6 product: in LongType
-            // the ANSI multiply overflows at ~4.6e12 triangles while the
-            // DuckDB mirror's HUGEINT succeeds — a loud-vs-success
-            // cross-engine asymmetry (round-10 advice); DECIMAL gives both
-            // engines the same ~1e38 headroom, and DIV returns BIGINT.
-            .otherwise(
-              expr("CAST((CAST(tri3 AS DECIMAL(38,0)) * 2000000) DIV w2 AS BIGINT)"))
-            .as("cc_ppm"))
-    }),
-
-    "lang_id" -> ((s, d) =>
-      TA.langIdByKey(docs(s, d), "doc_id", "text", carry = Seq("lang"))
-        .select("doc_id", "lang", "pred_lang")
-        .orderBy("doc_id")),
-
-    // Language-ID quality matrix: labeled lang × predicted lang with doc
-    // and token mass per cell — the confusion artifact that tells a corpus
-    // owner where the n-gram heuristic misroutes data (and how many
-    // training tokens each confusion costs). One langIdByKey pass (token
-    // counts ride the same carry), then a tiny (langs²) aggregation.
-    "lang_confusion" -> ((s, d) => {
-      val scored = TA.langIdByKey(
-        docs(s, d).withColumn("n_tok", size(TA.tokens(col("text"))).cast("long")),
-        "doc_id", "text", carry = Seq("lang", "n_tok"))
-      scored.groupBy("lang", "pred_lang")
-        .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("n_tokens"))
-        .orderBy("lang", "pred_lang")
-    }),
-
-    "doc_fingerprint" -> ((s, d) =>
-      docs(s, d)
-        .select(col("doc_id"), Dedup.tokenHashes(TA.tokens(col("text"))).as("th"))
-        .select(col("doc_id"), Dedup.hashedShingles(col("th"), 5).as("sh"))
-        .select(col("doc_id"), array_min(col("sh")).as("fp"),
-          size(col("sh")).as("n_shingles"))
-        .orderBy("doc_id")),
-
-    "similarity_topk" -> ((s, d) =>
-      Similarity.topK(emb(s, d), col("vec_id") % 20 === 0, k = 5)
-        .select(col("q_id"), col("n_id"), col("cos_r"), col("rank").as("rnk"))
-        .orderBy("q_id", "rnk", "n_id")),
-
-    // IVF-style probe of the query's COMPUTED sign-bit LSH cell (round 2:
-    // round 1 borrowed the fixture label as the quantizer).
-    "similarity_ivf" -> ((s, d) =>
-      Similarity.topK(emb(s, d), col("vec_id") % 20 === 0, k = 3, sameCellOnly = true)
-        .select(col("q_id"), col("n_id"), col("cos_r"), col("rank").as("rnk"))
-        .orderBy("q_id", "rnk", "n_id")),
-
-    // Multi-band LSH retrieval: candidates collide with the query in ≥1 of
-    // 16×8-bit bands, ranked by exact cosine — the high-recall scale path.
-    "similarity_lsh" -> ((s, d) =>
-      Similarity.lshTopK(emb(s, d), col("vec_id") % 20 === 0, k = 5,
-          bitsPerBand = lshBitsFor(s, d))
-        .select(col("q_id"), col("n_id"), col("cos_r"), col("rank").as("rnk"))
-        .orderBy("q_id", "rnk", "n_id")),
-
-    // Index-quality audit: recall@k of the LSH retrieval against the exact
-    // top-k, per query — the metric an ANN deployment watches when tuning
-    // bands/bits. Both paths are the keys above (same tiebreaks), composed
-    // by a left join from truth to retrieved; fully oracle-replayable. At
-    // scale the exact side is the expensive audit run on a SAMPLE of
-    // queries (here the same %20 slice both keys use) — the point is the
-    // measurement shape, not running brute force over the corpus.
-    // Fixture recall reads LOW (LSH ~0.25, IVF ~0.56, PQ ~0.10 mean): the
-    // synthetic embeddings are near-uniform on the sphere, so true top-k
-    // neighbors are barely more similar than anyone else — exactly the
-    // regime an honest audit should expose rather than smooth over. On a
-    // cosine-separable corpus (scripts/gen_cluster_fixture.py — planted
-    // Gaussian clusters, intra-cos 0.94) the SAME 16×autoBitsPerBand
-    // operating point measures recall 1.0 / MRR 1.0 (RECALL_cluster_r12
-    // .json), so the low base number is the fixture, not the index.
-    "similarity_recall" -> ((s, d) => {
-      val k = 5
-      val isQ = col("vec_id") % 20 === 0
-      val exact = Similarity.topK(emb(s, d), isQ, k = k)
-        .select(col("q_id"), col("n_id"))
-      val retrieved = Similarity.lshTopK(emb(s, d), isQ, k = k,
-          bitsPerBand = lshBitsFor(s, d))
-        .select(col("q_id").as("r_q"), col("n_id").as("r_n"))
-      exact.join(retrieved,
-          col("q_id") === col("r_q") && col("n_id") === col("r_n"), "left")
-        .groupBy("q_id")
-        .agg(count(lit(1)).as("k_exact"), count(col("r_n")).as("n_hits"))
-        .select(col("q_id"), col("n_hits"),
-          round(col("n_hits").cast("double") / col("k_exact"), 6).as("recall_r"))
-        .orderBy("q_id")
-    }),
-
-    // MRR audit — recall@k's companion: recall asks WHETHER the truth was
-    // retrieved, MRR asks WHERE it ranked. Per query: the brute rank-1
-    // true NN, its rank inside the LSH top-10 (0 = missed), and the
-    // reciprocal rank as an exact ppm integer (1e6 div rank — integer
-    // division, so the metric hash-matches the oracle with no float
-    // averaging). Same bounded-query-sample exact side as the recall trio.
-    "similarity_mrr" -> ((s, d) => {
-      val k = 10
-      val isQ = col("vec_id") % 20 === 0
-      val nn = Similarity.topK(emb(s, d), isQ, k = 1)
-        .select(col("q_id"), col("n_id").as("nn_id"))
-      val ret = Similarity.lshTopK(emb(s, d), isQ, k = k,
-          bitsPerBand = lshBitsFor(s, d))
-        .select(col("q_id").as("r_q"), col("n_id").as("r_n"), col("rank"))
-      nn.join(ret, col("q_id") === col("r_q") && col("nn_id") === col("r_n"), "left")
-        .select(col("q_id"), col("nn_id"),
-          coalesce(col("rank").cast("long"), lit(0L)).as("rank_lsh"),
-          when(col("rank").isNotNull,
-            expr("CAST(1000000 AS BIGINT) div CAST(rank AS BIGINT)"))
-            .otherwise(lit(0L)).as("rr_ppm"))
-        .orderBy("q_id")
-    }),
-
-    // Hard-negative mining — the training-data op behind contrastive
-    // retriever/embedding training (DPR/ANCE-style): per query, negatives
-    // the CURRENT index ranks highest but that are NOT the query's class.
-    // Candidates come from the scale-path LSH retrieval (top-10 by exact
-    // cosine — never the brute side, so mining stays bucketed at any
-    // corpus size); candidates sharing the query's label are presumed
-    // positives and excluded; the top-3 survivors (hardest negatives)
-    // re-rank 1..3. Everything downstream of retrieval is k-bounded, and
-    // every join is equi ((band,cell), then id→label).
-    "hard_negatives" -> ((s, d) => {
-      val lab = emb(s, d).select(col("vec_id"), col("label"))
-      val w = Window.partitionBy("q_id").orderBy(col("cos_r").desc, col("n_id"))
-      Similarity.lshTopK(emb(s, d), col("vec_id") % 20 === 0, k = 10,
-          bitsPerBand = lshBitsFor(s, d))
-        .join(lab.select(col("vec_id").as("q_id"), col("label").as("q_label")), "q_id")
-        .join(lab.select(col("vec_id").as("n_id"), col("label").as("n_label")), "n_id")
-        .filter(col("n_label") =!= col("q_label"))
-        .withColumn("neg_rank", row_number().over(w))
-        .filter(col("neg_rank") <= 3)
-        .select(col("q_id"), col("q_label"), col("n_id"), col("n_label"),
-          col("cos_r"), col("neg_rank"))
-        .orderBy("q_id", "neg_rank", "n_id")
-    }),
-
-    // kNN label propagation — the weak-supervision auto-labeling pass
-    // (classify-by-neighbors over the embedding index): each query
-    // vector's LSH top-5 retrieved neighbors vote with their labels;
-    // majority wins, smallest label on ties. Emitting the true label
-    // beside the prediction makes the key double as the classifier's
-    // accuracy audit. Same scale shape as hard_negatives: retrieval +
-    // k-bounded label join + a votes-sized aggregate, all equi-joined.
-    "knn_classify" -> ((s, d) => {
-      val k = 5
-      val lab = emb(s, d).select(col("vec_id"), col("label"))
-      val votes = Similarity.lshTopK(emb(s, d), col("vec_id") % 20 === 0,
-          k = k, bitsPerBand = lshBitsFor(s, d))
-        .join(lab.select(col("vec_id").as("n_id"), col("label").as("n_label")), "n_id")
-        .groupBy("q_id", "n_label")
-        .agg(count(lit(1)).as("n_votes"))
-      val w = Window.partitionBy("q_id")
-        .orderBy(col("n_votes").desc, col("n_label"))
-      votes.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-        .join(lab.select(col("vec_id").as("q_id"), col("label").as("true_label")), "q_id")
-        .select(col("q_id"), col("true_label"),
-          col("n_label").as("pred_label"), col("n_votes"))
-        .orderBy("q_id")
-    }),
-
-    // TRAINED IVF codebook: 3 Lloyd rounds of exact-integer k-means (k=8)
-    // from deterministic phash seeds — bit-replayed by the DuckDB oracle.
-    "quantizer_kmeans" -> ((s, d) =>
-      Quantizer.centroidsDF(s, Quantizer.trainSampled(emb(s, d))).orderBy("cid", "idx")),
-
-    // Inertia audit of the trained codebook: per-cell member count + exact
-    // integer SSE + floored mean — the k-elbow / cell-balance diagnostic
-    // (one fat cell = one hot partition at query time). One narrow
-    // codegen'd projection + one k-bounded hash agg (llm/Quantizer).
-    "quantizer_inertia" -> ((s, d) =>
-      Quantizer.inertia(emb(s, d), Quantizer.trainSampled(emb(s, d)))
-        .orderBy("cid")),
-
-    // IVF probe with the trained codebook: assignment is a narrow codegen'd
-    // argmin (codebook rides the plan as literals), rerank is exact cosine.
-    "similarity_ivf_trained" -> ((s, d) =>
-      Quantizer.ivfTopK(emb(s, d), Quantizer.trainSampled(emb(s, d)),
-          col("vec_id") % 20 === 0, k = 3)
-        .select(col("q_id"), col("n_id"), col("cos_r"), col("rank").as("rnk"))
-        .orderBy("q_id", "rnk", "n_id")),
-
-    // Multi-probe IVF: queries probe their 2 nearest trained cells —
-    // boundary-recall recovery at nprobe× candidate cost.
-    "similarity_ivf_probes" -> ((s, d) =>
-      Quantizer.ivfTopKProbes(emb(s, d), Quantizer.trainSampled(emb(s, d)),
-          col("vec_id") % 20 === 0, k = 3, nprobe = 2)
-        .select(col("q_id"), col("n_id"), col("cos_r"), col("rank").as("rnk"))
-        .orderBy("q_id", "rnk", "n_id")),
-
-    // Recall audit of the trained-IVF multi-probe path (the companion of
-    // similarity_recall's LSH audit): recall@3 vs exact top-3 per query,
-    // same sample-only exact side. Together the two recall keys are the
-    // index-quality dashboard for both ANN families.
-    "similarity_recall_ivf" -> ((s, d) => {
-      val k = 3
-      val isQ = col("vec_id") % 20 === 0
-      val exact = Similarity.topK(emb(s, d), isQ, k = k)
-        .select(col("q_id"), col("n_id"))
-      val retrieved = Quantizer.ivfTopKProbes(emb(s, d), Quantizer.trainSampled(emb(s, d)),
-          isQ, k = k, nprobe = 2)
-        .select(col("q_id").as("r_q"), col("n_id").as("r_n"))
-      exact.join(retrieved,
-          col("q_id") === col("r_q") && col("n_id") === col("r_n"), "left")
-        .groupBy("q_id")
-        .agg(count(lit(1)).as("k_exact"), count(col("r_n")).as("n_hits"))
-        .select(col("q_id"), col("n_hits"),
-          round(col("n_hits").cast("double") / col("k_exact"), 6).as("recall_r"))
-        .orderBy("q_id")
-    }),
-
-    // Product-quantization codes: per-subspace exact-integer k-means
-    // codebooks (4×16-dim slices, 8 codes each), encoding = m codegen'd
-    // argmin projections — a 64-float vector becomes 4 small codes, the
-    // compression that makes billion-scale ANN fit in memory.
-    "pq_codes" -> ((s, d) =>
-      Quantizer.pqEncode(emb(s, d), Quantizer.pqTrainSampled(emb(s, d)))
-        .orderBy("vec_id")),
-
-    // IVF-PQ retrieval: coarse trained cell routing + asymmetric-distance
-    // ranking over the DECODED codes (exact-integer ADC, so the DuckDB
-    // replay agrees bit-for-bit) — the classic two-level ANN read path.
-    "similarity_pq" -> ((s, d) =>
-      Quantizer.pqTopK(emb(s, d), Quantizer.trainSampled(emb(s, d)),
-          Quantizer.pqTrainSampled(emb(s, d)), pmod(col("vec_id"), lit(20)) === 0,
-          topK = 5)
-        .orderBy("q_id", "rnk", "n_id")),
-
-    // PQ recall audit, closing the dashboard trio (LSH, trained IVF, PQ):
-    // recall@5 of IVF-PQ retrieval vs exact top-5. PQ recall reads lower by
-    // design — ADC ranks over lossy 4x16-dim codes — and THAT is the number
-    // this key surfaces: the compression/recall trade made measurable.
-    "similarity_recall_pq" -> ((s, d) => {
-      val k = 5
-      val isQ = pmod(col("vec_id"), lit(20)) === 0
-      val exact = Similarity.topK(emb(s, d), isQ, k = k)
-        .select(col("q_id"), col("n_id"))
-      val retrieved = Quantizer.pqTopK(emb(s, d), Quantizer.trainSampled(emb(s, d)),
-          Quantizer.pqTrainSampled(emb(s, d)), isQ, topK = k)
-        .select(col("q_id").as("r_q"), col("n_id").as("r_n"))
-      exact.join(retrieved,
-          col("q_id") === col("r_q") && col("n_id") === col("r_n"), "left")
-        .groupBy("q_id")
-        .agg(count(lit(1)).as("k_exact"), count(col("r_n")).as("n_hits"))
-        .select(col("q_id"), col("n_hits"),
-          round(col("n_hits").cast("double") / col("k_exact"), 6).as("recall_r"))
-        .orderBy("q_id")
-    }),
-
-    // Balanced export sharding: documents rank-striped into 8 shards by
-    // token count desc — shard i takes global ranks i, i+8, i+16, …, so
-    // per-shard token mass is near-equal (greedy striping), the layout a
-    // training job wants its input shards in. The global rank runs on the
-    // distributed ops.GlobalRank (range-bucketed, never a single-partition
-    // window); output is the per-shard balance report.
-    "export_shards" -> ((s, d) => {
-      val shards = 8
-      // checkpointed for the same tokenize-per-pass reason as curriculum
-      val sized = docs(s, d).select(col("doc_id"),
-        size(TA.tokens(col("text"))).cast("long").as("n_tok"))
-        .localCheckpoint()
-      val ranked = graft.ops.GlobalRank.withGlobalRowNumber(
-        sized.withColumn("neg_tok", -col("n_tok")),
-        "neg_tok", Seq("doc_id"), buckets = graft.ops.GlobalRank.Auto, out = "rn")
-      ranked
-        .withColumn("shard", pmod(col("rn") - 1, lit(shards.toLong)).cast("int"))
-        .groupBy("shard")
-        .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("n_tokens"))
-        .orderBy("shard")
-    }),
-
-    // Curriculum bucketing: documents quality-ranked into 4 tiers with the
-    // distributed ntile (GlobalRank — no single-partition window over the
-    // corpus), per-tier doc/token mass and quality range. The artifact a
-    // curriculum-ordered training run feeds its sampler.
-    "curriculum_buckets" -> ((s, d) => {
-      // checkpointed: GlobalRank's bare-scan heuristic would re-read the
-      // scan per pass, but this projection carries the tokenize subtree —
-      // materialize the narrow (id, quality, n_tok) frame once instead of
-      // tokenizing the corpus three times
-      val q = docs(s, d).select(col("doc_id"),
-        TA.qualityScore(col("text")).as("quality"),
-        size(TA.tokens(col("text"))).cast("long").as("n_tok"))
-        .localCheckpoint()
-      graft.ops.GlobalRank
-        .withNtile(q, "quality", Seq("doc_id"), buckets = graft.ops.GlobalRank.Auto, tiles = 4, out = "tier")
-        .groupBy("tier")
-        .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("n_tokens"),
-          round(min("quality"), 6).as("min_q"), round(max("quality"), 6).as("max_q"))
-        .orderBy("tier")
-    }),
-
-    // Shard manifest: the integrity artifact next to export_shards — per
-    // shard, membership checksum (md5 over the ordered doc_id list) plus
-    // doc/token mass, so a training run can verify a shard set is exactly
-    // the one the exporter wrote. Sorted-struct collect keeps the digest
-    // order-stable on any topology.
-    "export_manifest" -> ((s, d) => {
-      val shards = 8
-      // checkpointed for the same tokenize-per-pass reason as curriculum
-      val sized = docs(s, d).select(col("doc_id"),
-        size(TA.tokens(col("text"))).cast("long").as("n_tok"))
-        .localCheckpoint()
-      graft.ops.GlobalRank.withGlobalRowNumber(
-          sized.withColumn("neg_tok", -col("n_tok")),
-          "neg_tok", Seq("doc_id"), buckets = graft.ops.GlobalRank.Auto, out = "rn")
-        .withColumn("shard", pmod(col("rn") - 1, lit(shards.toLong)).cast("int"))
-        .groupBy("shard")
-        .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("n_tokens"),
-          md5(concat_ws(",", transform(
-            sort_array(collect_list(struct(col("doc_id")))),
-            x => x.getField("doc_id").cast("string"))).cast("binary")).as("member_md5"))
-        .orderBy("shard")
-    }),
-
-    // Shard-balance audit over export_shards' assignment: one row with the
-    // max/min/mean token mass across shards and the straggler factor in ppm
-    // (1e6 = perfectly even). At 100 TB an uneven shard set IS the training
-    // job's critical path — this is the gate that catches it before export.
-    "export_balance" -> ((s, d) => {
-      val shards = 8
-      val sized = docs(s, d).select(col("doc_id"),
-        size(TA.tokens(col("text"))).cast("long").as("n_tok"))
-        .localCheckpoint()
-      graft.ops.GlobalRank.withGlobalRowNumber(
-          sized.withColumn("neg_tok", -col("n_tok")),
-          "neg_tok", Seq("doc_id"), buckets = graft.ops.GlobalRank.Auto, out = "rn")
-        .withColumn("shard", pmod(col("rn") - 1, lit(shards.toLong)).cast("int"))
-        .groupBy("shard")
-        .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("n_tokens"))
-        .agg(count(lit(1)).cast("int").as("n_shards"),
-          sum("n_docs").as("docs_total"), sum("n_tokens").as("tok_total"),
-          max("n_tokens").as("tok_max"), min("n_tokens").as("tok_min"))
-        .select(col("n_shards"), col("docs_total"), col("tok_total"),
-          col("tok_max"), col("tok_min"),
-          expr("(tok_max * n_shards * 1000000) div tok_total").as("tok_balance_ppm"))
-    }),
-
-    "multimodal_features" -> ((s, d) =>
-      MultiModal.features(docs(s, d))(s).orderBy("doc_id")),
-
-    // Frame-sample + resize over the opaque payload (stub decode; real
-    // per-partition batch plumbing — code-point windows so the oracle can
-    // recompute the exact same frames).
-    "multimodal_frames" -> ((s, d) =>
-      MultiModal.frames(docs(s, d))(s).orderBy("doc_id")),
-
-    // Perceptual-hash near-dup over the opaque payload: chunk-simhash
-    // (32-bit) + the classic 4-block Hamming banding, occupancy-capped,
-    // exact bit_count verify — content dedup for media columns where
-    // byte-exact fingerprints miss re-encodes.
-    "multimodal_neardup" -> ((s, d) =>
-      MultiModal.nearDupPayloads(docs(s, d), maxHamming = PhashMaxHamming)
-        .orderBy("a", "b")),
-
-    // Near-dup clustering: connected components over LSH-verified jaccard
-    // pairs — the grouping step that turns pairwise candidates into dedup
-    // groups.
-    "dedup_clusters" -> ((s, d) => {
-      Dedup.clusters(verifiedPairs(s, d)).orderBy("doc_id")
-    }),
-
-    // Duplication profile: near-dup cluster-size histogram — the
-    // observability frame a dedup pipeline reports ("how much duplication
-    // does the corpus carry, in what group sizes"). Two map-side-partial
-    // aggregations over the (doc_id, cluster_id) labeling; output is
-    // |distinct sizes| rows, nowhere near data scale.
-    "dedup_cluster_stats" -> ((s, d) =>
-      Dedup.clusters(verifiedPairs(s, d))
-        .groupBy("cluster_id").agg(count(lit(1)).as("sz"))
-        .groupBy("sz").agg(count(lit(1)).as("n_clusters"))
-        .orderBy("sz")),
-
-    // Composite quality score + routing class (the filter stage of a
-    // training-data pipeline).
-    "doc_quality" -> ((s, d) => {
-      val q = TA.qualityScore(col("text"))
-      docs(s, d)
-        .select(col("doc_id"), q.as("quality"),
-          when(q >= 0.7, "high").when(q >= 0.4, "mid").otherwise("low").as("quality_class"))
-        .orderBy("doc_id")
-    }),
-
-    // The published Gopher quality gates (Rae et al. 2021 App. A1.1) as
-    // exact integer-rational verdicts — the industry-standard web filter a
-    // migrating pipeline expects to keep running. Map-only stage (no
-    // shuffle before the sort); line view + decorations documented on
-    // graft.llm.Gopher.
-    "quality_gopher" -> ((s, d) =>
-      graft.llm.Gopher.gates(docs(s, d)).orderBy("doc_id")),
-
-    // The published Gopher REPETITION gates (Rae et al. 2021 App. A1.1,
-    // repetitious-text table): char-exact dup-line and top/dup n-gram
-    // fractions for n = 2..10 with the paper's thresholds, one generate +
-    // two hash aggregates (graft.llm.GopherRep).
-    "quality_gopher_rep" -> ((s, d) =>
-      graft.llm.GopherRep.gates(docs(s, d)).orderBy("doc_id")),
-
-    // The published C4 cleaning heuristics (Raffel et al. 2020 §2.2) —
-    // line-keep rules + page gates as exact integer verdicts; map-only
-    // like quality_gopher (see graft.llm.C4).
-    "quality_c4" -> ((s, d) =>
-      graft.llm.C4.gates(docs(s, d)).orderBy("doc_id")),
-
-    // The FineWeb-style composed admission: a document enters the corpus
-    // iff it clears ALL THREE published filters — Gopher quality, Gopher
-    // repetition, and C4 — the verdict a migrating curation pipeline
-    // actually ships. Three doc-keyed frames (two map-only, one
-    // gram-aggregate) joined on doc_id; at 100 TB each side shuffles on
-    // the same key and the join is the only exchange the gates add.
-    "corpus_admit_published" -> ((s, d) => {
-      // Gopher and C4 are BOTH per-row map-only gates: composing them in
-      // one projection chain (C4 over Gopher's output, `text` carried,
-      // `gopher_pass` carried back out) removes one full documents scan +
-      // tokenize pass and one doc_id join vs the old 3-frame join (opt
-      // guide §2.4 remove shuffles outright / §1.2 the distributed
-      // algorithm). Rep stays the one aggregate-shaped side; the single
-      // remaining join is doc_id-keyed exactly as before. Values
-      // unchanged: both gates read only (doc_id, text).
-      val gc = graft.llm.C4.gates(
-          graft.llm.Gopher.gates(docs(s, d), carry = Seq("text"))
-            .select(col("doc_id"), col("text"), col("gopher_pass")),
-          carry = Seq("gopher_pass"))
-        .select(col("doc_id"), col("gopher_pass"), col("c4_pass"))
-      val r = graft.llm.GopherRep.gates(docs(s, d))
-        .select(col("doc_id"), col("rep_pass"))
-      gc.join(r, Seq("doc_id"))
-        .select(col("doc_id"), col("gopher_pass"), col("rep_pass"),
-          col("c4_pass"))
-        .withColumn("admit",
-          col("gopher_pass") && col("rep_pass") && col("c4_pass"))
-        .orderBy("doc_id")
-    }),
-
-    // Composed FineWeb-style cleaning pass: redact → quality + repetition
-    // gates → exact-dedup keeper, one admission verdict per document.
-    "corpus_clean" -> ((s, d) =>
-      Scrub.cleanCorpus(docs(s, d), minQuality = 0.4, maxTop2 = 0.6)
-        .orderBy("doc_id")),
-
-    // End-to-end dedup verdict: every document keeps or drops based on its
-    // near-dup cluster (keep == cluster minimum or unclustered) — the final
-    // composition of candidate generation, verification and clustering.
-    // No broadcast hint on the clusters side: membership of a near-dup-heavy
-    // corpus is O(duplicated docs) — billions of rows at 100 TB, past the
-    // 8 GB broadcast ceiling. Both sides are doc_id-keyed, so the shuffle
-    // join is the scale-safe shape; AQE still broadcasts when it IS small.
-    "dedup_decisions" -> ((s, d) => {
-      val clusters = Dedup.clusters(verifiedPairs(s, d))
-      docs(s, d).select(col("doc_id"))
-        .join(clusters, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"),
-          (coalesce(col("cluster_id"), col("doc_id")) === col("doc_id")).as("keep"))
-        .orderBy("doc_id")
-    }),
-
-    // Quality-aware dedup keeper: per near-dup cluster keep the HIGHEST-
-    // QUALITY member (ties → smallest doc_id), not the smallest id — the
-    // keeper policy production pipelines actually run (min-id throws away a
-    // clean original when a truncated copy has a smaller id). Argmax rides
-    // a struct max-aggregate, not a per-cluster window, so a pathological
-    // giant cluster costs one hash-agg cell, never a single-task sort.
-    "dedup_keep_best" -> ((s, d) => {
-      val clusters = Dedup.clusters(verifiedPairs(s, d))
-      val labeled = docs(s, d)
-        .select(col("doc_id"), TA.qualityScore(col("text")).as("quality"))
-        .join(clusters, Seq("doc_id"), "left")
-        .withColumn("cluster_id", coalesce(col("cluster_id"), col("doc_id")))
-      val best = labeled.groupBy("cluster_id")
-        .agg(max(struct(col("quality"), (-col("doc_id")).as("nid"))).as("b"))
-        .select(col("cluster_id"), (-col("b.nid")).as("best_doc"))
-      labeled.join(best, Seq("cluster_id"))
-        .select(col("doc_id"), col("cluster_id"), col("quality"),
-          (col("doc_id") === col("best_doc")).as("keep"))
-        .orderBy("doc_id")
-    }),
-
-    // Corpus vocabulary: top-20 tokens by frequency. `orderBy().limit(k)`
-    // is Spark's distributed TakeOrderedAndProject (per-partition top-k,
-    // merge of k×partitions rows) — NOT a row_number over a global window,
-    // which would funnel the whole vocabulary (10^8+ tokens web-scale)
-    // through one task. Ranks are then assigned IN-PLAN over the k-row
-    // frame: collect_list → array_sort → posexplode (k-bounded agg cell,
-    // no single-partition window, no driver data path — r11 verdict #7
-    // replaced the previous 20-row collect + createDataFrame round-trip).
-    "vocab_topk" -> ((s, d) =>
-      vocabTop(s, d)
-        .agg(collect_list(
-          struct((-col("freq")).as("nf"), col("token"), col("freq"))).as("xs"))
-        .select(posexplode(array_sort(col("xs"))).as(Seq("pos", "x")))
-        .select(col("x.token").as("token"), col("x.freq").as("freq"),
-          (col("pos") + 1).as("rnk"))
-        .orderBy("rnk")),
-
-    // Repetition quality gate (Gopher/RefinedWeb-style): top-2-gram
-    // dominance + duplicate-3-gram fraction per document.
-    "doc_repetition" -> ((s, d) =>
-      Scrub.repetitionByKey(docs(s, d), "doc_id", "text").orderBy("doc_id")),
-
-    // PII scrub pass: the fixture text carries no PII, so the query plants a
-    // deterministic contact suffix (derived from doc_id, mirrored verbatim in
-    // the oracle) and then redacts it — counts, redacted length and digest
-    // prove the redaction really ran.
-    "pii_redact" -> ((s, d) => {
-      val contact = piiContact
-      docs(s, d).select(col("doc_id"),
-          Scrub.emailCount(contact).as("n_emails"),
-          Scrub.phoneCount(contact).as("n_phones"),
-          length(Scrub.redact(contact)).as("redacted_len"),
-          md5(Scrub.redact(contact).cast("binary")).as("redacted_md5"))
-        .orderBy("doc_id")
-    }),
-
-    // Benchmark decontamination: 5-gram overlap of every training document
-    // (doc_id % 50 != 0) against the benchmark slice (doc_id % 50 == 0).
-    "decontaminate" -> ((s, d) =>
-      Scrub.contamination(docs(s, d), pmod(col("doc_id"), lit(50)) === 0, shingleSize = 5)
-        .orderBy("doc_id")),
-
-    // Winnow-granularity decontamination — the fuzzy complement of the
-    // exact 5-gram key above: benchmark spans are caught through
-    // paraphrase-adjacent edits under the published >= w+k-1-token
-    // guarantee; same broadcast-benchmark posture, one shared fingerprint
-    // pass (graft.llm.Winnow.contamination).
-    "decontaminate_winnow" -> ((s, d) =>
-      graft.llm.Winnow.contamination(docs(s, d),
-        pmod(col("doc_id"), lit(50)) === 0).orderBy("doc_id")),
-
-    // Deterministic data mixing: stratified hash-sampling by language —
-    // seed + doc_id reproduce the exact corpus slice on any topology.
-    "sample_stratified" -> ((s, d) =>
-      docs(s, d)
-        .filter(Scrub.stratifiedKeep(col("doc_id"), col("lang"), MixRatesPpm,
-          MixDefaultPpm, MixSeed))
-        .select("doc_id", "lang")
-        .orderBy("doc_id")),
-
-    // GPT-style sequence packing: concatenate-then-chunk into 256-token
-    // windows, bucketed so no window goes single-partition; straddling docs
-    // split across consecutive sequences. Bucket count scales with the
-    // corpus (autoBuckets — a fixed count caps the per-bucket window at
-    // that many tasks and measured 316x at 100x data); the count pass is
-    // one cheap scan, mirrored by the oracle's scalar subquery.
-    "pack_sequences" -> ((s, d) =>
-      graft.llm.Pack.sequences(docs(s, d),
-          buckets = graft.llm.Pack.autoBuckets(docs(s, d).count()))
-        .orderBy("bucket", "seq", "doc_id")),
-
-    // Attention-mask sidecar for the packed sequences: per (bucket, seq)
-    // the ordered within-sequence doc boundaries (s_start:len:doc_id) a
-    // training loader uses to BLOCK cross-document attention — the
-    // packing papers' document masking, shipped as metadata next to the
-    // payload. Group payload bounded by seqLen slices (the payloads
-    // argument).
-    "pack_boundaries" -> ((s, d) =>
-      graft.llm.Pack.boundaries(docs(s, d),
-          buckets = graft.llm.Pack.autoBuckets(docs(s, d).count()))
-        .orderBy("bucket", "seq")),
-
-    // Incremental corpus update: the NEW batch (doc_id % 10 == 9) probes the
-    // EXISTING index on exact fingerprints + LSH bands — linear in the
-    // batch, never re-clustering the corpus.
-    "dedup_incremental" -> ((s, d) =>
-      Dedup.incremental(docs(s, d), pmod(col("doc_id"), lit(10)) === 9,
-          shingleSize = 3, numPerms = 16, numBands = 4, threshold = 0.5)
-        .orderBy("doc_id")),
-
-    // Bloom-filter admission gate: before the shuffle join that dedups a
-    // NEW crawl batch against the corpus, probe a K-hash
-    // Bloom filter over the corpus's canonical URLs ("seen this URL
-    // before?") — the constant-size broadcast structure that lets 100 TB
-    // admission skip the join for the (vast) never-seen majority. Bits ride
-    // the seeded portable-hash family (sketch_countmin's), so the oracle
-    // replays them exactly. The set-bit table is ≤ BloomM rows regardless
-    // of corpus size — that bound is the whole point — and broadcasts. The
-    // Bloom contract ships in the row: bloom_hit ≥ true_dup (NO false
-    // negatives; false positives are the measured price), checked not
-    // trusted. The batch models a real crawl day: RE-CRAWLS (the %7 leg —
-    // coprime with the synthetic URL's %100 group cycle, so their groups
-    // always have corpus members → must hit) plus NEVER-SEEN pages (the
-    // ≥95 page band, whose URL groups live entirely in the batch → may
-    // only hit as false positives). Both sides of the contract are
-    // exercised, neither vacuously.
-    "dedup_bloom_gate" -> ((s, d) => {
-      import graft.expr.PortableHash
-      import graft.llm.Url
-      val all = docs(s, d).select(col("doc_id"),
-        Url.canonical(Url.syntheticUrl(col("doc_id"), col("source"))).as("sig"))
-      val page = pmod(col("doc_id"), lit(100))
-      val isDelta = (pmod(col("doc_id"), lit(7)) === 3 && page < 50) ||
-        page >= 95
-      val corpus = all.filter(!isDelta).localCheckpoint() // bits + exact probe
-      val delta = all.filter(isDelta)
-      def bits(sig: Column) = explode(array((0 until BloomK).map(i =>
-        pmod(PortableHash.phashSeed(i, sig), lit(BloomM))): _*))
-      val setBits = corpus.select(bits(col("sig")).as("bit")).distinct()
-      val nSet = delta.select(col("doc_id"), bits(col("sig")).as("bit"))
-        .join(broadcast(setBits), Seq("bit"), "left_semi")
-        .groupBy("doc_id").agg(count(lit(1)).as("n_set"))
-      val trueDup = delta.join(corpus.select("sig"), Seq("sig"), "left_semi")
-        .select(col("doc_id"), lit(true).as("td"))
-      delta.select("doc_id")
-        .join(nSet, Seq("doc_id"), "left")
-        .join(trueDup, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          (coalesce(col("n_set"), lit(0L)) === BloomK).as("bloom_hit"),
-          coalesce(col("td"), lit(false)).as("true_dup"))
-        .orderBy("doc_id")
-    }),
-
-    // Top-3 distinctive tokens per document by TF-IDF (token-keyed DF join,
-    // doc-partitioned ranking window — both scale-safe).
-    "tfidf_topk" -> ((s, d) =>
-      TA.tfidfTopK(docs(s, d), k = 3).orderBy("doc_id", "rnk")),
-
-    // Materialized packed sequences: the actual seqLen-token payloads, doc
-    // slices concatenated in pack order (group payload bounded by seqLen).
-    "pack_payloads" -> ((s, d) =>
-      graft.llm.Pack.payloads(docs(s, d),
-          buckets = graft.llm.Pack.autoBuckets(docs(s, d).count()))
-        .orderBy("bucket", "seq")),
-
-    // Corpus n-gram LM counts: top-50 bigrams by frequency. Same distributed
-    // shape as vocab_topk — explode + hash agg (map-side partial counts),
-    // TakeOrderedAndProject for the top-k; never a global window, so the
-    // 10^9+-distinct-ngram frame of a web corpus stays partitioned.
-    "ngram_counts" -> ((s, d) =>
-      docs(s, d)
-        .select(TA.tokens(col("text")).as("toks"))
-        .select(explode(TA.shingles(col("toks"), 2)).as("ngram"))
-        .groupBy("ngram").agg(count(lit(1)).as("freq"))
-        .orderBy(col("freq").desc, col("ngram"))
-        .limit(50)),
-
-    // Support-threshold frequent tokens (the scale-honest sibling of
-    // vocab_topk: output is every token above a ppm support floor, not a
-    // fixed k). One explode + hash agg (map-side partials); the token-freq
-    // frame is localCheckpoint'd so the scalar total doesn't re-run the
-    // corpus scan; the total rides a 1-row broadcast. Exact integer
-    // threshold (freq·10⁶ ≥ ppm·total ⟺ freq ≥ ⌈ppm·total/10⁶⌉) computed in
-    // DECIMAL(38,0): `freq * 1000000` wraps a long once total corpus tokens
-    // pass ~9.2e12 — a count a 100 TB corpus exceeds — and non-ANSI Spark
-    // wraps silently. Decimal keeps the comparison exact at any corpus size;
-    // `div` on decimals returns BIGINT, so output types are unchanged.
-    "heavy_hitters" -> ((s, d) => {
-      val freq = docs(s, d)
-        .select(explode(TA.tokens(col("text"))).as("token"))
-        .groupBy("token").agg(count(lit(1)).as("freq"))
-        .localCheckpoint()
-      val tot = freq.agg(sum("freq").as("tot"))
-      freq.crossJoin(tot)
-        .filter(col("freq") >= expr(
-          s"(CAST($HeavyHitterPpm AS DECIMAL(38,0)) * tot + 999999) div 1000000"))
-        .select(col("token"), col("freq"),
-          expr("(CAST(freq AS DECIMAL(38,0)) * 1000000) div tot").as("ppm"))
-        .orderBy(col("freq").desc, col("token"))
-    }),
-
-    // Semantic dedup clustering: the alternating large-star/small-star CC
-    // used for text near-dups, over embedding-cosine LSH edges — groups of
-    // semantically near-identical samples (the embedding analog of
-    // dedup_clusters; no edge broadcast, O(log n) rounds).
-    "semantic_clusters" -> ((s, d) => {
-      val edges = Similarity.nearDupPairs(emb(s, d), 0.4,
-        bitsPerBand = lshBitsFor(s, d)).select("a", "b")
-      Dedup.clusters(edges)
-        .select(col("doc_id").as("vec_id"), col("cluster_id"))
-        .orderBy("vec_id")
-    }),
-
-    // Per-vector keep/drop verdict over the semantic clusters — the
-    // embedding analog of dedup_decisions, completing the semantic path
-    // (pairs → clusters → decisions). Same scale posture: no broadcast
-    // hint on the clusters side (membership is O(duplicated vectors)),
-    // shuffle left join on vec_id, singletons keep themselves.
-    "semantic_decisions" -> ((s, d) => {
-      val edges = Similarity.nearDupPairs(emb(s, d), 0.4,
-        bitsPerBand = lshBitsFor(s, d)).select("a", "b")
-      val clusters = Dedup.clusters(edges)
-        .select(col("doc_id").as("vec_id"), col("cluster_id"))
-      emb(s, d).select(col("vec_id"))
-        .join(clusters, Seq("vec_id"), "left")
-        .select(col("vec_id"),
-          coalesce(col("cluster_id"), col("vec_id")).as("cluster_id"),
-          (coalesce(col("cluster_id"), col("vec_id")) === col("vec_id")).as("keep"))
-        .orderBy("vec_id")
-    }),
-
-    // SemDeDup keeper policy (Abbas et al. 2023): within each semantic
-    // near-dup cluster keep the member with the LOWEST cosine to the
-    // cluster centroid — the farthest-from-center sample carries the most
-    // diversity; min-id (semantic_decisions) keeps an arbitrary one.
-    // Centroids are exact quantized-integer means per (cluster, dim) —
-    // the embedding_outlier determinism trade, so the oracle replays them
-    // bit-for-bit. The centroid join is a shuffle join on (cluster_id,
-    // idx), NOT a broadcast: cluster count is O(corpus), unlike the
-    // |labels|-bounded centroid table. Argmin rides a struct min-aggregate
-    // (one hash-agg cell per cluster), never a per-cluster sort.
-    "semantic_keep_diverse" -> ((s, d) => {
-      val edges = Similarity.nearDupPairs(emb(s, d), 0.4,
-        bitsPerBand = lshBitsFor(s, d)).select("a", "b")
-      val clusters = Dedup.clusters(edges)
-        .select(col("doc_id").as("vec_id"), col("cluster_id"))
-      val q = emb(s, d)
-        .select(col("vec_id"), posexplode(Quantizer.quantize(col("embedding"))))
-        .toDF("vec_id", "idx", "qv")
-        .join(clusters, Seq("vec_id"), "left")
-        .withColumn("cluster_id", coalesce(col("cluster_id"), col("vec_id")))
-        .localCheckpoint() // feeds both the centroid agg and the member dots
-      val cent = q.groupBy("cluster_id", "idx")
-        .agg(sum("qv").as("s"), count(lit(1)).as("n"))
-        .select(col("cluster_id"), col("idx"),
-          expr("(s - pmod(s, n)) div n").as("c"))
-      val cos = q.join(cent, Seq("cluster_id", "idx"))
-        .groupBy("vec_id", "cluster_id")
-        .agg(sum(col("qv") * col("c")).as("dt"),
-          sum(col("qv") * col("qv")).as("n2v"),
-          sum(col("c") * col("c")).as("n2c"))
-        .select(col("vec_id"), col("cluster_id"),
-          when(col("n2v") === 0 || col("n2c") === 0, lit(-2.0))
-            .otherwise(round(col("dt") / (sqrt(col("n2v")) * sqrt(col("n2c"))), 6))
-            .as("cos_centroid_r"))
-        .localCheckpoint() // keeper argmin + final output share it
-      val keep = cos.groupBy("cluster_id")
-        .agg(min(struct(col("cos_centroid_r"), col("vec_id"))).as("b"))
-        .select(col("cluster_id"), col("b.vec_id").as("best_vec"))
-      cos.join(keep, Seq("cluster_id"))
-        .select(col("vec_id"), col("cluster_id"), col("cos_centroid_r"),
-          (col("vec_id") === col("best_vec")).as("keep"))
-        .orderBy("vec_id")
-    }),
-
-    // Semantic-cluster label purity — the diagnostic that tells you whether
-    // the embedding near-dup clusters respect the label structure (low
-    // purity = the cosine threshold is merging distinct content; the check
-    // run before trusting SemDeDup-style removal). Per cluster: member
-    // count, distinct labels, the majority label (ties → smallest label,
-    // via a struct max-aggregate — one hash-agg cell per cluster, no
-    // per-cluster sort) and its share as an exact ppm integer (DECIMAL
-    // product: n*10⁶ wraps a long once clusters pass ~9e12 members).
-    "semantic_purity" -> ((s, d) => {
-      val edges = Similarity.nearDupPairs(emb(s, d), 0.4,
-        bitsPerBand = lshBitsFor(s, d)).select("a", "b")
-      val clusters = Dedup.clusters(edges)
-        .select(col("doc_id").as("vec_id"), col("cluster_id"))
-      val labeled = emb(s, d).select(col("vec_id"), col("label"))
-        .join(clusters, Seq("vec_id"), "left")
-        .withColumn("cluster_id", coalesce(col("cluster_id"), col("vec_id")))
-      val cl = labeled.groupBy("cluster_id", "label")
-        .agg(count(lit(1)).as("n"))
-      cl.groupBy("cluster_id")
-        .agg(sum("n").as("n_members"), count(lit(1)).as("n_labels"),
-          max(struct(col("n"), (-col("label")).as("nl"))).as("m"))
-        .select(col("cluster_id"), col("n_members"), col("n_labels"),
-          (-col("m.nl")).as("majority_label"),
-          expr("(CAST(m.n AS DECIMAL(38,0)) * 1000000) div n_members")
-            .as("purity_ppm"))
-        .orderBy("cluster_id")
-    }),
-
-    // Cluster-balanced resampling: cap each semantic cluster's
-    // contribution at ceil(√n) members (DataComp-style head-flattening —
-    // a mega-cluster of near-identical pages contributes √n docs, the
-    // tail keeps everything), members chosen by the reservoir family's
-    // deterministic hash rank. Rank rides GlobalRank.withGroupedRowNumber
-    // so a pathological giant cluster never becomes one sort task; √ is
-    // IEEE-correctly-rounded in both engines (the mix_temperature
-    // argument), so target and keep replay bit-for-bit.
-    "sample_cluster_balanced" -> ((s, d) => {
-      val edges = Similarity.nearDupPairs(emb(s, d), 0.4,
-        bitsPerBand = lshBitsFor(s, d)).select("a", "b")
-      val clusters = Dedup.clusters(edges)
-        .select(col("doc_id").as("vec_id"), col("cluster_id"))
-      val m = emb(s, d).select(col("vec_id"))
-        .join(clusters, Seq("vec_id"), "left")
-        .withColumn("cluster_id", coalesce(col("cluster_id"), col("vec_id")))
-        .withColumn("hv", graft.expr.PortableHash.phash(
-          concat(lit("cbal-v1:"), col("vec_id").cast("string"))))
-      graft.ops.GlobalRank
-        .withGroupedRowNumber(m, "cluster_id", "hv", Seq("vec_id"),
-          buckets = graft.ops.GlobalRank.Auto, out = "rnk", outN = "n_members")
-        .withColumn("target", ceil(sqrt(col("n_members").cast("double"))).cast("long"))
-        .select(col("vec_id"), col("cluster_id"), col("n_members"), col("rnk"),
-          col("target"), (col("rnk") <= col("target")).as("keep"))
-        .orderBy("vec_id")
-    }),
-
-    // Greedy k-center coreset selection (Gonzalez farthest-point — the
-    // diversity-coverage objective of the data-selection literature, the
-    // complement of SemDeDup's near-dup REMOVAL): k rounds, each one
-    // narrow KMeansAssign codegen pass + one 1-row struct-max aggregate;
-    // driver holds k quantized centers (the codebook-collect precedent).
-    // Output is the coverage curve (round, center, max-min-d2) a pipeline
-    // reads to size k. Exact integer squared-L2 → replayed round-for-round
-    // by the oracle's unrolled CTEs.
-    "coreset_kcenter" -> ((s, d) =>
-      graft.llm.Coreset.kcenter(s, emb(s, d))),
-
-    // Full-corpus assignment to the k selected centers — the partition
-    // into diversity cells that per-cell sampling consumes downstream.
-    // One codegen pass (KMeansAssign + centroid-LUT distance), ties to
-    // the earlier-selected center; selection replayed as in
-    // coreset_kcenter.
-    "coreset_assign" -> ((s, d) =>
-      graft.llm.Coreset.kcenterAssign(emb(s, d)).orderBy("vec_id")),
-
-    // Token-length distribution in power-of-2 buckets — the profile a
-    // packing stage consults to pick seqLen and outlier cutoffs. Bucket
-    // edges are literal comparisons (a CASE chain, identical text in the
-    // oracle), NOT floor(log2(n)): FP log at exact powers of two rounds
-    // differently across engines. One map-side-partial hash agg over ≤18
-    // groups — nothing about this shape changes at 100 TB.
-    "length_histogram" -> ((s, d) => {
-      val t = docs(s, d).select(size(TA.tokens(col("text"))).cast("long").as("n_tok"))
-      val bucketLo = (0 to 16).map(1L << _).reverse
-        .foldRight(lit(0L)) { (p, acc) => when(col("n_tok") >= p, lit(p)).otherwise(acc) }
-      t.groupBy(bucketLo.as("bucket_lo"))
-        .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("n_tokens"))
-        .orderBy("bucket_lo")
-    }),
-
-    // Data-mixing report: doc and token share of every (lang, source) slice
-    // — the weights table a mixture-sampling stage consumes. The corpus
-    // total rides a 1-row broadcast (scalar agg cross join), never a global
-    // window. The slice aggregate is localCheckpoint'd: referencing it twice
-    // (slices + the scalar total) would otherwise duplicate the whole
-    // tokenize+scan subtree into both plan branches — two full corpus scans
-    // at 100 TB for a frame of |lang x source| rows.
-    "mix_report" -> ((s, d) => {
-      val t = docs(s, d).select(col("lang"), col("source"),
-        size(TA.tokens(col("text"))).cast("long").as("n_tok"))
-      val agg = t.groupBy("lang", "source")
-        .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("n_tokens"))
-        .localCheckpoint()
-      val tot = agg.agg(sum("n_tokens").as("tot"))
-      agg.crossJoin(tot)
-        .select(col("lang"), col("source"), col("n_docs"), col("n_tokens"),
-          round(col("n_tokens").cast("double") / col("tot"), 6).as("token_share_r"))
-        .orderBy("lang", "source")
-    }),
-
-    // Mixing-rate planner: the step between mix_report (what the corpus IS)
-    // and sample_stratified (how to sample it) — per language, the exact
-    // integer-ppm keep rate that downsamples every over-represented
-    // language to the uniform token target (tot/n_langs); under-target
-    // languages keep everything (rate 10⁶ — upsampling is a training-loop
-    // choice, not a filter). Same decimal-safe threshold arithmetic as
-    // heavy_hitters; the ppm rates feed sample_stratified directly.
-    "mix_rates" -> ((s, d) => {
-      val t = docs(s, d).select(col("lang"),
-        size(TA.tokens(col("text"))).cast("long").as("n_tok"))
-      val agg = t.groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("n_tokens"))
-        .localCheckpoint()
-      val tot = agg.agg(sum("n_tokens").as("tot"), count(lit(1)).as("n_langs"))
-      agg.crossJoin(tot)
-        .select(col("lang"), col("n_docs"), col("n_tokens"),
-          expr("tot div n_langs").as("target_tokens"),
-          least(lit(1000000L),
-            expr("(CAST(tot div n_langs AS DECIMAL(38,0)) * 1000000) div n_tokens"))
-            .as("rate_ppm"))
-        .orderBy("lang")
-    }),
-
-    // The mixing EXECUTOR, closing the loop report → plan → apply: every
-    // document passes the same deterministic hash gate sample_stratified
-    // uses (phash("mix:"+doc_id) mod 10⁶ < rate), but against the COMPUTED
-    // per-language rates of mix_rates instead of static knobs. Rates ride a
-    // broadcast (|langs| rows); the gate is a codegen'd narrow filter — no
-    // shuffle beyond the tiny rate aggregation. Output: per-language kept
-    // doc/token mass, i.e. the post-mix corpus profile.
-    "mix_apply" -> ((s, d) => {
-      val t = docs(s, d).select(col("doc_id"), col("lang"),
-        size(TA.tokens(col("text"))).cast("long").as("n_tok"))
-      val agg = t.groupBy("lang").agg(sum("n_tok").as("n_tokens")).localCheckpoint()
-      val tot = agg.agg(sum("n_tokens").as("tot"), count(lit(1)).as("n_langs"))
-      val rates = agg.crossJoin(tot).select(col("lang"),
-        least(lit(1000000L),
-          expr("(CAST(tot div n_langs AS DECIMAL(38,0)) * 1000000) div n_tokens"))
-          .as("rate_ppm"))
-      val gate = pmod(graft.expr.PortableHash.phash(
-        concat(lit("mix:"), col("doc_id").cast("string"))), lit(1000000L))
-      t.join(broadcast(rates), Seq("lang"))
-        .withColumn("keep", gate < col("rate_ppm"))
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("keep"), 1L).otherwise(0L)).as("n_kept"),
-          sum(when(col("keep"), col("n_tok")).otherwise(0L)).as("kept_tokens"))
-        .orderBy("lang")
-    }),
-
-    // Levenshtein verification of minhash-LSH candidates — the character-
-    // level sibling of dedup_verified, for near-dup families token jaccard
-    // is blind to (in-token edits, OCR noise). DP bounded to the first 256
-    // normalized chars per doc; candidates still come from the banded
-    // signatures, never a cross product.
-    "dedup_editdistance" -> ((s, d) =>
-      Dedup.editVerified(docs(s, d), shingleSize = 3, numPerms = 16, numBands = 4,
-          prefixChars = 256)
-        .select(col("a"), col("b"), col("n_bands"), col("edit_dist"),
-          col("edit_sim_r"), (col("edit_sim_r") >= 0.8).as("is_dup"))
-        .orderBy("a", "b")),
-
-    // Exactly-k-per-language uniform sample (distributed reservoir): the
-    // k smallest portable-hash values per group — count pass broadcast back
-    // as a per-group hash threshold, so the rank window runs over ~8k rows
-    // per group, never the group itself.
-    "sample_reservoir" -> ((s, d) =>
-      graft.llm.Sample.reservoirByGroup(docs(s, d), "lang", "doc_id",
-          k = 10, seed = "res-v1")
-        .orderBy("lang", "rnk")),
-
-    // Incremental semantic dedup: the NEW vector batch (vec_id % 10 == 9)
-    // probes the EXISTING index through the shared (band, cell) LSH — the
-    // embedding analog of dedup_incremental, linear in the batch.
-    "semantic_incremental" -> ((s, d) =>
-      Similarity.incremental(emb(s, d), pmod(col("vec_id"), lit(10)) === 9,
-          threshold = 0.4, bitsPerBand = lshBitsFor(s, d))
-        .orderBy("vec_id")),
-
-    // Unicode NFC canonicalization (custom codegen'd Catalyst expression —
-    // Spark has no NFC built-in). A deterministic decomposed suffix is
-    // planted (combining acute/diaeresis, mirrored via chr() in the oracle)
-    // so the normalization provably runs: every row composes and changes.
-    "text_normalize" -> ((s, d) => {
-      val planted = concat(col("text"), lit(" cafe\u0301 nai\u0308ve"))
-      val raw = TA.normText(planted)
-      val nfc = graft.expr.NfcNormalize.nfc(raw)
-      docs(s, d).select(col("doc_id"),
-          length(raw).as("raw_len"), length(nfc).as("nfc_len"),
-          (raw =!= nfc).as("changed"),
-          md5(nfc.cast("binary")).as("nfc_md5"))
-        .orderBy("doc_id")
-    }),
-
-    // Boilerplate shingle exposure (CCNet frequent-paragraph removal,
-    // shingle-grained): corpus-wide doc-frequency over 5-gram shingles,
-    // docs flagged by the ppm of their shingles that are boilerplate.
-    "boilerplate_flag" -> ((s, d) =>
-      graft.llm.NgramModel
-        .boilerplateFlag(docs(s, d), n = BoilerN, minDf = BoilerMinDf, maxPpm = BoilerMaxPpm)
-        .orderBy("doc_id")),
-
-    // Add-one bigram LM score per doc (exact-integer ppm of probability
-    // mass — the KenLM-perplexity stand-in for corpus-typicality ranking).
-    "lm_score" -> ((s, d) =>
-      graft.llm.NgramModel.lmScore(docs(s, d)).orderBy("doc_id")),
-
-    // RHO-LOSS-style selection (Mindermann et al. 2022, "Prioritized
-    // training on points that are learnable, worth learning, and not yet
-    // learnt"): rank
-    // train-pool docs by REDUCIBLE loss = pool-model loss − holdout-model
-    // irreducible loss. With the integer LM score (higher = likelier),
-    // loss_ppm = 10⁶ − lm_ppm, so rho_ppm = lm_holdout − lm_pool: docs the
-    // holdout model explains well but the pool model does not are the
-    // learnable ones worth training on. Two bigram-Laplace models
-    // (`NgramModel.lmScoreAgainst` — the holdout model genuinely hits the
-    // unseen-bigram/unseen-prefix Laplace floors when scoring the pool);
-    // both model tables are Zipf-bounded, the scoring joins bg-keyed
-    // shuffles — lm_score economics ×2 at any corpus size.
-    "rholoss_select" -> ((s, d) => {
-      import graft.llm.NgramModel
-      val all = docs(s, d)
-      val hold = all.filter(pmod(col("doc_id"), lit(RholossHoldoutMod)) === 0)
-      val pool = all.filter(pmod(col("doc_id"), lit(RholossHoldoutMod)) =!= 0)
-      // The pool bigram stream is BOTH the pool model's training input and
-      // the score side of BOTH passes (pm scores pool-under-pool-model, hm
-      // scores pool-under-holdout-model): one checkpointed instance frame
-      // feeds all three (opt guide §2.4 — the composed lmScoreAgainst
-      // calls rebuilt it 3× from raw text, 12 parquet scans / 44
-      // Exchanges). pm additionally takes the fused all-seen scoring
-      // shape (every pool bigram is in the pool model — one instance
-      // join, not two); hm keeps the general left-join shape (the
-      // holdout model's Laplace floors are genuine there).
-      val instPool = NgramModel.bigramInstances(pool).localCheckpoint()
-      val poolIds = pool.select(col("doc_id"))
-      val c2p = instPool.groupBy("bg").agg(count(lit(1)).as("c2"))
-        .localCheckpoint() // feeds c1 AND the pm scoring join
-      val c2h = NgramModel.bigramInstances(hold)
-        .groupBy("bg").agg(count(lit(1)).as("c2"))
-        .localCheckpoint()
-      val pm = NgramModel.lmScoreInstSeen(instPool, c2p,
-          NgramModel.prefixCounts(c2p), NgramModel.vocabCount(pool), poolIds)
-        .withColumnRenamed("lm_ppm", "lm_pool_ppm")
-      val hm = NgramModel.lmScoreInstAgainst(instPool, c2h,
-          NgramModel.prefixCounts(c2h), NgramModel.vocabCount(hold), poolIds)
-        .select(col("doc_id"), col("lm_ppm").as("lm_holdout_ppm"))
-      pm.join(hm, Seq("doc_id"))
-        .withColumn("rho_ppm", expr("lm_holdout_ppm - lm_pool_ppm"))
-        .withColumn("keep", col("rho_ppm") > 0)
-        .orderBy("doc_id")
-    }),
-
-    // First BPE merge level: corpus-wide adjacent-character-pair counts
-    // inside tokens, top-20 — the seed statistic a byte-pair tokenizer
-    // trainer ranks merges by. Same distributed top-k contract as
-    // vocab_topk: explode + map-side-partial hash agg +
-    // TakeOrderedAndProject (never a global window).
-    "bpe_pairs" -> ((s, d) =>
-      docs(s, d)
-        .select(explode(TA.tokens(col("text"))).as("tok"))
-        // single-char tokens have no pairs; Spark's sequence(1, 0) would
-        // count DOWN and fabricate one, so gate before exploding
-        .filter(length(col("tok")) >= 2)
-        .select(explode(expr(
-          "transform(sequence(1, length(tok) - 1), i -> substring(tok, i, 2))"))
-          .as("pair"))
-        .groupBy("pair").agg(count(lit(1)).as("freq"))
-        .orderBy(col("freq").desc, col("pair"))
-        .limit(20)),
-
-    // BPE tokenizer TRAINING: the first k greedy merge rounds over the
-    // Zipf-small vocabulary — one corpus-wide word count, then k rounds
-    // of weighted pair-argmax + merge on the vocab frame, every round
-    // replayed CTE-for-CTE by the oracle. The merge table IS the
-    // tokenizer artifact a production BPE trainer ships.
-    "bpe_merges" -> ((s, d) =>
-      graft.llm.Bpe.merges(docs(s, d), k = BpeMergeRounds)),
-
-    // Apply the trained tokenizer: the segmentation lives in a vocab-sized
-    // lookup table (word -> symbol count under k merges), so tokenizing
-    // the corpus is ONE equi-join on word — no merge replay per document,
-    // no driver-side merge list. The train->apply pair completes the
-    // tokenizer loop the way mix_rates -> mix_apply completes mixing.
-    "bpe_apply" -> ((s, d) =>
-      graft.llm.Bpe.applyTokenizer(docs(s, d), k = BpeMergeRounds)
-        .orderBy("doc_id")),
-
-    // Tokenizer fertility (BPE pieces per word, integer ppm): the standard
-    // tokenizer-quality dashboard metric — rising fertility on a slice
-    // means the vocabulary under-serves it. Same cost shape as bpe_apply.
-    "bpe_fertility" -> ((s, d) =>
-      graft.llm.Bpe.fertility(docs(s, d), k = BpeMergeRounds)
-        .orderBy("doc_id")),
-
-    // Vocab-size elbow: corpus-level fertility at merge-count PREFIXES of
-    // one training run. Totals come from Σ freq·n_sym over the Zipf-small
-    // vocab frame, so no per-k corpus join — the whole sweep pays the
-    // word count once (graft.llm.Bpe.fertilitySweep).
-    "bpe_sweep" -> ((s, d) =>
-      graft.llm.Bpe.fertilitySweep(docs(s, d), BpeSweepKs)),
-
-    // Deterministic seeded corpus shuffle: every doc gets a global shuffle
-    // position 1..N by (phash(seed:doc_id), doc_id) — what a training job
-    // runs before sharding so epoch order is reproducible on any cluster.
-    // The rank is ops.GlobalRank's range-bucketed three-pass shape: never
-    // a single-partition window, phash values are uniform so the
-    // approx_percentile buckets are balanced by construction.
-    "corpus_shuffle" -> ((s, d) => {
-      val seeded = docs(s, d).select(col("doc_id"),
-        graft.expr.PortableHash.phash(
-          concat(lit(s"$ShuffleSeed:"), col("doc_id").cast("string"))).as("shuffle_key"))
-      graft.ops.GlobalRank
-        .withGlobalRowNumberAndCount(seeded, "shuffle_key", Seq("doc_id"),
-          buckets = graft.ops.GlobalRank.Auto, out = "pos")._1
-        .select(col("doc_id"), col("pos"))
-        .orderBy("doc_id")
-    }),
-
-    // RANGE-frame window (the value-based frame family every prior window
-    // key leaves untouched: window_running is ROWS, events_window_* are
-    // tumbling/sliding buckets): per user, the trailing-hour sum/count at
-    // every event — frame bounds are VALUE offsets on the ordering key, so
-    // peers with equal timestamps share one frame in both engines. Sum in
-    // exact DECIMAL (range frames make float accumulation order
-    // engine-specific), cast to double only at the edge.
-    "window_range_frame" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val e = events(s, d).select(col("event_id"), col("user_id"),
-        graft.expr.IntMath.floorDiv(col("ts"), 1000000000L).as("ts_sec"),
-        col("value").cast("decimal(18,6)").as("v"))
-      val w = Window.partitionBy("user_id").orderBy("ts_sec")
-        .rangeBetween(-3600, 0)
-      e.select(col("event_id"), col("user_id"), col("ts_sec"),
-          sum(col("v")).over(w).cast("double").as("hour_sum"),
-          count(lit(1)).over(w).as("hour_n"))
-        .orderBy("event_id")
-    }),
-
-    // First-order Markov transition matrix over per-user event streams:
-    // the aggregate sibling of events_top_paths (which keeps whole
-    // prefixes, this keeps the memoryless model). One lag window per user
-    // (ts tie-broken by event_id so the predecessor is deterministic),
-    // then a |types|² count frame with integer-ppm row-normalized
-    // probabilities. The per-source totals ride the checkpointed count
-    // frame, not a second corpus scan.
-    "events_transitions" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("user_id")
-        .orderBy(col("ts_sec"), col("event_id"))
-      val tr = events(s, d)
-        .select(col("user_id"), col("event_id"), col("event_type").as("to_type"),
-          graft.expr.IntMath.floorDiv(col("ts"), 1000000000L).as("ts_sec"))
-        .select(col("to_type"), lag(col("to_type"), 1).over(w).as("from_type"))
-        .filter(col("from_type").isNotNull)
-      val agg = tr.groupBy("from_type", "to_type").agg(count(lit(1)).as("n"))
-        .localCheckpoint() // |types|² rows; consumed by both the total and the join
-      val tot = agg.groupBy("from_type").agg(sum("n").as("tot_from"))
-      agg.join(tot, "from_type")
-        .withColumn("p_ppm", expr("(n * 1000000) div tot_from"))
-        .orderBy("from_type", "to_type")
-    }),
-
-    // Whole-bit entropy rate of the Markov transition rows — the
-    // predictability gauge over events_transitions' matrix (uniform
-    // next-step mix → high bits; deterministic funnels → 0). Same
-    // bin-width exactness contract as the surprisal family: per-target
-    // bits = width(tot_from DIV n) − 1, row entropy ships as the exact
-    // integer micro-mean. The corpus pays the one lag window + |types|²
-    // aggregate it already pays for transitions.
-    "events_transition_entropy" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("user_id").orderBy(col("ts_sec"), col("event_id"))
-      val tr = events(s, d)
-        .select(col("user_id"), col("event_id"), col("event_type").as("to_type"),
-          graft.expr.IntMath.floorDiv(col("ts"), 1000000000L).as("ts_sec"))
-        .select(col("to_type"), lag(col("to_type"), 1).over(w).as("from_type"))
-        .filter(col("from_type").isNotNull)
-      val agg = tr.groupBy("from_type", "to_type").agg(count(lit(1)).as("n"))
-        .localCheckpoint() // |types|² rows feed the total AND the bits rows
-      val tot = agg.groupBy("from_type").agg(sum("n").as("tot_from"))
-      agg.join(tot, "from_type")
-        .select(col("from_type"), col("tot_from"),
-          (col("n") *
-            (length(bin(call_function("div", col("tot_from"), col("n")))) - 1)
-              .cast("long")).as("bits"))
-        .groupBy("from_type")
-        .agg(max(col("tot_from")).as("n_from"),
-          count(lit(1)).as("n_targets"), sum(col("bits")).as("bits"))
-        .select(col("from_type"), col("n_from"), col("n_targets"),
-          expr("(bits * 1000000) div n_from").as("mean_bits_micro"))
-        .orderBy("from_type")
-    }),
-
-    // Benford leading-digit screen over positive event values — the
-    // fabricated-data tripwire (graft.ops.Stats.benford; expected shares
-    // are public precomputed literals, log-free per the oracle contract).
-    "stats_benford" -> ((s, d) => graft.ops.Stats.benford(events(s, d))),
-
-    // Robust doc-length outliers via median/MAD (the 3·1.4826·MAD rule in
-    // exact cross-multiplied integers): the DQ screen that survives the
-    // heavy tails that drag mean/stddev z-scores. Both medians ride the
-    // lo+hi doubled-units order-statistic device (stats_median_exact) on
-    // DISTINCT-VALUE frames — the windows are length-cardinality-bounded,
-    // never corpus-sized; docs join flags back by value.
-    "quality_length_outliers" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      def median2(df: org.apache.spark.sql.DataFrame, vc: String): Long = {
-        val tc = df.groupBy(vc).agg(count(lit(1)).as("n_v"))
-        val w = Window.orderBy(vc)
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val cum = tc.withColumn("cum", sum(col("n_v")).over(w))
-          .withColumn("nn", sum(col("n_v")).over(
-            Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-        val kLo = call_function("div", col("nn") + 1, lit(2L))
-        val kHi = call_function("div", col("nn"), lit(2L)) + 1
-        val r = cum.agg(
-          min(when(col("cum") >= kLo, col(vc))).as("lo"),
-          min(when(col("cum") >= kHi, col(vc))).as("hi")).head()
-        r.getLong(0) + r.getLong(1)
-      }
-      val lens = docs(s, d).select(col("doc_id"),
-        size(TA.tokens(col("text"))).cast("long").as("n_tok"))
-        .localCheckpoint() // one tokenize pass feeds both medians + the flags
-      val med2 = median2(lens, "n_tok")
-      val dev = lens.select(col("doc_id"), col("n_tok"),
-        abs(col("n_tok") * 2 - med2).as("dev2"))
-      val mad4 = median2(dev.select(col("dev2")), "dev2")
-      // outlier ⇔ dev > 3·1.4826·MAD ⇔ dev2·20000 > 44478·mad4 (exact)
-      dev.select(col("doc_id"), col("n_tok"),
-          lit(med2).as("median_x2"), lit(mad4).as("mad_x4"),
-          (col("dev2") * 20000L > lit(44478L) * mad4).as("outlier"))
-        .orderBy("doc_id")
-    }),
-
-    // Zipf rank-frequency profile of the vocabulary in whole-bit buckets:
-    // terms ranked by (frequency desc, term) via the distributed GlobalRank
-    // (never a single-partition window), bucketed by rank bit width, each
-    // bucket reporting its term count and exact micro-mean frequency bits —
-    // the log-log slope a corpus owner reads for Zipf conformance (natural
-    // text ≈ −1 bit of frequency per bit of rank; templated/synthetic
-    // corpora flatten). bin-width exactness contract throughout.
-    "vocab_zipf_profile" -> ((s, d) => {
-      val vc = docs(s, d)
-        .select(explode(TA.tokens(col("text"))).as("tok"))
-        .groupBy("tok").agg(count(lit(1)).as("f"))
-      val ranked = graft.ops.GlobalRank.withGlobalRowNumber(
-        vc.select(col("tok"), col("f"), (-col("f")).as("negf")),
-        "negf", Seq("tok"), buckets = graft.ops.GlobalRank.Auto, out = "rnk")
-      ranked
-        .select((length(bin(col("rnk"))) - 1).cast("long").as("rank_bucket"),
-          (length(bin(col("f"))) - 1).cast("long").as("fbits"),
-          col("f"))
-        .groupBy("rank_bucket")
-        .agg(count(lit(1)).as("n_terms"), sum(col("f")).as("mass"),
-          expr("(sum(fbits) * 1000000) div count(1)").as("mean_fbits_micro"),
-          min(col("f")).as("min_f"), max(col("f")).as("max_f"))
-        .orderBy("rank_bucket")
-    }),
-
-    // Distributed triangle counting over the co-purchase graph (parts
-    // sharing an order). Degree-oriented wedge join — O(m^1.5) total work
-    // on ANY degree distribution, no hub blow-up; see graft.ops.Triangles
-    // for the orientation argument. Edge derivation is per-order pairing,
-    // bounded by order width (~4 items), not corpus size.
-    "graph_triangles" -> ((s, d) => {
-      // per-order pairing via the codegen self-join: an A/B against the
-      // collect_set + nested-transform pair expansion (same session, same
-      // host) measured the HOF form 14-19 s vs 8-12 s for this one — the
-      // array expansion runs interpreted struct allocation per pair,
-      // while the equi-self-join stays inside whole-stage codegen. Order
-      // width ~4 bounds the pairing either way. (Round 12: the self-join
-      // now rides the shared one-exchange build — see coPurchaseCanon.)
-      val canon = coPurchaseCanon(s, d)
-        .localCheckpoint() // consumed by degrees, orientation, and the closing probe
-      graft.ops.Triangles.perNode(canon).orderBy("node")
-    }),
-
-    // Asymmetric containment on the minhash-LSH candidate set: detects
-    // INCLUSION (doc quoted wholesale inside a larger one) that symmetric
-    // Jaccard under-scores — the dedup family exact/minhash/simhash/
-    // editdistance all miss. Integer-ppm ratios; same banded candidate
-    // generation as dedup_verified, so no new quadratic surface.
-    "dedup_containment" -> ((s, d) =>
-      Dedup.containmentFrom(
-          Dedup.signatureIndex(docs(s, d), shingleSize = 3, numPerms = 16,
-            numBands = 4))
-        .orderBy("a", "b")),
-
-    // Corpus novelty: per doc, the fraction of its distinct shingles whose
-    // FIRST owner (min doc_id over the corpus) is the doc itself — the
-    // order-based complement of boilerplate_flag's frequency exposure
-    // (novelty says "who said it first", boilerplate says "how often it is
-    // said"). One shingle explode + a shingle-keyed min-agg + one join
-    // back; ppm in integer arithmetic.
-    "corpus_novelty" -> ((s, d) => {
-      val pairs = Dedup.shingleSets(docs(s, d), shingleSize = 3)
-        .select(col("doc_id"), explode(col("sh")).as("g"))
-        .localCheckpoint() // owner table + per-doc join read one tokenize pass
-      val owner = pairs.groupBy("g").agg(min("doc_id").as("owner"))
-      pairs.join(owner, "g")
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_shingles"),
-          sum(when(col("owner") === col("doc_id"), 1L).otherwise(0L)).as("n_novel"))
-        .withColumn("novel_ppm", expr("(n_novel * 1000000) div n_shingles"))
-        .orderBy("doc_id")
-    }),
-
-    // Winnowing fingerprint budget (Schleimer et al. 2003, the MOSS
-    // selection): per doc, how many window-min fingerprints the winnow
-    // index keeps and at what density — expected 2/(w+1) of the k-gram
-    // count, the sizing diagnostic for the guaranteed-span-detection
-    // index the minhash family cannot provide (llm.Winnow for the
-    // guarantee and the one-shuffle window-min plan shape).
-    "winnow_fingerprint" -> ((s, d) =>
-      graft.llm.Winnow.docStats(docs(s, d)).orderBy("doc_id")),
-
-    // Winnowed-fingerprint overlap pairs: docs sharing ≥ MinShared
-    // selected fingerprints after the boilerplate df cap, with
-    // containment ppm against the smaller doc — the provenance/plagiarism
-    // detector with the MOSS guarantee (any shared run of ≥ w+k−1 tokens
-    // is caught). The df cap bounds pair fan-out at ≤ maxDf² per
-    // fingerprint — no quadratic cell at any corpus size.
-    "winnow_overlap" -> ((s, d) =>
-      graft.llm.Winnow.overlap(docs(s, d)).orderBy("a", "b")),
-
-    // Incremental winnow admission: new-batch docs (doc_id % 10 = 9)
-    // probe the frozen index side's df-capped winnow fingerprints — the
-    // guaranteed-span member of the incremental family (dedup_incremental
-    // catches near-whole-doc dups, substring_incremental exact spans at
-    // fixed w, this catches ≥ w+k−1-token overlaps with provenance).
-    // Containment is over the BATCH doc (the admission direction); the
-    // df cap is index-side only so verdicts are batch-composition-free.
-    "winnow_incremental" -> ((s, d) =>
-      graft.llm.Winnow.incremental(docs(s, d), col("doc_id") % 10 === 9)
-        .orderBy("doc_id", "near_id")),
-
-    // Temperature-weighted mixing rates (α = 0.5): the multilingual-LM
-    // sampling scheme (sample language l ∝ mass_l^α) as exact integer
-    // arithmetic — weight = floor(1000·√tokens) is deterministic across
-    // engines because IEEE sqrt is correctly rounded, unlike pow/ln. The
-    // uniform-target planner (mix_rates) is α = 0; this key is the tunable
-    // middle that up-weights tail languages without flattening the head.
-    "mix_temperature" -> ((s, d) => {
-      val t = docs(s, d).select(col("lang"),
-        size(TA.tokens(col("text"))).cast("long").as("n_tok"))
-      val agg = t.groupBy("lang").agg(sum("n_tok").as("n_tokens"))
-        .withColumn("w",
-          floor(sqrt(col("n_tokens").cast("double") * 1e6)).cast("long"))
-        // double-first multiply: the long product n_tokens*1e6 wraps past
-        // ~9.2e12 tokens (real at 100 TB); double*1e6 is IEEE-exact to 2^53
-        // and both engines round sqrt identically beyond it
-        .localCheckpoint() // |langs| rows; total + join both read it
-      val tot = agg.agg(sum("w").as("sum_w"), sum("n_tokens").as("tot"))
-      agg.crossJoin(tot)
-        .select(col("lang"), col("n_tokens"), col("w"),
-          expr("(w * 1000000) div sum_w").as("share_ppm"),
-          expr("(w * tot) div sum_w").as("target_tokens"),
-          // zero-token language: no rate to compute — pin 0 (Spark div
-          // NULLs on 0 where DuckDB // errors; review finding, round 8)
-          when(col("n_tokens") === 0L, 0L)
-            .otherwise(least(lit(1000000L),
-              expr("(((w * tot) div sum_w) * 1000000) div n_tokens")))
-            .as("rate_ppm"))
-        .orderBy("lang")
-    }),
-
-    // Per-domain document caps — the web-corpus over-representation guard
-    // (FineWeb-style: a single hot domain must not dominate the mixture):
-    // rank each doc within its canonical host by doc_id and keep the first
-    // DomainCap. Hosts are Zipf at web scale — a head domain holding 1% of
-    // 10^10 docs would funnel 10^8 rows through ONE window task — so the
-    // rank rides GlobalRank.withGroupedRowNumber's skew-gated grouped rank
-    // (round-10 verdict task #1): balanced host sets keep the one-pass
-    // grouped window; a mega-host flips the max-group probe and splits
-    // across the global doc_id bucket grid (doc_ids interleave uniformly
-    // across hosts, the caveat documented on the operator). n_domain_docs
-    // rides the rank's outN — the old separate counts agg + broadcast join
-    // is gone. Verdict joins dedup_url/corpus_clean on doc_id.
-    "domain_caps" -> ((s, d) => {
-      val host = graft.llm.Url.canonicalHost(
-        graft.llm.Url.syntheticUrl(col("doc_id"), col("source")))
-      val u = docs(s, d).select(col("doc_id"), host.as("host"))
-        .localCheckpoint() // one scan + one regex pass feeds probe AND rank
-      graft.ops.GlobalRank
-        .withGroupedRowNumber(u, "host", "doc_id", Seq.empty,
-          buckets = graft.ops.GlobalRank.Auto,
-          out = "rank_in_domain", outN = "n_domain_docs")
-        .select(col("doc_id"), col("host"), col("n_domain_docs"),
-          col("rank_in_domain"),
-          (col("rank_in_domain") <= DomainCap).as("keep"))
-        .orderBy("doc_id")
-    }),
-
-    // Domain-level quality profile — the FineWeb-style review-list builder:
-    // roll per-doc quality up to the canonical host and flag hosts whose
-    // MEAN quality sits ≥ DomainQualityMarginPpm below the CORPUS mean
-    // with enough support to trust the host mean (a host-level action is a
-    // much bigger hammer than a doc-level drop, so it demands evidence).
-    // Quality is quantized to ppm BIGINT before aggregation
-    // (quality_report's trade: integer sums are shuffle-order-exact; float
-    // means are not); both means are integer floor division, and the
-    // corpus mean rides the 1-row scalar-agg broadcast (derived from the
-    // checkpointed host frame — no second corpus scan). One scan → one
-    // regex pass → one host-keyed hash agg; host cardinality is millions
-    // at web scale — comfortably partitioned, never collected.
-    "quality_by_domain" -> ((s, d) => {
-      val host = graft.llm.Url.canonicalHost(
-        graft.llm.Url.syntheticUrl(col("doc_id"), col("source")))
-      val hostAgg = docs(s, d)
-        .select(host.as("host"),
-          size(TA.tokens(col("text"))).cast("long").as("n_tok"),
-          round(TA.qualityScore(col("text")) * SamplePpmScale, 0)
-            .cast("long").as("q_ppm"))
-        .groupBy("host")
-        .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("n_tokens"),
-          sum("q_ppm").as("sum_q"))
-        .localCheckpoint() // feeds the host rows AND the corpus-mean scalar
-      val tot = hostAgg.agg(sum("sum_q").as("gq"), sum("n_docs").as("gn"))
-      hostAgg.crossJoin(tot)
-        .select(col("host"), col("n_docs"), col("n_tokens"),
-          expr("sum_q div n_docs").as("mean_q_ppm"),
-          (expr("sum_q div n_docs") <
-            expr("gq div gn") - DomainQualityMarginPpm &&
-            col("n_docs") >= DomainBlockMinDocs).as("flagged"))
-        .orderBy("host")
-    }),
-
-    // Temperature sweep: mix_temperature's whole α grid from ONE token
-    // aggregate — the knob-choosing report (α = 0 is the uniform planner,
-    // 1 is proportional, 1/4 and 1/2 the standard multilingual middles).
-    // Every weight is exact cross-engine: α ∈ {0, 1} are identities, 1/2
-    // is one IEEE sqrt, 1/4 is sqrt∘sqrt (correctly-rounded composition).
-    // |langs|×4 rows after the one corpus pass — nothing corpus-sized
-    // downstream.
-    "mix_temperature_sweep" -> ((s, d) => {
-      val t = docs(s, d).select(col("lang"),
-        size(TA.tokens(col("text"))).cast("long").as("n_tok"))
-      val agg = t.groupBy("lang").agg(sum("n_tok").as("n_tokens"))
-        .localCheckpoint() // |langs| rows; the α explode + totals read it
-      val e = agg.select(col("lang"), col("n_tokens"),
-          explode(typedlit(MixAlphaPpms)).as("alpha_ppm"))
-        .withColumn("w",
-          when(col("alpha_ppm") === 0L, lit(1L))
-            .when(col("alpha_ppm") === 250000L,
-              floor(sqrt(sqrt(col("n_tokens").cast("double") * 1e12))).cast("long"))
-            .when(col("alpha_ppm") === 500000L,
-              floor(sqrt(col("n_tokens").cast("double") * 1e6)).cast("long"))
-            .otherwise(col("n_tokens")))
-      val tot = e.groupBy("alpha_ppm")
-        .agg(sum("w").as("sum_w"), sum("n_tokens").as("tot"))
-      e.join(broadcast(tot), Seq("alpha_ppm")) // 4-row totals
-        .select(col("alpha_ppm"), col("lang"), col("n_tokens"), col("w"),
-          expr("(w * 1000000) div sum_w").as("share_ppm"),
-          // zero-token language guard: Spark div NULLs where DuckDB //
-          // errors (the engine-divergence registry); an empty language
-          // needs no sampling rate -> pin 0
-          when(col("n_tokens") === 0L, 0L)
-            .otherwise(least(lit(1000000L),
-              expr("(((w * tot) div sum_w) * 1000000) div n_tokens")))
-            .as("rate_ppm"))
-        .orderBy("alpha_ppm", "lang")
-    }),
-
-    // Data-constrained epoch planning (the "how many epochs is each
-    // source worth" step after mix_temperature): a token budget of
-    // EpochBudgetX × corpus allocates per-language targets by the same
-    // √-temperature weights; epochs_ppm = target/available capped at
-    // MaxEpochs (the ~4-epoch usefulness limit for repeated data), with
-    // the capped shortfall reported as deficit_tokens — the number the
-    // next acquisition round is sized by. All exact integer ppm math on
-    // the |langs|-row aggregate frame.
-    "mix_epochs" -> ((s, d) => {
-      val t = docs(s, d).select(col("lang"),
-        size(TA.tokens(col("text"))).cast("long").as("n_tok"))
-      val agg = t.groupBy("lang").agg(sum("n_tok").as("n_tokens"))
-        .withColumn("w",
-          floor(sqrt(col("n_tokens").cast("double") * 1e6)).cast("long"))
-        // double-first multiply: the long product n_tokens*1e6 wraps past
-        // ~9.2e12 tokens (real at 100 TB); double*1e6 is IEEE-exact to 2^53
-        // and both engines round sqrt identically beyond it
-        .localCheckpoint() // |langs| rows; totals + final frame both read it
-      val tot = agg.agg(sum("w").as("sum_w"), sum("n_tokens").as("tot"))
-      // products ride DECIMAL(38,0): at 100 TB n_tokens ~ 1e13, so
-      // w·tot (~3e22) and target·1e6 (~2e19) both overflow BIGINT
-      agg.crossJoin(tot)
-        .select(col("lang"), col("n_tokens"),
-          expr(s"CAST((CAST(w AS DECIMAL(38,0)) * tot * $EpochBudgetX)" +
-            " div sum_w AS BIGINT)").as("target_tokens"))
-        .withColumn("epochs_ppm",
-          least(lit(MaxEpochs * 1000000L),
-            expr("CAST((CAST(target_tokens AS DECIMAL(38,0)) * 1000000)" +
-              " div n_tokens AS BIGINT)")))
-        .withColumn("served_tokens",
-          expr("CAST((CAST(n_tokens AS DECIMAL(38,0)) * epochs_ppm)" +
-            " div 1000000 AS BIGINT)"))
-        .withColumn("deficit_tokens",
-          greatest(lit(0L), expr("target_tokens - served_tokens")))
-        .orderBy("lang")
-    }),
-
-    // DoReMi-style mixture reweighting (Xie et al. 2023 "Doremi",
-    // PAPERS.md): ONE multiplicative-weights step over per-language
-    // excess loss. The loss proxy is the corpus bigram LM's likelihood
-    // deficit (10⁶ − lm_ppm, the same integer Laplace score lm_score
-    // ships), bigram-mass-weighted; the reference model is the corpus-
-    // wide mean of the same score; the update is reported in log-space
-    // ppm (logw_delta = η·excess, η = DoremiEtaPpm/10⁶). exp() and
-    // renormalization are the training loop's float-side steps — the
-    // engine side stays integer-exact. Loss mass rides DECIMAL(38,0)
-    // (ppm × bigram counts wraps BIGINT near 10¹³ corpus bigrams); the
-    // per-doc scored frame is checkpointed because the per-lang frame
-    // and the 1-row reference both read it; the reference broadcast is
-    // the usual 1-row totals crossJoin.
-    "mix_doremi" -> ((s, d) => {
-      val j = docs(s, d).select(col("doc_id"), col("lang"))
-        .join(graft.llm.NgramModel.lmScore(docs(s, d)), Seq("doc_id"))
-        .filter(col("n_bigrams") > 0) // an empty doc has no defined loss
-        .select(col("lang"), col("n_bigrams"),
-          expr(s"CAST($SamplePpmScale - lm_ppm AS DECIMAL(38,0)) * n_bigrams")
-            .as("loss_mass"))
-        .localCheckpoint()
-      val perLang = j.groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"), sum("n_bigrams").as("n_bigrams"),
-          sum("loss_mass").as("loss_mass"))
-      val ref = j.agg( // empty-corpus guard: 0-bigram ref pins to 0 in
-        // both engines (Spark div NULLs, DuckDB // raises — divergence)
-        expr("CASE WHEN coalesce(sum(n_bigrams), 0L) = 0L THEN 0L ELSE " +
-          "CAST(sum(loss_mass) div sum(n_bigrams) AS BIGINT) END").as("ref_ppm"))
-      perLang.crossJoin(broadcast(ref))
-        .select(col("lang"), col("n_docs"), col("n_bigrams"),
-          expr("CAST(loss_mass div n_bigrams AS BIGINT)").as("loss_ppm"),
-          col("ref_ppm"))
-        .withColumn("excess_ppm", greatest(lit(0L), expr("loss_ppm - ref_ppm")))
-        .withColumn("logw_delta_ppm",
-          expr(s"($DoremiEtaPpm * excess_ppm) div 1000000"))
-        .orderBy("lang")
-    }),
-
-    // The dataset card: the release summary a corpus ships with (docs /
-    // tokens / chars, language and host diversity, exact-dup and PII
-    // prevalence, mean quality) as tall (metric, value) rows, every
-    // number integer-exact. Shape: ONE scan builds the narrow per-doc
-    // frame (checkpointed — four consumers); totals are one hash agg,
-    // and each count-distinct is its own two-stage agg over the cached
-    // frame instead of a single multi-distinct agg, which would Expand
-    // the scan ×4 (the stats_profile lesson). The three 1-row distinct
-    // frames ride broadcast crossJoins; stack() unpivots the single
-    // result row driver-free.
-    "dataset_card" -> ((s, d) => {
-      val q = TA.qualityScore(col("text"))
-      // one owner for the host definition: Url.canonicalHost (its DuckDB
-      // twin sqlCanonicalHost feeds the oracle below)
-      val host = graft.llm.Url.canonicalHost(
-        graft.llm.Url.syntheticUrl(col("doc_id"), col("source")))
-      val pd = docs(s, d).select(
-          size(TA.tokens(col("text"))).cast("long").as("n_tok"),
-          col("n_chars"), col("lang"), host.as("host"),
-          Dedup.fingerprint(col("text")).as("fp"),
-          when(Scrub.emailCount(col("text")) + Scrub.phoneCount(col("text")) > 0,
-            1L).otherwise(0L).as("has_pii"),
-          round(q * SamplePpmScale, 0).cast("long").as("q_ppm"))
-        .localCheckpoint()
-      val base = pd.agg(count(lit(1)).as("n_docs"), sum("n_tok").as("n_tokens"),
-        sum("n_chars").as("n_chars"), sum("has_pii").as("pii_docs"),
-        sum("q_ppm").as("q_sum"))
-      val langs = pd.agg(countDistinct("lang").as("n_langs"))
-      val hosts = pd.agg(countDistinct("host").as("n_hosts"))
-      val uniq = pd.agg(countDistinct("fp").as("n_unique"))
-      base.crossJoin(broadcast(langs)).crossJoin(broadcast(hosts))
-        .crossJoin(broadcast(uniq))
-        .select(expr(
-          // empty-corpus guard: Spark `div` NULLs on a 0 divisor where
-          // DuckDB `//` raises — an engine divergence, so both sides pin
-          // the empty case to 0 (SparkEntry engine-divergence registry)
-          """stack(9,
-            |  'dup_docs', n_docs - n_unique,
-            |  'dup_ppm', CASE WHEN n_docs = 0 THEN 0L
-            |    ELSE ((n_docs - n_unique) * 1000000) div n_docs END,
-            |  'mean_quality_ppm', CASE WHEN n_docs = 0 THEN 0L
-            |    ELSE q_sum div n_docs END,
-            |  'n_chars', n_chars,
-            |  'n_docs', n_docs,
-            |  'n_hosts', n_hosts,
-            |  'n_langs', n_langs,
-            |  'n_tokens', n_tokens,
-            |  'pii_docs', pii_docs) AS (metric, value)"""
-            .stripMargin.replace("\n", " ")))
-        .orderBy("metric")
-    }),
-
-    // Association rules over order baskets: pair support / directional
-    // confidence / lift in exact integer ppm (lift through DECIMAL(38,0)
-    // so n_ab·N·10⁶ cannot wrap at production counts). The support floor
-    // is applied BEFORE the margin joins, so downstream work is bounded by
-    // the rule count, not the pair count; per-order pairing is bounded by
-    // basket width, the same shape graph_triangles builds its edges from.
-    "market_basket" -> ((s, d) => {
-      val (li, pairs) = coPurchasePairs(s, d)
-      val tot = li.agg(countDistinct("ok").as("n_orders"))
-      val freq = li.groupBy("pk").agg(count(lit(1)).as("n_part"))
-      pairs
-        .join(freq.withColumnRenamed("pk", "a").withColumnRenamed("n_part", "n_a"), "a")
-        .join(freq.withColumnRenamed("pk", "b").withColumnRenamed("n_part", "n_b"), "b")
-        .crossJoin(tot)
-        .select(col("a"), col("b"), col("n_ab"), col("n_a"), col("n_b"),
-          expr("(n_ab * 1000000) div n_a").as("conf_ab_ppm"),
-          expr("(n_ab * 1000000) div n_b").as("conf_ba_ppm"),
-          expr("(CAST(n_ab AS DECIMAL(38,0)) * n_orders * 1000000) div " +
-            "(CAST(n_a AS DECIMAL(38,0)) * n_b)").as("lift_ppm"))
-        .orderBy("a", "b")
-    }),
-
-    // Nearest-neighbor temporal join with tolerance (pandas merge_asof
-    // direction='nearest'): each purchase matched to the CLOSEST click of
-    // the same user within ±15 min, either direction — the attribution
-    // shape asof_signup's backward-only scan can't express. The tolerance
-    // doubles as the band width, so candidates come from an equi-join on
-    // (user, bucket); see graft.ops.NearestJoin.
-    "join_asof_nearest" -> ((s, d) => {
-      val sec = graft.expr.IntMath.floorDiv(col("ts"), 1000000000L)
-      val ev = events(s, d)
-      val p = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), sec.as("ts_sec"))
-      val c = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("event_id").as("click_id"), sec.as("click_sec"))
-      graft.ops.NearestJoin.nearest(p, "event_id", "ts_sec",
-          c, "click_id", "click_sec", "user_id", NearestTolSec,
-          rtAlias = "click_sec", ridAlias = "click_id")
-        .orderBy("event_id")
-    }),
-
-    // Overlapping token-window chunking — the context-window prep op
-    // (RAG indexing, long-doc embedding): chunk i covers tokens
-    // [i·stride, i·stride + win); the last window truncates naturally.
-    // One tokenize pass (toks is a multi-use alias: the chunk-count
-    // expression AND the exploded slices read it — the staging
-    // discipline), then a narrow explode; chunk ids are deterministic so
-    // a re-run (or another engine) reproduces the chunk table exactly.
-    "doc_chunk" -> ((s, d) => {
-      val win = ChunkWinTok; val stride = ChunkStrideTok
-      val t = docs(s, d).select(col("doc_id"), TA.tokens(col("text")).as("toks"))
-        .withColumn("n_tok", size(col("toks")))
-        .withColumn("n_chunks",
-          when(col("n_tok") <= win, lit(1L))
-            .otherwise(expr(s"((n_tok - $win + $stride - 1) div $stride) + 1")))
-      t.select(col("doc_id"), col("toks"),
-          explode(sequence(lit(0L), col("n_chunks") - 1)).as("chunk_id"))
-        .select(col("doc_id"), col("chunk_id"),
-          slice(col("toks"), (col("chunk_id") * stride + 1).cast("int"), lit(win)).as("ct"))
-        .select(col("doc_id"), col("chunk_id"),
-          size(col("ct")).cast("long").as("n_tok_chunk"),
-          md5(array_join(col("ct"), " ").cast("binary")).as("chunk_md5"))
-        .orderBy("doc_id", "chunk_id")
-    }),
-
-    // Source-balanced deterministic training order: seeded rank WITHIN each
-    // source (GlobalRank's grouped 3-pass shape — a plain per-source window
-    // would funnel a whole source through one task), then round-robin
-    // interleave across sources by global-ranking on (rnk_src, source) —
-    // no training shard ever sees a long single-source run, which is the
-    // ordering property corpus_shuffle's uniform shuffle cannot promise.
-    "export_interleave" -> ((s, d) => {
-      val seeded = docs(s, d).select(col("doc_id"), col("source"),
-        graft.expr.PortableHash.phash(
-          concat(lit(s"$InterleaveSeed:"), col("doc_id").cast("string"))).as("hk"))
-      val ranked = graft.ops.GlobalRank.withGroupedRowNumber(
-          seeded, "source", "hk", Seq("doc_id"), buckets = graft.ops.GlobalRank.Auto,
-          out = "rnk_src", outN = "__n")
-        .drop("__n", "hk")
-      graft.ops.GlobalRank.withGlobalRowNumberAndCount(
-          ranked, "rnk_src", Seq("source", "doc_id"), buckets = graft.ops.GlobalRank.Auto, out = "pos")._1
-        .select(col("doc_id"), col("source"), col("rnk_src"), col("pos"))
-        .orderBy("doc_id")
-    }),
-
-    // Dedup-tuning sweep: pair and removal counts at each candidate
-    // threshold, all from ONE verified-candidate pass (the LSH chain runs
-    // once; the sweep is a 5-row theta-join over the checkpointed pairs).
-    // n_docs_removed counts the LARGER doc of each surviving pair — the
-    // keep-smallest one-level removal set, not the transitive closure
-    // (dedup_clusters owns that); the sweep is the knob-choosing report a
-    // pipeline runs BEFORE committing to a threshold.
-    "dedup_threshold_sweep" -> ((s, d) => {
-      import s.implicits._
-      val ver = Dedup.verifiedJaccardFrom(
-          Dedup.signatureIndex(docs(s, d), shingleSize = 3, numPerms = 16,
-            numBands = 4))
-        .select(col("a"), col("b"), round(col("jaccard"), 6).as("jac_r"))
-        .localCheckpoint() // one LSH+verify pass feeds all thresholds
-      SweepThresholds.toDF("thr")
-        .join(ver, col("jac_r") >= col("thr"), "left")
-        .groupBy("thr")
-        .agg(count(col("a")).as("n_pairs"),
-          countDistinct(col("b")).as("n_docs_removed"))
-        .orderBy("thr")
-    }),
-
-    // LSH parameterization sweep: every (bands, rows) factorization of the
-    // 16-perm signature, measured on the corpus — candidate volume, true
-    // near-dups among candidates (jac >= 0.5, the dedup_verified contract),
-    // precision, and recall vs the union of all configs' true pairs, plus
-    // the analytic S-curve midpoint (1/b)^(1/r) per config. The signature
-    // is computed ONCE (it depends on numPerms only, Dedup.signatureFrame)
-    // and each config re-bands it as a cheap projection — the production
-    // retune shape: at 100 TB the sweep runs on a sample, the chosen
-    // config on the corpus. Exact verification runs once over the UNION of
-    // candidate pairs, never per config (config pair sets are nested: an
-    // 8-row band match implies both 4-row halves match, so the union IS
-    // the most permissive config's set).
-    "lsh_param_sweep" -> ((s, d) => {
-      import s.implicits._
-      val th = Dedup.tokenHashFrame(docs(s, d)).localCheckpoint()
-      val sig = Dedup.signatureFrame(th, shingleSize = 3, numPerms = 16)
-        .localCheckpoint() // one signature pass feeds every banding config
-      val sets = th.select(col("doc_id"),
-        array_distinct(Dedup.hashedShingles(col("th"), 3)).as("sh"))
-      val pairs = LshSweepConfigs.map { case (b, _, _) =>
-        Dedup.minhashCandidatesFrom(Dedup.bandsFromSignature(sig, 16, b))
-          .select(lit(b).as("n_bands"), col("a"), col("b"))
-      }.reduce(_ unionByName _).localCheckpoint()
-      val ver = pairs.select("a", "b").distinct()
-        .join(sets.as("l"), col("a") === col("l.doc_id"))
-        .join(sets.as("r"), col("b") === col("r.doc_id"))
-        .select(col("a"), col("b"),
-          (round(size(array_intersect(col("l.sh"), col("r.sh"))).cast("double") /
-            size(array_union(col("l.sh"), col("r.sh"))), 6) >= 0.5).as("is_true"))
-        .localCheckpoint() // one exact-verify pass over the union of configs
-      val tot = ver.agg(
-        sum(when(col("is_true"), 1L).otherwise(0L)).as("total_true"))
-      val counts = pairs.join(ver, Seq("a", "b"))
-        .groupBy("n_bands")
-        .agg(count(lit(1)).as("n_pairs"),
-          sum(when(col("is_true"), 1L).otherwise(0L)).as("n_true"))
-      LshSweepConfigs.toDF("n_bands", "rows_per_band", "thr_micro")
-        .join(counts, Seq("n_bands"), "left")
-        .crossJoin(broadcast(tot)) // 1-row totals broadcast
-        .select(col("n_bands"), col("rows_per_band"), col("thr_micro"),
-          coalesce(col("n_pairs"), lit(0L)).as("n_pairs"),
-          coalesce(col("n_true"), lit(0L)).as("n_true"), col("total_true"))
-        .select(col("n_bands"), col("rows_per_band"), col("thr_micro"),
-          col("n_pairs"), col("n_true"),
-          when(col("n_pairs") > 0, expr("(n_true * 1000000) div n_pairs"))
-            .otherwise(0L).as("precision_ppm"),
-          when(col("total_true") > 0, expr("(n_true * 1000000) div total_true"))
-            .otherwise(0L).as("recall_ppm"))
-        .orderBy("n_bands")
-    }),
-
-    // Semantic-dedup tuning sweep — the embedding sibling of
-    // dedup_threshold_sweep: pair and removal counts at each candidate
-    // cosine threshold, all from ONE LSH+verify pass (the near-dup edge
-    // set at the grid minimum, checkpointed); the sweep itself is a 5-row
-    // broadcast theta join. n_docs_removed counts the larger vec of each
-    // surviving pair — the keep-smallest one-level removal set, matching
-    // the lexical sweep's contract (semantic_clusters owns transitivity).
-    "semantic_sweep" -> ((s, d) => {
-      import s.implicits._
-      val ver = Similarity.nearDupPairs(emb(s, d), CosSweepThresholds.min,
-          bitsPerBand = lshBitsFor(s, d))
-        .localCheckpoint() // one LSH+verify pass feeds all thresholds
-      CosSweepThresholds.toDF("thr")
-        .join(ver, col("cos_r") >= col("thr"), "left")
-        .groupBy("thr")
-        .agg(count(col("a")).as("n_pairs"),
-          countDistinct(col("b")).as("n_docs_removed"))
-        .orderBy("thr")
-    }),
-
-    // Quality-gate threshold sweep: how much of the corpus (docs AND
-    // tokens) survives each candidate quality cutoff — the knob-choosing
-    // report a pipeline runs BEFORE committing corpus_clean's minQuality;
-    // the quality-side sibling of dedup_threshold_sweep. ONE
-    // tokenize+score pass feeds every grid point (checkpointed); the grid
-    // is a 5-row broadcast theta join and the keep ratios are integer ppm
-    // against a 1-row broadcast total.
-    "quality_sweep" -> ((s, d) => {
-      import s.implicits._
-      val q = docs(s, d).select(
-          TA.qualityScore(col("text")).as("quality"),
-          size(TA.tokens(col("text"))).cast("long").as("n_tok"))
-        .localCheckpoint() // one tokenize+score pass feeds all grid points
-      val tot = q.agg(count(lit(1)).as("t_docs"), sum("n_tok").as("t_toks"))
-      QualitySweep.toDF("thr")
-        .join(q, col("quality") >= col("thr"), "left")
-        .groupBy("thr")
-        .agg(count(col("quality")).as("n_docs"),
-          coalesce(sum("n_tok"), lit(0L)).as("n_tokens"))
-        .crossJoin(broadcast(tot))
-        .select(col("thr"), col("n_docs"), col("n_tokens"),
-          expr("(n_docs * 1000000) div t_docs").as("doc_keep_ppm"),
-          expr("(n_tokens * 1000000) div t_toks").as("tok_keep_ppm"))
-        .orderBy("thr")
-    }),
-
-    // Multi-touch attribution: every click within the 24h window before a
-    // same-user purchase shares that purchase's value — linear credit in
-    // exact integer cents (cents div n_touch), plus the last-touch count.
-    // Candidates come from the keyed banded range join (user, time-bucket)
-    // — never clicks × purchases; the per-purchase windows partition by
-    // p_id (purchase-sized groups, balanced at any scale).
-    "events_attribution" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val ev = events(s, d).select(col("event_id"), col("user_id"),
-        col("event_type"), IntMath.floorDiv(col("ts"), 1000L).as("t_us"),
-        col("value"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("event_id").as("click_id"), col("user_id"),
-          col("t_us").as("c_us"))
-      val purch = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("p_id"), col("user_id"),
-          (col("t_us") - AttribWindowUs).as("lo_us"), col("t_us").as("hi_us"),
-          (col("value").cast("decimal(12,2)") * 100).cast("long").as("cents"))
-      val touches = graft.ops.RangeJoin.pointInRangeKeyed(
-          clicks, "c_us", purch, "lo_us", "hi_us", AttribWindowUs,
-          keys = Seq("user_id"))
-        .localCheckpoint() // the purchase windows + click rollup share it
-      val byP = Window.partitionBy("p_id")
-      touches
-        .withColumn("n_touch", count(lit(1)).over(byP))
-        .withColumn("is_last", row_number().over(
-          byP.orderBy(col("c_us").desc, col("click_id").desc)) === 1)
-        .groupBy("click_id")
-        .agg(count(lit(1)).as("n_purchases"),
-          sum(expr("cents div n_touch")).as("attributed_cents"),
-          sum(when(col("is_last"), 1L).otherwise(0L)).as("n_last_touch"))
-        .orderBy("click_id")
-    }),
-
-    // Embedding-space outlier detection (training-data cleaning): cosine
-    // of every vector to its LABEL centroid; low/negative cosine marks the
-    // mislabeled/corrupt suspects a pipeline drops or reroutes. Centroids
-    // are exact quantized-integer means (float averaging is shuffle-order-
-    // dependent — the same determinism trade Quantizer documents), so the
-    // oracle replays them bit-for-bit; the per-vector cosine is then
-    // integer dots through IEEE doubles — per-row deterministic. One
-    // quantize pass feeds both the centroid agg and the per-vector dots;
-    // the |labels|×dim centroid table broadcasts.
-    "embedding_outlier" -> ((s, d) => {
-      val q = emb(s, d).select(col("vec_id"), col("label"),
-          posexplode(graft.llm.Quantizer.quantize(col("embedding"))))
-        .toDF("vec_id", "label", "idx", "qv")
-        .localCheckpoint()
-      val cent = q.groupBy("label", "idx")
-        .agg(sum("qv").as("s"), count(lit(1)).as("n"))
-        // floor division via the pmod identity (Spark `div` truncates;
-        // DuckDB `//` floors — pmod makes both exact-floor)
-        .select(col("label"), col("idx"), expr("(s - pmod(s, n)) div n").as("c"))
-      q.join(broadcast(cent), Seq("label", "idx"))
-        .groupBy("vec_id", "label")
-        .agg(sum(col("qv") * col("c")).as("dt"),
-          sum(col("qv") * col("qv")).as("n2v"),
-          sum(col("c") * col("c")).as("n2c"))
-        .select(col("vec_id"), col("label"),
-          when(col("n2v") === 0 || col("n2c") === 0, lit(-2.0))
-            .otherwise(round(col("dt") / (sqrt(col("n2v")) * sqrt(col("n2c"))), 6))
-            .as("cos_centroid_r"))
-        .withColumn("is_outlier", col("cos_centroid_r") < OutlierTau)
-        .orderBy("vec_id")
-    }),
-
-    // Exact quantized Gram + covariance numerators over the embedding
-    // corpus — the one-pass distributed linear algebra that feeds PCA /
-    // whitening offline. X^T X rides graft.expr.GramAgg (a native
-    // TypedImperativeAggregate): ONE pass accumulates (n, sx[d],
-    // tri[d(d+1)/2]) per task with map-side merge, then a dim-bounded
-    // two-level posexplode unfolds the triangle to (i, j) cells. The old
-    // per-row cell explode (d(d+1)/2 rows PER VECTOR) measured 51× wall
-    // at 8× dims in the r11 dimension study — ~10¹⁴ exploded rows per
-    // 10⁹ vectors at d=512; the aggregate replaces it with in-buffer long
-    // adds (loud Math.*Exact overflow at the documented ~9·10¹⁰-vector
-    // bound, mirrored by error() CASEs in the oracle). cov_num =
-    // n·S_xy − S_x·S_y in DECIMAL — integer end-to-end, bit-replayable.
-    "embedding_gram" -> ((s, d) => {
-      val dim = Quantizer.Dim
-      val g = emb(s, d)
-        .select(Quantizer.quantize(col("embedding")).as("q"))
-        .agg(graft.expr.GramAgg.gram(col("q"), dim).as("g"))
-        .select(col("g.n").as("n"), col("g.sx").as("sx"), col("g.tri").as("tri"))
-        // GramAgg (a global agg) emits one n=0 row on an empty corpus where
-        // the oracle's GROUP BY yields zero rows — drop it so both engines
-        // return an empty frame (pre-GramAgg semantics, r11 advice).
-        .filter(col("n") > 0)
-      g.select(col("n"), col("sx"), col("tri"),
-          explode(sequence(lit(0), lit(dim - 1))).as("i"))
-        .select(col("n"), col("sx"), col("i"),
-          element_at(col("sx"), col("i") + 1).as("sx_i"),
-          expr(s"slice(tri, i * $dim - (i * (i - 1)) div 2 + 1, $dim - i)")
-            .as("seg"))
-        .select(col("n"), col("sx"), col("i"), col("sx_i"),
-          posexplode(col("seg")).as(Seq("joff", "sxy")))
-        .select(col("i").cast("long").as("i"),
-          (col("i") + col("joff")).cast("long").as("j"), col("n"),
-          col("sxy").as("gram"),
-          expr("""CAST(CAST(n AS DECIMAL(38,0)) * sxy
-                 |  - CAST(sx_i AS DECIMAL(38,0))
-                 |    * element_at(sx, CAST(i + joff + 1 AS INT))
-                 |  AS BIGINT)""".stripMargin).as("cov_num"))
-        .orderBy("i", "j")
-    }),
-
-    // KMV union estimates between day cohorts — the merge half of the
-    // sketch family (sketch_kmv_overlap estimates intersection/Jaccard;
-    // this estimates |A ∪ B| from the merged k-set, the mergeability HLL
-    // shares but cannot intersect on). Same sketch build, same ≤2k-row
-    // per-pair estimator; shared pairStream/CTE machinery keeps the two
-    // keys' streams identical by construction.
-    "sketch_kmv_union" -> ((s, d) => {
-      val dp = events(s, d)
-        .select(IntMath.floorDiv(col("ts"), NanosPerDay).as("g"),
-          col("user_id").as("id"))
-        .distinct()
-      val sk = graft.ops.Kmv.sketchByGroup(dp, "g", "id", k = KmvK, seed = KmvSeed)
-      graft.ops.Kmv.unionEstimates(sk, "g", "id", k = KmvK)
-        .orderBy("group_a", "group_b")
-    }),
-
-    // Span-level exact duplication: every w-token window fingerprint shared
-    // by ≥2 documents, with doc frequency / occurrence count / keep
-    // candidate — the posting list a span-dedup pass consumes (whole-doc
-    // Jaccard misses shared paragraphs inside otherwise-distinct docs).
-    // One explode + one count-only hash aggregate; boilerplate mega-windows
-    // cost a counter, never a fat group.
-    "substring_dedup" -> ((s, d) =>
-      graft.llm.Substring.postings(docs(s, d), SubstrWinTok).orderBy("wh")),
-
-    // Per-document duplicated-span exposure (ppm of windows that also occur
-    // in another doc) — the ranking signal for span-level cleaning; a doc
-    // that is 90% shared boilerplate scores ~900000 even when no whole-doc
-    // pair fires. Shares the window pass via one localCheckpoint.
-    "doc_dup_frac" -> ((s, d) =>
-      graft.llm.Substring.dupFrac(docs(s, d), SubstrWinTok).orderBy("doc_id")),
-
-    // Merged duplicated-span intervals per doc (gaps-and-islands over the
-    // duplicated window positions) — the operand of surgical span removal.
-    // Per-doc windows only: cross-doc pair spans would go quadratic on
-    // boilerplate windows; the per-doc island view is linear and answers
-    // "which tokens of THIS doc are duplicated elsewhere".
-    "doc_dup_spans" -> ((s, d) =>
-      graft.llm.Substring.dupSpans(docs(s, d), SubstrWinTok)
-        .orderBy("doc_id", "span_start")),
-
-    // Incremental span admission: the NEW batch's windows probe the
-    // EXISTING corpus postings — linear in the batch; rejects a "new" doc
-    // assembled from already-ingested text even when no whole-doc
-    // fingerprint or LSH pair fires.
-    "substring_incremental" -> ((s, d) =>
-      graft.llm.Substring.incremental(docs(s, d),
-          pmod(col("doc_id"), lit(10)) === 9, SubstrWinTok)
-        .orderBy("doc_id")),
-
-    // Span-level scrub: rebuild every document with its cross-doc
-    // duplicated spans removed (keep-one: the min-doc owner of each
-    // duplicated window keeps its copy) — the emitter the span family
-    // feeds; token mass conserved (n_kept + n_removed = n_tok); no INPUT
-    // cross-doc duplicated window survives (seam-minted new windows are
-    // possible in principle — see Substring.scrub's invariant note).
-    "substring_scrub" -> ((s, d) =>
-      graft.llm.Substring.scrub(docs(s, d), SubstrWinTok).orderBy("doc_id")),
-
-    // The duplication dashboard: all four dedup granularities measured
-    // side by side — whole docs (exact fingerprint), ALIGNED lines,
-    // stride-1 rolling windows, content-defined chunks — as
-    // (granularity, n_units, n_dup_units, dup_ppm) rows. The number a
-    // curation run reads FIRST: which granularity carries this corpus's
-    // duplication decides which (and how expensive a) dedup pass to run.
-    // Four independent count-only aggregates over one corpus; each is the
-    // corresponding family key's posture, nothing new materializes.
-    "dedup_spectrum" -> ((s, d) => {
-      val dd = docs(s, d)
-      def row(g: String, units: org.apache.spark.sql.DataFrame) =
-        units.agg(sum("n").as("n_units"),
-            sum(when(col("nd") >= 2, col("n")).otherwise(0L)).as("n_dup"))
-          .select(lit(g).as("granularity"),
-            coalesce(col("n_units"), lit(0L)).as("n_units"),
-            coalesce(col("n_dup"), lit(0L)).as("n_dup_units"),
-            when(coalesce(col("n_units"), lit(0L)) === 0, 0L)
-              .otherwise(expr("n_dup * 1000000 div n_units")).as("dup_ppm"))
-      // ONE scan+tokenize(+doc-fingerprint) pass feeds all five
-      // granularity views (opt guide §2.4): composed via the per-family
-      // *FromToks variants, the five unit frames previously re-ran
-      // scan+tokenize each (8 parquet scans in the before-plan)
-      val base = dd.select(col("doc_id"),
-          Dedup.fingerprint(col("text")).as("h"),
-          TA.tokens(col("text")).as("toks"))
-        .localCheckpoint()
-      val toksF = base.select(col("doc_id"), col("toks"))
-      val docU = base.groupBy("h")
-        .agg(count(lit(1)).as("n"), countDistinct("doc_id").as("nd"))
-      val lineU = graft.llm.Lines.fastLineFrameFromToks(toksF).groupBy("lh")
-        .agg(count(lit(1)).as("n"), countDistinct("doc_id").as("nd"))
-      val winU = graft.llm.Substring.fastWindowFrameFromToks(toksF, SubstrWinTok).groupBy("wh")
-        .agg(count(lit(1)).as("n"), countDistinct("doc_id").as("nd"))
-      val chkU = graft.llm.Chunks.chunkFrameFromToks(toksF).groupBy("ch")
-        .agg(count(lit(1)).as("n"), countDistinct("doc_id").as("nd"))
-      val winnowU = graft.llm.Winnow.fingerprintsFromToks(toksF).groupBy("fp")
-        .agg(count(lit(1)).as("n"), countDistinct("doc_id").as("nd"))
-      row("1_document", docU)
-        .union(row("2_line", lineU))
-        .union(row("3_window16", winU))
-        .union(row("4_chunk", chkU))
-        .union(row("5_winnow", winnowU))
-        .orderBy("granularity")
-    }),
-
-    // Content-defined chunk dedup: the shift-robust dedup granularity —
-    // boundaries fall where a TOKEN's hash lands in the cut class
-    // (phash % D == 0, the gear-CDC idea reduced to a per-token
-    // predicate), so an injected prefix shifts positions but moves no
-    // downstream boundary — the exact miss mode of aligned lines. ~tokens/D
-    // rows where substring postings pay tokens×1; min/max clamps are
-    // deliberately absent (they'd make boundaries a sequential fold).
-    "dedup_cdc" -> ((s, d) =>
-      graft.llm.Chunks.postings(docs(s, d)).orderBy("ch")),
-
-    // CCNet stage-1 line-level dedup (Wenzek et al. 2019 §4.2): duplicated
-    // ALIGNED-line postings across the corpus — the boilerplate
-    // (menus/banners) detector run on everything BEFORE lang-id and
-    // quality, at tokens/w rows where the rolling-window family pays
-    // tokens×1. Same counter-only aggregate posture: a mega-duplicated
-    // banner line is one cell, never a fat group.
-    "line_dedup" -> ((s, d) =>
-      graft.llm.Lines.postings(docs(s, d)).orderBy("lh")),
-
-    // Incremental line admission: the NEW batch's aligned lines probe the
-    // EXISTING corpus's distinct line set — the stage-0.5 ingest score,
-    // linear in the batch at tokens/w rows (substring_incremental's
-    // contract at the cheap granularity; the incremental-family member
-    // for llm.Lines).
-    "line_incremental" -> ((s, d) =>
-      graft.llm.Lines.incremental(docs(s, d),
-          pmod(col("doc_id"), lit(10)) === 9)
-        .orderBy("doc_id")),
-
-    // CCNet's drop step as an emitter: every doc rebuilt with its
-    // cross-doc duplicated lines removed (keep-one ownership, min-id doc
-    // keeps its copy). Line mass conserved (n_kept + n_removed = n_lines);
-    // unlike the rolling-window scrub, aligned-line removal can't mint new
-    // duplicates, so one pass IS the fixpoint (LinesSpec pins it).
-    "line_scrub" -> ((s, d) =>
-      graft.llm.Lines.scrub(docs(s, d)).orderBy("doc_id")),
-
-    // Pairwise total-variation distance between source token distributions
-    // (ppm) — the mixing diagnostic read before choosing mix_rates. TV, not
-    // KL/JS: rational in the empirical probabilities, so exact decimal
-    // arithmetic replaces the float-log that would hash-diverge across
-    // engines; operationally it bounds the max probability gap per token.
-    "corpus_divergence" -> ((s, d) =>
-      graft.llm.Divergence.pairwiseTV(docs(s, d)).orderBy("s1", "s2")),
-
-    // Smoothed multinomial source attribution (exact-integer naive-Bayes
-    // stand-in): train per-source token ppm on the corpus, score every doc
-    // against every source, argmax with deterministic ties. Off-diagonal
-    // rows are the audit output: docs whose token mix belongs elsewhere.
-    "source_classifier" -> ((s, d) =>
-      graft.llm.Divergence.sourceClassifier(docs(s, d)).orderBy("doc_id")),
-
-    // No-split whole-doc packing (T5-style, truncation at the bin tail) —
-    // the cheap/lossy alternative to pack_sequences' concat-then-chunk;
-    // kept_tok < n_tok marks tail truncation, kept_tok = 0 full loss.
-    "pack_nosplit" -> ((s, d) =>
-      graft.llm.Pack.nosplit(docs(s, d),
-          buckets = graft.llm.Pack.autoBuckets(docs(s, d).count()))
-        .orderBy("bucket", "bin", "doc_id")),
-
-    // Packing-efficiency report over pack_nosplit: per-bin fill and
-    // truncation ppm — the numbers that decide no-split vs split packing.
-    "pack_fill" -> ((s, d) =>
-      graft.llm.Pack.fillStats(docs(s, d),
-          buckets = graft.llm.Pack.autoBuckets(docs(s, d).count()))
-        .orderBy("bucket", "bin")),
-
-    // Packing-config sweep: per candidate seq length, corpus-level
-    // truncation loss (no-split style) vs padding loss (concat-then-chunk
-    // style) — the one-report tuning artifact for the (length × style)
-    // packing decision. One tokenize + one cumulative pass feed all configs.
-    "pack_sweep" -> ((s, d) =>
-      graft.llm.Pack.sweep(docs(s, d),
-        buckets = graft.llm.Pack.autoBuckets(docs(s, d).count()))),
-
-    // Tokenizer/corpus head-mass: per source, the ppm of token mass covered
-    // by the top-k tokens (k ∈ 10/100/1000) — the Zipf-head diagnostic that
-    // sizes vocabularies and spots templated sources (head ≈ 1e6 = generated
-    // text). Grouped rank runs on GlobalRank's distributed 3-pass shape, so
-    // no source funnels its vocab through one task.
-    // Incremental tokenizer health: the NEW batch's out-of-vocabulary
-    // word rate against the EXISTING corpus vocabulary — the first drift
-    // alarm a tokenizer deployment watches (rising OOV on a domain slice
-    // means the vocab under-serves new data; the batch side of
-    // vocab_growth's saturation curve). Corpus side reduces to the
-    // DISTINCT Zipf-bounded word set before the join; batch-linear.
-    // Fixture decoration (the pii_redact/text_normalize precedent): the
-    // closed synthetic vocabulary makes every batch word known, so half
-    // the batch (doc_id % 20 == 9) carries one planted doc-unique token —
-    // both engines synthesize it identically, and the mixed fixture
-    // exercises zero AND nonzero OOV rows.
-    "vocab_oov" -> ((s, d) => {
-      val isNew = pmod(col("doc_id"), lit(10)) === 9
-      val decorated = when(pmod(col("doc_id"), lit(20)) === 9,
-        concat(col("text"), lit(" novel"), col("doc_id").cast("string")))
-        .otherwise(col("text"))
-      val known = docs(s, d).filter(!isNew)
-        .select(explode(TA.tokens(col("text"))).as("word"))
-        .distinct()
-        .withColumn("known", lit(true))
-      docs(s, d).filter(isNew)
-        .select(col("doc_id"), explode_outer(TA.tokens(decorated)).as("word"))
-        .join(known, Seq("word"), "left")
-        .groupBy("doc_id")
-        .agg(count(col("word")).as("n_words"),
-          sum(when(col("word").isNotNull && col("known").isNull, 1L)
-            .otherwise(0L)).as("n_oov"))
-        .withColumn("oov_ppm",
-          when(col("n_words") === 0, 0L)
-            .otherwise(expr("(n_oov * 1000000) div n_words")))
-        .orderBy("doc_id")
-    }),
-
-    // Simpson lexical concentration per source — the rational (no-log)
-    // diversity audit beside vocab_coverage's head-mass rows; one exact
-    // integer division per source (graft.llm.Diversity).
-    "vocab_simpson" -> ((s, d) => graft.llm.Diversity.simpson(docs(s, d))),
-
-    // Zipf-slope diagnostic: OLS of bit_length(freq) against
-    // bit_length(rank) over the whole vocabulary — slope ≈ −(Zipf
-    // exponent) in exact log2-bucket space. Both axes use the
-    // skew_histogram device (length(bin(x)) − 1: exact integer log2, no
-    // float log anywhere), the rank rides the distributed GlobalRank (no
-    // partition-less window), and the fit is the linreg contract: exact
-    // DECIMAL moments, ONE correctly-rounded division per coefficient.
-    // The "is this corpus Zipf-shaped" screen beside vocab_growth's
-    // Heaps curve; a head-heavy (boilerplate) corpus reads a steeper
-    // slope than the ~−1 natural-language norm.
-    "vocab_zipf_slope" -> ((s, d) => {
-      val vc = docs(s, d).select(explode(TA.tokens(col("text"))).as("tok"))
-        .groupBy("tok").agg(count(lit(1)).as("f"))
-        .select(col("tok"), col("f"), (-col("f")).as("negf"))
-      val ranked = graft.ops.GlobalRank.withGlobalRowNumber(
-        vc, "negf", Seq("tok"), buckets = graft.ops.GlobalRank.Auto, out = "r")
-      val pts = ranked.select(
-        (length(bin(col("r"))) - 1).cast("decimal(38,0)").as("x"),
-        (length(bin(col("f"))) - 1).cast("decimal(38,0)").as("y"))
-      val den = (col("n") * col("sxx") - col("sx") * col("sx")).cast("double")
-      pts.agg(count(lit(1)).cast("decimal(38,0)").as("n"),
-          sum("x").as("sx"), sum("y").as("sy"),
-          sum(col("x") * col("y")).as("sxy"), sum(col("x") * col("x")).as("sxx"))
-        .select(col("n").cast("long").as("n_types"),
-          when(den === 0.0, 0.0)
-            .otherwise(round((col("n") * col("sxy") - col("sx") * col("sy"))
-              .cast("double") / den, 6)).as("slope_r"),
-          when(den === 0.0, 0.0)
-            .otherwise(round((col("sy") * col("sxx") - col("sx") * col("sxy"))
-              .cast("double") / den, 6)).as("icept_r"))
-    }),
-
-    "vocab_coverage" -> ((s, d) => {
-      import s.implicits._
-      val cnt = docs(s, d)
-        .select(col("source"), explode(TA.tokens(col("text"))).as("tok"))
-        .groupBy("source", "tok").agg(count(lit(1)).as("c"))
-        .withColumn("negc", -col("c"))
-      val ranked = graft.ops.GlobalRank.withGroupedRowNumber(
-          cnt, "source", "negc", Seq("tok"), buckets = graft.ops.GlobalRank.Auto,
-          out = "rnk", outN = "__nv")
-        .localCheckpoint() // feeds per-source totals AND the k-band join
-      val tot = ranked.groupBy("source")
-        .agg(sum("c").as("n_tok"), max("__nv").as("n_vocab"))
-      ranked.join(broadcast(CoverageKs.toDF("k")), col("rnk") <= col("k"))
-        .groupBy("source", "k").agg(sum("c").as("mass"))
-        .join(broadcast(tot), Seq("source"))
-        .select(col("source"), col("k"), col("n_vocab"), col("n_tok"),
-          expr("(mass * 1000000) div n_tok").as("mass_ppm"))
-        .orderBy("source", "k")
-    }),
-
-    // Exact per-source quality percentiles (p25/50/75 of the ppm quality
-    // score, nearest-lower-rank definition: value at rank
-    // floor((n-1)*p/100)+1) — the per-slice quality audit a mixing run
-    // reads next to mix_rates. Grouped rank runs on GlobalRank's 3-pass
-    // distributed shape, so no source funnels through one task; the
-    // percentile targets are a |sources|x3 broadcast join, never a sort.
-    "quality_report" -> ((s, d) => {
-      import s.implicits._
-      val base = docs(s, d).select(col("doc_id"), col("source"),
-          TA.qualityScore(col("text")).as("q"))
-        .select(col("doc_id"), col("source"),
-          expr(s"CAST(round(q * $SamplePpmScale, 0) AS BIGINT)").as("q_ppm"))
-      val ranked = graft.ops.GlobalRank.withGroupedRowNumber(
-          base, "source", "q_ppm", Seq("doc_id"), buckets = graft.ops.GlobalRank.Auto,
-          out = "rnk", outN = "n")
-        .localCheckpoint() // feeds the target table AND the value lookup
-      val targets = ranked.select("source", "n").distinct()
-        .crossJoin(broadcast(QualityPs.toDF("p")))
-        .select(col("source"), col("p"),
-          (expr("((n - 1) * p) div 100") + 1).as("rnk"))
-      ranked.join(broadcast(targets), Seq("source", "rnk"))
-        .select(col("source"), col("p"), col("n"), col("q_ppm").as("q_ppm_at_p"))
-        .orderBy("source", "p")
-    }),
-
-    // Per-source distribution drift: the exact Kolmogorov–Smirnov statistic
-    // of each source's quality distribution against the REST of the corpus
-    // (ks_ppm = max over values of |⌊F_src·10⁶⌋ − ⌊F_rest·10⁶⌋|, argmax
-    // reported at the smallest attaining value) — the "did this crawl
-    // slice shift under me" check run before trusting a mix recipe.
-    // Shape: per-(source, value) counts once, then a sources × value-axis
-    // grid (the events_gapfill dense-grid pattern — sources are enum-
-    // bounded, the axis is ≤10⁶ distinct ppm values by construction, so
-    // the grid is corpus-size-INDEPENDENT); per-source CDFs are window
-    // sums over the grid, and the global CDF falls out as the per-value
-    // SUM of source CDFs — no partition-less window anywhere. The KS max
-    // is a single struct-max hash agg per source.
-    "quality_ks" -> ((s, d) => {
-      val b = docs(s, d)
-        .select(col("source"), TA.qualityScore(col("text")).as("q"))
-        .select(col("source"),
-          expr(s"CAST(round(q * $SamplePpmScale, 0) AS BIGINT)").as("v"))
-      val svc = b.groupBy("source", "v").agg(count(lit(1)).as("c"))
-        .localCheckpoint() // feeds axis, per-source totals, and the grid
-      val axis = svc.select("v").distinct()
-      val srcN = svc.groupBy("source").agg(sum("c").as("n_src"))
-      val tot = svc.agg(sum("c").as("n")) // 1 row
-      val grid = srcN.select("source").crossJoin(axis) // bounded grid
-        .join(svc, Seq("source", "v"), "left")
-        .withColumn("c", coalesce(col("c"), lit(0L)))
-      val wCum = Window.partitionBy("source").orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val cum = grid.withColumn("cum_src", sum("c").over(wCum))
-        .localCheckpoint() // the global CDF below re-reads it per value
-      val ca = cum.groupBy("v").agg(sum("cum_src").as("cum_all"))
-      cum.join(ca, Seq("v"))
-        .join(broadcast(srcN), Seq("source"))
-        .crossJoin(broadcast(tot))
-        .filter(col("n") > col("n_src")) // a lone source has no "rest" CDF
-        .select(col("source"), col("n_src"), col("v"),
-          expr("""abs(CAST((CAST(cum_src AS DECIMAL(38,0)) * 1000000)
-                 |         div n_src AS BIGINT)
-                 |  - CAST((CAST(cum_all - cum_src AS DECIMAL(38,0)) * 1000000)
-                 |         div (n - n_src) AS BIGINT))"""
-            .stripMargin.replace("\n", " ")).as("gap_ppm"))
-        .groupBy("source")
-        .agg(max("n_src").as("n_docs"),
-          max(struct(col("gap_ppm"), (-col("v")).as("nv"))).as("m"))
-        .select(col("source"), col("n_docs"),
-          col("m.gap_ppm").as("ks_ppm"), (-col("m.nv")).as("q_ppm_at_max"))
-        .orderBy("source")
-    }),
-
-    // Importance sampling by quality: deterministic Bernoulli(quality) via
-    // the seeded hash gate (same reproducible-slice contract as
-    // sample_stratified, with a per-doc continuous rate instead of a
-    // per-stratum table) — the standard quality-weighted corpus thinning.
-    "sample_importance" -> ((s, d) => {
-      val qPpm = expr(s"CAST(round(q * $SamplePpmScale, 0) AS BIGINT)")
-      docs(s, d)
-        .select(col("doc_id"), col("lang"),
-          TA.qualityScore(col("text")).as("q"))
-        .select(col("doc_id"), col("lang"), qPpm.as("w_ppm"))
-        .filter(pmod(graft.expr.PortableHash.phash(
-            concat(lit(s"$ImportanceSeed:"), col("doc_id").cast("string"))),
-          lit(SamplePpmScale)) < col("w_ppm"))
-        .orderBy("doc_id")
-    }),
-
-    // DSIR-shaped data selection: target = the lang='en' slice, source =
-    // the whole corpus. Design, arithmetic and scale notes in llm/Dsir
-    // (bucket-bounded broadcast ratio table; token-linear corpus side).
-    "dsir_weights" -> ((s, d) => {
-      import graft.llm.Dsir
-      val dfc = Dsir.docFeatures(docs(s, d),
-          col("lang") === Dsir.TargetLang)
-        .localCheckpoint() // feeds the bucket-ratio table AND the scoring
-      Dsir.score(dfc, Dsir.ratios(dfc), docs(s, d))
-        .orderBy("doc_id")
-    }),
-
-    // The resample half of DSIR: select the top score quartile via the
-    // distributed range-bucketed global ntile (window_ntile's machinery —
-    // no partition-less window, no single-task sort at any corpus size).
-    // keep = quartile 4; the paper's importance-resampling step reduced to
-    // a deterministic top-fraction cut on the exact integer scores.
-    "dsir_select" -> ((s, d) => {
-      import graft.llm.Dsir
-      val dfc = Dsir.docFeatures(docs(s, d),
-          col("lang") === Dsir.TargetLang)
-        .localCheckpoint()
-      val scored = Dsir.score(dfc, Dsir.ratios(dfc), docs(s, d))
-        .select("doc_id", "score_ppm")
-      graft.ops.GlobalRank.withNtile(scored,
-          rangeCol = "score_ppm", tieBreak = Seq("doc_id"),
-          buckets = graft.ops.GlobalRank.Auto, tiles = 4, out = "quartile")
-        .select(col("doc_id"), col("score_ppm"), col("quartile"),
-          (col("quartile") === 4).as("keep"))
-        .orderBy("doc_id")
-    }),
-
-    // k-anonymity audit over a quasi-identifier tuple (nation, market
-    // segment, coarse balance bin): group-size histogram + the re-id risk
-    // flag (k below threshold). The per-group frame never leaves the
-    // executors — the report is the k-histogram, which is bounded by the
-    // largest group size, not the group count; both aggregates are
-    // map-side combinable hash aggs. The release-readiness gate a
-    // training-data pipeline runs before shipping any user-derived table.
-    "k_anonymity" -> ((s, d) => {
-      val g = Tables.customer(s, d)
-        .select(col("c_nationkey"), col("c_mktsegment"),
-          floor(col("c_acctbal") / 1000.0).cast("long").as("bal_bin"))
-        .groupBy("c_nationkey", "c_mktsegment", "bal_bin")
-        .agg(count(lit(1)).as("k_size"))
-      g.groupBy("k_size")
-        .agg(count(lit(1)).as("n_groups"))
-        .select(col("k_size"), col("n_groups"),
-          (col("k_size") * col("n_groups")).as("n_users"),
-          when(col("k_size") < KAnonRiskK, 1).otherwise(0).as("at_risk"))
-        .orderBy("k_size")
-    }),
-
-    // Type-2 slowly-changing-dimension build: collapse each user's
-    // ts-ordered event_type stream into change runs with half-open
-    // validity intervals [valid_from, valid_to) — valid_to = -1 marks the
-    // current version. Classic islands shape: per-user windows only
-    // (bounded history per key, no global funnel), runs grouped on the
-    // running change count, successor lookup via lead over the runs frame
-    // (1 row per version, far smaller than the event stream).
-    "scd2_history" -> ((s, d) =>
-      scd2(s, d)
-        .select("user_id", "ver", "event_type", "valid_from", "valid_to",
-          "n_events")
-        .orderBy("user_id", "ver")),
-
-    // Dimension-snapshot join: every event joined to the SCD2 version row
-    // active at its timestamp — the "what did the dimension say THEN"
-    // lookup a warehouse fact load runs against a type-2 dimension. The
-    // join is an equi-join on user_id with the interval predicate as a
-    // post-filter: per-user version counts are bounded (they only grow
-    // with CHANGES, not events), so the fan-out is a small constant — no
-    // banded range join needed at any scale. Every event matches exactly
-    // one version (the intervals tile the timeline by construction).
-    "join_scd2" -> ((s, d) => {
-      val dim = scd2(s, d)
-        .select(col("user_id"), col("ver"), col("event_type").as("dim_type"),
-          col("valid_from"), col("valid_from_id"),
-          col("valid_to"), col("valid_to_id"))
-      // composite (ts, event_id) ordinates: ts-only intervals are empty
-      // when a type change happens inside one timestamp, and the earlier
-      // event would mis-join the successor run (see scd2's Scaladoc)
-      events(s, d).select(col("event_id"), col("user_id"), col("ts"))
-        .join(dim, Seq("user_id"))
-        .filter(
-          struct(col("ts"), col("event_id")) >=
-            struct(col("valid_from"), col("valid_from_id")) &&
-          (col("valid_to") === -1L ||
-            struct(col("ts"), col("event_id")) <
-              struct(col("valid_to"), col("valid_to_id"))))
-        .select(col("event_id"), col("user_id"), col("ver"), col("dim_type"))
-        .orderBy("event_id")
-    }),
-
-    // Integer double-exponential smoothing (Holt's method, α = β = ½) over
-    // per-type hourly counts — the forecasting sibling of the seasonal
-    // baseline below. The recurrence is inherently SEQUENTIAL (level_k
-    // depends on level_{k-1}), which no window frame expresses; the
-    // distributed shape is: hourly rollup (map-side combinable — the only
-    // corpus-sized stage), then ONE bounded array per type (hours per
-    // type, ~10⁴ for a year — the events_top_paths collect class) folded
-    // by the codegen'd `aggregate` HOF. α = ½ keeps every step in exact
-    // BIGINT `div` arithmetic, and Spark's `div` and DuckDB's `//` agree
-    // on negatives (both truncate toward zero — verified; trend goes
-    // negative on any decline), so DuckDB's list_reduce replays the fold
-    // bit-for-bit: its seed-with-first-element semantics is mirrored by
-    // aggregate(slice(arr, 2, n-1), arr[1], ...). Forecast = level+trend.
-    "events_ewma" -> ((s, d) => {
-      val h = events(s, d)
-        .select(col("event_type"),
-          IntMath.floorDiv(col("ts"), NanosPerHour).as("hr"))
-        .groupBy("event_type", "hr").agg(count(lit(1)).as("c"))
-      h.groupBy("event_type")
-        .agg(count(lit(1)).as("n_hours"),
-          sort_array(collect_list(struct(col("hr"),
-            (col("c") * 1000000L).as("l")))).as("sh"))
-        .select(col("event_type"), col("n_hours"), expr(
-          """aggregate(
-            |  slice(transform(sh, e -> struct(e.l AS l, CAST(0 AS BIGINT) AS t)),
-            |        2, size(sh) - 1),
-            |  struct(element_at(sh, 1).l AS l, CAST(0 AS BIGINT) AS t),
-            |  (a, x) -> struct((a.l + x.l) div 2 AS l,
-            |                   (a.t + ((a.l + x.l) div 2 - a.l)) div 2 AS t))"""
-            .stripMargin.replace("\n", " ")).as("r"))
-        .select(col("event_type"), col("n_hours"),
-          col("r.l").as("level_ppm"), col("r.t").as("trend_ppm"),
-          (col("r.l") + col("r.t")).as("forecast_ppm"))
-        .orderBy("event_type")
-    }),
-
-    // Autocorrelation of the per-type hourly series at the bounded lag
-    // grid — the seasonality diagnostic read before trusting the
-    // seasonal/smoothing forecasters; exact DECIMAL moments + the
-    // correctly-rounded IEEE sqrt chain (graft.ops.Acf).
-    "events_acf" -> ((s, d) =>
-      graft.ops.Acf.acf(events(s, d)
-        .select(col("event_type"),
-          IntMath.floorDiv(col("ts"), NanosPerHour).as("hr"))
-        .groupBy("event_type", "hr").agg(count(lit(1)).as("c")))),
-
-    // Index of dispersion (Fano factor) of the hourly series per type —
-    // the burstiness screen beside events_acf: D = Var/Mean of hourly
-    // counts, 1 = Poisson, >1 bursty. Exact integer ppm: the n-1 sample
-    // variance over mean folds to ONE division of exact DECIMAL moments,
-    // D_ppm = (n·Σc² − (Σc)²)·10⁶ DIV ((n−1)·Σc). One corpus-sized
-    // rollup + a type-count-bounded re-aggregate.
-    "events_burstiness" -> ((s, d) =>
-      events(s, d)
-        .select(col("event_type"),
-          IntMath.floorDiv(col("ts"), NanosPerHour).as("hr"))
-        .groupBy("event_type", "hr").agg(count(lit(1)).as("c"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).cast("decimal(38,0)").as("n"),
-          sum(col("c").cast("decimal(38,0)")).as("sc"),
-          sum(col("c").cast("decimal(38,0)") * col("c")).as("qc"))
-        .select(col("event_type"), col("n").cast("long").as("n_hours"),
-          when(col("n") < 2 || col("sc") === 0, 0L)
-            .otherwise(expr(
-              "CAST(((n * qc - sc * sc) * 1000000) DIV ((n - 1) * sc) AS BIGINT)"))
-            .as("dispersion_ppm"))
-        .orderBy("event_type")),
-
-    // User-concentration (Pareto) audit: the share of all events held by
-    // the top 1/5/10/50% most-active users — the 80/20 screen an ops
-    // owner reads before per-user capping. Rank and cumulative event
-    // mass ride the DISTRIBUTED GlobalRank machinery (order: count desc,
-    // user_id — never a partition-less window); shares are exact integer
-    // ppm; the percent grid is a constant broadcast.
-    "events_pareto" -> ((s, d) => {
-      import s.implicits._
-      val uc = events(s, d).groupBy("user_id").agg(count(lit(1)).as("c"))
-        .select(col("user_id"), col("c"), (-col("c")).as("negc"))
-      val cum = graft.ops.GlobalRank.withGlobalPrefixSum(
-        uc, "negc", Seq("user_id"), "c", buckets = graft.ops.GlobalRank.Auto, out = "cumc")
-      val ranked = graft.ops.GlobalRank.withGlobalRowNumber(
-        cum, "negc", Seq("user_id"), buckets = graft.ops.GlobalRank.Auto, out = "rk")
-      val tot = uc.agg(count(lit(1)).as("u"), sum("c").as("tot"))
-      ranked.crossJoin(broadcast(tot)) // 1-row totals
-        .crossJoin(broadcast(Seq(1L, 5L, 10L, 50L).toDF("pct")))
-        .filter(col("rk") === expr("(u * pct + 99) DIV 100"))
-        .select(col("pct"), col("rk").as("n_users"),
-          col("cumc").as("events_cum"),
-          expr("(cumc * 1000000) DIV tot").as("share_ppm"))
-        .orderBy("pct")
-    }),
-
-    // One-sided upper CUSUM change-point monitor (Page 1954) per event
-    // type: s_i = max(0, s_{i-1} + x_i − μ − k) over the hourly series,
-    // slack k = μ/10, alarm when s exceeds H = 5μ — the sustained-shift
-    // detector that complements events_anomaly's per-point z-scores.
-    // Exact integers throughout (milli-count units, DIV); same scale
-    // shape as events_ewma: hourly rollup is the only corpus-sized stage,
-    // then one bounded per-type fold over the calendar-bounded series.
-    "events_cusum" -> ((s, d) => {
-      val h = events(s, d)
-        .select(col("event_type"),
-          IntMath.floorDiv(col("ts"), NanosPerHour).as("hr"))
-        .groupBy("event_type", "hr").agg(count(lit(1)).as("c"))
-      h.groupBy("event_type")
-        .agg(count(lit(1)).as("n_hours"), sum(col("c")).as("tot"),
-          sort_array(collect_list(struct(col("hr"),
-            (col("c") * 1000L).as("v")))).as("sh"))
-        .select(col("event_type"), col("n_hours"),
-          expr("tot * 1000 DIV n_hours").as("mu_milli"), col("sh"))
-        .select(col("event_type"), col("n_hours"), col("mu_milli"), expr(
-          """aggregate(sh,
-            |  struct(CAST(0 AS BIGINT) AS s, CAST(0 AS BIGINT) AS mx,
-            |         CAST(0 AS BIGINT) AS na),
-            |  (a, x) -> struct(
-            |    greatest(CAST(0 AS BIGINT),
-            |             a.s + x.v - mu_milli - mu_milli DIV 10) AS s,
-            |    greatest(a.mx, greatest(CAST(0 AS BIGINT),
-            |             a.s + x.v - mu_milli - mu_milli DIV 10)) AS mx,
-            |    a.na + (CASE WHEN greatest(CAST(0 AS BIGINT),
-            |             a.s + x.v - mu_milli - mu_milli DIV 10)
-            |            > mu_milli * 5 THEN 1 ELSE 0 END) AS na))"""
-            .stripMargin.replace("\n", " ")).as("r"))
-        .select(col("event_type"), col("n_hours"), col("mu_milli"),
-          col("r.s").as("cusum_final"), col("r.mx").as("cusum_max"),
-          col("r.na").as("n_alarms"))
-        .orderBy("event_type")
-    }),
-
-    // Rolling-origin backtest of the Holt smoother: per type, the
-    // one-step-ahead absolute forecast error accumulated INSIDE the same
-    // integer fold (error terms read the PRE-update accumulator — Spark's
-    // aggregate() evaluates every struct field from the old state, unlike
-    // the DuckDB list_reduce rebinding quirk events_ewma documents), vs
-    // the naive last-value forecaster on the same series. The report a
-    // pipeline reads before trusting forecast_ppm: holt_wins says whether
-    // smoothing beats persistence per type, in exact integer MAE ppm.
-    // Same scale shape as events_ewma: hourly rollup, bounded fold.
-    "events_ewma_backtest" -> ((s, d) => {
-      val h = events(s, d)
-        .select(col("event_type"),
-          IntMath.floorDiv(col("ts"), NanosPerHour).as("hr"))
-        .groupBy("event_type", "hr").agg(count(lit(1)).as("c"))
-      h.groupBy("event_type")
-        .agg(count(lit(1)).as("n_hours"),
-          sort_array(collect_list(struct(col("hr"),
-            (col("c") * 1000000L).as("l")))).as("sh"))
-        .select(col("event_type"), col("n_hours"), expr(
-          """aggregate(
-            |  slice(transform(sh, e -> struct(e.l AS l, CAST(0 AS BIGINT) AS t)),
-            |        2, size(sh) - 1),
-            |  struct(element_at(sh, 1).l AS l, CAST(0 AS BIGINT) AS t,
-            |         element_at(sh, 1).l AS p, CAST(0 AS BIGINT) AS eh,
-            |         CAST(0 AS BIGINT) AS en),
-            |  (a, x) -> struct((a.l + x.l) div 2 AS l,
-            |                   (a.t + ((a.l + x.l) div 2 - a.l)) div 2 AS t,
-            |                   x.l AS p,
-            |                   a.eh + abs(a.l + a.t - x.l) AS eh,
-            |                   a.en + abs(a.p - x.l) AS en))"""
-            .stripMargin.replace("\n", " ")).as("r"))
-        .select(col("event_type"), col("n_hours"),
-          expr("CASE WHEN n_hours <= 1 THEN 0L ELSE r.eh div (n_hours - 1) END")
-            .as("mae_holt_ppm"),
-          expr("CASE WHEN n_hours <= 1 THEN 0L ELSE r.en div (n_hours - 1) END")
-            .as("mae_naive_ppm"))
-        .withColumn("holt_wins", col("mae_holt_ppm") < col("mae_naive_ppm"))
-        .orderBy("event_type")
-    }),
-
-    // Seasonal-naive baseline + last-day residuals: per (event_type,
-    // hour-of-day) mean hourly count over all training days (every day
-    // before the last), compared against the last day's actuals. Exact
-    // integer contract: baseline is ppm (count*1e6 div train-day count) so
-    // the residual is replayable bit-for-bit. The hourly rollup is one
-    // map-side-combinable agg; the max-day / day-count stats are 1-row
-    // broadcast cross joins (the repo's scalar-stats pattern), and the
-    // baseline/actual frames are (types x 24)-bounded.
-    "events_seasonal" -> ((s, d) => {
-      val hourly = events(s, d)
-        .select(col("event_type"),
-          IntMath.floorDiv(col("ts"), NanosPerDay).as("day"),
-          pmod(IntMath.floorDiv(col("ts"), NanosPerHour), lit(24L)).as("hod"))
-        .groupBy("event_type", "day", "hod").agg(count(lit(1)).as("c"))
-        .localCheckpoint() // feeds max-day, train-day count, baseline, actual
-      val maxd = hourly.agg(max("day").as("maxd"))
-      val nTrain = hourly.select("day").distinct()
-        .crossJoin(broadcast(maxd))
-        .filter(col("day") < col("maxd"))
-        .agg(count(lit(1)).as("n_train_days"))
-      val base = hourly.crossJoin(broadcast(maxd))
-        .filter(col("day") < col("maxd"))
-        .groupBy("event_type", "hod").agg(sum("c").as("base_cnt"))
-      val actual = hourly.crossJoin(broadcast(maxd))
-        .filter(col("day") === col("maxd"))
-        .groupBy("event_type", "hod").agg(sum("c").as("actual_cnt"))
-      base.join(actual, Seq("event_type", "hod"), "full_outer")
-        .crossJoin(broadcast(nTrain))
-        .select(col("event_type"), col("hod"),
-          coalesce(col("base_cnt"), lit(0L)).as("base_cnt"),
-          col("n_train_days"),
-          // greatest(..., 1): single-day input gives n_train_days = 0 and
-          // base_cnt = 0 — both engines then agree on baseline 0 instead
-          // of diverging (Spark div-by-zero nulls, DuckDB errors)
-          expr("(coalesce(base_cnt, 0) * 1000000) div greatest(n_train_days, 1)")
-            .as("baseline_ppm"),
-          coalesce(col("actual_cnt"), lit(0L)).as("actual_cnt"))
-        .withColumn("resid_ppm",
-          col("actual_cnt") * 1000000L - col("baseline_ppm"))
-        .orderBy("event_type", "hod")
-    }),
-
-    // Small-file compaction planning: simulate a file listing (doc groups
-    // as files, char mass as bytes), assign each file to a compaction bin
-    // by its cumulative START offset div the target bin size — the
-    // deterministic sequential bin-pack every table-maintenance service
-    // runs over manifest listings. The cumulative offset runs on the NEW
-    // distributed prefix sum (GlobalRank.withGlobalPrefixSum — bucketed,
-    // never a single-partition window): at 100 TB a listing is ~10^6
-    // files, and the only driver crossing is the per-bucket sum table.
-    "compaction_plan" -> ((s, d) => {
-      val files = docs(s, d)
-        .select(IntMath.floorDiv(col("doc_id"), CompactDocsPerFile).as("file_id"),
-          col("n_chars"))
-        .groupBy("file_id")
-        .agg(sum("n_chars").as("size_bytes"), count(lit(1)).as("n_docs"))
-      val cum = graft.ops.GlobalRank.withGlobalPrefixSum(
-        files, "file_id", Seq.empty, "size_bytes", buckets = graft.ops.GlobalRank.Auto, out = "cum")
-      cum
-        .withColumn("bin",
-          IntMath.floorDiv(col("cum") - col("size_bytes"), CompactTargetBytes))
-        .groupBy("bin")
-        .agg(count(lit(1)).as("n_files"), sum("size_bytes").as("total_bytes"),
-          min("file_id").as("first_file"), max("file_id").as("last_file"),
-          md5(concat_ws(",", transform(
-            sort_array(collect_list(struct(col("file_id")))),
-            x => x.getField("file_id").cast("string"))).cast("binary"))
-            .as("member_md5"))
-        .orderBy("bin")
-    }),
-
-    // Dominant principal component of the embedding cloud: exact-integer
-    // power iteration on the mean Gram matrix (llm.Pca — corpus read
-    // twice: Gram agg + projection pass; the iteration itself is dim-row
-    // metadata). Output is each vector's 1-D coordinate along the top
-    // direction — the ordering a curriculum/visualization slice consumes.
-    "embedding_pc1" -> ((s, d) =>
-      graft.llm.Pca.projections(s, emb(s, d)).orderBy("vec_id")),
-
-    // LSH recall/precision audit on a bounded sample: exact all-pairs
-    // Jaccard ground truth (quadratic in the SAMPLE only — the audit's
-    // documented contract, same as the ANN recall trio's brute side) vs
-    // the banded candidate set. The go/no-go measurement before a corpus
-    // trusts dedup_minhash's band geometry.
-    "dedup_recall" -> ((s, d) =>
-      Dedup.recallAudit(
-        docs(s, d).filter(col("doc_id") % recallModFor(s, d) === 0),
-        shingleSize = 3, numPerms = 16, numBands = 4,
-        thrPpm = RecallJacPpm)),
-
-    // Mutual-kNN graph over the LSH-bucketed neighbor lists: keep the
-    // edge (a, b) only when each endpoint ranks the other in its top-k —
-    // the standard density-robust graph for clustering/agreement checks.
-    // Same scale shape as similarity_lsh (capped cells, per-query top-k);
-    // the mutuality filter is a self-join of the k·N edge list on the
-    // reversed key, never a new similarity pass.
-    "knn_mutual" -> ((s, d) => {
-      val top = Similarity.lshTopK(emb(s, d), lit(true), k = KnnMutualK,
-          bitsPerBand = lshBitsFor(s, d))
-        .select(col("q_id"), col("n_id"), col("rank"))
-        .localCheckpoint() // both sides of the mutuality self-join
-      top.as("f").join(top.as("g"),
-          col("f.q_id") === col("g.n_id") && col("f.n_id") === col("g.q_id") &&
-            col("f.q_id") < col("f.n_id"))
-        .select(col("f.q_id").as("a"), col("f.n_id").as("b"),
-          col("f.rank").cast("long").as("rank_ab"),
-          col("g.rank").cast("long").as("rank_ba"))
-        .orderBy("a", "b")
-    }),
-
-    // CDC changelog between two state snapshots derived from the SAME
-    // event stream (state = each user's latest event_type; "old" is the
-    // state before the last day, "new" the state now): emit I (user
-    // appeared), U (state changed), = (unchanged) — the change feed a
-    // downstream incremental consumer applies instead of re-reading the
-    // snapshot. Both states are one argmax aggregate (max(struct)) over a
-    // shared hourly-scan frame; the diff is a single left join (new ⊇ old
-    // here — no retractions in an append-only stream, documented).
-    "cdc_changelog" -> ((s, d) => {
-      // REDUCE before the cut: per-(user, day) argmax first — users×days
-      // rows, not the corpus (checkpointing the bare-scan projection
-      // itself would materialize the whole events table for what one
-      // aggregate covers; the GlobalRank bare-scan rule). Day-level
-      // argmax of per-day argmaxes == global argmax, so both states
-      // derive from this one reduced frame.
-      val daily = events(s, d)
-        .select(col("user_id"), IntMath.floorDiv(col("ts"), NanosPerDay).as("day"),
-          col("ts"), col("event_id"), col("event_type"))
-        .groupBy("user_id", "day")
-        .agg(max(struct(col("ts"), col("event_id"), col("event_type"))).as("m"))
-        .localCheckpoint() // feeds max-day + both state aggregates
-      val maxd = daily.agg(max("day").as("maxd"))
-      def latest(df: DataFrame, out: String) = df
-        .groupBy("user_id")
-        .agg(max(col("m")).as("mm"))
-        .select(col("user_id"), col("mm.event_type").as(out))
-      val oldState = latest(
-        daily.crossJoin(broadcast(maxd)).filter(col("day") < col("maxd")),
-        "old_type")
-      val newState = latest(daily, "new_type")
-      newState.join(oldState, Seq("user_id"), "left")
-        .select(col("user_id"),
-          coalesce(col("old_type"), lit("")).as("old_type"), col("new_type"),
-          when(col("old_type").isNull, "I")
-            .when(col("old_type") =!= col("new_type"), "U")
-            .otherwise("=").as("op"))
-        .orderBy("user_id")
-    }),
-
-    // Exact correlation matrix over the lineitem measures: all sums run
-    // in DECIMAL over scaled-integer columns (order-independent), and the
-    // final correlation is a chain of CORRECTLY-ROUNDED IEEE ops on
-    // exactly-agreed inputs (decimal→double cast, *, sqrt, /, round —
-    // sqrt IS correctly rounded per IEEE-754, unlike log/exp), so the
-    // rounded value matches the oracle bit-for-bit. One pass, one
-    // map-side-combinable aggregate per pair via a 6-struct explode.
-    "stats_corr" -> ((s, d) => {
-      val m = lineitem(s, d).select(
-        expr("CAST(round(l_quantity * 100) AS DECIMAL(38,0))").as("q"),
-        expr("CAST(round(l_extendedprice * 100) AS DECIMAL(38,0))").as("p"),
-        expr("CAST(round(l_discount * 10000) AS DECIMAL(38,0))").as("dc"),
-        expr("CAST(round(l_tax * 10000) AS DECIMAL(38,0))").as("tx"))
-      // ONE ungrouped aggregate over the base scan instead of a 6-way
-      // struct explode + 6-group hash agg (opt guide §2.3 "aggregate
-      // before you shuffle" / §1.2 per-task work): the explode inflated
-      // the scan 6x (3.6M struct allocations at sf0.1) to feed 6 groups
-      // whose sums all derive from the same 4 columns. The shared moments
-      // (4 sums, 4 square sums, 6 cross products, 1 count) are computed
-      // in a single pass; the 6 output rows are reshaped from the 1-row
-      // aggregate. Sums are exact DECIMAL — values bit-identical.
-      val vars = Seq("dc", "p", "q", "tx")
-      val aggs =
-        (count(lit(1)).as("n") +:
-          vars.map(v => sum(col(v)).as(s"s_$v"))) ++
-          vars.map(v => sum(col(v) * col(v)).as(s"s_${v}_$v")) ++
-          CorrPairs.map { case (x, y) => sum(col(x) * col(y)).as(s"s_${x}_$y") }
-      val pairRows = CorrPairs.map { case (x, y) =>
-        struct(lit(x).as("xcol"), lit(y).as("ycol"),
-          col(s"s_$x").as("sx"), col(s"s_$y").as("sy"),
-          col(s"s_${x}_$y").as("sxy"),
-          col(s"s_${x}_$x").as("sxx"), col(s"s_${y}_$y").as("syy"))
-      }
-      m.agg(aggs.head, aggs.tail: _*)
-        .select(col("n"), explode(array(pairRows: _*)).as("t"))
-        .select(col("t.xcol").as("xcol"), col("t.ycol").as("ycol"), col("n"),
-          round(
-            (col("n") * col("t.sxy") - col("t.sx") * col("t.sy")).cast("double") /
-              sqrt((col("n") * col("t.sxx") - col("t.sx") * col("t.sx")).cast("double") *
-                (col("n") * col("t.syy") - col("t.sy") * col("t.sy")).cast("double")),
-            6).as("corr_r"))
-        .orderBy("xcol", "ycol")
-    }),
-
-    // Per-type OLS trend of event value (cents) against event hour: the
-    // closed-form regression every metrics pipeline runs for drift lines.
-    // Same exactness contract as stats_corr: all five sums accumulate in
-    // DECIMAL over scaled integers (order-independent, map-side
-    // combinable), and slope/intercept are single correctly-rounded double
-    // divisions of exact integer numerators/denominators — bit-equal to
-    // the oracle. x is hours since 2024-01-01 so the sums stay far from
-    // the 2^53 double-cast edge. One hash aggregate; no shuffle beyond it.
-    "stats_linreg" -> ((s, d) => graft.ops.Stats.linreg(events(s, d))),
-
-    // Welch's t for every type pair — the A/B-test primitive on exact
-    // DECIMAL moments (graft.ops.Stats.welchPairs); one corpus aggregate,
-    // then a #types^2 join of a #types-row frame.
-    "stats_ttest" -> ((s, d) => graft.ops.Stats.welchPairs(events(s, d))),
-
-    // One-way ANOVA F across all event types — the k-group screen run
-    // BEFORE stats_ttest's k² pairwise tests. Per-type between-group terms
-    // are per-group-truncated integer micro-units (the stats_chisq trick),
-    // so both sums of squares are exact and F is one correctly-rounded
-    // double division (graft.ops.Stats.anovaTypes).
-    "stats_anova" -> ((s, d) => graft.ops.Stats.anovaTypes(events(s, d))),
-
-    // Kruskal-Wallis H — stats_anova's rank-based twin for heavy-tailed
-    // values: tie-averaged ranks on the distributed prefix sum, the
-    // tie-corrected H folded to ONE exact-decimal division
-    // (graft.ops.Stats.kruskalTypes).
-    "stats_kruskal" -> ((s, d) => graft.ops.Stats.kruskalTypes(events(s, d))),
-
-    // Oracle-drift canary: constants-only probes of every cross-engine
-    // semantic the determinism contracts lean on (integer DIV, DECIMAL/
-    // HUGEINT width, IEEE sqrt, round-half, md5-prefix hash, NFC). Goes
-    // red ONLY when an engine upgrade shifts semantics — the loud alarm
-    // the events_ewma list_reduce quirk motivated (graft.ops.OracleCanary;
-    // the pinned oracle version is recorded in TESTDATA.md).
-    "oracle_canary" -> ((s, _) => graft.ops.OracleCanary.probes(s)),
-
-    // Pearson chi-square independence of event_type x hour-of-day (exact
-    // integer chi-square-micro with per-cell truncation so the sum is
-    // partition-order-free; graft.ops.Stats.chisqTypeHour).
-    "stats_chisq" -> ((s, d) => graft.ops.Stats.chisqTypeHour(events(s, d))),
-
-    // Deterministic Poisson-bootstrap CI of the per-type mean value: the
-    // error bars a metrics pipeline should publish next to every mean,
-    // with the resample draw a portable hash so the interval is a pure
-    // function of the data (graft.ops.Bootstrap).
-    "stats_bootstrap" -> ((s, d) =>
-      graft.ops.Bootstrap.meanCi(
-        events(s, d).select(col("event_type"), col("event_id"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("cents")),
-        "event_type", "event_id")),
-
-    // Exact distributed AUC (Mann-Whitney U with tie-averaged ranks):
-    // does the cheap composite quality score rank documents the way the
-    // full published Gopher gate decides them? — the ranking-eval
-    // primitive every model/filter score needs at corpus scale, posed as
-    // the real pipeline question ("can I threshold the proxy and skip the
-    // gate?"). No window, no theta join: GlobalRank assigns distributed
-    // row numbers ordered by (score, doc_id); ties are contiguous, so the
-    // tie-averaged rank sum is Σ pos(s)·(min_rnk + max_rnk) / 2, kept as
-    // the INTEGER 2U until one final correctly-rounded division.
-    "eval_auc" -> ((s, d) => {
-      // label AND score fused into ONE text pass: Gopher.gates is a pure
-      // projection with a carry seam, so the proxy score computes from
-      // the carried text in the same chain — no second parquet scan, no
-      // doc_id join (the corpus_admit_published fusion, opt guide §2.4;
-      // inner-join-on-doc_id of two 1-row-per-doc frames == projection).
-      val withQ = graft.llm.Gopher.gates(docs(s, d), carry = Seq("text"))
-        .select(col("doc_id"), TA.qualityScore(col("text")).as("q"),
-          when(col("gopher_pass"), 1L).otherwise(0L).as("label"))
-        .select(col("doc_id"),
-          expr("CAST(round(q * 1000000) AS BIGINT)").as("score_ppm"),
-          col("label"), lit("all").as("g"))
-        // checkpointed HERE, not left to GlobalRank's input cut: the fused
-        // frame is scan+projections only, so isBareScan would skip the cut
-        // and re-run the gates+score text pass in every rank consumer
-        // (measured 1.19x ABAB without this; 8 parquet scans in-plan).
-        // The constant group key "g" sits BELOW the checkpoint so it
-        // reaches GlobalRank as an opaque attribute — as a foldable
-        // literal its group joins constant-fold to cond=true nested-loop
-        // joins (the cartesian-sweep guard catches exactly that).
-        .localCheckpoint()
-      val ranked = graft.ops.GlobalRank.withGroupedRowNumber(
-        withQ, "g", "score_ppm", Seq("doc_id"),
-        buckets = graft.ops.GlobalRank.Auto, out = "rnk", outN = "n_all")
-      ranked.groupBy("score_ppm")
-        .agg(sum(col("label")).as("pos"), count(lit(1)).as("cnt"),
-          min(col("rnk")).as("lo"), max(col("rnk")).as("hi"))
-        .agg(sum(col("pos")).as("n_pos"),
-          sum(col("cnt") - col("pos")).as("n_neg"),
-          sum(col("pos") * (col("lo") + col("hi"))).as("r2"))
-        .select(col("n_pos"), col("n_neg"),
-          (col("r2") - col("n_pos") * (col("n_pos") + 1)).as("u2"))
-        // one-class corpus guard (n_pos or n_neg 0): AUC undefined -> 0
-        .select(col("n_pos"), col("n_neg"), col("u2"),
-          when(col("n_pos") * col("n_neg") === 0, 0.0)
-            .otherwise(round(col("u2").cast("double") /
-              (col("n_pos") * col("n_neg") * 2).cast("double"), 6)).as("auc_r"))
-    }),
-
-    // Entity resolution over the relational customer table: deterministic
-    // dirty-variant synthesis -> (nation, name-suffix) blocking ->
-    // in-block levenshtein verify, with same_entity ground truth so the
-    // key audits the rule's precision. Block-bounded equi-join, never
-    // all-pairs (graft.ops.Linkage).
-    "er_blocking" -> ((s, d) =>
-      graft.ops.Linkage.blockedPairs(Tables.customer(s, d))),
-
-    // ER consolidation: match pairs -> distributed star-CC -> one entity
-    // id per record (unmatched records stand alone). Completes the
-    // linkage pipeline: block -> verify -> consolidate.
-    "er_entities" -> ((s, d) =>
-      graft.ops.Linkage.entities(Tables.customer(s, d))),
-
-    // ER rule quality: precision/recall of the blocking + edit-2 rule
-    // against the synthesized ground truth, in exact ppm. Recall's
-    // denominator is the true variant count from the base table (a
-    // blocking MISS never produces a pair row, so it must be counted
-    // from the source, not from the candidate set).
-    "er_quality" -> ((s, d) => {
-      val pairs = graft.ops.Linkage.blockedPairs(Tables.customer(s, d))
-        .agg(sum(when(col("is_match") && col("same_entity"), 1L).otherwise(0L)).as("tp"),
-          sum(when(col("is_match") && !col("same_entity"), 1L).otherwise(0L)).as("fp"))
-      val truth = Tables.customer(s, d)
-        .filter(pmod(col("c_custkey"), lit(graft.ops.Linkage.VariantMod)) === 0)
-        .agg(count(lit(1)).as("n_true"))
-      // guarded ppm divisions: Spark div-by-zero nulls where DuckDB //
-      // errors (the events_seasonal engine-divergence note)
-      pairs.crossJoin(broadcast(truth)) // 1-row totals
-        .select(col("tp"), col("fp"),
-          (col("n_true") - col("tp")).as("fn"), col("n_true"),
-          when(col("tp") + col("fp") === 0, 0L)
-            .otherwise(expr("tp * 1000000 DIV (tp + fp)")).as("precision_ppm"),
-          when(col("n_true") === 0, 0L)
-            .otherwise(expr("tp * 1000000 DIV n_true")).as("recall_ppm"))
-    }),
-
-    // Suppression-gated release: per coarse QID cell, publish exact stats
-    // only when the cell clears the k threshold; suppressed cells ship -1
-    // sentinels (never their true size — publishing the size IS the
-    // leak). The release gate a pipeline applies after the k_anonymity
-    // audit says which cells are safe. One hash agg + a narrow gate
-    // projection; balance kept in exact cents.
-    "k_anonymity_release" -> ((s, d) => {
-      val g = Tables.customer(s, d)
-        .groupBy("c_nationkey", "c_mktsegment")
-        .agg(count(lit(1)).as("k_size"),
-          sum(expr("CAST(round(c_acctbal * 100) AS DECIMAL(38,0))")).as("bal"))
-      g.select(col("c_nationkey"), col("c_mktsegment"),
-          when(col("k_size") >= KAnonRiskK, 1).otherwise(0).as("released"),
-          when(col("k_size") >= KAnonRiskK, col("k_size")).otherwise(-1L).as("n_out"),
-          when(col("k_size") >= KAnonRiskK, col("bal").cast("long"))
-            .otherwise(-1L).as("bal_cents"))
-        .orderBy("c_nationkey", "c_mktsegment")
-    }),
-
-    // Winsorized per-type value stats: clamp to the exact rank-based
-    // [p05, p95] (nearest-lower-rank, the quality_report definition) and
-    // aggregate in exact cents — the robust mean that heavy one-off
-    // purchases can't drag. Grouped rank runs on GlobalRank's 3-pass
-    // distributed shape; the clamp bounds are a |types|×2 broadcast.
-    "agg_winsorized" -> ((s, d) => {
-      val e = events(s, d).select(col("event_id"), col("event_type"),
-        expr("CAST(round(value * 100) AS BIGINT)").as("v"))
-      val ranked = graft.ops.GlobalRank.withGroupedRowNumber(
-          e, "event_type", "v", Seq("event_id"), buckets = graft.ops.GlobalRank.Auto,
-          out = "rnk", outN = "n_g")
-        .localCheckpoint() // feeds the bound lookup AND the clamp pass
-      // renamed key: targets derives from `ranked`, so a same-name join
-      // condition would resolve to the self-referential trivial predicate
-      val targets = ranked.select("event_type", "n_g").distinct()
-        .select(col("event_type").as("et"), col("n_g"),
-          (expr("((n_g - 1) * 5) div 100") + 1).as("rnk_lo"),
-          (expr("((n_g - 1) * 95) div 100") + 1).as("rnk_hi"))
-      val lo = ranked.join(broadcast(targets),
-          col("event_type") === col("et") && col("rnk") === col("rnk_lo"))
-        .select(col("event_type"), col("v").as("lo"))
-      val hi = ranked.join(broadcast(targets),
-          col("event_type") === col("et") && col("rnk") === col("rnk_hi"))
-        .select(col("event_type"), col("v").as("hi"))
-      ranked.join(broadcast(lo), Seq("event_type"))
-        .join(broadcast(hi), Seq("event_type"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"), min("lo").as("lo_cents"),
-          min("hi").as("hi_cents"),
-          sum(greatest(col("lo"), least(col("hi"), col("v")))).as("wsum_cents"))
-        .withColumn("wmean_milli", expr("(wsum_cents * 1000) div n"))
-        .orderBy("event_type")
-    }),
-
-    // Data-contract validation report: referential integrity (orphan
-    // facts), domain ranges, enum membership, emptiness — each check one
-    // tiny aggregate over a pruned scan, unioned into the (check,
-    // violations) frame a load gate asserts on. Anti-joins are the
-    // scale-safe orphan shape (broadcast or shuffled by the optimizer,
-    // never a collected id set).
-    "dq_report" -> ((s, d) => {
-      val s1 = lineitem(s, d).select(col("l_orderkey"))
-        .join(orders(s, d).select(col("o_orderkey")),
-          col("l_orderkey") === col("o_orderkey"), "left_anti")
-        .agg(count(lit(1)).as("n_violations"))
-        .select(lit("lineitem_orphan_order").as("check_name"), col("n_violations"))
-      val s2 = orders(s, d).select(col("o_custkey"))
-        .join(Tables.customer(s, d).select(col("c_custkey")),
-          col("o_custkey") === col("c_custkey"), "left_anti")
-        .agg(count(lit(1)).as("n_violations"))
-        .select(lit("order_orphan_customer").as("check_name"), col("n_violations"))
-      val s3 = lineitem(s, d)
-        .filter(col("l_discount") < 0.0 || col("l_discount") > 1.0 ||
-          col("l_tax") < 0.0 || col("l_quantity") <= 0.0)
-        .agg(count(lit(1)).as("n_violations"))
-        .select(lit("lineitem_domain").as("check_name"), col("n_violations"))
-      val s4 = events(s, d)
-        .filter(!col("event_type").isin(EventTypeEnum: _*))
-        .agg(count(lit(1)).as("n_violations"))
-        .select(lit("event_type_enum").as("check_name"), col("n_violations"))
-      val s5 = docs(s, d)
-        .filter(col("n_chars") <= 0 || col("text") === "")
-        .agg(count(lit(1)).as("n_violations"))
-        .select(lit("doc_empty").as("check_name"), col("n_violations"))
-      s1.unionAll(s2).unionAll(s3).unionAll(s4).unionAll(s5)
-        .orderBy("check_name")
-    }),
-
-    // Degree distribution of the co-purchase graph: the pre-flight
-    // diagnostic that sizes triangle/wedge work (wedge count is Σdeg²)
-    // before graph_triangles commits to it. Same canonical edge build,
-    // then two tiny aggs — no wedge join.
-    // Degree assortativity of the co-purchase graph (Newman r over both
-    // edge orientations — symmetric marginals, so the correlation is
-    // sqrt-free): the one-number structure screen beside the degree
-    // histogram (graft.ops.Assortativity).
-    "graph_assortativity" -> ((s, d) =>
-      graft.ops.Assortativity.degreeCorr(coPurchaseCanon(s, d))),
-
-    // Rich-club coefficient over the doubling degree-threshold grid —
-    // how completely the hub set is wired, assortativity's structural
-    // complement; exact integer ppm density per threshold, edge stream
-    // multiplied only by the constant grid (graft.ops.RichClub).
-    "graph_rich_club" -> ((s, d) =>
-      graft.ops.RichClub.richClub(coPurchaseCanon(s, d))),
-
-    "graph_degree_dist" -> ((s, d) => {
-      val canon = coPurchaseCanon(s, d)
-        .localCheckpoint() // both degree-union branches read the pairing join once
-      canon.select(col("a").as("node"))
-        .unionAll(canon.select(col("b").as("node")))
-        .groupBy("node").agg(count(lit(1)).as("deg"))
-        .groupBy("deg").agg(count(lit(1)).as("n_nodes"))
-        .orderBy("deg")
-    }),
-
-    // Multi-source BFS blast radius over the co-purchase graph: hop
-    // distance from the deterministic "recalled part" set (p_partkey %
-    // 997 == 0) to every reachable part, reported as the layer histogram.
-    // Level-synchronous frontier expansion, per-round checkpoint cuts,
-    // bounded maxHops in the contract (graft.ops.Bfs).
-    "graph_bfs" -> ((s, d) => {
-      val li = lineitem(s, d)
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-        .distinct().localCheckpoint()
-      val edges = li.as("l").join(li.as("r"),
-          col("l.ok") === col("r.ok") && col("l.pk") < col("r.pk"))
-        .select(col("l.pk").as("src"), col("r.pk").as("dst"))
-      val canon = graft.ops.Triangles.canonical(edges, "src", "dst")
-        .localCheckpoint()
-      val sources = Tables.part(s, d)
-        .filter(pmod(col("p_partkey"), lit(997L)) === 0)
-        .select(col("p_partkey").as("node"))
-      graft.ops.Bfs.layerHistogram(canon, sources, maxHops = 4)
-    }),
-
-    // Bounded-radius harmonic centrality of the 4 smallest recall seeds
-    // over the co-purchase graph — "how central is this part within 4
-    // hops", the disconnected-safe centrality (unreachable nodes score 0
-    // instead of degenerating closeness). One multi-source-TAGGED BFS:
-    // the frontier carries the seed id, so k seeds cost one distributed
-    // join per round, never k driver BFS runs; the seed cap and radius
-    // are the contract (graft.ops.Bfs.harmonic).
-    "graph_closeness" -> ((s, d) => {
-      val canon = coPurchaseCanon(s, d)
-        .localCheckpoint() // consumed by every BFS round (multi-action)
-      val sources = Tables.part(s, d)
-        .filter(pmod(col("p_partkey"), lit(997L)) === 0)
-        .select(col("p_partkey").as("node"))
-        .orderBy("node").limit(ClosenessSeeds) // k-bounded seed contract
-      graft.ops.Bfs.harmonic(canon, sources, maxHops = 4)
-    }),
-
-    // Top-k most-similar customer pairs by neighborhood Jaccard over the
-    // customer→part purchase relation (witness = part), hub witnesses
-    // excluded (the quadratic cell) — see graft.ops.Jaccard for the cap
-    // semantics.
-    "graph_jaccard" -> ((s, d) => {
-      val adj = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
-        .join(lineitem(s, d).select(col("l_orderkey"), col("l_partkey")),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").as("u"), col("l_partkey").as("w"))
-        .distinct()
-      graft.ops.Jaccard.similarPairs(adj)
-    }),
-
-    // Reliability table + ECE for the same proxy-vs-gate pair as
-    // eval_auc: decile bins of the quality score vs the observed Gopher
-    // pass rate, every cell exact-integer (mean/rate in ppm via DIV), and
-    // the expected calibration error as the n-weighted |rate − mean|
-    // attached through a 1-row broadcast. One doc-keyed join + two
-    // bounded aggregates — nothing corpus-sized past the first shuffle.
-    "eval_calibration" -> ((s, d) => {
-      // one fused text pass (the eval_auc fusion — gates carry seam)
-      val t = graft.llm.Gopher.gates(docs(s, d), carry = Seq("text"))
-        .select(col("doc_id"), TA.qualityScore(col("text")).as("q"),
-          when(col("gopher_pass"), 1L).otherwise(0L).as("label"))
-        .select(col("doc_id"),
-          expr("CAST(round(q * 1000000) AS BIGINT)").as("score_ppm"),
-          col("label"))
-      val bins = t.groupBy(expr("score_ppm DIV 100000").as("bin"))
-        .agg(count(lit(1)).as("n"), sum(col("label")).as("n_pos"),
-          sum(col("score_ppm")).as("s_sum"))
-        .select(col("bin"), col("n"), col("n_pos"),
-          expr("s_sum DIV n").as("mean_score_ppm"),
-          expr("n_pos * 1000000 DIV n").as("pos_rate_ppm"))
-        .withColumn("dev",
-          col("n") * abs(col("pos_rate_ppm") - col("mean_score_ppm")))
-        .localCheckpoint() // ~10 rows feed BOTH the ECE and the output
-      val ece = bins.agg(sum("n").as("nt"), sum("dev").as("dt"))
-        .select(expr("dt DIV nt").as("ece_ppm"))
-      bins.drop("dev").crossJoin(broadcast(ece)) // 1-row summary
-        .orderBy("bin")
-    }),
-
-    // Exact precision/recall curve of the proxy score against the Gopher
-    // gate (eval_auc's pair): one point per DISTINCT score threshold t —
-    // predict positive iff score ≥ t, tp/n_pred from cumulative sums over
-    // the DISTINCT-SCORE frame, which is value-bounded (score_ppm ∈
-    // [0, 10⁶]) so the partition-less cumulative window runs over ≤ 10⁶+1
-    // rows at ANY corpus size (the vocab_growth bounded-axis precedent).
-    // The curve is what picks the production threshold; AUC compresses it
-    // to one number, calibration bins it — this is the full object.
-    "eval_pr_curve" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      // one fused text pass (the eval_auc fusion — gates carry seam)
-      val cells = graft.llm.Gopher.gates(docs(s, d), carry = Seq("text"))
-        .select(col("doc_id"), TA.qualityScore(col("text")).as("q"),
-          when(col("gopher_pass"), 1L).otherwise(0L).as("label"))
-        .select(col("doc_id"),
-          expr("CAST(round(q * 1000000) AS BIGINT)").as("score_ppm"),
-          col("label"))
-        .groupBy("score_ppm")
-        .agg(sum(col("label")).as("pos"), count(lit(1)).as("cnt"))
-        .localCheckpoint() // bounded frame feeds the window AND the total
-      val w = Window.orderBy(col("score_ppm").desc)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val tot = cells.agg(sum("pos").as("p_all"))
-      cells
-        .withColumn("tp", sum("pos").over(w))
-        .withColumn("n_pred", sum("cnt").over(w))
-        .crossJoin(broadcast(tot)) // 1-row total
-        .select(col("score_ppm"), col("n_pred"), col("tp"),
-          expr("tp * 1000000 DIV n_pred").as("precision_ppm"), // n_pred ≥ 1
-          // one-class guard: no positives -> recall pinned 0 (Spark div
-          // NULLs on 0 where DuckDB // errors — the divergence registry)
-          when(col("p_all") === 0, 0L)
-            .otherwise(expr("tp * 1000000 DIV p_all")).as("recall_ppm"))
-        .orderBy(col("score_ppm").desc)
-    }),
-
-    // l-diversity audit: k-anonymity's complement — a cell can be large
-    // (k-safe) yet expose everyone's sensitive value if that value is
-    // CONSTANT within the cell. Per QID cell, count distinct sensitive
-    // values; report the diversity histogram + the at-risk flag (l below
-    // threshold). Same two-hash-agg scale shape as k_anonymity.
-    "l_diversity" -> ((s, d) => {
-      val cells = Tables.customer(s, d)
-        .select(col("c_nationkey"),
-          floor(col("c_acctbal") / 1000.0).cast("long").as("bal_bin"),
-          col("c_mktsegment"))
-        .groupBy("c_nationkey", "bal_bin")
-        .agg(countDistinct(col("c_mktsegment")).as("l_distinct"),
-          count(lit(1)).as("cell_n"))
-      cells.groupBy("l_distinct")
-        .agg(count(lit(1)).as("n_cells"), sum("cell_n").as("n_users"))
-        .select(col("l_distinct"), col("n_cells"), col("n_users"),
-          when(col("l_distinct") < LDiversityL, 1).otherwise(0).as("at_risk"))
-        .orderBy("l_distinct")
-    }),
-
-    // k-core of the co-purchase graph: fixed-round iterative peeling
-    // (ops.KCore — degree agg + semi-join filter per round, lineage cut
-    // per round, one count per round as loop control). The round budget
-    // is part of the contract — the `converged` flag proves the budget
-    // reached the true fixpoint rather than assuming it, and the oracle
-    // replays the identical rounds as chained CTEs.
-    "graph_kcore" -> ((s, d) => {
-      val canon = coPurchaseCanon(s, d)
-        .localCheckpoint() // consumed by every peel round (multi-action)
-      graft.ops.KCore.core(canon, k = KCoreK, rounds = KCoreRounds)
-        .orderBy("node")
-    }),
-
-    // Deterministic train/val/test assignment: the seeded hash gate
-    // (sample_stratified's reproducible-slice contract) split at
-    // 90/5/5 ppm boundaries, reported as per-split doc/token mass —
-    // the split manifest a training run pins before anything else.
-    // Stateless per-row gate: any worker, any partitioning, any rerun
-    // lands every doc in the same split.
-    "corpus_split" -> ((s, d) =>
-      docs(s, d)
-        .select(col("doc_id"), size(TA.tokens(col("text"))).cast("long").as("n_tok"),
-          splitOf(col("doc_id")).as("split"))
-        .groupBy("split")
-        .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("n_tokens"))
-        .orderBy("split")),
-
-    // Domain-disjoint corpus split: hash the CANONICAL HOST, not the doc
-    // id, so every page of a site lands in ONE split — the leakage-safe
-    // split discipline (near-identical pages cluster within domains, and
-    // an id-hash split scatters them across train/eval — exactly the
-    // contamination split_leak_audit measures). Report: per-split
-    // doc/domain/token mass plus the global domain count, so disjointness
-    // is checkable in-row (Σ n_domains = domains_total). One scan: the
-    // tokenize + URL-regex pass is checkpointed and feeds both the split
-    // aggregate and the 1-row total broadcast.
-    "split_domain_disjoint" -> ((s, d) => {
-      val base = docs(s, d).select(col("doc_id"),
-          size(TA.tokens(col("text"))).cast("long").as("n_tok"),
-          graft.llm.Url.canonicalHost(
-            graft.llm.Url.syntheticUrl(col("doc_id"), col("source"))).as("domain"))
-        .withColumn("split", splitOfKey(col("domain")))
-        .localCheckpoint()
-      val tot = base.agg(countDistinct("domain").as("domains_total"))
-      base.groupBy("split")
-        .agg(count(lit(1)).as("n_docs"),
-          countDistinct("domain").as("n_domains"),
-          sum("n_tok").as("n_tokens"))
-        .crossJoin(broadcast(tot)) // 1-row totals broadcast
-        .orderBy("split")
-    }),
-
-    // Temporal train/test split + user-leak audit: cutoff at 80% of the
-    // observed hour span (two scalar aggregates broadcast back — no
-    // quantile pass), then per-split exact stats and the count of users
-    // appearing on BOTH sides (the leakage a user-level forecasting eval
-    // must know about). Scale shape: one min/max aggregate, one
-    // user-keyed aggregate for the overlap, one split aggregate; the
-    // 1-row totals ride broadcast cross joins.
-    "split_temporal" -> ((s, d) => {
-      val hr = graft.expr.IntMath.floorDiv(col("ts"), 3600L * 1000000000L)
-      val e = events(s, d).select(col("user_id"), hr.as("hr"),
-        expr("CAST(round(value * 100) AS DECIMAL(38,0))").as("cents"))
-      val span = e.agg(min("hr").as("h0"), max("hr").as("h1"))
-        .select(expr("h0 + (h1 - h0) * 8 DIV 10").as("cut"))
-      val tagged = e.crossJoin(broadcast(span))
-        .select(col("user_id"), col("cents"),
-          when(col("hr") <= col("cut"), "train").otherwise("test").as("split"))
-        .localCheckpoint() // feeds the split stats AND the overlap audit
-      val overlap = tagged.groupBy("user_id")
-        .agg(max(when(col("split") === "train", 1).otherwise(0)).as("in_train"),
-          max(when(col("split") === "test", 1).otherwise(0)).as("in_test"))
-        .agg(count(lit(1)).as("users_total"),
-          sum(expr("in_train * in_test")).cast("long").as("users_both"))
-        .select(col("users_total"), col("users_both"),
-          when(col("users_total") === 0, 0L)
-            .otherwise(expr("CAST(users_both * 1000000 DIV users_total AS BIGINT)"))
-            .as("overlap_ppm"))
-      tagged.groupBy("split")
-        .agg(count(lit(1)).as("n_events"),
-          countDistinct(col("user_id")).as("n_users"),
-          sum(col("cents")).cast("long").as("sum_cents"))
-        .crossJoin(broadcast(overlap)) // 1-row audit totals
-        .orderBy("split")
-    }),
-
-    // Split-leak audit: verified near-dup pairs (jac ≥ 0.5, the
-    // dedup_verified machinery) that CROSS the split boundary — the eval
-    // contamination a held-out set silently inherits when near-dups of
-    // training docs land in val/test. The split column derives from
-    // doc_id alone, so the assignment join is a pruned 1-column scan;
-    // pair volume is the near-dup count, never a new quadratic surface.
-    "split_leak_audit" -> ((s, d) => {
-      val sp = docs(s, d).select(col("doc_id"), splitOf(col("doc_id")).as("split"))
-      verifiedPairs(s, d)
-        .join(sp.select(col("doc_id").as("a"), col("split").as("split_a")), Seq("a"))
-        .join(sp.select(col("doc_id").as("b"), col("split").as("split_b")), Seq("b"))
-        .filter(col("split_a") =!= col("split_b"))
-        .select(col("a"), col("b"), col("split_a"), col("split_b"), col("jac_r"))
-        .orderBy("a", "b")
-    }),
-
-    // Embedding-level split-leak audit — the semantic complement of
-    // split_leak_audit: lexical jaccard misses paraphrase contamination,
-    // so this reports near-dup VECTOR pairs (cos >= 0.4, the same
-    // LSH-verified edge set as embedding_neardup) that straddle the
-    // train/val/test split. Same deterministic phash split rule as the
-    // document keys, applied to vec_id; pair volume is the near-dup edge
-    // count — no new quadratic surface.
-    "split_leak_semantic" -> ((s, d) => {
-      val sp = emb(s, d).select(col("vec_id"), splitOf(col("vec_id")).as("split"))
-      Similarity.nearDupPairs(emb(s, d), 0.4, bitsPerBand = lshBitsFor(s, d))
-        .join(sp.select(col("vec_id").as("a"), col("split").as("split_a")), Seq("a"))
-        .join(sp.select(col("vec_id").as("b"), col("split").as("split_b")), Seq("b"))
-        .filter(col("split_a") =!= col("split_b"))
-        .select(col("a"), col("b"), col("split_a"), col("split_b"), col("cos_r"))
-        .orderBy("a", "b")
-    }),
-
-    // Sparse lexical retrieval, tf-idf flavor: inverted-index top-k over
-    // per-doc top-M discriminative-term postings (llm.Sparse — rational
-    // ppm idf, decimal-exact pair sums; the WAND-style top-M +
-    // discrimination-cap gates bound the postings join at any corpus).
-    // The lexical complement of the dense similarity_* family.
-    "sparse_topk" -> ((s, d) =>
-      graft.llm.Sparse.topK(docs(s, d), col("doc_id") % 20 === 0, k = 5)
-        .orderBy("q_id", "rnk")),
-
-    // BM25 variant: same postings and join geometry, per-term weight
-    // saturated by the classic k1/b length normalization in
-    // scaled-integer arithmetic (no float log anywhere).
-    "bm25_topk" -> ((s, d) =>
-      graft.llm.Sparse.bm25TopK(docs(s, d), col("doc_id") % 20 === 0, k = 5)
-        .orderBy("q_id", "rnk")),
-
-    // Recall@k audit of the GATED sparse index (top-M + df cap + posting
-    // cap) against the ungated exact tf-idf ranking — completes the
-    // recall dashboard symmetry with the dense trio (similarity_recall*).
-    // The exact side ranks the whole corpus per query (that IS the ground
-    // truth), so the QUERY sample must be corpus-size-independent:
-    // `recallModFor` admits ~100 docs at any scale (the dedup_recall
-    // lesson — a proportional %20 sample made the exact side quadratic,
-    // measured as a 10-minute-plus stall at the 10× flat-vocab replica).
-    // Total exact cost: bounded sample × corpus = linear.
-    "sparse_recall" -> ((s, d) => {
-      val isQ = col("doc_id") % recallModFor(s, d) === 0
-      // ONE tokenize+explode+tf pass feeds BOTH retrieval sides (opt
-      // guide §2.4 / §1.2): exact and gated previously each rebuilt the
-      // (doc, term, tf) frame from the raw text — the heaviest stage of
-      // the key — before diverging into their own idf/posting shapes.
-      val tf = graft.llm.Sparse.tfFrame(docs(s, d)).localCheckpoint()
-      val exact = graft.llm.Sparse.exactTopKFromTf(tf, isQ, k = 5)
-        .select(col("q_id"), col("n_id"))
-      val retrieved = graft.llm.Sparse.topKFromTf(tf, isQ, k = 5)
-        .select(col("q_id").as("r_q"), col("n_id").as("r_n"))
-      exact.join(retrieved,
-          col("q_id") === col("r_q") && col("n_id") === col("r_n"), "left")
-        .groupBy("q_id")
-        .agg(count(lit(1)).as("k_exact"), count(col("r_n")).as("n_hits"))
-        .select(col("q_id"), col("n_hits"),
-          round(col("n_hits").cast("double") / col("k_exact"), 6).as("recall_r"))
-        .orderBy("q_id")
-    }),
-
-    // Hybrid retrieval: reciprocal-rank fusion of the dense (LSH cosine)
-    // and sparse (tf-idf postings) top-k lists — the standard
-    // dense+lexical search pattern, in exact integer arithmetic
-    // (rrf_ppm = 1e6 div (60 + rank), summed; -1 sentinels mark a hit
-    // found by only one retriever). Both inputs are the existing
-    // scale-shaped retrievers; fusion itself is a k-bounded full join.
-    "hybrid_topk" -> ((s, d) => {
-      val dense = Similarity.lshTopK(emb(s, d), col("vec_id") % 20 === 0,
-          k = 5, bitsPerBand = lshBitsFor(s, d))
-        .select(col("q_id"), col("n_id"), col("rank").cast("long").as("rank_d"))
-      val sparse = graft.llm.Sparse.topK(docs(s, d), col("doc_id") % 20 === 0, k = 5)
-        .select(col("q_id"), col("n_id"), col("rnk").as("rank_s"))
-      val fused = dense.join(sparse, Seq("q_id", "n_id"), "full_outer")
-        .select(col("q_id"), col("n_id"),
-          (coalesce(expr("1000000 div (60 + rank_d)"), lit(0L)) +
-            coalesce(expr("1000000 div (60 + rank_s)"), lit(0L))).as("rrf_ppm"),
-          coalesce(col("rank_d"), lit(-1L)).as("rank_d"),
-          coalesce(col("rank_s"), lit(-1L)).as("rank_s"))
-      val w = Window.partitionBy("q_id").orderBy(col("rrf_ppm").desc, col("n_id"))
-      fused.withColumn("rnk", row_number().over(w).cast("long"))
-        .filter(col("rnk") <= 3)
-        .orderBy("q_id", "rnk")
-    }),
-
-    // t-closeness over the k_anonymity quasi-identifier cells: total
-    // variation distance between each cell's sensitive-attribute
-    // (mktsegment) distribution and the global one, completing the
-    // k-anonymity / l-diversity / t-closeness release-audit trio. The
-    // absent-value terms fold algebraically —
-    //   Σ_v |cnt_v·N − g_v·n_c|  =  Σ_{v present} (|cnt·N − g_v·n_c| − g_v·n_c) + n_c·N
-    // — so no cell×value cross join ever materializes: the plan is one
-    // shuffle on the cell key (the window and the final aggregate share
-    // it), a 5-row broadcast of global value counts, and a 1-row total.
-    // DECIMAL(38,0) for the ppm ratio: n_c·N overflows BIGINT at
-    // warehouse scale.
-    "t_closeness" -> ((s, d) => {
-      val q = Tables.customer(s, d)
-        .select(col("c_nationkey"),
-          floor(col("c_acctbal") / 1000.0).cast("long").as("bal_bin"),
-          col("c_mktsegment"))
-      val gv = q.groupBy("c_mktsegment").agg(count(lit(1)).as("g_v"))
-      val tot = q.agg(count(lit(1)).as("n_tot"))
-      val cell = q.groupBy("c_nationkey", "bal_bin", "c_mktsegment")
-        .agg(count(lit(1)).as("cnt"))
-      val wc = Window.partitionBy("c_nationkey", "bal_bin")
-      cell.join(broadcast(gv), "c_mktsegment")
-        .crossJoin(broadcast(tot))
-        .withColumn("n_c", sum("cnt").over(wc))
-        // every product goes DECIMAL(38,0) BEFORE multiplying — cnt·N and
-        // g_v·n_c are ~N² terms that wrap BIGINT past ~3e9 customers
-        .groupBy("c_nationkey", "bal_bin")
-        .agg(max("n_c").as("n_c"), max("n_tot").as("n_tot"),
-          sum(abs(col("cnt").cast("decimal(38,0)") * col("n_tot")
-              - col("g_v").cast("decimal(38,0)") * col("n_c"))
-            - col("g_v").cast("decimal(38,0)") * col("n_c")).as("present_term"))
-        .select(col("c_nationkey"), col("bal_bin"), col("n_c"),
-          expr("((present_term + CAST(n_c AS DECIMAL(38,0)) * n_tot) * 500000) div " +
-            "(CAST(n_c AS DECIMAL(38,0)) * n_tot)").as("tvd_ppm"))
-        .withColumn("at_risk", when(col("tvd_ppm") > TClosePpm, 1).otherwise(0))
-        .orderBy("c_nationkey", "bal_bin")
-    }),
-
-    // Sparse→dense time-series fill: every (event_type, hour) cell over
-    // the corpus's global hour span, zero-filled where no events landed,
-    // with a per-type running total. The dense frame is sequence-exploded
-    // from ONE 1-row span aggregate, so its size is (types × hours) —
-    // time-bounded, independent of event cardinality; the hourly counts
-    // aggregate is map-side combinable and the fill join keys on the same
-    // (type, hour) pair. Hour epochs stay BIGINT seconds end to end
-    // (floorDiv on nanos — no timestamp round-trip to drift).
-    "events_gapfill" -> ((s, d) => {
-      val h = events(s, d).select(col("event_type"), hourEpochCol)
-      val dense = denseHourGrid(h)
-      val cnt = h.groupBy(col("event_type").as("et"), col("he"))
-        .agg(count(lit(1)).as("cn"))
-      val w = Window.partitionBy("event_type").orderBy("hour_epoch")
-      dense.join(cnt,
-          dense("event_type") === cnt("et") && col("hour_epoch") === col("he"), "left")
-        .select(dense("event_type"), col("hour_epoch"),
-          coalesce(col("cn"), lit(0L)).as("n"))
-        .withColumn("cum_n", sum("n").over(w))
-        .orderBy("event_type", "hour_epoch")
-    }),
-
-    // Vocabulary-growth (Heaps') curve: the corpus split into B equal
-    // doc_id ranges, each term attributed to the FIRST bucket where it
-    // appears, cumulative vocabulary vs cumulative tokens per bucket —
-    // the saturation diagnostic that says whether more data still buys
-    // new vocabulary. Shapes: explode → two map-side-combinable
-    // aggregates (min bucket per term, counts per bucket) → windows over
-    // B rows (single-partition window is B-bounded by construction). The
-    // only cross join is the 1-row doc-count frame fixing bucket width.
-    "vocab_growth" -> ((s, d) => {
-      val hi = docs(s, d).agg((max("doc_id") + 1L).as("nd"))
-      val db = docs(s, d).crossJoin(broadcast(hi))
-        .select(expr(s"(doc_id * $VocabGrowthBuckets) div nd").as("bucket"),
-          col("text"))
-      val t = db.select(col("bucket"), explode(TA.tokens(col("text"))).as("term"))
-        .localCheckpoint() // ONE tokenize pass feeds token counts AND first-bucket
-      // doc side owns the bucket axis: a decile of all-empty texts has no
-      // token rows, and an inner join would silently hole the curve there
-      val perB = db.groupBy("bucket").agg(count(lit(1)).as("n_docs"))
-        .join(t.groupBy("bucket").agg(count(lit(1)).as("nt")), Seq("bucket"), "left")
-        .select(col("bucket"), col("n_docs"), coalesce(col("nt"), lit(0L)).as("n_tokens"))
-      val firstB = t.groupBy("term").agg(min("bucket").as("bucket"))
-        .groupBy("bucket").agg(count(lit(1)).as("new_terms"))
-      val w = Window.orderBy("bucket")
-      perB.join(firstB, Seq("bucket"), "left")
-        .select(col("bucket"), col("n_docs"), col("n_tokens"),
-          coalesce(col("new_terms"), lit(0L)).as("new_terms"))
-        .withColumn("cum_tokens", sum("n_tokens").over(w))
-        .withColumn("cum_vocab", sum("new_terms").over(w))
-        .orderBy("bucket")
-    }),
-
-    // Distributional co-occurrence: doc-level term-pair lift — the exact
-    // monotone core of PMI (the log is dropped so every score is an
-    // integer ppm the oracle replays bit-for-bit). Scale bounds, in
-    // order: df gates drop ubiquitous and hapax terms BEFORE pairing;
-    // each doc then contributes pairs only among its M rarest kept terms
-    // (rarest-first is the information-bearing end of the Zipf curve), so
-    // the pair space is M²-bounded per document, never vocabulary²; the
-    // support floor lands before the ppm math exactly like market_basket.
-    // Top-k by (lift, ta, tb) is a deterministic total order → TakeOrdered,
-    // no full sort shuffle.
-    "pmi_topk" -> ((s, d) => {
-      val dt = docs(s, d)
-        .select(col("doc_id"),
-          explode(array_distinct(TA.tokens(col("text")))).as("term"))
-        .localCheckpoint() // ONE tokenize pass feeds df counts AND pairing
-      val dfv = dt.groupBy("term").agg(count(lit(1)).as("df"))
-      val tot = docs(s, d).agg(count(lit(1)).as("n_docs"))
-      val kept = dt.join(dfv, "term").crossJoin(broadcast(tot))
-        .filter(col("df") >= PmiMinDf &&
-          col("df") * 1000000L <= col("n_docs") * PmiMaxDfPpm)
-      val wdoc = Window.partitionBy("doc_id").orderBy(col("df"), col("term"))
-      val gated = kept.withColumn("rn", row_number().over(wdoc))
-        .filter(col("rn") <= PmiPerDocM)
-        .select(col("doc_id"), col("term"), col("df"), col("n_docs"))
-        .localCheckpoint() // both self-join sides read the gated frame
-      gated.as("l").join(gated.as("r"),
-          col("l.doc_id") === col("r.doc_id") && col("l.term") < col("r.term"))
-        .groupBy(col("l.term").as("ta"), col("r.term").as("tb"))
-        .agg(count(lit(1)).as("n_ab"),
-          max(col("l.df")).as("df_a"), max(col("r.df")).as("df_b"),
-          max(col("l.n_docs")).as("nd"))
-        .filter(col("n_ab") >= PmiMinSupport)
-        .select(col("ta"), col("tb"), col("n_ab"), col("df_a"), col("df_b"),
-          expr("(CAST(n_ab AS DECIMAL(38,0)) * nd * 1000000) div " +
-            "(CAST(df_a AS DECIMAL(38,0)) * df_b)").as("lift_ppm"))
-        .orderBy(col("lift_ppm").desc, col("ta"), col("tb"))
-        .limit(PmiTopK)
-    }),
-
-    // Connected components of the SUPPORT-FILTERED co-purchase graph: the
-    // market_basket support floor prunes noise edges first (and bounds
-    // pair cardinality before anything global runs), then the shared
-    // alternating-star CC core (llm.Dedup.clusters — O(log n) rounds of
-    // groupBy + shuffle join, no edge broadcast, scalar-only driver
-    // traffic) labels every surviving node with its component minimum.
-    // Completes the graph family: components alongside pagerank /
-    // triangles / k-core / degree / mutual-kNN on the same edge frame.
-    "graph_components" -> ((s, d) => {
-      val (_, pairs) = coPurchasePairs(s, d)
-      graft.llm.Dedup.clusters(pairs.select("a", "b"))
-        .select(col("doc_id").as("node"), col("cluster_id").as("component_id"))
-        .orderBy("node")
-    }),
-
-    // Label-propagation communities over the same co-purchase graph —
-    // components answer "reachable", LPA answers "densely clustered":
-    // inside one component the label mode splits hub neighborhoods apart.
-    // Deterministic synchronous variant (fixed rounds, smallest-label tie
-    // break, self-vote) so the oracle unrolls the identical supersteps;
-    // per-round cost = one edges×labels equi-join + two map-side-combined
-    // hash aggs, labels node-sized, lineage cut per round (ops/Lpa).
-    "graph_lpa" -> ((s, d) => {
-      val (_, pairs) = coPurchasePairs(s, d)
-      graft.ops.Lpa.run(pairs.select("a", "b"), iters = LpaIters)
-        .orderBy("node")
-    }),
-
-    // Modularity audit of the LPA partition (Newman-Girvan Q, per
-    // community, in exact floored ppm): q_ppm = ⌊E_c·10⁶/m⌋ −
-    // ⌊deg_c²·10⁶/(4m²)⌋ — the "did LPA find real structure" check (Q
-    // near 0 = no better than random). Terms accumulate in DECIMAL(38,0)
-    // (deg_c ≤ 2m; m²·10⁶ wraps long past m≈3e6 edges — real at 100 TB).
-    // Cost on top of the LPA rounds: one degree agg + one labels⨝pairs
-    // equi-join (labels node-sized) + a 1-row m broadcast.
-    "graph_modularity" -> ((s, d) => {
-      val (_, pairsAll) = coPurchasePairs(s, d)
-      val pairs = pairsAll.select("a", "b")
-        .localCheckpoint() // feeds LPA rounds, degrees, and the E_c join
-      val labels = graft.ops.Lpa.run(pairs, iters = LpaIters)
-        .localCheckpoint() // probed twice below (deg_c and E_c)
-      val m = pairs.agg(count(lit(1)).as("m")) // 1 row
-      val deg = pairs.select(col("a").as("node"))
-        .union(pairs.select(col("b").as("node")))
-        .groupBy("node").agg(count(lit(1)).as("deg"))
-      val degC = deg.join(labels, Seq("node"))
-        .groupBy("label")
-        .agg(sum("deg").as("deg_sum"), count(lit(1)).as("n_nodes"))
-      val eIn = pairs
-        .join(labels.select(col("node").as("a"), col("label").as("la")), Seq("a"))
-        .join(labels.select(col("node").as("b"), col("label").as("lb")), Seq("b"))
-        .filter(col("la") === col("lb"))
-        .groupBy(col("la").as("label")).agg(count(lit(1)).as("e_in"))
-      degC.join(eIn, Seq("label"), "left")
-        .crossJoin(broadcast(m))
-        .withColumn("e_in", coalesce(col("e_in"), lit(0L)))
-        .select(col("label").as("community_id"), col("n_nodes"),
-          col("deg_sum"), col("e_in"),
-          expr("""CAST((CAST(e_in AS DECIMAL(38,0)) * 1000000) div m AS BIGINT)
-                 | - CAST((CAST(deg_sum AS DECIMAL(38,0)) * deg_sum * 1000000)
-                 |         div (4 * CAST(m AS DECIMAL(38,0)) * m) AS BIGINT)"""
-            .stripMargin.replace("\n", " ")).as("q_ppm"))
-        .orderBy("community_id")
-    }),
-
-    // Linear interpolation of the hourly value series across silent
-    // hours — events_gapfill's sibling for VALUES (pandas-interpolate
-    // semantics) in exact integer arithmetic: money in cents, and each
-    // gap hour takes the integer-weighted mean
-    //   v = (vp·(hn−h) + vn·(h−hp)) div (hn−hp)
-    // of its observed neighbors — the epoch-second weights share the
-    // 3600 factor with the denominator, so the rational value (and its
-    // floor) is identical to the hour-unit form and both engines agree
-    // bit for bit. Hours outside a type's observed span stay NULL with
-    // src='edge'. Same scale shape as events_gapfill: dense axis from a
-    // 1-row span aggregate, carry windows per type over the
-    // time-bounded grid.
-    "events_interpolate" -> ((s, d) => {
-      val h = events(s, d).select(col("event_type"), hourEpochCol,
-        col("value").cast("decimal(12,2)").as("v"))
-      val obs = h.groupBy("event_type", "he")
-        .agg((sum(col("v")) * 100).cast("long").as("cents"))
-      val dense = denseHourGrid(h)
-      val grid = dense.join(obs,
-          dense("event_type") === obs("event_type") &&
-            col("hour_epoch") === col("he"), "left")
-        .select(dense("event_type"), col("hour_epoch"), col("cents"))
-      val wPrev = Window.partitionBy("event_type").orderBy("hour_epoch")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wNext = Window.partitionBy("event_type").orderBy("hour_epoch")
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-      val obsPt = when(col("cents").isNotNull,
-        struct(col("hour_epoch").as("h"), col("cents").as("c")))
-      grid
-        .withColumn("pv", last(obsPt, ignoreNulls = true).over(wPrev))
-        .withColumn("nx", first(obsPt, ignoreNulls = true).over(wNext))
-        .select(col("event_type"), col("hour_epoch"),
-          when(col("cents").isNotNull, col("cents"))
-            .when(col("pv").isNotNull && col("nx").isNotNull,
-              expr("(pv.c * (nx.h - hour_epoch) + nx.c * (hour_epoch - pv.h))" +
-                " div (nx.h - pv.h)"))
-            .otherwise(lit(null).cast("long")).as("cents"),
-          when(col("cents").isNotNull, "obs")
-            .when(col("pv").isNotNull && col("nx").isNotNull, "interp")
-            .otherwise("edge").as("src"))
-        .orderBy("event_type", "hour_epoch")
-    }),
-
-    // Count-Min sketch over the corpus token stream — the mergeable
-    // OVERestimating frequency sketch completing the family (bloom
-    // membership, KMV distinct/overlap, HLL distinct, GK rank, streaming
-    // MG). The depth×width counter table is ONE map-side-combinable sum
-    // (mergeable across partitions / executors / days by construction,
-    // bounded at depth·width rows — broadcastable at any corpus size);
-    // estimates probe the same seeded portable-hash cells the oracle
-    // recomputes. Output: the top-K tokens' exact counts next to their CM
-    // estimates — the CM contract est ≥ true ships in the result
-    // (`over_n`), checked not trusted.
-    "sketch_countmin" -> ((s, d) => {
-      import graft.expr.PortableHash
-      val toks = docs(s, d)
-        .select(explode(TA.tokens(col("text"))).as("token"))
-        .localCheckpoint() // ONE tokenize feeds the sketch AND exact counts
-      def cells(tok: Column) = explode(array((0 until CmDepth).map(i =>
-        struct(lit(i).as("row"),
-          pmod(PortableHash.phashSeed(i, tok), lit(CmWidth)).as("cell"))): _*))
-      val sketch = toks.select(cells(col("token")).as("rc"))
-        .groupBy(col("rc.row").as("row"), col("rc.cell").as("cell"))
-        .agg(count(lit(1)).as("n"))
-      val probe = toks.groupBy("token").agg(count(lit(1)).as("true_n"))
-        .orderBy(col("true_n").desc, col("token")).limit(CmProbeK)
-      probe.select(col("token"), col("true_n"), cells(col("token")).as("rc"))
-        .select(col("token"), col("true_n"),
-          col("rc.row").as("row"), col("rc.cell").as("cell"))
-        .join(broadcast(sketch), Seq("row", "cell"))
-        .groupBy("token", "true_n").agg(min("n").as("est_n"))
-        .select(col("token"), col("true_n"), col("est_n"),
-          (col("est_n") - col("true_n")).as("over_n"))
-        .orderBy(col("true_n").desc, col("token"))
-    })
-  )
-
-  /** Seed tag for `corpus_shuffle` (shared with the oracle). */
-  private val ShuffleSeed = "shuffle-v1"
-
-  /** Co-purchase pair-support floor, shared by `market_basket` and
-    * `graph_components` (and both oracles) — ONE definition of which
-    * pairs constitute the co-purchase graph. Production corpora would use
-    * a ppm floor like heavy_hitters; the absolute floor keeps the rule
-    * set readable at test scale (and leaves the component structure
-    * non-trivial: 56 components at sf0.01).
-    */
-  private val MinPairSupport = 3L
-
-  /** `graph_lpa` superstep count (shared with the oracle's unroll). */
-  private val LpaIters = 4
-
-  /** `dsir_weights` hashed-feature bucket count and target slice —
-    * aliases of the [[graft.llm.Dsir]] constants for the oracle strings.
-    */
-  private val DsirBuckets = graft.llm.Dsir.Buckets
-  private val DsirTargetLang = graft.llm.Dsir.TargetLang
-
-  /** The DSIR training+scoring replay as a WITH-clause body (ends at
-    * `sc2` = per-doc n_feats + floored score) — shared by the
-    * `dsir_weights` and `dsir_select` oracles; mirrors [[graft.llm.Dsir]]
-    * stage for stage.
-    */
-  private def sqlDsirCtes: String = {
-    import graft.llm.{Dedup, TextAnalysis => TA}
-    val toksE = TA.sqlTokens("text")
-    val B = DsirBuckets
-    s"""t AS (SELECT doc_id, (lang = '$DsirTargetLang') AS tgt,
-       |  ${Dedup.sqlTokenHashes(toksE)} AS th FROM documents),
-       |hs AS (SELECT doc_id, tgt,
-       |  list_concat(th, ${Dedup.sqlHashedShingles("th", 2)}) AS hs FROM t),
-       |f AS (SELECT doc_id, tgt, unnest(hs) % $B AS f FROM hs),
-       |dfc AS (SELECT doc_id, tgt, f, count(*)::BIGINT AS c
-       |  FROM f GROUP BY 1, 2, 3),
-       |fc AS (SELECT f, sum(c)::BIGINT AS cs,
-       |  sum(CASE WHEN tgt THEN c ELSE 0 END)::BIGINT AS ct
-       |  FROM dfc GROUP BY 1),
-       |tot AS (SELECT sum(cs)::BIGINT AS ts, sum(ct)::BIGINT AS tt FROM fc),
-       |r AS (SELECT f, (((ct + 1)::HUGEINT * (ts + $B) * 1000000)
-       |  // ((cs + 1)::HUGEINT * (tt + $B)))::BIGINT AS r_ppm FROM fc, tot),
-       |sc AS (SELECT doc_id, sum(c::HUGEINT * (r_ppm - 1000000)) AS w,
-       |  sum(c)::BIGINT AS nf FROM dfc JOIN r USING (f) GROUP BY 1),
-       |sc2 AS (SELECT doc_id, nf,
-       |  ((w - (((w % nf) + nf) % nf)) // nf)::BIGINT AS sp FROM sc)""".stripMargin
-  }
-
-  /** Support-filtered co-purchase pair frame (a < b, n_ab = #orders
-    * sharing the pair) — THE co-purchase graph contract behind
-    * market_basket and graph_components, mirrored CTE-for-CTE by
-    * [[sqlCoPurchasePairs]]. Also returns the checkpointed distinct
-    * (ok, pk) frame: market_basket derives margins and order totals from
-    * the same scan.
-    */
-  private def coPurchasePairs(s: SparkSession, d: String)
-      : (DataFrame, DataFrame) = {
-    // one repartition(ok) exchange feeds both self-join sides and the
-    // margin re-reads via in-action stage reuse (see coPurchaseCanon)
-    val li = lineitem(s, d)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-      .repartition(col("ok")).distinct()
-    val pairs = li.as("l").join(li.as("r"),
-        col("l.ok") === col("r.ok") && col("l.pk") < col("r.pk"))
-      .groupBy(col("l.pk").as("a"), col("r.pk").as("b"))
-      .agg(count(lit(1)).as("n_ab"))
-      .filter(col("n_ab") >= MinPairSupport)
-    (li, pairs)
-  }
-
-  /** Oracle CTEs `li` + `pr`: the [[coPurchasePairs]] contract in SQL. */
-  private def sqlCoPurchasePairs: String =
-    s"""li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-       |pr AS (SELECT l.pk AS a, r.pk AS b, count(*)::BIGINT AS n_ab
-       |  FROM li l JOIN li r ON l.ok = r.ok AND l.pk < r.pk
-       |  GROUP BY 1, 2 HAVING count(*) >= $MinPairSupport)""".stripMargin
-
-  /** `join_asof_nearest` tolerance (seconds) — also its band width. */
-  private val NearestTolSec = 900L
-
-  /** `export_interleave` within-source shuffle seed (shared with oracle). */
-  private val InterleaveSeed = "interleave-v1"
-
-  /** `events_attribution` lookback (µs): clicks within 24 h before a
-    * same-user purchase share its credit. Also the range-join band width.
-    */
-  private val AttribWindowUs = 86400000000L
-
-  /** `dedup_threshold_sweep` thresholds (shared with the oracle). */
-  private val SweepThresholds = Seq(0.5, 0.6, 0.7, 0.8, 0.9)
-
-  /** `semantic_sweep` cosine thresholds (shared with the oracle); the edge
-    * pass runs once at the grid minimum.
-    */
-  private val CosSweepThresholds = Seq(0.3, 0.4, 0.5, 0.6, 0.7)
-
-  /** `quality_sweep` cutoff grid (shared with the oracle) — spans
-    * corpus_clean's production minQuality (0.4). */
-  private val QualitySweep = Seq(0.2, 0.35, 0.5, 0.65, 0.8)
-
-  /** `lsh_param_sweep` band/row grid over the 16-perm signature: every
-    * (bands, rows = 16/bands) factorization. `thrMicro` is the S-curve
-    * midpoint (1/b)^(1/r) in micro-units, computed HERE (driver-side
-    * double, floored) and baked as a literal into both the plan and the
-    * oracle SQL — one source of truth, no cross-engine pow() replay.
-    */
-  private val LshSweepConfigs: Seq[(Int, Int, Long)] =
-    Seq(2, 4, 8, 16).map { b =>
-      val r = 16 / b
-      (b, r, math.floor(math.pow(1.0 / b, 1.0 / r) * 1e6).toLong)
-    }
-
-  /** `embedding_outlier` cutoff: cosine-to-own-label-centroid below this is
-    * flagged (0.0 = anti-correlated with the label's mean direction; the
-    * sf0.01 fixture medians ~0.15 against own-label centroids).
-    */
-  private val OutlierTau = 0.0
-
-  /** `doc_chunk` window/stride in tokens (8-token overlap). */
-  private val ChunkWinTok = 32
-  private val ChunkStrideTok = 24
-
-  /** `substring_dedup`/`doc_dup_frac` window length in tokens — the minimum
-    * span length that counts as duplication (shared spans ≥ this length
-    * surface as runs of shared windows at stride 1).
-    */
-  private val SubstrWinTok = 16
-
-  /** `sample_importance` seed + ppm scale (shared with the oracle). */
-  private val ImportanceSeed = "importance-v1"
-  private val SamplePpmScale = 1000000L
-
-  /** DoReMi step size η in ppm (0.1) — one multiplicative-weights update
-    * per `mix_doremi` run; the training loop re-runs the key per round.
-    */
-  private val DoremiEtaPpm = 100000L
-
-  /** Merge rounds for `bpe_merges`/`bpe_apply` (shared with oracles). */
-  private val BpeMergeRounds = 5
-
-  /** `bpe_sweep` merge-count prefixes (0 = character baseline). */
-  private val BpeSweepKs = Seq(0, 1, 3, BpeMergeRounds)
-
-  /** `graph_closeness` seed cap (the per-source BFS is k × edges/round). */
-  private val ClosenessSeeds = 4
-
-  /** `mix_temperature_sweep` α grid in ppm — each exactly computable
-    * cross-engine (1 and 0 are identities; 1/2 is one IEEE sqrt; 1/4 is
-    * sqrt∘sqrt, a composition of correctly-rounded ops both engines
-    * evaluate identically).
-    */
-  private val MixAlphaPpms = Seq(0L, 250000L, 500000L, 1000000L)
-
-  /** Boilerplate-flag parameters, shared by the query and its oracle:
-    * 5-gram shingles, boilerplate = in ≥2 docs, drop docs ≥30% exposed.
-    */
-  private val BoilerN = 5
-  private val BoilerMinDf = 2L
-  private val BoilerMaxPpm = 300000L
-
-  /** `multimodal_neardup` Hamming threshold — the 4-band scheme guarantees
-    * recall strictly below 4 flips (see MultiModal.nearDupPayloads).
-    */
-  private val PhashMaxHamming = 3
-
-  /** Support floor for `heavy_hitters` (ppm of total corpus tokens). */
-  private val HeavyHitterPpm = 2000L
-
-  /** `domain_caps` per-domain keep limit (docs per canonical host). */
-  private val DomainCap = 10L
-
-  /** `quality_url_blocklist` canonical-host blocklist — a query literal
-    * (real deployments load theirs from config; the gate semantics are
-    * identical). Hosts exist in the synthetic URL space so the key
-    * exercises both verdicts.
-    */
-  private val UrlBlocklist = Seq(
-    "shop.src7.example.com", "forum.src12.example.com", "docs.src3.example.com")
-
-  /** `rholoss_select` holdout split: doc_id % mod == 0 is the holdout the
-    * irreducible-loss model trains on (10% of the corpus), the rest is the
-    * candidate train pool. Shared with the oracle.
-    */
-  private val RholossHoldoutMod = 10L
-
-  /** `mix_epochs` budget multiple (×corpus tokens) and the max-epochs cap
-    * (the data-constrained-scaling ~4-epoch usefulness limit), shared with
-    * the oracle.
-    */
-  private val EpochBudgetX = 2L
-  private val MaxEpochs = 4L
-
-  /** Mixture weights for `sample_stratified` (ppm), shared by plan + oracle. */
-  private val MixRatesPpm = Seq("en" -> 500000L, "fr" -> 250000L)
-  private val MixDefaultPpm = 100000L
-  private val MixSeed = "mix-v1"
-
-  /** Deterministic synthetic contact block for `pii_redact` (the documents
-    * fixture is PII-free); the oracle rebuilds the identical string.
-    */
-  private def piiContact: Column =
-    concat(col("text"), lit(" contact user"), col("doc_id").cast("string"),
-      lit("@example.com or +1-555-"),
-      lpad(pmod(col("doc_id"), lit(10000)).cast("string"), 4, "0"))
-
-  /** The distributed top-k frame behind `vocab_topk` (package-visible so
-    * PlanGuardSpec can assert its physical shape: TakeOrderedAndProject,
-    * never a partition-less Window).
+  /** The distributed top-k frame behind `vocab_topk` (PlanGuardSpec pins its
+    * physical shape).
     */
   private[graft] def vocabTop(s: SparkSession, d: String): DataFrame =
-    docs(s, d)
-      .select(explode(TA.tokens(col("text"))).as("token"))
-      .groupBy("token").agg(count(lit(1)).as("freq"))
-      .orderBy(col("freq").desc, col("token"))
-      .limit(20)
-
-  /** lat/lng scaled to exact ints for oracle-stable output (doubles stringify
-    * differently across engines; ×100 is exact on this fixture grid).
-    */
-  private def latC: Column = round(col("lat") * 100).cast("int").as("lat_c")
-  private def lngC: Column = round(col("lng") * 100).cast("int").as("lng_c")
-
-  /** Pyramid input with reference-internal column names. */
-  private def pyramidInput(s: SparkSession, d: String): DataFrame =
-    Pyramid.prepareInput(occ(s, d), OA.mapKeysArray)
-
-  private def projectPixelQuery(proj: Projection, zoom: Int)
-      : (SparkSession, String) => DataFrame =
-    (s, d) =>
-      occ(s, d)
-        .select(col("event_id"),
-          proj.globalPixel(col("lat"), col("lng"), zoom, TileSize).as("xy"))
-        .select(col("event_id"), col("xy.x").as("px"), col("xy.y").as("py"))
-        .orderBy("event_id")
-
-  // ------------------------------------------------------------- oracle SQL
-
-  def oracleSql: Map[String, String] = {
-    val enc = BorYear.sqlEncode("event_type", "yr")
-    Map(
-      "scan_project" -> (sqlOcc +
-        s"""SELECT event_id, user_id, lat, lng, event_type AS bor, yr,
-           |  ${OA.sqlDatasetKey} AS dataset_key, ${OA.sqlPublisherKey} AS publisher_key,
-           |  ${OA.sqlCountryCode} AS country_code, ${OA.sqlPubCountry} AS pub_country,
-           |  COALESCE(array_to_string(${OA.sqlNetworkKeys}, ','), '') AS network_keys
-           |FROM occ ORDER BY event_id""".stripMargin),
-
-      "filter_quality" ->
-        s"""SELECT event_type, count(*) AS n FROM events
-           |WHERE ${OA.sqlQualityFilter} GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      // the salted two-phase agg must be value-identical to the direct
-      // group-by; sum of per-salt counts widens to HUGEINT in DuckDB, so
-      // pin BIGINT like every other summed-count oracle
-      "agg_skew_salted" -> (sqlOcc +
-        """SELECT map_key, count(*)::BIGINT AS n_events
-          |FROM ex GROUP BY 1 ORDER BY 1""".stripMargin),
-
-      "join_skew_salted" -> (sqlOcc +
-        """SELECT map_key, count(*)::BIGINT AS n_events, max(n_coords) AS n_coords
-          |FROM ex JOIN (SELECT map_key, count(*)::BIGINT AS n_coords
-          |              FROM pre GROUP BY 1) stats USING (map_key)
-          |GROUP BY 1 ORDER BY 1""".stripMargin),
-
-      "zonemap_prune" ->
-        s"""SELECT (l_orderkey // $ZoneBucketOrders) AS bucket,
-           |  count(*)::BIGINT AS n_rows,
-           |  min(epoch_us(l_shipdate) // 86400000000)::BIGINT AS min_day,
-           |  max(epoch_us(l_shipdate) // 86400000000)::BIGINT AS max_day,
-           |  (max(epoch_us(l_shipdate) // 86400000000) < $PruneCutoffDay) AS skipped
-           |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      "pyramid_incremental" -> (sqlOcc.stripSuffix("\n") +
-        s""",
-           |po AS (
-           |  SELECT map_key, lat, lng, bor_year, count(*)::BIGINT AS occ_old
-           |  FROM (SELECT ${BorYear.sqlEncode("event_type", "yr")} AS bor_year,
-           |               lat, lng, unnest(mks) AS map_key FROM occ
-           |        WHERE event_id % 10 != 9)
-           |  GROUP BY 1, 2, 3, 4),
-           |pd AS (
-           |  SELECT map_key, lat, lng, bor_year, count(*)::BIGINT AS occ_delta
-           |  FROM (SELECT ${BorYear.sqlEncode("event_type", "yr")} AS bor_year,
-           |               lat, lng, unnest(mks) AS map_key FROM occ
-           |        WHERE event_id % 10 = 9)
-           |  GROUP BY 1, 2, 3, 4)
-           |SELECT pd.map_key, pd.lat, pd.lng, pd.bor_year,
-           |  coalesce(po.occ_old, 0)::BIGINT AS occ_old,
-           |  pd.occ_delta,
-           |  (coalesce(po.occ_old, 0) + pd.occ_delta)::BIGINT AS occ_new
-           |FROM pd LEFT JOIN po USING (map_key, lat, lng, bor_year)
-           |ORDER BY 1, 2, 3, 4""".stripMargin),
-
-      "skew_histogram" ->
-        (sqlOcc + graft.ops.Skew.sqlSizeHistogram("ex", "map_key")),
-
-      "skew_salt_plan" ->
-        (sqlOcc + graft.ops.Skew.sqlSaltPlan("ex", "map_key", SaltPlanMult)),
-
-      // sum(user_id)::BIGINT: DuckDB's sum(BIGINT) yields HUGEINT, which
-      // pandas materializes as float64 and breaks the driver's dtype-
-      // sensitive hash even though values match.
-      "repartition_fixed" -> (sqlOcc +
-        "SELECT yr, count(*) AS n, sum(user_id)::BIGINT AS uid_sum FROM occ GROUP BY 1 ORDER BY 1"),
-
-      "explode_map_keys" -> (sqlOcc +
-        "SELECT event_id, map_key FROM ex ORDER BY 1, 2"),
-
-      "encode_bor_year" -> (sqlOcc +
-        s"""SELECT event_id, $enc AS bor_year,
-           |  ${BorYear.sqlDecodeYear(enc)} AS yr,
-           |  ${BorYear.sqlDecodeBor(enc)} AS bor
-           |FROM occ ORDER BY event_id""".stripMargin),
-
-      "project_pixel_3857" -> sqlProjectPixel(Mercator3857, 8),
-      "project_pixel_4326" -> sqlProjectPixel(PlateCarree4326, 8),
-      "project_pixel_3575" -> sqlProjectPixel(NorthPolarLaea3575, 6),
-      "project_pixel_3031" -> sqlProjectPixel(SouthPolarStereo3031, 6),
-
-      "hbase_key_tile" -> (sqlOcc +
-        s"""SELECT event_id, map_key,
-           |  ${Salt.sqlTileKey("map_key", "3", "(event_id % 8)", "(event_id % 5)", SaltModulo)} AS key
-           |FROM ex ORDER BY 1, 2""".stripMargin),
-
-      "hbase_key_point" -> (sqlOcc +
-        s"""SELECT map_key, ${Salt.sqlSalted("map_key", SaltModulo)} AS key
-           |FROM (SELECT DISTINCT map_key FROM ex) ORDER BY 1""".stripMargin),
-
-      "agg_count_by_view" -> (sqlOcc +
-        s"""SELECT map_key, count(*) AS occ_count FROM ex
-           |GROUP BY 1 HAVING count(*) >= $Threshold ORDER BY 1""".stripMargin),
-
-      "agg_count_by_coord" -> (sqlOcc +
-        s"""SELECT map_key, round(lat * 100)::INTEGER AS lat_c,
-           |  round(lng * 100)::INTEGER AS lng_c, bor_year, occ_count
-           |FROM pre ORDER BY 1, 2, 3, 4""".stripMargin),
-
-      "agg_sum_by_pixel" -> (sqlOcc + sqlPixelCte(Mercator3857, 4) +
-        """SELECT map_key, px, py, bor_year, count(*) AS occ_count
-          |FROM pix WHERE px IS NOT NULL
-          |GROUP BY 1, 2, 3, 4 ORDER BY 1, 2, 3, 4""".stripMargin),
-
-      "agg_collect_pixel_features" -> (sqlOcc + sqlPixelCte(Mercator3857, 2) +
-        """, pc AS (
-          |  SELECT map_key, px, py, bor_year, count(*) AS cnt
-          |  FROM pix WHERE px IS NOT NULL GROUP BY 1, 2, 3, 4)
-          |SELECT map_key, px, py,
-          |  array_to_string(
-          |    list_sort(list(bor_year::VARCHAR || ':' || cnt::VARCHAR)),
-          |    ';') AS features_str
-          |FROM pc GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin),
-
-      "explode_tile_addresses" -> (sqlOcc +
-        s""", epix AS (
-           |  SELECT event_id,
-           |    ${Mercator3857.sqlGlobalPixelX("lat", "lng", 2, TileSize)} AS px,
-           |    ${Mercator3857.sqlGlobalPixelY("lat", "lng", 2, TileSize)} AS py
-           |  FROM occ),
-           |adr AS (
-           |  SELECT event_id,
-           |    unnest(${TileAddressing(Mercator3857, TileSize, BufferSize).sqlAddresses(2, "px", "py")}) AS t
-           |  FROM epix WHERE px IS NOT NULL)
-           |SELECT event_id, t['tileX'] AS tile_x, t['tileY'] AS tile_y,
-           |  t['pixelX'] AS pixel_x, t['pixelY'] AS pixel_y
-           |FROM adr ORDER BY 1, 2, 3, 4, 5""".stripMargin),
-
-      "agg_collect_tile" -> sqlCollectTile(Mercator3857, 1),
-
-      "agg_collect_point_features" -> (sqlOcc +
-        s""", feats AS (
-           |  SELECT map_key, round(lat*100)::INTEGER AS lat_c,
-           |    round(lng*100)::INTEGER AS lng_c, bor_year, occ_count
-           |  FROM pre)
-           |SELECT ${Salt.sqlSalted("map_key", SaltModulo)} AS key,
-           |  array_to_string(
-           |    list_sort(list(lat_c::VARCHAR || ',' || lng_c::VARCHAR || ',' ||
-           |                   bor_year::VARCHAR || ',' || occ_count::VARCHAR)),
-           |    ';') AS features_str
-           |FROM feats GROUP BY 1 ORDER BY 1""".stripMargin),
-
-      "semi_join_threshold" -> (sqlOcc +
-        s"""SELECT event_id, map_key FROM ex
-           |WHERE map_key IN (SELECT map_key FROM ex GROUP BY 1 HAVING count(*) >= $Threshold)
-           |ORDER BY 1, 2""".stripMargin),
-
-      "anti_join_threshold" -> (sqlOcc +
-        s"""SELECT event_id, map_key FROM ex
-           |WHERE map_key NOT IN (SELECT map_key FROM ex GROUP BY 1 HAVING count(*) >= $Threshold)
-           |ORDER BY 1, 2""".stripMargin),
-
-      "sorted_sink" -> (sqlOcc +
-        s"""SELECT ${Salt.sqlSalted("map_key", SaltModulo)} AS key,
-           |  count(*)::INTEGER AS n_features
-           |FROM pre GROUP BY 1 ORDER BY 1""".stripMargin),
-
-      "q1_agg" ->
-        """SELECT l_returnflag, l_linestatus,
-          |  sum(l_quantity) AS sum_qty,
-          |  sum(l_extendedprice::DECIMAL(12,2))::DOUBLE AS sum_base_price,
-          |  sum(l_extendedprice::DECIMAL(12,2) * (1::DECIMAL(4,2) - l_discount::DECIMAL(4,2)))::DOUBLE AS sum_disc_price,
-          |  sum(l_extendedprice::DECIMAL(12,2) * (1::DECIMAL(4,2) - l_discount::DECIMAL(4,2)) * (1::DECIMAL(4,2) + l_tax::DECIMAL(4,2)))::DOUBLE AS sum_charge,
-          |  sum(l_quantity) / count(*) AS avg_qty,
-          |  sum(l_extendedprice::DECIMAL(12,2))::DOUBLE / count(*) AS avg_price,
-          |  sum(l_discount::DECIMAL(4,2))::DOUBLE / count(*) AS avg_disc,
-          |  count(*) AS count_order
-          |FROM lineitem
-          |WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-          |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-      "join_broadcast" ->
-        """SELECT p_brand, count(*) AS n_items, sum(l_quantity) AS sum_qty,
-          |  sum(l_extendedprice::DECIMAL(18,2))::DOUBLE AS revenue
-          |FROM lineitem JOIN part ON l_partkey = p_partkey
-          |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      "join_sortmerge" ->
-        """SELECT o_orderpriority, count(*) AS n_items, sum(l_quantity) AS sum_qty
-          |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-          |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      "join_multiway" ->
-        """SELECT r_name, count(*) AS n_orders,
-          |  sum(o_totalprice::DECIMAL(18,2))::DOUBLE AS revenue
-          |FROM customer
-          |JOIN orders ON c_custkey = o_custkey
-          |JOIN nation ON c_nationkey = n_nationkey
-          |JOIN region ON n_regionkey = r_regionkey
-          |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      "window_topk" ->
-        """SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
-          |  SELECT o_custkey, o_orderkey, o_totalprice,
-          |    row_number() OVER (PARTITION BY o_custkey
-          |                       ORDER BY o_totalprice DESC, o_orderkey) AS rn
-          |  FROM orders)
-          |WHERE rn <= 3 ORDER BY o_custkey, rn, o_orderkey""".stripMargin,
-
-      "window_running" ->
-        """SELECT l_suppkey, l_orderkey, l_linenumber,
-          |  sum(l_quantity) OVER (PARTITION BY l_suppkey
-          |    ORDER BY l_shipdate, l_orderkey, l_linenumber
-          |    ROWS UNBOUNDED PRECEDING) AS running_qty
-          |FROM lineitem ORDER BY 1, 2, 3, 4""".stripMargin,
-
-      "set_ops" ->
-        """SELECT k, 'both' AS src FROM
-          |  (SELECT c_custkey AS k FROM customer INTERSECT SELECT o_custkey FROM orders)
-          |UNION ALL
-          |SELECT k, 'cust_only' AS src FROM
-          |  (SELECT c_custkey AS k FROM customer EXCEPT SELECT o_custkey FROM orders)
-          |ORDER BY 1, 2""".stripMargin,
-
-      "agg_distinct" ->
-        """SELECT o_orderpriority, count(DISTINCT o_custkey) AS n_cust, count(*) AS n
-          |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      // bounded-error HLL contract: the oracle emits the exact count and a
-      // literal true; the compare goes red iff Spark's HLL estimate leaves
-      // the documented 5%/±2 band on any group (see the query comment)
-      "agg_approx_distinct" -> (sqlOcc +
-        """SELECT map_key, count(DISTINCT event_id) AS n_events, true AS hll_ok
-          |FROM ex GROUP BY 1 ORDER BY 1""".stripMargin),
-
-      "events_window_hourly" ->
-        """SELECT epoch(date_trunc('hour', ts))::BIGINT AS hour_epoch,
-          |  count(*) AS n, sum(value::DECIMAL(12,2))::DOUBLE AS sum_value
-          |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      "json_extract" ->
-        """SELECT json_extract_string(props, '$.k')::INTEGER AS k_val, count(*) AS n
-          |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      "events_window_sliding" ->
-        """WITH e AS (SELECT (epoch_us(ts) // 1000000) AS sec FROM events),
-          |w AS (SELECT unnest([
-          |         (sec // 1800) * 1800,
-          |         (sec // 1800) * 1800 - 1800]) AS win_epoch
-          |      FROM e)
-          |SELECT win_epoch, count(*) AS n FROM w GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      "sessionize_batch" ->
-        """WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us FROM events),
-          |s AS (SELECT user_id, ts_us,
-          |  CASE WHEN ts_us - lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us) > 1800000000
-          |       THEN 1 ELSE 0 END AS new_sess FROM e),
-          |r AS (SELECT user_id, ts_us,
-          |  sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts_us
-          |                      ROWS UNBOUNDED PRECEDING) AS sess_id FROM s)
-          |SELECT user_id, min(ts_us) AS session_start_us,
-          |  max(ts_us) AS session_end_us, count(*) AS n_events
-          |FROM r GROUP BY user_id, sess_id ORDER BY 1, 2""".stripMargin,
-
-      "agg_rollup" ->
-        """SELECT r_name, n_name, count(*) AS n_orders,
-          |  sum(o_totalprice::DECIMAL(12,2))::DOUBLE AS revenue
-          |FROM customer
-          |JOIN orders ON c_custkey = o_custkey
-          |JOIN nation ON c_nationkey = n_nationkey
-          |JOIN region ON n_regionkey = r_regionkey
-          |GROUP BY ROLLUP (r_name, n_name)
-          |ORDER BY r_name ASC NULLS FIRST, n_name ASC NULLS FIRST""".stripMargin,
-
-      "agg_cube" ->
-        """SELECT r_name, n_name, count(*) AS n_orders
-          |FROM customer
-          |JOIN orders ON c_custkey = o_custkey
-          |JOIN nation ON c_nationkey = n_nationkey
-          |JOIN region ON n_regionkey = r_regionkey
-          |GROUP BY CUBE (r_name, n_name)
-          |ORDER BY r_name ASC NULLS FIRST, n_name ASC NULLS FIRST""".stripMargin,
-
-      "window_rank_global" ->
-        """SELECT o_orderkey, o_totalprice,
-          |  row_number() OVER (ORDER BY o_totalprice, o_orderkey) AS rn
-          |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-      "window_ntile" ->
-        """SELECT o_orderkey, o_totalprice, quartile FROM (
-          |  SELECT o_orderkey, o_totalprice,
-          |    ntile(4) OVER (ORDER BY o_totalprice, o_orderkey) AS quartile
-          |  FROM orders)
-          |ORDER BY o_orderkey""".stripMargin,
-
-      "window_cume_dist" ->
-        """SELECT o_orderkey, o_totalprice,
-          |  round(percent_rank() OVER (ORDER BY o_totalprice), 6) AS pct_rank_r,
-          |  round(cume_dist() OVER (ORDER BY o_totalprice), 6) AS cume_dist_r
-          |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-      "agg_pivot" ->
-        """SELECT date_part('year', ts)::INTEGER AS yr,
-          |  count(*) FILTER (WHERE event_type = 'click') AS click,
-          |  count(*) FILTER (WHERE event_type = 'error') AS error,
-          |  count(*) FILTER (WHERE event_type = 'purchase') AS purchase,
-          |  count(*) FILTER (WHERE event_type = 'signup') AS signup,
-          |  count(*) FILTER (WHERE event_type = 'view') AS view
-          |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      "join_theta" ->
-        """SELECT p_brand, count(*) AS n_matched, sum(l_quantity) AS sum_qty
-          |FROM lineitem JOIN part
-          |  ON l_partkey = p_partkey
-          | AND l_quantity BETWEEN p_size - 2 AND p_size + 2
-          |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      "asof_signup" ->
-        """SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-          |  max(CASE WHEN event_type = 'signup' THEN epoch_us(ts) END)
-          |    OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id
-          |          ROWS UNBOUNDED PRECEDING) AS last_signup_us
-          |FROM events ORDER BY event_id""".stripMargin,
-
-      "events_retention" ->
-        """WITH ud AS (SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 AS day
-          |            FROM events),
-          |c AS (SELECT user_id, min(day) AS cohort_day FROM ud GROUP BY 1)
-          |SELECT c.cohort_day, ud.day - c.cohort_day AS day_offset,
-          |  count(*)::BIGINT AS n_users
-          |FROM ud JOIN c USING (user_id)
-          |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-      "events_dau_wau" -> graft.ops.Engagement.sqlDauWau,
-
-      "events_funnel" ->
-        """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS ts_us FROM events),
-          |t1 AS (SELECT user_id, min(ts_us) AS t1 FROM e
-          |       WHERE event_type = 'signup' GROUP BY 1),
-          |t2 AS (SELECT e.user_id, min(ts_us) AS t2 FROM e JOIN t1 USING (user_id)
-          |       WHERE event_type = 'view' AND ts_us >= t1 GROUP BY 1),
-          |t3 AS (SELECT e.user_id, min(ts_us) AS t3 FROM e JOIN t2 USING (user_id)
-          |       WHERE event_type = 'click' AND ts_us >= t2 GROUP BY 1),
-          |t4 AS (SELECT e.user_id, min(ts_us) AS t4 FROM e JOIN t3 USING (user_id)
-          |       WHERE event_type = 'purchase' AND ts_us >= t3 GROUP BY 1)
-          |SELECT * FROM (
-          |  SELECT 1 AS stage_idx, 'signup' AS stage, count(*)::BIGINT AS n_users FROM t1
-          |  UNION ALL
-          |  SELECT 2, 'view', count(*)::BIGINT FROM t2
-          |  UNION ALL
-          |  SELECT 3, 'click', count(*)::BIGINT FROM t3
-          |  UNION ALL
-          |  SELECT 4, 'purchase', count(*)::BIGINT FROM t4)
-          |ORDER BY stage_idx""".stripMargin,
-
-      "state_intervals" ->
-        """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS ts_us, event_id
-          |           FROM events),
-          |f AS (SELECT *, CASE WHEN lag(event_type) OVER
-          |        (PARTITION BY user_id ORDER BY ts_us, event_id)
-          |        IS DISTINCT FROM event_type THEN 1 ELSE 0 END AS chg FROM e),
-          |r AS (SELECT *, sum(chg) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-          |        ROWS UNBOUNDED PRECEDING) AS run_id FROM f)
-          |SELECT user_id, event_type, min(ts_us) AS from_us, max(ts_us) AS to_us,
-          |  count(*)::BIGINT AS n_events
-          |FROM r GROUP BY user_id, run_id, event_type
-          |ORDER BY user_id, from_us""".stripMargin,
-
-      "events_anomaly" ->
-        """WITH st AS (SELECT event_type, count(*)::BIGINT AS n,
-          |    sum(value::DECIMAL(18,2)) AS s1,
-          |    sum((value * value)::DECIMAL(28,6)) AS s2
-          |  FROM events GROUP BY 1),
-          |z AS (SELECT e.event_id, e.event_type, e.value,
-          |    (e.value - s1::DOUBLE / n)
-          |      / sqrt(greatest(s2::DOUBLE / n - (s1::DOUBLE / n) * (s1::DOUBLE / n),
-          |                      0.0)) AS z
-          |  FROM events e JOIN st USING (event_type))
-          |SELECT event_id, event_type, value, round(z, 6) AS z_r
-          |FROM z WHERE abs(z) > 3 ORDER BY event_id""".stripMargin,
-
-      "join_bloom" ->
-        """WITH dim AS (SELECT DISTINCT user_id FROM events
-          |             WHERE event_type = 'signup' AND value > 300)
-          |SELECT e.event_id, e.user_id, e.event_type
-          |FROM events e JOIN dim USING (user_id) ORDER BY event_id""".stripMargin,
-
-      "graph_pagerank" -> graft.ops.PageRank.sqlRun(
-        """SELECT 'c' || c AS src, 's' || sp AS dst FROM
-          |  (SELECT DISTINCT o_custkey AS c, l_suppkey AS sp
-          |   FROM lineitem JOIN orders ON l_orderkey = o_orderkey)
-          |UNION ALL
-          |SELECT 's' || sp, 'c' || c FROM
-          |  (SELECT DISTINCT o_custkey AS c, l_suppkey AS sp
-          |   FROM lineitem JOIN orders ON l_orderkey = o_orderkey)""".stripMargin,
-        iters = 5),
-
-      "merge_upsert" ->
-        """WITH dim AS (SELECT c_custkey, c_mktsegment,
-          |               c_acctbal::DECIMAL(12,2) AS bal
-          |             FROM customer WHERE c_custkey % 3 <> 0),
-          |upd AS (SELECT o_custkey AS u_custkey,
-          |          sum(o_totalprice::DECIMAL(12,2)) AS spend,
-          |          count(*)::BIGINT AS n_orders
-          |        FROM orders GROUP BY 1)
-          |SELECT COALESCE(d.c_custkey, u.u_custkey) AS c_custkey,
-          |  CASE WHEN d.c_custkey IS NOT NULL AND u.u_custkey IS NOT NULL
-          |         THEN 'updated'
-          |       WHEN d.c_custkey IS NULL THEN 'inserted'
-          |       ELSE 'unchanged' END AS action,
-          |  COALESCE(d.c_mktsegment, 'NEW') AS segment,
-          |  (CASE WHEN d.c_custkey IS NOT NULL AND u.u_custkey IS NOT NULL
-          |          THEN d.bal + u.spend
-          |        WHEN d.c_custkey IS NULL THEN u.spend
-          |        ELSE d.bal END)::DOUBLE AS bal_d,
-          |  COALESCE(u.n_orders, 0)::BIGINT AS n_orders
-          |FROM dim d FULL OUTER JOIN upd u ON d.c_custkey = u.u_custkey
-          |ORDER BY c_custkey""".stripMargin,
-
-      "join_interval_overlap" ->
-        s"""WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS ts_us, event_id
-           |           FROM events),
-           |f AS (SELECT *, CASE WHEN lag(event_type) OVER
-           |        (PARTITION BY user_id ORDER BY ts_us, event_id)
-           |        IS DISTINCT FROM event_type THEN 1 ELSE 0 END AS chg FROM e),
-           |r AS (SELECT *, sum(chg) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-           |        ROWS UNBOUNDED PRECEDING) AS run_id FROM f),
-           |runs AS (SELECT user_id, min(ts_us) AS a_lo, max(ts_us) + 1 AS a_hi
-           |         FROM r WHERE event_type = 'click'
-           |         GROUP BY user_id, run_id),
-           |inc AS (SELECT event_id AS incident_id,
-           |          ts_us - $IncidentHalfUs AS b_lo,
-           |          ts_us + $IncidentHalfUs AS b_hi
-           |        FROM e WHERE event_type = 'error')
-           |SELECT incident_id, count(*)::BIGINT AS n_runs,
-           |  count(DISTINCT user_id)::BIGINT AS n_users,
-           |  sum(least(a_hi, b_hi) - greatest(a_lo, b_lo))::BIGINT AS overlap_us
-           |FROM runs JOIN inc ON a_lo < b_hi AND b_lo < a_hi
-           |GROUP BY incident_id ORDER BY incident_id""".stripMargin,
-
-      "sketch_kmv_overlap" ->
-        (graft.ops.Kmv.sqlOverlap(
-          "SELECT DISTINCT epoch_us(ts) // 86400000000 AS g, user_id AS id FROM events",
-          KmvK, KmvSeed) + "\nORDER BY 1, 2"),
-
-      "events_top_paths" ->
-        """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS ts_us, event_id
-          |           FROM events),
-          |r AS (SELECT *, row_number() OVER (PARTITION BY user_id
-          |                ORDER BY ts_us, event_id) AS rn FROM e),
-          |p AS (SELECT user_id,
-          |        array_to_string(list(event_type ORDER BY rn), '>') AS path
-          |      FROM r WHERE rn <= 3 GROUP BY 1)
-          |SELECT path, count(*)::BIGINT AS n_users FROM p GROUP BY 1
-          |ORDER BY n_users DESC, path LIMIT 20""".stripMargin,
-
-      "events_value_rank" ->
-        """WITH r AS (SELECT event_id, event_type,
-          |    row_number() OVER (PARTITION BY event_type
-          |                       ORDER BY value, event_id) AS rnk,
-          |    count(*) OVER (PARTITION BY event_type) AS n_g
-          |  FROM events)
-          |SELECT event_id, event_type, rnk::BIGINT AS rnk,
-          |  (CASE WHEN n_g = 1 THEN 0
-          |        ELSE ((rnk - 1) * 1000000) // (n_g - 1) END)::BIGINT AS prank_ppm
-          |FROM r ORDER BY event_id""".stripMargin,
-
-      "events_anomaly_robust" ->
-        """WITH e AS (SELECT event_id, event_type, value FROM events),
-          |m AS (SELECT event_type, quantile_cont(value, 0.5) AS med
-          |      FROM e GROUP BY 1),
-          |s AS (SELECT e.event_type,
-          |        quantile_cont(abs(e.value - m.med), 0.5) AS mad,
-          |        max(m.med) AS med
-          |      FROM e JOIN m USING (event_type) GROUP BY 1),
-          |z AS (SELECT e.event_id, e.event_type, e.value,
-          |        (e.value - s.med) / greatest(s.mad * 1.4826, 1e-9) AS sc
-          |      FROM e JOIN s USING (event_type))
-          |SELECT event_id, event_type, value, round(sc, 6) AS rscore_r
-          |FROM z WHERE abs(sc) > 3.5 ORDER BY event_id""".stripMargin,
-
-      "agg_grouping_sets" ->
-        """SELECT r_name, o_orderpriority, count(*) AS n_orders
-          |FROM customer
-          |JOIN orders ON c_custkey = o_custkey
-          |JOIN nation ON c_nationkey = n_nationkey
-          |JOIN region ON n_regionkey = r_regionkey
-          |GROUP BY GROUPING SETS ((r_name), (r_name, o_orderpriority), ())
-          |ORDER BY r_name ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin,
-
-      "window_lag" ->
-        """SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-          |  lag(epoch_us(ts), 1) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS prev_us,
-          |  lead(epoch_us(ts), 1) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS next_us
-          |FROM events ORDER BY event_id""".stripMargin,
-
-      // engine-side bounded-rank-error check (see the query comment): the
-      // oracle pins the exact group counts and TRUE verdicts
-      "agg_approx_percentile" ->
-        """SELECT l_returnflag, count(*) AS n, true AS ok50, true AS ok90
-          |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      // same TRUE-verdict pinning for the one-pass sketch key: the engine
-      // checks its own rank band in the same aggregate (see query comment)
-      "agg_approx_percentile_sketch" ->
-        """SELECT l_returnflag, count(*) AS n, true AS ok50, true AS ok90
-          |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      "agg_percentile" ->
-        """SELECT l_returnflag,
-          |  round(quantile_cont(l_quantity, 0.25), 6) AS p25,
-          |  round(quantile_cont(l_quantity, 0.5), 6) AS p50,
-          |  round(quantile_cont(l_quantity, 0.9), 6) AS p90
-          |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      "json_from_schema" ->
-        """SELECT json_extract_string(props, '$.k')::INTEGER AS k_val, count(*) AS n
-          |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      "join_range" ->
-        s"""WITH w AS (SELECT event_id AS signup_id, epoch_us(ts) AS lo_us,
-           |  epoch_us(ts) + $RangeJoinWindowUs AS hi_us
-           |  FROM events WHERE event_type = 'signup' AND (event_id % 50) = 0),
-           |p AS (SELECT event_id, epoch_us(ts) AS t_us, value
-           |  FROM events WHERE event_type = 'purchase')
-           |SELECT signup_id, count(*) AS n_purchases,
-           |  sum(value::DECIMAL(12,2))::DOUBLE AS sum_value
-           |FROM w JOIN p ON t_us >= lo_us AND t_us < hi_us
-           |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      "zorder_layout" -> {
-        import graft.ops.ZOrder
-        val z = ZOrder.sqlInterleave("qx", "qy")
-        sqlOcc +
-          s"""SELECT ($z >> 20) AS z_prefix, count(*) AS n,
-             |  min(qx) AS min_qx, max(qx) AS max_qx,
-             |  min(qy) AS min_qy, max(qy) AS max_qy
-             |FROM (SELECT ${ZOrder.sqlQuantize16("lng", -180, 180)} AS qx,
-             |             ${ZOrder.sqlQuantize16("lat", -90, 90)} AS qy
-             |      FROM occ)
-             |GROUP BY 1 ORDER BY 1""".stripMargin
-      },
-
-      "hilbert_layout" -> {
-        import graft.ops.{Hilbert, ZOrder}
-        sqlOcc +
-          s""", q AS (SELECT ${ZOrder.sqlQuantize16("lng", -180, 180)} AS qx,
-             |             ${ZOrder.sqlQuantize16("lat", -90, 90)} AS qy
-             |      FROM occ)""".stripMargin +
-          Hilbert.sqlIndexCtes("q", Seq("qx", "qy"), "qx", "qy", order = 16) +
-          s"""
-             |SELECT (hd >> 20) AS h_prefix, count(*) AS n,
-             |  min(qx) AS min_qx, max(qx) AS max_qx,
-             |  min(qy) AS min_qy, max(qy) AS max_qy
-             |FROM h16 GROUP BY 1 ORDER BY 1""".stripMargin
-      },
-
-      "agg_mode" ->
-        """WITH c AS (SELECT l_returnflag, l_quantity::BIGINT AS qty,
-          |             count(*) AS n
-          |           FROM lineitem GROUP BY 1, 2),
-          |r AS (SELECT *, row_number() OVER (PARTITION BY l_returnflag
-          |        ORDER BY n DESC, qty) AS rn FROM c)
-          |SELECT l_returnflag, qty AS mode_qty, n::BIGINT AS n_mode
-          |FROM r WHERE rn = 1 ORDER BY 1""".stripMargin,
-
-      "export_interleave" ->
-        s"""WITH r AS (SELECT doc_id, source,
-           |  row_number() OVER (PARTITION BY source ORDER BY
-           |    ${graft.expr.PortableHash.sqlPhash(s"('$InterleaveSeed:' || doc_id::VARCHAR)")},
-           |    doc_id) AS rnk_src
-           |  FROM documents)
-           |SELECT doc_id, source, rnk_src::BIGINT AS rnk_src,
-           |  row_number() OVER (ORDER BY rnk_src, source, doc_id)::BIGINT AS pos
-           |FROM r ORDER BY doc_id""".stripMargin,
-
-      "events_attribution" ->
-        s"""WITH c AS (SELECT event_id AS click_id, user_id, epoch_us(ts) AS c_us
-           |           FROM events WHERE event_type = 'click'),
-           |p AS (SELECT event_id AS p_id, user_id, epoch_us(ts) AS p_us,
-           |        (value::DECIMAL(12,2) * 100)::BIGINT AS cents
-           |      FROM events WHERE event_type = 'purchase'),
-           |t AS (SELECT c.click_id, p.p_id, p.cents, c.c_us
-           |      FROM c JOIN p ON c.user_id = p.user_id
-           |        AND c.c_us >= p.p_us - $AttribWindowUs AND c.c_us < p.p_us),
-           |m AS (SELECT *, count(*) OVER (PARTITION BY p_id) AS n_touch,
-           |        (row_number() OVER (PARTITION BY p_id
-           |           ORDER BY c_us DESC, click_id DESC) = 1) AS is_last
-           |      FROM t)
-           |SELECT click_id, count(*)::BIGINT AS n_purchases,
-           |  sum(cents // n_touch)::BIGINT AS attributed_cents,
-           |  sum(CASE WHEN is_last THEN 1 ELSE 0 END)::BIGINT AS n_last_touch
-           |FROM m GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      "sketch_kmv_union" ->
-        (graft.ops.Kmv.sqlUnion(
-          "SELECT DISTINCT epoch_us(ts) // 86400000000 AS g, user_id AS id FROM events",
-          KmvK, KmvSeed) + "\nORDER BY 1, 2")
-    ) ++ llmOracles
-  }
-
-  private def llmOracles: Map[String, String] = {
-    import graft.llm.{Dedup, Similarity, TextAnalysis => TA, Scrub}
-    val toks = TA.sqlTokens("text")
-    val enStop = TA.LangStopwords.head._2.map(w => s"'$w'").mkString(", ")
-    Map(
-      "dedup_exact" ->
-        s"""SELECT ${Dedup.sqlFingerprint("text")} AS fp, min(doc_id) AS keep_id,
-           |  count(*) AS n_docs
-           |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      "dedup_url" -> graft.llm.Url.sqlDedupUrl,
-
-      // shares sqlLshBase so the occupancy cap (and every future change to
-      // the LSH chain) can never diverge from the other dedup oracles
-      "dedup_minhash" ->
-        (s"WITH ${sqlLshBase(3, 16, 4)}\n" +
-          """SELECT l.doc_id AS a, r.doc_id AS b, count(*) AS n_bands
-            |FROM bb l JOIN bb r ON l.band = r.band AND l.bh = r.bh AND l.doc_id < r.doc_id
-            |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
-
-      "dedup_simhash" ->
-        s"""WITH t AS (SELECT doc_id, $toks AS toks FROM documents)
-           |SELECT doc_id, ${TA.sqlSimhash32("toks")} AS simhash
-           |FROM t ORDER BY doc_id""".stripMargin,
-
-      "dedup_ngram_jaccard" ->
-        (s"WITH ${sqlVerifiedCte(3, 16, 4)}\n" +
-          "SELECT a, b, jac_r FROM v WHERE jac_r >= 0.2 ORDER BY 1, 2"),
-
-      "dedup_verified" ->
-        (s"WITH ${sqlVerifiedCte(3, 16, 4)}\n" +
-          "SELECT a, b, n_bands, jac_r, (jac_r >= 0.5) AS is_dup FROM v ORDER BY 1, 2"),
-
-      "doc_chunk" ->
-        s"""WITH t AS (SELECT doc_id, ${TA.sqlTokens("text")} AS toks FROM documents),
-           |n AS (SELECT doc_id, toks,
-           |        CASE WHEN len(toks) <= $ChunkWinTok THEN 1
-           |             ELSE ((len(toks) - $ChunkWinTok + ${ChunkStrideTok - 1}) // $ChunkStrideTok) + 1
-           |        END AS n_chunks FROM t),
-           |c AS (SELECT doc_id, toks, unnest(range(n_chunks)) AS chunk_id FROM n),
-           |s AS (SELECT doc_id, chunk_id,
-           |        toks[chunk_id * $ChunkStrideTok + 1 : chunk_id * $ChunkStrideTok + $ChunkWinTok] AS ct
-           |      FROM c)
-           |SELECT doc_id, chunk_id::BIGINT AS chunk_id,
-           |  len(ct)::BIGINT AS n_tok_chunk,
-           |  md5(array_to_string(ct, ' ')) AS chunk_md5
-           |FROM s ORDER BY doc_id, chunk_id""".stripMargin,
-
-      "dedup_threshold_sweep" ->
-        (s"WITH ${sqlVerifiedCte(3, 16, 4)},\n" +
-          s"""thr AS (SELECT unnest([${SweepThresholds.mkString(", ")}]) AS thr)
-             |SELECT thr.thr, count(v.a)::BIGINT AS n_pairs,
-             |  count(DISTINCT v.b)::BIGINT AS n_docs_removed
-             |FROM thr LEFT JOIN v ON v.jac_r >= thr.thr
-             |GROUP BY 1 ORDER BY 1""".stripMargin),
-
-      "lsh_param_sweep" -> sqlLshSweep(shingleSize = 3, numPerms = 16),
-
-      "embedding_neardup" ->
-        (s"WITH ${sqlNearDupCte(0.4)}\n" +
-          "SELECT a, b, cos_r FROM ndp ORDER BY 1, 2"),
-
-      "semantic_sweep" ->
-        (s"WITH ${sqlNearDupCte(CosSweepThresholds.min)},\n" +
-          s"""thr AS (SELECT unnest([${CosSweepThresholds.mkString(", ")}]) AS thr)
-             |SELECT thr.thr, count(ndp.a)::BIGINT AS n_pairs,
-             |  count(DISTINCT ndp.b)::BIGINT AS n_docs_removed
-             |FROM thr LEFT JOIN ndp ON ndp.cos_r >= thr.thr
-             |GROUP BY 1 ORDER BY 1""".stripMargin),
-
-      "embedding_outlier" ->
-        s"""WITH q AS (SELECT vec_id, label, r.range::INTEGER AS idx,
-           |             ei[r.range + 1] AS qv
-           |           FROM (SELECT vec_id, label,
-           |                   ${graft.llm.Quantizer.sqlQuantize("embedding")} AS ei
-           |                 FROM embeddings) CROSS JOIN range(${Similarity.Dim}) r),
-           |cent AS (SELECT label, idx, ((s - (((s % n) + n) % n)) / n)::BIGINT AS c
-           |         FROM (SELECT label, idx, sum(qv)::BIGINT AS s,
-           |                 count(*)::BIGINT AS n FROM q GROUP BY 1, 2)),
-           |d AS (SELECT q.vec_id, q.label, sum(q.qv * cent.c)::BIGINT AS dt,
-           |        sum(q.qv * q.qv)::BIGINT AS n2v, sum(cent.c * cent.c)::BIGINT AS n2c
-           |      FROM q JOIN cent USING (label, idx) GROUP BY 1, 2),
-           |o AS (SELECT vec_id, label,
-           |        CASE WHEN n2v = 0 OR n2c = 0 THEN -2.0
-           |             ELSE round(dt::DOUBLE / (sqrt(n2v::DOUBLE) * sqrt(n2c::DOUBLE)), 6)
-           |        END AS cos_centroid_r
-           |      FROM d)
-           |SELECT vec_id, label, cos_centroid_r,
-           |  (cos_centroid_r < $OutlierTau) AS is_outlier
-           |FROM o ORDER BY vec_id""".stripMargin,
-
-      // Reference CC over the near-dup edge set (recursive reachability is
-      // the oracle-side stand-in for the engine's alternating-star rounds).
-      "semantic_clusters" ->
-        (s"WITH RECURSIVE ${sqlNearDupCte(0.4)},\n" +
-          """e AS (SELECT a, b FROM ndp UNION ALL SELECT b, a FROM ndp),
-            |reach AS (
-            |  SELECT a AS id, b AS r FROM e
-            |  UNION
-            |  SELECT reach.id, e.b FROM reach JOIN e ON reach.r = e.a)
-            |SELECT id AS vec_id, least(id, min(r)) AS cluster_id
-            |FROM reach GROUP BY id ORDER BY 1""".stripMargin),
-
-      "semantic_decisions" ->
-        (s"WITH RECURSIVE ${sqlNearDupCte(0.4)},\n" +
-          """e AS (SELECT a, b FROM ndp UNION ALL SELECT b, a FROM ndp),
-            |reach AS (
-            |  SELECT a AS id, b AS r FROM e
-            |  UNION
-            |  SELECT reach.id, e.b FROM reach JOIN e ON reach.r = e.a),
-            |cl AS (SELECT id AS vec_id, least(id, min(r)) AS cluster_id
-            |       FROM reach GROUP BY id)
-            |SELECT v.vec_id,
-            |  COALESCE(cl.cluster_id, v.vec_id) AS cluster_id,
-            |  (COALESCE(cl.cluster_id, v.vec_id) = v.vec_id) AS keep
-            |FROM embeddings v LEFT JOIN cl ON v.vec_id = cl.vec_id
-            |ORDER BY v.vec_id""".stripMargin),
-
-      "semantic_keep_diverse" ->
-        (s"WITH RECURSIVE ${sqlNearDupCte(0.4)},\n" +
-          s"""e AS (SELECT a, b FROM ndp UNION ALL SELECT b, a FROM ndp),
-            |reach AS (
-            |  SELECT a AS id, b AS r FROM e
-            |  UNION
-            |  SELECT reach.id, e.b FROM reach JOIN e ON reach.r = e.a),
-            |cl AS (SELECT id AS vec_id, least(id, min(r)) AS cluster_id
-            |       FROM reach GROUP BY id),
-            |q0 AS (SELECT vec_id,
-            |         ${graft.llm.Quantizer.sqlQuantize("embedding")} AS ei
-            |       FROM embeddings),
-            |q AS (SELECT q0.vec_id,
-            |        COALESCE(cl.cluster_id, q0.vec_id) AS cluster_id,
-            |        r.range::INTEGER AS idx, ei[r.range + 1] AS qv
-            |      FROM q0 LEFT JOIN cl ON q0.vec_id = cl.vec_id
-            |      CROSS JOIN range(${Similarity.Dim}) r),
-            |cent AS (SELECT cluster_id, idx,
-            |           ((s - (((s % n) + n) % n)) / n)::BIGINT AS c
-            |         FROM (SELECT cluster_id, idx, sum(qv)::BIGINT AS s,
-            |                 count(*)::BIGINT AS n FROM q GROUP BY 1, 2)),
-            |d AS (SELECT q.vec_id, q.cluster_id,
-            |        sum(q.qv * cent.c)::BIGINT AS dt,
-            |        sum(q.qv * q.qv)::BIGINT AS n2v,
-            |        sum(cent.c * cent.c)::BIGINT AS n2c
-            |      FROM q JOIN cent USING (cluster_id, idx) GROUP BY 1, 2),
-            |o AS (SELECT vec_id, cluster_id,
-            |        CASE WHEN n2v = 0 OR n2c = 0 THEN -2.0
-            |             ELSE round(dt::DOUBLE / (sqrt(n2v::DOUBLE) * sqrt(n2c::DOUBLE)), 6)
-            |        END AS cos_centroid_r
-            |      FROM d),
-            |b AS (SELECT cluster_id, vec_id AS best_vec FROM (
-            |  SELECT cluster_id, vec_id, row_number() OVER (PARTITION BY cluster_id
-            |    ORDER BY cos_centroid_r, vec_id) AS rn FROM o) WHERE rn = 1)
-            |SELECT o.vec_id, o.cluster_id, o.cos_centroid_r,
-            |  (o.vec_id = b.best_vec) AS keep
-            |FROM o JOIN b ON o.cluster_id = b.cluster_id
-            |ORDER BY o.vec_id""".stripMargin),
-
-      "semantic_purity" ->
-        (s"WITH RECURSIVE ${sqlNearDupCte(0.4)},\n" +
-          """e AS (SELECT a, b FROM ndp UNION ALL SELECT b, a FROM ndp),
-            |reach AS (
-            |  SELECT a AS id, b AS r FROM e
-            |  UNION
-            |  SELECT reach.id, e.b FROM reach JOIN e ON reach.r = e.a),
-            |cl AS (SELECT id AS vec_id, least(id, min(r)) AS cluster_id
-            |       FROM reach GROUP BY id),
-            |lab AS (SELECT v.vec_id,
-            |          COALESCE(cl.cluster_id, v.vec_id) AS cluster_id, v.label
-            |        FROM embeddings v LEFT JOIN cl ON v.vec_id = cl.vec_id),
-            |cln AS (SELECT cluster_id, label, count(*)::BIGINT AS n
-            |        FROM lab GROUP BY 1, 2),
-            |mj AS (SELECT cluster_id, label AS majority_label, n AS mn FROM (
-            |  SELECT cluster_id, label, n, row_number() OVER (
-            |    PARTITION BY cluster_id ORDER BY n DESC, label) AS rn
-            |  FROM cln) WHERE rn = 1),
-            |ag AS (SELECT cluster_id, sum(n)::BIGINT AS n_members,
-            |         count(*)::BIGINT AS n_labels FROM cln GROUP BY 1)
-            |SELECT ag.cluster_id, ag.n_members, ag.n_labels,
-            |  mj.majority_label,
-            |  ((mj.mn * 1000000) // ag.n_members)::BIGINT AS purity_ppm
-            |FROM ag JOIN mj ON ag.cluster_id = mj.cluster_id
-            |ORDER BY 1""".stripMargin),
-
-      "heavy_hitters" ->
-        s"""WITH t AS (SELECT unnest($toks) AS token FROM documents),
-           |f AS (SELECT token, count(*) AS freq FROM t GROUP BY 1),
-           |tt AS (SELECT sum(freq)::BIGINT AS tot FROM f)
-           |SELECT token, freq, (freq * 1000000) // tot AS ppm
-           |FROM f, tt WHERE freq * 1000000 >= $HeavyHitterPpm * tot
-           |ORDER BY freq DESC, token""".stripMargin,
-
-      "mix_rates" ->
-        s"""WITH t AS (SELECT lang, len($toks)::BIGINT AS n_tok FROM documents),
-           |a AS (SELECT lang, count(*) AS n_docs, sum(n_tok)::BIGINT AS n_tokens
-           |      FROM t GROUP BY 1),
-           |tt AS (SELECT sum(n_tokens)::BIGINT AS tot, count(*)::BIGINT AS n_langs FROM a)
-           |SELECT lang, n_docs, n_tokens, (tot // n_langs) AS target_tokens,
-           |  least(1000000, ((tot // n_langs) * 1000000) // n_tokens) AS rate_ppm
-           |FROM a, tt ORDER BY 1""".stripMargin,
-
-      "mix_apply" ->
-        s"""WITH t AS (SELECT doc_id, lang, len($toks)::BIGINT AS n_tok FROM documents),
-           |a AS (SELECT lang, sum(n_tok)::BIGINT AS n_tokens FROM t GROUP BY 1),
-           |tt AS (SELECT sum(n_tokens)::BIGINT AS tot, count(*)::BIGINT AS n_langs FROM a),
-           |r AS (SELECT lang,
-           |  least(1000000, ((tot // n_langs) * 1000000) // n_tokens) AS rate_ppm
-           |  FROM a, tt),
-           |g AS (SELECT t.lang, t.n_tok,
-           |  (${graft.expr.PortableHash.sqlPhash("'mix:' || doc_id::VARCHAR")} % 1000000) < r.rate_ppm AS keep
-           |  FROM t JOIN r USING (lang))
-           |SELECT lang, count(*) AS n_docs,
-           |  sum(CASE WHEN keep THEN 1 ELSE 0 END)::BIGINT AS n_kept,
-           |  sum(CASE WHEN keep THEN n_tok ELSE 0 END)::BIGINT AS kept_tokens
-           |FROM g GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      "export_shards" ->
-        s"""WITH t AS (SELECT doc_id, len($toks)::BIGINT AS n_tok FROM documents),
-           |r AS (SELECT doc_id, n_tok,
-           |  row_number() OVER (ORDER BY -n_tok, doc_id) AS rn FROM t)
-           |SELECT ((rn - 1) % 8)::INTEGER AS shard, count(*) AS n_docs,
-           |  sum(n_tok)::BIGINT AS n_tokens
-           |FROM r GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      "curriculum_buckets" ->
-        s"""WITH t AS (SELECT doc_id,
-           |    ${TA.sqlQualityScore(toks)} AS quality,
-           |    len($toks)::BIGINT AS n_tok FROM documents),
-           |r AS (SELECT *, ntile(4) OVER (ORDER BY quality, doc_id) AS tier FROM t)
-           |SELECT tier::INTEGER AS tier, count(*)::BIGINT AS n_docs,
-           |  sum(n_tok)::BIGINT AS n_tokens,
-           |  round(min(quality), 6) AS min_q, round(max(quality), 6) AS max_q
-           |FROM r GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      "export_manifest" ->
-        s"""WITH t AS (SELECT doc_id, len($toks)::BIGINT AS n_tok FROM documents),
-           |r AS (SELECT doc_id, n_tok,
-           |  row_number() OVER (ORDER BY -n_tok, doc_id) AS rn FROM t),
-           |s AS (SELECT ((rn - 1) % 8)::INTEGER AS shard, doc_id, n_tok FROM r)
-           |SELECT shard, count(*)::BIGINT AS n_docs, sum(n_tok)::BIGINT AS n_tokens,
-           |  md5(array_to_string(list(doc_id::VARCHAR ORDER BY doc_id), ',')) AS member_md5
-           |FROM s GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      "export_balance" ->
-        s"""WITH t AS (SELECT doc_id, len($toks)::BIGINT AS n_tok FROM documents),
-           |r AS (SELECT doc_id, n_tok,
-           |  row_number() OVER (ORDER BY -n_tok, doc_id) AS rn FROM t),
-           |p AS (SELECT ((rn - 1) % 8)::INTEGER AS shard, count(*)::BIGINT AS n_docs,
-           |  sum(n_tok)::BIGINT AS n_tokens FROM r GROUP BY 1)
-           |SELECT count(*)::INTEGER AS n_shards, sum(n_docs)::BIGINT AS docs_total,
-           |  sum(n_tokens)::BIGINT AS tok_total, max(n_tokens)::BIGINT AS tok_max,
-           |  min(n_tokens)::BIGINT AS tok_min,
-           |  ((max(n_tokens) * count(*) * 1000000) // sum(n_tokens))::BIGINT AS tok_balance_ppm
-           |FROM p""".stripMargin,
-
-      "ngram_counts" ->
-        s"""WITH t AS (SELECT $toks AS toks FROM documents),
-           |g AS (SELECT unnest(${TA.sqlShingles("toks", 2)}) AS ngram FROM t)
-           |SELECT ngram, count(*) AS freq FROM g GROUP BY 1
-           |ORDER BY freq DESC, ngram LIMIT 50""".stripMargin,
-
-      "length_histogram" -> {
-        // same boundaries, same test order as the Spark when-chain
-        val cases = (0 to 16).map(1L << _).reverse
-          .map(p => s"WHEN n_tok >= $p THEN $p").mkString(" ")
-        s"""WITH t AS (SELECT len($toks)::BIGINT AS n_tok FROM documents)
-           |SELECT (CASE $cases ELSE 0 END)::BIGINT AS bucket_lo,
-           |  count(*) AS n_docs, sum(n_tok)::BIGINT AS n_tokens
-           |FROM t GROUP BY 1 ORDER BY 1""".stripMargin
-      },
-
-      "mix_report" ->
-        s"""WITH t AS (SELECT lang, source, len($toks)::BIGINT AS n_tok FROM documents),
-           |a AS (SELECT lang, source, count(*) AS n_docs,
-           |  sum(n_tok)::BIGINT AS n_tokens FROM t GROUP BY 1, 2)
-           |SELECT lang, source, n_docs, n_tokens,
-           |  round(n_tokens::DOUBLE / (SELECT sum(n_tokens)::BIGINT FROM a), 6) AS token_share_r
-           |FROM a ORDER BY 1, 2""".stripMargin,
-
-      "text_stats" ->
-        s"""WITH t AS (SELECT doc_id, $toks AS toks,
-           |  ${TA.sqlSubtokenCount("text")}::INTEGER AS n_subtokens FROM documents)
-           |SELECT doc_id, len(toks)::INTEGER AS n_tokens,
-           |  len(list_distinct(toks))::INTEGER AS n_uniq, n_subtokens,
-           |  CASE WHEN len(toks) = 0 THEN 0.0
-           |       ELSE round(len(list_distinct(toks))::DOUBLE / len(toks), 6) END AS ttr_r,
-           |  CASE WHEN len(toks) = 0 THEN 0.0
-           |       ELSE round(len(list_filter(toks, t -> t IN ($enStop)))::DOUBLE / len(toks), 6) END AS stop_ratio_r
-           |FROM t ORDER BY doc_id""".stripMargin,
-
-      "lang_id" ->
-        s"""SELECT doc_id, lang, ${TA.sqlLangId("text")} AS pred_lang
-           |FROM documents ORDER BY doc_id""".stripMargin,
-
-      "lang_confusion" ->
-        s"""SELECT lang, ${TA.sqlLangId("text")} AS pred_lang,
-           |  count(*) AS n_docs, sum(len($toks))::BIGINT AS n_tokens
-           |FROM documents GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-      "doc_fingerprint" ->
-        s"""WITH t AS (SELECT doc_id, $toks AS toks FROM documents),
-           |th AS (SELECT doc_id, ${Dedup.sqlTokenHashes("toks")} AS th FROM t),
-           |s AS (SELECT doc_id, ${Dedup.sqlHashedShingles("th", 5)} AS sh FROM th)
-           |SELECT doc_id, list_min(sh) AS fp, len(sh)::INTEGER AS n_shingles
-           |FROM s ORDER BY doc_id""".stripMargin,
-
-      "similarity_topk" -> sqlTopK(k = 5, sameCell = false),
-      "similarity_ivf" -> sqlTopK(k = 3, sameCell = true),
-      "similarity_lsh" -> sqlLshTopK(k = 5),
-
-      "similarity_recall" -> sqlRecall(k = 5),
-      "similarity_mrr" -> sqlMrr(k = 10),
-      "hard_negatives" -> sqlHardNegatives(kRetr = 10, kNeg = 3),
-      "knn_classify" -> sqlKnnClassify(k = 5),
-      "quantizer_kmeans" -> graft.llm.Quantizer.sqlCentroids(),
-
-      "quantizer_inertia" -> graft.llm.Quantizer.sqlInertia(),
-      "pq_codes" -> graft.llm.Quantizer.sqlPqCodes(),
-      "similarity_pq" -> graft.llm.Quantizer.sqlPqTopK("(q.vec_id % 20) = 0", topK = 5),
-      "similarity_ivf_trained" ->
-        graft.llm.Quantizer.sqlIvfTopK("q.vec_id % 20 = 0", topK = 3),
-      "similarity_ivf_probes" ->
-        graft.llm.Quantizer.sqlIvfTopKProbes("q.vec_id % 20 = 0", topK = 3, nprobe = 2),
-      "similarity_recall_ivf" -> sqlRecallIvf(k = 3, nprobe = 2),
-      "similarity_recall_pq" -> sqlRecallPq(k = 5),
-
-      "multimodal_features" ->
-        """SELECT doc_id, octet_length(encode(text))::INTEGER AS byte_len,
-          |  md5(substr(text, 1, 16)) AS head_md5, source
-          |FROM documents ORDER BY doc_id""".stripMargin,
-
-      "multimodal_frames" ->
-        """WITH t AS (SELECT doc_id, text,
-          |  least(4, 1 + length(text) // 256)::INTEGER AS n_frames FROM documents)
-          |SELECT doc_id, n_frames,
-          |  array_to_string([md5(substr(text, 1 + f*256, 64)) for f in range(0, n_frames)], ';') AS frames_md5,
-          |  md5(COALESCE(array_to_string([substr(text, 1 + i*4, 1)
-          |    for i in range(0, (least(512, length(text)) + 3) // 4)], ''), '')) AS resize_md5
-          |FROM t ORDER BY doc_id""".stripMargin,
-
-      "dedup_clusters" ->
-        (s"WITH RECURSIVE ${sqlVerifiedCte(3, 16, 4)},\n" +
-          """e AS (SELECT a, b FROM v WHERE jac_r >= 0.5
-            |      UNION ALL SELECT b, a FROM v WHERE jac_r >= 0.5),
-            |reach AS (
-            |  SELECT a AS id, b AS r FROM e
-            |  UNION
-            |  SELECT reach.id, e.b FROM reach JOIN e ON reach.r = e.a)
-            |SELECT id AS doc_id, least(id, min(r)) AS cluster_id
-            |FROM reach GROUP BY id ORDER BY 1""".stripMargin),
-
-      "dedup_decisions" ->
-        (s"WITH RECURSIVE ${sqlVerifiedCte(3, 16, 4)},\n" +
-          """e AS (SELECT a, b FROM v WHERE jac_r >= 0.5
-            |      UNION ALL SELECT b, a FROM v WHERE jac_r >= 0.5),
-            |reach AS (
-            |  SELECT a AS id, b AS r FROM e
-            |  UNION
-            |  SELECT reach.id, e.b FROM reach JOIN e ON reach.r = e.a),
-            |cl AS (SELECT id AS doc_id, least(id, min(r)) AS cluster_id
-            |       FROM reach GROUP BY id)
-            |SELECT d.doc_id,
-            |  COALESCE(cl.cluster_id, d.doc_id) AS cluster_id,
-            |  (COALESCE(cl.cluster_id, d.doc_id) = d.doc_id) AS keep
-            |FROM documents d LEFT JOIN cl ON d.doc_id = cl.doc_id
-            |ORDER BY d.doc_id""".stripMargin),
-
-      "dedup_cluster_stats" ->
-        (s"WITH RECURSIVE ${sqlVerifiedCte(3, 16, 4)},\n" +
-          """e AS (SELECT a, b FROM v WHERE jac_r >= 0.5
-            |      UNION ALL SELECT b, a FROM v WHERE jac_r >= 0.5),
-            |reach AS (
-            |  SELECT a AS id, b AS r FROM e
-            |  UNION
-            |  SELECT reach.id, e.b FROM reach JOIN e ON reach.r = e.a),
-            |cl AS (SELECT id AS doc_id, least(id, min(r)) AS cluster_id
-            |       FROM reach GROUP BY id),
-            |cs AS (SELECT cluster_id, count(*) AS sz FROM cl GROUP BY 1)
-            |SELECT sz, count(*) AS n_clusters FROM cs GROUP BY 1 ORDER BY 1""".stripMargin),
-
-      "dedup_keep_best" ->
-        (s"WITH RECURSIVE ${sqlVerifiedCte(3, 16, 4)},\n" +
-          s"""e AS (SELECT a, b FROM v WHERE jac_r >= 0.5
-            |      UNION ALL SELECT b, a FROM v WHERE jac_r >= 0.5),
-            |reach AS (
-            |  SELECT a AS id, b AS r FROM e
-            |  UNION
-            |  SELECT reach.id, e.b FROM reach JOIN e ON reach.r = e.a),
-            |cl AS (SELECT id AS doc_id, least(id, min(r)) AS cluster_id
-            |       FROM reach GROUP BY id),
-            |tq AS (SELECT doc_id, $toks AS toks FROM documents),
-            |q AS (SELECT doc_id, ${TA.sqlQualityScore("toks")} AS quality FROM tq),
-            |lab AS (SELECT q.doc_id, COALESCE(cl.cluster_id, q.doc_id) AS cluster_id,
-            |        q.quality FROM q LEFT JOIN cl ON q.doc_id = cl.doc_id),
-            |b AS (SELECT cluster_id, doc_id AS best_doc FROM (
-            |  SELECT cluster_id, doc_id, row_number() OVER (PARTITION BY cluster_id
-            |    ORDER BY quality DESC, doc_id) AS rn FROM lab) WHERE rn = 1)
-            |SELECT lab.doc_id, lab.cluster_id, lab.quality,
-            |  (lab.doc_id = b.best_doc) AS keep
-            |FROM lab JOIN b ON lab.cluster_id = b.cluster_id
-            |ORDER BY lab.doc_id""".stripMargin),
-
-      "doc_quality" ->
-        s"""WITH t AS (SELECT doc_id, $toks AS toks FROM documents),
-           |q AS (SELECT doc_id, ${TA.sqlQualityScore("toks")} AS quality FROM t)
-           |SELECT doc_id, quality,
-           |  CASE WHEN quality >= 0.7 THEN 'high'
-           |       WHEN quality >= 0.4 THEN 'mid' ELSE 'low' END AS quality_class
-           |FROM q ORDER BY doc_id""".stripMargin,
-
-      "quality_gopher" -> graft.llm.Gopher.sqlGates,
-
-      "quality_c4" -> graft.llm.C4.sqlGates,
-
-      "quality_gopher_rep" -> graft.llm.GopherRep.sqlGates,
-
-      "corpus_admit_published" ->
-        s"""WITH gg AS (${graft.llm.Gopher.sqlGates.replace("ORDER BY doc_id", "")}),
-           |rr AS (${graft.llm.GopherRep.sqlGates.replace("ORDER BY doc_id", "")}),
-           |cc AS (${graft.llm.C4.sqlGates.replace("ORDER BY doc_id", "")})
-           |SELECT gg.doc_id, gg.gopher_pass, rr.rep_pass, cc.c4_pass,
-           |  (gg.gopher_pass AND rr.rep_pass AND cc.c4_pass) AS admit
-           |FROM gg JOIN rr ON gg.doc_id = rr.doc_id
-           |        JOIN cc ON gg.doc_id = cc.doc_id
-           |ORDER BY gg.doc_id""".stripMargin,
-
-      "corpus_clean" -> Scrub.sqlCleanCorpus(minQuality = 0.4, maxTop2 = 0.6),
-
-      "vocab_topk" ->
-        s"""WITH t AS (SELECT unnest($toks) AS token FROM documents),
-           |f AS (SELECT token, count(*) AS freq FROM t GROUP BY 1),
-           |r AS (SELECT token, freq,
-           |  row_number() OVER (ORDER BY freq DESC, token) AS rnk FROM f)
-           |SELECT token, freq, rnk FROM r WHERE rnk <= 20 ORDER BY rnk""".stripMargin,
-
-      "doc_repetition" -> Scrub.sqlRepetition,
-
-      "pii_redact" -> {
-        val contact = "text || ' contact user' || doc_id::VARCHAR || " +
-          "'@example.com or +1-555-' || lpad((doc_id % 10000)::VARCHAR, 4, '0')"
-        s"""WITH c AS (SELECT doc_id, $contact AS contact FROM documents)
-           |SELECT doc_id, ${Scrub.sqlEmailCount("contact")}::INTEGER AS n_emails,
-           |  ${Scrub.sqlPhoneCount("contact")}::INTEGER AS n_phones,
-           |  length(${Scrub.sqlRedact("contact")})::INTEGER AS redacted_len,
-           |  md5(${Scrub.sqlRedact("contact")}) AS redacted_md5
-           |FROM c ORDER BY doc_id""".stripMargin
-      },
-
-      "decontaminate" -> Scrub.sqlContamination(benchMod = 50, shingleSize = 5),
-
-      "decontaminate_winnow" ->
-        graft.llm.Winnow.sqlContamination("doc_id % 50 = 0"),
-
-      "sample_stratified" ->
-        s"""SELECT doc_id, lang FROM documents
-           |WHERE ${Scrub.sqlStratifiedKeep("doc_id", "lang", MixRatesPpm, MixDefaultPpm, MixSeed)}
-           |ORDER BY doc_id""".stripMargin,
-
-      "pack_sequences" -> graft.llm.Pack.sqlSequences(),
-
-      "pack_boundaries" -> graft.llm.Pack.sqlBoundaries(),
-
-      "dedup_incremental" -> sqlIncremental(e => s"(($e % 10) = 9)",
-        shingleSize = 3, numPerms = 16, numBands = 4, thr = 0.5),
-
-      "dedup_bloom_gate" -> {
-        import graft.expr.PortableHash
-        def bitRows(src: String, extra: String) = (0 until BloomK).map { i =>
-          s"SELECT $extra (${PortableHash.sqlPhashSeed(i, "sig")}) % $BloomM AS bit FROM $src"
-        }.mkString("\n  UNION ALL ")
-        s"""WITH u AS (SELECT doc_id, ${graft.llm.Url.sqlSyntheticUrl} AS url
-           |           FROM documents),
-           |allr AS (SELECT doc_id, ${graft.llm.Url.sqlCanonical("url")} AS sig
-           |         FROM u),
-           |c AS (SELECT * FROM allr WHERE NOT
-           |        (((doc_id % 7) = 3 AND (doc_id % 100) < 50)
-           |         OR (doc_id % 100) >= 95)),
-           |dl AS (SELECT * FROM allr WHERE
-           |        (((doc_id % 7) = 3 AND (doc_id % 100) < 50)
-           |         OR (doc_id % 100) >= 95)),
-           |bb AS (SELECT DISTINCT bit FROM (${bitRows("c", "")})),
-           |pr AS (${bitRows("dl", "doc_id,")}),
-           |hit AS (SELECT pr.doc_id, count(*)::BIGINT AS n_set
-           |        FROM pr JOIN bb USING (bit) GROUP BY 1),
-           |td AS (SELECT DISTINCT dl.doc_id FROM dl JOIN c ON dl.sig = c.sig)
-           |SELECT dl.doc_id,
-           |  (COALESCE(hit.n_set, 0) = $BloomK) AS bloom_hit,
-           |  (td.doc_id IS NOT NULL) AS true_dup
-           |FROM dl LEFT JOIN hit ON dl.doc_id = hit.doc_id
-           |LEFT JOIN td ON dl.doc_id = td.doc_id
-           |ORDER BY dl.doc_id""".stripMargin
-      },
-
-      "tfidf_topk" -> TA.sqlTfidfTopK(k = 3),
-
-      "pack_payloads" -> graft.llm.Pack.sqlPayloads(),
-
-      "dedup_editdistance" -> {
-        val dist = "levenshtein(l.nt, r.nt)"
-        val sim = s"round(1.0 - $dist::DOUBLE / greatest(length(l.nt), length(r.nt), 1), 6)"
-        s"""WITH ${sqlLshBase(3, 16, 4)},
-           |cand AS (SELECT l.doc_id AS a, r.doc_id AS b, count(*) AS n_bands
-           |  FROM bb l JOIN bb r ON l.band = r.band AND l.bh = r.bh AND l.doc_id < r.doc_id
-           |  GROUP BY 1, 2),
-           |nt AS (SELECT doc_id,
-           |  regexp_replace(substr(${TA.sqlNormText("text")}, 1, 256),
-           |                 '[^ -~]', '?', 'g') AS nt
-           |  FROM documents)
-           |SELECT a, b, n_bands, $dist::INTEGER AS edit_dist,
-           |  $sim AS edit_sim_r, ($sim >= 0.8) AS is_dup
-           |FROM cand JOIN nt l ON a = l.doc_id JOIN nt r ON b = r.doc_id
-           |ORDER BY 1, 2""".stripMargin
-      },
-
-      "sample_reservoir" ->
-        graft.llm.Sample.sqlReservoirByGroup("documents", "lang", "doc_id",
-          k = 10, seed = "res-v1"),
-
-      "semantic_incremental" ->
-        sqlSemanticIncremental(e => s"(($e % 10) = 9)", thr = 0.4),
-
-      "text_normalize" -> {
-        // same decomposed suffix the engine plants: chr(769) = COMBINING
-        // ACUTE, chr(776) = COMBINING DIAERESIS
-        val planted = "text || ' cafe' || chr(769) || ' nai' || chr(776) || 've'"
-        val raw = TA.sqlNormText(planted)
-        s"""WITH c AS (SELECT doc_id, $raw AS raw FROM documents)
-           |SELECT doc_id, length(raw)::INTEGER AS raw_len,
-           |  length(nfc_normalize(raw))::INTEGER AS nfc_len,
-           |  (raw != nfc_normalize(raw)) AS changed,
-           |  md5(nfc_normalize(raw)) AS nfc_md5
-           |FROM c ORDER BY doc_id""".stripMargin
-      },
-
-      "boilerplate_flag" ->
-        (graft.llm.NgramModel.sqlBoilerplateFlag(BoilerN, BoilerMinDf, BoilerMaxPpm) +
-          "\nORDER BY 1"),
-
-      "lm_score" ->
-        (graft.llm.NgramModel.sqlLmScore + "\nORDER BY 1"),
-
-      "rholoss_select" -> {
-        val pm = graft.llm.NgramModel.sqlLmScoreAgainst(
-          s"doc_id % $RholossHoldoutMod <> 0", s"doc_id % $RholossHoldoutMod <> 0")
-        val hm = graft.llm.NgramModel.sqlLmScoreAgainst(
-          s"doc_id % $RholossHoldoutMod = 0", s"doc_id % $RholossHoldoutMod <> 0")
-        s"""WITH pm AS ($pm),
-           |hm AS ($hm)
-           |SELECT pm.doc_id, pm.n_bigrams,
-           |  pm.lm_ppm AS lm_pool_ppm, hm.lm_ppm AS lm_holdout_ppm,
-           |  (hm.lm_ppm - pm.lm_ppm)::BIGINT AS rho_ppm,
-           |  (hm.lm_ppm - pm.lm_ppm) > 0 AS keep
-           |FROM pm JOIN hm USING (doc_id) ORDER BY 1""".stripMargin
-      },
-
-      "bpe_pairs" -> {
-        val toks = TA.sqlTokens("text")
-        s"""WITH tk AS (SELECT unnest($toks) AS tok FROM documents),
-           |p AS (SELECT unnest([substr(tok, i, 2) for i in range(1, length(tok))]) AS pair
-           |      FROM tk WHERE length(tok) >= 2)
-           |SELECT pair, count(*)::BIGINT AS freq FROM p GROUP BY 1
-           |ORDER BY freq DESC, pair LIMIT 20""".stripMargin
-      },
-
-      "multimodal_neardup" ->
-        (MultiModal.sqlNearDupPayloads(PhashMaxHamming) + "\nORDER BY 1, 2"),
-
-      "bpe_merges" -> graft.llm.Bpe.sqlMerges(BpeMergeRounds),
-
-      "bpe_apply" -> graft.llm.Bpe.sqlApply(BpeMergeRounds),
-
-      "bpe_fertility" -> graft.llm.Bpe.sqlFertility(BpeMergeRounds),
-
-      "bpe_sweep" -> graft.llm.Bpe.sqlFertilitySweep(BpeSweepKs),
-
-      "stats_anova" -> graft.ops.Stats.sqlAnovaTypes,
-
-      "stats_kruskal" -> graft.ops.Stats.sqlKruskalTypes,
-
-      "oracle_canary" -> graft.ops.OracleCanary.sql,
-
-      "corpus_shuffle" ->
-        s"""SELECT doc_id, row_number() OVER (
-           |    ORDER BY ${graft.expr.PortableHash.sqlPhash(s"('$ShuffleSeed:' || doc_id::VARCHAR)")},
-           |             doc_id)::BIGINT AS pos
-           |FROM documents ORDER BY doc_id""".stripMargin,
-
-      "window_range_frame" ->
-        """WITH e AS (SELECT event_id, user_id, (epoch_us(ts) // 1000000) AS ts_sec,
-          |  value::DECIMAL(18,6) AS v FROM events)
-          |SELECT event_id, user_id, ts_sec,
-          |  (sum(v) OVER w)::DOUBLE AS hour_sum,
-          |  (count(*) OVER w)::BIGINT AS hour_n
-          |FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_sec
-          |  RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW)
-          |ORDER BY event_id""".stripMargin,
-
-      "events_transitions" ->
-        """WITH e AS (SELECT user_id, event_id, event_type AS to_type,
-          |  (epoch_us(ts) // 1000000) AS ts_sec FROM events),
-          |tr AS (SELECT to_type, lag(to_type) OVER (
-          |    PARTITION BY user_id ORDER BY ts_sec, event_id) AS from_type FROM e),
-          |a AS (SELECT from_type, to_type, count(*) AS n FROM tr
-          |  WHERE from_type IS NOT NULL GROUP BY 1, 2),
-          |t AS (SELECT from_type, sum(n)::BIGINT AS tot_from FROM a GROUP BY 1)
-          |SELECT a.from_type, a.to_type, a.n, t.tot_from,
-          |  (a.n * 1000000) // t.tot_from AS p_ppm
-          |FROM a JOIN t USING (from_type) ORDER BY 1, 2""".stripMargin,
-
-      "events_transition_entropy" ->
-        """WITH e AS (SELECT user_id, event_id, event_type AS to_type,
-          |  (epoch_us(ts) // 1000000) AS ts_sec FROM events),
-          |tr AS (SELECT to_type, lag(to_type) OVER (
-          |    PARTITION BY user_id ORDER BY ts_sec, event_id) AS from_type FROM e),
-          |a AS (SELECT from_type, to_type, count(*)::BIGINT AS n FROM tr
-          |  WHERE from_type IS NOT NULL GROUP BY 1, 2),
-          |t AS (SELECT from_type, sum(n)::BIGINT AS tot_from FROM a GROUP BY 1),
-          |b AS (SELECT a.from_type, t.tot_from,
-          |        a.n * (length(bin(t.tot_from // a.n)) - 1)::BIGINT AS bits
-          |      FROM a JOIN t USING (from_type))
-          |SELECT from_type, max(tot_from)::BIGINT AS n_from,
-          |  count(*)::BIGINT AS n_targets,
-          |  ((sum(bits) * 1000000) // max(tot_from))::BIGINT AS mean_bits_micro
-          |FROM b GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      "stats_benford" -> graft.ops.Stats.sqlBenford,
-
-      "quality_length_outliers" -> {
-        val toks = TA.sqlTokens("text")
-        s"""WITH lens AS (SELECT doc_id, len($toks)::BIGINT AS n_tok
-           |  FROM documents),
-           |tc AS (SELECT n_tok AS v, count(*)::BIGINT AS n_v FROM lens GROUP BY 1),
-           |cm AS (SELECT v,
-           |  sum(n_v) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum,
-           |  sum(n_v) OVER () AS nn FROM tc),
-           |m AS (SELECT (min(CASE WHEN cum >= (nn + 1) // 2 THEN v END)
-           |        + min(CASE WHEN cum >= nn // 2 + 1 THEN v END))::BIGINT
-           |        AS med2 FROM cm),
-           |dev AS (SELECT doc_id, n_tok, abs(n_tok * 2 - m.med2)::BIGINT AS dev2
-           |        FROM lens, m),
-           |tc2 AS (SELECT dev2 AS v, count(*)::BIGINT AS n_v FROM dev GROUP BY 1),
-           |cm2 AS (SELECT v,
-           |  sum(n_v) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum,
-           |  sum(n_v) OVER () AS nn FROM tc2),
-           |m2 AS (SELECT (min(CASE WHEN cum >= (nn + 1) // 2 THEN v END)
-           |        + min(CASE WHEN cum >= nn // 2 + 1 THEN v END))::BIGINT
-           |        AS mad4 FROM cm2)
-           |SELECT doc_id, n_tok, m.med2 AS median_x2, m2.mad4 AS mad_x4,
-           |  (dev.dev2 * 20000 > 44478 * m2.mad4) AS outlier
-           |FROM dev, m, m2 ORDER BY doc_id""".stripMargin
-      },
-
-      "vocab_zipf_profile" -> {
-        val toks = TA.sqlTokens("text")
-        s"""WITH tk AS (SELECT unnest($toks) AS tok FROM documents),
-           |vc AS (SELECT tok, count(*)::BIGINT AS f FROM tk GROUP BY 1),
-           |r AS (SELECT tok, f,
-           |  row_number() OVER (ORDER BY f DESC, tok)::BIGINT AS rnk FROM vc)
-           |SELECT (length(bin(rnk)) - 1)::BIGINT AS rank_bucket,
-           |  count(*)::BIGINT AS n_terms, sum(f)::BIGINT AS mass,
-           |  ((sum(length(bin(f)) - 1) * 1000000) // count(*))::BIGINT
-           |    AS mean_fbits_micro,
-           |  min(f)::BIGINT AS min_f, max(f)::BIGINT AS max_f
-           |FROM r GROUP BY 1 ORDER BY 1""".stripMargin
-      },
-
-      "graph_triangles" ->
-        (s"""WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-            |ce AS (SELECT DISTINCT l.pk AS a, r.pk AS b
-            |  FROM li l JOIN li r ON l.ok = r.ok AND l.pk < r.pk),
-            |${graft.ops.Triangles.sqlPerNode}
-            |SELECT node, tri_count FROM tpn ORDER BY node""".stripMargin),
-
-      "dedup_containment" ->
-        (s"WITH ${sqlLshBase(3, 16, 4)},\n" +
-          """cand AS (SELECT l.doc_id AS a, r.doc_id AS b, count(*) AS n_bands
-            |  FROM bb l JOIN bb r ON l.band = r.band AND l.bh = r.bh AND l.doc_id < r.doc_id
-            |  GROUP BY 1, 2),
-            |c AS (SELECT a, b, n_bands,
-            |  len(list_intersect(l.sh, r.sh))::BIGINT AS n_common,
-            |  len(l.sh)::BIGINT AS n_a, len(r.sh)::BIGINT AS n_b
-            |  FROM cand JOIN k l ON a = l.doc_id JOIN k r ON b = r.doc_id
-            |  WHERE len(l.sh) > 0 AND len(r.sh) > 0)
-            |SELECT a, b, n_bands, n_common, n_a, n_b,
-            |  (n_common * 1000000) // n_a AS contain_a_ppm,
-            |  (n_common * 1000000) // n_b AS contain_b_ppm
-            |FROM c ORDER BY 1, 2""".stripMargin),
-
-      "winnow_fingerprint" -> graft.llm.Winnow.sqlDocStats(),
-
-      "winnow_overlap" -> graft.llm.Winnow.sqlOverlap(),
-
-      "winnow_incremental" -> graft.llm.Winnow.sqlIncremental("doc_id % 10 = 9"),
-
-      "corpus_novelty" -> {
-        import graft.llm.{Dedup, TextAnalysis => TA}
-        val toks = TA.sqlTokens("text")
-        s"""WITH t AS (SELECT doc_id, $toks AS toks FROM documents),
-           |th AS (SELECT doc_id, ${Dedup.sqlTokenHashes("toks")} AS th FROM t),
-           |s AS (SELECT doc_id, ${Dedup.sqlHashedShingles("th", 3)} AS sh FROM th),
-           |p AS (SELECT doc_id, unnest(list_distinct(sh)) AS g FROM s),
-           |ow AS (SELECT g, min(doc_id) AS owner FROM p GROUP BY 1)
-           |SELECT p.doc_id, count(*) AS n_shingles,
-           |  sum(CASE WHEN ow.owner = p.doc_id THEN 1 ELSE 0 END)::BIGINT AS n_novel,
-           |  ((sum(CASE WHEN ow.owner = p.doc_id THEN 1 ELSE 0 END) * 1000000)
-           |    // count(*))::BIGINT AS novel_ppm
-           |FROM p JOIN ow ON p.g = ow.g GROUP BY 1 ORDER BY 1""".stripMargin
-      },
-
-      "mix_temperature" ->
-        s"""WITH t AS (SELECT lang, len(${graft.llm.TextAnalysis.sqlTokens("text")})::BIGINT AS n_tok
-           |  FROM documents),
-           |a AS (SELECT lang, sum(n_tok)::BIGINT AS n_tokens FROM t GROUP BY 1),
-           |w AS (SELECT lang, n_tokens,
-           |  floor(sqrt(n_tokens::DOUBLE * 1000000))::BIGINT AS w FROM a),
-           |tt AS (SELECT sum(w)::BIGINT AS sum_w, sum(n_tokens)::BIGINT AS tot FROM w)
-           |SELECT lang, n_tokens, w,
-           |  (w * 1000000) // sum_w AS share_ppm,
-           |  (w * tot) // sum_w AS target_tokens,
-           |  CASE WHEN n_tokens = 0 THEN 0 ELSE
-           |    least(1000000, (((w * tot) // sum_w) * 1000000) // n_tokens)
-           |  END AS rate_ppm
-           |FROM w, tt ORDER BY 1""".stripMargin,
-
-      "mix_temperature_sweep" ->
-        s"""WITH t AS (SELECT lang, len(${graft.llm.TextAnalysis.sqlTokens("text")})::BIGINT AS n_tok
-           |  FROM documents),
-           |a AS (SELECT lang, sum(n_tok)::BIGINT AS n_tokens FROM t GROUP BY 1),
-           |al(alpha_ppm) AS (VALUES ${MixAlphaPpms.map(a => s"(${a}::BIGINT)").mkString(", ")}),
-           |w AS (SELECT al.alpha_ppm, a.lang, a.n_tokens,
-           |  CASE WHEN al.alpha_ppm = 0 THEN 1
-           |       WHEN al.alpha_ppm = 250000
-           |         THEN floor(sqrt(sqrt(a.n_tokens::DOUBLE * 1e12)))::BIGINT
-           |       WHEN al.alpha_ppm = 500000
-           |         THEN floor(sqrt(a.n_tokens::DOUBLE * 1e6))::BIGINT
-           |       ELSE a.n_tokens END AS w
-           |  FROM a CROSS JOIN al),
-           |tt AS (SELECT alpha_ppm, sum(w)::BIGINT AS sum_w,
-           |         sum(n_tokens)::BIGINT AS tot FROM w GROUP BY 1)
-           |SELECT w.alpha_ppm, w.lang, w.n_tokens, w.w,
-           |  (w.w * 1000000) // tt.sum_w AS share_ppm,
-           |  CASE WHEN w.n_tokens = 0 THEN 0 ELSE
-           |    least(1000000, (((w.w * tt.tot) // tt.sum_w) * 1000000) // w.n_tokens)
-           |  END AS rate_ppm
-           |FROM w JOIN tt USING (alpha_ppm) ORDER BY 1, 2""".stripMargin,
-
-      "domain_caps" -> {
-        val host = graft.llm.Url.sqlCanonicalHost(graft.llm.Url.sqlSyntheticUrl)
-        s"""WITH h AS (SELECT doc_id,
-           |  $host AS host FROM documents),
-           |r AS (SELECT doc_id, host,
-           |  row_number() OVER (PARTITION BY host ORDER BY doc_id)::BIGINT
-           |    AS rank_in_domain FROM h),
-           |c AS (SELECT host, count(*)::BIGINT AS n_domain_docs FROM h GROUP BY 1)
-           |SELECT r.doc_id, r.host, c.n_domain_docs, r.rank_in_domain,
-           |  (r.rank_in_domain <= $DomainCap) AS keep
-           |FROM r JOIN c ON r.host = c.host ORDER BY r.doc_id""".stripMargin
-      },
-
-      "quality_by_domain" -> {
-        val host = graft.llm.Url.sqlCanonicalHost(graft.llm.Url.sqlSyntheticUrl)
-        s"""WITH h AS (SELECT doc_id,
-           |  $host AS host,
-           |  $toks AS toksv FROM documents),
-           |q AS (SELECT host, len(toksv)::BIGINT AS n_tok,
-           |  CAST(round(${TA.sqlQualityScore("toksv")} * $SamplePpmScale)
-           |    AS BIGINT) AS q_ppm FROM h),
-           |a AS (SELECT host, count(*)::BIGINT AS n_docs,
-           |        sum(n_tok)::BIGINT AS n_tokens, sum(q_ppm)::BIGINT AS sum_q
-           |      FROM q GROUP BY 1),
-           |g AS (SELECT sum(sum_q)::BIGINT AS gq, sum(n_docs)::BIGINT AS gn
-           |      FROM a)
-           |SELECT host, n_docs, n_tokens,
-           |  (sum_q // n_docs)::BIGINT AS mean_q_ppm,
-           |  ((sum_q // n_docs) < (gq // gn) - $DomainQualityMarginPpm
-           |    AND n_docs >= $DomainBlockMinDocs) AS flagged
-           |FROM a, g ORDER BY 1""".stripMargin
-      },
-
-      "mix_epochs" ->
-        s"""WITH t AS (SELECT lang, len(${graft.llm.TextAnalysis.sqlTokens("text")})::BIGINT AS n_tok
-           |  FROM documents),
-           |a AS (SELECT lang, sum(n_tok)::BIGINT AS n_tokens FROM t GROUP BY 1),
-           |w AS (SELECT lang, n_tokens,
-           |  floor(sqrt(n_tokens::DOUBLE * 1000000))::BIGINT AS w FROM a),
-           |tt AS (SELECT sum(w)::BIGINT AS sum_w, sum(n_tokens)::BIGINT AS tot FROM w),
-           |tgt AS (SELECT lang, n_tokens,
-           |  ((w::HUGEINT * tot * $EpochBudgetX) // sum_w)::BIGINT AS target_tokens
-           |  FROM w, tt),
-           |e AS (SELECT lang, n_tokens, target_tokens,
-           |  least($MaxEpochs * 1000000,
-           |    ((target_tokens::HUGEINT * 1000000) // n_tokens))::BIGINT AS epochs_ppm
-           |  FROM tgt)
-           |SELECT lang, n_tokens, target_tokens, epochs_ppm,
-           |  ((n_tokens::HUGEINT * epochs_ppm) // 1000000)::BIGINT AS served_tokens,
-           |  greatest(0, target_tokens -
-           |    ((n_tokens::HUGEINT * epochs_ppm) // 1000000))::BIGINT AS deficit_tokens
-           |FROM e ORDER BY lang""".stripMargin,
-
-      "mix_doremi" ->
-        s"""WITH lm AS (${graft.llm.NgramModel.sqlLmScore}),
-           |j AS (SELECT d.lang, lm.n_bigrams,
-           |        ($SamplePpmScale - lm.lm_ppm)::HUGEINT * lm.n_bigrams AS loss_mass
-           |      FROM documents d JOIN lm USING (doc_id)
-           |      WHERE lm.n_bigrams > 0),
-           |a AS (SELECT lang, count(*)::BIGINT AS n_docs,
-           |        sum(n_bigrams)::BIGINT AS n_bigrams,
-           |        (sum(loss_mass) // sum(n_bigrams))::BIGINT AS loss_ppm
-           |      FROM j GROUP BY 1),
-           |tt AS (SELECT (CASE WHEN coalesce(sum(n_bigrams), 0) = 0 THEN 0
-           |         ELSE sum(loss_mass) // sum(n_bigrams) END)::BIGINT AS ref_ppm
-           |       FROM j)
-           |SELECT lang, n_docs, n_bigrams, loss_ppm, ref_ppm,
-           |  greatest(0, loss_ppm - ref_ppm)::BIGINT AS excess_ppm,
-           |  (($DoremiEtaPpm * greatest(0, loss_ppm - ref_ppm))
-           |    // 1000000)::BIGINT AS logw_delta_ppm
-           |FROM a, tt ORDER BY lang""".stripMargin,
-
-      "dataset_card" -> {
-        val host = graft.llm.Url.sqlCanonicalHost(graft.llm.Url.sqlSyntheticUrl)
-        s"""WITH t AS (SELECT doc_id, text, lang, n_chars,
-           |  $host AS host,
-           |  ${TA.sqlTokens("text")} AS toksv FROM documents),
-           |p AS (SELECT len(toksv)::BIGINT AS n_tok, n_chars, lang, host,
-           |  ${graft.llm.Dedup.sqlFingerprint("text")} AS fp,
-           |  CASE WHEN ${Scrub.sqlEmailCount("text")}
-           |         + ${Scrub.sqlPhoneCount("text")} > 0
-           |       THEN 1 ELSE 0 END AS has_pii,
-           |  CAST(round(${TA.sqlQualityScore("toksv")} * $SamplePpmScale)
-           |    AS BIGINT) AS q_ppm FROM t),
-           |a AS (SELECT count(*)::BIGINT AS n_docs,
-           |        sum(n_tok)::BIGINT AS n_tokens,
-           |        sum(n_chars)::BIGINT AS n_chars,
-           |        count(DISTINCT lang)::BIGINT AS n_langs,
-           |        count(DISTINCT host)::BIGINT AS n_hosts,
-           |        count(DISTINCT fp)::BIGINT AS n_unique,
-           |        sum(has_pii)::BIGINT AS pii_docs,
-           |        sum(q_ppm)::BIGINT AS q_sum
-           |      FROM p)
-           |SELECT metric, value FROM (
-           |  SELECT 'dup_docs' AS metric, (n_docs - n_unique)::BIGINT AS value FROM a
-           |  UNION ALL SELECT 'dup_ppm',
-           |    (CASE WHEN n_docs = 0 THEN 0
-           |     ELSE ((n_docs - n_unique) * 1000000) // n_docs END)::BIGINT FROM a
-           |  UNION ALL SELECT 'mean_quality_ppm',
-           |    (CASE WHEN n_docs = 0 THEN 0
-           |     ELSE q_sum // n_docs END)::BIGINT FROM a
-           |  UNION ALL SELECT 'n_chars', n_chars FROM a
-           |  UNION ALL SELECT 'n_docs', n_docs FROM a
-           |  UNION ALL SELECT 'n_hosts', n_hosts FROM a
-           |  UNION ALL SELECT 'n_langs', n_langs FROM a
-           |  UNION ALL SELECT 'n_tokens', n_tokens FROM a
-           |  UNION ALL SELECT 'pii_docs', pii_docs FROM a)
-           |ORDER BY metric""".stripMargin
-      },
-
-      "market_basket" ->
-        (s"WITH $sqlCoPurchasePairs,\n" +
-          """tt AS (SELECT count(DISTINCT ok)::BIGINT AS n_orders FROM li),
-           |f AS (SELECT pk, count(*)::BIGINT AS n_part FROM li GROUP BY 1)
-           |SELECT a, b, n_ab, fa.n_part AS n_a, fb.n_part AS n_b,
-           |  (n_ab * 1000000) // fa.n_part AS conf_ab_ppm,
-           |  (n_ab * 1000000) // fb.n_part AS conf_ba_ppm,
-           |  ((n_ab::HUGEINT * n_orders * 1000000) //
-           |   (fa.n_part::HUGEINT * fb.n_part))::BIGINT AS lift_ppm
-           |FROM pr JOIN f fa ON a = fa.pk JOIN f fb ON b = fb.pk, tt
-           |ORDER BY 1, 2""".stripMargin),
-
-      "join_asof_nearest" ->
-        s"""WITH e AS (SELECT event_id, user_id, event_type,
-           |  (epoch_us(ts) // 1000000) AS sec FROM events),
-           |p AS (SELECT event_id, user_id, sec AS ts_sec FROM e WHERE event_type = 'purchase'),
-           |c AS (SELECT event_id AS click_id, user_id, sec AS click_sec FROM e
-           |  WHERE event_type = 'click'),
-           |j AS (SELECT p.event_id, c.click_id, c.click_sec,
-           |    abs(p.ts_sec - c.click_sec) AS dist
-           |  FROM p JOIN c USING (user_id)
-           |  WHERE abs(p.ts_sec - c.click_sec) <= $NearestTolSec),
-           |r AS (SELECT *, row_number() OVER (PARTITION BY event_id
-           |    ORDER BY dist, click_sec, click_id) AS rn FROM j)
-           |SELECT p.event_id, p.user_id, p.ts_sec, r.click_sec, r.click_id, r.dist
-           |FROM p LEFT JOIN r ON p.event_id = r.event_id AND r.rn = 1
-           |ORDER BY p.event_id""".stripMargin,
-
-      "embedding_gram" ->
-        // cell sums guard the SAME 2^63 bound the Spark GramAgg long
-        // accumulator throws at (Math.addExact) — loud on BOTH engines,
-        // never a HUGEINT-silently-succeeds asymmetry
-        s"""WITH q AS (SELECT vec_id,
-           |  ${graft.llm.Quantizer.sqlQuantize("embedding")} AS q FROM embeddings),
-           |p AS (SELECT r1.range::INTEGER AS i, r2.range::INTEGER AS j,
-           |        q[r1.range + 1] AS qi, q[r2.range + 1] AS qj
-           |      FROM q CROSS JOIN range(${Similarity.Dim}) r1
-           |        CROSS JOIN range(${Similarity.Dim}) r2
-           |      WHERE r1.range <= r2.range),
-           |c AS (SELECT i, j, count(*)::BIGINT AS n,
-           |        sum(qi::DECIMAL(38,0) * qj) AS sxy,
-           |        sum(qi::DECIMAL(38,0)) AS sx, sum(qj::DECIMAL(38,0)) AS sy
-           |      FROM p GROUP BY 1, 2)
-           |SELECT i::BIGINT AS i, j::BIGINT AS j, n,
-           |  (CASE WHEN abs(sxy) > 9223372036854775807
-           |        THEN error('embedding_gram: cell exceeds the BIGINT accumulator bound')
-           |        ELSE sxy END)::BIGINT AS gram,
-           |  (n::DECIMAL(38,0) * sxy - sx * sy)::BIGINT AS cov_num
-           |FROM c ORDER BY 1, 2""".stripMargin,
-
-      "events_active_users" ->
-        """WITH au AS (SELECT DISTINCT epoch_us(ts) // 86400000000 AS day, user_id
-          |            FROM events),
-          |dau AS (SELECT day, count(*)::BIGINT AS dau FROM au GROUP BY 1),
-          |wx AS (SELECT DISTINCT au.day + r.range AS day, user_id
-          |       FROM au, range(7) r),
-          |wau AS (SELECT day, count(*)::BIGINT AS wau FROM wx GROUP BY 1)
-          |SELECT dau.day::BIGINT AS day, dau.dau, wau.wau
-          |FROM dau JOIN wau USING (day) ORDER BY 1""".stripMargin,
-
-      "events_churn" ->
-        """WITH uw AS (SELECT DISTINCT epoch_us(ts) // 604800000000 AS wk, user_id
-          |            FROM events),
-          |cur AS (SELECT wk, user_id, 1 AS in_cur FROM uw),
-          |nxt AS (SELECT wk - 1 AS wk, user_id, 1 AS in_next FROM uw),
-          |j AS (SELECT coalesce(cur.wk, nxt.wk) AS wk, cur.in_cur, nxt.in_next
-          |      FROM cur FULL OUTER JOIN nxt
-          |        ON cur.wk = nxt.wk AND cur.user_id = nxt.user_id)
-          |SELECT wk::BIGINT AS wk,
-          |  sum(coalesce(in_cur, 0))::BIGINT AS n_active,
-          |  sum(CASE WHEN in_cur IS NOT NULL AND in_next IS NOT NULL
-          |      THEN 1 ELSE 0 END)::BIGINT AS n_retained,
-          |  sum(CASE WHEN in_cur IS NOT NULL AND in_next IS NULL
-          |      THEN 1 ELSE 0 END)::BIGINT AS n_churned,
-          |  sum(CASE WHEN in_cur IS NULL AND in_next IS NOT NULL
-          |      THEN 1 ELSE 0 END)::BIGINT AS n_new_next
-          |FROM j GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      "pack_nosplit" -> graft.llm.Pack.sqlNosplit(),
-
-      "pack_fill" -> graft.llm.Pack.sqlFillStats(),
-
-      "pack_sweep" -> graft.llm.Pack.sqlSweep(),
-
-      "vocab_oov" -> {
-        val toks = TA.sqlTokens("text")
-        val deco = "(CASE WHEN doc_id % 20 = 9 THEN text || ' novel' || doc_id::VARCHAR ELSE text END)"
-        val dtoks = TA.sqlTokens(deco)
-        s"""WITH known AS (SELECT DISTINCT unnest($toks) AS word
-           |  FROM documents WHERE doc_id % 10 <> 9),
-           |bw AS (SELECT doc_id, unnest($dtoks) AS word
-           |  FROM documents WHERE doc_id % 10 = 9),
-           |pd AS (SELECT bw.doc_id, count(*)::BIGINT AS n_words,
-           |         sum(CASE WHEN known.word IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_oov
-           |       FROM bw LEFT JOIN known ON bw.word = known.word
-           |       GROUP BY 1)
-           |SELECT d.doc_id AS doc_id, coalesce(pd.n_words, 0)::BIGINT AS n_words,
-           |  coalesce(pd.n_oov, 0)::BIGINT AS n_oov,
-           |  (CASE WHEN coalesce(pd.n_words, 0) = 0 THEN 0
-           |        ELSE (pd.n_oov * 1000000) // pd.n_words END)::BIGINT AS oov_ppm
-           |FROM (SELECT doc_id FROM documents WHERE doc_id % 10 = 9) d
-           |LEFT JOIN pd ON d.doc_id = pd.doc_id
-           |ORDER BY d.doc_id""".stripMargin
-      },
-
-      "readability_fk" -> graft.llm.Readability.sqlFk,
-
-      "quality_surprisal" -> graft.llm.Surprisal.sqlPerDoc,
-
-      "quality_char_entropy" -> graft.llm.Surprisal.sqlPerDocChars,
-
-      "dedup_softdedup" -> graft.llm.Weighting.sqlSoftDedup,
-
-      "sample_poisson_epochs" -> graft.llm.Weighting.sqlPoissonEpochs,
-
-      "stats_cohens_d" -> graft.ops.Stats.sqlCohensDPairs,
-
-      "stats_ks_pairs" -> graft.ops.Stats.sqlKsPairs,
-
-      "events_gap_burstiness" -> graft.ops.Stats.sqlBurstiness,
-
-      "stats_spearman" -> {
-        val toks = TA.sqlTokens("text")
-        s"""WITH t AS (SELECT doc_id, $toks AS toksv FROM documents),
-           |base AS (SELECT len(toksv)::BIGINT AS x,
-           |  CAST(round(${TA.sqlQualityScore("toksv")} * $SamplePpmScale)
-           |    AS BIGINT) AS y FROM t),
-           |${graft.ops.Stats.sqlSpearmanTail}""".stripMargin
-      },
-
-      "tokenizer_compression" -> {
-        val toks = TA.sqlTokens("text")
-        s"""WITH t AS (SELECT source, length(text)::BIGINT AS n_chars,
-           |    len($toks)::BIGINT AS n_tok,
-           |    (${TA.sqlSubtokenCount("text")})::BIGINT AS n_sub
-           |  FROM documents),
-           |a AS (SELECT source, count(*)::BIGINT AS n_docs,
-           |    sum(n_chars)::BIGINT AS sum_chars,
-           |    sum(n_tok)::BIGINT AS sum_tokens,
-           |    sum(n_sub)::BIGINT AS sum_subtokens FROM t GROUP BY 1)
-           |SELECT source, n_docs, sum_chars, sum_tokens, sum_subtokens,
-           |  (CASE WHEN sum_tokens = 0 THEN 0
-           |        ELSE (sum_chars * 1000000) // sum_tokens END)::BIGINT
-           |    AS chars_per_token_ppm,
-           |  (CASE WHEN sum_subtokens = 0 THEN 0
-           |        ELSE (sum_chars * 1000000) // sum_subtokens END)::BIGINT
-           |    AS chars_per_subtoken_ppm,
-           |  (CASE WHEN sum_tokens = 0 THEN 0
-           |        ELSE (sum_subtokens * 1000000) // sum_tokens END)::BIGINT
-           |    AS fertility_ppm
-           |FROM a ORDER BY 1""".stripMargin
-      },
-
-      "quality_url_blocklist" -> {
-        val bl = UrlBlocklist.map(h => s"'$h'").mkString(", ")
-        s"""WITH u AS (SELECT doc_id, ${graft.llm.Url.sqlSyntheticUrl} AS raw
-           |  FROM documents),
-           |h AS (SELECT doc_id, ${graft.llm.Url.sqlCanonicalHost("raw")} AS host,
-           |        raw FROM u)
-           |SELECT doc_id, host, host IN ($bl) AS host_blocked,
-           |  contains(raw, 'session=') AS tracking_flag,
-           |  NOT (host IN ($bl)) AS keep
-           |FROM h ORDER BY doc_id""".stripMargin
-      },
-
-      "embedding_norm_outliers" ->
-        s"""WITH q AS (SELECT vec_id,
-           |    list_sum([y * y for y in ${graft.llm.Quantizer.sqlQuantize("embedding")}])::BIGINT
-           |      AS norm2_q
-           |  FROM embeddings),
-           |m AS (SELECT sum(norm2_q)::HUGEINT // count(*) AS mean_norm2 FROM q)
-           |SELECT vec_id, norm2_q,
-           |  CASE WHEN norm2_q * 4 < mean_norm2 THEN 'low'
-           |       WHEN norm2_q > mean_norm2 * 4 THEN 'high'
-           |       ELSE 'ok' END AS flag
-           |FROM q, m ORDER BY vec_id""".stripMargin,
-
-      "quality_bigram_surprisal" -> graft.llm.Surprisal.sqlPerDocBigram,
-
-      "quality_perplexity_buckets" ->
-        (s"""WITH base AS (SELECT * FROM (${graft.llm.Surprisal.sqlPerDoc}) q
-            |              WHERE n_tok > 0),
-            |nt AS (SELECT *, ntile(10) OVER (ORDER BY mean_bits_micro, doc_id)
-            |         AS decile FROM base)
-            |SELECT decile, count(*)::BIGINT AS n_docs,
-            |  sum(n_tok)::BIGINT AS n_tokens,
-            |  min(mean_bits_micro)::BIGINT AS min_bits_micro,
-            |  max(mean_bits_micro)::BIGINT AS max_bits_micro
-            |FROM nt GROUP BY 1 ORDER BY 1""".stripMargin),
-
-      "stats_levene" -> graft.ops.Stats.sqlLeveneTypes,
-
-      "vocab_hapax" -> graft.llm.Diversity.sqlHapax,
-
-      "events_interarrival" -> graft.ops.Interarrival.sqlHistogram,
-
-      "stats_median_exact" -> graft.ops.Stats.sqlMedianTypes,
-
-      "stats_mannwhitney" -> graft.ops.Stats.sqlMannWhitneyPairs,
-
-      "graph_degree_gini" ->
-        (s"""WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-            |ce AS (SELECT DISTINCT l.pk AS a, r.pk AS b
-            |  FROM li l JOIN li r ON l.ok = r.ok AND l.pk < r.pk),
-            |cnt AS (SELECT node AS id, count(*)::BIGINT AS v FROM (
-            |  SELECT a AS node FROM ce UNION ALL SELECT b AS node FROM ce)
-            |  GROUP BY 1),
-            |${graft.ops.Gini.sqlPpm}""".stripMargin),
-
-      "events_user_gini" ->
-        (s"""WITH cnt AS (SELECT user_id AS id, count(*)::BIGINT AS v
-            |  FROM events GROUP BY 1),
-            |${graft.ops.Gini.sqlPpm}""".stripMargin),
-
-      "graph_clustering" ->
-        (s"""WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-            |ce AS (SELECT DISTINCT l.pk AS a, r.pk AS b
-            |  FROM li l JOIN li r ON l.ok = r.ok AND l.pk < r.pk),
-            |${graft.ops.Triangles.sqlPerNode},
-            |wd AS (SELECT count(*)::BIGINT AS n_nodes,
-            |  sum(deg::HUGEINT * (deg - 1)) AS w2 FROM dg),
-            |tr AS (SELECT coalesce(sum(tri_count), 0)::HUGEINT AS tri3 FROM tpn),
-            |ne AS (SELECT count(*)::BIGINT AS n_edges FROM ce)
-            |SELECT n_nodes, n_edges, (w2 // 2)::BIGINT AS n_wedges,
-            |  (tri3 // 3)::BIGINT AS n_triangles,
-            |  (CASE WHEN w2 = 0 THEN 0
-            |        ELSE (tri3 * 2000000) // w2 END)::BIGINT AS cc_ppm
-            |FROM wd, tr, ne""".stripMargin),
-
-      "vocab_simpson" -> graft.llm.Diversity.sqlSimpson,
-
-      "vocab_zipf_slope" ->
-        s"""WITH vc AS (SELECT tok, count(*)::BIGINT AS f
-           |  FROM (SELECT unnest($toks) AS tok FROM documents) GROUP BY 1),
-           |r AS (SELECT tok, f,
-           |        row_number() OVER (ORDER BY f DESC, tok) AS r FROM vc),
-           |p AS (SELECT (length(bin(r)) - 1)::HUGEINT AS x,
-           |             (length(bin(f)) - 1)::HUGEINT AS y FROM r),
-           |a AS (SELECT count(*)::HUGEINT AS n, sum(x) AS sx, sum(y) AS sy,
-           |        sum(x * y) AS sxy, sum(x * x) AS sxx FROM p)
-           |SELECT n::BIGINT AS n_types,
-           |  CASE WHEN (n * sxx - sx * sx) = 0 THEN 0.0
-           |       ELSE round((n * sxy - sx * sy)::DOUBLE
-           |              / (n * sxx - sx * sx)::DOUBLE, 6) END AS slope_r,
-           |  CASE WHEN (n * sxx - sx * sx) = 0 THEN 0.0
-           |       ELSE round((sy * sxx - sx * sxy)::DOUBLE
-           |              / (n * sxx - sx * sx)::DOUBLE, 6) END AS icept_r
-           |FROM a""".stripMargin,
-
-      "graph_assortativity" ->
-        s"""WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-           |  FROM lineitem),
-           |ce AS (SELECT DISTINCT l.pk AS a, r.pk AS b
-           |  FROM li l JOIN li r ON l.ok = r.ok AND l.pk < r.pk),
-           |${graft.ops.Assortativity.sqlDegreeCorr}""".stripMargin,
-
-      "graph_rich_club" ->
-        s"""WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-           |  FROM lineitem),
-           |ce AS (SELECT DISTINCT l.pk AS a, r.pk AS b
-           |  FROM li l JOIN li r ON l.ok = r.ok AND l.pk < r.pk),
-           |${graft.ops.RichClub.sqlRichClub()}""".stripMargin,
-
-      "vocab_coverage" ->
-        s"""WITH i AS (SELECT source, unnest($toks) AS tok FROM documents),
-           |c AS (SELECT source, tok, count(*)::BIGINT AS c FROM i GROUP BY 1, 2),
-           |r AS (SELECT source, tok, c, row_number() OVER (PARTITION BY source
-           |        ORDER BY c DESC, tok) AS rn FROM c),
-           |tot AS (SELECT source, sum(c)::BIGINT AS n_tok,
-           |        count(*)::BIGINT AS n_vocab FROM c GROUP BY 1),
-           |ks AS (SELECT unnest([${CoverageKs.mkString(", ")}]) AS k)
-           |SELECT r.source, ks.k::BIGINT AS k, tot.n_vocab, tot.n_tok,
-           |  ((sum(r.c) * 1000000) // tot.n_tok)::BIGINT AS mass_ppm
-           |FROM r JOIN ks ON r.rn <= ks.k
-           |  JOIN tot ON r.source = tot.source
-           |GROUP BY 1, 2, 3, 4 ORDER BY 1, 2""".stripMargin,
-
-      "stats_profile" ->
-        graft.ops.Profile.sqlProfile("lineitem", ProfileCols),
-
-      "substring_dedup" -> graft.llm.Substring.sqlPostings(SubstrWinTok),
-
-      "doc_dup_frac" -> graft.llm.Substring.sqlDupFrac(SubstrWinTok),
-
-      "doc_dup_spans" -> graft.llm.Substring.sqlDupSpans(SubstrWinTok),
-
-      "substring_incremental" ->
-        graft.llm.Substring.sqlIncremental("doc_id % 10 = 9", SubstrWinTok),
-
-      "substring_scrub" -> graft.llm.Substring.sqlScrub(SubstrWinTok),
-
-      "line_dedup" -> graft.llm.Lines.sqlPostings(),
-
-      "sample_cluster_balanced" ->
-        (s"WITH RECURSIVE ${sqlNearDupCte(0.4)},\n" +
-          s"""e AS (SELECT a, b FROM ndp UNION ALL SELECT b, a FROM ndp),
-            |reach AS (
-            |  SELECT a AS id, b AS r FROM e
-            |  UNION
-            |  SELECT reach.id, e.b FROM reach JOIN e ON reach.r = e.a),
-            |cl AS (SELECT id AS vec_id, least(id, min(r)) AS cluster_id
-            |       FROM reach GROUP BY id),
-            |m AS (SELECT v.vec_id,
-            |        COALESCE(cl.cluster_id, v.vec_id) AS cluster_id,
-            |        ${graft.expr.PortableHash.sqlPhash("('cbal-v1:' || v.vec_id::VARCHAR)")} AS hv
-            |      FROM embeddings v LEFT JOIN cl ON v.vec_id = cl.vec_id),
-            |r AS (SELECT vec_id, cluster_id, hv,
-            |        row_number() OVER (PARTITION BY cluster_id ORDER BY hv, vec_id) AS rnk,
-            |        count(*) OVER (PARTITION BY cluster_id) AS n_members FROM m)
-            |SELECT vec_id, cluster_id, n_members::BIGINT AS n_members,
-            |  rnk::BIGINT AS rnk, ceil(sqrt(n_members::DOUBLE))::BIGINT AS target,
-            |  (rnk <= ceil(sqrt(n_members::DOUBLE))) AS keep
-            |FROM r ORDER BY vec_id""".stripMargin),
-
-      "coreset_kcenter" -> graft.llm.Coreset.sqlKcenter(),
-
-      "coreset_assign" -> graft.llm.Coreset.sqlAssign(),
-
-      "line_scrub" -> graft.llm.Lines.sqlScrub(),
-
-      "line_incremental" ->
-        graft.llm.Lines.sqlIncremental("doc_id % 10 = 9"),
-
-      "corpus_divergence" -> graft.llm.Divergence.sqlPairwiseTV,
-
-      "source_classifier" -> graft.llm.Divergence.sqlSourceClassifier,
-
-      "quality_report" ->
-        s"""WITH b AS (SELECT doc_id, source,
-           |  CAST(round(${TA.sqlQualityScore(toks)} * $SamplePpmScale)
-           |    AS BIGINT) AS q_ppm FROM documents),
-           |r AS (SELECT source, q_ppm,
-           |        row_number() OVER (PARTITION BY source
-           |          ORDER BY q_ppm, doc_id) AS rnk,
-           |        count(*) OVER (PARTITION BY source)::BIGINT AS n FROM b),
-           |ps AS (SELECT unnest([${QualityPs.mkString(", ")}]) AS p)
-           |SELECT r.source, ps.p::BIGINT AS p, r.n, r.q_ppm AS q_ppm_at_p
-           |FROM r JOIN ps ON r.rnk = ((r.n - 1) * ps.p) // 100 + 1
-           |ORDER BY 1, 2""".stripMargin,
-
-      "quality_ks" ->
-        s"""WITH b AS (SELECT source,
-           |  CAST(round(${TA.sqlQualityScore(toks)} * $SamplePpmScale)
-           |    AS BIGINT) AS v FROM documents),
-           |svc AS (SELECT source, v, count(*)::BIGINT AS c FROM b GROUP BY 1, 2),
-           |ax AS (SELECT DISTINCT v FROM svc),
-           |sn AS (SELECT source, sum(c)::BIGINT AS n_src FROM svc GROUP BY 1),
-           |tot AS (SELECT sum(c)::BIGINT AS n FROM svc),
-           |grid AS (SELECT sn.source, ax.v, coalesce(svc.c, 0)::BIGINT AS c
-           |  FROM sn CROSS JOIN ax
-           |  LEFT JOIN svc ON svc.source = sn.source AND svc.v = ax.v),
-           |cum AS (SELECT source, v,
-           |  sum(c) OVER (PARTITION BY source ORDER BY v)::BIGINT AS cum_src
-           |  FROM grid),
-           |ca AS (SELECT v, sum(cum_src)::BIGINT AS cum_all FROM cum GROUP BY 1),
-           |g AS (SELECT cum.source, sn.n_src, cum.v,
-           |  abs((cum_src::HUGEINT * 1000000) // n_src
-           |    - ((cum_all - cum_src)::HUGEINT * 1000000)
-           |      // (n - n_src))::BIGINT AS gap_ppm
-           |  FROM cum JOIN ca USING (v) JOIN sn USING (source), tot
-           |  WHERE n > n_src)
-           |SELECT source, n_src AS n_docs, gap_ppm AS ks_ppm,
-           |  v AS q_ppm_at_max
-           |FROM (SELECT *, row_number() OVER (PARTITION BY source
-           |        ORDER BY gap_ppm DESC, v) AS r FROM g)
-           |WHERE r = 1 ORDER BY source""".stripMargin,
-
-      "sample_importance" ->
-        s"""WITH q AS (SELECT doc_id, lang,
-           |  CAST(round(${TA.sqlQualityScore(toks)} * $SamplePpmScale)
-           |    AS BIGINT) AS w_ppm FROM documents)
-           |SELECT doc_id, lang, w_ppm FROM q
-           |WHERE (${graft.expr.PortableHash.sqlPhash(
-                s"'$ImportanceSeed:' || doc_id::VARCHAR")} % $SamplePpmScale) < w_ppm
-           |ORDER BY doc_id""".stripMargin,
-
-      "dsir_weights" ->
-        s"""WITH $sqlDsirCtes
-           |SELECT d.doc_id, coalesce(nf, 0)::BIGINT AS n_feats,
-           |  coalesce(sp, 0)::BIGINT AS score_ppm,
-           |  coalesce(sp > 0, FALSE) AS keep
-           |FROM documents d LEFT JOIN sc2 USING (doc_id)
-           |ORDER BY d.doc_id""".stripMargin,
-
-      "dsir_select" ->
-        s"""WITH $sqlDsirCtes,
-           |alls AS (SELECT d.doc_id, coalesce(sp, 0)::BIGINT AS score_ppm
-           |  FROM documents d LEFT JOIN sc2 USING (doc_id))
-           |SELECT doc_id, score_ppm, quartile, quartile = 4 AS keep FROM (
-           |  SELECT doc_id, score_ppm,
-           |    ntile(4) OVER (ORDER BY score_ppm, doc_id) AS quartile
-           |  FROM alls)
-           |ORDER BY doc_id""".stripMargin,
-
-      "k_anonymity" ->
-        s"""WITH q AS (SELECT c_nationkey, c_mktsegment,
-           |  CAST(floor(c_acctbal / 1000.0) AS BIGINT) AS bal_bin FROM customer),
-           |g AS (SELECT c_nationkey, c_mktsegment, bal_bin,
-           |  count(*)::BIGINT AS k_size FROM q GROUP BY 1, 2, 3)
-           |SELECT k_size, count(*)::BIGINT AS n_groups,
-           |  (k_size * count(*))::BIGINT AS n_users,
-           |  CASE WHEN k_size < $KAnonRiskK THEN 1 ELSE 0 END AS at_risk
-           |FROM g GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      "scd2_history" ->
-        s"""WITH $sqlScd2Cte
-           |SELECT user_id, ver, event_type, valid_from, valid_to, n_events
-           |FROM scd ORDER BY user_id, ver""".stripMargin,
-
-      "join_scd2" ->
-        s"""WITH $sqlScd2Cte,
-           |ev AS (SELECT event_id, user_id, epoch_us(ts) * 1000 AS ts_ns
-           |  FROM events)
-           |SELECT ev.event_id, ev.user_id, s.ver, s.event_type AS dim_type
-           |FROM ev JOIN scd s ON ev.user_id = s.user_id
-           |  AND (ev.ts_ns, ev.event_id) >= (s.valid_from, s.valid_from_id)
-           |  AND (s.valid_to = -1
-           |    OR (ev.ts_ns, ev.event_id) < (s.valid_to, s.valid_to_id))
-           |ORDER BY ev.event_id""".stripMargin,
-
-      "cdc_changelog" ->
-        """WITH e AS (SELECT user_id, event_id, event_type,
-          |  epoch_us(ts) * 1000 AS ts_ns,
-          |  epoch_us(ts) // 86400000000 AS day FROM events),
-          |m AS (SELECT max(day) AS maxd FROM e),
-          |rn AS (SELECT user_id, event_type, row_number() OVER
-          |  (PARTITION BY user_id ORDER BY ts_ns DESC, event_id DESC) AS r
-          |  FROM e),
-          |nw AS (SELECT user_id, event_type AS new_type FROM rn WHERE r = 1),
-          |rno AS (SELECT user_id, event_type, row_number() OVER
-          |  (PARTITION BY user_id ORDER BY ts_ns DESC, event_id DESC) AS r
-          |  FROM e, m WHERE day < maxd),
-          |ol AS (SELECT user_id, event_type AS old_type FROM rno WHERE r = 1)
-          |SELECT nw.user_id, coalesce(ol.old_type, '') AS old_type,
-          |  nw.new_type,
-          |  CASE WHEN ol.old_type IS NULL THEN 'I'
-          |       WHEN ol.old_type <> nw.new_type THEN 'U'
-          |       ELSE '=' END AS op
-          |FROM nw LEFT JOIN ol USING (user_id) ORDER BY nw.user_id""".stripMargin,
-
-      "stats_corr" ->
-        s"""WITH m AS (SELECT
-           |  CAST(round(l_quantity * 100) AS HUGEINT) AS q,
-           |  CAST(round(l_extendedprice * 100) AS HUGEINT) AS p,
-           |  CAST(round(l_discount * 10000) AS HUGEINT) AS dc,
-           |  CAST(round(l_tax * 10000) AS HUGEINT) AS tx FROM lineitem),
-           |u AS (${CorrPairs.map { case (x, y) =>
-                s"SELECT '$x' AS xcol, '$y' AS ycol, $x AS x, $y AS y FROM m"
-              }.mkString("\n  UNION ALL ")}),
-           |a AS (SELECT xcol, ycol, count(*)::HUGEINT AS n,
-           |  sum(x) AS sx, sum(y) AS sy, sum(x * y) AS sxy,
-           |  sum(x * x) AS sxx, sum(y * y) AS syy
-           |  FROM u GROUP BY 1, 2)
-           |SELECT xcol, ycol, n::BIGINT AS n,
-           |  round((n * sxy - sx * sy)::DOUBLE /
-           |    sqrt((n * sxx - sx * sx)::DOUBLE * (n * syy - sy * sy)::DOUBLE),
-           |    6) AS corr_r
-           |FROM a ORDER BY 1, 2""".stripMargin,
-
-      "eval_auc" ->
-        s"""WITH gg AS (${graft.llm.Gopher.sqlGates.replace("ORDER BY doc_id", "")}),
-           |t AS (SELECT doc_id, ${TA.sqlTokens("text")} AS toks FROM documents),
-           |s AS (SELECT t.doc_id,
-           |  CASE WHEN gg.gopher_pass THEN 1 ELSE 0 END AS label,
-           |  CAST(round(${TA.sqlQualityScore("toks")} * 1000000) AS BIGINT)
-           |    AS score_ppm
-           |  FROM t JOIN gg ON t.doc_id = gg.doc_id),
-           |r AS (SELECT label, score_ppm,
-           |  row_number() OVER (ORDER BY score_ppm, doc_id) AS rnk FROM s),
-           |g AS (SELECT score_ppm, sum(label) AS pos, count(*) AS cnt,
-           |  min(rnk) AS lo, max(rnk) AS hi FROM r GROUP BY 1),
-           |a AS (SELECT sum(pos)::BIGINT AS n_pos,
-           |  sum(cnt - pos)::BIGINT AS n_neg,
-           |  sum(pos * (lo + hi))::BIGINT AS r2 FROM g)
-           |SELECT n_pos, n_neg,
-           |  (r2 - n_pos * (n_pos + 1))::BIGINT AS u2,
-           |  CASE WHEN n_pos * n_neg = 0 THEN 0.0
-           |       ELSE round((r2 - n_pos * (n_pos + 1))::DOUBLE /
-           |                  (n_pos * n_neg * 2)::DOUBLE, 6) END AS auc_r
-           |FROM a""".stripMargin,
-
-      "stats_bootstrap" -> graft.ops.Bootstrap.sqlMeanCi(),
-
-      "stats_chisq" ->
-        """WITH c AS (SELECT event_type,
-          |  (epoch_us(ts) // 3600000000) % 24 AS hod,
-          |  count(*)::HUGEINT AS o FROM events GROUP BY 1, 2),
-          |rt AS (SELECT event_type, sum(o) AS rt FROM c GROUP BY 1),
-          |ct AS (SELECT hod, sum(o) AS ct FROM c GROUP BY 1),
-          |n1 AS (SELECT sum(o) AS nn,
-          |  count(DISTINCT event_type)::BIGINT AS n_types,
-          |  count(DISTINCT hod)::BIGINT AS n_hods FROM c)
-          |SELECT nn::BIGINT AS n,
-          |  ((n_types - 1) * (n_hods - 1))::BIGINT AS dof,
-          |  (sum((c.o * c.o * nn * 1000000) // (rt.rt * ct.ct))
-          |   - nn * 1000000)::BIGINT AS chisq_micro
-          |FROM c JOIN rt USING (event_type) JOIN ct USING (hod)
-          |     CROSS JOIN n1
-          |GROUP BY nn, n_types, n_hods""".stripMargin,
-
-      "stats_ttest" ->
-        """WITH m AS (SELECT event_type,
-          |  count(*)::HUGEINT AS n,
-          |  sum(CAST(round(value * 100) AS HUGEINT)) AS s,
-          |  sum(CAST(round(value * 100) AS HUGEINT)
-          |      * CAST(round(value * 100) AS HUGEINT)) AS ss
-          |  FROM events GROUP BY 1)
-          |, p AS (SELECT a.event_type AS type_a, b.event_type AS type_b,
-          |  a.n::BIGINT AS n_a, b.n::BIGINT AS n_b,
-          |  (a.s::DOUBLE / a.n::DOUBLE - b.s::DOUBLE / b.n::DOUBLE) AS md,
-          |  ((a.n * a.ss - a.s * a.s)::DOUBLE
-          |     / (a.n * (a.n - 1))::DOUBLE) / a.n::DOUBLE +
-          |  ((b.n * b.ss - b.s * b.s)::DOUBLE
-          |     / (b.n * (b.n - 1))::DOUBLE) / b.n::DOUBLE AS se2
-          |  FROM m a JOIN m b ON a.event_type < b.event_type)
-          |SELECT type_a, type_b, n_a, n_b,
-          |  CASE WHEN se2 = 0 THEN 0.0 ELSE round(md / sqrt(se2), 6) END AS t_r
-          |FROM p ORDER BY type_a, type_b""".stripMargin,
-
-      "eval_pr_curve" ->
-        s"""WITH gg AS (${graft.llm.Gopher.sqlGates.replace("ORDER BY doc_id", "")}),
-           |t AS (SELECT doc_id, ${TA.sqlTokens("text")} AS toks FROM documents),
-           |s AS (SELECT t.doc_id,
-           |  CASE WHEN gg.gopher_pass THEN 1 ELSE 0 END AS label,
-           |  CAST(round(${TA.sqlQualityScore("toks")} * 1000000) AS BIGINT)
-           |    AS score_ppm
-           |  FROM t JOIN gg ON t.doc_id = gg.doc_id),
-           |c AS (SELECT score_ppm, sum(label)::BIGINT AS pos,
-           |        count(*)::BIGINT AS cnt FROM s GROUP BY 1),
-           |cum AS (SELECT score_ppm,
-           |  sum(pos) OVER (ORDER BY score_ppm DESC
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT AS tp,
-           |  sum(cnt) OVER (ORDER BY score_ppm DESC
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT AS n_pred
-           |  FROM c),
-           |p AS (SELECT sum(pos)::BIGINT AS p_all FROM c)
-           |SELECT score_ppm, n_pred, tp,
-           |  (tp * 1000000 // n_pred)::BIGINT AS precision_ppm,
-           |  (CASE WHEN p_all = 0 THEN 0
-           |        ELSE tp * 1000000 // p_all END)::BIGINT AS recall_ppm
-           |FROM cum, p ORDER BY score_ppm DESC""".stripMargin,
-
-      "dedup_cdc" -> graft.llm.Chunks.sqlPostings,
-
-      "dedup_spectrum" -> {
-        // nested WITHs: sqlLineCte / sqlWindowCte / sqlChunkCte each
-        // define their own t/f/p helper CTEs, so they live in separate
-        // derived-table scopes (the sqlFertility nested-WITH precedent)
-        def row(g: String, unitQ: String, hCol: String) =
-          s"""SELECT '$g' AS granularity,
-             |  coalesce(sum(n), 0)::BIGINT AS n_units,
-             |  coalesce(sum(CASE WHEN nd >= 2 THEN n ELSE 0 END), 0)::BIGINT AS n_dup_units,
-             |  (CASE WHEN coalesce(sum(n), 0) = 0 THEN 0
-             |        ELSE sum(CASE WHEN nd >= 2 THEN n ELSE 0 END) * 1000000 // sum(n)
-             |   END)::BIGINT AS dup_ppm
-             |FROM (SELECT $hCol, count(*)::BIGINT AS n,
-             |        count(DISTINCT doc_id)::BIGINT AS nd
-             |      FROM ($unitQ) GROUP BY 1)""".stripMargin
-        val docQ =
-          s"SELECT doc_id, md5(${TA.sqlNormText("text")}) AS h FROM documents"
-        val lineQ =
-          s"WITH ${graft.llm.Lines.sqlLineCte()} SELECT doc_id, lh FROM lns"
-        val winQ =
-          s"WITH ${graft.llm.Substring.sqlWindowCte(SubstrWinTok)} SELECT doc_id, wh FROM wins"
-        val chkQ =
-          s"WITH ${graft.llm.Chunks.sqlChunkCte} SELECT doc_id, ch, n_tok FROM chks"
-        val winnowQ =
-          s"WITH ${graft.llm.Winnow.sqlFingerprintCtes()} SELECT doc_id, fp FROM fp"
-        // chunk units are occurrences: chks is one row per (doc, chunk)
-        s"""${row("1_document", docQ, "h")}
-           |UNION ALL ${row("2_line", lineQ, "lh")}
-           |UNION ALL ${row("3_window16", winQ, "wh")}
-           |UNION ALL ${row("4_chunk", chkQ, "ch")}
-           |UNION ALL ${row("5_winnow", winnowQ, "fp")}
-           |ORDER BY granularity""".stripMargin
-      },
-
-      "eval_calibration" ->
-        s"""WITH gg AS (${graft.llm.Gopher.sqlGates.replace("ORDER BY doc_id", "")}),
-           |t AS (SELECT doc_id, ${TA.sqlTokens("text")} AS toks FROM documents),
-           |s AS (SELECT t.doc_id,
-           |  CASE WHEN gg.gopher_pass THEN 1 ELSE 0 END AS label,
-           |  CAST(round(${TA.sqlQualityScore("toks")} * 1000000) AS BIGINT)
-           |    AS score_ppm
-           |  FROM t JOIN gg ON t.doc_id = gg.doc_id),
-           |b AS (SELECT score_ppm // 100000 AS bin, count(*)::BIGINT AS n,
-           |  sum(label)::BIGINT AS n_pos, sum(score_ppm)::BIGINT AS s_sum
-           |  FROM s GROUP BY 1),
-           |c AS (SELECT bin, n, n_pos,
-           |  (s_sum // n)::BIGINT AS mean_score_ppm,
-           |  (n_pos * 1000000 // n)::BIGINT AS pos_rate_ppm FROM b),
-           |e AS (SELECT (sum(n * abs(pos_rate_ppm - mean_score_ppm))
-           |              // sum(n))::BIGINT AS ece_ppm FROM c)
-           |SELECT c.bin, c.n, c.n_pos, c.mean_score_ppm, c.pos_rate_ppm,
-           |  e.ece_ppm
-           |FROM c CROSS JOIN e ORDER BY bin""".stripMargin,
-
-      "split_temporal" ->
-        """WITH e AS (SELECT user_id,
-          |  (epoch_us(ts) // 3600000000) AS hr,
-          |  CAST(round(value * 100) AS HUGEINT) AS cents FROM events),
-          |c AS (SELECT min(hr) + (max(hr) - min(hr)) * 8 // 10 AS cut FROM e),
-          |t AS (SELECT user_id, cents,
-          |  CASE WHEN hr <= (SELECT cut FROM c) THEN 'train' ELSE 'test' END
-          |    AS split FROM e),
-          |u AS (SELECT user_id,
-          |  max(CASE WHEN split = 'train' THEN 1 ELSE 0 END) AS in_train,
-          |  max(CASE WHEN split = 'test' THEN 1 ELSE 0 END) AS in_test
-          |  FROM t GROUP BY 1),
-          |o AS (SELECT count(*)::BIGINT AS users_total,
-          |  sum(in_train * in_test)::BIGINT AS users_both FROM u)
-          |SELECT split, count(*)::BIGINT AS n_events,
-          |  count(DISTINCT user_id)::BIGINT AS n_users,
-          |  sum(cents)::BIGINT AS sum_cents,
-          |  o.users_total, o.users_both,
-          |  (CASE WHEN o.users_total = 0 THEN 0
-          |        ELSE o.users_both * 1000000 // o.users_total END)::BIGINT
-          |    AS overlap_ppm
-          |FROM t CROSS JOIN o
-          |GROUP BY split, o.users_total, o.users_both
-          |ORDER BY split""".stripMargin,
-
-      // Loud-overflow guard mirrored from Stats.linregRaw: magnitude bounds
-      // at the DECIMAL(38,0) edge (10^38). HUGEINT itself errors loudly at
-      // ~1.7e38, so between the two every overflow is loud in both engines.
-      "stats_linreg" -> {
-        val d38 = "1" + "0" * 38
-        val ovf = Seq("abs(sx)", "abs(sy)", "abs(sxy)", "abs(sxx)",
-          "abs(n * sxx - sx * sx)", "abs(n * sxy - sx * sy)",
-          "abs(sy * sxx - sx * sxy)").map(e => s"$e >= $d38::HUGEINT")
-          .mkString(" OR ")
-        s"""WITH m AS (SELECT event_type,
-           |  (epoch_us(ts) // 3600000000 - ${1704067200L / 3600L}) AS x,
-           |  CAST(round(value * 100) AS HUGEINT) AS y FROM events),
-           |a AS (SELECT event_type, count(*)::HUGEINT AS n,
-           |  sum(x) AS sx, sum(y) AS sy, sum(x * y) AS sxy, sum(x * x) AS sxx
-           |  FROM m GROUP BY 1)
-           |SELECT event_type, n::BIGINT AS n,
-           |  CASE WHEN $ovf
-           |       THEN error('stats_linreg: moment products overflowed DECIMAL(38,0)')
-           |       WHEN n * sxx - sx * sx = 0 THEN 0.0
-           |       ELSE round((n * sxy - sx * sy)::DOUBLE /
-           |                  (n * sxx - sx * sx)::DOUBLE, 6) END
-           |    AS slope_cents_per_hour,
-           |  CASE WHEN n * sxx - sx * sx = 0
-           |       THEN round(sy::DOUBLE / n::DOUBLE, 6)
-           |       ELSE round((sy * sxx - sx * sxy)::DOUBLE /
-           |                  (n * sxx - sx * sx)::DOUBLE, 6) END AS icept_cents
-           |FROM a ORDER BY event_type""".stripMargin
-      },
-
-      "er_blocking" -> graft.ops.Linkage.sqlBlockedPairs,
-
-      "er_entities" -> graft.ops.Linkage.sqlEntities,
-
-      "er_quality" ->
-        s"""WITH ${graft.ops.Linkage.sqlPairsCtes},
-           |p AS (SELECT
-           |  sum(CASE WHEN is_match AND same_entity THEN 1 ELSE 0 END)::BIGINT AS tp,
-           |  sum(CASE WHEN is_match AND NOT same_entity THEN 1 ELSE 0 END)::BIGINT AS fp
-           |  FROM lkp),
-           |t AS (SELECT count(*)::BIGINT AS n_true FROM customer
-           |      WHERE c_custkey % ${graft.ops.Linkage.VariantMod} = 0)
-           |SELECT tp, fp, (n_true - tp)::BIGINT AS fn, n_true,
-           |  (CASE WHEN tp + fp = 0 THEN 0
-           |        ELSE tp * 1000000 // (tp + fp) END)::BIGINT AS precision_ppm,
-           |  (CASE WHEN n_true = 0 THEN 0
-           |        ELSE tp * 1000000 // n_true END)::BIGINT AS recall_ppm
-           |FROM p CROSS JOIN t""".stripMargin,
-
-      "k_anonymity_release" ->
-        s"""WITH g AS (SELECT c_nationkey, c_mktsegment,
-           |  count(*)::BIGINT AS k_size,
-           |  sum(CAST(round(c_acctbal * 100) AS DECIMAL(38,0))) AS bal
-           |  FROM customer GROUP BY 1, 2)
-           |SELECT c_nationkey, c_mktsegment,
-           |  CASE WHEN k_size >= $KAnonRiskK THEN 1 ELSE 0 END AS released,
-           |  CASE WHEN k_size >= $KAnonRiskK THEN k_size ELSE -1 END AS n_out,
-           |  CASE WHEN k_size >= $KAnonRiskK THEN bal::BIGINT ELSE -1 END
-           |    AS bal_cents
-           |FROM g ORDER BY 1, 2""".stripMargin,
-
-      "agg_winsorized" ->
-        """WITH e AS (SELECT event_id, event_type,
-          |  CAST(round(value * 100) AS BIGINT) AS v FROM events),
-          |r AS (SELECT event_type, v,
-          |  row_number() OVER (PARTITION BY event_type ORDER BY v, event_id)
-          |    AS rnk,
-          |  count(*) OVER (PARTITION BY event_type)::BIGINT AS n_g FROM e),
-          |t AS (SELECT DISTINCT event_type, n_g,
-          |  ((n_g - 1) * 5) // 100 + 1 AS rnk_lo,
-          |  ((n_g - 1) * 95) // 100 + 1 AS rnk_hi FROM r),
-          |lo AS (SELECT r.event_type, r.v AS lo FROM r
-          |  JOIN t ON r.event_type = t.event_type AND r.rnk = t.rnk_lo),
-          |hi AS (SELECT r.event_type, r.v AS hi FROM r
-          |  JOIN t ON r.event_type = t.event_type AND r.rnk = t.rnk_hi)
-          |SELECT r.event_type, count(*)::BIGINT AS n,
-          |  min(lo.lo) AS lo_cents, min(hi.hi) AS hi_cents,
-          |  sum(greatest(lo.lo, least(hi.hi, r.v)))::BIGINT AS wsum_cents,
-          |  (sum(greatest(lo.lo, least(hi.hi, r.v)))::BIGINT * 1000) //
-          |    count(*)::BIGINT AS wmean_milli
-          |FROM r JOIN lo ON r.event_type = lo.event_type
-          |  JOIN hi ON r.event_type = hi.event_type
-          |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      "dq_report" ->
-        s"""SELECT * FROM (
-           |SELECT 'lineitem_orphan_order' AS check_name, (SELECT count(*)
-           |  FROM lineitem l WHERE NOT EXISTS (SELECT 1 FROM orders o
-           |    WHERE o.o_orderkey = l.l_orderkey))::BIGINT AS n_violations
-           |UNION ALL
-           |SELECT 'order_orphan_customer', (SELECT count(*)
-           |  FROM orders o WHERE NOT EXISTS (SELECT 1 FROM customer c
-           |    WHERE c.c_custkey = o.o_custkey))::BIGINT
-           |UNION ALL
-           |SELECT 'lineitem_domain', (SELECT count(*)
-           |  FROM lineitem WHERE l_discount < 0 OR l_discount > 1
-           |    OR l_tax < 0 OR l_quantity <= 0)::BIGINT
-           |UNION ALL
-           |SELECT 'event_type_enum', (SELECT count(*)
-           |  FROM events WHERE event_type NOT IN
-           |    (${EventTypeEnum.map(t => s"'$t'").mkString(", ")}))::BIGINT
-           |UNION ALL
-           |SELECT 'doc_empty', (SELECT count(*)
-           |  FROM documents WHERE n_chars <= 0 OR text = '')::BIGINT
-           |) ORDER BY check_name""".stripMargin,
-
-      "graph_degree_dist" ->
-        """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-          |  FROM lineitem),
-          |ce AS (SELECT DISTINCT l.pk AS a, r.pk AS b
-          |  FROM li l JOIN li r ON l.ok = r.ok AND l.pk < r.pk),
-          |dg AS (SELECT node, count(*)::BIGINT AS deg FROM (
-          |  SELECT a AS node FROM ce UNION ALL SELECT b AS node FROM ce)
-          |  GROUP BY 1)
-          |SELECT deg, count(*)::BIGINT AS n_nodes FROM dg
-          |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      "graph_bfs" ->
-        s"""WITH RECURSIVE li AS (SELECT DISTINCT l_orderkey AS ok,
-           |  l_partkey AS pk FROM lineitem),
-           |ce AS (SELECT DISTINCT l.pk AS a, r.pk AS b
-           |  FROM li l JOIN li r ON l.ok = r.ok AND l.pk < r.pk),
-           |src AS (SELECT p_partkey AS node FROM part WHERE p_partkey % 997 = 0),
-           |${graft.ops.Bfs.sqlLayerHistogram(4)}""".stripMargin,
-
-      "graph_closeness" ->
-        s"""WITH RECURSIVE li AS (SELECT DISTINCT l_orderkey AS ok,
-           |  l_partkey AS pk FROM lineitem),
-           |ce AS (SELECT DISTINCT l.pk AS a, r.pk AS b
-           |  FROM li l JOIN li r ON l.ok = r.ok AND l.pk < r.pk),
-           |src AS (SELECT p_partkey AS node FROM part
-           |        WHERE p_partkey % 997 = 0 ORDER BY 1 LIMIT $ClosenessSeeds),
-           |${graft.ops.Bfs.sqlHarmonic(4)}""".stripMargin,
-
-      "graph_jaccard" -> graft.ops.Jaccard.sqlSimilarPairs(),
-
-      "l_diversity" ->
-        s"""WITH q AS (SELECT c_nationkey,
-           |  CAST(floor(c_acctbal / 1000.0) AS BIGINT) AS bal_bin,
-           |  c_mktsegment FROM customer),
-           |g AS (SELECT c_nationkey, bal_bin,
-           |  count(DISTINCT c_mktsegment)::BIGINT AS l_distinct,
-           |  count(*)::BIGINT AS cell_n FROM q GROUP BY 1, 2)
-           |SELECT l_distinct, count(*)::BIGINT AS n_cells,
-           |  sum(cell_n)::BIGINT AS n_users,
-           |  CASE WHEN l_distinct < $LDiversityL THEN 1 ELSE 0 END AS at_risk
-           |FROM g GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      "graph_kcore" ->
-        s"""WITH li AS MATERIALIZED (SELECT DISTINCT l_orderkey AS ok,
-           |  l_partkey AS pk FROM lineitem),
-           |ce AS MATERIALIZED (SELECT DISTINCT l.pk AS a, r.pk AS b
-           |  FROM li l JOIN li r ON l.ok = r.ok AND l.pk < r.pk),
-           |${graft.ops.KCore.sqlCore(KCoreK, KCoreRounds)}
-           |SELECT node, deg, converged FROM core ORDER BY node""".stripMargin,
-
-      "corpus_split" -> {
-        val toks = graft.llm.TextAnalysis.sqlTokens("text")
-        s"""WITH t AS (SELECT doc_id, len($toks)::BIGINT AS n_tok,
-           |  ${sqlSplitOf("doc_id")} AS split FROM documents)
-           |SELECT split, count(*)::BIGINT AS n_docs,
-           |  sum(n_tok)::BIGINT AS n_tokens
-           |FROM t GROUP BY 1 ORDER BY 1""".stripMargin
-      },
-
-      "split_domain_disjoint" -> {
-        val toks = graft.llm.TextAnalysis.sqlTokens("text")
-        s"""WITH u AS (SELECT doc_id, len($toks)::BIGINT AS n_tok,
-           |  ${graft.llm.Url.sqlSyntheticUrl} AS url FROM documents),
-           |c AS (SELECT doc_id, n_tok,
-           |  ${graft.llm.Url.sqlCanonicalHost("url")} AS domain FROM u),
-           |a AS (SELECT doc_id, n_tok, domain,
-           |  ${sqlSplitOfKey("domain")} AS split FROM c),
-           |tot AS (SELECT count(DISTINCT domain)::BIGINT AS domains_total FROM a)
-           |SELECT split, count(*)::BIGINT AS n_docs,
-           |  count(DISTINCT domain)::BIGINT AS n_domains,
-           |  sum(n_tok)::BIGINT AS n_tokens, tot.domains_total
-           |FROM a CROSS JOIN tot
-           |GROUP BY split, tot.domains_total ORDER BY split""".stripMargin
-      },
-
-      "sparse_topk" ->
-        graft.llm.Sparse.sqlTopK(c => s"$c % 20 = 0", k = 5),
-
-      "bm25_topk" ->
-        graft.llm.Sparse.sqlBm25TopK(c => s"$c % 20 = 0", k = 5),
-
-      "sparse_recall" ->
-        s"""WITH ${graft.llm.Sparse.sqlExactTopKCte(
-               c => s"$c % $RecallSampleMod = 0", 5, "ex_")},
-           |${graft.llm.Sparse.sqlTopKCte(
-               c => s"$c % $RecallSampleMod = 0", 5, "ap_")},
-           |j AS (SELECT e.q_id, count(*)::BIGINT AS k_exact,
-           |    count(a.n_id)::BIGINT AS n_hits
-           |  FROM ex_ e LEFT JOIN ap_ a
-           |    ON e.q_id = a.q_id AND e.n_id = a.n_id
-           |  GROUP BY 1)
-           |SELECT q_id, n_hits, round(n_hits::DOUBLE / k_exact, 6) AS recall_r
-           |FROM j ORDER BY q_id""".stripMargin,
-
-      "hybrid_topk" -> {
-        import graft.llm.Similarity
-        val cells = Similarity.sqlBandCells(
-          "embedding", Similarity.Bands, Similarity.BitsPerBand, Similarity.Dim)
-        val cos = s"round(${Similarity.sqlDot("l.embedding", "r.embedding")} / (l.nrm * r.nrm), 6)"
-        s"""WITH n AS (SELECT vec_id, embedding,
-           |  sqrt(${Similarity.sqlDot("embedding", "embedding")}) AS nrm FROM embeddings),
-           |c AS (SELECT vec_id, unnest($cells) AS t FROM embeddings),
-           |cc0 AS (SELECT vec_id, t['band'] AS band, t['cell'] AS cell FROM c),
-           |cc AS (SELECT vec_id, band, cell FROM (
-           |  SELECT *, count(*) OVER (PARTITION BY band, cell) AS occ FROM cc0)
-           |  WHERE occ <= ${Similarity.MaxCellBucket}),
-           |cand AS (SELECT DISTINCT q.vec_id AS q_id, e.vec_id AS n_id
-           |  FROM cc q JOIN cc e ON q.band = e.band AND q.cell = e.cell
-           |    AND q.vec_id <> e.vec_id
-           |  WHERE q.vec_id % 20 = 0),
-           |p AS (SELECT q_id, n_id, $cos AS cos_r
-           |  FROM cand JOIN n l ON q_id = l.vec_id JOIN n r ON n_id = r.vec_id),
-           |r AS (SELECT q_id, n_id,
-           |  row_number() OVER (PARTITION BY q_id ORDER BY cos_r DESC, n_id) AS rnk
-           |  FROM p),
-           |dns AS (SELECT q_id, n_id, rnk FROM r WHERE rnk <= 5),
-           |${graft.llm.Sparse.sqlTopKCte(c => s"$c % 20 = 0", 5, "sp_")},
-           |f AS (SELECT coalesce(d.q_id, s.q_id) AS q_id,
-           |    coalesce(d.n_id, s.n_id) AS n_id,
-           |    coalesce(1000000 // (60 + d.rnk), 0) +
-           |      coalesce(1000000 // (60 + s.rnk), 0) AS rrf_ppm,
-           |    coalesce(d.rnk, -1) AS rank_d, coalesce(s.rnk, -1) AS rank_s
-           |  FROM dns d FULL JOIN sp_ s
-           |    ON d.q_id = s.q_id AND d.n_id = s.n_id),
-           |h AS (SELECT *, row_number() OVER (PARTITION BY q_id
-           |    ORDER BY rrf_ppm DESC, n_id) AS rnk FROM f)
-           |SELECT q_id, n_id, rrf_ppm, rank_d, rank_s, rnk FROM h
-           |WHERE rnk <= 3 ORDER BY q_id, rnk""".stripMargin
-      },
-
-      "split_leak_audit" ->
-        (s"WITH ${sqlVerifiedCte(3, 16, 4)},\n" +
-          s"""sp AS (SELECT doc_id, ${sqlSplitOf("doc_id")} AS split
-             |  FROM documents)
-             |SELECT v.a, v.b, sa.split AS split_a, sb.split AS split_b,
-             |  v.jac_r
-             |FROM v JOIN sp sa ON v.a = sa.doc_id
-             |  JOIN sp sb ON v.b = sb.doc_id
-             |WHERE v.jac_r >= 0.5 AND sa.split <> sb.split
-             |ORDER BY 1, 2""".stripMargin),
-
-      "split_leak_semantic" ->
-        (s"WITH ${sqlNearDupCte(0.4)},\n" +
-          s"""sp AS (SELECT vec_id, ${sqlSplitOf("vec_id")} AS split
-             |  FROM embeddings)
-             |SELECT ndp.a, ndp.b, sa.split AS split_a, sb.split AS split_b,
-             |  ndp.cos_r
-             |FROM ndp JOIN sp sa ON ndp.a = sa.vec_id
-             |  JOIN sp sb ON ndp.b = sb.vec_id
-             |WHERE sa.split <> sb.split
-             |ORDER BY 1, 2""".stripMargin),
-
-      // Recursive CTE, NOT list_reduce: DuckDB v1.0.0 struct-lambda
-      // fields evaluate sequentially and REBIND the accumulator field by
-      // field (a.l inside the 't' expression sees the freshly computed
-      // 'l'), silently halving the trend — probed and pinned in round 8.
-      // The recursive step is standard SQL with one lambda-free
-      // expression per field, replaying Spark's aggregate() fold exactly.
-      "events_acf" ->
-        s"""WITH h AS (SELECT event_type,
-           |  epoch_us(ts) // 3600000000 AS hr,
-           |  count(*)::BIGINT AS c FROM events GROUP BY 1, 2),
-           |${graft.ops.Acf.sqlAcf()}""".stripMargin,
-
-      "events_burstiness" ->
-        """WITH h AS (SELECT event_type,
-          |  epoch_us(ts) // 3600000000 AS hr,
-          |  count(*)::BIGINT AS c FROM events GROUP BY 1, 2),
-          |a AS (SELECT event_type, count(*)::HUGEINT AS n,
-          |        sum(c)::HUGEINT AS sc, sum(c::HUGEINT * c)::HUGEINT AS qc
-          |      FROM h GROUP BY 1)
-          |SELECT event_type, n::BIGINT AS n_hours,
-          |  CASE WHEN n < 2 OR sc = 0 THEN 0
-          |       ELSE ((n * qc - sc * sc) * 1000000) // ((n - 1) * sc)
-          |       END::BIGINT AS dispersion_ppm
-          |FROM a ORDER BY 1""".stripMargin,
-
-      "events_pareto" ->
-        """WITH uc AS (SELECT user_id, count(*)::BIGINT AS c
-          |  FROM events GROUP BY 1),
-          |r AS (SELECT user_id, c,
-          |        row_number() OVER (ORDER BY c DESC, user_id) AS rk,
-          |        sum(c) OVER (ORDER BY c DESC, user_id
-          |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cumc
-          |      FROM uc),
-          |t AS (SELECT count(*)::BIGINT AS u, sum(c)::BIGINT AS tot FROM uc),
-          |g AS (SELECT p FROM (VALUES (1), (5), (10), (50)) v(p))
-          |SELECT g.p::BIGINT AS pct, r.rk::BIGINT AS n_users,
-          |  r.cumc::BIGINT AS events_cum,
-          |  ((r.cumc * 1000000) // t.tot)::BIGINT AS share_ppm
-          |FROM g CROSS JOIN t JOIN r ON r.rk = (t.u * g.p + 99) // 100
-          |ORDER BY pct""".stripMargin,
-
-      "events_ewma" ->
-        """WITH RECURSIVE h AS (SELECT event_type,
-          |  epoch_us(ts) // 3600000000 AS hr,
-          |  count(*)::BIGINT AS c FROM events GROUP BY 1, 2),
-          |s AS (SELECT event_type,
-          |  row_number() OVER (PARTITION BY event_type ORDER BY hr) AS k,
-          |  c * 1000000 AS v FROM h),
-          |n AS (SELECT event_type, count(*)::BIGINT AS n_hours FROM s GROUP BY 1),
-          |r AS (
-          |  SELECT event_type, 1::BIGINT AS k, v AS l, 0::BIGINT AS t
-          |  FROM s WHERE k = 1
-          |  UNION ALL
-          |  SELECT r.event_type, r.k + 1, (r.l + s.v) // 2,
-          |         (r.t + ((r.l + s.v) // 2 - r.l)) // 2
-          |  FROM r JOIN s ON s.event_type = r.event_type AND s.k = r.k + 1)
-          |SELECT r.event_type, n.n_hours, r.l AS level_ppm, r.t AS trend_ppm,
-          |  r.l + r.t AS forecast_ppm
-          |FROM r JOIN n USING (event_type) WHERE r.k = n.n_hours
-          |ORDER BY event_type""".stripMargin,
-
-      "events_cusum" ->
-        """WITH RECURSIVE h AS (SELECT event_type,
-          |  epoch_us(ts) // 3600000000 AS hr,
-          |  count(*)::BIGINT AS c FROM events GROUP BY 1, 2),
-          |s AS (SELECT event_type,
-          |  row_number() OVER (PARTITION BY event_type ORDER BY hr) AS k,
-          |  c * 1000 AS v FROM h),
-          |m AS (SELECT event_type, count(*)::BIGINT AS n_hours,
-          |  (sum(c) * 1000 // count(*))::BIGINT AS mu_milli FROM h GROUP BY 1),
-          |r AS (
-          |  SELECT event_type, 0::BIGINT AS k, 0::BIGINT AS s,
-          |         0::BIGINT AS mx, 0::BIGINT AS na
-          |  FROM m
-          |  UNION ALL
-          |  SELECT r.event_type, r.k + 1,
-          |    greatest(0, r.s + s.v - m.mu_milli - m.mu_milli // 10),
-          |    greatest(r.mx,
-          |      greatest(0, r.s + s.v - m.mu_milli - m.mu_milli // 10)),
-          |    r.na + (CASE WHEN
-          |      greatest(0, r.s + s.v - m.mu_milli - m.mu_milli // 10)
-          |      > m.mu_milli * 5 THEN 1 ELSE 0 END)
-          |  FROM r JOIN s ON s.event_type = r.event_type AND s.k = r.k + 1
-          |       JOIN m ON m.event_type = r.event_type)
-          |SELECT r.event_type, m.n_hours, m.mu_milli,
-          |  r.s::BIGINT AS cusum_final, r.mx::BIGINT AS cusum_max,
-          |  r.na::BIGINT AS n_alarms
-          |FROM r JOIN m USING (event_type) WHERE r.k = m.n_hours
-          |ORDER BY event_type""".stripMargin,
-
-      "events_ewma_backtest" ->
-        """WITH RECURSIVE h AS (SELECT event_type,
-          |  epoch_us(ts) // 3600000000 AS hr,
-          |  count(*)::BIGINT AS c FROM events GROUP BY 1, 2),
-          |s AS (SELECT event_type,
-          |  row_number() OVER (PARTITION BY event_type ORDER BY hr) AS k,
-          |  c * 1000000 AS v FROM h),
-          |n AS (SELECT event_type, count(*)::BIGINT AS n_hours FROM s GROUP BY 1),
-          |r AS (
-          |  SELECT event_type, 1::BIGINT AS k, v AS l, 0::BIGINT AS t,
-          |         v AS p, 0::BIGINT AS eh, 0::BIGINT AS en
-          |  FROM s WHERE k = 1
-          |  UNION ALL
-          |  SELECT r.event_type, r.k + 1, (r.l + s.v) // 2,
-          |         (r.t + ((r.l + s.v) // 2 - r.l)) // 2,
-          |         s.v, r.eh + abs(r.l + r.t - s.v), r.en + abs(r.p - s.v)
-          |  FROM r JOIN s ON s.event_type = r.event_type AND s.k = r.k + 1)
-          |SELECT r.event_type, n.n_hours,
-          |  CASE WHEN n.n_hours <= 1 THEN 0 ELSE r.eh // (n.n_hours - 1) END
-          |    AS mae_holt_ppm,
-          |  CASE WHEN n.n_hours <= 1 THEN 0 ELSE r.en // (n.n_hours - 1) END
-          |    AS mae_naive_ppm,
-          |  CASE WHEN n.n_hours <= 1 THEN 0 ELSE r.eh // (n.n_hours - 1) END <
-          |  CASE WHEN n.n_hours <= 1 THEN 0 ELSE r.en // (n.n_hours - 1) END
-          |    AS holt_wins
-          |FROM r JOIN n USING (event_type) WHERE r.k = n.n_hours
-          |ORDER BY event_type""".stripMargin,
-
-      "events_seasonal" ->
-        """WITH e AS (SELECT event_type,
-          |  epoch_us(ts) // 86400000000 AS day,
-          |  (epoch_us(ts) // 3600000000) % 24 AS hod FROM events),
-          |h AS (SELECT event_type, day, hod, count(*)::BIGINT AS c
-          |  FROM e GROUP BY 1, 2, 3),
-          |m AS (SELECT max(day) AS maxd FROM h),
-          |nd AS (SELECT count(DISTINCT day)::BIGINT AS n_train_days
-          |  FROM h, m WHERE day < maxd),
-          |b AS (SELECT event_type, hod, sum(c)::BIGINT AS base_cnt
-          |  FROM h, m WHERE day < maxd GROUP BY 1, 2),
-          |a AS (SELECT event_type, hod, sum(c)::BIGINT AS actual_cnt
-          |  FROM h, m WHERE day = maxd GROUP BY 1, 2)
-          |SELECT coalesce(b.event_type, a.event_type) AS event_type,
-          |  coalesce(b.hod, a.hod) AS hod,
-          |  coalesce(b.base_cnt, 0) AS base_cnt, nd.n_train_days,
-          |  (coalesce(b.base_cnt, 0) * 1000000) // greatest(nd.n_train_days, 1)
-          |    AS baseline_ppm,
-          |  coalesce(a.actual_cnt, 0) AS actual_cnt,
-          |  coalesce(a.actual_cnt, 0) * 1000000 -
-          |    (coalesce(b.base_cnt, 0) * 1000000) // greatest(nd.n_train_days, 1)
-          |    AS resid_ppm
-          |FROM b FULL JOIN a ON b.event_type = a.event_type AND b.hod = a.hod,
-          |  nd
-          |ORDER BY 1, 2""".stripMargin,
-
-      "compaction_plan" ->
-        s"""WITH f AS (SELECT doc_id // $CompactDocsPerFile AS file_id,
-           |  sum(n_chars)::BIGINT AS size_bytes, count(*)::BIGINT AS n_docs
-           |  FROM documents GROUP BY 1),
-           |c AS (SELECT file_id, size_bytes,
-           |  (sum(size_bytes) OVER (ORDER BY file_id
-           |    ROWS UNBOUNDED PRECEDING))::BIGINT AS cum FROM f),
-           |a AS (SELECT *, (cum - size_bytes) // $CompactTargetBytes AS bin
-           |  FROM c)
-           |SELECT bin, count(*)::BIGINT AS n_files,
-           |  sum(size_bytes)::BIGINT AS total_bytes,
-           |  min(file_id) AS first_file, max(file_id) AS last_file,
-           |  md5(array_to_string(list(file_id::VARCHAR ORDER BY file_id), ','))
-           |    AS member_md5
-           |FROM a GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      "embedding_pc1" -> graft.llm.Pca.sqlProjections,
-
-      "dedup_recall" ->
-        (s"WITH ${sqlLshBase(3, 16, 4, pred = s"doc_id % $RecallSampleMod = 0")},\n" +
-          s"""kk AS (SELECT doc_id, sh FROM k WHERE len(sh) > 0),
-             |ex AS (SELECT l.doc_id AS a, r.doc_id AS b,
-             |    len(list_intersect(l.sh, r.sh))::BIGINT AS n_common,
-             |    len(l.sh)::BIGINT AS n_a, len(r.sh)::BIGINT AS n_b
-             |  FROM kk l JOIN kk r ON l.doc_id < r.doc_id),
-             |tp AS (SELECT a, b FROM ex
-             |  WHERE n_common * 1000000 // (n_a + n_b - n_common) >= $RecallJacPpm),
-             |cand AS (SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
-             |  FROM bb l JOIN bb r ON l.band = r.band AND l.bh = r.bh
-             |    AND l.doc_id < r.doc_id),
-             |hit AS (SELECT a, b FROM tp
-             |  WHERE EXISTS (SELECT 1 FROM cand c WHERE c.a = tp.a AND c.b = tp.b))
-             |SELECT
-             |  (SELECT count(*) FROM documents
-             |     WHERE doc_id % $RecallSampleMod = 0)::BIGINT AS n_docs,
-             |  (SELECT count(*) FROM tp)::BIGINT AS n_true,
-             |  (SELECT count(*) FROM cand)::BIGINT AS n_cand,
-             |  (SELECT count(*) FROM hit)::BIGINT AS n_hit,
-             |  ((SELECT count(*) FROM hit) * 1000000 //
-             |    greatest((SELECT count(*) FROM tp), 1))::BIGINT AS recall_ppm,
-             |  ((SELECT count(*) FROM hit) * 1000000 //
-             |    greatest((SELECT count(*) FROM cand), 1))::BIGINT AS precision_ppm""".stripMargin),
-
-      "knn_mutual" -> {
-        import graft.llm.Similarity
-        val cells = Similarity.sqlBandCells(
-          "embedding", Similarity.Bands, Similarity.BitsPerBand, Similarity.Dim)
-        val cos = s"round(${Similarity.sqlDot("l.embedding", "r.embedding")} / (l.nrm * r.nrm), 6)"
-        s"""WITH n AS (SELECT vec_id, embedding,
-           |  sqrt(${Similarity.sqlDot("embedding", "embedding")}) AS nrm FROM embeddings),
-           |c AS (SELECT vec_id, unnest($cells) AS t FROM embeddings),
-           |cc0 AS (SELECT vec_id, t['band'] AS band, t['cell'] AS cell FROM c),
-           |cc AS (SELECT vec_id, band, cell FROM (
-           |  SELECT *, count(*) OVER (PARTITION BY band, cell) AS occ FROM cc0)
-           |  WHERE occ <= ${Similarity.MaxCellBucket}),
-           |cand AS (SELECT DISTINCT q.vec_id AS q_id, e.vec_id AS n_id
-           |  FROM cc q JOIN cc e ON q.band = e.band AND q.cell = e.cell
-           |    AND q.vec_id <> e.vec_id),
-           |p AS (SELECT q_id, n_id, $cos AS cos_r
-           |  FROM cand JOIN n l ON q_id = l.vec_id JOIN n r ON n_id = r.vec_id),
-           |r AS (SELECT q_id, n_id,
-           |  row_number() OVER (PARTITION BY q_id ORDER BY cos_r DESC, n_id) AS rnk
-           |  FROM p),
-           |t AS (SELECT q_id, n_id, rnk FROM r WHERE rnk <= $KnnMutualK)
-           |SELECT f.q_id AS a, f.n_id AS b, f.rnk AS rank_ab, g.rnk AS rank_ba
-           |FROM t f JOIN t g ON f.q_id = g.n_id AND f.n_id = g.q_id
-           |  AND f.q_id < f.n_id
-           |ORDER BY 1, 2""".stripMargin
-      },
-
-      "t_closeness" ->
-        s"""WITH q AS (SELECT c_nationkey,
-           |  CAST(floor(c_acctbal / 1000.0) AS BIGINT) AS bal_bin,
-           |  c_mktsegment FROM customer),
-           |gv AS (SELECT c_mktsegment, count(*)::BIGINT AS g_v FROM q GROUP BY 1),
-           |tt AS (SELECT count(*)::BIGINT AS n_tot FROM q),
-           |cl AS (SELECT c_nationkey, bal_bin, c_mktsegment,
-           |  count(*)::BIGINT AS cnt FROM q GROUP BY 1, 2, 3),
-           |tm AS (SELECT cl.c_nationkey, cl.bal_bin, cl.cnt, gv.g_v, tt.n_tot,
-           |  sum(cl.cnt) OVER (PARTITION BY cl.c_nationkey, cl.bal_bin)::BIGINT AS n_c
-           |  FROM cl JOIN gv USING (c_mktsegment) CROSS JOIN tt),
-           |agg AS (SELECT c_nationkey, bal_bin,
-           |  max(n_c)::BIGINT AS n_c, max(n_tot)::BIGINT AS n_tot,
-           |  sum(abs(cnt::HUGEINT * n_tot - g_v::HUGEINT * n_c)
-           |    - g_v::HUGEINT * n_c) AS present_term
-           |  FROM tm GROUP BY 1, 2),
-           |tv AS (SELECT c_nationkey, bal_bin, n_c,
-           |  (((present_term + n_c::HUGEINT * n_tot) * 500000)
-           |    // (n_c::HUGEINT * n_tot))::BIGINT AS tvd_ppm FROM agg)
-           |SELECT c_nationkey, bal_bin, n_c, tvd_ppm,
-           |  CASE WHEN tvd_ppm > $TClosePpm THEN 1 ELSE 0 END AS at_risk
-           |FROM tv ORDER BY 1, 2""".stripMargin,
-
-      "events_gapfill" ->
-        s"""WITH h AS (SELECT event_type, $SqlHourEpoch AS he FROM events),
-          |$SqlHourAxisCtes,
-          |cnt AS (SELECT event_type, he, count(*)::BIGINT AS cn
-          |  FROM h GROUP BY 1, 2)
-          |SELECT ty.event_type, hrs.hour_epoch,
-          |  coalesce(cnt.cn, 0)::BIGINT AS n,
-          |  sum(coalesce(cnt.cn, 0)) OVER (PARTITION BY ty.event_type
-          |    ORDER BY hrs.hour_epoch)::BIGINT AS cum_n
-          |FROM ty CROSS JOIN hrs LEFT JOIN cnt
-          |  ON ty.event_type = cnt.event_type AND hrs.hour_epoch = cnt.he
-          |ORDER BY 1, 2""".stripMargin,
-
-      "vocab_growth" -> {
-        val toks = TA.sqlTokens("text")
-        s"""WITH hi AS (SELECT max(doc_id) + 1 AS nd FROM documents),
-           |db AS (SELECT (doc_id * $VocabGrowthBuckets) // hi.nd AS bucket,
-           |  text FROM documents, hi),
-           |t AS (SELECT bucket, unnest($toks) AS term FROM db),
-           |pb AS (SELECT bucket, count(*)::BIGINT AS n_tokens FROM t GROUP BY 1),
-           |dpb AS (SELECT bucket, count(*)::BIGINT AS n_docs FROM db GROUP BY 1),
-           |fb AS (SELECT term, min(bucket) AS bucket FROM t GROUP BY 1),
-           |nt AS (SELECT bucket, count(*)::BIGINT AS new_terms FROM fb GROUP BY 1)
-           |SELECT d.bucket, d.n_docs,
-           |  coalesce(p.n_tokens, 0)::BIGINT AS n_tokens,
-           |  coalesce(nt.new_terms, 0)::BIGINT AS new_terms,
-           |  sum(coalesce(p.n_tokens, 0)) OVER (ORDER BY d.bucket)::BIGINT
-           |    AS cum_tokens,
-           |  sum(coalesce(nt.new_terms, 0)) OVER (ORDER BY d.bucket)::BIGINT
-           |    AS cum_vocab
-           |FROM dpb d LEFT JOIN pb p USING (bucket) LEFT JOIN nt USING (bucket)
-           |ORDER BY bucket""".stripMargin
-      },
-
-      "pmi_topk" -> {
-        val toks = TA.sqlTokens("text")
-        s"""WITH dt AS (SELECT doc_id, unnest(list_distinct($toks)) AS term
-           |  FROM documents),
-           |df AS (SELECT term, count(*)::BIGINT AS df FROM dt GROUP BY 1),
-           |tt AS (SELECT count(*)::BIGINT AS n_docs FROM documents),
-           |kept AS (SELECT dt.doc_id, dt.term, df.df, tt.n_docs
-           |  FROM dt JOIN df USING (term) CROSS JOIN tt
-           |  WHERE df.df >= $PmiMinDf
-           |    AND df.df * 1000000 <= tt.n_docs * $PmiMaxDfPpm),
-           |gated AS (SELECT doc_id, term, df, n_docs FROM (
-           |  SELECT *, row_number() OVER (PARTITION BY doc_id
-           |    ORDER BY df, term) AS rn FROM kept) WHERE rn <= $PmiPerDocM),
-           |pr AS (SELECT l.term AS ta, r.term AS tb, count(*)::BIGINT AS n_ab,
-           |    max(l.df)::BIGINT AS df_a, max(r.df)::BIGINT AS df_b,
-           |    max(l.n_docs)::BIGINT AS nd
-           |  FROM gated l JOIN gated r
-           |    ON l.doc_id = r.doc_id AND l.term < r.term
-           |  GROUP BY 1, 2 HAVING count(*) >= $PmiMinSupport)
-           |SELECT ta, tb, n_ab, df_a, df_b,
-           |  ((n_ab::HUGEINT * nd * 1000000) // (df_a::HUGEINT * df_b))::BIGINT
-           |    AS lift_ppm
-           |FROM pr ORDER BY lift_ppm DESC, ta, tb LIMIT $PmiTopK""".stripMargin
-      },
-
-      // Reference CC (recursive reachability) over the support-filtered
-      // co-purchase edges — the oracle-side stand-in for the engine's
-      // alternating-star rounds, same pattern as semantic_clusters.
-      "graph_components" ->
-        (s"WITH RECURSIVE $sqlCoPurchasePairs,\n" +
-          """e AS (SELECT a, b FROM pr UNION ALL SELECT b, a FROM pr),
-            |reach AS (SELECT a AS id, b AS r FROM e
-            |  UNION SELECT reach.id, e.b FROM reach JOIN e ON reach.r = e.a)
-            |SELECT id AS node, least(id, min(r)) AS component_id
-            |FROM reach GROUP BY id ORDER BY node""".stripMargin),
-
-      "graph_lpa" -> graft.ops.Lpa.sqlRun(
-        "SELECT a, b FROM pr", iters = LpaIters, preCtes = sqlCoPurchasePairs),
-
-      "graph_modularity" ->
-        (s"WITH ${graft.ops.Lpa.sqlCtes("SELECT a, b FROM pr", LpaIters, sqlCoPurchasePairs)},\n" +
-          s"""deg AS (SELECT src AS node, count(*)::BIGINT AS deg FROM e GROUP BY 1),
-             |dc AS (SELECT l.label, sum(deg)::BIGINT AS deg_sum,
-             |  count(*)::BIGINT AS n_nodes
-             |  FROM deg JOIN l$LpaIters l USING (node) GROUP BY 1),
-             |ei AS (SELECT la.label, count(*)::BIGINT AS e_in
-             |  FROM p JOIN l$LpaIters la ON p.a = la.node
-             |         JOIN l$LpaIters lb ON p.b = lb.node
-             |  WHERE la.label = lb.label GROUP BY 1),
-             |m AS (SELECT count(*)::BIGINT AS m FROM p)
-             |SELECT dc.label AS community_id, n_nodes, deg_sum,
-             |  coalesce(e_in, 0)::BIGINT AS e_in,
-             |  ((coalesce(e_in, 0)::HUGEINT * 1000000) // m
-             |   - (deg_sum::HUGEINT * deg_sum * 1000000)
-             |     // (4::HUGEINT * m * m))::BIGINT AS q_ppm
-             |FROM dc LEFT JOIN ei USING (label), m
-             |ORDER BY community_id""".stripMargin),
-
-      "events_interpolate" ->
-        s"""WITH h AS (SELECT event_type, $SqlHourEpoch AS he,
-          |  value::DECIMAL(12,2) AS v FROM events),
-          |obs AS (SELECT event_type, he, (sum(v) * 100)::BIGINT AS cents
-          |  FROM h GROUP BY 1, 2),
-          |$SqlHourAxisCtes,
-          |grid AS (SELECT ty.event_type, hrs.hour_epoch, obs.cents
-          |  FROM ty CROSS JOIN hrs LEFT JOIN obs
-          |    ON ty.event_type = obs.event_type AND hrs.hour_epoch = obs.he),
-          |car AS (SELECT *,
-          |  last_value(CASE WHEN cents IS NOT NULL THEN hour_epoch END
-          |    IGNORE NULLS) OVER (PARTITION BY event_type ORDER BY hour_epoch
-          |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ph,
-          |  last_value(cents IGNORE NULLS) OVER (PARTITION BY event_type
-          |    ORDER BY hour_epoch
-          |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pc,
-          |  first_value(CASE WHEN cents IS NOT NULL THEN hour_epoch END
-          |    IGNORE NULLS) OVER (PARTITION BY event_type ORDER BY hour_epoch
-          |    ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nh,
-          |  first_value(cents IGNORE NULLS) OVER (PARTITION BY event_type
-          |    ORDER BY hour_epoch
-          |    ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nc
-          |  FROM grid)
-          |SELECT event_type, hour_epoch,
-          |  (CASE WHEN cents IS NOT NULL THEN cents
-          |        WHEN ph IS NOT NULL AND nh IS NOT NULL THEN
-          |          (pc * (nh - hour_epoch) + nc * (hour_epoch - ph)) // (nh - ph)
-          |        ELSE NULL END)::BIGINT AS cents,
-          |  CASE WHEN cents IS NOT NULL THEN 'obs'
-          |       WHEN ph IS NOT NULL AND nh IS NOT NULL THEN 'interp'
-          |       ELSE 'edge' END AS src
-          |FROM car ORDER BY 1, 2""".stripMargin,
-
-      "quality_sweep" -> {
-        val toks = TA.sqlTokens("text")
-        s"""WITH t AS (SELECT $toks AS toks FROM documents),
-           |q AS (SELECT ${TA.sqlQualityScore("toks")} AS quality,
-           |  len(toks)::BIGINT AS n_tok FROM t),
-           |tt AS (SELECT count(*)::BIGINT AS t_docs,
-           |  sum(n_tok)::BIGINT AS t_toks FROM q),
-           |g AS (SELECT unnest([${QualitySweep.mkString(", ")}]) AS thr),
-           |k AS (SELECT g.thr, count(q.quality)::BIGINT AS n_docs,
-           |    coalesce(sum(q.n_tok), 0)::BIGINT AS n_tokens
-           |  FROM g LEFT JOIN q ON q.quality >= g.thr GROUP BY 1)
-           |SELECT thr, n_docs, n_tokens,
-           |  (n_docs * 1000000) // t_docs AS doc_keep_ppm,
-           |  (n_tokens * 1000000) // t_toks AS tok_keep_ppm
-           |FROM k, tt ORDER BY thr""".stripMargin
-      },
-
-      "sketch_countmin" -> {
-        import graft.expr.PortableHash
-        val toks = TA.sqlTokens("text")
-        def cellRows(src: String, extra: String) = (0 until CmDepth).map { i =>
-          s"SELECT $extra $i AS row, " +
-            s"(${PortableHash.sqlPhashSeed(i, "token")}) % $CmWidth AS cell FROM $src"
-        }.mkString("\n  UNION ALL ")
-        s"""WITH t AS (SELECT unnest($toks) AS token FROM documents),
-           |rc AS (${cellRows("t", "")}),
-           |sk AS (SELECT row, cell, count(*)::BIGINT AS n FROM rc GROUP BY 1, 2),
-           |ex AS (SELECT token, count(*)::BIGINT AS true_n FROM t GROUP BY 1),
-           |pb AS (SELECT token, true_n FROM ex
-           |  ORDER BY true_n DESC, token LIMIT $CmProbeK),
-           |pc AS (${cellRows("pb", "token, true_n,")})
-           |SELECT pc.token, pc.true_n, min(sk.n)::BIGINT AS est_n,
-           |  (min(sk.n) - pc.true_n)::BIGINT AS over_n
-           |FROM pc JOIN sk USING (row, cell)
-           |GROUP BY 1, 2 ORDER BY true_n DESC, token""".stripMargin
-      }
-    )
-  }
-
-  private def sqlTopK(k: Int, sameCell: Boolean): String = {
-    import graft.llm.Similarity
-    val cos = s"round(${Similarity.sqlDot("q_emb", "e.embedding")} / (q_nrm * e.nrm), 6)"
-    val cellSel = if (sameCell)
-      s",\n  ${Similarity.sqlCellId("embedding", Similarity.QuantizerBand, Similarity.QuantizerBits, Similarity.Dim)} AS cell"
-    else ""
-    val qCellSel = if (sameCell) ", cell AS q_cell" else ""
-    val cellCond = if (sameCell) " AND q_cell = e.cell" else ""
-    s"""WITH n AS (SELECT vec_id, embedding,
-       |  sqrt(${Similarity.sqlDot("embedding", "embedding")}) AS nrm$cellSel FROM embeddings),
-       |q AS (SELECT vec_id AS q_id, embedding AS q_emb, nrm AS q_nrm$qCellSel
-       |  FROM n WHERE vec_id % 20 = 0),
-       |p AS (SELECT q_id, e.vec_id AS n_id, $cos AS cos_r
-       |  FROM q JOIN n e ON q_id <> e.vec_id$cellCond),
-       |r AS (SELECT q_id, n_id, cos_r,
-       |  row_number() OVER (PARTITION BY q_id ORDER BY cos_r DESC, n_id) AS rnk
-       |  FROM p)
-       |SELECT q_id, n_id, cos_r, rnk FROM r WHERE rnk <= $k ORDER BY q_id, rnk, n_id""".stripMargin
-  }
-
-  /** Oracle twin of [[graft.llm.Similarity.lshTopK]]: multi-band candidate
-    * collisions (DISTINCT over band matches) verified by exact cosine.
-    */
-  private def sqlLshTopK(k: Int): String = {
-    import graft.llm.Similarity
-    val cells = Similarity.sqlBandCells(
-      "embedding", Similarity.Bands, Similarity.BitsPerBand, Similarity.Dim)
-    val cos = s"round(${Similarity.sqlDot("l.embedding", "r.embedding")} / (l.nrm * r.nrm), 6)"
-    s"""WITH n AS (SELECT vec_id, embedding,
-       |  sqrt(${Similarity.sqlDot("embedding", "embedding")}) AS nrm FROM embeddings),
-       |c AS (SELECT vec_id, unnest($cells) AS t FROM embeddings),
-       |cc0 AS (SELECT vec_id, t['band'] AS band, t['cell'] AS cell FROM c),
-       |cc AS (SELECT vec_id, band, cell FROM (
-       |  SELECT *, count(*) OVER (PARTITION BY band, cell) AS occ FROM cc0)
-       |  WHERE occ <= ${Similarity.MaxCellBucket}),
-       |cand AS (SELECT DISTINCT q.vec_id AS q_id, e.vec_id AS n_id
-       |  FROM cc q JOIN cc e ON q.band = e.band AND q.cell = e.cell AND q.vec_id <> e.vec_id
-       |  WHERE q.vec_id % 20 = 0),
-       |p AS (SELECT q_id, n_id, $cos AS cos_r
-       |  FROM cand JOIN n l ON q_id = l.vec_id JOIN n r ON n_id = r.vec_id),
-       |r AS (SELECT q_id, n_id, cos_r,
-       |  row_number() OVER (PARTITION BY q_id ORDER BY cos_r DESC, n_id) AS rnk FROM p)
-       |SELECT q_id, n_id, cos_r, rnk FROM r WHERE rnk <= $k ORDER BY q_id, rnk, n_id""".stripMargin
-  }
-
-  /** Oracle twin of `similarity_recall_pq`: the IVF-PQ retrieval chain
-    * (all five codebook trainings replayed, ADC ranking) against the brute
-    * exact top-k over true embeddings.
-    */
-  private def sqlRecallPq(k: Int): String = {
-    import graft.llm.{Quantizer, Similarity}
-    val cos = s"round(${Similarity.sqlDot("q_emb", "e.embedding")} / (q_nrm * e.nrm), 6)"
-    s"""WITH ${Quantizer.sqlPqAllTrainings()},
-       |${Quantizer.sqlPqPairs("(q.vec_id % 20) = 0")},
-       |lr AS (SELECT q_id, n_id,
-       |  row_number() OVER (PARTITION BY q_id ORDER BY adc, n_id) AS rnk FROM pairs),
-       |ret AS (SELECT q_id, n_id FROM lr WHERE rnk <= $k),
-       |bn AS (SELECT vec_id, embedding,
-       |  sqrt(${Similarity.sqlDot("embedding", "embedding")}) AS nrm FROM embeddings),
-       |bq AS (SELECT vec_id AS q_id, embedding AS q_emb, nrm AS q_nrm
-       |  FROM bn WHERE vec_id % 20 = 0),
-       |bp AS (SELECT q_id, e.vec_id AS n_id, $cos AS cos_r
-       |  FROM bq JOIN bn e ON q_id <> e.vec_id),
-       |br AS (SELECT q_id, n_id,
-       |  row_number() OVER (PARTITION BY q_id ORDER BY cos_r DESC, n_id) AS rnk FROM bp),
-       |exact AS (SELECT q_id, n_id FROM br WHERE rnk <= $k)
-       |SELECT e.q_id, count(r.n_id) AS n_hits,
-       |  round(count(r.n_id)::DOUBLE / count(*), 6) AS recall_r
-       |FROM exact e LEFT JOIN ret r ON e.q_id = r.q_id AND e.n_id = r.n_id
-       |GROUP BY 1 ORDER BY 1""".stripMargin
-  }
-
-  /** Oracle twin of `similarity_recall_ivf`: the trained-IVF multi-probe
-    * chain ([[graft.llm.Quantizer.sqlIvfProbePairs]], which replays the
-    * whole k-means training in CTEs) ranked to top-k, against the brute
-    * exact top-k over the same trained-norm frame `n`.
-    */
-  private def sqlRecallIvf(k: Int, nprobe: Int): String = {
-    import graft.llm.{Quantizer, Similarity}
-    val cos = s"round(${Similarity.sqlDot("q_emb", "e.embedding")} / (q_nrm * e.nrm), 6)"
-    s"""WITH ${Quantizer.sqlTrainCtes()},
-       |${Quantizer.sqlIvfProbePairs("q.vec_id % 20 = 0", nprobe)},
-       |lr AS (SELECT q_id, n_id,
-       |  row_number() OVER (PARTITION BY q_id ORDER BY cos_r DESC, n_id) AS rnk FROM pairs),
-       |ret AS (SELECT q_id, n_id FROM lr WHERE rnk <= $k),
-       |bq AS (SELECT vec_id AS q_id, embedding AS q_emb, nrm AS q_nrm
-       |  FROM n WHERE vec_id % 20 = 0),
-       |bp AS (SELECT q_id, e.vec_id AS n_id, $cos AS cos_r
-       |  FROM bq JOIN n e ON q_id <> e.vec_id),
-       |br AS (SELECT q_id, n_id,
-       |  row_number() OVER (PARTITION BY q_id ORDER BY cos_r DESC, n_id) AS rnk FROM bp),
-       |exact AS (SELECT q_id, n_id FROM br WHERE rnk <= $k)
-       |SELECT e.q_id, count(r.n_id) AS n_hits,
-       |  round(count(r.n_id)::DOUBLE / count(*), 6) AS recall_r
-       |FROM exact e LEFT JOIN ret r ON e.q_id = r.q_id AND e.n_id = r.n_id
-       |GROUP BY 1 ORDER BY 1""".stripMargin
-  }
-
-  /** Oracle twin of the `similarity_recall` audit: brute-force exact top-k
-    * left-joined by the banded-LSH retrieval, recall per query — the same
-    * two chains as [[sqlTopK]] and [[sqlLshTopK]], CTE-renamed to compose.
-    */
-  private def sqlRecall(k: Int): String = {
-    import graft.llm.Similarity
-    val cells = Similarity.sqlBandCells(
-      "embedding", Similarity.Bands, Similarity.BitsPerBand, Similarity.Dim)
-    val cosQ = s"round(${Similarity.sqlDot("q_emb", "e.embedding")} / (q_nrm * e.nrm), 6)"
-    val cosL = s"round(${Similarity.sqlDot("l.embedding", "rr.embedding")} / (l.nrm * rr.nrm), 6)"
-    s"""WITH n AS (SELECT vec_id, embedding,
-       |  sqrt(${Similarity.sqlDot("embedding", "embedding")}) AS nrm FROM embeddings),
-       |q AS (SELECT vec_id AS q_id, embedding AS q_emb, nrm AS q_nrm
-       |  FROM n WHERE vec_id % 20 = 0),
-       |bp AS (SELECT q_id, e.vec_id AS n_id, $cosQ AS cos_r
-       |  FROM q JOIN n e ON q_id <> e.vec_id),
-       |br AS (SELECT q_id, n_id,
-       |  row_number() OVER (PARTITION BY q_id ORDER BY cos_r DESC, n_id) AS rnk FROM bp),
-       |exact AS (SELECT q_id, n_id FROM br WHERE rnk <= $k),
-       |c AS (SELECT vec_id, unnest($cells) AS t FROM embeddings),
-       |cc0 AS (SELECT vec_id, t['band'] AS band, t['cell'] AS cell FROM c),
-       |cc AS (SELECT vec_id, band, cell FROM (
-       |  SELECT *, count(*) OVER (PARTITION BY band, cell) AS occ FROM cc0)
-       |  WHERE occ <= ${Similarity.MaxCellBucket}),
-       |cand AS (SELECT DISTINCT qq.vec_id AS q_id, e.vec_id AS n_id
-       |  FROM cc qq JOIN cc e ON qq.band = e.band AND qq.cell = e.cell AND qq.vec_id <> e.vec_id
-       |  WHERE qq.vec_id % 20 = 0),
-       |lp AS (SELECT q_id, n_id, $cosL AS cos_r
-       |  FROM cand JOIN n l ON q_id = l.vec_id JOIN n rr ON n_id = rr.vec_id),
-       |lr AS (SELECT q_id, n_id,
-       |  row_number() OVER (PARTITION BY q_id ORDER BY cos_r DESC, n_id) AS rnk FROM lp),
-       |ret AS (SELECT q_id, n_id FROM lr WHERE rnk <= $k)
-       |SELECT e.q_id, count(r.n_id) AS n_hits,
-       |  round(count(r.n_id)::DOUBLE / count(*), 6) AS recall_r
-       |FROM exact e LEFT JOIN ret r ON e.q_id = r.q_id AND e.n_id = r.n_id
-       |GROUP BY 1 ORDER BY 1""".stripMargin
-  }
-
-  /** Oracle twin of the `similarity_mrr` audit: brute rank-1 true NN per
-    * query, left-joined by the banded-LSH top-k WITH its rank; reciprocal
-    * rank as exact ppm integer division. Same CTE chains as [[sqlRecall]].
-    */
-  private def sqlMrr(k: Int): String = {
-    import graft.llm.Similarity
-    val cells = Similarity.sqlBandCells(
-      "embedding", Similarity.Bands, Similarity.BitsPerBand, Similarity.Dim)
-    val cosQ = s"round(${Similarity.sqlDot("q_emb", "e.embedding")} / (q_nrm * e.nrm), 6)"
-    val cosL = s"round(${Similarity.sqlDot("l.embedding", "rr.embedding")} / (l.nrm * rr.nrm), 6)"
-    s"""WITH n AS (SELECT vec_id, embedding,
-       |  sqrt(${Similarity.sqlDot("embedding", "embedding")}) AS nrm FROM embeddings),
-       |q AS (SELECT vec_id AS q_id, embedding AS q_emb, nrm AS q_nrm
-       |  FROM n WHERE vec_id % 20 = 0),
-       |bp AS (SELECT q_id, e.vec_id AS n_id, $cosQ AS cos_r
-       |  FROM q JOIN n e ON q_id <> e.vec_id),
-       |br AS (SELECT q_id, n_id,
-       |  row_number() OVER (PARTITION BY q_id ORDER BY cos_r DESC, n_id) AS rnk FROM bp),
-       |nn AS (SELECT q_id, n_id AS nn_id FROM br WHERE rnk = 1),
-       |c AS (SELECT vec_id, unnest($cells) AS t FROM embeddings),
-       |cc0 AS (SELECT vec_id, t['band'] AS band, t['cell'] AS cell FROM c),
-       |cc AS (SELECT vec_id, band, cell FROM (
-       |  SELECT *, count(*) OVER (PARTITION BY band, cell) AS occ FROM cc0)
-       |  WHERE occ <= ${Similarity.MaxCellBucket}),
-       |cand AS (SELECT DISTINCT qq.vec_id AS q_id, e.vec_id AS n_id
-       |  FROM cc qq JOIN cc e ON qq.band = e.band AND qq.cell = e.cell AND qq.vec_id <> e.vec_id
-       |  WHERE qq.vec_id % 20 = 0),
-       |lp AS (SELECT q_id, n_id, $cosL AS cos_r
-       |  FROM cand JOIN n l ON q_id = l.vec_id JOIN n rr ON n_id = rr.vec_id),
-       |lr AS (SELECT q_id, n_id,
-       |  row_number() OVER (PARTITION BY q_id ORDER BY cos_r DESC, n_id) AS rnk FROM lp),
-       |ret AS (SELECT q_id, n_id, rnk FROM lr WHERE rnk <= $k)
-       |SELECT nn.q_id, nn.nn_id,
-       |  coalesce(r.rnk, 0)::BIGINT AS rank_lsh,
-       |  (CASE WHEN r.rnk IS NULL THEN 0 ELSE 1000000 // r.rnk END)::BIGINT AS rr_ppm
-       |FROM nn LEFT JOIN ret r ON nn.q_id = r.q_id AND nn.nn_id = r.n_id
-       |ORDER BY nn.q_id""".stripMargin
-  }
-
-  /** Oracle twin of `hard_negatives`: the [[sqlLshTopK]] retrieval chain to
-    * top-kRetr, labels joined, same-label candidates (presumed positives)
-    * excluded, survivors re-ranked to kNeg.
-    */
-  private def sqlHardNegatives(kRetr: Int, kNeg: Int): String = {
-    import graft.llm.Similarity
-    val cells = Similarity.sqlBandCells(
-      "embedding", Similarity.Bands, Similarity.BitsPerBand, Similarity.Dim)
-    val cos = s"round(${Similarity.sqlDot("l.embedding", "r.embedding")} / (l.nrm * r.nrm), 6)"
-    s"""WITH n AS (SELECT vec_id, embedding,
-       |  sqrt(${Similarity.sqlDot("embedding", "embedding")}) AS nrm FROM embeddings),
-       |c AS (SELECT vec_id, unnest($cells) AS t FROM embeddings),
-       |cc0 AS (SELECT vec_id, t['band'] AS band, t['cell'] AS cell FROM c),
-       |cc AS (SELECT vec_id, band, cell FROM (
-       |  SELECT *, count(*) OVER (PARTITION BY band, cell) AS occ FROM cc0)
-       |  WHERE occ <= ${Similarity.MaxCellBucket}),
-       |cand AS (SELECT DISTINCT q.vec_id AS q_id, e.vec_id AS n_id
-       |  FROM cc q JOIN cc e ON q.band = e.band AND q.cell = e.cell AND q.vec_id <> e.vec_id
-       |  WHERE q.vec_id % 20 = 0),
-       |p AS (SELECT q_id, n_id, $cos AS cos_r
-       |  FROM cand JOIN n l ON q_id = l.vec_id JOIN n r ON n_id = r.vec_id),
-       |ret AS (SELECT q_id, n_id, cos_r FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos_r DESC, n_id) AS rnk
-       |  FROM p) WHERE rnk <= $kRetr),
-       |neg AS (SELECT rt.q_id, ql.label AS q_label, rt.n_id, nl.label AS n_label, rt.cos_r
-       |  FROM ret rt JOIN embeddings ql ON rt.q_id = ql.vec_id
-       |              JOIN embeddings nl ON rt.n_id = nl.vec_id
-       |  WHERE nl.label <> ql.label)
-       |SELECT q_id, q_label, n_id, n_label, cos_r, neg_rank FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos_r DESC, n_id) AS neg_rank
-       |  FROM neg) WHERE neg_rank <= $kNeg
-       |ORDER BY q_id, neg_rank, n_id""".stripMargin
-  }
-
-  /** Oracle twin of `knn_classify`: the [[sqlLshTopK]] retrieval chain to
-    * top-k, labels joined, per-(query, label) vote counts, majority with
-    * smallest-label tie-break, true label beside the prediction.
-    */
-  private def sqlKnnClassify(k: Int): String = {
-    import graft.llm.Similarity
-    val cells = Similarity.sqlBandCells(
-      "embedding", Similarity.Bands, Similarity.BitsPerBand, Similarity.Dim)
-    val cos = s"round(${Similarity.sqlDot("l.embedding", "r.embedding")} / (l.nrm * r.nrm), 6)"
-    s"""WITH n AS (SELECT vec_id, embedding,
-       |  sqrt(${Similarity.sqlDot("embedding", "embedding")}) AS nrm FROM embeddings),
-       |c AS (SELECT vec_id, unnest($cells) AS t FROM embeddings),
-       |cc0 AS (SELECT vec_id, t['band'] AS band, t['cell'] AS cell FROM c),
-       |cc AS (SELECT vec_id, band, cell FROM (
-       |  SELECT *, count(*) OVER (PARTITION BY band, cell) AS occ FROM cc0)
-       |  WHERE occ <= ${Similarity.MaxCellBucket}),
-       |cand AS (SELECT DISTINCT q.vec_id AS q_id, e.vec_id AS n_id
-       |  FROM cc q JOIN cc e ON q.band = e.band AND q.cell = e.cell AND q.vec_id <> e.vec_id
-       |  WHERE q.vec_id % 20 = 0),
-       |p AS (SELECT q_id, n_id, $cos AS cos_r
-       |  FROM cand JOIN n l ON q_id = l.vec_id JOIN n r ON n_id = r.vec_id),
-       |ret AS (SELECT q_id, n_id FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos_r DESC, n_id) AS rnk
-       |  FROM p) WHERE rnk <= $k),
-       |votes AS (SELECT rt.q_id, nl.label AS n_label, count(*)::BIGINT AS n_votes
-       |  FROM ret rt JOIN embeddings nl ON rt.n_id = nl.vec_id
-       |  GROUP BY 1, 2),
-       |win AS (SELECT q_id, n_label, n_votes FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY n_votes DESC, n_label) AS rn
-       |  FROM votes) WHERE rn = 1)
-       |SELECT w.q_id, ql.label AS true_label, w.n_label AS pred_label, w.n_votes
-       |FROM win w JOIN embeddings ql ON w.q_id = ql.vec_id
-       |ORDER BY w.q_id""".stripMargin
-  }
-
-  /** Oracle twin of [[graft.llm.Dedup.verifiedJaccard]]: CTE chain from
-    * documents to `cand` (minhash-LSH candidate pairs a,b,n_bands) and `v`
-    * (candidates + exact jaccard over distinct shingle sets). Emitted
-    * WITHOUT the `WITH ` prefix so callers can prepend `WITH RECURSIVE`.
-    */
-  /** Shared LSH CTE base (`t/th/s/nz/sg/bd/bb/k`): banded signatures + the
-    * distinct shingle sets, over ALL documents.
-    */
-  private def sqlLshBase(shingleSize: Int, numPerms: Int, numBands: Int,
-                         pred: String = "TRUE"): String = {
-    import graft.llm.{Dedup, TextAnalysis => TA}
-    val toks = TA.sqlTokens("text")
-    val rpb = numPerms / numBands
-    s"""t AS (SELECT doc_id, $toks AS toks FROM documents WHERE $pred),
-       |th AS (SELECT doc_id, ${Dedup.sqlTokenHashes("toks")} AS th FROM t),
-       |s AS (SELECT doc_id, ${Dedup.sqlHashedShingles("th", shingleSize)} AS sh FROM th),
-       |nz AS (SELECT doc_id, sh FROM s WHERE len(sh) > 0),
-       |sg AS (SELECT doc_id, ${Dedup.sqlMinhashSignature("sh", numPerms)} AS sig FROM nz),
-       |bd AS (SELECT doc_id,
-       |  unnest([{'band': b, 'bh': ${graft.expr.PortableHash.sqlPhash(s"array_to_string((sig)[b * $rpb + 1 : b * $rpb + $rpb], ',')")}}
-       |          for b in range(0, $numBands)]) AS t
-       |  FROM sg),
-       |bb0 AS (SELECT doc_id, t['band'] AS band, t['bh'] AS bh FROM bd),
-       |bb AS (SELECT doc_id, band, bh FROM (
-       |  SELECT *, count(*) OVER (PARTITION BY band, bh) AS occ FROM bb0)
-       |  WHERE occ <= ${graft.llm.Dedup.MaxBandBucket}),
-       |k AS (SELECT doc_id, list_distinct(sh) AS sh FROM s)""".stripMargin
-  }
-
-  /** Oracle CTE chain for embedding near-dup pairs, ending in
-    * `ndp(a, b, cos_r)` — shared by `embedding_neardup` (pair list) and
-    * `semantic_clusters` (CC over the same edges).
-    */
-  private def sqlNearDupCte(threshold: Double): String = {
-    import graft.llm.Similarity
-    val cells = Similarity.sqlBandCells(
-      "embedding", Similarity.Bands, Similarity.BitsPerBand, Similarity.Dim)
-    val cos = s"round(${Similarity.sqlDot("l.embedding", "r.embedding")} / (l.nrm * r.nrm), 6)"
-    s"""n AS (SELECT vec_id, embedding,
-       |  sqrt(${Similarity.sqlDot("embedding", "embedding")}) AS nrm FROM embeddings),
-       |c AS (SELECT vec_id, unnest($cells) AS t FROM embeddings),
-       |cc0 AS (SELECT vec_id, t['band'] AS band, t['cell'] AS cell FROM c),
-       |cc AS (SELECT vec_id, band, cell FROM (
-       |  SELECT *, count(*) OVER (PARTITION BY band, cell) AS occ FROM cc0)
-       |  WHERE occ <= ${Similarity.MaxCellBucket}),
-       |cand AS (SELECT DISTINCT l.vec_id AS a, r.vec_id AS b
-       |  FROM cc l JOIN cc r ON l.band = r.band AND l.cell = r.cell AND l.vec_id < r.vec_id),
-       |p AS (SELECT a, b, $cos AS cos_r
-       |  FROM cand JOIN n l ON a = l.vec_id JOIN n r ON b = r.vec_id),
-       |ndp AS (SELECT a, b, cos_r FROM p WHERE cos_r >= $threshold)""".stripMargin
-  }
-
-  /** Oracle twin of [[graft.llm.Similarity.incremental]]: batch vectors
-    * (pred on vec_id) probe index vectors on shared (band, cell), verified
-    * by exact cosine — same CTE geometry as [[sqlNearDupCte]] with the
-    * batch/index split of [[sqlIncremental]].
-    */
-  private def sqlSemanticIncremental(batchPred: String => String, thr: Double): String = {
-    import graft.llm.Similarity
-    val cells = Similarity.sqlBandCells(
-      "embedding", Similarity.Bands, Similarity.BitsPerBand, Similarity.Dim)
-    val cos = s"round(${Similarity.sqlDot("l.embedding", "r.embedding")} / (l.nrm * r.nrm), 6)"
-    s"""WITH n AS (SELECT vec_id, embedding,
-       |  sqrt(${Similarity.sqlDot("embedding", "embedding")}) AS nrm FROM embeddings),
-       |c AS (SELECT vec_id, unnest($cells) AS t FROM embeddings),
-       |cc0 AS (SELECT vec_id, t['band'] AS band, t['cell'] AS cell FROM c),
-       |cc AS (SELECT vec_id, band, cell FROM (
-       |  SELECT *, count(*) OVER (PARTITION BY band, cell) AS occ FROM cc0)
-       |  WHERE occ <= ${Similarity.MaxCellBucket}),
-       |cand AS (SELECT DISTINCT b.vec_id AS bid, i.vec_id AS iid
-       |  FROM cc b JOIN cc i ON b.band = i.band AND b.cell = i.cell
-       |  WHERE ${batchPred("b.vec_id")} AND NOT ${batchPred("i.vec_id")}),
-       |ver AS (SELECT bid, iid, $cos AS cos_r
-       |  FROM cand JOIN n l ON bid = l.vec_id JOIN n r ON iid = r.vec_id),
-       |best AS (SELECT bid, max(cos_r) AS bc FROM ver GROUP BY 1),
-       |pick AS (SELECT v.bid, min(v.iid) AS near_id, max(v.cos_r) AS best_cos_r
-       |  FROM ver v JOIN best t2 ON v.bid = t2.bid AND v.cos_r = t2.bc GROUP BY 1)
-       |SELECT e.vec_id, coalesce(p.near_id, -1)::BIGINT AS near_id,
-       |  coalesce(p.best_cos_r, -2.0)::DOUBLE AS best_cos_r,
-       |  coalesce(p.best_cos_r < $thr, TRUE) AS keep
-       |FROM embeddings e LEFT JOIN pick p ON e.vec_id = p.bid
-       |WHERE ${batchPred("e.vec_id")}
-       |ORDER BY e.vec_id""".stripMargin
-  }
-
-  private def sqlVerifiedCte(shingleSize: Int, numPerms: Int, numBands: Int): String =
-    s"""${sqlLshBase(shingleSize, numPerms, numBands)},
-       |cand AS (SELECT l.doc_id AS a, r.doc_id AS b, count(*) AS n_bands
-       |  FROM bb l JOIN bb r ON l.band = r.band AND l.bh = r.bh AND l.doc_id < r.doc_id
-       |  GROUP BY 1, 2),
-       |v AS (SELECT a, b, n_bands,
-       |  round(len(list_intersect(l.sh, r.sh))::DOUBLE /
-       |        len(list_distinct(list_concat(l.sh, r.sh))), 6) AS jac_r
-       |  FROM cand JOIN k l ON a = l.doc_id JOIN k r ON b = r.doc_id)""".stripMargin
-
-  /** Oracle for `lsh_param_sweep`: one shared signature CTE, one
-    * banding + capped candidate CTE per grid config (mirroring the
-    * engine's per-config [[graft.llm.Dedup.cappedBuckets]]), one exact
-    * verification over the union of candidate pairs. thr_micro values are
-    * the SAME driver-computed literals the plan carries.
-    */
-  private def sqlLshSweep(shingleSize: Int, numPerms: Int): String = {
-    import graft.llm.{Dedup, TextAnalysis => TA}
-    val toks = TA.sqlTokens("text")
-    val perCfg = LshSweepConfigs.map { case (nb, rpb, _) =>
-      s"""bd$nb AS (SELECT doc_id,
-         |  unnest([{'band': bi, 'bh': ${graft.expr.PortableHash.sqlPhash(
-              s"array_to_string((sig)[bi * $rpb + 1 : bi * $rpb + $rpb], ',')")}}
-         |          for bi in range(0, $nb)]) AS t
-         |  FROM sg),
-         |bb$nb AS (SELECT doc_id, band, bh FROM (
-         |  SELECT doc_id, t['band'] AS band, t['bh'] AS bh,
-         |         count(*) OVER (PARTITION BY t['band'], t['bh']) AS occ FROM bd$nb)
-         |  WHERE occ <= ${Dedup.MaxBandBucket}),
-         |cand$nb AS (SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
-         |  FROM bb$nb l JOIN bb$nb r
-         |  ON l.band = r.band AND l.bh = r.bh AND l.doc_id < r.doc_id)"""
-        .stripMargin
-    }.mkString(",\n")
-    val unionCand = LshSweepConfigs.map { case (nb, _, _) =>
-      s"SELECT $nb AS n_bands, a, b FROM cand$nb" }.mkString("\n  UNION ALL ")
-    val cfgValues = LshSweepConfigs.map { case (nb, r, m) =>
-      s"($nb, $r, ${m}::BIGINT)" }.mkString(", ")
-    s"""WITH t AS (SELECT doc_id, $toks AS toks FROM documents),
-       |th AS (SELECT doc_id, ${Dedup.sqlTokenHashes("toks")} AS th FROM t),
-       |s AS (SELECT doc_id, ${Dedup.sqlHashedShingles("th", shingleSize)} AS sh FROM th),
-       |nz AS (SELECT doc_id, sh FROM s WHERE len(sh) > 0),
-       |sg AS (SELECT doc_id, ${Dedup.sqlMinhashSignature("sh", numPerms)} AS sig FROM nz),
-       |k AS (SELECT doc_id, list_distinct(sh) AS sh FROM s),
-       |$perCfg,
-       |allc AS ($unionCand),
-       |u AS (SELECT DISTINCT a, b FROM allc),
-       |ver AS (SELECT u.a, u.b,
-       |  (round(len(list_intersect(l.sh, r.sh))::DOUBLE /
-       |         len(list_distinct(list_concat(l.sh, r.sh))), 6) >= 0.5) AS is_true
-       |  FROM u JOIN k l ON u.a = l.doc_id JOIN k r ON u.b = r.doc_id),
-       |tot AS (SELECT coalesce(sum(CASE WHEN is_true THEN 1 ELSE 0 END), 0)::BIGINT
-       |  AS total_true FROM ver),
-       |cnt AS (SELECT n_bands, count(*)::BIGINT AS n_pairs,
-       |  sum(CASE WHEN is_true THEN 1 ELSE 0 END)::BIGINT AS n_true
-       |  FROM allc JOIN ver USING (a, b) GROUP BY 1),
-       |cfg(n_bands, rows_per_band, thr_micro) AS (VALUES $cfgValues)
-       |SELECT cfg.n_bands::INTEGER AS n_bands,
-       |  cfg.rows_per_band::INTEGER AS rows_per_band, cfg.thr_micro,
-       |  coalesce(cnt.n_pairs, 0)::BIGINT AS n_pairs,
-       |  coalesce(cnt.n_true, 0)::BIGINT AS n_true,
-       |  (CASE WHEN coalesce(cnt.n_pairs, 0) > 0
-       |        THEN (coalesce(cnt.n_true, 0) * 1000000) // cnt.n_pairs
-       |        ELSE 0 END)::BIGINT AS precision_ppm,
-       |  (CASE WHEN tot.total_true > 0
-       |        THEN (coalesce(cnt.n_true, 0) * 1000000) // tot.total_true
-       |        ELSE 0 END)::BIGINT AS recall_ppm
-       |FROM cfg LEFT JOIN cnt ON cfg.n_bands = cnt.n_bands CROSS JOIN tot
-       |ORDER BY cfg.n_bands""".stripMargin
-  }
-
-  /** Oracle twin of [[graft.llm.Dedup.incremental]]: batch docs (pred on
-    * doc_id) probe the index on exact fingerprints and LSH bands.
-    */
-  private def sqlIncremental(batchPred: String => String, shingleSize: Int,
-                             numPerms: Int, numBands: Int, thr: Double): String = {
-    import graft.llm.{Dedup, TextAnalysis => TA}
-    s"""WITH ${sqlLshBase(shingleSize, numPerms, numBands)},
-       |fpx AS (SELECT DISTINCT ${Dedup.sqlFingerprint("text")} AS fp
-       |  FROM documents WHERE NOT ${batchPred("doc_id")}),
-       |bfp AS (SELECT doc_id, ${Dedup.sqlFingerprint("text")} AS fp
-       |  FROM documents WHERE ${batchPred("doc_id")}),
-       |ex AS (SELECT b.doc_id, (i.fp IS NOT NULL) AS is_exact
-       |  FROM bfp b LEFT JOIN fpx i ON b.fp = i.fp),
-       |cand AS (SELECT DISTINCT l.doc_id AS bid, r.doc_id AS iid
-       |  FROM bb l JOIN bb r ON l.band = r.band AND l.bh = r.bh
-       |  WHERE ${batchPred("l.doc_id")} AND NOT ${batchPred("r.doc_id")}),
-       |ver AS (SELECT bid, iid,
-       |  round(len(list_intersect(l.sh, r.sh))::DOUBLE /
-       |        len(list_distinct(list_concat(l.sh, r.sh))), 6) AS jac_r
-       |  FROM cand JOIN k l ON bid = l.doc_id JOIN k r ON iid = r.doc_id),
-       |best AS (SELECT bid, max(jac_r) AS bj FROM ver GROUP BY 1),
-       |pick AS (SELECT v.bid, min(v.iid) AS near_id, max(v.jac_r) AS best_jac_r
-       |  FROM ver v JOIN best t2 ON v.bid = t2.bid AND v.jac_r = t2.bj GROUP BY 1)
-       |SELECT e.doc_id, e.is_exact,
-       |  coalesce(p.near_id, -1)::BIGINT AS near_id,
-       |  coalesce(p.best_jac_r, -1.0)::DOUBLE AS best_jac_r,
-       |  (NOT e.is_exact AND coalesce(p.best_jac_r < $thr, TRUE)) AS keep
-       |FROM ex e LEFT JOIN pick p ON e.doc_id = p.bid
-       |ORDER BY doc_id""".stripMargin
-  }
-
-  private def sqlProjectPixel(proj: Projection, zoom: Int): String =
-    sqlOcc +
-      s"""SELECT event_id,
-         |  ${proj.sqlGlobalPixelX("lat", "lng", zoom, TileSize)} AS px,
-         |  ${proj.sqlGlobalPixelY("lat", "lng", zoom, TileSize)} AS py
-         |FROM occ ORDER BY event_id""".stripMargin
-
-  /** CTE `pix`: exploded view rows with global pixel columns at (proj, zoom). */
-  private def sqlPixelCte(proj: Projection, zoom: Int): String =
-    s""", pix AS (
-       |  SELECT event_id, map_key,
-       |    ${BorYear.sqlEncode("event_type", "yr")} AS bor_year,
-       |    ${proj.sqlGlobalPixelX("lat", "lng", zoom, TileSize)} AS px,
-       |    ${proj.sqlGlobalPixelY("lat", "lng", zoom, TileSize)} AS py
-       |  FROM (SELECT event_id, event_type, yr, lat, lng, unnest(mks) AS map_key FROM occ))
-       |""".stripMargin
-
-  private def sqlCollectTile(proj: Projection, zoom: Int): String = {
-    val adr = TileAddressing(proj, TileSize, BufferSize)
-    sqlOcc + sqlPixelCte(proj, zoom) +
-      s""", pc AS (
-         |  SELECT map_key, px, py, bor_year, count(*) AS cnt
-         |  FROM pix WHERE px IS NOT NULL GROUP BY 1, 2, 3, 4),
-         |pf AS (
-         |  SELECT map_key, px, py,
-         |    array_to_string(
-         |      list_sort(list(bor_year::VARCHAR || ':' || cnt::VARCHAR)),
-         |      ';') AS feat_str
-         |  FROM pc GROUP BY 1, 2, 3),
-         |adr AS (
-         |  SELECT map_key, feat_str, unnest(${adr.sqlAddresses(zoom, "px", "py")}) AS t
-         |  FROM pf),
-         |cells AS (
-         |  SELECT ${Salt.sqlTileKey("map_key", zoom.toString, "t['tileX']", "t['tileY']", SaltModulo)} AS key,
-         |    t['pixelX'] AS x, t['pixelY'] AS y, feat_str
-         |  FROM adr)
-         |SELECT key,
-         |  array_to_string(
-         |    list_sort(list(x::VARCHAR || ',' || y::VARCHAR || '|' || feat_str)),
-         |    '#') AS tile_str
-         |FROM cells GROUP BY 1 ORDER BY 1""".stripMargin
-  }
+    VocabKeys.vocabTop(s, d)
 
   /** Flagship: the reference's t1 spine (SURVEY §7.2) on sf0.001 —
     * explode views → pre-aggregate → project to zoom-0 Mercator pixels →
@@ -8681,7 +54,8 @@ object SparkEntry {
     */
   def entry(spark: SparkSession): DataFrame = {
     val d = "/root/testdata/sf0.001"
-    val t1 = Pyramid.pixelCounts(pyramidInput(spark, d), Mercator3857, 0, TileSize)
+    val t1 = Pyramid.pixelCounts(
+      Pyramid.prepareInput(KeySupport.occ(spark, d), OA.mapKeysArray), Mercator3857, 0, TileSize)
     t1.filter(col("xy").isNotNull)
       .select(col("mapKey").as("map_key"),
         col("xy.x").as("px"), col("xy.y").as("py"),
