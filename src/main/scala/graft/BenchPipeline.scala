@@ -41,7 +41,7 @@ object BenchPipeline {
     val stages = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val cfg = MapPipeline.Config(
       workDir = workDir, maxZoom = maxZoom, threshold = threshold,
-      onStage = (name, sec) => stages.synchronized { stages(name) = sec })
+      onStage = (name, sec) => stages(name) = sec)
 
     val t0 = System.nanoTime()
     val res = MapPipeline.run(spark, occ, OA.mapKeysArray, cfg)

@@ -1,5 +1,11 @@
 package graft
 
+import java.util.concurrent.{ExecutionException, Executors, Future}
+
+import scala.collection.concurrent.TrieMap
+import scala.collection.mutable
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -21,10 +27,18 @@ import graft.tiles.{Projections, Pyramid, TileAddressing}
   *     of its design that cannot scale; we use broadcast semi/anti joins.
   *  3. Point path: per-view feature blobs under salted keys
   *     (`PointMapBuilder.java:49-93`).
-  *  4. Tile path: per projection × zoom (slowest-first), the t1→t3 cascade,
-  *     deterministic blob encode, salt-partitioned sorted sink
-  *     (`TileMapBuilder.java:51-77,113-200`). EPSG:3031 runs on a
-  *     south-hemisphere pre-filter (`TileMapBuilder.java:59-62`).
+  *  4. Tile path: one chain per projection, each running its zooms
+  *     deepest first: the t1→t3 cascade, deterministic blob encode,
+  *     salt-partitioned sorted sink (`TileMapBuilder.java:51-77,113-200`).
+  *     EPSG:3031 runs on a south-hemisphere pre-filter
+  *     (`TileMapBuilder.java:59-62`).
+  *
+  * The barriers run in order on the caller thread. The point sink and the
+  * projection chains only read barriers, so they run as concurrent Spark
+  * jobs: the point sink from the moment `prepared` exists, every chain once
+  * the south barrier is written. `run` returns or throws only after every
+  * branch has finished; a failure names its stage, and failures of other
+  * branches ride along as suppressed exceptions.
   */
 object MapPipeline {
 
@@ -92,16 +106,14 @@ object MapPipeline {
       borCodes: Seq[(String, Int)] = BorYear.EventTypeCodes,
       barrier: Option[Barrier] = None,
       // per-stage wall-clock hook (BenchPipeline); stages run eagerly
-      // (barrier writes, sink writes), so each callback is a real wall time
+      // (barrier writes, sink writes), so each wall is a real wall time.
+      // Called on the caller thread, once per stage in pipeline order, after
+      // the concurrent branches have joined. The point sink and the tile
+      // chains overlap, so the walls of concurrent stages can sum to more
+      // than the run's own wall (perfbench's `MapPipeline.tiles_s` is such
+      // a sum).
       onStage: (String, Double) => Unit = (_, _) => ()) {
     def effectiveBarrier: Barrier = barrier.getOrElse(PathBarrier(workDir))
-  }
-
-  private def timed[T](cfg: Config)(name: String)(body: => T): T = {
-    val t0 = System.nanoTime()
-    val r = body
-    cfg.onStage(name, (System.nanoTime() - t0) / 1e9)
-    r
   }
 
   /** `prepared` / `tileInput` are the post-barrier handles (parquet scan or
@@ -111,63 +123,132 @@ object MapPipeline {
                     pointsPath: String, tileDirs: Seq[String])
 
   def run(spark: SparkSession, occ: DataFrame, mapKeysArray: Column, cfg: Config): Result = {
-    val barrier = cfg.effectiveBarrier
-    // -- 1. prepare + materialization barrier
-    val prepared = timed(cfg)("prepare_barrier") {
-      barrier.materialize(spark,
-        Pyramid.prepareInput(occ, mapKeysArray, cfg.borCodes), "prepared")
-    }
-
-    // -- 2. cardinality split (broadcast semi/anti join, not driver collect)
-    val bigViews = prepared.groupBy("mapKey")
-      .agg(sum("occCount").as("n")).filter(col("n") >= cfg.threshold)
-      .select("mapKey")
-    val tileInput = timed(cfg)("tile_input_barrier") {
-      barrier.materialize(spark,
-        prepared.join(broadcast(bigViews), Seq("mapKey"), "left_semi"), "tile_input")
-    }
-    val pointInput = prepared.join(broadcast(bigViews), Seq("mapKey"), "left_anti")
-
-    // -- 3. point path
     implicit val s: SparkSession = spark
-    val pointsPath = s"${cfg.workDir}/points"
-    timed(cfg)("points_sink") {
-      // both codecs in one encode scan, mirroring the tile sink: `value` =
-      // the oracle-checkable layout, `pb` = the protobuf wire bytes the
-      // reference bulk-loads (`PointMapBuilder.java:84-92`)
-      Sinks.writeSorted(
-        Sinks.encodePointsWithPb(PointMap.pointFeatures(pointInput, cfg.saltModulo))
-          .toDF("key", "value", "pb"),
-        cfg.saltModulo, pointsPath)
-    }
-
-    // -- 4. tile path: projections × zooms, slowest (deepest) first
-    val needsSouth = cfg.projections.contains("EPSG:3031")
-    val south = // 100 km buffer ≈ lat <= 1 (TileMapBuilder.java:59-62)
-      if (needsSouth) timed(cfg)("south_barrier") {
-        barrier.materialize(spark,
-          tileInput.filter(col("lat") <= 1), "tile_input_south")
-      }
-      else tileInput
-
-    val tileDirs = for {
-      epsg <- cfg.projections
-      zoom <- (cfg.maxZoom to 0 by -1)
-    } yield {
+    // every projection resolves before the first barrier: an unsupported
+    // SRS leaves nothing written
+    val chains = cfg.projections.map { epsg =>
       val proj = Projections.fromEpsg(epsg)
-      val input = if (epsg == "EPSG:3031") south else tileInput
-      val dir = s"${cfg.workDir}/tiles/${epsg.replaceAll(":", "_")}/z$zoom"
-      timed(cfg)(s"tiles/${epsg.replaceAll(":", "_")}/z$zoom") {
-        val t3 = Pyramid.build(input, proj, zoom, cfg.tileSize, cfg.bufferSize, cfg.saltModulo)
-        // both codecs in one encode scan: `value` = the oracle-checkable
-        // deterministic layout, `mvt` = real Mapbox Vector Tile wire bytes
-        Sinks.writeSorted(
-          Sinks.encodeTilesWithMvt(t3, cfg.tileSize, cfg.borCodes)
-            .toDF("key", "value", "mvt"),
-          cfg.saltModulo, dir)
-      }
-      dir
+      val name = epsg.replaceAll(":", "_")
+      val zooms = (cfg.maxZoom to 0 by -1).map(z => (z, s"tiles/$name/z$z"))
+      (epsg, proj, zooms)
     }
-    Result(prepared, tileInput, pointsPath, tileDirs)
+    val needsSouth = cfg.projections.contains("EPSG:3031")
+    val stageOrder = Seq("prepare_barrier", "tile_input_barrier", "points_sink") ++
+      (if (needsSouth) Seq("south_barrier") else Nil) ++
+      chains.flatMap(_._3.map(_._2))
+    val walls = TrieMap.empty[String, Double]
+    def stage[T](name: String)(body: => T): T = {
+      val t0 = System.nanoTime()
+      val r = try body catch {
+        case NonFatal(e) => throw new RuntimeException(s"map pipeline stage $name failed", e)
+      }
+      walls(name) = (System.nanoTime() - t0) / 1e9
+      r
+    }
+    val barrier = cfg.effectiveBarrier
+    val branches = new Branches(chains.size + 1)
+
+    // the caller thread's own failure comes first; every branch is joined
+    // before anything is returned or thrown
+    val result = try Right {
+      // -- 1. prepare + materialization barrier
+      val prepared = stage("prepare_barrier") {
+        barrier.materialize(spark,
+          Pyramid.prepareInput(occ, mapKeysArray, cfg.borCodes), "prepared")
+      }
+
+      // -- 2. cardinality split (broadcast semi/anti join, not driver collect)
+      val bigViews = prepared.groupBy("mapKey")
+        .agg(sum("occCount").as("n")).filter(col("n") >= cfg.threshold)
+        .select("mapKey")
+      val pointInput = prepared.join(broadcast(bigViews), Seq("mapKey"), "left_anti")
+
+      // -- 3. point path: needs only `prepared`, so it overlaps the two
+      // later barriers
+      val pointsPath = s"${cfg.workDir}/points"
+      branches.submit {
+        stage("points_sink") {
+          // both codecs in one encode scan, mirroring the tile sink: `value` =
+          // the oracle-checkable layout, `pb` = the protobuf wire bytes the
+          // reference bulk-loads (`PointMapBuilder.java:84-92`)
+          Sinks.writeSorted(
+            Sinks.encodePointsWithPb(PointMap.pointFeatures(pointInput, cfg.saltModulo))
+              .toDF("key", "value", "pb"),
+            cfg.saltModulo, pointsPath)
+        }
+      }
+
+      val tileInput = stage("tile_input_barrier") {
+        barrier.materialize(spark,
+          prepared.join(broadcast(bigViews), Seq("mapKey"), "left_semi"), "tile_input")
+      }
+      val south = // 100 km buffer ≈ lat <= 1 (TileMapBuilder.java:59-62)
+        if (needsSouth) stage("south_barrier") {
+          barrier.materialize(spark,
+            tileInput.filter(col("lat") <= 1), "tile_input_south")
+        }
+        else tileInput
+
+      // -- 4. tile path: one chain per projection, zooms deepest first
+      val tileDirs = chains.flatMap { case (epsg, proj, zooms) =>
+        val input = if (epsg == "EPSG:3031") south else tileInput
+        branches.submit {
+          zooms.foreach { case (zoom, name) =>
+            stage(name) {
+              val t3 = Pyramid.build(input, proj, zoom, cfg.tileSize, cfg.bufferSize,
+                cfg.saltModulo)
+              // both codecs in one encode scan: `value` = the oracle-checkable
+              // deterministic layout, `mvt` = real Mapbox Vector Tile wire bytes
+              Sinks.writeSorted(
+                Sinks.encodeTilesWithMvt(t3, cfg.tileSize, cfg.borCodes)
+                  .toDF("key", "value", "mvt"),
+                cfg.saltModulo, s"${cfg.workDir}/$name")
+            }
+          }
+        }
+        zooms.map { case (_, name) => s"${cfg.workDir}/$name" }
+      }
+      Result(prepared, tileInput, pointsPath, tileDirs)
+    } catch { case e: Throwable => Left(e) }
+    val failures = result.left.toSeq ++ branches.join()
+    stageOrder.foreach(n => walls.get(n).foreach(cfg.onStage(n, _)))
+    failures match {
+      case first +: rest => rest.foreach(first.addSuppressed); throw first
+      case _ => result.toOption.get
+    }
+  }
+
+  /** The independent branches of one [[run]]: a fixed pool with one thread
+    * per branch. Threads are created by `submit` on the caller thread, so
+    * each inherits Spark's local properties (job group, description) and
+    * listeners attribute its jobs to the caller's group. Jobs from several
+    * branches share the FIFO scheduler: they fill idle task slots, and the
+    * number of running tasks stays bounded by the cores.
+    */
+  private final class Branches(n: Int) {
+    private val threads = mutable.ArrayBuffer.empty[Thread]
+    private val pool = Executors.newFixedThreadPool(n, (r: Runnable) =>
+      threads.synchronized {
+        val t = new Thread(r, s"graft-pipeline-${threads.size + 1}")
+        t.setDaemon(true)
+        threads += t
+        t
+      })
+    private val futures = mutable.ArrayBuffer.empty[Future[_]]
+
+    def submit(body: => Unit): Unit = futures += pool.submit((() => body): Runnable)
+
+    /** Waits for every submitted branch, stops the pool and joins its
+      * threads; returns the branch failures in submission order.
+      */
+    def join(): Seq[Throwable] = {
+      pool.shutdown()
+      val failures = futures.toSeq.flatMap { f =>
+        try { f.get(); None }
+        catch { case e: ExecutionException => Some(e.getCause) }
+      }
+      threads.synchronized(threads.toSeq).foreach(_.join())
+      failures
+    }
   }
 }

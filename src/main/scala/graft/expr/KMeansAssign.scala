@@ -101,6 +101,10 @@ case class KMeansAssign(child: Expression, centroids: Array[Long],
     })
   }
 
+  // plan text: the codebook by shape and content hash, never by JVM address
+  override def stringArgs: Iterator[Any] = Iterator(child, s"k=$k", s"dim=$dim",
+    s"scale=$scale", f"centroids=${java.util.Arrays.hashCode(centroids)}%08x")
+
   override def equals(o: Any): Boolean = o match {
     case other: KMeansAssign =>
       child == other.child && k == other.k && dim == other.dim &&

@@ -115,6 +115,11 @@ case class KMeansProbes(child: Expression, centroids: Array[Long],
     })
   }
 
+  // plan text: the codebook by shape and content hash, never by JVM address
+  override def stringArgs: Iterator[Any] = Iterator(child, s"k=$k", s"dim=$dim",
+    s"scale=$scale", s"nprobe=$nprobe",
+    f"centroids=${java.util.Arrays.hashCode(centroids)}%08x")
+
   override def equals(o: Any): Boolean = o match {
     case other: KMeansProbes =>
       child == other.child && k == other.k && dim == other.dim &&

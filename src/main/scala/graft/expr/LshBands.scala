@@ -104,6 +104,11 @@ case class LshBands(child: Expression, planes: Array[Float],
     })
   }
 
+  // plan text: the planes by shape and content hash, never by JVM address
+  override def stringArgs: Iterator[Any] = Iterator(child, s"bands=$bands",
+    s"bitsPerBand=$bitsPerBand", s"dim=$dim",
+    f"planes=${java.util.Arrays.hashCode(planes)}%08x")
+
   // the planes array identifies the expression alongside the geometry
   override def equals(o: Any): Boolean = o match {
     case other: LshBands =>

@@ -54,7 +54,8 @@ object PlanCapture {
     } finally spark.listenerManager.unregister(listener)
   }
 
-  private def flushListenerBus(spark: SparkSession): Unit =
+  /** Blocks until every event posted so far has reached every listener. */
+  private[graft] def flushListenerBus(spark: SparkSession): Unit =
     try {
       val sc = spark.sparkContext
       val bus = sc.getClass.getMethod("listenerBus").invoke(sc)

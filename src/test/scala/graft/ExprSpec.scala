@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.expr.{BorYear, MapKeys, Salt}
+import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.types.{ArrayType, FloatType}
+import graft.expr.{BorYear, KMeansAssign, KMeansProbes, LshBands, MapKeys, Salt}
 
 class ExprSpec extends SparkSpec {
   import spark.implicits._
@@ -60,5 +62,31 @@ class ExprSpec extends SparkSpec {
     val got = df.collect().map(_.getSeq[String](0).toSet)
     assert(got(0) == Set("0:0", "1:1", "2:ds1", "6:n1"))
     assert(got(1) == Set("0:0", "1:3", "2:ds2"))
+  }
+
+  test("array-carrying expressions render by shape and content hash, never by JVM address") {
+    val v = BoundReference(0, ArrayType(FloatType), nullable = true)
+    // each call is a new array instance with the same content
+    def codebook = Array(1L, 2L, 3L, 4L)
+    def planes = Array(1f, -1f, -1f, 1f)
+    val rendered = Seq(
+      (() => KMeansAssign(v, codebook, 2, 2, 1e4)) ->
+        "kmeansassign(input[0, array<float>, true], k=2, dim=2, scale=10000.0, centroids=000e93c3)",
+      (() => KMeansProbes(v, codebook, 2, 2, 1e4, 2)) ->
+        ("kmeansprobes(input[0, array<float>, true], k=2, dim=2, scale=10000.0, nprobe=2, " +
+          "centroids=000e93c3)"),
+      (() => LshBands(v, planes, 2, 1, 2)) ->
+        "lshbands(input[0, array<float>, true], bands=2, bitsPerBand=1, dim=2, planes=e00e1781)")
+    rendered.foreach { case (make, expected) =>
+      assert(make().toString == make().toString)
+      assert(make().toString == expected)
+    }
+    // rendering only: auto column names come from `sql`, which is unchanged
+    val df = Seq(Seq(0.5f, 0.5f)).toDF("v")
+    val cents = Array(Array(1L, 2L), Array(3L, 4L))
+    assert(df.select(KMeansAssign.assign(col("v"), cents, 1e4),
+      KMeansProbes.probes(col("v"), cents, 1e4, 2),
+      LshBands.bands(col("v"), 2, 1, 2)((_, _) => Array(1f, -1f))).columns.toSeq ==
+      Seq("kmeansassign(v)", "kmeansprobes(v)", "lshbands(v)"))
   }
 }

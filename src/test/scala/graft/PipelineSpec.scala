@@ -1,11 +1,18 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.analog.{OccurrenceAnalog => OA}
 import graft.expr.BorYear
 import graft.io.Sinks
+import graft.ops.PlanCapture
 import graft.tiles.{Projections, Pyramid}
 
 /** End-to-end pipeline run at sf0.001 (mini pyramid: maxZoom 2), checking
@@ -216,5 +223,105 @@ class PipelineSpec extends SparkSpec {
       .filter(proj.isPlottable(col("lat"), col("lng")))
       .agg(sum("occCount")).collect().head.getLong(0)
     assert(z17Total == plottable, s"z17 conserves plottable counts ($z17Total vs $plottable)")
+  }
+
+  /** 3,000 in-memory events of 40 users through the occurrence analog: at
+    * threshold 500 some views take the tile chains, the rest the point sink.
+    */
+  private def occurrences(): DataFrame =
+    spark.range(3000)
+      .select(col("id").as("event_id"), (col("id") % 40).as("user_id"),
+        element_at(array(lit("signup"), lit("click"), lit("error")),
+          (col("id") % 3 + 1).cast("int")).as("event_type"),
+        (lit(1700000000000000000L) + col("id") * 1000000000L).as("ts"))
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        OA.lat.as("lat"), OA.lng.as("lng"),
+        col("event_type").as("basisOfRecord"), OA.yearCol.as("year"))
+
+  private def pipelineThreads: Set[String] =
+    Thread.getAllStackTraces.keySet.asScala.map(_.getName)
+      .filter(_.startsWith("graft-pipeline-")).toSet
+
+  private def tileStages(epsgs: Seq[String], maxZoom: Int): Seq[String] =
+    for (epsg <- epsgs; z <- maxZoom to 0 by -1) yield s"tiles/${epsg.replace(':', '_')}/z$z"
+
+  test("an unsupported projection fails before any barrier or sink is written") {
+    val work = Files.createTempDirectory("graft_pipeline_srs")
+    val cfg = MapPipeline.Config(workDir = work.toString, maxZoom = 1, threshold = 500,
+      projections = Seq("EPSG:3857", "EPSG:9999"))
+    val e = intercept[IllegalArgumentException] {
+      MapPipeline.run(spark, occurrences(), OA.mapKeysArray, cfg)
+    }
+    assert(e.getMessage == "Unsupported SRS: EPSG:9999")
+    assert(work.toFile.list().isEmpty, s"nothing written: ${work.toFile.list().toSeq}")
+  }
+
+  test("failing tile chains: the first names its stage, the others ride along, the rest finish") {
+    val work = Files.createTempDirectory("graft_pipeline_fail")
+    // a regular file where a projection's tile dirs go: that chain's first
+    // write (its deepest zoom) fails
+    Files.createDirectories(work.resolve("tiles"))
+    Files.createFile(work.resolve("tiles/EPSG_4326"))
+    Files.createFile(work.resolve("tiles/EPSG_3031"))
+    val cfg = MapPipeline.Config(workDir = work.toString, maxZoom = 1, threshold = 500,
+      projections = Seq("EPSG:3857", "EPSG:4326", "EPSG:3031"))
+    val e = intercept[RuntimeException] {
+      MapPipeline.run(spark, occurrences(), OA.mapKeysArray, cfg)
+    }
+    assert(e.getMessage == "map pipeline stage tiles/EPSG_4326/z1 failed")
+    assert(e.getSuppressed.map(_.getMessage).toSeq ==
+      Seq("map pipeline stage tiles/EPSG_3031/z1 failed"))
+    for (d <- "points" +: tileStages(Seq("EPSG:3857"), 1))
+      assert(Files.exists(work.resolve(s"$d/_SUCCESS")), s"$d written")
+    assert(pipelineThreads.isEmpty, s"pipeline threads alive after run: $pipelineThreads")
+  }
+
+  test("concurrent branches: caller's job group on every job, onStage in pipeline order, same sinks") {
+    val work = Files.createTempDirectory("graft_pipeline_group").toString
+    val epsgs = Seq("EPSG:3857", "EPSG:4326", "EPSG:3031")
+    val stages = mutable.ArrayBuffer.empty[(String, Thread)]
+    val cfg = MapPipeline.Config(workDir = work, maxZoom = 1, threshold = 500,
+      projections = epsgs, onStage = (n, _) => stages += (n -> Thread.currentThread))
+    val groups = new ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse("<none>"))
+    }
+    val sc = spark.sparkContext
+    PlanCapture.flushListenerBus(spark)
+    sc.addSparkListener(listener)
+    sc.setJobGroup("pipeline-spec", "concurrent map pipeline")
+    val res = try MapPipeline.run(spark, occurrences(), OA.mapKeysArray, cfg)
+    finally {
+      sc.clearJobGroup()
+      PlanCapture.flushListenerBus(spark)
+      sc.removeSparkListener(listener)
+    }
+
+    val jobGroups = groups.asScala.toSeq
+    assert(jobGroups.nonEmpty && jobGroups.forall(_ == "pipeline-spec"), jobGroups)
+    val order = Seq("prepare_barrier", "tile_input_barrier", "points_sink", "south_barrier") ++
+      tileStages(epsgs, 1)
+    assert(stages.map(_._1) == order)
+    assert(stages.forall(_._2 eq Thread.currentThread), "onStage runs on the caller thread")
+    assert(res.tileDirs == tileStages(epsgs, 1).map(t => s"$work/$t"))
+
+    // every tile sink equals its stage built directly from the tile-input barrier
+    def digest(df: DataFrame): (Long, java.math.BigDecimal) = {
+      val r = df.selectExpr("count(*)", "sum(cast(xxhash64(*) as decimal(38, 0)))").head()
+      (r.getLong(0), r.getDecimal(1))
+    }
+    implicit val s: org.apache.spark.sql.SparkSession = spark
+    for (epsg <- epsgs; z <- 1 to 0 by -1) {
+      val input =
+        if (epsg == "EPSG:3031") spark.read.parquet(s"$work/tile_input_south") else res.tileInput
+      val direct = Sinks.encodeTilesWithMvt(
+        Pyramid.build(input, Projections.fromEpsg(epsg), z, cfg.tileSize, cfg.bufferSize,
+          cfg.saltModulo), cfg.tileSize, cfg.borCodes).toDF("key", "value", "mvt")
+      val dir = s"$work/tiles/${epsg.replace(':', '_')}/z$z"
+      val (n, h) = digest(spark.read.parquet(dir))
+      assert(n > 0 && (n, h) == digest(direct), s"$dir equals the direct build")
+    }
   }
 }
