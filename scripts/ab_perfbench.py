@@ -12,21 +12,28 @@ a host that drifts over the session does not favour one side.
 
 Standard output carries one JSON record per run as it finishes (seed,
 side, position in the pair, exit code, the run's result line and its pass
-records with their spans, kept whole), then one summary record per
-end-to-end metric of BENCHMARK.json:
+records with their spans, kept whole). A run that fails or reports
+`correct: false` also gets a `failed_run` line and leaves its pair out of
+the metric summaries.
+
+Then comes one `failures` record per side: its runs, the failed runs
+(non-zero exit, no result line, or `correct: false`), the `failed` and
+`attempted` operations summed over the runs that printed a result, and
+the failed share (failed / attempted operations).
+
+Last comes one summary record per end-to-end metric of BENCHMARK.json:
 each side's median and quartiles, the pairs the change won (ties count for
 neither side) and a verdict:
 
-  gain        the change won at least 9/10 of the pairs and its median is
-              better by more than the parent's own interquartile range
+  gain        the change won at least 9/10 of the pairs, its median is
+              better by more than the parent's own interquartile range,
+              and it failed no larger share of operations and no more runs
+              than the parent
   regression  the change's median is worse than the parent's by more than
               the metric's bound
   unresolved  the parent's interquartile range exceeds the bound, and not
               every change run beats every parent run
   unchanged   otherwise
-
-A run that fails or reports `correct: false` is reported on its own line
-and left out of the metric summaries.
 """
 import json
 import os
@@ -60,7 +67,26 @@ def quartiles(values):
     return q1, q2, q3
 
 
-def summarize(metric, pairs):
+def failures(side, runs):
+    """`runs` holds (rc, result) for every run of one side."""
+    failed_runs = sum(1 for rc, res in runs
+                      if rc != 0 or not res or not res.get("correct"))
+    failed_ops = sum(res["failed"] for _, res in runs if res)
+    attempted_ops = sum(res["attempted"] for _, res in runs if res)
+    return {"side": side, "runs": len(runs), "failed_runs": failed_runs,
+            "failed_ops": failed_ops, "attempted_ops": attempted_ops,
+            "failed_share": failed_ops / attempted_ops if attempted_ops else None}
+
+
+def more_failures(par, chg):
+    """True when the change failed more runs or a larger share of
+    operations than the parent."""
+    p, c = par["failed_share"], chg["failed_share"]
+    return (chg["failed_runs"] > par["failed_runs"]
+            or (p is not None and c is not None and c > p))
+
+
+def summarize(metric, pairs, worse_failures):
     name, better, bound = metric["name"], metric["better"], metric["bound"]
     sign = 1.0 if better == "lower" else -1.0  # sign * (a - b) > 0: b is better
     ok = [(p[name], c[name]) for p, c in pairs if name in p and name in c]
@@ -74,7 +100,7 @@ def summarize(metric, pairs):
     losses = sum(1 for p, c in ok if sign * (c - p) > 0)
     iqr = pq3 - pq1
     gain = sign * (pmed - cmed)
-    if wins >= 0.9 * len(ok) and gain > iqr:
+    if wins >= 0.9 * len(ok) and gain > iqr and not worse_failures:
         verdict = "gain"
     elif -gain > bound * pmed:
         verdict = "regression"
@@ -100,6 +126,7 @@ def main(argv):
     seconds = bench["run_seconds"]
     sides = {"parent": parent, "change": change}
     pairs = []
+    runs = {"parent": [], "change": []}
     for i, seed in enumerate(seeds):
         order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
         got = {}
@@ -108,6 +135,7 @@ def main(argv):
             print(json.dumps({"record": "run", "workload": workload, "seed": seed,
                               "side": side, "position": pos, "rc": rc,
                               "result": result, "passes": passes}), flush=True)
+            runs[side].append((rc, result))
             if rc == 0 and result and result.get("correct"):
                 got[side] = {k: v["value"] for k, v in result["metrics"].items()}
             else:
@@ -115,9 +143,14 @@ def main(argv):
                       flush=True)
         if len(got) == 2:
             pairs.append((got["parent"], got["change"]))
+    fails = {side: failures(side, runs[side]) for side in sides}
+    for side in sides:
+        print(json.dumps(dict({"record": "failures", "workload": workload},
+                              **fails[side])), flush=True)
+    worse = more_failures(fails["parent"], fails["change"])
     for metric in bench["end_to_end"]:
         print(json.dumps(dict({"record": "summary", "workload": workload},
-                              **summarize(metric, pairs))), flush=True)
+                              **summarize(metric, pairs, worse))), flush=True)
 
 
 if __name__ == "__main__":

@@ -33,10 +33,7 @@ object BenchPipeline {
     val outFile = if (args.length > 4) args(4) else "BENCH_pipeline.json"
     val spark = GraftSession.local(GraftSession.cpus)
 
-    val occ = Tables.events(spark, sfDir).filter(OA.qualityFilter)
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        OA.lat.as("lat"), OA.lng.as("lng"),
-        col("event_type").as("basisOfRecord"), OA.yearCol.as("year"))
+    val occ = OA.occurrences(Tables.events(spark, sfDir))
 
     val stages = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val cfg = MapPipeline.Config(

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.analog.{OccurrenceAnalog => OA}
 
 /** CLI entry for the full map-build pipeline (the engine's `MapBuilder.main`
@@ -17,10 +16,7 @@ object RunPipeline {
     val configYml = if (args.length > 3) Some(args(3)) else None
     val spark = GraftSession.local(GraftSession.cpus)
 
-    val occ = Tables.events(spark, sfDir).filter(OA.qualityFilter)
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        OA.lat.as("lat"), OA.lng.as("lng"),
-        col("event_type").as("basisOfRecord"), OA.yearCol.as("year"))
+    val occ = OA.occurrences(Tables.events(spark, sfDir))
 
     val cfg = configYml match {
       case Some(path) =>

@@ -73,22 +73,18 @@ object OccurrenceAnalog {
       (0 until 8).map(rankKey),
       datasetKey, publisherKey, countryCode, pubCountry, networkKeys)
 
-  /** events → the projected+filtered occurrence-analog frame
+  /** events → the filtered occurrence-analog frame the pipeline consumes
     * (the reference's `readAvroSource` shape, `MapBuilder.java:134-174`).
+    * The raw id columns stay so [[mapKeysArray]] can derive the views.
     */
   def occurrences(events: DataFrame): DataFrame =
     events
       .filter(qualityFilter)
       .select(
-        col("event_id"), col("user_id"),
+        col("event_id"), col("user_id"), col("event_type"),
         lat.as("lat"), lng.as("lng"),
         col("event_type").as("basisOfRecord"),
-        yearCol.as("year"),
-        datasetKey.as("datasetKey"),
-        publisherKey.as("publishingOrgKey"),
-        countryCode.as("countryCode"),
-        pubCountry.as("publishingCountry"),
-        networkKeys.as("networkKey"))
+        yearCol.as("year"))
 
   // ---- DuckDB oracle fragments (must mirror the Columns above exactly) ----
 

@@ -8,8 +8,8 @@ import scala.collection.mutable
 /** Hand-rolled Mapbox Vector Tile writer (MVT spec 2.1 — a public, simple
   * protobuf format: varints + length-delimited messages; no library needed).
   *
-  * This is the wire-format twin of the deterministic custom codec in
-  * [[Sinks.encodeTiles]]: the reference emits true MVT bytes through
+  * This is the wire-format twin of the deterministic custom codec that
+  * [[Sinks.encodeTilesWithMvt]] writes beside it: the reference emits true MVT bytes through
   * `no.ecc.vectortile.VectorTileEncoder` (`VectorTiles.java:39-85`), so a
   * consumer pointing a map renderer at our tiles needs this framing, while
   * the custom codec stays the oracle-checkable twin.

@@ -5,8 +5,9 @@ import java.io.ByteArrayOutputStream
 import scala.collection.mutable
 
 /** Hand-rolled protobuf writer for point-map blobs — the wire-format twin of
-  * the deterministic custom layout in [[Sinks.encodePoints]], exactly as
-  * [[Mvt]] is the wire twin of [[Sinks.encodeTiles]].
+  * the deterministic custom layout [[Sinks.encodePointsWithPb]] writes
+  * beside it, exactly as [[Mvt]] is the wire twin of the custom tile codec
+  * in [[Sinks.encodeTilesWithMvt]].
   *
   * The reference encodes its point blobs through generated protobuf classes
   * (`ProtobufTiles.java:31-51`, building `PointFeatures.Feature` messages

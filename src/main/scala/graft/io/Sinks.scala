@@ -17,11 +17,11 @@ import org.apache.spark.sql.functions._
   * (or any range-partitioned store) can consume partitions as sorted runs.
   *
   * Blob encoding: two codecs over the same tile rows. The deterministic
-  * length-prefixed big-endian layout ([[encodeTiles]]) is the
-  * oracle-checkable twin; [[encodeTilesMvt]] emits real Mapbox Vector Tile
-  * bytes through the hand-rolled [[Mvt]] writer (the wire format the
-  * reference produces via `no.ecc.vectortile`, `VectorTiles.java:39-85`).
-  * The pipeline writes both side by side.
+  * length-prefixed big-endian layout is the oracle-checkable twin; the
+  * hand-rolled [[Mvt]] writer emits real Mapbox Vector Tile bytes (the
+  * wire format the reference produces via `no.ecc.vectortile`,
+  * `VectorTiles.java:39-85`). [[encodeTilesWithMvt]] writes both side by
+  * side in one pass; [[encodePointsWithPb]] does the same for points.
   */
 object Sinks {
 
@@ -78,22 +78,6 @@ object Sinks {
     * `[nPixels:int][x:int y:int nFeat:int [borYear:int count:long]*]*`.
     * Input rows must carry sorted arrays (Pyramid.tiles guarantees it), so
     * the bytes are reproducible across runs and cluster sizes.
-    *
-    * PRODUCTION SEAM: to emit real Mapbox vector tiles, replace ONLY this
-    * map body with an MVT encoder (e.g. no.ecc.vectortile.VectorTileEncoder,
-    * the lib the reference uses) — the (key, pixels with feature arrays) →
-    * (key, bytes) contract, the upstream sorted-array guarantee, and
-    * [[writeSorted]]'s salt partitioning all stay as-is.
-    */
-  def encodeTiles(tiles: DataFrame)(implicit spark: SparkSession): Dataset[(String, Array[Byte])] = {
-    import spark.implicits._
-    tiles.select(col("key"), col("tile")).map { r =>
-      (r.getString(0), encodeTileValue(r.getSeq[Row](1)))
-    }
-  }
-
-  /** The custom-codec body shared by [[encodeTiles]] and
-    * [[encodeTilesWithMvt]] — one implementation, no drift.
     */
   private def encodeTileValue(pixels: Seq[Row]): Array[Byte] = {
     val nBytes = 4 + pixels.map(p => 12 + p.getSeq[Row](2).length * 12).sum
@@ -139,23 +123,11 @@ object Sinks {
     layers.iterator.map { case (n, fs) => (n, fs.toSeq) }.toSeq
   }
 
-  /** Real MVT wire-format tile blobs over the same (key, tile) contract as
-    * [[encodeTiles]]. `extent` is the tile size (the reference passes its
-    * tileSize as the encoder extent, `VectorTiles.java:40`).
-    */
-  def encodeTilesMvt(tiles: DataFrame, extent: Int,
-                     codes: Seq[(String, Int)] = graft.expr.BorYear.EventTypeCodes)
-      (implicit spark: SparkSession): Dataset[(String, Array[Byte])] = {
-    import spark.implicits._
-    val codeMap = codes.map(_.swap).toMap
-    tiles.select(col("key"), col("tile")).map { r =>
-      (r.getString(0), Mvt.encode(mvtLayers(r.getSeq[Row](1), codeMap), extent))
-    }
-  }
-
   /** One pass, both codecs: (key, custom value, mvt bytes) — what the
     * pipeline writes, so wire-format consumers and the oracle-checkable
-    * codec share a single encode scan.
+    * codec share a single encode scan. `extent` is the MVT tile size (the
+    * reference passes its tileSize as the encoder extent,
+    * `VectorTiles.java:40`).
     */
   def encodeTilesWithMvt(tiles: DataFrame, extent: Int,
                          codes: Seq[(String, Int)] = graft.expr.BorYear.EventTypeCodes)
@@ -169,7 +141,9 @@ object Sinks {
     }
   }
 
-  /** Inverse of [[encodeTiles]] (for tests / consumers). */
+  /** Inverse of [[encodeTilesWithMvt]]'s custom value codec (for tests /
+    * consumers).
+    */
   def decodeTile(bytes: Array[Byte]): Seq[(Int, Int, Seq[(Int, Long)])] = {
     val bb = ByteBuffer.wrap(bytes)
     Seq.fill(bb.getInt()) {
@@ -179,7 +153,7 @@ object Sinks {
     }
   }
 
-  /** Inverse of [[encodePoints]]. */
+  /** Inverse of [[encodePointsWithPb]]'s custom value codec. */
   def decodePoints(bytes: Array[Byte]): Seq[(Double, Double, Int, Long)] = {
     val bb = ByteBuffer.wrap(bytes)
     Seq.fill(bb.getInt())((bb.getDouble(), bb.getDouble(), bb.getInt(), bb.getLong()))
@@ -187,16 +161,6 @@ object Sinks {
 
   /** Deterministic point-blob encoding (`ProtobufTiles.java:31-51` analog):
     * `[nFeat:int [lat:double lng:double borYear:int count:long]*]`.
-    */
-  def encodePoints(points: DataFrame)(implicit spark: SparkSession): Dataset[(String, Array[Byte])] = {
-    import spark.implicits._
-    points.select(col("key"), col("features")).map { r =>
-      (r.getString(0), encodePointValue(r.getSeq[Row](1)))
-    }
-  }
-
-  /** The custom-codec body shared by [[encodePoints]] and
-    * [[encodePointsWithPb]] — one implementation, no drift.
     */
   private def encodePointValue(feats: Seq[Row]): Array[Byte] = {
     val bb = ByteBuffer.allocate(4 + feats.length * 28)

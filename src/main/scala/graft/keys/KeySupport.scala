@@ -19,14 +19,7 @@ private[graft] object KeySupport {
   def orders(s: SparkSession, d: String) = Tables.orders(s, d)
 
   /** Occurrence-analog frame (keeps raw id cols for mapKeys derivation). */
-  def occ(s: SparkSession, d: String): DataFrame =
-    events(s, d)
-      .filter(OA.qualityFilter)
-      .select(
-        col("event_id"), col("user_id"), col("event_type"),
-        OA.lat.as("lat"), OA.lng.as("lng"),
-        col("event_type").as("basisOfRecord"),
-        OA.yearCol.as("year"))
+  def occ(s: SparkSession, d: String): DataFrame = OA.occurrences(events(s, d))
 
   /** event_id × exploded map view key (G1). */
   def exploded(s: SparkSession, d: String): DataFrame =

@@ -230,9 +230,8 @@ object Dedup {
     * footgun that fired in rounds 2 and 3). Staging in the helper makes the
     * single-use-consumer case safe by construction; PlanGuardSpec pins it.
     */
-  def shingleSets(docs: DataFrame, shingleSize: Int,
-      cp: graft.ops.Checkpointer = graft.ops.Checkpointer.Local): DataFrame =
-    cp.cut(tokenHashFrame(docs))
+  def shingleSets(docs: DataFrame, shingleSize: Int): DataFrame =
+    tokenHashFrame(docs).localCheckpoint()
       .select(col("doc_id"),
         array_distinct(hashedShingles(col("th"), shingleSize)).as("sh"))
 
@@ -241,11 +240,10 @@ object Dedup {
     * joins, clustering, decisions). Without this each consumer re-derives
     * the tokenize→md5→shingle subtree — the round-2 plan audit showed
     * `verifiedJaccard` computing it 4× per query (both self-join sides plus
-    * both verification joins). The index builder's `cp` seam materializes
-    * eagerly and cuts lineage, so every downstream reference reads the
-    * stored blocks; inject [[graft.ops.Checkpointer.Reliable]] for an
-    * HDFS-backed cut that survives executor loss — the same trade
-    * [[clusters]] makes for its iterative lineage.
+    * both verification joins). The index builder's `localCheckpoint`
+    * materializes eagerly and cuts lineage, so every downstream reference
+    * reads the stored blocks — the same cut [[clusters]] makes for its
+    * iterative lineage.
     */
   final case class SignatureIndex(banded: DataFrame, sets: DataFrame)
 
@@ -259,11 +257,10 @@ object Dedup {
     * twice per index build.
     */
   def signatureIndex(
-      docs: DataFrame, shingleSize: Int, numPerms: Int, numBands: Int,
-      cp: graft.ops.Checkpointer = graft.ops.Checkpointer.Local): SignatureIndex = {
-    val th = cp.cut(tokenHashFrame(docs))
+      docs: DataFrame, shingleSize: Int, numPerms: Int, numBands: Int): SignatureIndex = {
+    val th = tokenHashFrame(docs).localCheckpoint()
     SignatureIndex(
-      cp.cut(bandedFromTokenHashes(th, shingleSize, numPerms, numBands)),
+      bandedFromTokenHashes(th, shingleSize, numPerms, numBands).localCheckpoint(),
       th.select(col("doc_id"),
         array_distinct(hashedShingles(col("th"), shingleSize)).as("sh")))
   }
@@ -433,13 +430,10 @@ object Dedup {
     * (round 1 broadcast the edges each label-propagation round). Converges
     * in O(log n) rounds to one star per component rooted at the component
     * minimum. Only a (count, checksum) SCALAR pair crosses to the driver per
-    * round — loop control, never data. `cp` cuts the iterative lineage each
-    * round (default executor-local blocks; inject
-    * [[graft.ops.Checkpointer.Reliable]] on clusters that must survive
-    * executor loss).
+    * round — loop control, never data. A `localCheckpoint` cuts the
+    * iterative lineage each round.
     */
-  def clusters(pairs: DataFrame,
-               cp: graft.ops.Checkpointer = graft.ops.Checkpointer.Local): DataFrame = {
+  def clusters(pairs: DataFrame): DataFrame = {
     def signature(e: DataFrame): (Long, Long) = {
       // per-edge hash bounded < 2^31 so the ANSI-mode sum can't overflow
       // before ~2^32 edges × 2^31 ≈ 2^63
@@ -474,13 +468,13 @@ object Dedup {
         .union(m.select(col("u").as("a"), col("m").as("b")))
         .distinct()
     }
-    var e = cp.cut(pairs.select(col("a"), col("b"))
-      .filter(col("a") =!= col("b")).distinct())
+    var e = pairs.select(col("a"), col("b"))
+      .filter(col("a") =!= col("b")).distinct().localCheckpoint()
     var prevSig = (-1L, -1L)
     var sig = signature(e)
     var rounds = 0
     while (sig != prevSig && rounds < 50) {
-      e = cp.cut(smallStar(largeStar(e)))
+      e = smallStar(largeStar(e)).localCheckpoint()
       prevSig = sig
       sig = signature(e)
       rounds += 1

@@ -218,8 +218,7 @@ object Scrub {
     * broadcast set; every non-benchmark document is scored by the fraction
     * of its shingle occurrences that collide.
     */
-  def contamination(docs: DataFrame, isBench: Column, shingleSize: Int,
-      cp: graft.ops.Checkpointer = graft.ops.Checkpointer.Local): DataFrame = {
+  def contamination(docs: DataFrame, isBench: Column, shingleSize: Int): DataFrame = {
     // Project the token hashes into their own column BEFORE shingling:
     // hashedShingles references its input n times per element, and an
     // inlined tokenHashes tree would re-run the md5 pass per reference
@@ -237,7 +236,7 @@ object Scrub {
     // definition, so the cut is cheap; the TRAIN side stays a one-pass
     // projection (explode_outer plants no filter) — no corpus-sized
     // materialization.
-    val bench = cp.cut(sh.filter(col("is_bench")))
+    val bench = sh.filter(col("is_bench")).localCheckpoint()
       .select(explode(col("sh")).as("bh")).distinct()
     val train = sh.filter(!col("is_bench"))
       .select(col("doc_id"), explode_outer(col("sh")).as("h"))

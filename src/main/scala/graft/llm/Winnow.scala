@@ -62,11 +62,10 @@ object Winnow {
     * the degenerate `n < w` doc, whose single clipped window at pos 0 IS
     * the spec's "one window over everything" case.
     */
-  def fingerprints(docs: DataFrame, k: Int = K, w: Int = W,
-                   cp: graft.ops.Checkpointer = graft.ops.Checkpointer.Local): DataFrame =
+  def fingerprints(docs: DataFrame, k: Int = K, w: Int = W): DataFrame =
     fingerprintsFromToks(
       docs.select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks")),
-      k, w, cp)
+      k, w)
 
   /** [[fingerprints]] from a pre-built (doc_id, toks) frame — callers
     * composing several token-granularity views (`dedup_spectrum`) share
@@ -74,8 +73,7 @@ object Winnow {
     * checkpoint below still applies (it cuts the PER-SHINGLE re-evaluation
     * trap, which a stored toks column alone does not prevent).
     */
-  def fingerprintsFromToks(toksFrame: DataFrame, k: Int = K, w: Int = W,
-                   cp: graft.ops.Checkpointer = graft.ops.Checkpointer.Local): DataFrame = {
+  def fingerprintsFromToks(toksFrame: DataFrame, k: Int = K, w: Int = W): DataFrame = {
     // The (doc_id, sh) shingle frame is CHECKPOINTED before the explode —
     // the signatureIndex discipline, and here it is load-bearing twice
     // over: InferFiltersFromGenerate plants a `size(sh) > 0` predicate
@@ -85,10 +83,11 @@ object Winnow {
     // re-evaluate the whole token-hash transform PER SHINGLE (measured
     // 142-270 s at sf0.1 vs ~4 s with the cut). Past the cut, `sh` is a
     // stored attribute and the inferred filter is a cheap size() probe.
-    val sh = cp.cut(toksFrame
+    val sh = toksFrame
       .select(col("doc_id"), Dedup.tokenHashes(col("toks")).as("th"))
       .select(col("doc_id"), Dedup.hashedShingles(col("th"), k).as("sh"))
-      .select(col("doc_id"), col("sh"), size(col("sh")).cast("long").as("n_kgrams")))
+      .select(col("doc_id"), col("sh"), size(col("sh")).cast("long").as("n_kgrams"))
+      .localCheckpoint()
     val win = Window.partitionBy("doc_id").orderBy("pos")
       .rowsBetween(Window.currentRow, w - 1)
     sh.select(col("doc_id"), col("n_kgrams"), posexplode(col("sh")).as(Seq("pos", "h")))

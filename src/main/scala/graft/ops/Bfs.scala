@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * frontier to the adjacency, anti-joins everything already labeled, and
   * labels survivors dist+1 — per-round cost is frontier-adjacent edges,
   * total cost edge-proportional, state is the labeled set (node-
-  * proportional). A [[Checkpointer]] cut per round keeps lineage linear
+  * proportional). A `localCheckpoint` cut per round keeps lineage linear
   * (the PageRank iterative contract); `maxHops` is part of the key's
   * contract (the oracle replays the same bounded recursion), and the
   * emitted `converged` flag says whether the frontier actually emptied
@@ -25,26 +25,25 @@ object Bfs {
     * source set. `canon`: canonical undirected edges (a < b, distinct),
     * ideally checkpointed by the caller. `sources`: one `node` column.
     */
-  def layers(canon: DataFrame, sources: DataFrame, maxHops: Int,
-             cp: Checkpointer = Checkpointer.Local): DataFrame = {
+  def layers(canon: DataFrame, sources: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 1, s"need maxHops >= 1; got $maxHops")
     val und = canon.select(col("a").as("u"), col("b").as("w"))
       .unionAll(canon.select(col("b").as("u"), col("a").as("w")))
-    var labeled = cp.cut(
-      sources.select(col("node"), lit(0L).as("dist")).distinct())
+    var labeled = sources.select(col("node"), lit(0L).as("dist")).distinct()
+      .localCheckpoint()
     var frontier = labeled
     var emptied = false
-    def expand(f: DataFrame, hop: Long): DataFrame = cp.cut(f
+    def expand(f: DataFrame, hop: Long): DataFrame = f
       .join(und, f("node") === und("u"))
       .select(col("w").as("node")).distinct()
       .join(labeled.select("node"), Seq("node"), "left_anti")
-      .select(col("node"), lit(hop).as("dist")))
+      .select(col("node"), lit(hop).as("dist")).localCheckpoint()
     for (hop <- 1 to maxHops if !emptied) {
       val next = expand(frontier, hop.toLong)
       // bounded driver crossing: one count per round — loop control only
       emptied = next.isEmpty
       if (!emptied) {
-        labeled = cp.cut(labeled.unionAll(next))
+        labeled = labeled.unionAll(next).localCheckpoint()
         frontier = next
       }
     }
@@ -58,9 +57,8 @@ object Bfs {
   /** Histogram form: (dist, n_nodes, converged), the artifact a recall /
     * blast-radius report actually ships.
     */
-  def layerHistogram(canon: DataFrame, sources: DataFrame, maxHops: Int,
-                     cp: Checkpointer = Checkpointer.Local): DataFrame =
-    layers(canon, sources, maxHops, cp)
+  def layerHistogram(canon: DataFrame, sources: DataFrame, maxHops: Int): DataFrame =
+    layers(canon, sources, maxHops)
       .groupBy("dist", "converged").agg(count(lit(1)).as("n_nodes"))
       .select(col("dist"), col("n_nodes"), col("converged"))
       .orderBy("dist")
@@ -72,25 +70,25 @@ object Bfs {
     * BFS runs. Cost is k × edge-proportional per round; callers bound k
     * (the closeness contract below caps its seed set).
     */
-  def layersPerSource(canon: DataFrame, sources: DataFrame, maxHops: Int,
-                      cp: Checkpointer = Checkpointer.Local): DataFrame = {
+  def layersPerSource(canon: DataFrame, sources: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 1, s"need maxHops >= 1; got $maxHops")
     val und = canon.select(col("a").as("u"), col("b").as("w"))
       .unionAll(canon.select(col("b").as("u"), col("a").as("w")))
-    var labeled = cp.cut(sources.select(col("node")).distinct()
-      .select(col("node").as("src"), col("node"), lit(0L).as("dist")))
+    var labeled = sources.select(col("node")).distinct()
+      .select(col("node").as("src"), col("node"), lit(0L).as("dist"))
+      .localCheckpoint()
     var frontier = labeled
     var emptied = false
-    def expand(f: DataFrame, hop: Long): DataFrame = cp.cut(f
+    def expand(f: DataFrame, hop: Long): DataFrame = f
       .join(und, f("node") === und("u"))
       .select(col("src"), col("w").as("node")).distinct()
       .join(labeled.select("src", "node"), Seq("src", "node"), "left_anti")
-      .select(col("src"), col("node"), lit(hop).as("dist")))
+      .select(col("src"), col("node"), lit(hop).as("dist")).localCheckpoint()
     for (hop <- 1 to maxHops if !emptied) {
       val next = expand(frontier, hop.toLong)
       emptied = next.isEmpty // bounded driver crossing: loop control only
       if (!emptied) {
-        labeled = cp.cut(labeled.unionAll(next))
+        labeled = labeled.unionAll(next).localCheckpoint()
         frontier = next
       }
     }
@@ -106,9 +104,8 @@ object Bfs {
     * identical bounded recursion. Seeds with no neighbors emit 0 rows via
     * the left join back to the seed set.
     */
-  def harmonic(canon: DataFrame, sources: DataFrame, maxHops: Int,
-               cp: Checkpointer = Checkpointer.Local): DataFrame = {
-    val h = layersPerSource(canon, sources, maxHops, cp)
+  def harmonic(canon: DataFrame, sources: DataFrame, maxHops: Int): DataFrame = {
+    val h = layersPerSource(canon, sources, maxHops)
       .filter(col("dist") >= 1)
       .groupBy("src")
       .agg(count(lit(1)).as("n_reached"),

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   *
   * Peeling is run for a FIXED number of rounds (caller-supplied), not to
   * an open-ended fixpoint: each round is degree-agg → broadcast-or-
-  * shuffle semi-join filter, with a [[Checkpointer]] cut per round so
+  * shuffle semi-join filter, with a `localCheckpoint` cut per round so
   * lineage stays linear (the PageRank iterative contract). A round that
   * removes nothing is the fixpoint; the emitted `converged` flag reports
   * whether the rounds sufficed, so a caller (and the spec) can verify
@@ -30,8 +30,7 @@ object KCore {
     * ideally checkpointed by the caller; each round's survivor frame is
     * cut here.
     */
-  def core(canon: DataFrame, k: Int, rounds: Int,
-           cp: Checkpointer = Checkpointer.Local): DataFrame = {
+  def core(canon: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1, s"need k >= 1, rounds >= 1; got $k, $rounds")
     def degrees(edges: DataFrame): DataFrame =
       edges.select(col("a").as("node"))
@@ -47,10 +46,10 @@ object KCore {
       if (edgeCount < 0) edgeCount = edges.count()
       val keep = degrees(edges).filter(col("deg") >= k)
         .select(col("node")).localCheckpoint()
-      val next = cp.cut(edges
+      val next = edges
         .join(keep.withColumnRenamed("node", "a"), Seq("a"), "left_semi")
         .join(keep.withColumnRenamed("node", "b"), Seq("b"), "left_semi")
-        .select("a", "b"))
+        .select("a", "b").localCheckpoint()
       // bounded driver crossing: one count per round — loop control, the
       // same class as PageRank's delta checks
       val nextCount = next.count()

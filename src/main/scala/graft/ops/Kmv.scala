@@ -75,9 +75,9 @@ object Kmv {
     */
   private final case class PairStream(pairs: DataFrame, ranked: DataFrame)
 
-  private def pairStream(sketch: DataFrame, groupCol: String, idCol: String,
-                         cp: Checkpointer): PairStream = {
-    val s = cp.cut(sketch) // three consumers below
+  private def pairStream(sketch: DataFrame, groupCol: String,
+                         idCol: String): PairStream = {
+    val s = sketch.localCheckpoint() // three consumers below
     // Every frame from here on is bounded by the SKETCH geometry, not the
     // input cardinality — but bounded-independent-of-input is NOT the same
     // as broadcast-small: gstats is O(G) rows (hint it), while pairs is
@@ -124,8 +124,8 @@ object Kmv {
   }
 
   def overlapEstimates(sketch: DataFrame, groupCol: String, idCol: String,
-                       k: Int, cp: Checkpointer = Checkpointer.Local): DataFrame = {
-    val PairStream(pairs, ranked) = pairStream(sketch, groupCol, idCol, cp)
+                       k: Int): DataFrame = {
+    val PairStream(pairs, ranked) = pairStream(sketch, groupCol, idCol)
     val rho = ranked.filter(col("urnk") <= col("k_eff"))
       .groupBy("group_a", "group_b", "k_eff")
       .agg(sum(col("in_a") * col("in_b")).as("rho"))
@@ -150,8 +150,8 @@ object Kmv {
     * same graceful degradation as [[overlapEstimates]].
     */
   def unionEstimates(sketch: DataFrame, groupCol: String, idCol: String,
-                     k: Int, cp: Checkpointer = Checkpointer.Local): DataFrame = {
-    val PairStream(pairs, ranked) = pairStream(sketch, groupCol, idCol, cp)
+                     k: Int): DataFrame = {
+    val PairStream(pairs, ranked) = pairStream(sketch, groupCol, idCol)
     val m = ranked.groupBy("group_a", "group_b")
       .agg(count(lit(1)).as("m_all"),
         max(when(col("urnk") <= col("k_eff"), col("urnk"))).as("k_u"),

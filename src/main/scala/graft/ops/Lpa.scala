@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * replay in the DuckDB oracle ([[sqlRun]]).
   *
   * Design for 100 TB (same per-superstep bill as [[PageRank.run]]):
-  *   - the symmetric edge list is cut ONCE through [[Checkpointer]] and
+  *   - the symmetric edge list is cut ONCE (`localCheckpoint`) and
   *     re-joined each round; labels are node-sized (≪ edges);
   *   - one superstep = one equi-join (edges × labels on `src`, Catalyst
   *     picks broadcast vs shuffle as the label side allows) + two hash
@@ -39,23 +39,22 @@ object Lpa {
     * `(node, label)` — nodes sharing a label after the fixed rounds are
     * one community; labels are community-minimum-biased node ids.
     */
-  def run(pairs: DataFrame, iters: Int,
-          cp: Checkpointer = Checkpointer.Local): DataFrame = {
+  def run(pairs: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, "at least one iteration")
-    val sym = cp.cut(
-      pairs.select(col("a").as("src"), col("b").as("dst"))
-        .union(pairs.select(col("b").as("src"), col("a").as("dst"))))
+    val sym = pairs.select(col("a").as("src"), col("b").as("dst"))
+      .union(pairs.select(col("b").as("src"), col("a").as("dst")))
+      .localCheckpoint()
     var labels = sym.select(col("src").as("node")).distinct()
       .withColumn("label", col("node"))
     for (_ <- 1 to iters) {
       val votes = sym.join(labels, sym("src") === labels("node"))
         .select(col("dst").as("node"), col("label"))
         .union(labels.select(col("node"), col("label"))) // self-vote
-      labels = cp.cut(votes
+      labels = votes
         .groupBy("node", "label").agg(count(lit(1)).as("n"))
         .groupBy("node")
         .agg(max(struct(col("n"), (-col("label")).as("nl"))).as("m"))
-        .select(col("node"), (-col("m.nl")).as("label")))
+        .select(col("node"), (-col("m.nl")).as("label")).localCheckpoint()
     }
     labels
   }

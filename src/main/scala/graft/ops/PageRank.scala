@@ -15,8 +15,7 @@ import org.apache.spark.sql.types.{DecimalType, LongType}
   *
   * Design for 100 TB:
   *   - The edge list (with out-degree pre-attached) is materialized ONCE
-  *     through the [[Checkpointer]] seam and re-joined every iteration;
-  *     the per-
+  *     (`localCheckpoint`) and re-joined every iteration; the per-
   *     iteration cost is one join + one shuffle-on-`dst` aggregation —
   *     the same per-superstep cost Pregel/GraphX pays, with Catalyst
   *     picking broadcast vs shuffle join as the rank side allows.
@@ -54,16 +53,13 @@ object PageRank {
   val BaseRank: Long = BaseNum * Scale / 100L
 
   /** Iterate `iters` supersteps over a symmetric `(src, dst)` edge list.
-    * Returns `(node, rank)` with rank in picoranks. `cp` picks the
-    * lineage-cut durability (local blocks vs reliable checkpoint) — see
-    * [[Checkpointer]].
+    * Returns `(node, rank)` with rank in picoranks.
     */
-  def run(edges: DataFrame, iters: Int,
-          cp: Checkpointer = Checkpointer.Local): DataFrame = {
+  def run(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, "at least one iteration")
     val deg = edges.groupBy("src").agg(count(lit(1)).cast(LongType).as("deg"))
     // one materialization funds every iteration's probe side
-    val ed = cp.cut(edges.join(deg, "src"))
+    val ed = edges.join(deg, "src").localCheckpoint()
     var ranks = deg.select(col("src").as("node"), lit(Scale).as("rank"))
     for (_ <- 1 to iters) {
       val contribs = ed.join(ranks, ed("src") === ranks("node"))
@@ -73,12 +69,12 @@ object PageRank {
       // accumulates in LongType and would wrap (non-ANSI) on a hub whose
       // in-flow exceeds Long range — while the DuckDB twin sums in HUGEINT.
       // Summing DECIMAL(38,0) terms keeps both engines exact.
-      ranks = cp.cut(contribs.groupBy("dst").agg(
+      ranks = contribs.groupBy("dst").agg(
         (lit(BaseRank) +
           call_function("div",
             lit(DampNum) * sum(col("contrib").cast(DecimalType(38, 0))),
             lit(100L)).cast(LongType)).as("rank"))
-        .select(col("dst").as("node"), col("rank")))
+        .select(col("dst").as("node"), col("rank")).localCheckpoint()
     }
     ranks
   }

@@ -47,8 +47,7 @@ object Triangles {
     * per node belonging to ≥1 triangle. `canon` must be the [[canonical]]
     * form (a < b, distinct) — ideally checkpointed, it is consumed 4×.
     */
-  def perNode(canon: DataFrame,
-              cp: Checkpointer = Checkpointer.Local): DataFrame = {
+  def perNode(canon: DataFrame): DataFrame = {
     val deg = canon.select(col("a").as("node"))
       .unionAll(canon.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
@@ -59,14 +58,14 @@ object Triangles {
     def before(dl: Column, nl: Column, dr: Column, nr: Column): Column =
       dl < dr || (dl === dr && nl < nr)
 
-    val oriented = cp.cut(canon
+    val oriented = canon
       .join(deg.withColumnRenamed("node", "a").withColumnRenamed("deg", "da"), "a")
       .join(deg.withColumnRenamed("node", "b").withColumnRenamed("deg", "db"), "b")
       .select(
         when(before(col("da"), col("a"), col("db"), col("b")), col("a"))
           .otherwise(col("b")).as("u"),
         when(before(col("da"), col("a"), col("db"), col("b")), col("b"))
-          .otherwise(col("a")).as("v"))) // both wedge sides read the cut, not the degree join twice
+          .otherwise(col("a")).as("v")).localCheckpoint() // both wedge sides read the cut, not the degree join twice
 
     // Wedges around the oriented source u; (x, y) ordered by node id so the
     // closing edge probe matches the canonical (a < b) frame directly.

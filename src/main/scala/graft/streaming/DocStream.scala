@@ -107,7 +107,7 @@ object DocStream {
     * shape is what keeps the stream stateless.
     *
     * 100 TB posture: the static side is [[Dedup.signatureIndex]] —
-    * materialized ONCE through its checkpoint seam, so per-micro-batch
+    * materialized ONCE (`localCheckpoint`), so per-micro-batch
     * planning re-reads stored blocks, never re-tokenizes the corpus; the
     * stream side is linear in the batch. The in-stream-duplicate concern
     * stays with `EventStream.dedupedStream`, exactly as [[admit]] splits it.
@@ -141,20 +141,19 @@ object DocStream {
     * thresholding stays batch-side (foreachBatch over this frame), the
     * same split [[nearDupProbe]] and [[spanProbe]] make.
     *
-    * 100 TB posture: the static index is built once through the
-    * checkpoint seam and df-capped (boilerplate fingerprints dropped
+    * 100 TB posture: the static index is built once (`localCheckpoint`)
+    * and df-capped (boilerplate fingerprints dropped
     * before any join), so per-fp fan-out is bounded and per-micro-batch
     * planning re-reads stored blocks; the stream side is batch-linear.
     */
   def winnowProbe(newDocs: DataFrame, index: DataFrame,
                   k: Int = graft.llm.Winnow.K, w: Int = graft.llm.Winnow.W,
-                  maxDf: Int = graft.llm.Winnow.MaxDf,
-                  cp: graft.ops.Checkpointer = graft.ops.Checkpointer.Local): DataFrame = {
+                  maxDf: Int = graft.llm.Winnow.MaxDf): DataFrame = {
     import graft.llm.Winnow
     val fp = Winnow.fingerprints(index, k, w).select("doc_id", "fp")
     val dfq = fp.groupBy("fp").agg(count(lit(1)).as("df"))
-    val idx = cp.cut(fp.join(dfq.filter(col("df") <= maxDf), "fp")
-      .select(col("fp"), col("doc_id").as("near_id")))
+    val idx = fp.join(dfq.filter(col("df") <= maxDf), "fp")
+      .select(col("fp"), col("doc_id").as("near_id")).localCheckpoint()
     Winnow.fingerprintsRowwise(newDocs, k, w)
       .join(idx, Seq("fp"))
       .select(col("doc_id"), col("near_id"), col("fp"))
@@ -171,10 +170,9 @@ object DocStream {
     * scorers count DISTINCT ch per doc; per-doc scoring stays
     * batch-side (foreachBatch). Batch parity pinned in StreamingSpec.
     */
-  def cdcProbe(newDocs: DataFrame, index: DataFrame,
-               cp: graft.ops.Checkpointer = graft.ops.Checkpointer.Local): DataFrame = {
+  def cdcProbe(newDocs: DataFrame, index: DataFrame): DataFrame = {
     import graft.llm.Chunks
-    val oldSet = cp.cut(Chunks.chunkFrame(index).select("ch").distinct())
+    val oldSet = Chunks.chunkFrame(index).select("ch").distinct().localCheckpoint()
     newDocs
       .select(col("doc_id"),
         explode(Chunks.chunkHashesRowwise(col("text"))).as("ch"))
@@ -209,11 +207,10 @@ object DocStream {
     * split [[nearDupProbe]] makes for Jaccard verification.
     *
     * 100 TB posture: the static window set is Zipf-bounded and built once
-    * through the checkpoint seam; the stream side is linear in the batch.
+    * (`localCheckpoint`); the stream side is linear in the batch.
     */
-  def spanProbe(newDocs: DataFrame, index: DataFrame, w: Int,
-                cp: graft.ops.Checkpointer = graft.ops.Checkpointer.Local): DataFrame = {
-    val oldSet = cp.cut(Substring.windowFrame(index, w).select("wh").distinct())
+  def spanProbe(newDocs: DataFrame, index: DataFrame, w: Int): DataFrame = {
+    val oldSet = Substring.windowFrame(index, w).select("wh").distinct().localCheckpoint()
     Substring.windowFrame(newDocs, w)
       .join(oldSet, Seq("wh"))
       .select(col("doc_id"), col("pos"), col("wh"))
@@ -231,10 +228,9 @@ object DocStream {
     * split. Batch parity is pinned in StreamingSpec.
     */
   def lineProbe(newDocs: DataFrame, index: DataFrame,
-                w: Int = graft.llm.Lines.LineWidthTok,
-                cp: graft.ops.Checkpointer = graft.ops.Checkpointer.Local): DataFrame = {
+                w: Int = graft.llm.Lines.LineWidthTok): DataFrame = {
     import graft.llm.Lines
-    val oldSet = cp.cut(Lines.lineFrame(index, w).select("lh").distinct())
+    val oldSet = Lines.lineFrame(index, w).select("lh").distinct().localCheckpoint()
     Lines.lineFrame(newDocs, w)
       .join(oldSet, Seq("lh"))
       .select(col("doc_id"), col("line_no"), col("lh"))
@@ -264,10 +260,9 @@ object DocStream {
     */
   def intraBatchPairs(batch: DataFrame, shingleSize: Int = 3,
                       numPerms: Int = 16, numBands: Int = 4,
-                      threshold: Double = 0.5,
-                      cp: graft.ops.Checkpointer = graft.ops.Checkpointer.Local): DataFrame = {
-    val banded = cp.cut(
-      Dedup.bandedRowwise(batch, shingleSize, numPerms, numBands))
+                      threshold: Double = 0.5): DataFrame = {
+    val banded = Dedup.bandedRowwise(batch, shingleSize, numPerms, numBands)
+      .localCheckpoint()
     val capped = Dedup.cappedBuckets(banded, Dedup.MaxBandBucket)
     capped.as("l").join(capped.as("r"),
         col("l.band") === col("r.band") && col("l.bh") === col("r.bh") &&
@@ -386,9 +381,8 @@ object DocStream {
     */
   def admitBatch(batch: DataFrame, index: DataFrame,
                  shingleSize: Int = 3, numPerms: Int = 16, numBands: Int = 4,
-                 threshold: Double = 0.5,
-                 cp: graft.ops.Checkpointer = graft.ops.Checkpointer.Local): DataFrame = {
-    val fp = cp.cut(batch.withColumn("fp", Dedup.fingerprint(col("text"))))
+                 threshold: Double = 0.5): DataFrame = {
+    val fp = batch.withColumn("fp", Dedup.fingerprint(col("text"))).localCheckpoint()
     // (a) duplicates of the static index: exact fingerprint ∪ verified near
     val exactHit = fp.join(Dedup.indexFingerprints(index), Seq("fp"), "left")
       .filter(col("known").isNotNull).select("doc_id")
@@ -398,16 +392,17 @@ object DocStream {
     // (b) intra-batch duplicate pairs (near ∪ exact — exact covers docs
     // below the shingle width that LSH can't see), as (lo=near_id, hi)
     val nearPairs = intraBatchPairs(fp.select("doc_id", "text"),
-      shingleSize, numPerms, numBands, threshold, cp)
+      shingleSize, numPerms, numBands, threshold)
       .select(col("near_id").as("lo"), col("doc_id").as("hi"))
     val exactPairs = fp.select(col("fp"), col("doc_id").as("lo")).as("l")
       .join(fp.select(col("fp"), col("doc_id").as("hi")).as("r"), Seq("fp"))
       .filter(col("lo") < col("hi")).select("lo", "hi")
-    val pairs = cp.cut(nearPairs.union(exactPairs).distinct())
+    val pairs = nearPairs.union(exactPairs).distinct().localCheckpoint()
     // Frontier loop over status ∈ {A(dmitted), R(ejected), U(ndecided)}.
-    var status = cp.cut(fp.select(col("doc_id"))
+    var status = fp.select(col("doc_id"))
       .join(indexRejected.withColumn("ir", lit(true)), Seq("doc_id"), "left")
-      .select(col("doc_id"), when(col("ir"), lit("R")).otherwise(lit("U")).as("st")))
+      .select(col("doc_id"), when(col("ir"), lit("R")).otherwise(lit("U")).as("st"))
+      .localCheckpoint()
     var undecided = status.filter(col("st") === "U").count()
     while (undecided > 0) {
       val next = status.as("s")
@@ -422,7 +417,7 @@ object DocStream {
             .when(col("any_a") === 1, lit("R"))
             .when(col("any_u") === 0, lit("A"))
             .otherwise(lit("U")).as("st"))
-      status = cp.cut(next)
+      status = next.localCheckpoint()
       val left = status.filter(col("st") === "U").count()
       // ≥1 doc resolves per round (the minimum undecided doc always does);
       // guard against a logic regression turning this into a spin

@@ -29,7 +29,7 @@ object VecStream {
     * 100 TB posture: the static side ([[Similarity.cappedCells]] +
     * [[Similarity.normFrame]] — the SAME builders the batch path uses, so
     * divert/cap semantics can never drift between stream and batch) is
-    * materialized once through its checkpoint seam, so per-micro-batch
+    * materialized once (`localCheckpoint`), so per-micro-batch
     * planning re-reads stored blocks, never re-hashes the corpus; the
     * stream side is linear in the batch (`bands` cells per vector).
     */

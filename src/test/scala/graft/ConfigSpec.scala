@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.functions._
 import graft.analog.{OccurrenceAnalog => OA}
 
 /** ConfigLoader: parse a reference-shaped YAML (same keys as the
@@ -78,10 +77,7 @@ class ConfigSpec extends SparkSpec {
       yaml.replace("tilesThreshold: 100000", "tilesThreshold: 500"))
     val cfg = ConfigLoader.toPipelineConfig(ConfigLoader.load(ymlPath), Some(work))
       .copy(maxZoom = 0, projections = Seq("EPSG:3857"))
-    val occ = Tables.events(spark, "/root/testdata/sf0.001").filter(OA.qualityFilter)
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        OA.lat.as("lat"), OA.lng.as("lng"),
-        col("event_type").as("basisOfRecord"), OA.yearCol.as("year"))
+    val occ = OA.occurrences(Tables.events(spark, "/root/testdata/sf0.001"))
     val res = MapPipeline.run(spark, occ, OA.mapKeysArray, cfg)
     assert(res.tileDirs.size == 1)
     assert(spark.read.parquet(res.tileDirs.head).count() > 0)

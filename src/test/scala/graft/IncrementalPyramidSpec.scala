@@ -10,10 +10,7 @@ class IncrementalPyramidSpec extends SparkSpec {
     val inc = SparkEntry.queries("pyramid_incremental")(spark, d)
       .select(col("map_key"), col("lat"), col("lng"), col("bor_year"), col("occ_new"))
     val OA = graft.analog.OccurrenceAnalog
-    val ev = Tables.events(spark, d).filter(OA.qualityFilter)
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        OA.lat.as("lat"), OA.lng.as("lng"),
-        col("event_type").as("basisOfRecord"), OA.yearCol.as("year"))
+    val ev = OA.occurrences(Tables.events(spark, d))
     val full = graft.tiles.Pyramid.prepareInput(ev, OA.mapKeysArray)
       .withColumnRenamed("mapKey", "map_key")
       .withColumnRenamed("borYear", "bor_year")

@@ -25,10 +25,7 @@ class PipelineSpec extends SparkSpec {
   test("full pipeline: points + 2-zoom pyramid, sorted salted sinks, decodable blobs") {
     val work = Files.createTempDirectory("graft_pipeline").toString
     val events = Tables.events(spark, "/root/testdata/sf0.001")
-    val occ = events.filter(OA.qualityFilter)
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        OA.lat.as("lat"), OA.lng.as("lng"),
-        col("event_type").as("basisOfRecord"), OA.yearCol.as("year"))
+    val occ = OA.occurrences(events)
 
     val cfg = MapPipeline.Config(
       workDir = work, maxZoom = 2, saltModulo = 10, threshold = 500,
@@ -107,10 +104,7 @@ class PipelineSpec extends SparkSpec {
     // checkpoint tables: PARTITIONED BY (zoom), so zoom-sliced consumers
     // prune partitions instead of scanning the whole pyramid
     val events = Tables.events(spark, "/root/testdata/sf0.001")
-    val occ = events.filter(OA.qualityFilter)
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        OA.lat.as("lat"), OA.lng.as("lng"),
-        col("event_type").as("basisOfRecord"), OA.yearCol.as("year"))
+    val occ = OA.occurrences(events)
     val prepared = Pyramid.prepareInput(occ, OA.mapKeysArray, BorYear.EventTypeCodes)
     val proj = Projections.fromEpsg("EPSG:3857")
     val byZoom = (0 to 1).map { z =>
@@ -140,10 +134,7 @@ class PipelineSpec extends SparkSpec {
   test("catalog CTAS barrier: checkpoints become real catalog tables, same pipeline output") {
     val work = Files.createTempDirectory("graft_pipeline_cat").toString
     val events = Tables.events(spark, "/root/testdata/sf0.001")
-    val occ = events.filter(OA.qualityFilter)
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        OA.lat.as("lat"), OA.lng.as("lng"),
-        col("event_type").as("basisOfRecord"), OA.yearCol.as("year"))
+    val occ = OA.occurrences(events)
 
     val cfg = MapPipeline.Config(
       workDir = work, maxZoom = 1, saltModulo = 10, threshold = 500,
@@ -173,10 +164,7 @@ class PipelineSpec extends SparkSpec {
 
   test("deep zoom: BIGINT pixel cascade equals the int path at z8, builds at z17") {
     val events = Tables.events(spark, "/root/testdata/sf0.001")
-    val occ = events.filter(OA.qualityFilter)
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        OA.lat.as("lat"), OA.lng.as("lng"),
-        col("event_type").as("basisOfRecord"), OA.yearCol.as("year"))
+    val occ = OA.occurrences(events)
     val input = Pyramid.prepareInput(occ, OA.mapKeysArray, BorYear.EventTypeCodes)
       .localCheckpoint()
     val proj = Projections.fromEpsg("EPSG:3857")
