@@ -9,10 +9,11 @@ import scala.collection.mutable
   * protobuf format: varints + length-delimited messages; no library needed).
   *
   * This is the wire-format twin of the deterministic custom codec that
-  * [[Sinks.encodeTilesWithMvt]] writes beside it: the reference emits true MVT bytes through
-  * `no.ecc.vectortile.VectorTileEncoder` (`VectorTiles.java:39-85`), so a
-  * consumer pointing a map renderer at our tiles needs this framing, while
-  * the custom codec stays the oracle-checkable twin.
+  * [[Sinks.encodeTilesWithMvt]] writes beside it: the reference emits true
+  * MVT bytes through `no.ecc.vectortile.VectorTileEncoder`
+  * (`VectorTiles.java:39-85`), so a consumer pointing a map renderer at our
+  * tiles needs this framing, while the custom codec stays the
+  * oracle-checkable twin.
   *
   * Field numbers from the public `vector_tile.proto` (v2.1):
   * {{{
