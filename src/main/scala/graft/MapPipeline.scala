@@ -44,8 +44,9 @@ object MapPipeline {
 
   /** Materialization barrier between pipeline stages — the reference models
     * these as Hive CTAS checkpoint tables (`TileMapBuilder.java:85-104`,
-    * `use <db>` at `MapBuilder.java:171-173`). Both modes cut lineage the
-    * same way: write once, give downstream stages a fresh scan.
+    * `use <db>` at `MapBuilder.java:171-173`). Every implementation (a
+    * parquet path, a catalog CTAS, or either under a name prefix) cuts
+    * lineage the same way: write once, give downstream stages a fresh scan.
     */
   sealed trait Barrier extends Serializable {
     def materialize(spark: SparkSession, df: DataFrame, name: String): DataFrame

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.analog.{OccurrenceAnalog => OA}
 import graft.keys._
@@ -54,13 +53,7 @@ object SparkEntry {
     */
   def entry(spark: SparkSession): DataFrame = {
     val d = "/root/testdata/sf0.001"
-    val t1 = Pyramid.pixelCounts(
-      Pyramid.prepareInput(KeySupport.occ(spark, d), OA.mapKeysArray), Mercator3857, 0, TileSize)
-    t1.filter(col("xy").isNotNull)
-      .select(col("mapKey").as("map_key"),
-        col("xy.x").as("px"), col("xy.y").as("py"),
-        col("borYearCount.borYear").as("bor_year"),
-        col("borYearCount.occCount").as("occ_count"))
-      .orderBy("map_key", "px", "py", "bor_year")
+    PyramidKeys.pixelRows(Pyramid.pixelCounts(
+      Pyramid.prepareInput(KeySupport.occ(spark, d), OA.mapKeysArray), Mercator3857, 0, TileSize))
   }
 }

@@ -1,8 +1,23 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.MapType
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. Exits non-zero,
-  * naming the keys, if any key fails; every other key is still dumped. */
+  * naming the keys, if any key fails; every other key is still dumped.
+  *
+  * `digests.tsv` records `key<TAB>rows<TAB>sum` for every key that was
+  * written: its row count and the DECIMAL sum of each row's xxhash64 (map
+  * columns through `to_json`), observed on the write itself, so no extra
+  * job runs. The sum is independent of row order and partitioning, so two
+  * builds that should agree compare with `diff`.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -16,17 +31,25 @@ object Verify {
     val spark = GraftSession.local(GraftSession.cpus)
     new java.io.File(outDir).mkdirs()
     // a failing key must not stop the others' dumps, but it must fail the run
-    val failed = SparkEntry.queries.toSeq
+    val results = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .flatMap { case (name, fn) =>
-        try {
-          fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-          None
+      .map { case (name, fn) =>
+        name -> (try {
+          val o = Observation()
+          val df = fn(spark, sfDir)
+          df.observe(o, count(lit(1)).as("n"), sum(rowHash(df)).as("h"))
+            .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+          // observed metrics arrive through the listener bus, after the write
+          val r = Await.result(o.future, 1.minute)
+          val h = Option(r.getDecimal(1)).fold("0")(_.toPlainString)
+          Some(s"$name\t${r.getLong(0)}\t$h\n")
         } catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
-          Some(name)
-        }
+          None
+        })
       }
+    val failed = results.collect { case (name, None) => name }
+    Files.writeString(Paths.get(s"$outDir/digests.tsv"), results.flatMap(_._2).sorted.mkString)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -47,5 +70,16 @@ object Verify {
       System.err.println(s"[verify] ${failed.size} key(s) failed: ${failed.mkString(", ")}")
       sys.exit(1)
     }
+  }
+
+  /** Each row's xxhash64 as DECIMAL, map columns through `to_json` (Spark
+    * does not hash maps).
+    */
+  private def rowHash(df: DataFrame): Column = {
+    val cols = df.schema.fields.toIndexedSeq.map { f =>
+      val c = col(s"`${f.name}`")
+      f.dataType match { case _: MapType => to_json(c); case _ => c }
+    }
+    xxhash64(cols: _*).cast("decimal(38,0)")
   }
 }

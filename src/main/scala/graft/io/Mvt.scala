@@ -1,8 +1,5 @@
 package graft.io
 
-import java.io.ByteArrayOutputStream
-import java.nio.charset.StandardCharsets.UTF_8
-
 import scala.collection.mutable
 
 /** Hand-rolled Mapbox Vector Tile writer (MVT spec 2.1 — a public, simple
@@ -45,36 +42,16 @@ object Mvt {
   private def zigzag(v: Long): Long = (v << 1) ^ (v >> 63)
   private def unzigzag(v: Long): Long = (v >>> 1) ^ -(v & 1)
 
-  /** Minimal protobuf writer: varints, tags, length-delimited fields. */
-  private final class Pb {
-    private val out = new ByteArrayOutputStream(64)
-    def varint(v: Long): this.type = {
-      var x = v
-      while ((x & ~0x7fL) != 0L) { out.write(((x & 0x7f) | 0x80).toInt); x >>>= 7 }
-      out.write(x.toInt); this
-    }
-    def tag(field: Int, wire: Int): this.type = varint((field.toLong << 3) | wire)
-    def uint(field: Int, v: Long): this.type = { tag(field, 0); varint(v) }
-    def str(field: Int, s: String): this.type = bytes(field, s.getBytes(UTF_8))
-    def bytes(field: Int, b: Array[Byte]): this.type = {
-      tag(field, 2); varint(b.length.toLong); out.write(b, 0, b.length); this
-    }
-    def packed(field: Int, vs: Iterable[Long]): this.type = {
-      val p = new Pb; vs.foreach(p.varint); bytes(field, p.result)
-    }
-    def result: Array[Byte] = out.toByteArray
-  }
-
   /** Encode one tile: `layers` = (name, point features), `extent` = the
     * tile's coordinate range (the reference passes its tileSize,
     * `VectorTiles.java:40`).
     */
   def encode(layers: Seq[(String, Seq[PointFeature])], extent: Int): Array[Byte] = {
-    val tile = new Pb
+    val tile = new PbWriter
     layers.foreach { case (name, feats) =>
       val keys = mutable.LinkedHashMap.empty[String, Int]
       val values = mutable.LinkedHashMap.empty[Long, Int]
-      val layer = new Pb
+      val layer = new PbWriter
       layer.uint(15, 2) // version (required, = 2)
       layer.str(1, name)
       feats.foreach { f =>
@@ -82,14 +59,14 @@ object Mvt {
           Seq(keys.getOrElseUpdate(k, keys.size).toLong,
             values.getOrElseUpdate(v, values.size).toLong)
         }
-        val fpb = new Pb
+        val fpb = new PbWriter
         fpb.packed(2, tags)
         fpb.uint(3, 1) // GeomType.POINT
         fpb.packed(4, Seq(9L, zigzag(f.x.toLong), zigzag(f.y.toLong)))
         layer.bytes(2, fpb.result)
       }
       keys.keys.foreach(layer.str(3, _))
-      values.keys.foreach { v => layer.bytes(4, new Pb().uint(4, v).result) }
+      values.keys.foreach { v => layer.bytes(4, new PbWriter().uint(4, v).result) }
       layer.uint(5, extent.toLong)
       tile.bytes(3, layer.result)
     }
@@ -104,75 +81,44 @@ object Mvt {
   /** One decoded layer: (name, extent, features). */
   case class Layer(name: String, extent: Int, features: Seq[PointFeature])
 
-  private final class PbReader(b: Array[Byte], from: Int, until: Int) {
-    var pos: Int = from
-    def hasNext: Boolean = pos < until
-    def varint(): Long = {
-      var x = 0L; var shift = 0
-      while ({ val c = b(pos) & 0xff; pos += 1; x |= (c & 0x7fL) << shift; shift += 7; (c & 0x80) != 0 }) ()
-      x
-    }
-    /** returns (fieldNumber, wireType) */
-    def tag(): (Int, Int) = { val t = varint(); ((t >>> 3).toInt, (t & 7).toInt) }
-    def lenDelim(): (Int, Int) = { val n = varint().toInt; val s = pos; pos += n; (s, s + n) }
-    def skip(wire: Int): Unit = wire match {
-      case 0 => varint(); ()
-      case 1 => pos += 8
-      case 2 => lenDelim(); ()
-      case 5 => pos += 4
-      case w => throw new IllegalArgumentException(s"unsupported wire type $w")
-    }
-  }
-
   def decode(bytes: Array[Byte]): Seq[Layer] = {
     val layers = mutable.ArrayBuffer.empty[Layer]
-    val top = new PbReader(bytes, 0, bytes.length)
+    val top = new PbReader(bytes)
     while (top.hasNext) top.tag() match {
-      case (3, 2) =>
-        val (s, e) = top.lenDelim()
-        layers += decodeLayer(bytes, s, e)
+      case (3, 2) => layers += decodeLayer(top.message())
       case (_, w) => top.skip(w)
     }
     layers.toSeq
   }
 
-  private def decodeLayer(b: Array[Byte], from: Int, until: Int): Layer = {
+  private def decodeLayer(r: PbReader): Layer = {
     var name = ""; var extent = 4096
     val keys = mutable.ArrayBuffer.empty[String]
     val values = mutable.ArrayBuffer.empty[Long]
     val rawFeats = mutable.ArrayBuffer.empty[(Seq[Long], Int, Int)] // tags, x, y
-    val r = new PbReader(b, from, until)
     while (r.hasNext) r.tag() match {
-      case (1, 2) => val (s, e) = r.lenDelim(); name = new String(b, s, e - s, UTF_8)
+      case (1, 2) => name = r.str()
       case (5, 0) => extent = r.varint().toInt
       case (15, 0) =>
         val v = r.varint()
         require(v == 2, s"unsupported MVT version $v")
-      case (3, 2) => val (s, e) = r.lenDelim(); keys += new String(b, s, e - s, UTF_8)
+      case (3, 2) => keys += r.str()
       case (4, 2) =>
-        val (s, e) = r.lenDelim()
-        val vr = new PbReader(b, s, e)
+        val vr = r.message()
         while (vr.hasNext) vr.tag() match {
           case (4, 0) => values += vr.varint()
           case (_, w) => vr.skip(w)
         }
       case (2, 2) =>
-        val (s, e) = r.lenDelim()
-        val fr = new PbReader(b, s, e)
+        val fr = r.message()
         var tags = Seq.empty[Long]; var x = 0; var y = 0
         while (fr.hasNext) fr.tag() match {
-          case (2, 2) =>
-            val (ts, te) = fr.lenDelim()
-            val tr = new PbReader(b, ts, te)
-            val acc = mutable.ArrayBuffer.empty[Long]
-            while (tr.hasNext) acc += tr.varint()
-            tags = acc.toSeq
+          case (2, 2) => tags = fr.packed()
           case (3, 0) =>
             val g = fr.varint()
             require(g == 1, s"only POINT geometry supported, got $g")
           case (4, 2) =>
-            val (gs, ge) = fr.lenDelim()
-            val gr = new PbReader(b, gs, ge)
+            val gr = fr.message()
             val cmd = gr.varint()
             require(cmd == 9, s"expected single MoveTo (9), got $cmd")
             x = unzigzag(gr.varint()).toInt

@@ -1,10 +1,8 @@
 package graft.io
 
-import java.io.ByteArrayOutputStream
-
 import scala.collection.mutable
 
-/** Hand-rolled protobuf writer for point-map blobs — the wire-format twin of
+/** Hand-rolled protobuf codec for point-map blobs — the wire-format twin of
   * the deterministic custom layout [[Sinks.encodePointsWithPb]] writes
   * beside it, exactly as [[Mvt]] is the wire twin of the custom tile codec
   * in [[Sinks.encodeTilesWithMvt]].
@@ -44,28 +42,6 @@ object PointPb {
     */
   case class Feature(lat: Double, lng: Double, bor: Int, year: Int, count: Long)
 
-  private final class Pb {
-    private val out = new ByteArrayOutputStream(64)
-    def varint(v: Long): this.type = {
-      var x = v
-      while ((x & ~0x7fL) != 0L) { out.write(((x & 0x7f) | 0x80).toInt); x >>>= 7 }
-      out.write(x.toInt); this
-    }
-    def tag(field: Int, wire: Int): this.type = varint((field.toLong << 3) | wire)
-    def uint(field: Int, v: Long): this.type = { tag(field, 0); varint(v) }
-    def dbl(field: Int, v: Double): this.type = {
-      tag(field, 1)
-      var bits = java.lang.Double.doubleToLongBits(v)
-      var i = 0
-      while (i < 8) { out.write((bits & 0xff).toInt); bits >>>= 8; i += 1 }
-      this
-    }
-    def bytes(field: Int, b: Array[Byte]): this.type = {
-      tag(field, 2); varint(b.length.toLong); out.write(b, 0, b.length); this
-    }
-    def result: Array[Byte] = out.toByteArray
-  }
-
   /** Encode one blob. `borYear` decomposes as the engine's packed encoding
     * (`BorYear.encode`): bor code = borYear % 100, year = borYear / 100.
     */
@@ -75,9 +51,9 @@ object PointPb {
     // -0.0 — mirror that, or the sign bit is lost on decode
     def nonDefault(v: Double): Boolean =
       java.lang.Double.doubleToRawLongBits(v) != 0L
-    val top = new Pb
+    val top = new PbWriter
     features.foreach { f =>
-      val fpb = new Pb
+      val fpb = new PbWriter
       if (nonDefault(f.lat)) fpb.dbl(1, f.lat)
       if (nonDefault(f.lng)) fpb.dbl(2, f.lng)
       if (f.bor != 0) fpb.uint(3, f.bor.toLong)
@@ -90,44 +66,19 @@ object PointPb {
 
   // ------------------------------------------------------------- decoder
 
-  private final class PbReader(b: Array[Byte], from: Int, until: Int) {
-    var pos: Int = from
-    def hasNext: Boolean = pos < until
-    def varint(): Long = {
-      var x = 0L; var shift = 0
-      while ({ val c = b(pos) & 0xff; pos += 1; x |= (c & 0x7fL) << shift; shift += 7; (c & 0x80) != 0 }) ()
-      x
-    }
-    def tag(): (Int, Int) = { val t = varint(); ((t >>> 3).toInt, (t & 7).toInt) }
-    def lenDelim(): (Int, Int) = { val n = varint().toInt; val s = pos; pos += n; (s, s + n) }
-    def fixed64(): Long = {
-      var x = 0L; var i = 0
-      while (i < 8) { x |= (b(pos) & 0xffL) << (8 * i); pos += 1; i += 1 }
-      x
-    }
-    def skip(wire: Int): Unit = wire match {
-      case 0 => varint(); ()
-      case 1 => pos += 8
-      case 2 => lenDelim(); ()
-      case 5 => pos += 4
-      case w => throw new IllegalArgumentException(s"unsupported wire type $w")
-    }
-  }
-
   /** Full inverse of [[encode]] (and a valid reader for reference-schema
     * blobs, which simply never carry field 5).
     */
   def decode(bytes: Array[Byte]): Seq[Feature] = {
     val out = mutable.ArrayBuffer.empty[Feature]
-    val top = new PbReader(bytes, 0, bytes.length)
+    val top = new PbReader(bytes)
     while (top.hasNext) top.tag() match {
       case (1, 2) =>
-        val (s, e) = top.lenDelim()
         var lat = 0.0; var lng = 0.0; var bor = 0; var year = 0; var count = 0L
-        val fr = new PbReader(bytes, s, e)
+        val fr = top.message()
         while (fr.hasNext) fr.tag() match {
-          case (1, 1) => lat = java.lang.Double.longBitsToDouble(fr.fixed64())
-          case (2, 1) => lng = java.lang.Double.longBitsToDouble(fr.fixed64())
+          case (1, 1) => lat = fr.dbl()
+          case (2, 1) => lng = fr.dbl()
           case (3, 0) => bor = fr.varint().toInt
           case (4, 0) => year = fr.varint().toInt
           case (5, 0) => count = fr.varint()

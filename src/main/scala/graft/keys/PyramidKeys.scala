@@ -23,6 +23,18 @@ private[graft] object PyramidKeys {
       .withColumnRenamed("borYear", "bor_year")
       .withColumnRenamed("occCount", "occ_count")
 
+  /** A t1 frame as sorted pixel rows: `map_key, px, py, bor_year,
+    * occ_count` for every plottable pixel (`agg_sum_by_pixel` and
+    * [[SparkEntry.entry]]).
+    */
+  private[graft] def pixelRows(t1: DataFrame): DataFrame =
+    t1.filter(col("xy").isNotNull)
+      .select(col("mapKey").as("map_key"),
+        col("xy.x").as("px"), col("xy.y").as("py"),
+        col("borYearCount.borYear").as("bor_year"),
+        col("borYearCount.occCount").as("occ_count"))
+      .orderBy("map_key", "px", "py", "bor_year")
+
   /** `skew_salt_plan` heavy-key threshold: keys above this multiple of the
     * mean group size get a salt factor (shared with the oracle).
     */
@@ -279,16 +291,9 @@ private[graft] object PyramidKeys {
     // query never reuses the lat/lng-grain pre-aggregation, so the
     // intermediate exchange bought nothing (2 exchanges -> 1, identical
     // values; the pipeline's shared-CTAS path keeps prepareInput).
-    Key("agg_sum_by_pixel", (s, d) => {
-      val t1 = Pyramid.pixelCountsDirect(occ(s, d), OA.mapKeysArray,
-        Mercator3857, 4, TileSize)
-      t1.filter(col("xy").isNotNull)
-        .select(col("mapKey").as("map_key"),
-          col("xy.x").as("px"), col("xy.y").as("py"),
-          col("borYearCount.borYear").as("bor_year"),
-          col("borYearCount.occCount").as("occ_count"))
-        .orderBy("map_key", "px", "py", "bor_year")
-    },
+    Key("agg_sum_by_pixel", (s, d) =>
+      pixelRows(Pyramid.pixelCountsDirect(occ(s, d), OA.mapKeysArray,
+        Mercator3857, 4, TileSize)),
       () => sqlOcc + sqlPixelCte(Mercator3857, 4) +
         """SELECT map_key, px, py, bor_year, count(*) AS occ_count
           |FROM pix WHERE px IS NOT NULL

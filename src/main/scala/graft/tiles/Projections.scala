@@ -33,27 +33,18 @@ sealed trait Projection extends Serializable {
   def worldPxX(zoom: Int, tileSize: Int): Long = zzH.toLong * (1L << zoom) * tileSize
   def worldPxY(zoom: Int, tileSize: Int): Long = zzV.toLong * (1L << zoom) * tileSize
 
-  /** struct(x:int, y:int) or null — the reference's `project()` UDF shape.
+  /** struct(x, y) or null — the reference's `project()` UDF shape, typed
+    * by [[Projections.coordType]] (`int` to zoom 16, `bigint` above; double
+    * precision holds exactly to zoom ~43, pixel < 2^53).
     * Clamped on BOTH edges: at inclusive domain boundaries (lat =
     * ±MaxMercatorLat, polar extremes) FP error can push the fractional pixel
     * a hair below 0, and floor would yield -1 (tile -1 after addressing).
     */
   def globalPixel(lat: Column, lng: Column, zoom: Int, tileSize: Int): Column = {
     val (x, y) = pixelXY(lat, lng, zoom, tileSize)
-    val xi = greatest(lit(0L), least(floor(x), lit(worldPxX(zoom, tileSize) - 1))).cast("int")
-    val yi = greatest(lit(0L), least(floor(y), lit(worldPxY(zoom, tileSize) - 1))).cast("int")
-    when(isPlottable(lat, lng), struct(xi.as("x"), yi.as("y")))
-      .otherwise(lit(null))
-  }
-
-  /** LongType variant of [[globalPixel]] for zoom > 16 (pairs with
-    * `TileAddressing.addressesLong`): identical math and clamping, bigint
-    * output. Double precision holds exactly to zoom ~43 (pixel < 2^53).
-    */
-  def globalPixelLong(lat: Column, lng: Column, zoom: Int, tileSize: Int): Column = {
-    val (x, y) = pixelXY(lat, lng, zoom, tileSize)
-    val xi = greatest(lit(0L), least(floor(x), lit(worldPxX(zoom, tileSize) - 1))).cast("bigint")
-    val yi = greatest(lit(0L), least(floor(y), lit(worldPxY(zoom, tileSize) - 1))).cast("bigint")
+    val t = Projections.coordType(zoom)
+    val xi = greatest(lit(0L), least(floor(x), lit(worldPxX(zoom, tileSize) - 1))).cast(t)
+    val yi = greatest(lit(0L), least(floor(y), lit(worldPxY(zoom, tileSize) - 1))).cast(t)
     when(isPlottable(lat, lng), struct(xi.as("x"), yi.as("y")))
       .otherwise(lit(null))
   }
@@ -77,6 +68,17 @@ sealed trait Projection extends Serializable {
 object Projections {
   /** Published Web-Mercator latitude limit: atan(sinh(π)) in degrees. */
   val MaxMercatorLat = 85.05112877980659
+
+  /** Deepest zoom the reference's int-typed tile schema supports
+    * (`TileXYUDF.java:65-69`).
+    */
+  val IntZoomCap: Int = 16
+
+  /** SQL type of pixel and tile coordinates at `zoom`: `int` to
+    * [[IntZoomCap]], `bigint` above. The zoom is a literal when the plan is
+    * built, so each zoom's plan carries one fixed type.
+    */
+  def coordType(zoom: Int): String = if (zoom <= IntZoomCap) "int" else "bigint"
 
   def fromEpsg(epsg: String): Projection = epsg match {
     case "EPSG:3857" => Mercator3857

@@ -21,23 +21,19 @@ import graft.expr.{BorYear, Salt}
   *
   * Scale notes (100 TB posture): prepareInput's output should be
   * checkpointed (parquet) by the caller before the per-zoom loop — see
-  * [[graft.SparkEntry]]'s pipeline — exactly as the reference materializes
+  * [[graft.MapPipeline.run]] — exactly as the reference materializes
   * its CTAS table (`MapBuilder.java:130-133`). The t3 `collect_list` is an
   * `ObjectHashAggregate`; group cardinality at zoom z is bounded by the tile
   * count × map views, and each group's payload is one tile's pixels
   * (≤ (tileSize+2·buffer)²), which bounds executor memory independent of
   * input rows.
+  *
+  * Coordinate width: the reference's int-typed tile schema stops at z16
+  * (`TileXYUDF.java:65-69`). Here pixels and tile ids take their type from
+  * [[Projections.coordType]] — `int` to [[Projections.IntZoomCap]], `bigint`
+  * above — so a z17+ build runs this same cascade with wider coordinates.
   */
 object Pyramid {
-
-  /** Deepest zoom the reference's int-typed tile schema supports
-    * (`TileXYUDF.java:65-69`). Above this the cascade transparently switches
-    * to the exact-BIGINT pixel + address path (`Projections.globalPixelLong`,
-    * `TileAddressing.addressesLong`) — same wrap/buffer semantics, proven
-    * equal at shared zooms by `TileAddressSpec`, so a z17+ build is the same
-    * pipeline with wider tile coordinates, not a separate code path.
-    */
-  val IntZoomCap: Int = 16
 
   /** Explode map views and pre-aggregate: one row per
     * (mapKey, lat, lng, borYear) with its occurrence count.
@@ -52,13 +48,17 @@ object Pyramid {
       occ: DataFrame,
       mapKeysArray: org.apache.spark.sql.Column,
       borCodes: Seq[(String, Int)] = BorYear.EventTypeCodes): DataFrame =
-    occ
-      .select(
-        explode(mapKeysArray).as("mapKey"),
-        col("lat"), col("lng"),
-        BorYear.encode(col("basisOfRecord"), col("year"), borCodes).as("borYear"))
+    views(occ, mapKeysArray, borCodes)
       .groupBy("mapKey", "lat", "lng", "borYear")
       .agg(count(lit(1)).as("occCount"))
+
+  /** One row per (occurrence, map view): `mapKey, lat, lng, borYear`. */
+  private def views(occ: DataFrame, mapKeysArray: org.apache.spark.sql.Column,
+      borCodes: Seq[(String, Int)]): DataFrame =
+    occ.select(
+      explode(mapKeysArray).as("mapKey"),
+      col("lat"), col("lng"),
+      BorYear.encode(col("basisOfRecord"), col("year"), borCodes).as("borYear"))
 
   /** t1: global-pixel projection + per-pixel sum (`TileMapBuilder.java:113-127`).
     *
@@ -69,15 +69,10 @@ object Pyramid {
     * property that matters most at 100 TB. Keep Catalyst's default plan.
     */
   def pixelCounts(input: DataFrame, proj: Projection, zoom: Int, tileSize: Int): DataFrame =
-    pixelCountsPath(input, proj, zoom, tileSize, useLong = zoom > IntZoomCap)
-
-  private[graft] def pixelCountsPath(input: DataFrame, proj: Projection, zoom: Int,
-      tileSize: Int, useLong: Boolean): DataFrame =
     input
       .select(
         col("mapKey"),
-        (if (!useLong) proj.globalPixel(col("lat"), col("lng"), zoom, tileSize)
-         else proj.globalPixelLong(col("lat"), col("lng"), zoom, tileSize)).as("xy"),
+        proj.globalPixel(col("lat"), col("lng"), zoom, tileSize).as("xy"),
         col("borYear"), col("occCount"))
       .groupBy("mapKey", "xy", "borYear")
       .agg(sum("occCount").as("occCount"))
@@ -85,28 +80,23 @@ object Pyramid {
         col("mapKey"), col("xy"),
         struct(col("borYear"), col("occCount")).as("borYearCount"))
 
-  /** t1 computed DIRECTLY from un-aggregated occurrence rows: count(*)
-    * per (mapKey, pixel, borYear) equals prepareInput-then-sum (counts
-    * over disjoint row partitions add), so a SINGLE-zoom consumer that
-    * never materializes the shared pre-aggregation gets the same t1
-    * frame for ONE exchange instead of two (opt guide §2.4; map-side
-    * partial aggregation still collapses duplicates before the
-    * shuffle). The pipeline keeps [[prepareInput]] + [[pixelCounts]]:
-    * its CTAS output is shared across the 4-projection × 17-zoom fan-out,
-    * which is exactly when the extra materialized grain pays.
+  /** t1 computed DIRECTLY from un-aggregated occurrence rows, each feeding
+    * count 1 into [[pixelCounts]]: the sum per (mapKey, pixel, borYear)
+    * equals prepareInput-then-sum (counts over disjoint row partitions
+    * add), so a SINGLE-zoom consumer that never materializes the shared
+    * pre-aggregation gets the same t1 frame for ONE exchange instead of two
+    * (opt guide §2.4; map-side partial aggregation still collapses
+    * duplicates before the shuffle). The pipeline keeps [[prepareInput]] +
+    * [[pixelCounts]]: its CTAS output is shared across the 4-projection ×
+    * 17-zoom fan-out, which is exactly when the extra materialized grain
+    * pays.
     */
   def pixelCountsDirect(occ: DataFrame,
       mapKeysArray: org.apache.spark.sql.Column, proj: Projection,
       zoom: Int, tileSize: Int,
       borCodes: Seq[(String, Int)] = BorYear.EventTypeCodes): DataFrame =
-    occ.select(
-        explode(mapKeysArray).as("mapKey"),
-        proj.globalPixel(col("lat"), col("lng"), zoom, tileSize).as("xy"),
-        BorYear.encode(col("basisOfRecord"), col("year"), borCodes).as("borYear"))
-      .groupBy("mapKey", "xy", "borYear")
-      .agg(count(lit(1)).as("occCount"))
-      .select(col("mapKey"), col("xy"),
-        struct(col("borYear"), col("occCount")).as("borYearCount"))
+    pixelCounts(views(occ, mapKeysArray, borCodes).withColumn("occCount", lit(1L)),
+      proj, zoom, tileSize)
 
   /** t2: collect per-pixel features (`TileMapBuilder.java:130-136`). */
   def pixelFeatures(t1: DataFrame): DataFrame =
@@ -118,22 +108,16 @@ object Pyramid {
     * salted tile key (`TileMapBuilder.java:139-156`).
     */
   def tiles(t2: DataFrame, addressing: TileAddressing, zoom: Int, saltModulo: Int): DataFrame =
-    tilesPath(t2, addressing, zoom, saltModulo, useLong = zoom > IntZoomCap)
-
-  private[graft] def tilesPath(t2: DataFrame, addressing: TileAddressing, zoom: Int,
-      saltModulo: Int, useLong: Boolean): DataFrame =
     t2.select(
         col("mapKey"),
-        explode(
-          if (!useLong) addressing.addresses(zoom, col("xy.x"), col("xy.y"))
-          else addressing.addressesLong(zoom, col("xy.x"), col("xy.y"))).as("tile"),
+        explode(addressing.addresses(zoom, col("xy.x"), col("xy.y"))).as("tile"),
         col("features"))
       .select(
         Salt.tileKey(col("mapKey"), lit(zoom), col("tile.tileX"), col("tile.tileY"), saltModulo)
           .as("key"),
         // local pixel coords live in [-buffer, tileSize+buffer) at EVERY
         // zoom — only tile ids outgrow Int past z16 — so the blob codecs
-        // keep one int-typed pixel schema across both address paths
+        // keep one int-typed pixel schema
         struct(
           col("tile.pixelX").cast("int").as("x"),
           col("tile.pixelY").cast("int").as("y"),
@@ -152,23 +136,5 @@ object Pyramid {
     val t1 = pixelCounts(input, proj, zoom, tileSize)
     val t2 = pixelFeatures(t1)
     tiles(t2, TileAddressing(proj, tileSize, bufferSize), zoom, saltModulo)
-  }
-
-  /** Test seam: the full cascade FORCED down the exact-BIGINT path at any
-    * zoom, so specs can pin pipeline-OUTPUT parity (salted keys, sorted
-    * collected tiles — not just per-address equality) between the int and
-    * long paths at a shared zoom ≤ [[IntZoomCap]]. Production callers use
-    * [[build]], which switches automatically at the cap.
-    */
-  private[graft] def buildLongPath(
-      input: DataFrame,
-      proj: Projection,
-      zoom: Int,
-      tileSize: Int,
-      bufferSize: Int,
-      saltModulo: Int): DataFrame = {
-    val t1 = pixelCountsPath(input, proj, zoom, tileSize, useLong = true)
-    val t2 = pixelFeatures(t1)
-    tilesPath(t2, TileAddressing(proj, tileSize, bufferSize), zoom, saltModulo, useLong = true)
   }
 }

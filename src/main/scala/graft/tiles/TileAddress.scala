@@ -24,37 +24,20 @@ import org.apache.spark.sql.functions._
   */
 case class TileAddressing(proj: Projection, tileSize: Int, bufferSize: Int) {
 
-  def nTilesX(zoom: Int): Int = proj.zzH * (1 << zoom)
-  def nTilesY(zoom: Int): Int = proj.zzV * (1 << zoom)
+  def nTilesX(zoom: Int): Long = proj.zzH.toLong * (1L << zoom)
+  def nTilesY(zoom: Int): Long = proj.zzV.toLong * (1L << zoom)
 
   /** array<struct<tileX,tileY,pixelX,pixelY>> for a global pixel (x,y).
-    * Schema: `TileXYUDF.java:62-70` (int-typed; valid to zoom ≤ 16).
+    * Schema: `TileXYUDF.java:62-70`, typed by [[Projections.coordType]] —
+    * the reference caps its int-typed schema at 16 ("higher requires tileXY
+    * to be LongType"); above it the fields are bigint. Tile math is exact
+    * INTEGER division in BIGINT at every zoom (not a double `floor`, which
+    * would misplace pixels ≥ 2^53 near tile boundaries), so addressing is
+    * exact for any pixel; the practical zoom ceiling (~43) comes from the
+    * pixel SOURCE — `Projection.globalPixel` computes pixels in doubles.
+    * Integral division truncates, which equals floor on non-negative pixels.
     */
-  def addresses(zoom: Int, x: Column, y: Column): Column =
-    addressesImpl(x, y, "int", nTilesX(zoom), nTilesY(zoom))
-
-  def nTilesXL(zoom: Int): Long = proj.zzH.toLong * (1L << zoom)
-  def nTilesYL(zoom: Int): Long = proj.zzV.toLong * (1L << zoom)
-
-  /** LongType variant of [[addresses]] for zoom > 16 — the reference caps
-    * its int-typed schema at 16 ("higher requires tileXY to be LongType",
-    * `TileXYUDF.java:65-69`); this path lifts that cap. Tile math is exact
-    * INTEGER division (not a double `floor`, which would misplace pixels
-    * ≥ 2^53 near tile boundaries), so addressing itself is exact for any
-    * BIGINT pixel; the practical zoom ceiling (~43) comes from the pixel
-    * SOURCE — `Projections.globalPixelLong` computes pixels in doubles.
-    * Same wrap/buffer semantics, proven equal to the int path at shared
-    * zooms by `TileAddressSpec`.
-    */
-  def addressesLong(zoom: Int, x: Column, y: Column): Column =
-    addressesImpl(x, y, "bigint", nTilesXL(zoom), nTilesYL(zoom))
-
-  /** Shared fan-out: all arithmetic in exact BIGINT (integral division for
-    * the tile id — pixels are non-negative so truncation == floor), struct
-    * fields cast to `castT`.
-    */
-  private def addressesImpl(x: Column, y: Column, castT: String,
-                            nX: Long, nY: Long): Column = {
+  def addresses(zoom: Int, x: Column, y: Column): Column = {
     import org.apache.spark.sql.graft.ColumnBridge
     import org.apache.spark.sql.catalyst.expressions.IntegralDivide
     def idiv(a: Column, b: Long): Column =
@@ -66,8 +49,9 @@ case class TileAddressing(proj: Projection, tileSize: Int, bufferSize: Int) {
     val lx = xl - tx * ts; val ly = yl - ty * ts
     val west = lx < buf; val east = lx >= ts - buf
     val north = ly < buf; val south = ly >= ts - buf
-    def wrapX(t: Column) = pmod(t, lit(nX))
-    def wrapY(t: Column) = pmod(t, lit(nY))
+    def wrapX(t: Column) = pmod(t, lit(nTilesX(zoom)))
+    def wrapY(t: Column) = pmod(t, lit(nTilesY(zoom)))
+    val castT = Projections.coordType(zoom)
     def addr(txc: Column, tyc: Column, lxc: Column, lyc: Column) =
       struct(txc.cast(castT).as("tileX"), tyc.cast(castT).as("tileY"),
              lxc.cast(castT).as("pixelX"), lyc.cast(castT).as("pixelY"))

@@ -59,6 +59,26 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("projections: pixel at z+1 halves to the pixel at z, across the int/bigint switch") {
+    // every projection applies its power-of-two scale last and clamps
+    // consistently, so floor(x_{z+1}) >> 1 == floor(x_z) holds exactly —
+    // the fact a zoom-to-zoom roll-up of t1 rests on; z16 -> z17 also
+    // crosses from int to bigint coordinates
+    val coords = (sample(latLng, 3000, 5L) ++ edges).toDF("lat", "lng")
+    for (proj <- allProjections; zoom <- Seq(0, 8, 15, 16)) {
+      val bad = coords
+        .filter(proj.isPlottable(col("lat"), col("lng")))
+        .select(col("lat"), col("lng"),
+          proj.globalPixel(col("lat"), col("lng"), zoom, 512).as("p"),
+          proj.globalPixel(col("lat"), col("lng"), zoom + 1, 512).as("q"))
+        .filter(shiftright(col("q.x"), 1) =!= col("p.x") ||
+          shiftright(col("q.y"), 1) =!= col("p.y"))
+      val rows = bad.limit(3).collect()
+      assert(rows.isEmpty,
+        s"${proj.epsg} z${zoom + 1} -> z$zoom halving violations: ${rows.mkString("; ")}")
+    }
+  }
+
   test("borYear codec: decode-of-encode round-trips for valid inputs, nulls for junk/absent") {
     val borGen = Gen.oneOf(
       Gen.oneOf(BorYear.EventTypeCodes.map(_._1)),

@@ -52,29 +52,6 @@ class TileAddressSpec extends SparkSpec {
     assert(addrs == Seq((1, 1, tileSize / 2, tileSize / 2)))
   }
 
-  test("addressesLong == addresses at shared zooms (z0-8, all projections)") {
-    val rnd = new scala.util.Random(7)
-    for (proj <- Projections.All; zoom <- Seq(0, 4, 8)) {
-      val maxX = proj.zzH * (1 << zoom) * tileSize
-      val maxY = proj.zzV * (1 << zoom) * tileSize
-      val pts = Seq.fill(100)((rnd.nextInt(maxX), rnd.nextInt(maxY))) ++
-        Seq((0, 0), (maxX - 1, maxY - 1), (tileSize - 1, tileSize - 1))
-      val adr = TileAddressing(proj, tileSize, buffer)
-      val both = pts.distinct.toDF("x", "y")
-        .select(col("x"), col("y"),
-          adr.addresses(zoom, col("x"), col("y")).as("ai"),
-          adr.addressesLong(zoom, col("x"), col("y")).as("al"))
-        .collect()
-      both.foreach { r =>
-        val ai = r.getSeq[org.apache.spark.sql.Row](2)
-          .map(t => (t.getInt(0).toLong, t.getInt(1).toLong, t.getInt(2).toLong, t.getInt(3).toLong))
-        val al = r.getSeq[org.apache.spark.sql.Row](3)
-          .map(t => (t.getLong(0), t.getLong(1), t.getLong(2), t.getLong(3)))
-        assert(ai == al, s"${proj.epsg} z$zoom (${r.getInt(0)},${r.getInt(1)}): int $ai != long $al")
-      }
-    }
-  }
-
   test("property: LongType addressing beyond the int cap (z17-20)") {
     val rnd = new scala.util.Random(11)
     for (zoom <- Seq(17, 18, 20)) {
@@ -86,7 +63,7 @@ class TileAddressSpec extends SparkSpec {
       val adr = TileAddressing(proj, tileSize, buffer)
       val rows = pts.toDF("x", "y")
         .select(col("x"), col("y"),
-          explode(adr.addressesLong(zoom, col("x"), col("y"))).as("t"))
+          explode(adr.addresses(zoom, col("x"), col("y"))).as("t"))
         .select("x", "y", "t.tileX", "t.tileY", "t.pixelX", "t.pixelY")
         .collect()
         .map(r => ((r.getLong(0), r.getLong(1)), (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))))
@@ -109,13 +86,13 @@ class TileAddressSpec extends SparkSpec {
     }
   }
 
-  test("globalPixelLong: z18 pixels exceed int-safe tile math and match the double formula") {
+  test("globalPixel: z18 pixels are bigint and match the double formula") {
     import graft.tiles.Projections.MaxMercatorLat
     val pts = Seq((0.0, 0.0), (51.5, -0.12), (-33.86, 151.2), (MaxMercatorLat, 180.0),
       (-MaxMercatorLat, -180.0))
     val zoom = 18
     val rows = pts.toDF("lat", "lng")
-      .select(Mercator3857.globalPixelLong(col("lat"), col("lng"), zoom, tileSize).as("p"))
+      .select(Mercator3857.globalPixel(col("lat"), col("lng"), zoom, tileSize).as("p"))
       .select("p.x", "p.y").collect()
     val world = Mercator3857.worldPxX(zoom, tileSize) // 2^27 px: outside int tile range at tileSize granularity
     rows.foreach { r =>
@@ -158,31 +135,6 @@ class TileAddressSpec extends SparkSpec {
           assert(ly >= -buffer && ly < tileSize + buffer)
         }
       }
-    }
-  }
-
-  test("pipeline OUTPUT parity: full cascade int path == forced long path (z4/z8)") {
-    // per-address equality (above) does not by itself prove the composed
-    // cascade agrees: the salted keys, per-pixel sums and sorted collected
-    // tiles all flow THROUGH the typed coordinates. Run Pyramid.build (int
-    // path at z<=16) and Pyramid.buildLongPath (the z17+ machinery forced
-    // on at the same zoom) over one occurrence fixture and require
-    // byte-identical output rows.
-    val rnd = new scala.util.Random(23)
-    val occ = Seq.tabulate(300) { i =>
-      (if (i % 3 == 0) "0:0" else s"1:${i % 4}",
-        rnd.nextDouble() * 160 - 80,   // lat in [-80, 80)
-        rnd.nextDouble() * 360 - 180,  // lng in [-180, 180)
-        (i % 5) * 1000 + 2000,         // borYear-ish code
-        (i % 7 + 1).toLong)
-    }.toDF("mapKey", "lat", "lng", "borYear", "occCount")
-    for (proj <- Seq(Mercator3857, PlateCarree4326); zoom <- Seq(4, 8)) {
-      def rowsOf(df: org.apache.spark.sql.DataFrame) =
-        df.orderBy("key").collect().map(_.toString).toSeq
-      val intRows = rowsOf(Pyramid.build(occ, proj, zoom, tileSize, buffer, 4))
-      val longRows = rowsOf(Pyramid.buildLongPath(occ, proj, zoom, tileSize, buffer, 4))
-      assert(intRows.nonEmpty, s"${proj.epsg} z$zoom produced no tiles")
-      assert(intRows == longRows, s"${proj.epsg} z$zoom: int/long pipeline outputs differ")
     }
   }
 }
