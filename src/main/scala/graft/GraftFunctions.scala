@@ -1,12 +1,14 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
-import org.apache.spark.sql.catalyst.expressions.{CaseWhen, Cast, EqualTo, Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.StringType
 
-import graft.expr.{BorYear, FloatVectorDot, Salt}
+import graft.expr.{BorYear, FloatVectorDot, PortableHash, Salt}
+import graft.llm.{Scrub, Similarity}
 
 /** The engine's SQL surface: graft functions exposed to `spark.sql(...)`
   * users, either injected at session build time (`GraftExtensions`, via
@@ -16,108 +18,72 @@ import graft.expr.{BorYear, FloatVectorDot, Salt}
   * The reference exposes its operator vocabulary through per-session UDF
   * registration (`MapKeysUDF.register(spark, "mapKeys")` etc.,
   * `MapKeysUDF.java:57-65`); these are Catalyst-native equivalents — each
-  * builder returns a tree over `UnresolvedFunction` nodes that the analyzer
-  * resolves to the same built-ins the DataFrame API uses, so SQL users get
+  * builder applies the DataFrame API's own Column builder to the call's
+  * arguments, so SQL and Column callers share one formula and SQL users get
   * codegen and pushdown too.
   */
 object GraftFunctions {
 
   private def fn(name: String, args: Expression*): Expression =
     UnresolvedFunction(Seq(name), args, isDistinct = false)
-  private def i(v: Int) = Literal(v)
-  private def s(v: String) = Literal(v)
 
-  /** md5-prefix portable hash (mirrors [[graft.expr.PortableHash.phash]]). */
-  private def phashE(e: Expression): Expression =
-    Cast(fn("conv", fn("substring", fn("md5", e), i(1), i(8)), i(16), i(10)), LongType)
+  /** A SQL builder from a Column builder over the call's arguments. */
+  private def fromColumns(f: Seq[Column] => Column): Seq[Expression] => Expression =
+    es => ColumnBridge.converted(f(es.map(ColumnBridge.column)))
 
-  private def borCodeE(bor: Expression): Expression =
-    CaseWhen(BorYear.EventTypeCodes.map { case (n, c) =>
-      (EqualTo(bor, s(n)), i(c): Expression)
-    })
+  /** The value of a foldable int argument (a plan-shaping constant). */
+  private def litInt(e: Expression): Int = e.eval(null) match {
+    case x: Int => x; case x: Long => x.toInt
+    case other => throw new IllegalArgumentException(s"literal int expected: $other")
+  }
+
+  private val phash = fromColumns(cs => PortableHash.phash(cs.head))
 
   /** name → (builder, usage) for every exposed function. */
   val All: Seq[(String, Seq[Expression] => Expression, String)] = Seq(
     ("graft_phash",
-      (es: Seq[Expression]) => phashE(es.head),
+      phash,
       "graft_phash(str) - portable 32-bit-range hash (md5-prefix)"),
     ("graft_bor_encode",
-      (es: Seq[Expression]) => Cast(fn("+",
-        fn("*", fn("coalesce", es(1), i(0)), i(100)), borCodeE(es.head)), IntegerType),
+      fromColumns(cs => BorYear.encode(cs.head, cs(1))),
       "graft_bor_encode(bor, year) - basisOfRecord x year int codec"),
     ("graft_bor_year",
-      (es: Seq[Expression]) => {
-        val y = Cast(fn("floor", fn("/", es.head, i(100))), IntegerType)
-        CaseWhen(Seq((fn(">", y, i(0)).asInstanceOf[Expression], y)),
-          Some(Literal(null, IntegerType)))
-      },
+      fromColumns(cs => BorYear.decodeYear(cs.head)),
       "graft_bor_year(encoded) - year component (0 -> NULL)"),
     ("graft_bor",
-      (es: Seq[Expression]) => {
-        val m = fn("pmod", es.head, i(100))
-        CaseWhen(BorYear.EventTypeCodes.map { case (n, c) =>
-          (EqualTo(m, i(c)), s(n): Expression)
-        })
-      },
+      fromColumns(cs => BorYear.decodeBor(cs.head)),
       "graft_bor(encoded) - basisOfRecord component"),
     ("graft_salted",
       (es: Seq[Expression]) => {
-        val modulo = es(1) match {
-          case Literal(v: Int, _) => v
-          case other => other.eval(null).asInstanceOf[Int]
-        }
-        val salt = fn("pmod", phashE(es.head), Literal(modulo.toLong))
-        fn("concat_ws", s(":"),
-          fn("lpad", Cast(salt, StringType), i(Salt.saltCharCount(modulo)), s("0")),
-          es.head)
+        val modulo = litInt(es(1))
+        fromColumns(cs => Salt.salted(cs.head, modulo))(es)
       },
       "graft_salted(key, modulo) - zero-padded salt prefix (ModulusSalt contract)"),
     ("graft_vec_dot",
       (es: Seq[Expression]) => FloatVectorDot(es.head, es(1)),
       "graft_vec_dot(a, b) - codegen'd float-vector dot product"),
     ("graft_redact_pii",
-      (es: Seq[Expression]) => fn("regexp_replace",
-        fn("regexp_replace", es.head,
-          s(graft.llm.Scrub.EmailPattern), s("<EMAIL>")),
-        s(graft.llm.Scrub.PhonePattern), s("<PHONE>")),
+      fromColumns(cs => Scrub.redact(cs.head)),
       "graft_redact_pii(str) - replace emails/phones with <EMAIL>/<PHONE>"),
     ("graft_sample_keep",
-      (es: Seq[Expression]) => fn("<",
-        fn("pmod", phashE(fn("concat", es(2), s(":"), Cast(es.head, StringType))),
-          Literal(1000000L)),
-        es(1)),
+      // Scrub.stratifiedKeep takes the rate and seed as constants; here all
+      // three arguments are columns, so only the hash comes from its builder
+      (es: Seq[Expression]) => {
+        val seeded = fn("concat", es(2), Literal(":"), Cast(es.head, StringType))
+        fn("<", fn("pmod", phash(Seq(seeded)), Literal(1000000L)), es(1))
+      },
       "graft_sample_keep(key, ppm, seed) - deterministic hash-sample filter (rate in ppm)"),
     ("graft_lsh_cell",
       (es: Seq[Expression]) => {
-        def litInt(e: Expression): Int = e.eval(null) match {
-          case x: Int => x; case x: Long => x.toInt
-          case other => throw new IllegalArgumentException(s"literal int expected: $other")
-        }
-        val band = litInt(es(1)); val bits = litInt(es(2)); val dim = litInt(es(3))
-        (0 until bits).map { b =>
-          val hp = Literal.create(graft.llm.Similarity.hyperplane(band, b, dim),
-            org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType))
-          CaseWhen(Seq((fn(">=", FloatVectorDot(es.head, hp), Literal(0.0)),
-            Literal(1L << b): Expression)), Some(Literal(0L))): Expression
-        }.reduce((a, b) => fn("+", a, b))
+        val (band, bits, dim) = (litInt(es(1)), litInt(es(2)), litInt(es(3)))
+        fromColumns(cs => Similarity.cellId(cs.head, band, bits, dim))(es)
       },
       "graft_lsh_cell(vec, band, bits, dim) - deterministic sign-bit LSH cell id"),
     ("graft_nfc",
       (es: Seq[Expression]) => graft.expr.NfcNormalize(es.head),
       "graft_nfc(str) - Unicode NFC canonical normalization (codegen'd)"),
     ("graft_zorder",
-      (es: Seq[Expression]) => {
-        // expression-tree rendering of the ONE shared spreading schedule
-        // (ZOrder.SpreadSteps) — constants can't drift from the Column/SQL
-        // forms; GraftFunctionsSpec pins bitwise equality
-        import graft.ops.ZOrder
-        def spread(e: Expression): Expression =
-          ZOrder.SpreadSteps.foldLeft(fn("&", e, Literal(ZOrder.InputMask))) {
-            case (x, (sh, mask)) =>
-              fn("&", fn("|", x, fn("shiftleft", x, i(sh))), Literal(mask))
-          }
-        fn("|", spread(es.head), fn("shiftleft", spread(es(1)), i(1)))
-      },
+      fromColumns(cs => graft.ops.ZOrder.interleave(cs.head, cs(1))),
       "graft_zorder(x, y) - Morton interleave of two 16-bit grid coords")
   )
 

@@ -18,6 +18,24 @@ object Salt {
 
   def saltCharCount(modulo: Int): Int = (modulo - 1).toString.length
 
+  /** The salt a [[salted]] key carries: its prefix up to the first ':',
+    * read as an int. Raises an error naming the key when the key is null,
+    * its prefix is not `saltCharCount(modulo)` digits or the salt is not
+    * below `modulo`, so a run salted for a different modulo fails instead of
+    * straddling regions.
+    */
+  def partitionOf(key: Column, modulo: Int): Column = {
+    val width = saltCharCount(modulo)
+    val prefix = substring_index(key, ":", 1)
+    val salt = prefix.cast("int")
+    def fail(parts: Column*): Column =
+      raise_error(concat(lit("key '") +: coalesce(key, lit("null")) +: parts: _*))
+    when(!coalesce(prefix.rlike(s"^[0-9]{$width}$$"), lit(false)),
+      fail(lit(s"' is not salted for modulo $modulo (expected a $width-digit prefix)")))
+      .when(salt >= modulo, fail(lit("' has salt "), salt.cast("string"), lit(s" >= modulo $modulo")))
+      .otherwise(salt)
+  }
+
   /** `salt(key) ∈ [0, modulo)` — deterministic, portable. */
   def saltOf(key: Column, modulo: Int): Column =
     pmod(PortableHash.phash(key), lit(modulo.toLong))

@@ -5,6 +5,8 @@ import java.nio.ByteBuffer
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.expr.Salt
+
 /** Sorted key→binary sinks and deterministic blob encoders.
   *
   * The reference's terminal stage shuffles by the key's salt prefix, sorts
@@ -15,6 +17,9 @@ import org.apache.spark.sql.functions._
   * key-value parquet sink with identical partitioning guarantees — one
   * partition per salt, keys sorted within each partition, so a bulk-loader
   * (or any range-partitioned store) can consume partitions as sorted runs.
+  * The sink stays a DataFrame plan: `repartitionById` on the key's salt,
+  * then a sort within partitions in unsigned UTF-8 byte order, which is
+  * HBase's row-key order.
   *
   * Blob encoding: two codecs over the same tile rows. The deterministic
   * length-prefixed big-endian layout is the oracle-checkable twin; the
@@ -26,46 +31,20 @@ import org.apache.spark.sql.functions._
 object Sinks {
 
   /** Partition index == salt (region alignment) with keys sorted within
-    * each partition — the exact contract of the reference's
-    * `SaltPrefixPartitioner` + `repartitionAndSortWithinPartitions`
+    * each partition — the contract of the reference's
+    * `SaltPrefixPartitioner` and its sort-within-partitions shuffle
     * (`SaltPrefixPartitioner.java:21-37`, `TileMapBuilder.java:184`).
     *
-    * A DataFrame `repartition(n, saltCol)` would hash-scatter salts across
-    * partitions (murmur3, with collisions), so a bulk-loader consuming
-    * partition i as region i's sorted run would misroute keys; this is the
-    * one place the engine drops to the RDD layer for a custom partitioner.
-    * `df` must have a string `key` column whose prefix up to the first ':'
-    * is the zero-padded salt in [0, saltModulo).
+    * `repartitionById` sends each row to the partition its id column names,
+    * where `repartition(n, saltCol)` would hash-scatter salts across
+    * partitions. The id is [[Salt.partitionOf]], which fails naming the key
+    * when the key is not salted for `saltModulo`. Keys sort in Spark's
+    * binary UTF-8 order, which is HBase's unsigned-byte row-key order.
+    * `df` must have a string `key` column.
     */
-  def sortedBySalt(df: DataFrame, saltModulo: Int): DataFrame = {
-    val spark = df.sparkSession
-    val schema = df.schema
-    val keyIdx = schema.fieldIndex("key")
-    // validates each key against the declared modulo: a run salted for a
-    // DIFFERENT modulo must fail loudly here, not crash with an opaque
-    // out-of-range partition id (wider salt) or silently straddle region
-    // boundaries (narrower salt sorts between 2-char split points)
-    val saltWidth = graft.expr.Salt.saltCharCount(saltModulo)
-    val partitioner = new org.apache.spark.Partitioner {
-      override def numPartitions: Int = saltModulo
-      override def getPartition(key: Any): Int = {
-        val k = key.asInstanceOf[String]
-        val pfx = k.takeWhile(_ != ':')
-        require(pfx.length == saltWidth && pfx.forall(_.isDigit),
-          s"key '$k' is not salted for modulo $saltModulo " +
-            s"(expected a $saltWidth-digit prefix)")
-        val s = pfx.toInt
-        require(s < saltModulo,
-          s"key '$k' has salt $s >= modulo $saltModulo")
-        s
-      }
-    }
-    val rows = df.rdd
-      .map(r => (r.getString(keyIdx), r))
-      .repartitionAndSortWithinPartitions(partitioner)
-      .map(_._2)
-    spark.createDataFrame(rows, schema)
-  }
+  def sortedBySalt(df: DataFrame, saltModulo: Int): DataFrame =
+    df.repartitionById(saltModulo, Salt.partitionOf(col("key"), saltModulo))
+      .sortWithinPartitions("key")
 
   /** Write as the engine's HFile-analog: parquet of (key:string, value:binary),
     * salt-partitioned and key-sorted within partitions.

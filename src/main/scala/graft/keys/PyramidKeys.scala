@@ -35,6 +35,22 @@ private[graft] object PyramidKeys {
         col("borYearCount.occCount").as("occ_count"))
       .orderBy("map_key", "px", "py", "bor_year")
 
+  /** String-serialized t2 at (EPSG:3857, zoom) (`TileMapBuilder.java:130-136`):
+    * per `mapKey, xy`, the pixel's `borYear:count` features sorted and
+    * joined by ';' as `features_str`. t1 via pixelCountsDirect — see the
+    * agg_sum_by_pixel note. Sorting strings is a codegen-cheap binary
+    * compare, while array_sort(collect_list(struct)) runs an interpreted
+    * struct comparator (measured ~2× the stage cost).
+    */
+  private def pixelFeatureStrings(s: SparkSession, d: String, zoom: Int): DataFrame =
+    Pyramid.pixelCountsDirect(occ(s, d), OA.mapKeysArray, Mercator3857, zoom, TileSize)
+      .filter(col("xy").isNotNull)
+      .groupBy("mapKey", "xy")
+      .agg(array_join(sort_array(collect_list(
+        concat_ws(":", col("borYearCount.borYear").cast("string"),
+                       col("borYearCount.occCount").cast("string")))), ";")
+        .as("features_str"))
+
   /** `skew_salt_plan` heavy-key threshold: keys above this multiple of the
     * mean group size get a salt factor (shared with the oracle).
     */
@@ -300,23 +316,13 @@ private[graft] object PyramidKeys {
           |GROUP BY 1, 2, 3, 4 ORDER BY 1, 2, 3, 4""".stripMargin),
 
     // ---- A4: per-pixel feature collection at zoom 2 (TileMapBuilder.java:130-136)
-    // Each feature is serialized to its canonical string BEFORE collecting:
-    // sorting strings is a codegen-cheap binary compare, while
-    // array_sort(collect_list(struct)) runs an interpreted struct comparator
-    // (measured ~2× the stage cost). Same grouping topology and determinism.
-    Key("agg_collect_pixel_features", (s, d) => {
-      // t1 via pixelCountsDirect — see agg_sum_by_pixel note
-      val t1 = Pyramid.pixelCountsDirect(occ(s, d), OA.mapKeysArray,
-        Mercator3857, 2, TileSize)
-      t1.filter(col("xy").isNotNull)
+    // Each feature is serialized to its canonical string BEFORE collecting
+    // (see pixelFeatureStrings).
+    Key("agg_collect_pixel_features", (s, d) =>
+      pixelFeatureStrings(s, d, 2)
         .select(col("mapKey").as("map_key"),
-          col("xy.x").as("px"), col("xy.y").as("py"),
-          concat_ws(":", col("borYearCount.borYear").cast("string"),
-                         col("borYearCount.occCount").cast("string")).as("f"))
-        .groupBy("map_key", "px", "py")
-        .agg(array_join(sort_array(collect_list(col("f"))), ";").as("features_str"))
-        .orderBy("map_key", "px", "py")
-    },
+          col("xy.x").as("px"), col("xy.y").as("py"), col("features_str"))
+        .orderBy("map_key", "px", "py"),
       () => sqlOcc + sqlPixelCte(Mercator3857, 2) +
         """, pc AS (
           |  SELECT map_key, px, py, bor_year, count(*) AS cnt
@@ -360,17 +366,9 @@ private[graft] object PyramidKeys {
     // by MapPipeline/PipelineSpec, where Sinks.encodeTilesWithMvt needs structs).
     Key("agg_collect_tile", (s, d) => {
       val zoom = 1
-      // t1 via pixelCountsDirect — see agg_sum_by_pixel note
-      val t1 = Pyramid.pixelCountsDirect(occ(s, d), OA.mapKeysArray,
-        Mercator3857, zoom, TileSize)
-      val t2s = t1.filter(col("xy").isNotNull)
-        .select(col("mapKey"), col("xy"),
-          concat_ws(":", col("borYearCount.borYear").cast("string"),
-                         col("borYearCount.occCount").cast("string")).as("f"))
-        .groupBy("mapKey", "xy")
-        .agg(array_join(sort_array(collect_list(col("f"))), ";").as("features_str"))
       val adr = TileAddressing(Mercator3857, TileSize, BufferSize)
-      t2s.select(col("mapKey"),
+      pixelFeatureStrings(s, d, zoom)
+        .select(col("mapKey"),
           explode(adr.addresses(zoom, col("xy.x"), col("xy.y"))).as("t"),
           col("features_str"))
         .select(

@@ -12,9 +12,10 @@ import graft.expr.Salt
   * `PrepareBackfill.java:42-53`: create the target HBase table BEFORE the
   * build, with one column family per projection and the table PRE-SPLIT at
   * every salt boundary (`ModulusSalt.getTableRegions`) — so the sorted runs
-  * the build emits (`io/Sinks.sortedBySalt`, partition i == salt i) bulk-load
-  * straight into region i with no region splits mid-load (at 2.5B rows a
-  * mid-load split storm is the classic bulk-load failure mode).
+  * the build emits (`io/Sinks.sortedBySalt`: partition i holds the keys
+  * whose `Salt.partitionOf` is i) bulk-load straight into region i with no
+  * region splits mid-load (at 2.5B rows a mid-load split storm is the
+  * classic bulk-load failure mode).
   *
   * `Backfill.java:54-131`: build from an HDFS SNAPSHOT of the source taken
   * under a ZK barrier (crawling may be appending), and delete the snapshot
@@ -70,11 +71,11 @@ object Backfill {
     * the engine model of `FinaliseBackfill`'s LoadIncrementalHFiles over
     * `PrepareBackfill`'s regions. Validates the load against the table's
     * pinned region contract: the family must be declared, and the data's
-    * salt modulo must match the split layout — enforced per key by the
-    * salt-aligned partitioner's width/range checks (a run salted for
-    * modulo 100 fed into a 10-region table fails loudly instead of
-    * straddling boundaries). Rows are routed through
-    * [[graft.io.Sinks.sortedBySalt]] so partition i is region i's sorted run.
+    * salt modulo must match the split layout — enforced per key by
+    * [[Salt.partitionOf]] (a run salted for modulo 100 fed into a
+    * 10-region table fails loudly instead of straddling boundaries). Rows
+    * are routed through [[graft.io.Sinks.sortedBySalt]] so partition i is
+    * region i's sorted run.
     */
   def bulkLoad(spark: SparkSession, db: String, table: String, family: String,
                kv: DataFrame): Unit = {

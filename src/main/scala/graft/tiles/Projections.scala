@@ -56,12 +56,14 @@ sealed trait Projection extends Serializable {
   def sqlGlobalPixelX(latE: String, lngE: String, zoom: Int, tileSize: Int): String = {
     val (x, _) = sqlPixelXY(latE, lngE, zoom, tileSize)
     s"(CASE WHEN ${sqlIsPlottable(latE, lngE)} THEN " +
-      s"greatest(0, least(floor($x), ${worldPxX(zoom, tileSize) - 1}))::INTEGER ELSE NULL END)"
+      s"greatest(0, least(floor($x), ${worldPxX(zoom, tileSize) - 1}))::" +
+      s"${Projections.sqlCoordType(zoom)} ELSE NULL END)"
   }
   def sqlGlobalPixelY(latE: String, lngE: String, zoom: Int, tileSize: Int): String = {
     val (_, y) = sqlPixelXY(latE, lngE, zoom, tileSize)
     s"(CASE WHEN ${sqlIsPlottable(latE, lngE)} THEN " +
-      s"greatest(0, least(floor($y), ${worldPxY(zoom, tileSize) - 1}))::INTEGER ELSE NULL END)"
+      s"greatest(0, least(floor($y), ${worldPxY(zoom, tileSize) - 1}))::" +
+      s"${Projections.sqlCoordType(zoom)} ELSE NULL END)"
   }
 }
 
@@ -79,6 +81,9 @@ object Projections {
     * built, so each zoom's plan carries one fixed type.
     */
   def coordType(zoom: Int): String = if (zoom <= IntZoomCap) "int" else "bigint"
+
+  /** DuckDB spelling of [[coordType]], for the oracle emitters. */
+  def sqlCoordType(zoom: Int): String = if (coordType(zoom) == "int") "INTEGER" else "BIGINT"
 
   def fromEpsg(epsg: String): Projection = epsg match {
     case "EPSG:3857" => Mercator3857

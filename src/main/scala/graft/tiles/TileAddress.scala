@@ -76,15 +76,15 @@ case class TileAddressing(proj: Projection, tileSize: Int, bufferSize: Int) {
     */
   def sqlAddresses(zoom: Int, xE: String, yE: String): String = {
     val nX = nTilesX(zoom); val nY = nTilesY(zoom)
-    val ts = tileSize; val buf = bufferSize
-    val tx = s"(floor(($xE) / $ts)::INTEGER)"; val ty = s"(floor(($yE) / $ts)::INTEGER)"
+    val ts = tileSize; val buf = bufferSize; val ct = Projections.sqlCoordType(zoom)
+    val tx = s"(floor(($xE) / $ts)::$ct)"; val ty = s"(floor(($yE) / $ts)::$ct)"
     val lx = s"(($xE) - $tx * $ts)"; val ly = s"(($yE) - $ty * $ts)"
     val west = s"($lx < $buf)"; val east = s"($lx >= ${ts - buf})"
     val north = s"($ly < $buf)"; val south = s"($ly >= ${ts - buf})"
-    def wrapX(t: String) = s"((((($t) % $nX) + $nX) % $nX)::INTEGER)"
-    def wrapY(t: String) = s"((((($t) % $nY) + $nY) % $nY)::INTEGER)"
+    def wrapX(t: String) = s"((((($t) % $nX) + $nX) % $nX)::$ct)"
+    def wrapY(t: String) = s"((((($t) % $nY) + $nY) % $nY)::$ct)"
     def addr(txe: String, tye: String, lxe: String, lye: String) =
-      s"{'tileX': $txe, 'tileY': $tye, 'pixelX': ($lxe)::INTEGER, 'pixelY': ($lye)::INTEGER}"
+      s"{'tileX': $txe, 'tileY': $tye, 'pixelX': ($lxe)::$ct, 'pixelY': ($lye)::$ct}"
     def guarded(cond: String, a: String) = s"(CASE WHEN $cond THEN $a ELSE NULL END)"
     val cands = Seq(
       addr(tx, ty, lx, ly),

@@ -58,14 +58,22 @@ class PipelineSpec extends SparkSpec {
         graft.io.PointPb.Feature(lat, lng, borYear % 100, borYear / 100, count)
       }, s"pb twin mismatch for $key")
     }
-    // per-partition sortedness of the sink (HFile contract)
-    import spark.implicits._
-    val unsorted = Sinks.sortedBySalt(points, 10)
-      .mapPartitions { it =>
-        val keys = it.map(_.getString(0)).toVector
-        Iterator.single(keys == keys.sorted)
-      }.collect()
-    assert(unsorted.forall(identity), "keys sorted within every sink partition")
+    // the written files meet the HFile contract: part file i holds only
+    // salt-i keys, in ascending unsigned UTF-8 byte order
+    for (dir <- Seq(res.pointsPath, res.tileDirs.find(_.contains("EPSG_3857/z2")).get)) {
+      val parts = new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith("part-"))
+      assert(parts.nonEmpty, s"$dir has part files")
+      parts.foreach { p =>
+        val salt = p.stripPrefix("part-").takeWhile(_ != '-').toInt
+        val keys = spark.read.parquet(s"$dir/$p").select("key").collect().map(_.getString(0))
+        assert(keys.forall(_.startsWith(s"$salt:")), s"$dir/$p holds only salt-$salt keys")
+        val bytes = keys.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        assert(bytes.sliding(2).forall {
+          case Array(a, b) => java.util.Arrays.compareUnsigned(a, b) <= 0
+          case _ => true
+        }, s"$dir/$p keys in unsigned byte order")
+      }
+    }
 
     // tiles at zoom 0 for 3857: world is one tile -> every key addresses tile (0,0);
     // decoded pixel sum over ALL views' tiles at z0 equals total occurrences of
@@ -98,6 +106,66 @@ class PipelineSpec extends SparkSpec {
       assert(mvtTotal == customTotal, s"mvt conserves counts for key ${r.getString(0)}")
     }
   }
+
+  test("z8 sink digests: points and all 36 tile dirs match their pins") {
+    val work = Files.createTempDirectory("graft_pipeline_z8").toString
+    val occ = OA.occurrences(Tables.events(spark, "/root/testdata/sf0.001"))
+    val cfg = MapPipeline.Config(workDir = work, maxZoom = 8, threshold = 500)
+    val res = MapPipeline.run(spark, occ, OA.mapKeysArray, cfg)
+    def digest(dir: String, codec: String): (Long, BigDecimal) = {
+      val r = spark.read.parquet(dir)
+        .selectExpr("count(*)", s"sum(cast(xxhash64(key, value, $codec) as decimal(38, 0)))")
+        .head()
+      (r.getLong(0), BigDecimal(r.getDecimal(1)))
+    }
+    val got = (("points" -> digest(res.pointsPath, "pb")) +:
+      res.tileDirs.map(d => d.stripPrefix(s"$work/") -> digest(d, "mvt"))).toMap
+    assert(res.tileDirs.size == 36)
+    assert(got == Z8Pins)
+  }
+
+  /** (rows, DECIMAL sum of xxhash64(key, value, codec)) per sink dir of
+    * `MapPipeline.run` on sf0.001 at maxZoom 8, 4 default projections,
+    * threshold 500.
+    */
+  private val Z8Pins: Map[String, (Long, BigDecimal)] = Map(
+    "points" -> (61, BigDecimal("-23135036047485010466")),
+    "tiles/EPSG_3031/z0" -> (1, BigDecimal("6260878550379794755")),
+    "tiles/EPSG_3031/z1" -> (4, BigDecimal("-5479489467153626977")),
+    "tiles/EPSG_3031/z2" -> (16, BigDecimal("-12087513642879420135")),
+    "tiles/EPSG_3031/z3" -> (59, BigDecimal("-47583479247073513141")),
+    "tiles/EPSG_3031/z4" -> (188, BigDecimal("-82753167503050093510")),
+    "tiles/EPSG_3031/z5" -> (433, BigDecimal("61824991248766035323")),
+    "tiles/EPSG_3031/z6" -> (672, BigDecimal("1661954347420315355")),
+    "tiles/EPSG_3031/z7" -> (775, BigDecimal("176177373202165028186")),
+    "tiles/EPSG_3031/z8" -> (824, BigDecimal("38155876354103485271")),
+    "tiles/EPSG_3575/z0" -> (1, BigDecimal("7075653599509209")),
+    "tiles/EPSG_3575/z1" -> (4, BigDecimal("11363140398861301383")),
+    "tiles/EPSG_3575/z2" -> (16, BigDecimal("-11680874141055880469")),
+    "tiles/EPSG_3575/z3" -> (60, BigDecimal("48702682146799013973")),
+    "tiles/EPSG_3575/z4" -> (208, BigDecimal("79338433585429684867")),
+    "tiles/EPSG_3575/z5" -> (480, BigDecimal("-65518038115167761468")),
+    "tiles/EPSG_3575/z6" -> (625, BigDecimal("58098049159158020406")),
+    "tiles/EPSG_3575/z7" -> (719, BigDecimal("40473873551075627376")),
+    "tiles/EPSG_3575/z8" -> (754, BigDecimal("197987978481555303397")),
+    "tiles/EPSG_3857/z0" -> (1, BigDecimal("2840064641628609790")),
+    "tiles/EPSG_3857/z1" -> (4, BigDecimal("393414977433685560")),
+    "tiles/EPSG_3857/z2" -> (16, BigDecimal("-24097731101853169795")),
+    "tiles/EPSG_3857/z3" -> (64, BigDecimal("16762040339156104671")),
+    "tiles/EPSG_3857/z4" -> (234, BigDecimal("-142752193024254396236")),
+    "tiles/EPSG_3857/z5" -> (673, BigDecimal("-52661097581741761988")),
+    "tiles/EPSG_3857/z6" -> (1221, BigDecimal("-105894923696616730002")),
+    "tiles/EPSG_3857/z7" -> (1463, BigDecimal("25384780373524012570")),
+    "tiles/EPSG_3857/z8" -> (1562, BigDecimal("-88364693453163657719")),
+    "tiles/EPSG_4326/z0" -> (2, BigDecimal("14736762770227862864")),
+    "tiles/EPSG_4326/z1" -> (8, BigDecimal("-3059398378676429174")),
+    "tiles/EPSG_4326/z2" -> (32, BigDecimal("21171416613764877107")),
+    "tiles/EPSG_4326/z3" -> (128, BigDecimal("3239813390668819442")),
+    "tiles/EPSG_4326/z4" -> (472, BigDecimal("68027868281550316123")),
+    "tiles/EPSG_4326/z5" -> (1082, BigDecimal("53715832583652705536")),
+    "tiles/EPSG_4326/z6" -> (1440, BigDecimal("131255090753006854847")),
+    "tiles/EPSG_4326/z7" -> (1528, BigDecimal("257355140197003458630")),
+    "tiles/EPSG_4326/z8" -> (1567, BigDecimal("186909526506032668352")))
 
   test("partitioned CTAS barrier: zoom-partitioned checkpoint prunes on re-read") {
     // the metastore shape a real Hive deployment uses for the pyramid

@@ -33,6 +33,31 @@ class PlanGuardSpec extends SparkSpec {
       s"no createDataFrame round-trip — the rank must be in-plan:\n$plan")
   }
 
+  test("writeSorted: one salt pass-through exchange, no RDD round trip") {
+    import org.apache.spark.sql.catalyst.plans.physical.ShufflePartitionIdPassThrough
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.functions.col
+    val df = spark.range(200).select(
+      graft.expr.Salt.salted(col("id").cast("string"), 10).as("key"), col("id").as("value"))
+    val out = java.nio.file.Files.createTempDirectory("graft_plan_sink").toString
+    val (_, actions) = graft.ops.PlanCapture.capture(spark)(
+      graft.io.Sinks.writeSorted(df, 10, s"$out/sink"))
+    val plans = actions.map(_.qe.executedPlan)
+    val helper = new AdaptiveSparkPlanHelper {}
+    val exchanges = plans.flatMap(p => helper.collect(p) { case e: ShuffleExchangeExec => e })
+    assert(exchanges.size == 1 &&
+      exchanges.head.outputPartitioning.isInstanceOf[ShufflePartitionIdPassThrough] &&
+      exchanges.head.outputPartitioning.numPartitions == 10,
+      s"expected one shufflepartitionidpassthrough exchange:\n${plans.mkString("\n")}")
+    val nodes = actions.flatMap { a =>
+      a.qe.analyzed.collectWithSubqueries { case n => n.nodeName } ++
+        helper.collect(a.qe.executedPlan) { case n => n.nodeName }
+    }
+    assert(!nodes.exists(n => n.contains("ExternalRDD") || n.contains("LogicalRDD") ||
+      n.contains("RDDScan")), s"RDD node in the sink plan: ${nodes.distinct}")
+  }
+
   test("window_ntile matches the ntile(4) window definition row-for-row") {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.expressions.Window

@@ -23,6 +23,19 @@ class SinksSpec extends SparkSpec {
     }
   }
 
+  test("sortedBySalt: a key not salted for the modulo fails, naming the key") {
+    def failure(key: String, modulo: Int): String = intercept[Exception] {
+      Sinks.sortedBySalt(Seq((key, 1)).toDF("key", "value"), modulo).collect()
+    }.getMessage
+    val nul = failure(null, 10)
+    assert(nul.contains("key 'null' is not salted for modulo 10"), nul)
+    val wide = failure("07:view", 10)
+    assert(wide.contains("key '07:view' is not salted for modulo 10 (expected a 1-digit prefix)"),
+      wide)
+    val range = failure("25:view", 20)
+    assert(range.contains("key '25:view' has salt 25 >= modulo 20"), range)
+  }
+
   test("MVT golden bytes: a known tile encodes to the hand-computed wire format") {
     // One layer "view", one point feature at (1, 2) with attrs {"2024": 5},
     // extent 512. Every byte derived by hand from the public MVT 2.1 proto:

@@ -52,6 +52,16 @@ class TileAddressSpec extends SparkSpec {
     assert(addrs == Seq((1, 1, tileSize / 2, tileSize / 2)))
   }
 
+  test("oracle SQL casts coordinates to the zoom's coordType: INTEGER at z16, BIGINT at z17") {
+    val adr = TileAddressing(Mercator3857, tileSize, buffer)
+    for ((zoom, cast) <- Seq(16 -> "INTEGER", 17 -> "BIGINT")) {
+      val sql = adr.sqlAddresses(zoom,
+        Mercator3857.sqlGlobalPixelX("lat", "lng", zoom, tileSize),
+        Mercator3857.sqlGlobalPixelY("lat", "lng", zoom, tileSize))
+      assert("::(\\w*)".r.findAllMatchIn(sql).map(_.group(1)).toSet == Set(cast), s"z$zoom: $sql")
+    }
+  }
+
   test("property: LongType addressing beyond the int cap (z17-20)") {
     val rnd = new scala.util.Random(11)
     for (zoom <- Seq(17, 18, 20)) {
