@@ -10,6 +10,21 @@ package graft
   * sink materializes every output column without write I/O.
   */
 object Bench {
+  /** Locale-safe 3-decimal rendering for the bench mains' JSON artifacts
+    * and stderr records: the f-interpolator's `%.3f` uses the JVM default
+    * locale, and a comma-decimal locale would break downstream parsers.
+    */
+  private[graft] def r3(v: Double): String =
+    BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
+
+  /** Where a bench main reads and writes its artifact `file`: under
+    * `SPARK_GRAFT_REPO` when set, else the working directory, which is the
+    * repo root under `sbt runMain` and `scripts/run_main.sh` (set the
+    * variable for a spark-submit launched elsewhere).
+    */
+  private[graft] def artifactPath(file: String): java.nio.file.Path =
+    java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_REPO", ""), file)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // optional comma-separated key subset — the fresh-JVM isolation loop for
@@ -64,12 +79,6 @@ object Bench {
       catch { case _: Throwable => () } // bench must not die on a warm-up
     }
     warmUp()
-    // Locale-safe 3-decimal rendering for BOTH the JSON artifact and the
-    // stderr correlation records (round-10 ADVICE: the f-interpolator's
-    // %.3f uses the JVM default locale — a comma-decimal locale would
-    // break downstream parsers).
-    def r3(v: Double): String =
-      BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     def timeOne(name: String): Double = {
       val t0 = System.nanoTime()
       val v =
@@ -101,8 +110,7 @@ object Bench {
     //    refreshed ONCE per round (first action of a session: copy
     //    BENCH_LAST.json, which the driver committed, over it).
     def readBenchQueries(file: String): Map[String, Double] = {
-      val p = java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_REPO", "/root/repo"), file)
+      val p = artifactPath(file)
       if (!java.nio.file.Files.exists(p)) Map.empty
       else try {
         val s = java.nio.file.Files.readString(p)
@@ -221,10 +229,7 @@ object Bench {
     // tail and lost the total + the alphabetically-first keys. Subset
     // (SPARK_GRAFT_QUERIES) dev runs must not clobber the full-run artifact.
     if (only.isEmpty)
-      java.nio.file.Files.writeString( // absolute: cwd of a spark-submit launch is not the repo
-        java.nio.file.Paths.get(
-          sys.env.getOrElse("SPARK_GRAFT_REPO", "/root/repo"), "BENCH_LAST.json"),
-        line + "\n")
+      java.nio.file.Files.writeString(artifactPath("BENCH_LAST.json"), line + "\n")
     // Driver-parseable COMPACT line, printed LAST: the driver keeps only the
     // final ~2000 chars of stdout (BENCH_r07.json "tail"), and the full
     // 215-key line is ~7.5 KB, so its opening brace falls outside the window

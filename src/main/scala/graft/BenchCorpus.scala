@@ -1,7 +1,8 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
+import graft.Bench.r3
 import graft.llm.CorpusPipeline
 
 /** End-to-end bench of the COMPOSED training-data pipeline
@@ -15,7 +16,8 @@ import graft.llm.CorpusPipeline
   * `BENCH_corpus.json`: per-stage wall times (delta stages under a
   * `delta_` prefix) plus the corpus- and delta-shrinkage report rows.
   *
-  * `runMain graft.BenchCorpus [sfDir] [workDir] [outFile]`
+  * `runMain graft.BenchCorpus [sfDir] [workDir] [outFile]`; `outFile` resolves
+  * under `SPARK_GRAFT_REPO`, like the other bench mains' artifacts.
   */
 object BenchCorpus {
   def main(args: Array[String]): Unit = {
@@ -87,7 +89,7 @@ object BenchCorpus {
         .admitted.write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t) / 1e9
     }
-    val chainJson = chainTimes.map(s => f"$s%.3f").mkString(
+    val chainJson = chainTimes.map(r3).mkString(
       s"""\"chain_batches\":[""", ",", "]")
 
     // nightly remix over the chain's final merged state: a fresh
@@ -99,16 +101,16 @@ object BenchCorpus {
       .shardSeqs.write.format("noop").mode("overwrite").save()
     val remixTotal = (System.nanoTime() - r0) / 1e9
 
-    val stageJson = (stages.map { case (n, s) => f""""$n":$s%.3f""" } ++
-      dStages.map { case (n, s) => f""""delta_$n":$s%.3f""" }).mkString(",")
+    val stageJson = (stages.map { case (n, s) => s""""$n":${r3(s)}""" } ++
+      dStages.map { case (n, s) => s""""delta_$n":${r3(s)}""" }).mkString(",")
     val reportJson = (report.map { case (_, n, d, t) =>
       s""""$n":{"n_docs":$d,"n_tokens":$t}""" } ++
       dReport.map { case (_, n, d, t) =>
         s""""delta_$n":{"n_docs":$d,"n_tokens":$t}""" }).mkString(",")
     val json =
-      f"""{"metric":"corpus_pipeline","value":$total%.3f,"delta_value":$dTotal%.3f,$chainJson,"remix_value":$remixTotal%.3f,"unit":"sec","sf":"$sfDir","stages":{$stageJson},"report":{$reportJson}}"""
+      s"""{"metric":"corpus_pipeline","value":${r3(total)},"delta_value":${r3(dTotal)},$chainJson,"remix_value":${r3(remixTotal)},"unit":"sec","sf":"$sfDir","stages":{$stageJson},"report":{$reportJson}}"""
     println(json)
-    Files.writeString(Paths.get(outFile), json + "\n")
+    Files.writeString(Bench.artifactPath(outFile), json + "\n")
     spark.stop()
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.Bench.r3
 import graft.analog.{OccurrenceAnalog => OA}
 import graft.tiles.{Projections, Pyramid}
 
@@ -71,8 +72,6 @@ object BenchPipeline {
     require(tileBarrier >= 1 && tileSource == 0,
       s"tile build must read the tile_input barrier only (barrier=$tileBarrier source=$tileSource)")
 
-    def r3(v: Double): String =
-      BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     val stageJson = stages.map { case (k, v) => s"\"$k\":${r3(v)}" }.mkString("{", ",", "}")
     val line =
       s"""{"metric":"pipeline_total","value":${r3(total)},"unit":"sec","sf":"$sfDir",""" +
@@ -82,10 +81,7 @@ object BenchPipeline {
         s""""scan_proof":{"threshold_agg":{"barrier_scans":$aggBarrier,"source_scans":$aggSource},""" +
         s""""tile_z0":{"barrier_scans":$tileBarrier,"source_scans":$tileSource}}}"""
     println(line)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_REPO", "/root/repo"), outFile),
-      line + "\n")
+    java.nio.file.Files.writeString(Bench.artifactPath(outFile), line + "\n")
     spark.stop()
   }
 }

@@ -51,8 +51,6 @@ object Similarity {
 
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
-  def sqlCosine(aE: String, bE: String): String =
-    s"(${sqlDot(aE, bE)} / (sqrt(${sqlDot(aE, aE)}) * sqrt(${sqlDot(bE, bE)})))"
 
   /** Vectors with their norm precomputed once (a narrow projection) — at
     * scale the join side then costs one dot product per pair instead of

@@ -1,10 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types._
 
 import graft.expr.IntMath
 
@@ -15,20 +14,21 @@ import graft.expr.IntMath
   * streaming transform has a batch twin with identical semantics: the batch
   * twin is what the DuckDB oracle checks (`sessionize_batch` in SparkEntry),
   * the streaming path is covered by MemoryStream specs.
+  *
+  * Finality, one rule for every watermark-gated stateful operator
+  * ([[sessionize]], [[stateIntervals]], [[gapfill]], [[cusum]], [[ewma]],
+  * [[interpolate]], [[seasonal]], [[funnel]]): Spark drops rows with
+  * `ts ≤ watermark` as late, and an item whose last millisecond is T — a
+  * session's last event + gap, the start of a run's successor, a period's
+  * last millisecond, a funnel event — is final once the watermark is
+  * strictly past T. Its group's event-time timer is armed at T (Spark fires
+  * a timer once the watermark is strictly past it), so a group wakes for
+  * the item even if it never sees another event. Emitted rows are thus
+  * immutable (append-mode safe) under any arrival order within the
+  * watermark. The object is `Serializable` because the update functions
+  * Spark ships to executors call its private helpers.
   */
-object EventStream {
-
-  val EventSchema: StructType = StructType(Seq(
-    StructField("ts", TimestampType, nullable = false),
-    StructField("user_id", LongType, nullable = false),
-    StructField("event_type", StringType, nullable = true),
-    StructField("value", DoubleType, nullable = true)))
-
-  /** File-stream source wiring (production: a landing directory of parquet
-    * drops; schema must be pinned for streams).
-    */
-  def fromParquetDir(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream.schema(EventSchema).parquet(dir)
+object EventStream extends Serializable {
 
   /** Watermarked hourly tumbling counts — streaming twin of the
     * `events_window_hourly` batch query. Late rows beyond the watermark are
@@ -97,6 +97,37 @@ object EventStream {
       .select(col("signup_id"), col("purchase_id"), col("p_ts"), col("value"))
   }
 
+  // ---- the finality rule, once -----------------------------------------
+
+  /** Epoch microseconds of an event time. */
+  private def micros(ts: java.sql.Timestamp): Long =
+    ts.getTime * 1000L + (ts.getNanos % 1000000) / 1000L
+
+  /** The millisecond that epoch microsecond `us` falls in. */
+  private def msOf(us: Long): Long = Math.floorDiv(us, 1000L)
+
+  /** Is an item whose last millisecond is `lastMs` final? */
+  private def isFinal(state: GroupState[_], lastMs: Long): Boolean =
+    state.getCurrentWatermarkMs > lastMs
+
+  /** Wakes the group once an item whose last millisecond is `lastMs` is
+    * final. Spark rejects a timeout below the current watermark or ≤ 0.
+    */
+  private def wakeWhenFinal(state: GroupState[_], lastMs: Long): Unit =
+    state.setTimeoutTimestamp(math.max(lastMs, math.max(state.getCurrentWatermarkMs, 1L)))
+
+  /** The wiring every watermark-gated operator shares: watermark on `ts`,
+    * one group per `key`, `update` called with the group's new events, or
+    * with none when its timer fires.
+    */
+  private def watermarked[E, K: Encoder, S: Encoder, O: Encoder](
+      events: Dataset[E], watermark: String)(key: E => K)(
+      update: (K, Iterator[E], GroupState[S]) => Iterator[O]): Dataset[O] =
+    events
+      .withWatermark("ts", watermark)
+      .groupByKey(key)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(update)
+
   // ---- sessionization --------------------------------------------------
 
   case class Ev(ts: java.sql.Timestamp, user_id: Long)
@@ -111,21 +142,23 @@ object EventStream {
   case class Session(user_id: Long, session_start_us: Long, session_end_us: Long, n_events: Long)
 
   /** Stateful streaming sessionization: events within `gapSec` of each other
-    * belong to one session per user. A session is emitted only once the
-    * watermark passes its last event + gap — before that, any in-watermark
-    * arrival may still extend/bridge it, so emission is watermark-gated (not
-    * gap-triggered as a naive single-acc design would). Semantics match
-    * [[sessionizeBatch]] for ANY arrival order within the watermark; state
-    * size is bounded by the watermark horizon / gap density.
+    * belong to one session per user. A session is emitted only once it is
+    * final, its last event + gap being its last millisecond — before that,
+    * any in-watermark arrival may still extend/bridge it, so emission is
+    * watermark-gated (not gap-triggered as a naive single-acc design would).
+    * Semantics match [[sessionizeBatch]] for ANY arrival order within the
+    * watermark; state size is bounded by the watermark horizon / gap
+    * density.
     */
   def sessionize(events: Dataset[Ev], gapSec: Long, watermark: String = "2 hours")
                 (implicit spark: SparkSession): Dataset[Session] = {
     import spark.implicits._
     val gapUs = gapSec * 1000000L
+    // a future event merges into a session only if it lands within the gap
+    def lastMs(a: SessionAcc) = msOf(a.lastUs + gapUs)
 
     def update(userId: Long, batch: Iterator[Ev], state: GroupState[SessionState]): Iterator[Session] = {
-      val incoming = batch.map(e => e.ts.getTime * 1000L +
-        (e.ts.getNanos % 1000000) / 1000L).map(t => SessionAcc(t, t, 1)).toSeq
+      val incoming = batch.map(e => micros(e.ts)).map(t => SessionAcc(t, t, 1)).toSeq
       val all = (state.getOption.map(_.accs).getOrElse(Seq.empty) ++ incoming)
         .sortBy(a => (a.startUs, a.lastUs))
       // merge-scan: fuse any accs within gap of each other (late events can
@@ -136,24 +169,16 @@ object EventStream {
           SessionAcc(cur.startUs, math.max(cur.lastUs, a.lastUs), cur.n + a.n) :: done
         case (acc, a) => a :: acc
       }.reverse
-      // a session is final iff no future event can touch it: every future
-      // accepted event has t >= watermark, and merge needs t <= last + gap
-      val wmUs = state.getCurrentWatermarkMs * 1000L
-      val (ripe, open) = merged.partition(_.lastUs + gapUs < wmUs)
+      val (ripe, open) = merged.partition(a => isFinal(state, lastMs(a)))
       if (open.isEmpty) state.remove()
       else {
         state.update(SessionState(open))
-        state.setTimeoutTimestamp(math.max(
-          open.map(_.lastUs).min / 1000L + gapSec * 1000L,
-          state.getCurrentWatermarkMs + 1))
+        wakeWhenFinal(state, open.map(lastMs).min)
       }
       ripe.iterator.map(a => Session(userId, a.startUs, a.lastUs, a.n))
     }
 
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(update)
+    watermarked(events, watermark)(_.user_id)(update)
   }
 
   // ---- state intervals (SCD2 runs) -------------------------------------
@@ -171,13 +196,12 @@ object EventStream {
     *
     * Finality is SUCCESSOR-gated, not gap-gated: a run's extent depends on
     * the next run's first event (a late arrival landing between two runs
-    * can extend, split, or bridge them), so run i is emitted only once the
-    * watermark strictly passes run i+1's start — after which every
-    * accepted future event has ts ≥ watermark > that boundary and can only
-    * land later. The LAST run can always be extended by a future
-    * same-state event, so it stays open until more data arrives (the
-    * stream-end sentinel pattern in the specs); state per user is bounded
-    * by the open-suffix length, same class as [[sessionize]]'s open set.
+    * can extend, split, or bridge them), so run i is emitted only once run
+    * i+1's start is final — after which every accepted future event lands
+    * later. The LAST run can always be extended by a future same-state
+    * event, so it stays open until more data arrives (the stream-end
+    * sentinel pattern in the specs); state per user is bounded by the
+    * open-suffix length, same class as [[sessionize]]'s open set.
     */
   def stateIntervals(events: Dataset[EvT], watermark: String = "2 hours")
                     (implicit spark: SparkSession): Dataset[IntervalRow] = {
@@ -185,8 +209,7 @@ object EventStream {
 
     def update(userId: Long, batch: Iterator[EvT],
                state: GroupState[IntervalState]): Iterator[IntervalRow] = {
-      val incoming = batch.map(e => (e.ts.getTime * 1000L +
-        (e.ts.getNanos % 1000000) / 1000L, e.event_id, e.event_type)).toSeq
+      val incoming = batch.map(e => (micros(e.ts), e.event_id, e.event_type)).toSeq
       val all = (state.getOption.map(_.evs).getOrElse(Seq.empty) ++ incoming)
         .sortBy(t => (t._1, t._2))
       // runs of consecutive identical event_type in (ts, event_id) order
@@ -195,30 +218,22 @@ object EventStream {
           acc.init :+ (acc.last :+ e)
         case (acc, e) => acc :+ Vector(e)
       }
-      val wmUs = state.getCurrentWatermarkMs * 1000L
-      val ripe = runs.zipWithIndex.takeWhile { case (_, i) =>
-        i + 1 < runs.size && wmUs > runs(i + 1).head._1
-      }.map(_._1)
+      def startMs(i: Int) = msOf(runs(i).head._1)
+      val nRipe = (1 until runs.size).takeWhile(i => isFinal(state, startMs(i))).size
+      val ripe = runs.take(nRipe)
       val remaining = all.drop(ripe.map(_.size).sum)
       if (remaining.isEmpty) state.remove()
       else {
         state.update(IntervalState(remaining))
-        // wake this user when the watermark crosses the next pending run
-        // boundary even if no further events of theirs arrive
-        if (runs.size > ripe.size + 1) {
-          val nextBoundaryMs = runs(ripe.size + 1).head._1 / 1000L
-          state.setTimeoutTimestamp(
-            math.max(nextBoundaryMs + 1, state.getCurrentWatermarkMs + 1))
-        }
+        // wake for the next pending run boundary even if no further events
+        // of this user arrive
+        if (runs.size > nRipe + 1) wakeWhenFinal(state, startMs(nRipe + 1))
       }
       ripe.iterator.map(r =>
         IntervalRow(userId, r.head._3, r.head._1, r.last._1, r.size))
     }
 
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(update)
+    watermarked(events, watermark)(_.user_id)(update)
   }
 
   // ---- online anomaly detection ----------------------------------------
@@ -274,14 +289,67 @@ object EventStream {
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(update)
   }
 
+  // ---- the period buffer: gapfill, cusum, ewma, interpolate, seasonal ---
+
+  private val HourSec = 3600L
+
+  /** An event's hour bucket: the epoch second its hour starts at. */
+  private def hourOf(ts: java.sql.Timestamp): Long =
+    Math.floorDiv(ts.getTime, 3600000L) * HourSec
+
+  /** A period operator's buffered input: summed weights per hour bucket
+    * for the hours whose period is not final yet, and the cursor — the
+    * start (epoch second) of the next period to finalize, `Long.MaxValue`
+    * while nothing was ever folded in. Pending size is bounded by the
+    * watermark horizon; gapfill's state is this buffer alone.
+    */
+  case class PeriodBuffer(next: Long, pending: Map[Long, Long])
+  private val NoPeriods = PeriodBuffer(Long.MaxValue, Map.empty)
+
+  /** One call of a period operator: folds `hours` ((hour bucket, weight)
+    * pairs) into `buf`, hands the periods of `periodSec` seconds that are
+    * now final — oldest first, each with its hour sums — to `advance`
+    * along with the buffer left pending, saves the state `advance` returns
+    * and wakes the group for the cursor's period.
+    *
+    * `dense` walks every period from the group's first one on, silent ones
+    * included (with empty sums): the cursor never skips a period, so the
+    * timer fires through silence. Otherwise only observed periods are
+    * handed over, the cursor is the first pending one, and a group with
+    * nothing pending gets no wake-ups.
+    */
+  private def periodStep[S, O](state: GroupState[S], buf: PeriodBuffer,
+      hours: Iterator[(Long, Long)], periodSec: Long, dense: Boolean)(
+      advance: (Vector[(Long, Map[Long, Long])], PeriodBuffer) => (S, Seq[O])): Iterator[O] = {
+    def periodOf(h: Long) = Math.floorDiv(h, periodSec) * periodSec
+    def lastMs(p: Long) = (p + periodSec) * 1000L - 1L
+    val pending = hours.foldLeft(buf.pending) { case (m, (h, w)) =>
+      m.updated(h, m.getOrElse(h, 0L) + w)
+    }
+    val byPeriod = pending.groupBy { case (h, _) => periodOf(h) }
+    val start = (byPeriod.keys ++ Iterator(buf.next)).min
+    // a timer fired before anything was folded in: nothing to emit or keep
+    if (start == Long.MaxValue) Iterator.empty
+    else {
+      val periods =
+        if (dense) Iterator.iterate(start)(_ + periodSec)
+        else byPeriod.keys.toVector.sorted.iterator
+      val ripe = periods.takeWhile(p => isFinal(state, lastMs(p)))
+        .map(p => p -> byPeriod.getOrElse(p, Map.empty[Long, Long])).toVector
+      val cursor = if (ripe.isEmpty) start else ripe.last._1 + periodSec
+      val rest = pending.filter { case (h, _) => periodOf(h) >= cursor }
+      val next =
+        if (dense) cursor else rest.keys.map(periodOf).minOption.getOrElse(Long.MaxValue)
+      if (next != Long.MaxValue) wakeWhenFinal(state, lastMs(next))
+      val (st, out) = advance(ripe, PeriodBuffer(next, rest))
+      state.update(st)
+      out.iterator
+    }
+  }
+
   // ---- dense hourly gap-fill -------------------------------------------
 
   case class EvG(ts: java.sql.Timestamp, event_type: String)
-  /** Per-type fill cursor: the next hour to emit and the counts of hours
-    * not yet finalized by the watermark. Pending size is bounded by the
-    * watermark horizon in hours — the cursor itself never grows.
-    */
-  case class GapState(nextHour: Long, pending: Map[Long, Long])
   case class HourCount(event_type: String, hour_epoch: Long, n: Long)
 
   /** Streaming twin of the `events_gapfill` batch key: per event_type,
@@ -290,14 +358,14 @@ object EventStream {
     * rows are what makes this stateful rather than a windowed aggregate:
     * a groupBy(window) can only emit where data exists, so silence is
     * invisible to it. Here each type's state carries an hour cursor, and
-    * an event-time TIMER re-fires the group whenever the watermark
-    * crosses the next hour boundary — the timer path (empty batch
-    * iterator) is the zero-row emitter.
+    * an event-time TIMER re-fires the group whenever the cursor's hour
+    * becomes final — the timer path (empty batch iterator) is the
+    * zero-row emitter.
     *
-    * Hour H is final once the watermark reaches H+3600: every accepted
-    * future event has ts ≥ watermark, so none can land inside H. Emitted
-    * hours are therefore immutable (append-mode safe), and a late
-    * in-watermark arrival still lands in a pending hour and counts.
+    * An hour is final once the watermark is past its last millisecond:
+    * every accepted future event lands later. Emitted hours are therefore
+    * immutable (append-mode safe), and a late in-watermark arrival still
+    * lands in a pending hour and counts.
     *
     * Axis semantics vs the batch twin: the batch key zero-fills every
     * type over the GLOBAL hour span; a stream cannot know the global
@@ -310,59 +378,26 @@ object EventStream {
     import spark.implicits._
 
     def update(tpe: String, batch: Iterator[EvG],
-               state: GroupState[GapState]): Iterator[HourCount] = {
-      val incoming = batch
-        .map(e => Math.floorDiv(e.ts.getTime, 3600000L) * 3600L).toSeq
-      val st0 = state.getOption.getOrElse(
-        GapState(if (incoming.isEmpty) Long.MaxValue else incoming.min, Map.empty))
-      // a timer can in principle fire before any event was ever folded in;
-      // with no axis origin there is nothing to emit
-      val start = math.min(st0.nextHour,
-        if (incoming.isEmpty) Long.MaxValue else incoming.min)
-      if (start == Long.MaxValue) {
-        state.remove() // timer fired with no axis origin: nothing to emit
-        Iterator.empty
-      } else {
-        val pending = incoming.foldLeft(st0.pending) { (m, h) =>
-          m.updated(h, m.getOrElse(h, 0L) + 1L)
-        }
-        val wmSec = state.getCurrentWatermarkMs / 1000L
-        val ripe = Iterator.iterate(start)(_ + 3600L)
-          .takeWhile(h => h + 3600L <= wmSec)
-          .map(h => HourCount(tpe, h, pending.getOrElse(h, 0L)))
-          .toVector
-        val nextH = if (ripe.isEmpty) start else ripe.last.hour_epoch + 3600L
-        state.update(GapState(nextH, pending.filter(_._1 >= nextH)))
-        // wake this type when the watermark crosses its next hour boundary
-        // even if it never produces another event — THIS emits the zeros.
-        // −1 ms: timers fire only when timeout < watermark (STRICT), while
-        // ripeness above is wmSec >= H+3600 (inclusive) — a watermark
-        // landing exactly on the boundary (whole-hour event + whole-hour
-        // delay) must still fire the timer or the zero row is withheld
-        state.setTimeoutTimestamp(math.max((nextH + 3600L) * 1000L - 1L,
-          state.getCurrentWatermarkMs + 1))
-        ripe.iterator
+               state: GroupState[PeriodBuffer]): Iterator[HourCount] =
+      periodStep(state, state.getOption.getOrElse(NoPeriods),
+          batch.map(e => hourOf(e.ts) -> 1L), HourSec, dense = true) { (ripe, buf) =>
+        (buf, ripe.map { case (h, sums) => HourCount(tpe, h, sums.values.sum) })
       }
-    }
 
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(update)
+    watermarked(events, watermark)(_.event_type)(update)
   }
 
   // ---- streaming integer Holt smoothing --------------------------------
 
   /** Per-type EWMA model state: the (level, trend) pair in exact ppm
-    * BIGINTs, pending not-yet-final hour counts (bounded by the watermark
-    * horizon in hours), and the fold cursor for idempotence.
+    * BIGINTs, the number of hours folded (0 = not seeded yet), and the
+    * not-yet-final hours.
     */
-  case class EwmaState(pending: Map[Long, Long], level: Long, trend: Long,
-                       seeded: Boolean, nHours: Long)
+  case class EwmaState(buf: PeriodBuffer, level: Long, trend: Long, nHours: Long)
   case class EwmaPoint(event_type: String, hour_epoch: Long, n_hours: Long,
                        level_ppm: Long, trend_ppm: Long, forecast_ppm: Long)
 
-  case class CusumState(pending: Map[Long, Long], s: Long, mx: Long, na: Long)
+  case class CusumState(buf: PeriodBuffer, s: Long, mx: Long, na: Long)
   case class CusumPoint(event_type: String, hour_epoch: Long, s_milli: Long,
                         mx_milli: Long, n_alarms: Long, alarm: Boolean)
 
@@ -376,10 +411,9 @@ object EventStream {
     * reference. Types ABSENT from the reference are not monitored: their
     * events are consumed without state or emission (a μ = 0 default would
     * alarm on every observed hour of any type the trainer never saw — a
-    * permanent alarm flood, not a signal). Hour-finality argument
-    * identical to [[ewma]]; last point per type equals the batch fold
-    * over the same finalized prefix with the same μ (pinned in
-    * StreamingSpec).
+    * permanent alarm flood, not a signal). Hour finality as in [[ewma]];
+    * last point per type equals the batch fold over the same finalized
+    * prefix with the same μ (pinned in StreamingSpec).
     */
   def cusum(events: Dataset[EvG], refMilli: Map[String, Long],
             watermark: String = "2 hours")
@@ -389,50 +423,36 @@ object EventStream {
     def update(tpe: String, batch: Iterator[EvG],
                state: GroupState[CusumState]): Iterator[CusumPoint] = {
       if (!refMilli.contains(tpe)) return Iterator.empty // unmonitored type
-      val st0 = state.getOption.getOrElse(CusumState(Map.empty, 0L, 0L, 0L))
-      val pending = batch.foldLeft(st0.pending) { (m, e) =>
-        val h = Math.floorDiv(e.ts.getTime, 3600000L) * 3600L
-        m.updated(h, m.getOrElse(h, 0L) + 1L)
-      }
-      val wmSec = state.getCurrentWatermarkMs / 1000L
-      val (ripe, rest) = pending.partition { case (h, _) => h + 3600L <= wmSec }
       val mu = refMilli(tpe)
-      var (s, mx, na) = (st0.s, st0.mx, st0.na)
-      val out = Vector.newBuilder[CusumPoint]
-      ripe.toVector.sortBy(_._1).foreach { case (h, cnt) =>
-        s = math.max(0L, s + cnt * 1000L - mu - mu / 10L)
-        mx = math.max(mx, s)
-        val alarm = s > mu * 5L
-        if (alarm) na += 1
-        out += CusumPoint(tpe, h, s, mx, na, alarm)
+      val st0 = state.getOption.getOrElse(CusumState(NoPeriods, 0L, 0L, 0L))
+      periodStep(state, st0.buf, batch.map(e => hourOf(e.ts) -> 1L), HourSec,
+          dense = false) { (ripe, buf) =>
+        var (s, mx, na) = (st0.s, st0.mx, st0.na)
+        val out = ripe.map { case (h, sums) =>
+          s = math.max(0L, s + sums.values.sum * 1000L - mu - mu / 10L)
+          mx = math.max(mx, s)
+          val alarm = s > mu * 5L
+          if (alarm) na += 1
+          CusumPoint(tpe, h, s, mx, na, alarm)
+        }
+        (CusumState(buf, s, mx, na), out)
       }
-      state.update(CusumState(rest, s, mx, na))
-      if (rest.nonEmpty)
-        state.setTimeoutTimestamp(math.max((rest.keys.min + 3600L) * 1000L - 1L,
-          state.getCurrentWatermarkMs + 1))
-      out.result().iterator
     }
 
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(update)
+    watermarked(events, watermark)(_.event_type)(update)
   }
 
   /** Streaming twin of the `events_ewma` batch key: per event_type, the
     * integer Holt recurrence (α = β = ½, exact BIGINT truncating division
     * — the JVM's `/` on longs, identical to Spark SQL `div` and DuckDB
-    * `//`) folded over finalized OBSERVED hours in hour order. Hour H is
-    * final once the watermark reaches H+3600 (any later in-watermark
-    * arrival for H would be late beyond the watermark and is dropped
-    * upstream by Spark, so a folded hour can never receive more data —
-    * the same finality argument as gapfill, minus the zero rows: the
-    * batch key folds only observed hours, so silent hours advance
-    * nothing here either). Each finalized hour emits one trajectory
-    * point; the LAST point per type equals the batch key run over the
-    * same finalized prefix (pinned in StreamingSpec). An event-time
-    * TIMER finalizes buffered hours through silence, the gapfill −1 ms
-    * boundary rule.
+    * `//`) folded over finalized OBSERVED hours in hour order. A folded
+    * hour is final, so it can never receive more data (a later arrival for
+    * it is late and dropped upstream by Spark) — the same finality as
+    * gapfill, minus the zero rows: the batch key folds only observed
+    * hours, so silent hours advance nothing here either. Each finalized
+    * hour emits one trajectory point; the LAST point per type equals the
+    * batch key run over the same finalized prefix (pinned in
+    * StreamingSpec).
     */
   def ewma(events: Dataset[EvG], watermark: String = "2 hours")
           (implicit spark: SparkSession): Dataset[EwmaPoint] = {
@@ -440,48 +460,37 @@ object EventStream {
 
     def update(tpe: String, batch: Iterator[EvG],
                state: GroupState[EwmaState]): Iterator[EwmaPoint] = {
-      val st0 = state.getOption.getOrElse(EwmaState(Map.empty, 0L, 0L, false, 0L))
-      val pending = batch.foldLeft(st0.pending) { (m, e) =>
-        val h = Math.floorDiv(e.ts.getTime, 3600000L) * 3600L
-        m.updated(h, m.getOrElse(h, 0L) + 1L)
-      }
-      val wmSec = state.getCurrentWatermarkMs / 1000L
-      val (ripe, rest) = pending.partition { case (h, _) => h + 3600L <= wmSec }
-      var (level, trend, seeded, n) = (st0.level, st0.trend, st0.seeded, st0.nHours)
-      val out = Vector.newBuilder[EwmaPoint]
-      ripe.toVector.sortBy(_._1).foreach { case (h, cnt) =>
-        val v = cnt * 1000000L
-        if (!seeded) { level = v; trend = 0L; seeded = true }
-        else {
-          val nl = (level + v) / 2
-          trend = (trend + (nl - level)) / 2
-          level = nl
+      val st0 = state.getOption.getOrElse(EwmaState(NoPeriods, 0L, 0L, 0L))
+      periodStep(state, st0.buf, batch.map(e => hourOf(e.ts) -> 1L), HourSec,
+          dense = false) { (ripe, buf) =>
+        var (level, trend, n) = (st0.level, st0.trend, st0.nHours)
+        val out = ripe.map { case (h, sums) =>
+          val v = sums.values.sum * 1000000L
+          if (n == 0) { level = v; trend = 0L }
+          else {
+            val nl = (level + v) / 2
+            trend = (trend + (nl - level)) / 2
+            level = nl
+          }
+          n += 1
+          EwmaPoint(tpe, h, n, level, trend, level + trend)
         }
-        n += 1
-        out += EwmaPoint(tpe, h, n, level, trend, level + trend)
+        (EwmaState(buf, level, trend, n), out)
       }
-      state.update(EwmaState(rest, level, trend, seeded, n))
-      if (rest.nonEmpty)
-        state.setTimeoutTimestamp(math.max((rest.keys.min + 3600L) * 1000L - 1L,
-          state.getCurrentWatermarkMs + 1))
-      out.result().iterator
     }
 
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(update)
+    watermarked(events, watermark)(_.event_type)(update)
   }
 
   // ---- hourly value interpolation --------------------------------------
 
   case class EvI(ts: java.sql.Timestamp, event_type: String, value: Double)
-  /** Per-type interpolation cursor: next hour to finalize, pending
-    * hour→cents sums, the last FINALIZED observed point, and finalized
-    * silent hours buffered until their right endpoint arrives.
+  /** Per-type interpolation state: the hour→cents buffer, the last
+    * FINALIZED observed point, and finalized silent hours buffered until
+    * their right endpoint arrives.
     */
-  case class InterpState(nextHour: Long, pending: Map[Long, Long],
-                         lastObs: Option[(Long, Long)], buffered: Vector[Long])
+  case class InterpState(buf: PeriodBuffer, lastObs: Option[(Long, Long)],
+                         buffered: Vector[Long])
   case class HourValue(event_type: String, hour_epoch: Long,
                        cents: Option[Long], src: String)
 
@@ -492,14 +501,14 @@ object EventStream {
     * are replayable bit for bit.
     *
     * Two-stage finality, one stage more than [[gapfill]]: an hour's OWN
-    * count finalizes when the watermark passes hour+3600 (gapfill's rule),
-    * but a SILENT hour's value additionally needs its right endpoint — the
-    * next observed hour — to have finalized, so silent hours buffer in
-    * state until the next observation's hour is ripe, then the whole gap
-    * emits in one burst. Observed hours emit at watermark finality
-    * directly. Buffered-gap state is bounded by the type's longest silence
-    * inside the stream (an interpolation cannot do better: the value IS a
-    * function of the gap's right endpoint).
+    * sum finalizes with the hour, but a SILENT hour's value additionally
+    * needs its right endpoint — the next observed hour — to have
+    * finalized, so silent hours buffer in state until the next
+    * observation's hour is final, then the whole gap emits in one burst.
+    * Observed hours emit at finality directly. Buffered-gap state is
+    * bounded by the type's longest silence inside the stream (an
+    * interpolation cannot do better: the value IS a function of the gap's
+    * right endpoint).
     *
     * Axis semantics vs the batch twin: the batch key grids every type over
     * the GLOBAL hour span and marks rows outside a type's observed span
@@ -525,29 +534,14 @@ object EventStream {
 
     def update(tpe: String, batch: Iterator[EvI],
                state: GroupState[InterpState]): Iterator[HourValue] = {
-      val incoming = batch
-        .map(e => (Math.floorDiv(e.ts.getTime, 3600000L) * 3600L, centsOf(e.value)))
-        .toSeq
-      val st0 = state.getOption.getOrElse(InterpState(
-        if (incoming.isEmpty) Long.MaxValue else incoming.map(_._1).min,
-        Map.empty, None, Vector.empty))
-      val start = math.min(st0.nextHour,
-        if (incoming.isEmpty) Long.MaxValue else incoming.map(_._1).min)
-      if (start == Long.MaxValue) {
-        state.remove() // timer fired with no axis origin: nothing to emit
-        Iterator.empty
-      } else {
-        val pending = incoming.foldLeft(st0.pending) { case (m, (h, c)) =>
-          m.updated(h, m.getOrElse(h, 0L) + c)
-        }
-        val wmSec = state.getCurrentWatermarkMs / 1000L
-        val ripe = Iterator.iterate(start)(_ + 3600L)
-          .takeWhile(h => h + 3600L <= wmSec).toVector
+      val st0 = state.getOption.getOrElse(InterpState(NoPeriods, None, Vector.empty))
+      periodStep(state, st0.buf, batch.map(e => hourOf(e.ts) -> centsOf(e.value)),
+          HourSec, dense = true) { (ripe, buf) =>
         val out = Vector.newBuilder[HourValue]
         var lastObs = st0.lastObs
         var buffered = st0.buffered
-        ripe.foreach { h =>
-          pending.get(h) match {
+        ripe.foreach { case (h, sums) =>
+          sums.get(h) match {
             case Some(c) =>
               lastObs.foreach { case (ph, pc) =>
                 buffered.foreach { bh =>
@@ -567,44 +561,34 @@ object EventStream {
               // batch-mirroring fallback rather than a silent drop
           }
         }
-        val nextH = if (ripe.isEmpty) start else ripe.last + 3600L
-        state.update(InterpState(nextH, pending.filter(_._1 >= nextH), lastObs, buffered))
-        // same −1 ms boundary-timer rule as gapfill: wake when the
-        // watermark crosses the next hour even with no further events
-        state.setTimeoutTimestamp(math.max((nextH + 3600L) * 1000L - 1L,
-          state.getCurrentWatermarkMs + 1))
-        out.result().iterator
+        (InterpState(buf, lastObs, buffered), out.result())
       }
     }
 
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(update)
+    watermarked(events, watermark)(_.event_type)(update)
   }
 
   // ---- online seasonal-naive residuals ----------------------------------
 
   case class EvS(ts: java.sql.Timestamp, event_type: String)
-  /** Per-type seasonal accumulator: next day to finalize, pending
-    * (day, hod)→count, cumulative per-hod train counts, and the number of
-    * OBSERVED train days folded so far. `cum` is at most 24 entries; the
-    * whole state is constant-size per type.
+  /** Per-type seasonal accumulator: the hour buffer of not-yet-final days,
+    * cumulative per-hod train counts, and the number of OBSERVED train
+    * days folded so far. `cum` is at most 24 entries; the whole state is
+    * constant-size per type.
     */
-  case class SeasonalState(nextDay: Long, pending: Map[(Long, Long), Long],
-                           cum: Map[Long, Long], trainDays: Long)
+  case class SeasonalState(buf: PeriodBuffer, cum: Map[Long, Long], trainDays: Long)
   case class SeasonalRow(event_type: String, day: Long, hod: Long,
                          base_cnt: Long, n_train_days: Long,
                          baseline_ppm: Long, actual_cnt: Long, resid_ppm: Long)
 
   /** Streaming twin of the `events_seasonal` batch key, run ONLINE: per
-    * event_type, when a day finalizes (watermark passes its end) emit that
-    * day's per-hour-of-day residuals against the seasonal-naive baseline
-    * accumulated from all PRIOR observed days — then fold the day into the
-    * baseline. The batch key scores only the corpus's last day; the stream
-    * scores every day as it completes, and its rows for a type's final
-    * observed day reproduce the per-type batch computation exactly
-    * (StreamingSpec pins it, random arrival orders included).
+    * event_type, when a day finalizes emit that day's per-hour-of-day
+    * residuals against the seasonal-naive baseline accumulated from all
+    * PRIOR observed days — then fold the day into the baseline. The batch
+    * key scores only the corpus's last day; the stream scores every day as
+    * it completes, and its rows for a type's final observed day reproduce
+    * the per-type batch computation exactly (StreamingSpec pins it, random
+    * arrival orders included).
     *
     * Semantics vs batch, made per-type: the batch key's train-day count is
     * the GLOBAL distinct observed days before the global max day; a
@@ -620,8 +604,8 @@ object EventStream {
     *
     * State per type is constant-size (24 cum cells + the pending horizon);
     * emission cadence is one burst of ≤24 rows per type-day — the same
-    * state class as [[anomalies]], with [[gapfill]]'s boundary timer (day
-    * granularity) firing silent-day rollovers.
+    * state class as [[anomalies]], with [[gapfill]]'s dense cursor at day
+    * granularity firing silent-day rollovers.
     */
   def seasonal(events: Dataset[EvS], watermark: String = "2 hours")
               (implicit spark: SparkSession): Dataset[SeasonalRow] = {
@@ -630,59 +614,36 @@ object EventStream {
 
     def update(tpe: String, batch: Iterator[EvS],
                state: GroupState[SeasonalState]): Iterator[SeasonalRow] = {
-      val incoming = batch.map { e =>
-        val sec = Math.floorDiv(e.ts.getTime, 1000L)
-        (Math.floorDiv(sec, DaySec), Math.floorDiv(sec, 3600L) % 24L)
-      }.toSeq
-      val st0 = state.getOption.getOrElse(SeasonalState(
-        if (incoming.isEmpty) Long.MaxValue else incoming.map(_._1).min,
-        Map.empty, Map.empty, 0L))
-      val start = math.min(st0.nextDay,
-        if (incoming.isEmpty) Long.MaxValue else incoming.map(_._1).min)
-      if (start == Long.MaxValue) {
-        state.remove()
-        Iterator.empty
-      } else {
-        val pending = incoming.foldLeft(st0.pending) { (m, k) =>
-          m.updated(k, m.getOrElse(k, 0L) + 1L)
-        }
-        val wmDay = Math.floorDiv(state.getCurrentWatermarkMs / 1000L, DaySec)
-        val out = Vector.newBuilder[SeasonalRow]
+      val st0 = state.getOption.getOrElse(SeasonalState(NoPeriods, Map.empty, 0L))
+      periodStep(state, st0.buf, batch.map(e => hourOf(e.ts) -> 1L), DaySec,
+          dense = true) { (ripe, buf) =>
         var cum = st0.cum
         var trainDays = st0.trainDays
-        var d = start
-        while (d < wmDay) { // day d is final once the watermark enters d+1
-          val dd = d
-          val dayCounts = pending.collect { case ((`dd`, hod), n) => hod -> n }
-          if (dayCounts.nonEmpty) { // observed day — score, then train on it
-            if (trainDays > 0) {
-              val hods = (cum.keySet ++ dayCounts.keySet).toSeq.sorted
-              hods.foreach { hod =>
-                val base = cum.getOrElse(hod, 0L)
-                val actual = dayCounts.getOrElse(hod, 0L)
-                val ppm = base * 1000000L / math.max(trainDays, 1L)
-                out += SeasonalRow(tpe, d, hod, base, trainDays, ppm,
-                  actual, actual * 1000000L - ppm)
-              }
+        val out = ripe.flatMap { case (dayStart, sums) =>
+          val dayCounts = sums.map { case (h, n) => h / HourSec % 24L -> n }
+          // an observed day is scored against the prior days, then trained on
+          val rows =
+            if (dayCounts.isEmpty || trainDays == 0) Seq.empty
+            else (cum.keySet ++ dayCounts.keySet).toSeq.sorted.map { hod =>
+              val base = cum.getOrElse(hod, 0L)
+              val actual = dayCounts.getOrElse(hod, 0L)
+              val ppm = base * 1000000L / math.max(trainDays, 1L)
+              SeasonalRow(tpe, dayStart / DaySec, hod, base, trainDays, ppm,
+                actual, actual * 1000000L - ppm)
             }
+          if (dayCounts.nonEmpty) {
             cum = dayCounts.foldLeft(cum) { case (m, (hod, n)) =>
               m.updated(hod, m.getOrElse(hod, 0L) + n)
             }
             trainDays += 1
           }
-          d += 1 // next calendar day (day ids are floorDiv(sec, 86400) units)
+          rows
         }
-        state.update(SeasonalState(d, pending.filter(_._1._1 >= d), cum, trainDays))
-        state.setTimeoutTimestamp(math.max((d + 1) * DaySec * 1000L - 1L,
-          state.getCurrentWatermarkMs + 1))
-        out.result().iterator
+        (SeasonalState(buf, cum, trainDays), out)
       }
     }
 
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(update)
+    watermarked(events, watermark)(_.event_type)(update)
   }
 
   // ---- ordered conversion funnel ---------------------------------------
@@ -690,7 +651,7 @@ object EventStream {
   case class EvF(ts: java.sql.Timestamp, user_id: Long, event_type: String)
   /** Per-user funnel state: finalized stage times (index 0..3, None =
     * stage not reached on the finalized prefix) plus the not-yet-final
-    * (tsUs, stageIdx) events at or past the last watermark.
+    * (tsUs, stageIdx) events.
     */
   case class FunnelState(t: Seq[Option[Long]], pending: Seq[(Long, Int)])
   case class StageHit(user_id: Long, stage_idx: Int, stage: String, ts_us: Long)
@@ -704,15 +665,15 @@ object EventStream {
     * stage over the output reproduces the batch key's funnel counts.
     *
     * Finality is watermark-gated: an event folds into the chain only once
-    * the watermark strictly passes its timestamp — before that, a late
-    * arrival (still inside the watermark) could precede it and claim the
-    * stage, or rewrite an earlier stage time the chain condition depends
-    * on. The fold over the ripe prefix runs in (ts, stageIdx) order —
-    * the batch fold's exact tie-break — so any arrival order inside the
-    * watermark produces the batch answer. State per user is the 4 stage
-    * times plus the open suffix (bounded by the watermark horizon); a
-    * completed funnel shrinks to a 4-long tombstone so later events can
-    * never restart the chain and double-count the user.
+    * it is final — before that, a late arrival (still inside the
+    * watermark) could precede it and claim the stage, or rewrite an
+    * earlier stage time the chain condition depends on. The fold over the
+    * ripe prefix runs in (ts, stageIdx) order — the batch fold's exact
+    * tie-break — so any arrival order inside the watermark produces the
+    * batch answer. State per user is the 4 stage times plus the open
+    * suffix (bounded by the watermark horizon); a completed funnel shrinks
+    * to a 4-long tombstone so later events can never restart the chain
+    * and double-count the user.
     */
   def funnel(events: Dataset[EvF], watermark: String = "2 hours")
             (implicit spark: SparkSession): Dataset[StageHit] = {
@@ -722,16 +683,13 @@ object EventStream {
                state: GroupState[FunnelState]): Iterator[StageHit] = {
       val incoming = batch.flatMap { e =>
         val si = FunnelStages.indexOf(e.event_type)
-        if (si < 0) None
-        else Some((e.ts.getTime * 1000L + (e.ts.getNanos % 1000000) / 1000L, si))
+        if (si < 0) None else Some((micros(e.ts), si))
       }.toSeq
       val st = state.getOption.getOrElse(
         FunnelState(Seq.fill(FunnelStages.size)(None), Nil))
-      val wmUs = state.getCurrentWatermarkMs * 1000L
-      // accepted future events satisfy ts >= watermark, so ts < watermark
-      // is final; fold those in the batch key's (ts, stage) order
+      // fold the final events in the batch key's (ts, stage) order
       val (ripe, open) = (st.pending ++ incoming)
-        .sortBy(identity).partition(_._1 < wmUs)
+        .sortBy(identity).partition(e => isFinal(state, msOf(e._1)))
       val t = st.t.toArray
       val hits = scala.collection.mutable.ArrayBuffer.empty[StageHit]
       ripe.foreach { case (tsUs, si) =>
@@ -751,18 +709,14 @@ object EventStream {
         // cardinality, the same state class as `anomalies`' per-type rows.
         val keepOpen = if (t.last.isDefined) Nil else open
         state.update(FunnelState(t.toSeq, keepOpen))
-        // wake this user as the watermark advances so pending events
-        // finalize even if no further events of theirs arrive
-        if (keepOpen.nonEmpty)
-          state.setTimeoutTimestamp(state.getCurrentWatermarkMs + 1)
+        // wake for the earliest pending event even if no further events of
+        // this user arrive
+        keepOpen.headOption.foreach(e => wakeWhenFinal(state, msOf(e._1)))
       }
       hits.iterator
     }
 
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(update)
+    watermarked(events, watermark)(_.user_id)(update)
   }
 
   /** Batch twin of [[stateIntervals]] (identical intervals): lag-flag +

@@ -1225,4 +1225,197 @@ class StreamingSpec extends SparkSpec {
     assert(aa.map(p => (p._3, p._5, p._6)).toSeq == Seq(
       (1450L, 0L, false), (2900L, 1L, true), (16350L, 2L, true)))
   }
+
+  // ---- arrival-order properties of the observed-hour folds ---------------
+
+  /** Random in-watermark arrivals of `n` events over types a/b in a 6 h
+    * span, shuffled and cut into two or three micro-batches. */
+  private def shuffledHours(seed: Long, n: Int) = {
+    import graft.streaming.EventStream.EvG
+    val base = ts("2024-01-01 00:00:00").getTime
+    val evGen = for {
+      t <- org.scalacheck.Gen.oneOf("a", "b")
+      min <- org.scalacheck.Gen.choose(0, 360) // hours repeat: counts vary
+    } yield EvG(new Timestamp(base + min * 60000L), t)
+    val events = org.scalacheck.Gen.listOfN(n, evGen)
+      .apply(org.scalacheck.Gen.Parameters.default, org.scalacheck.rng.Seed(seed))
+      .getOrElse(sys.error("generator exhausted"))
+    val rnd = new scala.util.Random(seed * 7 + 1)
+    val arrival = rnd.shuffle(events)
+    // at least one cut inside: every trial spreads its hours over batches
+    val cuts = (Seq(0, arrival.size) ++
+      Seq.fill(1 + rnd.nextInt(2))(1 + rnd.nextInt(arrival.size - 1))).distinct.sorted
+    (events, cuts.zip(cuts.tail).map { case (a, b) => arrival.slice(a, b) })
+  }
+
+  /** Per-type observed hourly counts, oldest hour first. */
+  private def hourSeries(events: Seq[EventStream.EvG]): Map[String, Seq[(Long, Long)]] =
+    events.groupBy(_.event_type).view.mapValues { evs =>
+      evs.groupBy(e => Math.floorDiv(e.ts.getTime, 3600000L) * 3600L)
+        .view.mapValues(_.size.toLong).toSeq.sortBy(_._1)
+    }.toMap
+
+  /** Runs the batch key `key` over `events` written as an events table. */
+  private def batchKey(key: String, events: Seq[EventStream.EvG]) = {
+    val raw = events.zipWithIndex.map { case (e, i) =>
+      (i.toLong, i.toLong, e.event_type, e.ts.getTime * 1000000L, 1.0)
+    }.toDF("event_id", "user_id", "event_type", "ts", "value")
+    val dir = java.nio.file.Files.createTempDirectory(key).toString
+    raw.write.mode("overwrite").parquet(s"$dir/events.parquet")
+    SparkEntry.queries(key)(spark, dir).collect()
+  }
+
+  test("property: streaming ewma == in-order Holt fold under random arrival permutations") {
+    implicit val s = spark
+    implicit val sql = spark.sqlContext
+    import graft.streaming.EventStream.EvG
+    for (trial <- 0 until 3) {
+      val (events, batches) = shuffledHours(5300L + trial, 30)
+      val in = MemoryStream[EvG]
+      val name = s"ewma_prop_$trial"
+      // watermark wider than the span: no arrival is ever late-dropped
+      val q = EventStream.ewma(in.toDS(), watermark = "1 day")
+        .writeStream.format("memory").queryName(name).outputMode("append").start()
+      try {
+        batches.foreach { b => in.addData(b: _*); q.processAllAvailable() }
+        in.addData(EvG(ts("2024-01-03 00:00:00"), "zz")); q.processAllAvailable()
+        in.addData(EvG(ts("2024-01-03 06:00:00"), "zz")); q.processAllAvailable()
+        val streamed = spark.table(name).filter(col("event_type") =!= "zz")
+          .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+            r.getLong(3), r.getLong(4), r.getLong(5))).toSet
+        // truth: per type, the Holt fold over observed hours in hour order
+        val expected = hourSeries(events).toSeq.flatMap { case (t, series) =>
+          var (level, trend) = (0L, 0L)
+          series.zipWithIndex.map { case ((h, c), i) =>
+            val v = c * 1000000L
+            if (i == 0) { level = v; trend = 0L }
+            else { val nl = (level + v) / 2; trend = (trend + (nl - level)) / 2; level = nl }
+            (t, h, i + 1L, level, trend, level + trend)
+          }
+        }.toSet
+        assert(streamed == expected,
+          s"trial $trial (batch sizes ${batches.map(_.size)}): " +
+            s"missing=${(expected -- streamed).take(5)} extra=${(streamed -- expected).take(5)}")
+        val batch = batchKey("events_ewma", events)
+          .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
+            r.getLong(4))).toSet
+        val streamedLast = streamed.groupBy(_._1).values.map(_.maxBy(_._2))
+          .map(p => (p._1, p._3, p._4, p._5, p._6)).toSet
+        assert(streamedLast == batch, s"trial $trial: streamed $streamedLast != batch $batch")
+      } finally q.stop()
+    }
+  }
+
+  test("property: streaming cusum == in-order fold under random arrival permutations") {
+    implicit val s = spark
+    implicit val sql = spark.sqlContext
+    import graft.streaming.EventStream.EvG
+    for (trial <- 0 until 3) {
+      val (events, batches) = shuffledHours(6100L + trial, 30)
+      // the batch key's own reference μ per type, frozen for the stream
+      val batch = batchKey("events_cusum", events)
+      val mu = batch.map(r => r.getString(0) -> r.getLong(2)).toMap
+      val in = MemoryStream[EvG]
+      val name = s"cusum_prop_$trial"
+      val q = EventStream.cusum(in.toDS(), mu, watermark = "1 day")
+        .writeStream.format("memory").queryName(name).outputMode("append").start()
+      try {
+        batches.foreach { b => in.addData(b: _*); q.processAllAvailable() }
+        in.addData(EvG(ts("2024-01-03 00:00:00"), "zz")); q.processAllAvailable()
+        in.addData(EvG(ts("2024-01-03 06:00:00"), "zz")); q.processAllAvailable()
+        val streamed = spark.table(name)
+          .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+            r.getLong(3), r.getLong(4), r.getBoolean(5))).toSet
+        // truth: per type, the CUSUM recurrence over observed hours in order
+        val expected = hourSeries(events).toSeq.flatMap { case (t, series) =>
+          val m = mu(t)
+          var (sc, mx, na) = (0L, 0L, 0L)
+          series.map { case (h, c) =>
+            sc = math.max(0L, sc + c * 1000L - m - m / 10L)
+            mx = math.max(mx, sc)
+            if (sc > m * 5L) na += 1
+            (t, h, sc, mx, na, sc > m * 5L)
+          }
+        }.toSet
+        assert(streamed == expected,
+          s"trial $trial (batch sizes ${batches.map(_.size)}): " +
+            s"missing=${(expected -- streamed).take(5)} extra=${(streamed -- expected).take(5)}")
+        val streamedLast = streamed.groupBy(_._1).values.map(_.maxBy(_._2))
+          .map(p => (p._1, p._3, p._4, p._5)).toSet
+        assert(streamedLast == batch.map(r =>
+          (r.getString(0), r.getLong(3), r.getLong(4), r.getLong(5))).toSet,
+          s"trial $trial: streamed last points $streamedLast")
+      } finally q.stop()
+    }
+  }
+
+  // ---- watermark-boundary finality ---------------------------------------
+  // Watermark "0 seconds": each batch's max ts becomes the watermark the
+  // next batch runs under, so a fixture lands it on an exact millisecond.
+  // Rows with ts <= watermark are dropped as late, so each step is a row
+  // just past the previous watermark.
+
+  test("streaming gapfill: a watermark landing on the hour's end emits the finished hour") {
+    implicit val s = spark
+    implicit val sql = spark.sqlContext
+    import graft.streaming.EventStream.EvG
+    val in = MemoryStream[EvG]
+    val q = EventStream.gapfill(in.toDS(), watermark = "0 seconds")
+      .writeStream.format("memory").queryName("gapfill_edge")
+      .outputMode("append").start()
+    try {
+      for (t <- Seq("2024-01-01 10:10:00", "2024-01-01 10:59:59.999",
+                    "2024-01-01 11:00:00.000")) {
+        in.addData(EvG(ts(t), "A")); q.processAllAvailable()
+      }
+      // the watermark is now 11:00:00.000, strictly past hour 10's last ms
+      val rows = spark.table("gapfill_edge")
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+      assert(rows == Set(("A", ts("2024-01-01 10:00:00").getTime / 1000L, 2L)), s"$rows")
+    } finally q.stop()
+  }
+
+  test("streaming state intervals: a watermark 1 ms past the next run's start emits the run") {
+    implicit val s = spark
+    implicit val sql = spark.sqlContext
+    import EventStream.EvT
+    val in = MemoryStream[EvT]
+    val q = EventStream.stateIntervals(in.toDS(), watermark = "0 seconds")
+      .writeStream.format("memory").queryName("intervals_edge")
+      .outputMode("append").start()
+    try {
+      in.addData(EvT(ts("2024-01-01 10:00:00"), 1L, 1L, "X"),
+        EvT(ts("2024-01-01 10:00:01"), 1L, 2L, "Y"))
+      q.processAllAvailable()
+      in.addData(EvT(ts("2024-01-01 10:00:01.001"), 2L, 3L, "Z"))
+      q.processAllAvailable()
+      // the watermark is now 10:00:01.001, strictly past Y's start
+      val got = spark.table("intervals_edge")
+        .select("user_id", "event_type", "from_us", "to_us", "n_events")
+        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3),
+          r.getLong(4))).toSet
+      val x = ts("2024-01-01 10:00:00").getTime * 1000L
+      assert(got == Set((1L, "X", x, x, 1L)), s"$got")
+    } finally q.stop()
+  }
+
+  test("streaming sessionization: a watermark 1 ms past last event + gap emits the session") {
+    implicit val s = spark
+    implicit val sql = spark.sqlContext
+    val in = MemoryStream[Ev]
+    val q = EventStream.sessionize(in.toDS(), gapSec = 1800, watermark = "0 seconds")
+      .writeStream.format("memory").queryName("sessions_edge").outputMode("append").start()
+    try {
+      in.addData(Ev(ts("2024-01-01 10:00:00"), 1L), Ev(ts("2024-01-01 10:30:00"), 2L))
+      q.processAllAvailable()
+      in.addData(Ev(ts("2024-01-01 10:30:00.001"), 1L))
+      q.processAllAvailable()
+      // the watermark is now 10:30:00.001, strictly past 10:00:00 + 30 min
+      val got = spark.table("sessions_edge")
+        .select("user_id", "session_start_us", "session_end_us", "n_events")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+      val t0 = ts("2024-01-01 10:00:00").getTime * 1000L
+      assert(got == Set((1L, t0, t0, 1L)), s"$got")
+    } finally q.stop()
+  }
 }
