@@ -6,9 +6,12 @@ object Plans {
     // PLANS.md baseline; regenerating at a realistic width (e.g. 200) and
     // diffing the skeleton catches broadcast-vs-SMJ / AQE-coalesce choices
     // that flip with width (round-8 verdict task). args(0) overrides the
-    // output path so a width-sweep never clobbers the canonical audit.
+    // output path so a width-sweep never clobbers the canonical audit;
+    // without it the file lands where the bench mains write theirs
+    // (Bench.artifactPath: under SPARK_GRAFT_REPO, else the working
+    // directory), so a run from another checkout writes into that checkout.
     val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "4")
-    val outPath = if (args.length > 0) args(0) else "/root/repo/PLANS.md"
+    val outPath = if (args.length > 0) Paths.get(args(0)) else Bench.artifactPath("PLANS.md")
     val spark = GraftSession.local(4, shuffle.toInt)
     val d = "/root/testdata/sf0.01"
     val sb = new StringBuilder
@@ -94,7 +97,7 @@ object Plans {
         .foreach(l => sb.append(l.take(200)).append("\n"))
       sb.append("```\n\n")
     }
-    Files.writeString(Paths.get(outPath), sb.toString)
+    Files.writeString(outPath, sb.toString)
     println(s"[plans] written to $outPath (shuffle=$shuffle)")
     spark.stop()
   }

@@ -843,7 +843,7 @@ private[graft] object CorpusKeys {
         .orderBy("a", "b")
     },
       () =>
-        (s"WITH ${sqlVerifiedCte(3, 16, 4)},\n" +
+        (s"WITH ${sqlVerifiedCte},\n" +
           s"""sp AS (SELECT doc_id, ${sqlSplitOf("doc_id")} AS split
              |  FROM documents)
              |SELECT v.a, v.b, sa.split AS split_a, sb.split AS split_b,

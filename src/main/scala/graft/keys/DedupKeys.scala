@@ -11,27 +11,21 @@ import graft.llm.{Dedup, TextAnalysis => TA, Scrub}
   */
 private[graft] object DedupKeys {
   import KeySupport._
-
-  /** `dedup_bloom_gate` dimensions (shared with the oracle): K seeded hash
-    * functions into an M-bit filter. M is sized for the gate's CONTRACT to
-    * be visible at fixture scale (some false positives, zero false
-    * negatives); production sizes M from the corpus cardinality and target
-    * FPR — the structure stays a constant-size broadcast either way. */
-  private val BloomK = 4
-  private val BloomM = 4096L
+  import graft.streaming.DocStream.{BloomK, BloomM}
 
   /** `dedup_threshold_sweep` thresholds (shared with the oracle). */
   private val SweepThresholds = Seq(0.5, 0.6, 0.7, 0.8, 0.9)
 
-  /** `lsh_param_sweep` band/row grid over the 16-perm signature: every
-    * (bands, rows = 16/bands) factorization. `thrMicro` is the S-curve
-    * midpoint (1/b)^(1/r) in micro-units, computed HERE (driver-side
-    * double, floored) and baked as a literal into both the plan and the
-    * oracle SQL — one source of truth, no cross-engine pow() replay.
+  /** `lsh_param_sweep` band/row grid over the [[Dedup.NumPerms]]-perm
+    * signature: every (bands, rows = NumPerms/bands) factorization.
+    * `thrMicro` is the S-curve midpoint (1/b)^(1/r) in micro-units,
+    * computed HERE (driver-side double, floored) and baked as a literal
+    * into both the plan and the oracle SQL — one source of truth, no
+    * cross-engine pow() replay.
     */
   private val LshSweepConfigs: Seq[(Int, Int, Long)] =
     Seq(2, 4, 8, 16).map { b =>
-      val r = 16 / b
+      val r = Dedup.NumPerms / b
       (b, r, math.floor(math.pow(1.0 / b, 1.0 / r) * 1e6).toLong)
     }
 
@@ -47,8 +41,7 @@ private[graft] object DedupKeys {
     * verification over the union of candidate pairs. thr_micro values are
     * the SAME driver-computed literals the plan carries.
     */
-  private def sqlLshSweep(shingleSize: Int, numPerms: Int): String = {
-    import graft.llm.{Dedup, TextAnalysis => TA}
+  private def sqlLshSweep: String = {
     val toks = TA.sqlTokens("text")
     val perCfg = LshSweepConfigs.map { case (nb, rpb, _) =>
       s"""bd$nb AS (SELECT doc_id,
@@ -71,9 +64,9 @@ private[graft] object DedupKeys {
       s"($nb, $r, ${m}::BIGINT)" }.mkString(", ")
     s"""WITH t AS (SELECT doc_id, $toks AS toks FROM documents),
        |th AS (SELECT doc_id, ${Dedup.sqlTokenHashes("toks")} AS th FROM t),
-       |s AS (SELECT doc_id, ${Dedup.sqlHashedShingles("th", shingleSize)} AS sh FROM th),
+       |s AS (SELECT doc_id, ${Dedup.sqlHashedShingles("th", Dedup.ShingleSize)} AS sh FROM th),
        |nz AS (SELECT doc_id, sh FROM s WHERE len(sh) > 0),
-       |sg AS (SELECT doc_id, ${Dedup.sqlMinhashSignature("sh", numPerms)} AS sig FROM nz),
+       |sg AS (SELECT doc_id, ${Dedup.sqlMinhashSignature("sh", Dedup.NumPerms)} AS sig FROM nz),
        |k AS (SELECT doc_id, list_distinct(sh) AS sh FROM s),
        |$perCfg,
        |allc AS ($unionCand),
@@ -105,10 +98,8 @@ private[graft] object DedupKeys {
   /** Oracle twin of [[graft.llm.Dedup.incremental]]: batch docs (pred on
     * doc_id) probe the index on exact fingerprints and LSH bands.
     */
-  private def sqlIncremental(batchPred: String => String, shingleSize: Int,
-                             numPerms: Int, numBands: Int, thr: Double): String = {
-    import graft.llm.{Dedup, TextAnalysis => TA}
-    s"""WITH ${sqlLshBase(shingleSize, numPerms, numBands)},
+  private def sqlIncremental(batchPred: String => String, thr: Double): String =
+    s"""WITH ${sqlLshBase()},
        |fpx AS (SELECT DISTINCT ${Dedup.sqlFingerprint("text")} AS fp
        |  FROM documents WHERE NOT ${batchPred("doc_id")}),
        |bfp AS (SELECT doc_id, ${Dedup.sqlFingerprint("text")} AS fp
@@ -131,7 +122,6 @@ private[graft] object DedupKeys {
        |  (NOT e.is_exact AND coalesce(p.best_jac_r < $thr, TRUE)) AS keep
        |FROM ex e LEFT JOIN pick p ON e.doc_id = p.bid
        |ORDER BY doc_id""".stripMargin
-  }
 
   val keys: Seq[Key] = Seq(
     Key("dedup_exact", (s, d) =>
@@ -153,12 +143,12 @@ private[graft] object DedupKeys {
       () => graft.llm.Url.sqlDedupUrl),
 
     Key("dedup_minhash", (s, d) =>
-      Dedup.minhashCandidates(docs(s, d), shingleSize = 3, numPerms = 16, numBands = 4)
+      Dedup.minhashCandidates(docs(s, d))
         .orderBy("a", "b"),
       // shares sqlLshBase so the occupancy cap (and every future change to
       // the LSH chain) can never diverge from the other dedup oracles
       () =>
-        (s"WITH ${sqlLshBase(3, 16, 4)}\n" +
+        (s"WITH ${sqlLshBase()}\n" +
           """SELECT l.doc_id AS a, r.doc_id AS b, count(*) AS n_bands
             |FROM bb l JOIN bb r ON l.band = r.band AND l.bh = r.bh AND l.doc_id < r.doc_id
             |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
@@ -172,27 +162,27 @@ private[graft] object DedupKeys {
 
     // Exact n-gram jaccard over minhash-LSH candidates (round 2: replaces
     // prefix-blocking, whose boilerplate-prefix blocks go quadratic at
-    // corpus scale; ngramJaccard stays as a test-only shape in LlmSpec).
+    // corpus scale).
     Key("dedup_ngram_jaccard", (s, d) =>
-      Dedup.verifiedJaccard(docs(s, d), shingleSize = 3, numPerms = 16, numBands = 4)
+      Dedup.verifiedJaccard(docs(s, d))
         .select(col("a"), col("b"), round(col("jaccard"), 6).as("jac_r"))
         .filter(col("jac_r") >= 0.2)
         .orderBy("a", "b"),
       () =>
-        (s"WITH ${sqlVerifiedCte(3, 16, 4)}\n" +
+        (s"WITH ${sqlVerifiedCte}\n" +
           "SELECT a, b, jac_r FROM v WHERE jac_r >= 0.2 ORDER BY 1, 2")),
 
     // Full candidate-verification frame: every LSH candidate with its band
     // collision count, exact jaccard, and the keep/drop verdict — the audit
     // artifact of a dedup pipeline (false-positive candidates visible).
     Key("dedup_verified", (s, d) =>
-      Dedup.verifiedJaccard(docs(s, d), shingleSize = 3, numPerms = 16, numBands = 4)
+      Dedup.verifiedJaccard(docs(s, d))
         .select(col("a"), col("b"), col("n_bands"),
           round(col("jaccard"), 6).as("jac_r"),
           (round(col("jaccard"), 6) >= 0.5).as("is_dup"))
         .orderBy("a", "b"),
       () =>
-        (s"WITH ${sqlVerifiedCte(3, 16, 4)}\n" +
+        (s"WITH ${sqlVerifiedCte}\n" +
           "SELECT a, b, n_bands, jac_r, (jac_r >= 0.5) AS is_dup FROM v ORDER BY 1, 2")),
 
     // SoftDeDup frequency downweighting: keep every exact-dup copy but
@@ -222,7 +212,7 @@ private[graft] object DedupKeys {
       Dedup.clusters(verifiedPairs(s, d)).orderBy("doc_id")
     },
       () =>
-        (s"WITH RECURSIVE ${sqlVerifiedCte(3, 16, 4)},\n" +
+        (s"WITH RECURSIVE ${sqlVerifiedCte},\n" +
           """e AS (SELECT a, b FROM v WHERE jac_r >= 0.5
             |      UNION ALL SELECT b, a FROM v WHERE jac_r >= 0.5),
             |reach AS (
@@ -243,7 +233,7 @@ private[graft] object DedupKeys {
         .groupBy("sz").agg(count(lit(1)).as("n_clusters"))
         .orderBy("sz"),
       () =>
-        (s"WITH RECURSIVE ${sqlVerifiedCte(3, 16, 4)},\n" +
+        (s"WITH RECURSIVE ${sqlVerifiedCte},\n" +
           """e AS (SELECT a, b FROM v WHERE jac_r >= 0.5
             |      UNION ALL SELECT b, a FROM v WHERE jac_r >= 0.5),
             |reach AS (
@@ -272,7 +262,7 @@ private[graft] object DedupKeys {
         .orderBy("doc_id")
     },
       () =>
-        (s"WITH RECURSIVE ${sqlVerifiedCte(3, 16, 4)},\n" +
+        (s"WITH RECURSIVE ${sqlVerifiedCte},\n" +
           """e AS (SELECT a, b FROM v WHERE jac_r >= 0.5
             |      UNION ALL SELECT b, a FROM v WHERE jac_r >= 0.5),
             |reach AS (
@@ -308,7 +298,7 @@ private[graft] object DedupKeys {
         .orderBy("doc_id")
     },
       () =>
-        (s"WITH RECURSIVE ${sqlVerifiedCte(3, 16, 4)},\n" +
+        (s"WITH RECURSIVE ${sqlVerifiedCte},\n" +
           s"""e AS (SELECT a, b FROM v WHERE jac_r >= 0.5
             |      UNION ALL SELECT b, a FROM v WHERE jac_r >= 0.5),
             |reach AS (
@@ -351,11 +341,9 @@ private[graft] object DedupKeys {
     // EXISTING index on exact fingerprints + LSH bands — linear in the
     // batch, never re-clustering the corpus.
     Key("dedup_incremental", (s, d) =>
-      Dedup.incremental(docs(s, d), pmod(col("doc_id"), lit(10)) === 9,
-          shingleSize = 3, numPerms = 16, numBands = 4, threshold = 0.5)
+      Dedup.incremental(docs(s, d), pmod(col("doc_id"), lit(10)) === 9, threshold = 0.5)
         .orderBy("doc_id"),
-      () => sqlIncremental(e => s"(($e % 10) = 9)",
-        shingleSize = 3, numPerms = 16, numBands = 4, thr = 0.5)),
+      () => sqlIncremental(e => s"(($e % 10) = 9)", thr = 0.5)),
 
     // Bloom-filter admission gate: before the shuffle join that dedups a
     // NEW crawl batch against the corpus, probe a K-hash
@@ -433,15 +421,14 @@ private[graft] object DedupKeys {
     // normalized chars per doc; candidates still come from the banded
     // signatures, never a cross product.
     Key("dedup_editdistance", (s, d) =>
-      Dedup.editVerified(docs(s, d), shingleSize = 3, numPerms = 16, numBands = 4,
-          prefixChars = 256)
+      Dedup.editVerified(docs(s, d), prefixChars = 256)
         .select(col("a"), col("b"), col("n_bands"), col("edit_dist"),
           col("edit_sim_r"), (col("edit_sim_r") >= 0.8).as("is_dup"))
         .orderBy("a", "b"),
       () => {
         val dist = "levenshtein(l.nt, r.nt)"
         val sim = s"round(1.0 - $dist::DOUBLE / greatest(length(l.nt), length(r.nt), 1), 6)"
-        s"""WITH ${sqlLshBase(3, 16, 4)},
+        s"""WITH ${sqlLshBase()},
            |cand AS (SELECT l.doc_id AS a, r.doc_id AS b, count(*) AS n_bands
            |  FROM bb l JOIN bb r ON l.band = r.band AND l.bh = r.bh AND l.doc_id < r.doc_id
            |  GROUP BY 1, 2),
@@ -461,12 +448,10 @@ private[graft] object DedupKeys {
     // editdistance all miss. Integer-ppm ratios; same banded candidate
     // generation as dedup_verified, so no new quadratic surface.
     Key("dedup_containment", (s, d) =>
-      Dedup.containmentFrom(
-          Dedup.signatureIndex(docs(s, d), shingleSize = 3, numPerms = 16,
-            numBands = 4))
+      Dedup.containmentFrom(Dedup.signatureIndex(docs(s, d)))
         .orderBy("a", "b"),
       () =>
-        (s"WITH ${sqlLshBase(3, 16, 4)},\n" +
+        (s"WITH ${sqlLshBase()},\n" +
           """cand AS (SELECT l.doc_id AS a, r.doc_id AS b, count(*) AS n_bands
             |  FROM bb l JOIN bb r ON l.band = r.band AND l.bh = r.bh AND l.doc_id < r.doc_id
             |  GROUP BY 1, 2),
@@ -487,7 +472,7 @@ private[graft] object DedupKeys {
     // said"). One shingle explode + a shingle-keyed min-agg + one join
     // back; ppm in integer arithmetic.
     Key("corpus_novelty", (s, d) => {
-      val pairs = Dedup.shingleSets(docs(s, d), shingleSize = 3)
+      val pairs = Dedup.shingleSets(docs(s, d))
         .select(col("doc_id"), explode(col("sh")).as("g"))
         .localCheckpoint() // owner table + per-doc join read one tokenize pass
       val owner = pairs.groupBy("g").agg(min("doc_id").as("owner"))
@@ -499,11 +484,10 @@ private[graft] object DedupKeys {
         .orderBy("doc_id")
     },
       () => {
-        import graft.llm.{Dedup, TextAnalysis => TA}
         val toks = TA.sqlTokens("text")
         s"""WITH t AS (SELECT doc_id, $toks AS toks FROM documents),
            |th AS (SELECT doc_id, ${Dedup.sqlTokenHashes("toks")} AS th FROM t),
-           |s AS (SELECT doc_id, ${Dedup.sqlHashedShingles("th", 3)} AS sh FROM th),
+           |s AS (SELECT doc_id, ${Dedup.sqlHashedShingles("th", Dedup.ShingleSize)} AS sh FROM th),
            |p AS (SELECT doc_id, unnest(list_distinct(sh)) AS g FROM s),
            |ow AS (SELECT g, min(doc_id) AS owner FROM p GROUP BY 1)
            |SELECT p.doc_id, count(*) AS n_shingles,
@@ -554,9 +538,7 @@ private[graft] object DedupKeys {
     // pipeline runs BEFORE committing to a threshold.
     Key("dedup_threshold_sweep", (s, d) => {
       import s.implicits._
-      val ver = Dedup.verifiedJaccardFrom(
-          Dedup.signatureIndex(docs(s, d), shingleSize = 3, numPerms = 16,
-            numBands = 4))
+      val ver = Dedup.verifiedJaccardFrom(Dedup.signatureIndex(docs(s, d)))
         .select(col("a"), col("b"), round(col("jaccard"), 6).as("jac_r"))
         .localCheckpoint() // one LSH+verify pass feeds all thresholds
       SweepThresholds.toDF("thr")
@@ -567,7 +549,7 @@ private[graft] object DedupKeys {
         .orderBy("thr")
     },
       () =>
-        (s"WITH ${sqlVerifiedCte(3, 16, 4)},\n" +
+        (s"WITH ${sqlVerifiedCte},\n" +
           s"""thr AS (SELECT unnest([${SweepThresholds.mkString(", ")}]) AS thr)
              |SELECT thr.thr, count(v.a)::BIGINT AS n_pairs,
              |  count(DISTINCT v.b)::BIGINT AS n_docs_removed
@@ -575,11 +557,11 @@ private[graft] object DedupKeys {
              |GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // LSH parameterization sweep: every (bands, rows) factorization of the
-    // 16-perm signature, measured on the corpus — candidate volume, true
+    // NumPerms-perm signature, measured on the corpus — candidate volume, true
     // near-dups among candidates (jac >= 0.5, the dedup_verified contract),
     // precision, and recall vs the union of all configs' true pairs, plus
     // the analytic S-curve midpoint (1/b)^(1/r) per config. The signature
-    // is computed ONCE (it depends on numPerms only, Dedup.signatureFrame)
+    // is computed ONCE (it does not depend on the banding, Dedup.signatureFrame)
     // and each config re-bands it as a cheap projection — the production
     // retune shape: at 100 TB the sweep runs on a sample, the chosen
     // config on the corpus. Exact verification runs once over the UNION of
@@ -589,12 +571,12 @@ private[graft] object DedupKeys {
     Key("lsh_param_sweep", (s, d) => {
       import s.implicits._
       val th = Dedup.tokenHashFrame(docs(s, d)).localCheckpoint()
-      val sig = Dedup.signatureFrame(th, shingleSize = 3, numPerms = 16)
+      val sig = Dedup.signatureFrame(th)
         .localCheckpoint() // one signature pass feeds every banding config
       val sets = th.select(col("doc_id"),
-        array_distinct(Dedup.hashedShingles(col("th"), 3)).as("sh"))
+        array_distinct(Dedup.hashedShingles(col("th"), Dedup.ShingleSize)).as("sh"))
       val pairs = LshSweepConfigs.map { case (b, _, _) =>
-        Dedup.minhashCandidatesFrom(Dedup.bandsFromSignature(sig, 16, b))
+        Dedup.minhashCandidatesFrom(Dedup.bandsFromSignature(sig, b))
           .select(lit(b).as("n_bands"), col("a"), col("b"))
       }.reduce(_ unionByName _).localCheckpoint()
       val ver = pairs.select("a", "b").distinct()
@@ -624,7 +606,7 @@ private[graft] object DedupKeys {
             .otherwise(0L).as("recall_ppm"))
         .orderBy("n_bands")
     },
-      () => sqlLshSweep(shingleSize = 3, numPerms = 16)),
+      () => sqlLshSweep),
 
     // Span-level exact duplication: every w-token window fingerprint shared
     // by ≥2 documents, with doc frequency / occurrence count / keep
@@ -802,10 +784,9 @@ private[graft] object DedupKeys {
     Key("dedup_recall", (s, d) =>
       Dedup.recallAudit(
         docs(s, d).filter(col("doc_id") % recallModFor(s, d) === 0),
-        shingleSize = 3, numPerms = 16, numBands = 4,
         thrPpm = RecallJacPpm),
       () =>
-        (s"WITH ${sqlLshBase(3, 16, 4, pred = s"doc_id % $RecallSampleMod = 0")},\n" +
+        (s"WITH ${sqlLshBase(pred = s"doc_id % $RecallSampleMod = 0")},\n" +
           s"""kk AS (SELECT doc_id, sh FROM k WHERE len(sh) > 0),
              |ex AS (SELECT l.doc_id AS a, r.doc_id AS b,
              |    len(list_intersect(l.sh, r.sh))::BIGINT AS n_common,

@@ -124,7 +124,7 @@ private[graft] object KeySupport {
     * decision keys.
     */
   def verifiedPairs(s: SparkSession, d: String): DataFrame =
-    Dedup.verifiedJaccard(docs(s, d), shingleSize = 3, numPerms = 16, numBands = 4)
+    Dedup.verifiedJaccard(docs(s, d))
       .select(col("a"), col("b"), round(col("jaccard"), 6).as("jac_r"))
       .filter(col("jac_r") >= 0.5)
 
@@ -132,37 +132,37 @@ private[graft] object KeySupport {
   val ImportanceSeed = "importance-v1"
   val SamplePpmScale = 1000000L
 
+  /** Shared LSH CTE base (`t/th/s/nz/sg/bd/bb/k`): banded signatures + the
+    * distinct shingle sets, over the documents matching `pred`, in the
+    * one [[Dedup]] geometry.
+    */
+  def sqlLshBase(pred: String = "TRUE"): String = {
+    import Dedup.{NumBands, NumPerms, ShingleSize}
+    val toks = TA.sqlTokens("text")
+    val rpb = NumPerms / NumBands
+    s"""t AS (SELECT doc_id, $toks AS toks FROM documents WHERE $pred),
+       |th AS (SELECT doc_id, ${Dedup.sqlTokenHashes("toks")} AS th FROM t),
+       |s AS (SELECT doc_id, ${Dedup.sqlHashedShingles("th", ShingleSize)} AS sh FROM th),
+       |nz AS (SELECT doc_id, sh FROM s WHERE len(sh) > 0),
+       |sg AS (SELECT doc_id, ${Dedup.sqlMinhashSignature("sh", NumPerms)} AS sig FROM nz),
+       |bd AS (SELECT doc_id,
+       |  unnest([{'band': b, 'bh': ${graft.expr.PortableHash.sqlPhash(s"array_to_string((sig)[b * $rpb + 1 : b * $rpb + $rpb], ',')")}}
+       |          for b in range(0, $NumBands)]) AS t
+       |  FROM sg),
+       |bb0 AS (SELECT doc_id, t['band'] AS band, t['bh'] AS bh FROM bd),
+       |bb AS (SELECT doc_id, band, bh FROM (
+       |  SELECT *, count(*) OVER (PARTITION BY band, bh) AS occ FROM bb0)
+       |  WHERE occ <= ${Dedup.MaxBandBucket}),
+       |k AS (SELECT doc_id, list_distinct(sh) AS sh FROM s)""".stripMargin
+  }
+
   /** Oracle twin of [[graft.llm.Dedup.verifiedJaccard]]: CTE chain from
     * documents to `cand` (minhash-LSH candidate pairs a,b,n_bands) and `v`
     * (candidates + exact jaccard over distinct shingle sets). Emitted
     * WITHOUT the `WITH ` prefix so callers can prepend `WITH RECURSIVE`.
     */
-  /** Shared LSH CTE base (`t/th/s/nz/sg/bd/bb/k`): banded signatures + the
-    * distinct shingle sets, over ALL documents.
-    */
-  def sqlLshBase(shingleSize: Int, numPerms: Int, numBands: Int,
-                         pred: String = "TRUE"): String = {
-    import graft.llm.{Dedup, TextAnalysis => TA}
-    val toks = TA.sqlTokens("text")
-    val rpb = numPerms / numBands
-    s"""t AS (SELECT doc_id, $toks AS toks FROM documents WHERE $pred),
-       |th AS (SELECT doc_id, ${Dedup.sqlTokenHashes("toks")} AS th FROM t),
-       |s AS (SELECT doc_id, ${Dedup.sqlHashedShingles("th", shingleSize)} AS sh FROM th),
-       |nz AS (SELECT doc_id, sh FROM s WHERE len(sh) > 0),
-       |sg AS (SELECT doc_id, ${Dedup.sqlMinhashSignature("sh", numPerms)} AS sig FROM nz),
-       |bd AS (SELECT doc_id,
-       |  unnest([{'band': b, 'bh': ${graft.expr.PortableHash.sqlPhash(s"array_to_string((sig)[b * $rpb + 1 : b * $rpb + $rpb], ',')")}}
-       |          for b in range(0, $numBands)]) AS t
-       |  FROM sg),
-       |bb0 AS (SELECT doc_id, t['band'] AS band, t['bh'] AS bh FROM bd),
-       |bb AS (SELECT doc_id, band, bh FROM (
-       |  SELECT *, count(*) OVER (PARTITION BY band, bh) AS occ FROM bb0)
-       |  WHERE occ <= ${graft.llm.Dedup.MaxBandBucket}),
-       |k AS (SELECT doc_id, list_distinct(sh) AS sh FROM s)""".stripMargin
-  }
-
-  def sqlVerifiedCte(shingleSize: Int, numPerms: Int, numBands: Int): String =
-    s"""${sqlLshBase(shingleSize, numPerms, numBands)},
+  def sqlVerifiedCte: String =
+    s"""${sqlLshBase()},
        |cand AS (SELECT l.doc_id AS a, r.doc_id AS b, count(*) AS n_bands
        |  FROM bb l JOIN bb r ON l.band = r.band AND l.bh = r.bh AND l.doc_id < r.doc_id
        |  GROUP BY 1, 2),

@@ -44,12 +44,16 @@ import graft.expr.PortableHash
   */
 object CorpusPipeline {
 
+  /** Deployment settings of a pipeline run. The near-dup stage has no
+    * geometry setting: it runs in the one [[Dedup]] MinHash geometry
+    * ([[Dedup.ShingleSize]] / [[Dedup.NumPerms]] / [[Dedup.NumBands]]),
+    * the one every dedup key and its oracle use; `dupJaccard` is the
+    * verified-Jaccard threshold at which a candidate pair counts as a
+    * near-duplicate.
+    */
   case class Config(
       minQuality: Double = 0.4,
       maxTop2: Double = 0.6,
-      shingleSize: Int = 3,
-      numPerms: Int = 16,
-      numBands: Int = 4,
       dupJaccard: Double = 0.5,
       mixSeed: String = "mix-v1",
       seqLen: Int = 256,
@@ -213,8 +217,7 @@ object CorpusPipeline {
 
     // ---- stage 2: near-dup dedup -------------------------------------
     val deduped = timed(cfg, "neardup") {
-      val pairs = Dedup
-        .verifiedJaccard(clean, cfg.shingleSize, cfg.numPerms, cfg.numBands)
+      val pairs = Dedup.verifiedJaccard(clean)
         .filter(round(col("jaccard"), 6) >= cfg.dupJaccard)
         .select(col("a"), col("b"))
       // star-CC roots survive; every other cluster member is dropped, so
@@ -492,8 +495,7 @@ object CorpusPipeline {
     val deduped = timed(cfg, "neardup") {
       val combined = state.clean.select(col("doc_id"), col("text"))
         .unionByName(clean.select(col("doc_id"), col("text")))
-      val idx = Dedup.signatureIndex(combined,
-        cfg.shingleSize, cfg.numPerms, cfg.numBands)
+      val idx = Dedup.signatureIndex(combined)
       val capped = Dedup.cappedBuckets(idx.banded, Dedup.MaxBandBucket)
       val cand = capped.as("l").join(capped.as("r"),
           col("l.band") === col("r.band") && col("l.bh") === col("r.bh") &&

@@ -15,10 +15,18 @@ import graft.expr.PortableHash
   *     shuffle keyed by (band index, band hash); candidate pairs come from a
   *     self-equi-join on that key — never an all-pairs product. Band count ×
   *     rows-per-band trades recall vs. candidate volume.
-  *   - ngram-jaccard: verification of candidates from a cheap blocking key;
-  *     the exact set intersection runs only on the (tiny) candidate set.
+  *   - verification: exact shingle-set Jaccard (or containment, or edit
+  *     distance) runs only on the (tiny) candidate set.
   *   - embedding near-dup: same pattern with IVF-style cells (label column
   *     stands in for a precomputed coarse-quantizer assignment).
+  *
+  * One MinHash geometry, [[ShingleSize]] / [[NumPerms]] / [[NumBands]]:
+  * 3-token shingles, 16 permutations, 4 bands of 4 rows. Every operator
+  * here and every oracle emitter that replays one reads these constants,
+  * so a Spark builder and its DuckDB twin cannot disagree on it. 4 bands
+  * of 4 rows put the S-curve midpoint (1/b)^(1/r) at (1/4)^(1/4) ≈ 0.71;
+  * `lsh_param_sweep` is where other band counts over the same signature
+  * are evaluated ([[bandsFromSignature]] keeps its band count for it).
   */
 object Dedup {
 
@@ -32,7 +40,7 @@ object Dedup {
       .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_docs"))
 
   /** MinHash via universal hashing: ONE portable hash per shingle, then
-    * `numPerms` cheap modular permutations `(a_k·h + b_k) mod P` with
+    * [[NumPerms]] cheap modular permutations `(a_k·h + b_k) mod P` with
     * deterministic literal constants — the standard minhash construction,
     * and 16× fewer md5 evaluations than hashing per-permutation (the md5 is
     * the hot-path cost at scale: measured 59 s → ~5 s at sf0.1).
@@ -96,17 +104,6 @@ object Dedup {
       s"list_min([(($a * h + $b) % $MinhashPrime) for h in $hashesE])"
     }.mkString("[", ", ", "]")
 
-  /** Banded LSH signature rows `(doc_id, band, bh)` — the join-key stream
-    * shared by within-corpus candidate generation ([[minhashCandidates]])
-    * and batch-vs-index probing ([[incremental]]).
-    *
-    * Signature via explode + numPerms codegen'd min-aggregates, NOT per-row
-    * array lambdas: higher-order functions run interpreted (measured ~3 µs
-    * per element — 100+ s at sf0.1), while a hash aggregate over exploded
-    * shingle hashes is whole-stage codegen with map-side partial mins, so
-    * the doc_id shuffle carries only numPerms longs per document. This is
-    * also the 100 TB shape: min is algebraic, no skew (doc_id grouping).
-    */
   /** (doc_id, th) token-hash frame — the ONE tokenize→md5 pass every
     * signature-family frame derives from.
     */
@@ -124,14 +121,13 @@ object Dedup {
     * ACCESS (~3 full re-tokenizations per shingle; observed as a 100×+
     * single-task stall on the 10× replica).
     */
-  def bandedFromTokenHashes(
-      th: DataFrame, shingleSize: Int, numPerms: Int, numBands: Int): DataFrame =
-    bandsFromSignature(signatureFrame(th, shingleSize, numPerms), numPerms, numBands)
+  def bandedFromTokenHashes(th: DataFrame): DataFrame =
+    bandsFromSignature(signatureFrame(th), NumBands)
 
-  /** `(doc_id, sig_0..sig_{numPerms-1})` minhash signature frame from a
-    * (doc_id, th) token-hash frame — the explode + numPerms codegen'd
-    * min-aggregates pass. The signature depends only on `numPerms`, not on
-    * the banding, so a parameter sweep (`lsh_param_sweep`) or a production
+  /** `(doc_id, sig_0..sig_{NumPerms-1})` minhash signature frame from a
+    * (doc_id, th) token-hash frame — the explode + [[NumPerms]] codegen'd
+    * min-aggregates pass. The signature depends only on the permutations,
+    * not on the banding, so a parameter sweep (`lsh_param_sweep`) or a production
     * re-band computes it ONCE and derives every (bands, rows) config as a
     * cheap projection ([[bandsFromSignature]]); docs with no shingles
     * produce no row (explode of an empty array), matching the banded
@@ -140,21 +136,21 @@ object Dedup {
     * subtree into per-band consumers (the round-2 alias lesson holds by
     * construction).
     */
-  def signatureFrame(th: DataFrame, shingleSize: Int, numPerms: Int): DataFrame = {
-    val sigCols = permConstants(numPerms).zipWithIndex.map { case ((a, b), k) =>
+  def signatureFrame(th: DataFrame): DataFrame = {
+    val sigCols = permConstants(NumPerms).zipWithIndex.map { case ((a, b), k) =>
       min(pmod(lit(a) * col("h") + lit(b), lit(MinhashPrime))).as(s"sig_$k")
     }
-    th.select(col("doc_id"), explode(hashedShingles(col("th"), shingleSize)).as("h"))
+    th.select(col("doc_id"), explode(hashedShingles(col("th"), ShingleSize)).as("h"))
       .groupBy("doc_id")
       .agg(sigCols.head, sigCols.tail: _*)
   }
 
   /** Banded LSH rows `(doc_id, band, bh)` from a [[signatureFrame]] — pure
     * projection + explode, no shuffle; band `bi` hashes signature slots
-    * `[bi·r, (bi+1)·r)` with r = numPerms / numBands.
+    * `[bi·r, (bi+1)·r)` with r = [[NumPerms]] / numBands.
     */
-  def bandsFromSignature(sig: DataFrame, numPerms: Int, numBands: Int): DataFrame = {
-    val rowsPerBand = numPerms / numBands
+  def bandsFromSignature(sig: DataFrame, numBands: Int): DataFrame = {
+    val rowsPerBand = NumPerms / numBands
     val bandCols = (0 until numBands).map { bi =>
       struct(lit(bi).as("band"),
         PortableHash.phash(concat_ws(",",
@@ -166,16 +162,26 @@ object Dedup {
       .select(col("doc_id"), col("t.band").as("band"), col("t.bh").as("bh"))
   }
 
-  def bandedSignatures(
-      docs: DataFrame, shingleSize: Int, numPerms: Int, numBands: Int): DataFrame =
-    bandedFromTokenHashes(tokenHashFrame(docs), shingleSize, numPerms, numBands)
+  /** Banded LSH signature rows `(doc_id, band, bh)` — the join-key stream
+    * shared by within-corpus candidate generation ([[minhashCandidates]])
+    * and batch-vs-index probing ([[incremental]]).
+    *
+    * Signature via explode + [[NumPerms]] codegen'd min-aggregates, NOT
+    * per-row array lambdas: higher-order functions run interpreted
+    * (measured ~3 µs per element — 100+ s at sf0.1), while a hash aggregate
+    * over exploded shingle hashes is whole-stage codegen with map-side
+    * partial mins, so the doc_id shuffle carries only [[NumPerms]] longs
+    * per document. This is also the 100 TB shape: min is algebraic, no skew (doc_id grouping).
+    */
+  def bandedSignatures(docs: DataFrame): DataFrame =
+    bandedFromTokenHashes(tokenHashFrame(docs))
 
   /** Per-ROW banded LSH rows `(doc_id, band, bh, sh)` — value-identical to
     * [[bandedSignatures]] (plus the doc's distinct shingle set), computed
     * WITHOUT explode + groupBy so it is legal on a STREAMING frame (a
     * grouped aggregate on a stream is stateful; this is a stateless
     * projection). The whole signature folds in ONE `aggregate` pass over
-    * the hashed shingles (all `numPerms` universal-hash mins per element),
+    * the hashed shingles (all [[NumPerms]] universal-hash mins per element),
     * so the tokenize→md5 subtree evaluates once per row, not per perm.
     *
     * Batch corpora should keep the explode shape (codegen'd map-side
@@ -183,16 +189,15 @@ object Dedup {
     * ONLY for micro-batch-sized streams — documented trade, pinned
     * equivalent by DedupIncrementalSpec's streaming twin test.
     */
-  def bandedRowwise(docs: DataFrame, shingleSize: Int, numPerms: Int,
-                    numBands: Int): DataFrame = {
-    val rowsPerBand = numPerms / numBands
-    val perms = permConstants(numPerms)
+  def bandedRowwise(docs: DataFrame): DataFrame = {
+    val rowsPerBand = NumPerms / NumBands
+    val perms = permConstants(NumPerms)
     val init = array(perms.map(_ => lit(MinhashPrime)): _*)
     val sig = aggregate(col("shg"), init, (acc, h) =>
       array(perms.zipWithIndex.map { case ((a, b), k) =>
         least(element_at(acc, k + 1), pmod(lit(a) * h + lit(b), lit(MinhashPrime)))
       }: _*))
-    val bandCols = (0 until numBands).map { bi =>
+    val bandCols = (0 until NumBands).map { bi =>
       struct(lit(bi).as("band"),
         PortableHash.phash(concat_ws(",",
           (bi * rowsPerBand until (bi + 1) * rowsPerBand)
@@ -211,7 +216,7 @@ object Dedup {
     docs
       .select(col("doc_id"),
         hashedShingles(tokenHashes(TextAnalysis.tokens(col("text"))),
-          shingleSize).as("shg"))
+          ShingleSize).as("shg"))
       .select(col("doc_id"), sig.as("sig"), array_distinct(col("shg")).as("sh"),
         size(col("shg")).as("nsh"))
       .select(col("doc_id"),
@@ -230,10 +235,10 @@ object Dedup {
     * footgun that fired in rounds 2 and 3). Staging in the helper makes the
     * single-use-consumer case safe by construction; PlanGuardSpec pins it.
     */
-  def shingleSets(docs: DataFrame, shingleSize: Int): DataFrame =
+  def shingleSets(docs: DataFrame): DataFrame =
     tokenHashFrame(docs).localCheckpoint()
       .select(col("doc_id"),
-        array_distinct(hashedShingles(col("th"), shingleSize)).as("sh"))
+        array_distinct(hashedShingles(col("th"), ShingleSize)).as("sh"))
 
   /** The two expensive per-doc frames of the dedup cascade, MATERIALIZED
     * once and shared by every consumer (candidate self-join, verification
@@ -256,13 +261,12 @@ object Dedup {
     * INDEPENDENTLY from `docs` (the pre-round-3 shape) ran the md5 pass
     * twice per index build.
     */
-  def signatureIndex(
-      docs: DataFrame, shingleSize: Int, numPerms: Int, numBands: Int): SignatureIndex = {
+  def signatureIndex(docs: DataFrame): SignatureIndex = {
     val th = tokenHashFrame(docs).localCheckpoint()
     SignatureIndex(
-      bandedFromTokenHashes(th, shingleSize, numPerms, numBands).localCheckpoint(),
+      bandedFromTokenHashes(th).localCheckpoint(),
       th.select(col("doc_id"),
-        array_distinct(hashedShingles(col("th"), shingleSize)).as("sh")))
+        array_distinct(hashedShingles(col("th"), ShingleSize)).as("sh")))
   }
 
   /** Default band-bucket occupancy cap (docs per (band, bh) bucket admitted
@@ -278,6 +282,14 @@ object Dedup {
     * `scaledBitsPerBand`: a few × the expected bucket size).
     */
   val MaxBandBucket = 1000
+
+  /** The MinHash geometry (see the object doc): shingle width in tokens,
+    * signature permutations, and bands (rows per band = NumPerms /
+    * NumBands = 4).
+    */
+  val ShingleSize = 3
+  val NumPerms = 16
+  val NumBands = 4
 
   /** Band rows whose bucket (keyed by `cols`, default (band, bh)) holds
     * ≤ `maxBucket` docs. The occupancy count is a window over the SAME
@@ -299,12 +311,8 @@ object Dedup {
     * product; buckets over `maxBucket` are diverted to exact-fingerprint
     * handling (see [[MaxBandBucket]]).
     */
-  def minhashCandidates(
-      docs: DataFrame, shingleSize: Int, numPerms: Int, numBands: Int,
-      maxBucket: Int = MaxBandBucket): DataFrame =
-    minhashCandidatesFrom(
-      bandedSignatures(docs, shingleSize, numPerms, numBands).localCheckpoint(),
-      maxBucket)
+  def minhashCandidates(docs: DataFrame, maxBucket: Int = MaxBandBucket): DataFrame =
+    minhashCandidatesFrom(bandedSignatures(docs).localCheckpoint(), maxBucket)
 
   /** [[minhashCandidates]] over a pre-materialized band frame (so the
     * signature subtree is computed once, not once per self-join side).
@@ -322,16 +330,12 @@ object Dedup {
   /** Exact n-gram Jaccard verification of minhash-LSH candidates: join the
     * candidate pairs back to the (distinct) hashed-shingle sets and compute
     * |A∩B| / |A∪B|. The exact set ops run ONLY on the candidate set — linear
-    * in the number of near-duplicates — never on blocked cross products.
-    * This is the 100 TB verification shape; prefix-blocking ([[ngramJaccard]])
-    * is kept as a test-only oracle (boilerplate prefixes make block sizes
-    * skewed and quadratic at corpus scale).
+    * in the number of near-duplicates — never on blocked cross products
+    * (prefix blocking makes boilerplate-prefix blocks skewed and quadratic
+    * at corpus scale). This is the 100 TB verification shape.
     */
-  def verifiedJaccard(
-      docs: DataFrame, shingleSize: Int, numPerms: Int, numBands: Int,
-      maxBucket: Int = MaxBandBucket): DataFrame =
-    verifiedJaccardFrom(
-      signatureIndex(docs, shingleSize, numPerms, numBands), maxBucket)
+  def verifiedJaccard(docs: DataFrame, maxBucket: Int = MaxBandBucket): DataFrame =
+    verifiedJaccardFrom(signatureIndex(docs), maxBucket)
 
   /** [[verifiedJaccard]] over a shared [[SignatureIndex]]: exactly one
     * tokenize/md5 pass per corpus role, however many consumers.
@@ -371,7 +375,7 @@ object Dedup {
         size(array_intersect(col("l.sh"), col("r.sh"))).cast("long").as("n_common"),
         size(col("l.sh")).cast("long").as("n_a"),
         size(col("r.sh")).cast("long").as("n_b"))
-      // a shingle-less doc (< shingleSize tokens) has no containment ratio;
+      // a shingle-less doc (< ShingleSize tokens) has no containment ratio;
       // guard the integer division (DuckDB's // raises on zero)
       .filter(col("n_a") > 0 && col("n_b") > 0)
       .withColumn("contain_a_ppm", expr("(n_common * 1000000) div n_a"))
@@ -399,12 +403,11 @@ object Dedup {
     * still differs from its base letter by exactly 1 substitution).
     */
   def editVerified(
-      docs: DataFrame, shingleSize: Int, numPerms: Int, numBands: Int,
-      prefixChars: Int, maxBucket: Int = MaxBandBucket): DataFrame = {
+      docs: DataFrame, prefixChars: Int, maxBucket: Int = MaxBandBucket): DataFrame = {
     // minhashCandidates materializes the banded frame, so both self-join
     // sides read stored blocks — same single-scan contract as the jaccard
     // cascade; the text join sides are plain pruned scans (doc_id, text).
-    val cand = minhashCandidates(docs, shingleSize, numPerms, numBands, maxBucket)
+    val cand = minhashCandidates(docs, maxBucket)
     val keyed = docs.select(col("doc_id"),
       regexp_replace(
         substring(TextAnalysis.normText(col("text")), 1, prefixChars),
@@ -485,6 +488,14 @@ object Dedup {
       .distinct()
   }
 
+  /** Distinct fingerprint probe table of an index corpus: (fp, known=true).
+    * Shared with the streaming twin ([[graft.streaming.DocStream.admit]]) so
+    * batch and streaming admission can never diverge on probe construction.
+    */
+  def indexFingerprints(index: DataFrame): DataFrame =
+    index.select(fingerprint(col("text")).as("fp"))
+      .distinct().withColumn("known", lit(true))
+
   /** Incremental corpus update: dedup a NEW batch against the EXISTING
     * index without touching index-vs-index pairs — the production shape for
     * growing a 100 TB corpus (re-clustering the whole corpus per delivery
@@ -504,22 +515,13 @@ object Dedup {
     * jaccard) instead of NULLs keep cross-engine dtypes stable. `keep` is
     * the admission verdict: not an exact dup and best jaccard < threshold.
     */
-  /** Distinct fingerprint probe table of an index corpus: (fp, known=true).
-    * Shared with the streaming twin ([[graft.streaming.DocStream.admit]]) so
-    * batch and streaming admission can never diverge on probe construction.
-    */
-  def indexFingerprints(index: DataFrame): DataFrame =
-    index.select(fingerprint(col("text")).as("fp"))
-      .distinct().withColumn("known", lit(true))
-
-  def incremental(docs: DataFrame, isBatch: Column, shingleSize: Int,
-                  numPerms: Int, numBands: Int, threshold: Double): DataFrame = {
+  def incremental(docs: DataFrame, isBatch: Column, threshold: Double): DataFrame = {
     val batch = docs.filter(isBatch)
     val index = docs.filter(!isBatch)
     val exact = batch.select(col("doc_id"), fingerprint(col("text")).as("fp"))
       .join(indexFingerprints(index), Seq("fp"), "left")
       .select(col("doc_id"), coalesce(col("known"), lit(false)).as("is_exact"))
-    val idx = signatureIndex(docs, shingleSize, numPerms, numBands)
+    val idx = signatureIndex(docs)
     // Same adversarial-flood cap as minhashCandidates: an uncapped
     // batch-vs-index band join is (batch bucket) × (index bucket) rows per
     // (band, bh) key — a boilerplate flood present on BOTH sides goes
@@ -559,22 +561,15 @@ object Dedup {
           coalesce(col("best_jac_r") < threshold, lit(true))).as("keep"))
   }
 
-  /** Exact n-gram Jaccard over candidate pairs blocked on a normalized-text
-    * prefix: similarity = |A∩B| / |A∪B| over distinct shingle sets.
+  /** Hard cap on the audit-sample size `recallAudit` accepts. The exact
+    * ground-truth side is an all-pairs self-join — quadratic BY DESIGN —
+    * and is only affordable because `recallModFor` pins call-site samples
+    * to ~100 docs at any corpus size. 10k docs = ~50M pairs is the largest
+    * audit that stays interactive on local[32]; past it the quadratic
+    * reintroduces the measured 10-minute stall (BASELINE.md round 5), so
+    * fail loudly instead of silently running it.
     */
-  def ngramJaccard(docs: DataFrame, shingleSize: Int, prefixLen: Int): DataFrame = {
-    val norm = TextAnalysis.normText(col("text"))
-    val keyed = docs
-      .select(col("doc_id"), substring(norm, 1, prefixLen).as("blk"),
-        tokenHashes(TextAnalysis.tokens(col("text"))).as("th"))
-      .select(col("doc_id"), col("blk"),
-        array_distinct(hashedShingles(col("th"), shingleSize)).as("sh"))
-    keyed.as("l").join(keyed.as("r"),
-        col("l.blk") === col("r.blk") && col("l.doc_id") < col("r.doc_id"))
-      .select(col("l.doc_id").as("a"), col("r.doc_id").as("b"),
-        (size(array_intersect(col("l.sh"), col("r.sh"))).cast("double") /
-          size(array_union(col("l.sh"), col("r.sh")))).as("jaccard"))
-  }
+  val MaxRecallAuditDocs = 10000L
 
   /** Recall/precision audit of the banded-LSH candidate generator against
     * ground-truth Jaccard — the measurement that justifies (or re-sizes)
@@ -589,19 +584,8 @@ object Dedup {
     * One row out: sample size, true pairs (jac ≥ thrPpm), LSH candidate
     * pairs, hits (true ∩ candidate), recall and precision in ppm.
     */
-  /** Hard cap on the audit-sample size `recallAudit` accepts. The exact
-    * ground-truth side is an all-pairs self-join — quadratic BY DESIGN —
-    * and is only affordable because `recallModFor` pins call-site samples
-    * to ~100 docs at any corpus size. 10k docs = ~50M pairs is the largest
-    * audit that stays interactive on local[32]; past it the quadratic
-    * reintroduces the measured 10-minute stall (BASELINE.md round 5), so
-    * fail loudly instead of silently running it.
-    */
-  val MaxRecallAuditDocs = 10000L
-
-  def recallAudit(docs: DataFrame, shingleSize: Int, numPerms: Int,
-                  numBands: Int, thrPpm: Long): DataFrame = {
-    val idx = signatureIndex(docs, shingleSize, numPerms, numBands)
+  def recallAudit(docs: DataFrame, thrPpm: Long): DataFrame = {
+    val idx = signatureIndex(docs)
     val sets = idx.sets.filter(size(col("sh")) > 0).localCheckpoint()
     // cheap: sets is already materialized by the localCheckpoint above
     val nSample = sets.count()

@@ -97,20 +97,6 @@ object NgramModel {
        |FROM documents d LEFT JOIN p ON d.doc_id = p.doc_id""".stripMargin
   }
 
-  /** Add-one-smoothed bigram LM score per document, in exact integer
-    * arithmetic so any engine reproduces it: for each bigram instance
-    * (w1,w2), term = ((c2(w1,w2)+1) * 1e6) div (c1(w1) + V) where c2 is
-    * the corpus bigram count, c1 the corpus count of w1 as a bigram
-    * prefix, and V the corpus vocabulary size; the doc score is the mean
-    * term (ppm of probability mass — higher = more corpus-typical).
-    * Not textbook log-perplexity (no float log in the contract), but the
-    * same ranking signal with a bit-exact cross-engine definition.
-    *
-    * Shape: one shingle explode, bigram-count and prefix-count hash aggs
-    * (model tables, Zipf-bounded), a 1-row vocabulary total broadcast by
-    * crossJoin (the established totals pattern), and two equi-joins back
-    * onto the instance stream. No driver collect, no window.
-    */
   /** The (doc_id, bg) bigram instance stream — one tokenize+explode pass.
     * Deliberately NOT pre-aggregated to (doc, bg, m): bigrams rarely
     * repeat within a document, so the per-doc aggregate costs a full
@@ -136,6 +122,20 @@ object NgramModel {
     c2.withColumn("w1", split(col("bg"), " ").getItem(0))
       .groupBy("w1").agg(sum("c2").as("c1"))
 
+  /** Add-one-smoothed bigram LM score per document, in exact integer
+    * arithmetic so any engine reproduces it: for each bigram instance
+    * (w1,w2), term = ((c2(w1,w2)+1) * 1e6) div (c1(w1) + V) where c2 is
+    * the corpus bigram count, c1 the corpus count of w1 as a bigram
+    * prefix, and V the corpus vocabulary size; the doc score is the mean
+    * term (ppm of probability mass — higher = more corpus-typical).
+    * Not textbook log-perplexity (no float log in the contract), but the
+    * same ranking signal with a bit-exact cross-engine definition.
+    *
+    * Shape: one shingle explode, bigram-count and prefix-count hash aggs
+    * (model tables, Zipf-bounded), a 1-row vocabulary total broadcast by
+    * crossJoin (the established totals pattern), and two equi-joins back
+    * onto the instance stream. No driver collect, no window.
+    */
   def lmScore(docs: DataFrame): DataFrame = {
     // checkpointed: the bigram instance stream feeds the c2 model AND the
     // scoring join — without the barrier each re-runs tokenize + explode

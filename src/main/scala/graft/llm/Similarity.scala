@@ -13,7 +13,7 @@ import graft.expr.PortableHash
   *   - single-cell quantizer ([[cellId]] with the reserved quantizer band):
   *     IVF-style — each vector belongs to one of 2^bits cells, queries probe
   *     their own cell. One narrow projection + a per-cell join.
-  *   - multi-band ([[lshCandidates]]/[[lshTopK]]): `bands` independent cell
+  *   - multi-band ([[lshCandidates]]/[[lshTopK]]): [[Bands]] independent cell
   *     assignments; a pair is a candidate if it collides in ANY band —
   *     recall for a pair at angle θ is 1-(1-p^r)^B with p = 1-θ/π, r bits
   *     per band, B bands (16×8 default: cos ≥ 0.9 → ~0.97, cos ≥ 0.8 →
@@ -69,8 +69,10 @@ object Similarity {
   /** Reserved band index for the single-cell (IVF-style) quantizer. */
   val QuantizerBand = -1
   val QuantizerBits = 4
-  /** Multi-band defaults: 16 bands × 8 bits (see recall/occupancy math
-    * above).
+  /** Multi-band geometry: [[Bands]] bands, read by every multi-band
+    * operator, × [[BitsPerBand]] bits, the fixture width that callers
+    * scale with the corpus ([[autoBitsPerBand]]); see the recall/occupancy
+    * math above.
     */
   val Bands = 16
   val BitsPerBand = 8
@@ -171,11 +173,11 @@ object Similarity {
     * shares [[Dedup.cappedBuckets]] so text and embedding LSH can never
     * diverge on the divert semantics either.
     */
-  private[graft] def cappedCells(emb: DataFrame, bands: Int, bitsPerBand: Int,
-                                 dim: Int, maxBucket: Int): DataFrame =
+  private[graft] def cappedCells(emb: DataFrame, bitsPerBand: Int,
+                                 maxBucket: Int): DataFrame =
     Dedup.cappedBuckets(
         emb.select(col("vec_id"),
-          posexplode(bandCellsArray(col("embedding"), bands, bitsPerBand, dim))
+          posexplode(bandCellsArray(col("embedding"), Bands, bitsPerBand, Dim))
             .as(Seq("band", "cell"))),
         maxBucket, cols = Seq("band", "cell"))
       .localCheckpoint()
@@ -195,10 +197,9 @@ object Similarity {
     * [[MaxCellBucket]]); the occupancy window runs on the same (band, cell)
     * partitioning the self-join shuffles to anyway.
     */
-  def lshCandidates(emb: DataFrame, bands: Int = Bands,
-                    bitsPerBand: Int = BitsPerBand, dim: Int = Dim,
+  def lshCandidates(emb: DataFrame, bitsPerBand: Int = BitsPerBand,
                     maxBucket: Int = MaxCellBucket): DataFrame = {
-    val cells = cappedCells(emb, bands, bitsPerBand, dim, maxBucket)
+    val cells = cappedCells(emb, bitsPerBand, maxBucket)
     cells.as("l").join(cells.as("r"),
         col("l.band") === col("r.band") && col("l.cell") === col("r.cell") &&
           col("l.vec_id") < col("r.vec_id"))
@@ -213,7 +214,7 @@ object Similarity {
     * Rounding before ranking keeps the ranking oracle-stable.
     */
   def topK(emb: DataFrame, isQuery: Column, k: Int,
-           sameCellOnly: Boolean = false, dim: Int = Dim): DataFrame = {
+           sameCellOnly: Boolean = false): DataFrame = {
     val n0 = withNorm(emb)
     // Checkpoint ONLY when the frame carries the quantizer cell (an
     // expensive bits×dim dot subtree worth computing once for both join
@@ -221,7 +222,7 @@ object Similarity {
     // materializing the whole corpus to save a pruned re-read is the trade
     // ops.GlobalRank's isBareScan guard declines for the same reason.
     val n = if (sameCellOnly)
-      n0.withColumn("cell", cellId(col("embedding"), QuantizerBand, QuantizerBits, dim))
+      n0.withColumn("cell", cellId(col("embedding"), QuantizerBand, QuantizerBits, Dim))
         .localCheckpoint()
     else n0
     val qCols = Seq(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
@@ -242,10 +243,10 @@ object Similarity {
     * by exact cosine. The (band, cell) equi-join is the only wide operation;
     * `distinct` collapses multi-band collisions before the cosine pass.
     */
-  def lshTopK(emb: DataFrame, isQuery: Column, k: Int, bands: Int = Bands,
-              bitsPerBand: Int = BitsPerBand, dim: Int = Dim,
+  def lshTopK(emb: DataFrame, isQuery: Column, k: Int,
+              bitsPerBand: Int = BitsPerBand,
               maxBucket: Int = MaxCellBucket): DataFrame = {
-    val cells = cappedCells(emb, bands, bitsPerBand, dim, maxBucket)
+    val cells = cappedCells(emb, bitsPerBand, maxBucket)
     val qc = cells.filter(isQuery).withColumnRenamed("vec_id", "q_id")
     val cand = qc.join(cells, Seq("band", "cell"))
       .filter(col("q_id") =!= col("vec_id"))
@@ -278,9 +279,9 @@ object Similarity {
     * frame, which only carries `vec_id`).
     */
   def incremental(emb: DataFrame, isBatch: Column, threshold: Double,
-                  bands: Int = Bands, bitsPerBand: Int = BitsPerBand,
-                  dim: Int = Dim, maxBucket: Int = MaxCellBucket): DataFrame = {
-    val cells = cappedCells(emb, bands, bitsPerBand, dim, maxBucket)
+                  bitsPerBand: Int = BitsPerBand,
+                  maxBucket: Int = MaxCellBucket): DataFrame = {
+    val cells = cappedCells(emb, bitsPerBand, maxBucket)
     val bc = cells.filter(isBatch).select(col("vec_id").as("bid"), col("band"), col("cell"))
     val ic = cells.filter(!isBatch).select(col("vec_id").as("iid"), col("band"), col("cell"))
     val cand = bc.join(ic, Seq("band", "cell")).select("bid", "iid").distinct()
@@ -314,9 +315,9 @@ object Similarity {
     * candidates verified with exact cosine. Round 1 compared all pairs
     * within the fixture `label`; this is the computed-quantizer version.
     */
-  def nearDupPairs(emb: DataFrame, threshold: Double, bands: Int = Bands,
-                   bitsPerBand: Int = BitsPerBand, dim: Int = Dim): DataFrame = {
-    val cand = lshCandidates(emb, bands, bitsPerBand, dim).select("a", "b")
+  def nearDupPairs(emb: DataFrame, threshold: Double,
+                   bitsPerBand: Int = BitsPerBand): DataFrame = {
+    val cand = lshCandidates(emb, bitsPerBand).select("a", "b")
     val n = normFrame(emb)
     cand
       .join(n.as("l"), col("a") === col("l.vec_id"))

@@ -90,28 +90,6 @@ object GlobalRank {
     case _                 => false
   }
 
-  /** df + exact global `row_number` (1-based, ordered by `rangeCol` asc then
-    * `tieBreak` asc) in column `out`, plus the total row count — without a
-    * single-partition window. Pass `buckets = Auto` (what every SparkEntry
-    * call site does) to derive the count from the corpus via
-    * [[autoBuckets]]; an explicit count is a pure parallelism override and
-    * never changes the output.
-    *
-    * CONTRACT: `rangeCol` must be non-null. Null range values would fall
-    * through every `>` bucket comparison to bucket 0 AND sort NULLS FIRST
-    * in Spark but NULLS LAST in DuckDB/ANSI engines — a silent cross-engine
-    * rank divergence. Every caller ranks a derived non-null column (hash,
-    * count, price); null-ranked data should be filtered or coalesced first.
-    *
-    * Non-bare-scan inputs are materialized once (`localCheckpoint`) so
-    * the three passes read stored blocks instead of recomputing the
-    * derived subtree.
-    */
-  /** Shared bucket machinery for the global rank and prefix sum: cut
-    * derived inputs ([[isBareScan]] rule), collect the approximate range
-    * boundaries once, and return (prepared df, monotone deterministic
-    * bucket-id expression — ties share a bucket by construction).
-    */
   /** One boundary-grid aggregation at `b` buckets (b−1 quantiles). */
   private def boundsAt(df: DataFrame, rangeCol: String, b: Int): Seq[Double] =
     if (b <= 1) Seq.empty // approx_percentile rejects an empty prob array
@@ -123,6 +101,11 @@ object GlobalRank {
       else bRow.getSeq[Any](0).map(x => x.toString.toDouble).distinct.sorted
     }
 
+  /** Shared bucket machinery for the global rank and prefix sum: cut
+    * derived inputs ([[isBareScan]] rule), collect the approximate range
+    * boundaries once, and return (prepared df, monotone deterministic
+    * bucket-id expression — ties share a bucket by construction).
+    */
   private def bucketed(df0: DataFrame, rangeCol: String,
                        buckets: Int): (DataFrame, Column) = {
     val df =
@@ -187,6 +170,23 @@ object GlobalRank {
     }
   }
 
+  /** df + exact global `row_number` (1-based, ordered by `rangeCol` asc then
+    * `tieBreak` asc) in column `out`, plus the total row count — without a
+    * single-partition window. Pass `buckets = Auto` (what every SparkEntry
+    * call site does) to derive the count from the corpus via
+    * [[autoBuckets]]; an explicit count is a pure parallelism override and
+    * never changes the output.
+    *
+    * CONTRACT: `rangeCol` must be non-null. Null range values would fall
+    * through every `>` bucket comparison to bucket 0 AND sort NULLS FIRST
+    * in Spark but NULLS LAST in DuckDB/ANSI engines — a silent cross-engine
+    * rank divergence. Every caller ranks a derived non-null column (hash,
+    * count, price); null-ranked data should be filtered or coalesced first.
+    *
+    * Non-bare-scan inputs are materialized once (`localCheckpoint`) so
+    * the three passes read stored blocks instead of recomputing the
+    * derived subtree.
+    */
   def withGlobalRowNumberAndCount(
       df0: DataFrame, rangeCol: String, tieBreak: Seq[String],
       buckets: Int, out: String): (DataFrame, Long) = {

@@ -60,14 +60,6 @@ object Kmv {
       .select(col(groupCol), col(idCol), col("hv"), col("rnk"), col("n_g"))
   }
 
-  /** Pairwise overlap estimates between every two group sketches:
-    * (group_a, group_b, k_eff, rho, jaccard_est_ppm, na_est, nb_est).
-    * k_eff = min(k, |A|, |B|) — against small groups the sketch is exact
-    * and the "estimate" degrades gracefully to truth. The union k-set is
-    * computed rows-wise (distinct id of the two sketches, re-ranked by
-    * the SAME element hash), so the whole estimator is joins + windows
-    * over ≤ 2k rows per pair — nothing rescans the data.
-    */
   /** Shared pair machinery: per-pair stats (`pairs`) and the hash-ranked
     * union member stream (`ranked`) — the common prefix of
     * [[overlapEstimates]] and [[unionEstimates]], factored so the two
@@ -123,6 +115,14 @@ object Kmv {
     PairStream(pairs, ranked)
   }
 
+  /** Pairwise overlap estimates between every two group sketches:
+    * (group_a, group_b, k_eff, rho, jaccard_est_ppm, na_est, nb_est).
+    * k_eff = min(k, |A|, |B|) — against small groups the sketch is exact
+    * and the "estimate" degrades gracefully to truth. The union k-set is
+    * computed rows-wise (distinct id of the two sketches, re-ranked by
+    * the SAME element hash), so the whole estimator is joins + windows
+    * over ≤ 2k rows per pair — nothing rescans the data.
+    */
   def overlapEstimates(sketch: DataFrame, groupCol: String, idCol: String,
                        k: Int): DataFrame = {
     val PairStream(pairs, ranked) = pairStream(sketch, groupCol, idCol)

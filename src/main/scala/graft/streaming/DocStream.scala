@@ -64,12 +64,22 @@ object DocStream {
         col("gopher_pass") && col("rep_pass") && col("c4_pass"))
   }
 
+  /** Bloom admission-gate dimensions, read by [[bloomProbe]] and by the
+    * batch `dedup_bloom_gate` key and its oracle: K seeded hash functions
+    * into an M-bit filter. M is sized for the gate's CONTRACT to be
+    * visible at fixture scale (some false positives, zero false
+    * negatives); production sizes M from the corpus cardinality and target
+    * FPR — the structure stays a constant-size broadcast either way.
+    */
+  private[graft] val BloomK = 4
+  private[graft] val BloomM = 4096L
+
   /** Streaming Bloom admission gate — `dedup_bloom_gate`'s filter as the
     * stream-side fast path in front of [[admit]]/[[nearDupProbe]]. The
-    * static side is the corpus's set-bit table (K seeded portable hashes
-    * of each corpus `sig` into an m-bit space, deduped — ≤ m rows at ANY
-    * corpus size); each arriving doc's K bits probe it through K
-    * stream-static broadcast LEFT joins — O(1) hash lookups per row, no
+    * static side is the corpus's set-bit table ([[BloomK]] seeded portable
+    * hashes of each corpus `sig` into a [[BloomM]]-bit space, deduped —
+    * ≤ M rows at ANY corpus size); each arriving doc's K bits probe it
+    * through K stream-static broadcast LEFT joins — O(1) hash lookups per row, no
     * explode-then-regroup (a streaming groupBy would be a stateful
     * aggregate; this stays append-mode legal with zero state). Emits
     * (doc_id, bloom_hit). bloom_hit=false docs are GUARANTEED novel (the
@@ -78,20 +88,19 @@ object DocStream {
     * sig); `corpusSigs` needs (sig) — sig is whatever admission keys on
     * (canonical URL, content fingerprint).
     */
-  def bloomProbe(newDocs: DataFrame, corpusSigs: DataFrame,
-                 k: Int = 4, m: Long = 4096): DataFrame = {
+  def bloomProbe(newDocs: DataFrame, corpusSigs: DataFrame): DataFrame = {
     import graft.expr.PortableHash
-    val setBits = corpusSigs.select(explode(array((0 until k).map(i =>
-        pmod(PortableHash.phashSeed(i, col("sig")), lit(m))): _*)).as("bit"))
+    val setBits = corpusSigs.select(explode(array((0 until BloomK).map(i =>
+        pmod(PortableHash.phashSeed(i, col("sig")), lit(BloomM))): _*)).as("bit"))
       .distinct()
-    val probed = (0 until k).foldLeft(
+    val probed = (0 until BloomK).foldLeft(
       newDocs.select(col("doc_id"), col("sig"))) { (df, i) =>
-      df.withColumn(s"b$i", pmod(PortableHash.phashSeed(i, col("sig")), lit(m)))
+      df.withColumn(s"b$i", pmod(PortableHash.phashSeed(i, col("sig")), lit(BloomM)))
         .join(broadcast(setBits.select(col("bit").as(s"b$i"),
           lit(1).as(s"m$i"))), Seq(s"b$i"), "left_outer")
     }
     probed.select(col("doc_id"),
-      (0 until k).map(i => col(s"m$i").isNotNull).reduce(_ && _).as("bloom_hit"))
+      (0 until BloomK).map(i => col(s"m$i").isNotNull).reduce(_ && _).as("bloom_hit"))
   }
 
   /** Streaming NEAR-dup probe — the LSH layer of
@@ -102,9 +111,9 @@ object DocStream {
     * static sets, and verified hits `(doc_id, near_id, band, jac_r)` with
     * `jac_r >= threshold` are emitted. Every join is stream-STATIC (legal
     * in append mode, no watermark, no streaming state); a pair sharing
-    * several bands emits once per shared band (multiplicity ≤ numBands) —
-    * dedup at the consumer if single rows are needed, the aggregate-free
-    * shape is what keeps the stream stateless.
+    * several bands emits once per shared band (multiplicity ≤
+    * [[Dedup.NumBands]]) — dedup at the consumer if single rows are
+    * needed, the aggregate-free shape is what keeps the stream stateless.
     *
     * 100 TB posture: the static side is [[Dedup.signatureIndex]] —
     * materialized ONCE (`localCheckpoint`), so per-micro-batch
@@ -113,12 +122,11 @@ object DocStream {
     * stays with `EventStream.dedupedStream`, exactly as [[admit]] splits it.
     */
   def nearDupProbe(newDocs: DataFrame, index: DataFrame,
-                   shingleSize: Int = 3, numPerms: Int = 16, numBands: Int = 4,
                    threshold: Double = 0.5): DataFrame = {
-    val idx = Dedup.signatureIndex(index, shingleSize, numPerms, numBands)
+    val idx = Dedup.signatureIndex(index)
     val capped = Dedup.cappedBuckets(idx.banded, Dedup.MaxBandBucket)
       .select(col("doc_id").as("near_id"), col("band"), col("bh"))
-    val probes = Dedup.bandedRowwise(newDocs, shingleSize, numPerms, numBands)
+    val probes = Dedup.bandedRowwise(newDocs)
     probes
       .join(capped, Seq("band", "bh"))
       .join(idx.sets.select(col("doc_id").as("near_id"), col("sh").as("r_sh")),
@@ -258,11 +266,8 @@ object DocStream {
     * inside foreachBatch); the banded frame is cut once and feeds both
     * join sides.
     */
-  def intraBatchPairs(batch: DataFrame, shingleSize: Int = 3,
-                      numPerms: Int = 16, numBands: Int = 4,
-                      threshold: Double = 0.5): DataFrame = {
-    val banded = Dedup.bandedRowwise(batch, shingleSize, numPerms, numBands)
-      .localCheckpoint()
+  def intraBatchPairs(batch: DataFrame, threshold: Double = 0.5): DataFrame = {
+    val banded = Dedup.bandedRowwise(batch).localCheckpoint()
     val capped = Dedup.cappedBuckets(banded, Dedup.MaxBandBucket)
     capped.as("l").join(capped.as("r"),
         col("l.band") === col("r.band") && col("l.bh") === col("r.bh") &&
@@ -380,19 +385,17 @@ object DocStream {
     * `(doc_id, text, fp)` rows.
     */
   def admitBatch(batch: DataFrame, index: DataFrame,
-                 shingleSize: Int = 3, numPerms: Int = 16, numBands: Int = 4,
                  threshold: Double = 0.5): DataFrame = {
     val fp = batch.withColumn("fp", Dedup.fingerprint(col("text"))).localCheckpoint()
     // (a) duplicates of the static index: exact fingerprint ∪ verified near
     val exactHit = fp.join(Dedup.indexFingerprints(index), Seq("fp"), "left")
       .filter(col("known").isNotNull).select("doc_id")
-    val nearHit = nearDupProbe(fp.select("doc_id", "text"), index,
-      shingleSize, numPerms, numBands, threshold).select("doc_id")
+    val nearHit = nearDupProbe(fp.select("doc_id", "text"), index, threshold)
+      .select("doc_id")
     val indexRejected = exactHit.union(nearHit).distinct()
     // (b) intra-batch duplicate pairs (near ∪ exact — exact covers docs
     // below the shingle width that LSH can't see), as (lo=near_id, hi)
-    val nearPairs = intraBatchPairs(fp.select("doc_id", "text"),
-      shingleSize, numPerms, numBands, threshold)
+    val nearPairs = intraBatchPairs(fp.select("doc_id", "text"), threshold)
       .select(col("near_id").as("lo"), col("doc_id").as("hi"))
     val exactPairs = fp.select(col("fp"), col("doc_id").as("lo")).as("l")
       .join(fp.select(col("fp"), col("doc_id").as("hi")).as("r"), Seq("fp"))

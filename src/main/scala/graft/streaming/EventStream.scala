@@ -53,6 +53,12 @@ object EventStream extends Serializable {
       .withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark(idCols)
 
+  /** Attribution-window span (6 h in epoch micros) — the ONE constant both
+    * the batch `join_range` query and the streaming twin default to, so the
+    * two pipelines cannot silently drift apart.
+    */
+  val AttributionWindowUs: Long = 21600000000L
+
   /** Stream-stream interval join — the streaming twin of the batch
     * `join_range` attribution query: purchases join the signups whose
     * `[s_ts, s_ts + window)` window contains them.
@@ -68,12 +74,6 @@ object EventStream extends Serializable {
     * purchase emits once per containing window (bucket dedup keeps aligned
     * windows from double-emitting), exactly like the batch shape.
     */
-  /** Attribution-window span (6 h in epoch micros) — the ONE constant both
-    * the batch `join_range` query and the streaming twin default to, so the
-    * two pipelines cannot silently drift apart.
-    */
-  val AttributionWindowUs: Long = 21600000000L
-
   def attribution(signups: DataFrame, purchases: DataFrame,
                   windowUs: Long = AttributionWindowUs,
                   watermark: String = "2 hours"): DataFrame = {

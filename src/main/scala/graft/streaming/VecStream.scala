@@ -21,9 +21,9 @@ object VecStream {
     * `(vec_id, near_id, band, cos_r)` with `cos_r >= threshold` are
     * emitted. Every join is stream-STATIC (legal in append mode, no
     * watermark, no streaming state); a pair sharing several bands emits
-    * once per shared band (multiplicity ≤ bands) — the same contract as
-    * [[DocStream.nearDupProbe]], dedup at the consumer if single rows are
-    * needed. In-stream (new-vs-new) pairs stay with foreachBatch, exactly
+    * once per shared band (multiplicity ≤ [[Similarity.Bands]]) — the
+    * same contract as [[DocStream.nearDupProbe]], dedup at the consumer if
+    * single rows are needed. In-stream (new-vs-new) pairs stay with foreachBatch, exactly
     * as [[DocStream.intraBatchPairs]] splits that concern for text.
     *
     * 100 TB posture: the static side ([[Similarity.cappedCells]] +
@@ -31,15 +31,14 @@ object VecStream {
     * divert/cap semantics can never drift between stream and batch) is
     * materialized once (`localCheckpoint`), so per-micro-batch
     * planning re-reads stored blocks, never re-hashes the corpus; the
-    * stream side is linear in the batch (`bands` cells per vector).
+    * stream side is linear in the batch ([[Similarity.Bands]] cells per
+    * vector).
     */
   def nearDupProbe(newVecs: DataFrame, index: DataFrame,
                    threshold: Double = 0.4,
-                   bands: Int = Similarity.Bands,
                    bitsPerBand: Int = Similarity.BitsPerBand,
-                   dim: Int = Similarity.Dim,
                    maxBucket: Int = Similarity.MaxCellBucket): DataFrame = {
-    val idxCells = Similarity.cappedCells(index, bands, bitsPerBand, dim, maxBucket)
+    val idxCells = Similarity.cappedCells(index, bitsPerBand, maxBucket)
       .select(col("vec_id").as("near_id"), col("band"), col("cell"))
     val idxNorm = Similarity.normFrame(index)
       .select(col("vec_id").as("near_id"), col("embedding").as("n_emb"),
@@ -47,7 +46,8 @@ object VecStream {
     val probes = newVecs
       .withColumn("q_nrm", sqrt(Similarity.dot(col("embedding"), col("embedding"))))
       .select(col("vec_id"), col("embedding"), col("q_nrm"),
-        posexplode(Similarity.bandCellsArray(col("embedding"), bands, bitsPerBand, dim))
+        posexplode(Similarity.bandCellsArray(col("embedding"), Similarity.Bands,
+          bitsPerBand, Similarity.Dim))
           .as(Seq("band", "cell")))
     probes
       .join(idxCells, Seq("band", "cell"))

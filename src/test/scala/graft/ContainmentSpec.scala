@@ -15,8 +15,7 @@ class ContainmentSpec extends SparkSpec {
   test("full inclusion: contained doc scores 1e6 one way, jaccard stays low") {
     val short = "alpha beta gamma delta epsilon zeta"
     val long = short + " " + (1 to 60).map(i => s"tok$i").mkString(" ")
-    val idx = Dedup.signatureIndex(docsDf(Seq((1L, short), (2L, long))),
-      shingleSize = 3, numPerms = 16, numBands = 4)
+    val idx = Dedup.signatureIndex(docsDf(Seq((1L, short), (2L, long))))
     val rows = Dedup.containmentFrom(idx).collect()
     // inclusion may or may not surface as an LSH candidate (documented
     // recall caveat) — but if it does, the asymmetry must be visible
@@ -28,7 +27,7 @@ class ContainmentSpec extends SparkSpec {
     }
     // force the pair through verification regardless of banding by checking
     // the set-level math directly
-    val sets = Dedup.shingleSets(docsDf(Seq((1L, short), (2L, long))), 3)
+    val sets = Dedup.shingleSets(docsDf(Seq((1L, short), (2L, long))))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSet).toMap
     val inter = (sets(1L) & sets(2L)).size
     assert(inter == sets(1L).size, "every short-doc shingle appears in the long doc")
@@ -37,8 +36,7 @@ class ContainmentSpec extends SparkSpec {
 
   test("identical docs: containment 1e6 both directions via the LSH path") {
     val t = (1 to 40).map(i => s"w$i").mkString(" ")
-    val idx = Dedup.signatureIndex(docsDf(Seq((1L, t), (2L, t))),
-      shingleSize = 3, numPerms = 16, numBands = 4)
+    val idx = Dedup.signatureIndex(docsDf(Seq((1L, t), (2L, t))))
     val rows = Dedup.containmentFrom(idx).collect()
     assert(rows.length == 1)
     assert(rows.head.getLong(6) == 1000000L && rows.head.getLong(7) == 1000000L)
@@ -49,7 +47,7 @@ class ContainmentSpec extends SparkSpec {
     val a = (1 to 30).map(i => s"w$i").mkString(" ")
     val fresh = (1 to 30).map(i => s"x$i").mkString(" ")
     val df = docsDf(Seq((10L, a), (20L, a), (30L, fresh)))
-    val pairs = Dedup.shingleSets(df, 3)
+    val pairs = Dedup.shingleSets(df)
       .select(col("doc_id"), explode(col("sh")).as("g")).localCheckpoint()
     val owner = pairs.groupBy("g").agg(min("doc_id").as("owner"))
     val out = pairs.join(owner, "g").groupBy("doc_id")

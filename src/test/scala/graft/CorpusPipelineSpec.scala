@@ -81,7 +81,7 @@ class CorpusPipelineSpec extends SparkSpec {
 
   test("no verified near-dup pair survives the dedup stage") {
     val res = runOnce()
-    val surviving = Dedup.verifiedJaccard(res.deduped, 3, 16, 4)
+    val surviving = Dedup.verifiedJaccard(res.deduped)
       .filter(round(col("jaccard"), 6) >= 0.5)
       .count()
     assert(surviving == 0L,

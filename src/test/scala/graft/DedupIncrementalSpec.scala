@@ -17,7 +17,7 @@ class DedupIncrementalSpec extends SparkSpec {
       (29L, "entirely novel text sharing no shingles with any index document whatsoever")
     ).toDF("doc_id", "text")
     val out = Dedup.incremental(docs, pmod(col("doc_id"), lit(10)) === 9,
-        shingleSize = 3, numPerms = 16, numBands = 4, threshold = 0.5)
+        threshold = 0.5)
       .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getBoolean(1), r.getLong(2), r.getDouble(3), r.getBoolean(4)))
     assert(out.map(_._1).toSeq == Seq(9L, 19L, 29L), "only batch docs in the verdict")
@@ -38,7 +38,7 @@ class DedupIncrementalSpec extends SparkSpec {
       (9L, "unrelated batch text with completely separate words throughout")
     ).toDF("doc_id", "text")
     val out = Dedup.incremental(docs, pmod(col("doc_id"), lit(10)) === 9,
-        shingleSize = 3, numPerms = 16, numBands = 4, threshold = 0.5)
+        threshold = 0.5)
       .collect()
     assert(out.map(_.getLong(0)).toSeq == Seq(9L))
     assert(out.head.getBoolean(4), "novel batch doc kept")
@@ -46,9 +46,9 @@ class DedupIncrementalSpec extends SparkSpec {
 
   test("bandedRowwise == bandedSignatures band-for-band (streaming-safe signature)") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val explodeShape = Dedup.bandedSignatures(docs, 3, 16, 4)
+    val explodeShape = Dedup.bandedSignatures(docs)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    val rowShape = Dedup.bandedRowwise(docs, 3, 16, 4)
+    val rowShape = Dedup.bandedRowwise(docs)
       .select("doc_id", "band", "bh")
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     assert(rowShape == explodeShape && rowShape.nonEmpty,
@@ -81,13 +81,13 @@ class DedupIncrementalSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSet
       // batch replica of the SAME computation: explode-shape signatures for
       // the incoming docs against the identical capped index
-      val idx = Dedup.signatureIndex(index, 3, 16, 4)
+      val idx = Dedup.signatureIndex(index)
       val capped = Dedup.cappedBuckets(idx.banded, Dedup.MaxBandBucket)
         .select(col("doc_id").as("near_id"), col("band"), col("bh"))
       val batchDf = incoming.toDF("doc_id", "text")
-      val expected = Dedup.bandedSignatures(batchDf, 3, 16, 4)
+      val expected = Dedup.bandedSignatures(batchDf)
         .join(capped, Seq("band", "bh"))
-        .join(Dedup.shingleSets(batchDf, 3), Seq("doc_id"))
+        .join(Dedup.shingleSets(batchDf), Seq("doc_id"))
         .join(idx.sets.select(col("doc_id").as("near_id"), col("sh").as("r_sh")),
           Seq("near_id"))
         .select(col("doc_id"), col("near_id"), col("band"),

@@ -12,7 +12,7 @@ class EditDistanceSpec extends SparkSpec {
   test("exact copies verify at distance 0, similarity 1") {
     val docs = Seq((1L, base), (2L, base), (3L, "completely different text about maritime law"))
       .toDF("doc_id", "text")
-    val out = Dedup.editVerified(docs, 3, 16, 4, prefixChars = 256)
+    val out = Dedup.editVerified(docs, prefixChars = 256)
       .as[(Long, Long, Long, Int, Double)].collect()
     assert(out.exists { case (a, b, _, d, s) => a == 1L && b == 2L && d == 0 && s == 1.0 })
     assert(out.forall { case (a, b, _, _, _) => Set(a, b) != Set(1L, 3L) && Set(a, b) != Set(2L, 3L) },
@@ -25,7 +25,7 @@ class EditDistanceSpec extends SparkSpec {
     val textA = base + " " + base
     val textB = textA.replaceFirst("quick", "qvick")
     val docs = Seq((1L, textA), (2L, textB)).toDF("doc_id", "text")
-    val out = Dedup.editVerified(docs, 3, 16, 4, prefixChars = 256)
+    val out = Dedup.editVerified(docs, prefixChars = 256)
       .as[(Long, Long, Long, Int, Double)].collect()
     assert(out.length == 1, s"expected the pair as a candidate, got ${out.toSeq}")
     val (_, _, _, d, s) = out.head
@@ -40,7 +40,7 @@ class EditDistanceSpec extends SparkSpec {
     val accented = base.replaceFirst("quick", "qu\u00efck") // i-diaeresis
     val docs = Seq((1L, base + " " + base), (2L, (accented + " " + accented)))
       .toDF("doc_id", "text")
-    val out = Dedup.editVerified(docs, 3, 16, 4, prefixChars = 256)
+    val out = Dedup.editVerified(docs, prefixChars = 256)
       .as[(Long, Long, Long, Int, Double)].collect()
     assert(out.length == 1, s"near-dup pair must survive banding: ${out.toSeq}")
     assert(out.head._4 == 2, s"one '?'-vs-'i' substitution per copy, got ${out.head._4}")
@@ -50,7 +50,7 @@ class EditDistanceSpec extends SparkSpec {
     val longA = base * 5 + " tail-A"
     val longB = base * 5 + " completely-different-tail-B"
     val docs = Seq((1L, longA), (2L, longB)).toDF("doc_id", "text")
-    val out = Dedup.editVerified(docs, 3, 16, 4, prefixChars = 64)
+    val out = Dedup.editVerified(docs, prefixChars = 64)
       .as[(Long, Long, Long, Int, Double)].collect()
     assert(out.length == 1 && out.head._4 == 0,
       "distance computed on the 64-char normalized prefix only (the documented bound)")

@@ -24,7 +24,7 @@ class LlmSpec extends SparkSpec {
       (2L, "the quick brown fox jumps over the lazy dog again and again"), // dup of 1
       (3L, "completely different words that share nothing with the others at all")
     ).toDF("doc_id", "text")
-    val pairs = Dedup.minhashCandidates(docs, 3, 16, 4)
+    val pairs = Dedup.minhashCandidates(docs)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(pairs.toSeq == Seq((1L, 2L, 4L)), "exact dup shares all 4 bands; no other pair")
   }
@@ -45,18 +45,6 @@ class LlmSpec extends SparkSpec {
     assert(out.filter(_._1 == 3L).map(_._2).toSeq == Seq("common"), "only one distinct token")
     val zebra = out.find(t => t._1 == 1L && t._2 == "zebra").get
     assert(zebra._3 == 1L && zebra._4 == 1L)
-  }
-
-  test("jaccard: identical=1, disjoint pairs absent (blocking)") {
-    val docs = Seq(
-      (1L, "alpha beta gamma delta epsilon zeta"),
-      (2L, "alpha beta gamma delta epsilon zeta"),
-      (3L, "alpha beta gamma delta epsilon eta") // same 20-char prefix block
-    ).toDF("doc_id", "text")
-    val out = Dedup.ngramJaccard(docs, 3, 20)
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    assert(out((1L, 2L)) == 1.0)
-    assert(out((1L, 3L)) > 0.4 && out((1L, 3L)) < 1.0)
   }
 
   test("simhash: identical tokens -> identical hash; value is 32-bit") {
@@ -312,7 +300,7 @@ class LlmSpec extends SparkSpec {
       (2L, "the quick brown fox jumps over the lazy dog again and again"),
       (3L, "completely different words that share nothing with the others at all")
     ).toDF("doc_id", "text")
-    val out = Dedup.verifiedJaccard(docs, 3, 16, 4).collect()
+    val out = Dedup.verifiedJaccard(docs).collect()
       .map(r => ((r.getLong(0), r.getLong(1)), (r.getLong(2), r.getDouble(3)))).toMap
     assert(out.keySet == Set((1L, 2L)), "only the LSH candidate pair is verified")
     assert(out((1L, 2L)) == ((4L, 1.0)), "identical docs: 4 shared bands, jaccard 1.0")

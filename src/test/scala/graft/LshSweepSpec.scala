@@ -24,13 +24,13 @@ class LshSweepSpec extends SparkSpec {
   }
 
   private def candSet(sig: DataFrame, numBands: Int): Set[(Long, Long)] =
-    Dedup.minhashCandidatesFrom(Dedup.bandsFromSignature(sig, 16, numBands))
+    Dedup.minhashCandidatesFrom(Dedup.bandsFromSignature(sig, numBands))
       .select("a", "b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
 
   test("candidate sets are nested as bands double (rows halve)") {
     val th = Dedup.tokenHashFrame(corpus).localCheckpoint()
-    val sig = Dedup.signatureFrame(th, shingleSize = 3, numPerms = 16)
+    val sig = Dedup.signatureFrame(th)
       .localCheckpoint()
     val sets = Seq(2, 4, 8, 16).map(b => b -> candSet(sig, b)).toMap
     // an 8-row band match implies both 4-row halves match, etc. — the
@@ -46,10 +46,10 @@ class LshSweepSpec extends SparkSpec {
 
   test("bandsFromSignature round-trips the fused bandedFromTokenHashes path") {
     val th = Dedup.tokenHashFrame(corpus).localCheckpoint()
-    val fused = Dedup.bandedFromTokenHashes(th, 3, 16, 4)
+    val fused = Dedup.bandedFromTokenHashes(th)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     val staged = Dedup.bandsFromSignature(
-        Dedup.signatureFrame(th, 3, 16), 16, 4)
+        Dedup.signatureFrame(th), 4)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     assert(fused == staged)
   }
@@ -57,8 +57,8 @@ class LshSweepSpec extends SparkSpec {
   test("docs with no shingles produce no signature row") {
     import spark.implicits._
     val df = Seq((1L, "a b"), (2L, "long enough text for shingling to work"))
-      .toDF("doc_id", "text") // doc 1 has < shingleSize tokens
-    val sig = Dedup.signatureFrame(Dedup.tokenHashFrame(df), 3, 16)
+      .toDF("doc_id", "text") // doc 1 has < Dedup.ShingleSize tokens
+    val sig = Dedup.signatureFrame(Dedup.tokenHashFrame(df))
     assert(sig.select("doc_id").collect().map(_.getLong(0)).toSet == Set(2L))
   }
 
@@ -72,7 +72,7 @@ class LshSweepSpec extends SparkSpec {
         concat(lit("alpha beta gamma delta epsilon zeta eta theta doc "),
           col("id").cast("string")).as("text"))
     val ex = intercept[IllegalArgumentException] {
-      Dedup.recallAudit(big, 3, 16, 4, 500000L).collect()
+      Dedup.recallAudit(big, 500000L).collect()
     }
     assert(ex.getMessage.contains("bounded sample"))
   }

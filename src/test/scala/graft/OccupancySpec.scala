@@ -23,7 +23,7 @@ class OccupancySpec extends SparkSpec {
       (9002L, "an original document about distributed query engines and shuffles"))
     val docs = (flood ++ honest).toDF("doc_id", "text")
 
-    val cand = Dedup.minhashCandidates(docs, 3, 16, 4)
+    val cand = Dedup.minhashCandidates(docs)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(cand.toSeq == Seq((9001L, 9002L, 4L)),
       s"flood bucket diverted, honest near-dup pair survives; got ${cand.length} pairs")
@@ -37,10 +37,10 @@ class OccupancySpec extends SparkSpec {
 
   test("minhash: uncapped contrast — the quadratic blowup the cap prevents") {
     val docs = (1L to 300L).map(i => (i, floodText)).toDF("doc_id", "text")
-    val uncapped = Dedup.minhashCandidates(docs, 3, 16, 4, maxBucket = Int.MaxValue).count()
+    val uncapped = Dedup.minhashCandidates(docs, maxBucket = Int.MaxValue).count()
     assert(uncapped == 300L * 299L / 2,
       "without the cap one bucket yields C(300,2) pairs")
-    assert(Dedup.minhashCandidates(docs, 3, 16, 4, maxBucket = 100).count() == 0L,
+    assert(Dedup.minhashCandidates(docs, maxBucket = 100).count() == 0L,
       "capping below the bucket occupancy diverts every pair")
   }
 

@@ -171,7 +171,7 @@ class PlanGuardSpec extends SparkSpec {
 
   test("signatureIndex: both members derive from the stored token hashes — no md5 re-derivation") {
     import graft.llm.Dedup
-    val idx = Dedup.signatureIndex(Tables.documents(spark, d), 3, 16, 4)
+    val idx = Dedup.signatureIndex(Tables.documents(spark, d))
     // banded is a checkpoint (LogicalRDD) and sets is a projection over the
     // checkpointed th frame: if either plan mentions md5, someone re-rooted
     // an index member at the raw corpus and the one-pass contract is gone
@@ -302,7 +302,7 @@ class PlanGuardSpec extends SparkSpec {
     // consumer must contain zero md5 (the tokenize→md5 pass already ran
     // into executor-local blocks) — if md5 reappears, CollapseProject got
     // hold of the alias again and the per-element re-tokenization is back.
-    val sets = Dedup.shingleSets(Tables.documents(spark, d), shingleSize = 3)
+    val sets = Dedup.shingleSets(Tables.documents(spark, d))
     val singleUse = sets.select(col("doc_id"), explode(col("sh")).as("g"))
     val plan = singleUse.queryExecution.optimizedPlan.toString
     assert(!plan.toLowerCase.contains("md5"),

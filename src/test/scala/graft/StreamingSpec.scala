@@ -214,7 +214,7 @@ class StreamingSpec extends SparkSpec {
         (11L, "known corpus document one"), (12L, "KNOWN   corpus Document two"),
         (13L, "another novel text")).toDF("doc_id", "text"))
       val batchKeep = graft.llm.Dedup.incremental(all, col("doc_id") >= 10,
-          shingleSize = 3, numPerms = 16, numBands = 4, threshold = 1.1) // near layer off
+          threshold = 1.1) // near layer off
         .filter(!col("is_exact")).select("doc_id")
         .collect().map(_.getLong(0)).toSet
       assert(batchKeep == got, s"streaming admission == batch exact layer: $batchKeep")
@@ -257,18 +257,17 @@ class StreamingSpec extends SparkSpec {
 
   test("admitBatch: intra-batch duplicates resolve exactly like one-at-a-time processing") {
     import graft.streaming.DocStream
-    // Chain A≈B≈C with A≉C (B = A's tokens ++ C's tokens, so jac(A,B) =
-    // jac(B,C) = 10/22 ≈ 0.45 over 3-shingles, jac(A,C) = 0). Sequential
-    // semantics: A admitted; B rejected (dups ADMITTED A); C ADMITTED —
-    // its only duplicate B was rejected, and the corpus keeps one
-    // representative per content. 16 one-row bands make the LSH catch
-    // deterministic at jac 0.45.
-    val aToks = (1 to 12).map(i => s"alpha$i")
-    val cToks = (1 to 12).map(i => s"gamma$i")
+    // Chain A≈B≈C with A≉C at threshold 0.85, in the production MinHash
+    // geometry (4 bands of 4 rows): A = t1..t40, B = t3..t42, C = t5..t44,
+    // so over 3-shingles jac(A,B) = jac(B,C) = 36/40 = 0.9 and jac(A,C) =
+    // 34/42 ≈ 0.81. Sequential semantics: A admitted; B rejected (dups
+    // ADMITTED A); C ADMITTED — its only duplicate B was rejected, and the
+    // corpus keeps one representative per content.
+    def toks(from: Int): String = (from until from + 40).map(i => s"t$i").mkString(" ")
     val arrivals = Seq(
-      10L -> aToks.mkString(" "),
-      11L -> (aToks ++ cToks).mkString(" "),
-      12L -> cToks.mkString(" "),
+      10L -> toks(1),
+      11L -> toks(3),
+      12L -> toks(5),
       20L -> "ab", 21L -> "ab", // exact intra pair below the shingle width
       30L -> "seed corpus document with plenty of unrelated content here")
     val index = Seq(
@@ -277,18 +276,18 @@ class StreamingSpec extends SparkSpec {
     // guard against a vacuous pass: the LSH must actually surface the
     // chain pairs at this geometry
     val pairs = DocStream.intraBatchPairs(arrivals.toDF("doc_id", "text"),
-        shingleSize = 3, numPerms = 16, numBands = 16, threshold = 0.35)
+        threshold = 0.85)
       .select("doc_id", "near_id").distinct()
       .collect().map(r => (r.getLong(1), r.getLong(0))).toSet
     assert(pairs.contains((10L, 11L)) && pairs.contains((11L, 12L)),
       s"LSH must surface both chain pairs, got $pairs")
-    assert(!pairs.contains((10L, 12L)), s"A and C share nothing: $pairs")
+    assert(!pairs.contains((10L, 12L)), s"A and C fall below the threshold: $pairs")
     def admittedOf(batches: Seq[Seq[(Long, String)]]): Set[Long] = {
       var idx = index
       var admitted = Set.empty[Long]
       for (b <- batches) {
         val got = DocStream.admitBatch(b.toDF("doc_id", "text"), idx,
-            shingleSize = 3, numPerms = 16, numBands = 16, threshold = 0.35)
+            threshold = 0.85)
           .select("doc_id", "text").collect()
         admitted ++= got.map(_.getLong(0))
         idx = idx.unionByName(spark.createDataFrame(
