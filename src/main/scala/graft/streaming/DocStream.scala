@@ -79,8 +79,8 @@ object DocStream {
     * static side is the corpus's set-bit table ([[BloomK]] seeded portable
     * hashes of each corpus `sig` into a [[BloomM]]-bit space, deduped —
     * ≤ M rows at ANY corpus size); each arriving doc's K bits probe it
-    * through K stream-static broadcast LEFT joins — O(1) hash lookups per row, no
-    * explode-then-regroup (a streaming groupBy would be a stateful
+    * through K stream-static broadcast LEFT joins — O(1) hash lookups per
+    * row, no explode-then-regroup (a streaming groupBy would be a stateful
     * aggregate; this stays append-mode legal with zero state). Emits
     * (doc_id, bloom_hit). bloom_hit=false docs are GUARANTEED novel (the
     * Bloom no-false-negative contract) and skip the dedup join entirely;
