@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Bench.r3
 import graft.analog.{OccurrenceAnalog => OA}
-import graft.tiles.{Projections, Pyramid}
+import graft.tiles.Projections
 
 /** End-to-end bench of the COMPOSED pipeline (the reference's actual
   * workload: 4 projections × zooms through materialization barriers,
@@ -51,7 +51,7 @@ object BenchPipeline {
     // ---- barrier-read proof: consumers scan the materialized parquet,
     // never the lineage above it. Two representative consumers:
     //   1. the threshold aggregation over `prepared`
-    //   2. a zoom-0 tile build over `tile_input`
+    //   2. the zoom-0 tile sink over `tile_input`, as the pipeline runs it
     // Each plan must contain >= 1 scan of its barrier and ZERO scans of the
     // raw source table (a recompute would re-read events.parquet).
     def scanCounts(plan: String, barrierName: String): (Int, Int) = {
@@ -63,8 +63,8 @@ object BenchPipeline {
       .agg(sum("occCount").as("n")).filter(col("n") >= threshold)
       .queryExecution.executedPlan.toString
     val (aggBarrier, aggSource) = scanCounts(aggPlan, "prepared")
-    val tilePlan = Pyramid.build(res.tileInput, Projections.fromEpsg("EPSG:3857"),
-        0, cfg.tileSize, cfg.bufferSize, cfg.saltModulo)
+    val tilePlan = MapPipeline.tileSink(res.tileInput, Projections.fromEpsg("EPSG:3857"), 0,
+        cfg)(spark)
       .queryExecution.executedPlan.toString
     val (tileBarrier, tileSource) = scanCounts(tilePlan, "tile_input")
     require(aggBarrier >= 1 && aggSource == 0,

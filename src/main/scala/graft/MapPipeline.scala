@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 import graft.expr.BorYear
 import graft.io.Sinks
 import graft.points.PointMap
-import graft.tiles.{Projections, Pyramid, TileAddressing}
+import graft.tiles.{Projection, Projections, Pyramid, TileAddressing}
 
 /** The complete map-build pipeline — the engine's analog of the reference's
   * `MapBuilder.run()` → `PointMapBuilder` / `TileMapBuilder` flow:
@@ -26,12 +26,17 @@ import graft.tiles.{Projections, Pyramid, TileAddressing}
   *     ships it in UDF closures (`MapBuilder.java:180-206`) — the one part
   *     of its design that cannot scale; we use broadcast semi/anti joins.
   *  3. Point path: per-view feature blobs under salted keys
-  *     (`PointMapBuilder.java:49-93`).
+  *     (`PointMapBuilder.java:49-93`). Feature rows go straight to the
+  *     salted sink, whose sort and one fold pass build the blobs: one
+  *     exchange ([[pointSink]]).
   *  4. Tile path: one chain per projection, each running its zooms
-  *     deepest first: the t1→t3 cascade, deterministic blob encode,
-  *     salt-partitioned sorted sink (`TileMapBuilder.java:51-77,113-200`).
-  *     EPSG:3031 runs on a south-hemisphere pre-filter
-  *     (`TileMapBuilder.java:59-62`).
+  *     deepest first ([[tileSink]]): t1's per-pixel sum
+  *     (`TileMapBuilder.java:113-127`), exploded onto buffered tiles at
+  *     pixel × feature grain, then the salted sink, whose sort and one fold
+  *     pass stand in for the reference's t2/t3 collects and encode
+  *     (`TileMapBuilder.java:130-200`): two exchanges per stage where the
+  *     reference shuffles four times. EPSG:3031 runs on a south-hemisphere
+  *     pre-filter (`TileMapBuilder.java:59-62`).
   *
   * The barriers run in order on the caller thread. The point sink and the
   * projection chains only read barriers, so they run as concurrent Spark
@@ -126,7 +131,11 @@ object MapPipeline {
   def run(spark: SparkSession, occ: DataFrame, mapKeysArray: Column, cfg: Config): Result = {
     implicit val s: SparkSession = spark
     // every projection resolves before the first barrier: an unsupported
-    // SRS leaves nothing written
+    // or repeated SRS leaves nothing written (two chains of one SRS would
+    // overwrite the same dirs at the same time)
+    cfg.projections.diff(cfg.projections.distinct).headOption.foreach { epsg =>
+      throw new IllegalArgumentException(s"Duplicate projection: $epsg")
+    }
     val chains = cfg.projections.map { epsg =>
       val proj = Projections.fromEpsg(epsg)
       val name = epsg.replaceAll(":", "_")
@@ -169,13 +178,10 @@ object MapPipeline {
       val pointsPath = s"${cfg.workDir}/points"
       branches.submit {
         stage("points_sink") {
-          // both codecs in one encode scan, mirroring the tile sink: `value` =
+          // both codecs in one encode pass, mirroring the tile sink: `value` =
           // the oracle-checkable layout, `pb` = the protobuf wire bytes the
           // reference bulk-loads (`PointMapBuilder.java:84-92`)
-          Sinks.writeSorted(
-            Sinks.encodePointsWithPb(PointMap.pointFeatures(pointInput, cfg.saltModulo))
-              .toDF("key", "value", "pb"),
-            cfg.saltModulo, pointsPath)
+          Sinks.write(pointSink(pointInput, cfg), pointsPath)
         }
       }
 
@@ -196,14 +202,7 @@ object MapPipeline {
         branches.submit {
           zooms.foreach { case (zoom, name) =>
             stage(name) {
-              val t3 = Pyramid.build(input, proj, zoom, cfg.tileSize, cfg.bufferSize,
-                cfg.saltModulo)
-              // both codecs in one encode scan: `value` = the oracle-checkable
-              // deterministic layout, `mvt` = real Mapbox Vector Tile wire bytes
-              Sinks.writeSorted(
-                Sinks.encodeTilesWithMvt(t3, cfg.tileSize, cfg.borCodes)
-                  .toDF("key", "value", "mvt"),
-                cfg.saltModulo, s"${cfg.workDir}/$name")
+              Sinks.write(tileSink(input, proj, zoom, cfg), s"${cfg.workDir}/$name")
             }
           }
         }
@@ -218,6 +217,24 @@ object MapPipeline {
       case _ => result.toOption.get
     }
   }
+
+  /** One tile stage's sink frame, as [[run]] writes it to
+    * `tiles/<epsg>/z<zoom>`: `value` = the oracle-checkable deterministic
+    * layout, `mvt` = real Mapbox Vector Tile wire bytes, the bytes of
+    * `Sinks.encodeTilesWithMvt(Pyramid.build(..))`.
+    */
+  def tileSink(input: DataFrame, proj: Projection, zoom: Int, cfg: Config)
+      (implicit spark: SparkSession): DataFrame =
+    Sinks.groupedTiles(
+      Pyramid.tileFeatures(Pyramid.pixelCounts(input, proj, zoom, cfg.tileSize),
+        TileAddressing(proj, cfg.tileSize, cfg.bufferSize), zoom, cfg.saltModulo),
+      cfg.saltModulo, cfg.tileSize, cfg.borCodes)
+
+  /** The point sink frame, as [[run]] writes it to `points`: the bytes of
+    * `Sinks.encodePointsWithPb(PointMap.pointFeatures(..))`.
+    */
+  def pointSink(input: DataFrame, cfg: Config)(implicit spark: SparkSession): DataFrame =
+    Sinks.groupedPoints(PointMap.pointRows(input, cfg.saltModulo), cfg.saltModulo)
 
   /** The independent branches of one [[run]]: a fixed pool with one thread
     * per branch. Threads are created by `submit` on the caller thread, so

@@ -32,8 +32,9 @@ import scala.collection.mutable
   * `ProtobufTiles.java:45`).
   *
   * Determinism: features appear in the input array's order, and
-  * [[graft.points.PointMap.pointFeatures]] sorts that array — byte-stable
-  * across runs and cluster topologies.
+  * [[graft.points.PointMap.pointFeatures]] sorts that array ([[Sinks.groupedPoints]]
+  * sorts its rows the same way) — byte-stable across runs and cluster
+  * topologies.
   */
 object PointPb {
 

@@ -2,6 +2,8 @@ package graft.io
 
 import java.nio.ByteBuffer
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -26,7 +28,13 @@ import graft.expr.Salt
   * hand-rolled [[Mvt]] writer emits real Mapbox Vector Tile bytes (the
   * wire format the reference produces via `no.ecc.vectortile`,
   * `VectorTiles.java:39-85`). [[encodeTilesWithMvt]] writes both side by
-  * side in one pass; [[encodePointsWithPb]] does the same for points.
+  * side in one pass over collected tiles; [[encodePointsWithPb]] does the
+  * same for points.
+  *
+  * The pipeline's sinks, [[groupedTiles]] and [[groupedPoints]], skip
+  * those collects: they take ungrouped rows, whose salt exchange and a sort
+  * on the key and then the blob's own order leave each key's rows
+  * consecutive, and one pass folds them into the same bytes.
   */
 object Sinks {
 
@@ -50,7 +58,79 @@ object Sinks {
     * salt-partitioned and key-sorted within partitions.
     */
   def writeSorted(df: DataFrame, saltModulo: Int, path: String): Unit =
-    sortedBySalt(df, saltModulo).write.mode("overwrite").parquet(path)
+    write(sortedBySalt(df, saltModulo), path)
+
+  /** Write a sink frame ([[sortedBySalt]], [[groupedTiles]],
+    * [[groupedPoints]]) as parquet, one file per salt partition.
+    */
+  def write(sink: DataFrame, path: String): Unit =
+    sink.write.mode("overwrite").parquet(path)
+
+  /** (key, custom value, mvt bytes) from [[graft.tiles.Pyramid.tileFeatures]]
+    * rows `(key, x, y, borYear, occCount)`: one row per tile, partitioned
+    * and sorted like [[sortedBySalt]], with the bytes of
+    * [[encodeTilesWithMvt]] over `Pyramid.tiles`. Consecutive rows of a
+    * pixel fold into its features, consecutive pixels of a key into its tile.
+    */
+  def groupedTiles(rows: DataFrame, saltModulo: Int, extent: Int,
+                   codes: Seq[(String, Int)] = graft.expr.BorYear.EventTypeCodes)
+      (implicit spark: SparkSession): DataFrame = {
+    val codeMap = codes.map(_.swap).toMap
+    grouped(rows, saltModulo, Seq("x", "y", "borYear"), "mvt") { rs =>
+      val pixels = mutable.ArrayBuffer.empty[Row]
+      var i = 0
+      while (i < rs.length) {
+        val x = rs(i).getInt(1); val y = rs(i).getInt(2)
+        val feats = mutable.ArrayBuffer.empty[Row]
+        while (i < rs.length && rs(i).getInt(1) == x && rs(i).getInt(2) == y) {
+          feats += Row(rs(i).getInt(3), rs(i).getLong(4))
+          i += 1
+        }
+        pixels += Row(x, y, feats.toSeq)
+      }
+      val tile = pixels.toSeq
+      (encodeTileValue(tile), Mvt.encode(mvtLayers(tile, codeMap), extent))
+    }
+  }
+
+  /** (key, custom value, protobuf bytes) from
+    * [[graft.points.PointMap.pointRows]] rows
+    * `(key, lat, lng, borYear, occCount)`: one row per view, with the bytes
+    * of [[encodePointsWithPb]] over `PointMap.pointFeatures`, whose
+    * `array_sort` order the sort on all five columns gives.
+    */
+  def groupedPoints(rows: DataFrame, saltModulo: Int)
+      (implicit spark: SparkSession): DataFrame =
+    grouped(rows, saltModulo, Seq("lat", "lng", "borYear", "occCount"), "pb") { rs =>
+      encodePoints(rs.map(r => Row(r.getDouble(1), r.getDouble(2), r.getInt(3), r.getLong(4))))
+    }
+
+  /** Salt exchange, sort within partitions on `key` then `order`, and one
+    * pass that hands each key's consecutive rows to `encode`: the frame
+    * `(key, value, <codec>)`. Holds one key's rows at a time; the sort is
+    * Spark's spilling external sorter.
+    */
+  private def grouped(rows: DataFrame, saltModulo: Int, order: Seq[String], codec: String)
+      (encode: IndexedSeq[Row] => (Array[Byte], Array[Byte]))
+      (implicit spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    rows.repartitionById(saltModulo, Salt.partitionOf(col("key"), saltModulo))
+      .sortWithinPartitions(("key" +: order).map(col): _*)
+      .mapPartitions { it =>
+        val rs = it.buffered
+        new Iterator[(String, Array[Byte], Array[Byte])] {
+          def hasNext: Boolean = rs.hasNext
+          def next(): (String, Array[Byte], Array[Byte]) = {
+            val key = rs.head.getString(0)
+            val group = mutable.ArrayBuffer.empty[Row]
+            while (rs.hasNext && rs.head.getString(0) == key) group += rs.next()
+            val (value, wire) = encode(group.toIndexedSeq)
+            (key, value, wire)
+          }
+        }
+      }
+      .toDF("key", "value", codec)
+  }
 
   /** Deterministic tile-blob encoding (vector-tile analog, `VectorTiles.java:39-85`):
     * for each pixel (x, y) a feature list of (borYear, count), all big-endian:
@@ -81,21 +161,21 @@ object Sinks {
     */
   private def mvtLayers(pixels: Seq[Row], codes: Map[Int, String])
       : Seq[(String, Seq[Mvt.PointFeature])] = {
-    val layers = scala.collection.mutable.LinkedHashMap
-      .empty[String, scala.collection.mutable.ArrayBuffer[Mvt.PointFeature]]
+    val layers = mutable.LinkedHashMap
+      .empty[String, mutable.ArrayBuffer[Mvt.PointFeature]]
     pixels.foreach { p =>
       val x = p.getInt(0); val y = p.getInt(1)
-      val perBor = scala.collection.mutable.LinkedHashMap
-        .empty[String, scala.collection.mutable.ArrayBuffer[(String, Long)]]
+      val perBor = mutable.LinkedHashMap
+        .empty[String, mutable.ArrayBuffer[(String, Long)]]
       p.getSeq[Row](2).foreach { f =>
         val enc = f.getInt(0); val count = f.getLong(1)
         val bor = codes.getOrElse(enc % 100, "UNKNOWN")
         val year = enc / 100
-        perBor.getOrElseUpdate(bor, scala.collection.mutable.ArrayBuffer.empty) +=
+        perBor.getOrElseUpdate(bor, mutable.ArrayBuffer.empty) +=
           ((if (year > 0) year.toString else "null") -> count)
       }
       perBor.foreach { case (bor, attrs) =>
-        layers.getOrElseUpdate(bor, scala.collection.mutable.ArrayBuffer.empty) +=
+        layers.getOrElseUpdate(bor, mutable.ArrayBuffer.empty) +=
           Mvt.PointFeature(x, y, attrs.toSeq)
       }
     }
@@ -161,13 +241,18 @@ object Sinks {
       (implicit spark: SparkSession): Dataset[(String, Array[Byte], Array[Byte])] = {
     import spark.implicits._
     points.select(col("key"), col("features")).map { r =>
-      val feats = r.getSeq[Row](1)
-      val pb = PointPb.encode(feats.map { f =>
-        val borYear = f.getInt(2)
-        PointPb.Feature(f.getDouble(0), f.getDouble(1),
-          bor = borYear % 100, year = borYear / 100, count = f.getLong(3))
-      })
-      (r.getString(0), encodePointValue(feats), pb)
+      val (value, pb) = encodePoints(r.getSeq[Row](1))
+      (r.getString(0), value, pb)
     }
+  }
+
+  /** Both point codecs over one view's features `(lat, lng, borYear, count)`. */
+  private def encodePoints(feats: Seq[Row]): (Array[Byte], Array[Byte]) = {
+    val pb = PointPb.encode(feats.map { f =>
+      val borYear = f.getInt(2)
+      PointPb.Feature(f.getDouble(0), f.getDouble(1),
+        bor = borYear % 100, year = borYear / 100, count = f.getLong(3))
+    })
+    (encodePointValue(feats), pb)
   }
 }

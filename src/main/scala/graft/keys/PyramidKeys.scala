@@ -363,7 +363,7 @@ private[graft] object PyramidKeys {
 
     // ---- A5: full tile assembly at zoom 1 (TileMapBuilder.java:139-156)
     // String-serialized pre-collect, as in A4 (struct path stays exercised
-    // by MapPipeline/PipelineSpec, where Sinks.encodeTilesWithMvt needs structs).
+    // by PipelineSpec/SinksSpec, where Sinks.encodeTilesWithMvt needs structs).
     Key("agg_collect_tile", (s, d) => {
       val zoom = 1
       val adr = TileAddressing(Mercator3857, TileSize, BufferSize)

@@ -17,10 +17,17 @@ object PointMap {
     * (`PointMapBuilder.java:53-80`).
     */
   def pointFeatures(input: DataFrame, saltModulo: Int): DataFrame =
-    input
-      .select(
-        Salt.pointKey(col("mapKey"), saltModulo).as("key"),
+    pointRows(input, saltModulo)
+      .select(col("key"),
         struct(col("lat"), col("lng"), col("borYear"), col("occCount")).as("feature"))
       .groupBy("key")
       .agg(array_sort(collect_list(col("feature"))).as("features"))
+
+  /** The same input at feature grain under the salted mapKey:
+    * `(key, lat, lng, borYear, occCount)`, the rows
+    * [[graft.io.Sinks.groupedPoints]] folds into one blob per view.
+    */
+  def pointRows(input: DataFrame, saltModulo: Int): DataFrame =
+    input.select(Salt.pointKey(col("mapKey"), saltModulo).as("key"),
+      col("lat"), col("lng"), col("borYear"), col("occCount"))
 }

@@ -15,6 +15,12 @@ import graft.expr.{BorYear, Salt}
   *   - t3 (`:139-156`): explode buffered tile addresses, collect per tile
   *     under a salted key.
   *
+  * [[build]] runs that cascade for the query keys. The pipeline stops
+  * after t1: [[tileFeatures]] explodes t1 onto the buffered tiles, and the
+  * salted sink's own exchange, sort and fold
+  * ([[graft.io.Sinks.groupedTiles]]) stand in for t2 and t3, so a pipeline
+  * stage shuffles twice (t1, salt) instead of four times (t1, t2, t3, salt).
+  *
   * Determinism: every `collect_list` is wrapped in `array_sort` (the
   * reference's lists are order-nondeterministic; sorted arrays make results
   * oracle-checkable and reproducible across cluster sizes).
@@ -22,11 +28,12 @@ import graft.expr.{BorYear, Salt}
   * Scale notes (100 TB posture): prepareInput's output should be
   * checkpointed (parquet) by the caller before the per-zoom loop — see
   * [[graft.MapPipeline.run]] — exactly as the reference materializes
-  * its CTAS table (`MapBuilder.java:130-133`). The t3 `collect_list` is an
-  * `ObjectHashAggregate`; group cardinality at zoom z is bounded by the tile
-  * count × map views, and each group's payload is one tile's pixels
-  * (≤ (tileSize+2·buffer)²), which bounds executor memory independent of
-  * input rows.
+  * its CTAS table (`MapBuilder.java:130-133`). In the query keys the t3
+  * `collect_list` is an `ObjectHashAggregate`; group cardinality at zoom z
+  * is bounded by the tile count × map views, and each group's payload is
+  * one tile's pixels (≤ (tileSize+2·buffer)²), which bounds executor memory
+  * independent of input rows. The pipeline's fold holds the same one tile
+  * at a time, behind Spark's spilling external sort.
   *
   * Coordinate width: the reference's int-typed tile schema stops at z16
   * (`TileXYUDF.java:65-69`). Here pixels and tile ids take their type from
@@ -108,22 +115,45 @@ object Pyramid {
     * salted tile key (`TileMapBuilder.java:139-156`).
     */
   def tiles(t2: DataFrame, addressing: TileAddressing, zoom: Int, saltModulo: Int): DataFrame =
-    t2.select(
-        col("mapKey"),
-        explode(addressing.addresses(zoom, col("xy.x"), col("xy.y"))).as("tile"),
-        col("features"))
+    addressed(t2, addressing, zoom, saltModulo, "features")
+      .select(col("key"), struct(col("x"), col("y"), col("features")).as("pixel"))
+      .groupBy("key")
+      .agg(array_sort(collect_list(col("pixel"))).as("tile"))
+
+  /** t1 re-addressed onto buffered tiles at pixel × feature grain, without
+    * t2's and t3's collects: `(key, x, y, borYear, occCount)`, one row per
+    * (tile, local pixel, borYear). The input of
+    * [[graft.io.Sinks.groupedTiles]], whose salt exchange and key-ordered
+    * sort rebuild t3's grouping: local (x, y) is unique within a tile key
+    * (addressing is injective, wraps included), so rows sorted on
+    * (key, x, y, borYear) list each tile's pixels, and each pixel's
+    * features, in the order t2's and t3's `array_sort` gives them.
+    */
+  def tileFeatures(t1: DataFrame, addressing: TileAddressing, zoom: Int,
+      saltModulo: Int): DataFrame =
+    addressed(
+      t1.filter(col("xy").isNotNull).select(col("mapKey"), col("xy"),
+        col("borYearCount.borYear").as("borYear"), col("borYearCount.occCount").as("occCount")),
+      addressing, zoom, saltModulo, "borYear", "occCount")
+
+  /** `(mapKey, xy, carry*)` rows exploded onto the buffered tiles of their
+    * global pixel `xy`: `(key, x, y, carry*)` under the salted tile key.
+    */
+  private def addressed(df: DataFrame, addressing: TileAddressing, zoom: Int,
+      saltModulo: Int, carry: String*): DataFrame =
+    df.select(
+        col("mapKey") +:
+        explode(addressing.addresses(zoom, col("xy.x"), col("xy.y"))).as("tile") +:
+        carry.map(col): _*)
       .select(
         Salt.tileKey(col("mapKey"), lit(zoom), col("tile.tileX"), col("tile.tileY"), saltModulo)
-          .as("key"),
+          .as("key") +:
         // local pixel coords live in [-buffer, tileSize+buffer) at EVERY
         // zoom — only tile ids outgrow Int past z16 — so the blob codecs
         // keep one int-typed pixel schema
-        struct(
-          col("tile.pixelX").cast("int").as("x"),
-          col("tile.pixelY").cast("int").as("y"),
-          col("features")).as("pixel"))
-      .groupBy("key")
-      .agg(array_sort(collect_list(col("pixel"))).as("tile"))
+        col("tile.pixelX").cast("int").as("x") +:
+        col("tile.pixelY").cast("int").as("y") +:
+        carry.map(col): _*)
 
   /** Full cascade for one projection × zoom. */
   def build(

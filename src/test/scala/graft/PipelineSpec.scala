@@ -294,6 +294,18 @@ class PipelineSpec extends SparkSpec {
     assert(work.toFile.list().isEmpty, s"nothing written: ${work.toFile.list().toSeq}")
   }
 
+  test("a repeated projection fails before any barrier or sink is written") {
+    // two chains of one SRS would overwrite the same tile dirs concurrently
+    val work = Files.createTempDirectory("graft_pipeline_dup")
+    val cfg = MapPipeline.Config(workDir = work.toString, maxZoom = 1, threshold = 500,
+      projections = Seq("EPSG:3857", "EPSG:4326", "EPSG:3857"))
+    val e = intercept[IllegalArgumentException] {
+      MapPipeline.run(spark, occurrences(), OA.mapKeysArray, cfg)
+    }
+    assert(e.getMessage == "Duplicate projection: EPSG:3857")
+    assert(work.toFile.list().isEmpty, s"nothing written: ${work.toFile.list().toSeq}")
+  }
+
   test("failing tile chains: the first names its stage, the others ride along, the rest finish") {
     val work = Files.createTempDirectory("graft_pipeline_fail")
     // a regular file where a projection's tile dirs go: that chain's first

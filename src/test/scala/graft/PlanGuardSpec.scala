@@ -33,29 +33,90 @@ class PlanGuardSpec extends SparkSpec {
       s"no createDataFrame round-trip — the rank must be in-plan:\n$plan")
   }
 
-  test("writeSorted: one salt pass-through exchange, no RDD round trip") {
-    import org.apache.spark.sql.catalyst.plans.physical.ShufflePartitionIdPassThrough
+  /** Runs `write` into a fresh dir: the executed plans of its actions,
+    * their shuffle exchanges and every node name, analyzed and physical.
+    */
+  private def sinkPlans(write: String => Unit)
+      : (Seq[org.apache.spark.sql.execution.SparkPlan],
+         Seq[org.apache.spark.sql.execution.exchange.ShuffleExchangeExec], Seq[String]) = {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.functions.col
-    val df = spark.range(200).select(
-      graft.expr.Salt.salted(col("id").cast("string"), 10).as("key"), col("id").as("value"))
     val out = java.nio.file.Files.createTempDirectory("graft_plan_sink").toString
-    val (_, actions) = graft.ops.PlanCapture.capture(spark)(
-      graft.io.Sinks.writeSorted(df, 10, s"$out/sink"))
+    val (_, actions) = graft.ops.PlanCapture.capture(spark)(write(s"$out/sink"))
     val plans = actions.map(_.qe.executedPlan)
     val helper = new AdaptiveSparkPlanHelper {}
     val exchanges = plans.flatMap(p => helper.collect(p) { case e: ShuffleExchangeExec => e })
-    assert(exchanges.size == 1 &&
-      exchanges.head.outputPartitioning.isInstanceOf[ShufflePartitionIdPassThrough] &&
-      exchanges.head.outputPartitioning.numPartitions == 10,
-      s"expected one shufflepartitionidpassthrough exchange:\n${plans.mkString("\n")}")
     val nodes = actions.flatMap { a =>
       a.qe.analyzed.collectWithSubqueries { case n => n.nodeName } ++
         helper.collect(a.qe.executedPlan) { case n => n.nodeName }
     }
+    (plans, exchanges, nodes)
+  }
+
+  private def isSaltPassThrough(e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec,
+      modulo: Int): Boolean =
+    e.outputPartitioning.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.physical.ShufflePartitionIdPassThrough] &&
+      e.outputPartitioning.numPartitions == modulo
+
+  private def assertNoRdd(nodes: Seq[String]): Unit =
     assert(!nodes.exists(n => n.contains("ExternalRDD") || n.contains("LogicalRDD") ||
       n.contains("RDDScan")), s"RDD node in the sink plan: ${nodes.distinct}")
+
+  test("writeSorted: one salt pass-through exchange, no RDD round trip") {
+    import org.apache.spark.sql.functions.col
+    val df = spark.range(200).select(
+      graft.expr.Salt.salted(col("id").cast("string"), 10).as("key"), col("id").as("value"))
+    val (plans, exchanges, nodes) = sinkPlans(graft.io.Sinks.writeSorted(df, 10, _))
+    assert(exchanges.size == 1 && isSaltPassThrough(exchanges.head, 10),
+      s"expected one shufflepartitionidpassthrough exchange:\n${plans.mkString("\n")}")
+    assertNoRdd(nodes)
+  }
+
+  /** 400 rows shaped like the pipeline's `prepared` barrier, 3 views. */
+  private def preparedRows: org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions._
+    spark.range(400).select(concat(lit("v"), (col("id") % 3).cast("string")).as("mapKey"),
+      ((col("id") % 170) - 85.0).as("lat"), ((col("id") * 7 % 360) - 180.0).as("lng"),
+      (col("id") % 5).cast("int").as("borYear"), lit(1L).as("occCount"))
+  }
+
+  test("pipeline tile stage: t1's exchange and one salt exchange, a sort, no collect, no RDD") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    implicit val s: org.apache.spark.sql.SparkSession = spark
+    val cfg = MapPipeline.Config(workDir = "unused", saltModulo = 10)
+    val (plans, exchanges, nodes) = sinkPlans(graft.io.Sinks.write(
+      MapPipeline.tileSink(preparedRows, graft.tiles.Projections.fromEpsg("EPSG:3857"), 1, cfg), _))
+    val shown = plans.mkString("\n")
+    assert(exchanges.size == 2 &&
+      exchanges.count(_.outputPartitioning.isInstanceOf[HashPartitioning]) == 1 &&
+      exchanges.count(isSaltPassThrough(_, 10)) == 1,
+      s"expected t1's hash exchange and one salt pass-through exchange:\n$shown")
+    val helper = new AdaptiveSparkPlanHelper {}
+    assert(plans.exists(p => helper.find(p)(_.isInstanceOf[SortExec]).isDefined),
+      s"expected a sort within the salt partitions:\n$shown")
+    assert(plans.forall(p => helper.find(p)(_.isInstanceOf[ObjectHashAggregateExec]).isEmpty),
+      s"no collect_list aggregate in the tile stage:\n$shown")
+    assertNoRdd(nodes)
+  }
+
+  test("pipeline point sink: one salt exchange, no aggregate, no RDD") {
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    implicit val s: org.apache.spark.sql.SparkSession = spark
+    val cfg = MapPipeline.Config(workDir = "unused", saltModulo = 10)
+    val (plans, exchanges, nodes) =
+      sinkPlans(graft.io.Sinks.write(MapPipeline.pointSink(preparedRows, cfg), _))
+    val shown = plans.mkString("\n")
+    assert(exchanges.size == 1 && isSaltPassThrough(exchanges.head, 10),
+      s"expected one salt pass-through exchange:\n$shown")
+    val helper = new AdaptiveSparkPlanHelper {}
+    assert(plans.forall(p => helper.find(p)(_.isInstanceOf[BaseAggregateExec]).isEmpty),
+      s"no aggregate in the point sink:\n$shown")
+    assertNoRdd(nodes)
   }
 
   test("window_ntile matches the ntile(4) window definition row-for-row") {

@@ -1,6 +1,11 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+
 import graft.io.Sinks
+import graft.points.PointMap
+import graft.tiles.{Projections, Pyramid, TileAddressing}
 
 class SinksSpec extends SparkSpec {
   import spark.implicits._
@@ -203,5 +208,123 @@ class SinksSpec extends SparkSpec {
       fs.foreach { case (b, c) => bb.putInt(b); bb.putLong(c) }
     }
     assert(Sinks.decodeTile(bb.array()) == tile)
+  }
+
+  /** Per partition index, its rows as (key, value bytes, codec bytes). */
+  private def byPartition(sink: DataFrame): Map[Int, Seq[(String, Seq[Byte], Seq[Byte])]] =
+    sink.rdd.mapPartitionsWithIndex { (idx, it) =>
+      Iterator.single(idx -> it.map(r =>
+        (r.getString(0), r.getAs[Array[Byte]](1).toSeq, r.getAs[Array[Byte]](2).toSeq)).toVector)
+    }.collect().toMap
+
+  /** The grouped sink `sink` against the collect-then-encode frame `direct`:
+    * partition index == salt, keys sorted and unique within a partition,
+    * and the same bytes per key.
+    */
+  private def assertSameSink(sink: DataFrame, direct: DataFrame, modulo: Int): Unit = {
+    val parts = byPartition(sink)
+    assert(parts.size == modulo)
+    parts.foreach { case (idx, rows) =>
+      val keys = rows.map(_._1)
+      assert(keys.forall(_.startsWith(s"$idx:")), s"partition $idx holds only salt $idx: $keys")
+      assert(keys == keys.sorted.distinct, s"partition $idx sorted, one row per key: $keys")
+    }
+    val want = direct.collect().map(r =>
+      (r.getString(0), r.getAs[Array[Byte]](1).toSeq, r.getAs[Array[Byte]](2).toSeq)).sortBy(_._1)
+    assert(want.nonEmpty)
+    assert(parts.values.flatten.toSeq.sortBy(_._1) == want.toSeq)
+  }
+
+  /** Hand-built t1 rows `(mapKey, x, y, borYear, occCount)`; a null x is a
+    * null pixel (an unplottable point).
+    */
+  private def t1(rows: (String, Option[Int], Int, Int, Long)*): DataFrame =
+    rows.toDF("mapKey", "x", "y", "borYear", "occCount").select(col("mapKey"),
+      when(col("x").isNull, lit(null)).otherwise(struct(col("x"), col("y"))).as("xy"),
+      struct(col("borYear"), col("occCount")).as("borYearCount"))
+
+  private def assertTilesMatch(t1: DataFrame, zoom: Int, modulo: Int): Unit = {
+    implicit val s: SparkSession = spark
+    val addressing = TileAddressing(Projections.fromEpsg("EPSG:3857"), 512, 64)
+    assertSameSink(
+      Sinks.groupedTiles(Pyramid.tileFeatures(t1, addressing, zoom, modulo), modulo, 512),
+      Sinks.encodeTilesWithMvt(Pyramid.tiles(Pyramid.pixelFeatures(t1), addressing, zoom, modulo),
+        512).toDF("key", "value", "mvt"),
+      modulo)
+  }
+
+  test("groupedTiles: salt-aligned sorted partitions, bytes of the t2/t3 collect cascade") {
+    // z1 (2x2 tiles of 512 px): pixel (510, 510) sits in the south-east
+    // corner buffer, so it lands on all 4 tiles; pixel (100, 100) carries
+    // three borYears; the null pixel is dropped as t2 drops it
+    assertTilesMatch(t1(
+      ("a", Some(100), 100, 202403, 5L), ("a", Some(100), 100, 202401, 2L),
+      ("a", Some(100), 100, 3, 7L), ("a", Some(510), 510, 202403, 1L),
+      ("a", Some(700), 300, 202402, 4L), ("a", None, 0, 202403, 9L),
+      ("b", Some(510), 510, 202400, 3L), ("b", Some(1000), 20, 4, 6L),
+      ("c", Some(5), 1020, 202404, 8L)), zoom = 1, modulo = 4)
+  }
+
+  test("groupedTiles: the z0 wrap lands one pixel on its own tile four times") {
+    // z0 is one 512 px tile: pixel (10, 10) is in its north-west corner
+    // buffer, and every neighbour wraps to the tile itself, at local
+    // (10, 10), (522, 10), (10, 522) and (522, 522)
+    val rows = t1(("a", Some(10), 10, 202403, 5L), ("a", Some(10), 10, 202401, 1L),
+      ("a", Some(300), 300, 202403, 2L))
+    implicit val s: SparkSession = spark
+    val addressing = TileAddressing(Projections.fromEpsg("EPSG:3857"), 512, 64)
+    val tile = Sinks.groupedTiles(Pyramid.tileFeatures(rows, addressing, 0, 10), 10, 512)
+      .collect()
+    assert(tile.length == 1)
+    assert(Sinks.decodeTile(tile.head.getAs[Array[Byte]](1)).map(p => (p._1, p._2)) ==
+      Seq((10, 10), (10, 522), (300, 300), (522, 10), (522, 522)))
+    assertTilesMatch(rows, zoom = 0, modulo = 10)
+  }
+
+  test("groupedPoints: salt-aligned sorted partitions, bytes of the collect-then-encode path") {
+    // view "a": one location under two borYears plus two more locations;
+    // view "one": a single feature
+    val input = Seq(
+      ("a", 10.5, -20.25, 202403, 5L), ("a", 10.5, -20.25, 202401, 2L),
+      ("a", -3.0, 7.0, 4, 1L), ("a", 10.5, -21.0, 202403, 3L),
+      ("one", 0.0, 30.0, 202402, 2L),
+      ("b", 1.0, 1.0, 3, 4L), ("b", 1.0, -1.0, 3, 4L)
+    ).toDF("mapKey", "lat", "lng", "borYear", "occCount")
+    implicit val s: SparkSession = spark
+    assertSameSink(
+      Sinks.groupedPoints(PointMap.pointRows(input, 3), 3),
+      Sinks.encodePointsWithPb(PointMap.pointFeatures(input, 3)).toDF("key", "value", "pb"),
+      modulo = 3)
+    val one = Sinks.groupedPoints(PointMap.pointRows(input, 3), 3)
+      .filter(col("key").endsWith(":one")).collect()
+    assert(one.length == 1 &&
+      Sinks.decodePoints(one.head.getAs[Array[Byte]](1)) == Seq((0.0, 30.0, 202402, 2L)))
+  }
+
+  test("grouped sinks: empty input reads back as 0 rows, as writeSorted does") {
+    implicit val s: SparkSession = spark
+    val out = java.nio.file.Files.createTempDirectory("graft_grouped_empty").toString
+    val tileRows = Seq.empty[(String, Int, Int, Int, Long)]
+      .toDF("key", "x", "y", "borYear", "occCount")
+    val pointRows = Seq.empty[(String, Double, Double, Int, Long)]
+      .toDF("key", "lat", "lng", "borYear", "occCount")
+    Sinks.write(Sinks.groupedTiles(tileRows, 10, 512), s"$out/tiles")
+    Sinks.write(Sinks.groupedPoints(pointRows, 10), s"$out/points")
+    Sinks.writeSorted(Seq.empty[(String, Array[Byte])].toDF("key", "value"), 10, s"$out/sorted")
+    for (d <- Seq("tiles", "points", "sorted"))
+      assert(spark.read.parquet(s"$out/$d").count() == 0, s"$d reads back empty")
+    assert(spark.read.parquet(s"$out/tiles").columns.toSeq == Seq("key", "value", "mvt"))
+    assert(spark.read.parquet(s"$out/points").columns.toSeq == Seq("key", "value", "pb"))
+  }
+
+  test("grouped sinks: a key not salted for the modulo fails, naming the key") {
+    implicit val s: SparkSession = spark
+    def failure(sink: DataFrame): String = intercept[Exception](sink.collect()).getMessage
+    val tiles = failure(Sinks.groupedTiles(
+      Seq(("view:0:0:0", 1, 2, 202403, 5L)).toDF("key", "x", "y", "borYear", "occCount"), 10, 512))
+    assert(tiles.contains("key 'view:0:0:0' is not salted for modulo 10"), tiles)
+    val points = failure(Sinks.groupedPoints(
+      Seq(("25:view", 1.0, 2.0, 3, 1L)).toDF("key", "lat", "lng", "borYear", "occCount"), 20))
+    assert(points.contains("key '25:view' has salt 25 >= modulo 20"), points)
   }
 }
