@@ -9,7 +9,6 @@ import scala.util.control.NonFatal
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.expr.BorYear
 import graft.io.Sinks
 import graft.points.PointMap
 import graft.tiles.{Projection, Projections, Pyramid, TileAddressing}
@@ -109,7 +108,6 @@ object MapPipeline {
       saltModulo: Int = 10,
       threshold: Long = 250000,
       projections: Seq[String] = Seq("EPSG:3857", "EPSG:4326", "EPSG:3575", "EPSG:3031"),
-      borCodes: Seq[(String, Int)] = BorYear.EventTypeCodes,
       barrier: Option[Barrier] = None,
       // per-stage wall-clock hook (BenchPipeline); stages run eagerly
       // (barrier writes, sink writes), so each wall is a real wall time.
@@ -164,7 +162,7 @@ object MapPipeline {
       // -- 1. prepare + materialization barrier
       val prepared = stage("prepare_barrier") {
         barrier.materialize(spark,
-          Pyramid.prepareInput(occ, mapKeysArray, cfg.borCodes), "prepared")
+          Pyramid.prepareInput(occ, mapKeysArray), "prepared")
       }
 
       // -- 2. cardinality split (broadcast semi/anti join, not driver collect)
@@ -228,7 +226,7 @@ object MapPipeline {
     Sinks.groupedTiles(
       Pyramid.tileFeatures(Pyramid.pixelCounts(input, proj, zoom, cfg.tileSize),
         TileAddressing(proj, cfg.tileSize, cfg.bufferSize), zoom, cfg.saltModulo),
-      cfg.saltModulo, cfg.tileSize, cfg.borCodes)
+      cfg.saltModulo, cfg.tileSize)
 
   /** The point sink frame, as [[run]] writes it to `points`: the bytes of
     * `Sinks.encodePointsWithPb(PointMap.pointFeatures(..))`.

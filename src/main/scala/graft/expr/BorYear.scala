@@ -13,23 +13,10 @@ import org.apache.spark.sql.types.IntegerType
   */
 object BorYear {
 
-  /** The reference's 9-entry basisOfRecord code table
-    * (`EncodeBorYearUDF.java:33-43`).
-    */
-  val GbifBorCodes: Seq[(String, Int)] = Seq(
-    "PRESERVED_SPECIMEN" -> 0,
-    "MACHINE_OBSERVATION" -> 1,
-    "OCCURRENCE" -> 2,
-    "HUMAN_OBSERVATION" -> 3,
-    "LIVING_SPECIMEN" -> 4,
-    "OBSERVATION" -> 5,
-    "MATERIAL_CITATION" -> 6,
-    "MATERIAL_SAMPLE" -> 7,
-    "FOSSIL_SPECIMEN" -> 8
-  )
-
-  /** Test-fixture analog: `events.event_type` plays basisOfRecord
-    * (FIXTURES.md occurrence-analog mapping).
+  /** The basisOfRecord code table, the analog of the reference's
+    * (`EncodeBorYearUDF.java:33-43`): `events.event_type` plays
+    * basisOfRecord (FIXTURES.md occurrence-analog mapping). A name outside
+    * it encodes to null.
     */
   val EventTypeCodes: Seq[(String, Int)] = Seq(
     "signup" -> 0,
@@ -40,14 +27,14 @@ object BorYear {
   )
 
   /** bor string → int code as a CASE chain (codegen-friendly literal lookup). */
-  def borCode(bor: Column, codes: Seq[(String, Int)] = EventTypeCodes): Column =
-    codes.foldLeft(lit(null).cast(IntegerType)) { case (acc, (name, code)) =>
+  def borCode(bor: Column): Column =
+    EventTypeCodes.foldLeft(lit(null).cast(IntegerType)) { case (acc, (name, code)) =>
       when(bor === lit(name), lit(code)).otherwise(acc)
     }
 
   /** `encode(bor, year)` — `EncodeBorYearUDF.java:58-62`. */
-  def encode(bor: Column, year: Column, codes: Seq[(String, Int)] = EventTypeCodes): Column =
-    (coalesce(year, lit(0)) * lit(100) + borCode(bor, codes)).cast(IntegerType)
+  def encode(bor: Column, year: Column): Column =
+    (coalesce(year, lit(0)) * lit(100) + borCode(bor)).cast(IntegerType)
 
   /** Inverse: year component; 0 decodes to null (`EncodeBorYearUDF.java:64-67`). */
   def decodeYear(encoded: Column): Column = {
@@ -56,29 +43,37 @@ object BorYear {
   }
 
   /** Inverse: bor code → string (`EncodeBorYearUDF.java:69-71`). */
-  def decodeBor(encoded: Column, codes: Seq[(String, Int)] = EventTypeCodes): Column = {
+  def decodeBor(encoded: Column): Column = {
     val m = pmod(encoded, lit(100))
-    codes.foldLeft(lit(null).cast("string")) { case (acc, (name, code)) =>
+    EventTypeCodes.foldLeft(lit(null).cast("string")) { case (acc, (name, code)) =>
       when(m === lit(code), lit(name)).otherwise(acc)
     }
   }
 
+  /** Scalar inverse for the JVM-side blob encoders: `(bor code, year)` by
+    * `% 100` and `/ 100` (`EncodeBorYearUDF.bor/year`), year 0 standing
+    * for null.
+    */
+  def unpack(encoded: Int): (Int, Int) = (encoded % 100, encoded / 100)
+
+  /** bor code → name, the inverse of [[EventTypeCodes]]. */
+  val BorNames: Map[Int, String] = EventTypeCodes.map(_.swap).toMap
+
   /** DuckDB SQL for [[borCode]] over expression `e`. */
-  def sqlBorCode(e: String, codes: Seq[(String, Int)] = EventTypeCodes): String =
-    codes.map { case (n, c) => s"WHEN '$n' THEN $c" }
+  def sqlBorCode(e: String): String =
+    EventTypeCodes.map { case (n, c) => s"WHEN '$n' THEN $c" }
       .mkString(s"(CASE $e ", " ", " END)")
 
   /** DuckDB SQL for [[encode]]. */
-  def sqlEncode(borE: String, yearE: String,
-                codes: Seq[(String, Int)] = EventTypeCodes): String =
-    s"((COALESCE($yearE, 0) * 100 + ${sqlBorCode(borE, codes)})::INTEGER)"
+  def sqlEncode(borE: String, yearE: String): String =
+    s"((COALESCE($yearE, 0) * 100 + ${sqlBorCode(borE)})::INTEGER)"
 
   /** DuckDB SQL for [[decodeYear]]. */
   def sqlDecodeYear(e: String): String =
     s"(CASE WHEN ($e // 100) > 0 THEN ($e // 100)::INTEGER ELSE NULL END)"
 
   /** DuckDB SQL for [[decodeBor]]. */
-  def sqlDecodeBor(e: String, codes: Seq[(String, Int)] = EventTypeCodes): String =
-    codes.map { case (n, c) => s"WHEN $c THEN '$n'" }
+  def sqlDecodeBor(e: String): String =
+    EventTypeCodes.map { case (n, c) => s"WHEN $c THEN '$n'" }
       .mkString(s"(CASE ($e % 100) ", " ", " END)")
 }

@@ -7,7 +7,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.expr.Salt
+import graft.expr.{BorYear, Salt}
 
 /** Sorted key→binary sinks and deterministic blob encoders.
   *
@@ -48,11 +48,12 @@ object Sinks {
     * partitions. The id is [[Salt.partitionOf]], which fails naming the key
     * when the key is not salted for `saltModulo`. Keys sort in Spark's
     * binary UTF-8 order, which is HBase's unsigned-byte row-key order.
-    * `df` must have a string `key` column.
+    * `df` must have a string `key` column; `order` columns, if any, sort
+    * rows of one key after it.
     */
-  def sortedBySalt(df: DataFrame, saltModulo: Int): DataFrame =
+  def sortedBySalt(df: DataFrame, saltModulo: Int, order: Seq[String] = Nil): DataFrame =
     df.repartitionById(saltModulo, Salt.partitionOf(col("key"), saltModulo))
-      .sortWithinPartitions("key")
+      .sortWithinPartitions(("key" +: order).map(col): _*)
 
   /** Write as the engine's HFile-analog: parquet of (key:string, value:binary),
     * salt-partitioned and key-sorted within partitions.
@@ -72,10 +73,8 @@ object Sinks {
     * [[encodeTilesWithMvt]] over `Pyramid.tiles`. Consecutive rows of a
     * pixel fold into its features, consecutive pixels of a key into its tile.
     */
-  def groupedTiles(rows: DataFrame, saltModulo: Int, extent: Int,
-                   codes: Seq[(String, Int)] = graft.expr.BorYear.EventTypeCodes)
-      (implicit spark: SparkSession): DataFrame = {
-    val codeMap = codes.map(_.swap).toMap
+  def groupedTiles(rows: DataFrame, saltModulo: Int, extent: Int)
+      (implicit spark: SparkSession): DataFrame =
     grouped(rows, saltModulo, Seq("x", "y", "borYear"), "mvt") { rs =>
       val pixels = mutable.ArrayBuffer.empty[Row]
       var i = 0
@@ -89,9 +88,8 @@ object Sinks {
         pixels += Row(x, y, feats.toSeq)
       }
       val tile = pixels.toSeq
-      (encodeTileValue(tile), Mvt.encode(mvtLayers(tile, codeMap), extent))
+      (encodeTileValue(tile), Mvt.encode(mvtLayers(tile), extent))
     }
-  }
 
   /** (key, custom value, protobuf bytes) from
     * [[graft.points.PointMap.pointRows]] rows
@@ -105,17 +103,18 @@ object Sinks {
       encodePoints(rs.map(r => Row(r.getDouble(1), r.getDouble(2), r.getInt(3), r.getLong(4))))
     }
 
-  /** Salt exchange, sort within partitions on `key` then `order`, and one
-    * pass that hands each key's consecutive rows to `encode`: the frame
-    * `(key, value, <codec>)`. Holds one key's rows at a time; the sort is
-    * Spark's spilling external sorter.
+  /** [[sortedBySalt]] on `key` then `order`, and one pass that hands each
+    * key's consecutive rows to `encode`: the frame `(key, value, <codec>)`.
+    * Holds one key's rows at a time; the sort is Spark's spilling external
+    * sorter. A null `borYear` (a basisOfRecord outside
+    * `BorYear.EventTypeCodes`) fails the task naming its key.
     */
   private def grouped(rows: DataFrame, saltModulo: Int, order: Seq[String], codec: String)
       (encode: IndexedSeq[Row] => (Array[Byte], Array[Byte]))
       (implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    rows.repartitionById(saltModulo, Salt.partitionOf(col("key"), saltModulo))
-      .sortWithinPartitions(("key" +: order).map(col): _*)
+    val borYear = rows.schema.fieldIndex("borYear")
+    sortedBySalt(rows, saltModulo, order)
       .mapPartitions { it =>
         val rs = it.buffered
         new Iterator[(String, Array[Byte], Array[Byte])] {
@@ -124,6 +123,9 @@ object Sinks {
             val key = rs.head.getString(0)
             val group = mutable.ArrayBuffer.empty[Row]
             while (rs.hasNext && rs.head.getString(0) == key) group += rs.next()
+            if (group.exists(_.isNullAt(borYear)))
+              throw new IllegalArgumentException(s"sink key '$key' has a null borYear: " +
+                "its basisOfRecord is outside BorYear.EventTypeCodes")
             val (value, wire) = encode(group.toIndexedSeq)
             (key, value, wire)
           }
@@ -159,8 +161,7 @@ object Sinks {
     * reference's `HashMap.keySet` iteration, order is insertion-deterministic
     * end to end.
     */
-  private def mvtLayers(pixels: Seq[Row], codes: Map[Int, String])
-      : Seq[(String, Seq[Mvt.PointFeature])] = {
+  private def mvtLayers(pixels: Seq[Row]): Seq[(String, Seq[Mvt.PointFeature])] = {
     val layers = mutable.LinkedHashMap
       .empty[String, mutable.ArrayBuffer[Mvt.PointFeature]]
     pixels.foreach { p =>
@@ -168,9 +169,8 @@ object Sinks {
       val perBor = mutable.LinkedHashMap
         .empty[String, mutable.ArrayBuffer[(String, Long)]]
       p.getSeq[Row](2).foreach { f =>
-        val enc = f.getInt(0); val count = f.getLong(1)
-        val bor = codes.getOrElse(enc % 100, "UNKNOWN")
-        val year = enc / 100
+        val (code, year) = BorYear.unpack(f.getInt(0)); val count = f.getLong(1)
+        val bor = BorYear.BorNames.getOrElse(code, "UNKNOWN")
         perBor.getOrElseUpdate(bor, mutable.ArrayBuffer.empty) +=
           ((if (year > 0) year.toString else "null") -> count)
       }
@@ -188,15 +188,13 @@ object Sinks {
     * reference passes its tileSize as the encoder extent,
     * `VectorTiles.java:40`).
     */
-  def encodeTilesWithMvt(tiles: DataFrame, extent: Int,
-                         codes: Seq[(String, Int)] = graft.expr.BorYear.EventTypeCodes)
+  def encodeTilesWithMvt(tiles: DataFrame, extent: Int)
       (implicit spark: SparkSession): Dataset[(String, Array[Byte], Array[Byte])] = {
     import spark.implicits._
-    val codeMap = codes.map(_.swap).toMap
     tiles.select(col("key"), col("tile")).map { r =>
       val pixels = r.getSeq[Row](1)
       (r.getString(0), encodeTileValue(pixels),
-        Mvt.encode(mvtLayers(pixels, codeMap), extent))
+        Mvt.encode(mvtLayers(pixels), extent))
     }
   }
 
@@ -249,9 +247,8 @@ object Sinks {
   /** Both point codecs over one view's features `(lat, lng, borYear, count)`. */
   private def encodePoints(feats: Seq[Row]): (Array[Byte], Array[Byte]) = {
     val pb = PointPb.encode(feats.map { f =>
-      val borYear = f.getInt(2)
-      PointPb.Feature(f.getDouble(0), f.getDouble(1),
-        bor = borYear % 100, year = borYear / 100, count = f.getLong(3))
+      val (bor, year) = BorYear.unpack(f.getInt(2))
+      PointPb.Feature(f.getDouble(0), f.getDouble(1), bor, year, count = f.getLong(3))
     })
     (encodePointValue(feats), pb)
   }

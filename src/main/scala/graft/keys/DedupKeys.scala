@@ -3,7 +3,7 @@ package keys
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import graft.llm.{Dedup, TextAnalysis => TA, Scrub}
+import graft.llm.{Dedup, KeepOne, TextAnalysis => TA, Scrub}
 
 /** Document deduplication: exact, URL, MinHash/SimHash/LSH, verified and
   * clustered near-dups, containment, substring / line / winnowing spans,
@@ -475,11 +475,10 @@ private[graft] object DedupKeys {
       val pairs = Dedup.shingleSets(docs(s, d))
         .select(col("doc_id"), explode(col("sh")).as("g"))
         .localCheckpoint() // owner table + per-doc join read one tokenize pass
-      val owner = pairs.groupBy("g").agg(min("doc_id").as("owner"))
-      pairs.join(owner, "g")
+      KeepOne.foreign(pairs, "g")
         .groupBy("doc_id")
         .agg(count(lit(1)).as("n_shingles"),
-          sum(when(col("owner") === col("doc_id"), 1L).otherwise(0L)).as("n_novel"))
+          sum(when(!col("foreign"), 1L).otherwise(0L)).as("n_novel"))
         .withColumn("novel_ppm", expr("(n_novel * 1000000) div n_shingles"))
         .orderBy("doc_id")
     },

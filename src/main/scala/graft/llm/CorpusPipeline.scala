@@ -132,41 +132,22 @@ object CorpusPipeline {
     Chunks.chunkFrame(docs)
       .select(col("doc_id"), col("ch").as("u"), col("n_tok").as("wt"))
 
-  /** Doc ids whose duplicated-unit weight fraction ≥ maxDupPpm, with
-    * ownership = min doc_id per unit over `units` (the stage INPUT — the
-    * Lines/Substring keep-one convention lifted to a whole-doc admission
-    * gate). Exact integer ppm, no pairing: cost is two hash aggregates of
-    * the unit stream, never units².
+  /** Doc ids whose duplicated-unit weight fraction ≥ maxDupPpm, a unit
+    * being duplicated where [[KeepOne.foreign]] marks it over `units` (the
+    * stage INPUT — the Lines/Substring keep-one convention lifted to a
+    * whole-doc admission gate). With a `frozen` corpus-side stage input
+    * (the delta run) a unit is duplicated iff the corpus carries it or an
+    * earlier DELTA doc does — linear in the delta, the corpus side is never
+    * recomputed. Exact integer ppm, no pairing: cost is two hash aggregates
+    * of the unit stream, never units².
     */
-  private def noveltyDrops(units: DataFrame, maxDupPpm: Int): DataFrame = {
+  private def noveltyDrops(units: DataFrame, maxDupPpm: Int,
+                           frozen: Option[DataFrame] = None): DataFrame = {
     val u = units.localCheckpoint() // owner table + per-doc stats read it
-    val own = u.groupBy("u").agg(min("doc_id").as("owner"))
-    u.join(own, Seq("u"))
+    KeepOne.foreign(u, "u", frozen)
       .groupBy("doc_id")
       .agg(sum(col("wt")).as("tot"),
-        sum(when(col("owner") < col("doc_id"), col("wt")).otherwise(lit(0L)))
-          .as("dup"))
-      .filter(expr("(dup * 1000000) div tot") >= maxDupPpm)
-      .select("doc_id")
-  }
-
-  /** Frozen-corpus twin of [[noveltyDrops]]: a delta unit is duplicated
-    * iff it exists in the corpus-side stage input (every corpus id is
-    * below the boundary, so the corpus owner always wins) OR an earlier
-    * DELTA doc carries it. Linear in the delta: the corpus side is one
-    * distinct-unit probe of the frozen stage frame, never a recompute.
-    */
-  private def noveltyDropsDelta(corpusUnits: DataFrame, deltaUnits: DataFrame,
-                                maxDupPpm: Int): DataFrame = {
-    val u = deltaUnits.localCheckpoint()
-    val idx = corpusUnits.select("u").distinct().withColumn("in_corpus", lit(true))
-    val own = u.groupBy("u").agg(min("doc_id").as("d_owner"))
-    u.join(idx, Seq("u"), "left").join(own, Seq("u"))
-      .groupBy("doc_id")
-      .agg(sum(col("wt")).as("tot"),
-        sum(when(coalesce(col("in_corpus"), lit(false)) ||
-            col("d_owner") < col("doc_id"), col("wt")).otherwise(lit(0L)))
-          .as("dup"))
+        sum(when(col("foreign"), col("wt")).otherwise(lit(0L))).as("dup"))
       .filter(expr("(dup * 1000000) div tot") >= maxDupPpm)
       .select("doc_id")
   }
@@ -411,7 +392,7 @@ object CorpusPipeline {
     *   - novelty gates: a delta unit (winnow fingerprint / CDC chunk) is
     *     duplicated iff the corpus GATE-INPUT frame carries it (any
     *     corpus carrier out-ranks every delta doc under monotonic ids)
-    *     or an earlier delta doc does — [[noveltyDropsDelta]]; corpus
+    *     or an earlier delta doc does — [[noveltyDrops]]; corpus
     *     verdicts are D-independent, so the frozen probe is exact.
     *   - span scrub: [[Substring.scrubAgainst]] the frozen GATED-stage
     *     corpus window fingerprints (pre-scrub text — the union run
@@ -533,8 +514,8 @@ object CorpusPipeline {
       if (cfg.winnowMaxDupPpm <= 0) deduped
       else barrier.materialize(spark,
         deduped.join(
-          noveltyDropsDelta(winnowUnits(state.deduped), winnowUnits(deduped),
-            cfg.winnowMaxDupPpm),
+          noveltyDrops(winnowUnits(deduped), cfg.winnowMaxDupPpm,
+            Some(winnowUnits(state.deduped))),
           Seq("doc_id"), "left_anti"), "delta_winnow")
     }
     val gated = timed(cfg, "cdc_gate") {
@@ -556,8 +537,8 @@ object CorpusPipeline {
           if (cfg.winnowMaxDupPpm <= 0) state.deduped else state.gated
         barrier.materialize(spark,
           winnowed.join(
-            noveltyDropsDelta(cdcUnits(corpusCdcInput), cdcUnits(winnowed),
-              cfg.cdcMaxDupPpm),
+            noveltyDrops(cdcUnits(winnowed), cfg.cdcMaxDupPpm,
+              Some(cdcUnits(corpusCdcInput))),
             Seq("doc_id"), "left_anti"), "delta_cdc")
       }
     }

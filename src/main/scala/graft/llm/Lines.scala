@@ -142,45 +142,32 @@ object Lines {
     */
   def scrub(docs: DataFrame, w: Int = LineWidthTok): DataFrame = {
     val lf = fastLineFrame(docs, w).localCheckpoint() // feeds ownership AND removal
-    val own = lf.groupBy("lh")
-      .agg(countDistinct(col("doc_id")).as("nd"), min(col("doc_id")).as("owner"))
-      .filter(col("nd") >= 2)
-      .select("lh", "owner")
-    rebuild(docs,
-      lf.join(own, Seq("lh")).filter(col("doc_id") =!= col("owner"))
-        .select(col("doc_id"), col("line_no")), w)
+    rebuild(docs, KeepOne.foreign(lf, "lh"), w)
   }
 
   /** [[scrub]] of a NEW batch against a FROZEN corpus line set (`indexLh`:
-    * a `lh` column — [[fastLineFrame]] of the corpus's line-stage INPUT,
-    * reduced to DISTINCT here; the index MUST come from the same fast-hash
-    * family or the probe join never matches). Ownership mirrors the union-run scrub
-    * under monotonic doc ids: a batch line present in the corpus is
-    * always non-owner (the corpus carrier is the min id and keeps its
-    * copy — which it already has, so the corpus is never rewritten);
-    * lines absent from the corpus fall back to keep-one within the batch.
-    * The [[Substring.scrubAgainst]] contract at line granularity; batch
-    * cost is linear plus one distinct-reduce probe of the index.
+    * a `lh` column — [[fastLineFrame]] of the corpus's line-stage INPUT;
+    * the index MUST come from the same fast-hash family or it never
+    * matches). Ownership mirrors the union-run scrub under monotonic doc
+    * ids: the index enters [[KeepOne.foreign]] as the frozen owner, so a
+    * batch line present in the corpus is always non-owner (the corpus
+    * keeps its copy — which it already has, so the corpus is never
+    * rewritten); lines absent from the corpus fall back to keep-one within
+    * the batch. The [[Substring.scrubAgainst]] contract at line
+    * granularity; batch cost is linear plus the index's rows in the one
+    * owner aggregate.
     */
   def scrubAgainst(newDocs: DataFrame, indexLh: DataFrame,
                    w: Int = LineWidthTok): DataFrame = {
     val lf = fastLineFrame(newDocs, w).localCheckpoint()
-    val inIdx = indexLh.select(col("lh")).distinct()
-      .withColumn("in_idx", lit(true))
-    val own = lf.groupBy("lh")
-      .agg(countDistinct(col("doc_id")).as("nd"), min(col("doc_id")).as("owner"))
-    val marked = lf.join(inIdx, Seq("lh"), "left").join(own, Seq("lh"))
-      .filter(coalesce(col("in_idx"), lit(false)) ||
-        (col("nd") >= 2 && col("doc_id") =!= col("owner")))
-      .select(col("doc_id"), col("line_no"))
-    rebuild(newDocs, marked, w)
+    rebuild(newDocs, KeepOne.foreign(lf, "lh", Some(indexLh)), w)
   }
 
-  /** Rebuild every doc minus the `(doc_id, line_no)` removal rows —
+  /** Rebuild every doc minus its lines that [[KeepOne.foreign]] marked —
     * shared by [[scrub]] and [[scrubAgainst]].
     */
-  private def rebuild(docs: DataFrame, remLines: DataFrame, w: Int): DataFrame = {
-    val rem = remLines
+  private def rebuild(docs: DataFrame, marked: DataFrame, w: Int): DataFrame = {
+    val rem = marked.filter(col("foreign")).select(col("doc_id"), col("line_no"))
       .distinct() // a doc repeating a foreign line yields one removal per line_no
       .groupBy("doc_id")
       .agg(collect_list(col("line_no")).as("rem")) // set semantics only:

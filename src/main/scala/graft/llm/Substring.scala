@@ -237,46 +237,33 @@ object Substring {
     */
   def scrub(docs: DataFrame, w: Int): DataFrame = {
     val wins = fastWindowFrame(docs, w).localCheckpoint()
-    val own = wins.groupBy("wh")
-      .agg(countDistinct(col("doc_id")).as("nd"), min(col("doc_id")).as("owner"))
-      .filter(col("nd") >= 2)
-      .select("wh", "owner")
-    rebuildClean(docs, removalIndex(
-      wins.join(own, Seq("wh")).filter(col("doc_id") =!= col("owner")), w))
+    rebuildClean(docs, removalIndex(KeepOne.foreign(wins, "wh"), w))
   }
 
   /** [[scrub]] of a NEW batch against a FROZEN corpus window-fingerprint
     * set (`indexWh`: a `wh` column — [[fastWindowFrame]] of the already-
-    * ingested corpus, reduced to DISTINCT fingerprints here; the index
-    * MUST come from the same fast-hash family or the probe join never
-    * matches). Ownership
-    * mirrors the union-run scrub under monotonic doc ids (every corpus id
-    * < every batch id): a batch window whose fingerprint exists in the
-    * corpus is always non-owner (the corpus carrier is the min id and
-    * keeps its copy — which it already has, so the corpus is never
+    * ingested corpus; the index MUST come from the same fast-hash family
+    * or it never matches). Ownership mirrors the union-run scrub under
+    * monotonic doc ids (every corpus id < every batch id): the index
+    * enters [[KeepOne.foreign]] as the frozen owner, so a batch window
+    * whose fingerprint exists in the corpus is always non-owner (the
+    * corpus keeps its copy — which it already has, so the corpus is never
     * rewritten); fingerprints absent from the corpus fall back to
     * keep-one within the batch (min batch doc). Cost: linear in the batch
-    * plus one distinct-reduce probe pass of the index — never a corpus
+    * plus the index's rows in the one owner aggregate — never a corpus
     * rebuild ([[graft.llm.CorpusPipeline.admitDelta]] is the composed
     * caller; equivalence to the union run is pinned in CorpusDeltaSpec).
     */
   def scrubAgainst(newDocs: DataFrame, indexWh: DataFrame, w: Int): DataFrame = {
     val wins = fastWindowFrame(newDocs, w).localCheckpoint()
-    val inIdx = indexWh.select(col("wh")).distinct()
-      .withColumn("in_idx", lit(true))
-    val own = wins.groupBy("wh")
-      .agg(countDistinct(col("doc_id")).as("nd"), min(col("doc_id")).as("owner"))
-    val marked = wins.join(inIdx, Seq("wh"), "left").join(own, Seq("wh"))
-      .filter(coalesce(col("in_idx"), lit(false)) ||
-        (col("nd") >= 2 && col("doc_id") =!= col("owner")))
-    rebuildClean(newDocs, removalIndex(marked, w))
+    rebuildClean(newDocs, removalIndex(KeepOne.foreign(wins, "wh", Some(indexWh)), w))
   }
 
   /** (doc_id, rem: array<bigint>) removed-token index sets from the
-    * filtered window rows that lost ownership.
+    * window rows that [[KeepOne.foreign]] marked.
     */
-  private def removalIndex(remWins: DataFrame, w: Int): DataFrame =
-    remWins
+  private def removalIndex(marked: DataFrame, w: Int): DataFrame =
+    marked.filter(col("foreign"))
       .select(col("doc_id"),
         explode(sequence(col("pos"), col("pos") + (w - 1))).as("idx"))
       .distinct()

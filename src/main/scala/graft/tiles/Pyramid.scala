@@ -51,21 +51,17 @@ object Pyramid {
     * `lat, lng, basisOfRecord, year` + the id columns consumed by
     * `mapKeysArray` (a ready-built `array<string>` column expression).
     */
-  def prepareInput(
-      occ: DataFrame,
-      mapKeysArray: org.apache.spark.sql.Column,
-      borCodes: Seq[(String, Int)] = BorYear.EventTypeCodes): DataFrame =
-    views(occ, mapKeysArray, borCodes)
+  def prepareInput(occ: DataFrame, mapKeysArray: org.apache.spark.sql.Column): DataFrame =
+    views(occ, mapKeysArray)
       .groupBy("mapKey", "lat", "lng", "borYear")
       .agg(count(lit(1)).as("occCount"))
 
   /** One row per (occurrence, map view): `mapKey, lat, lng, borYear`. */
-  private def views(occ: DataFrame, mapKeysArray: org.apache.spark.sql.Column,
-      borCodes: Seq[(String, Int)]): DataFrame =
+  private def views(occ: DataFrame, mapKeysArray: org.apache.spark.sql.Column): DataFrame =
     occ.select(
       explode(mapKeysArray).as("mapKey"),
       col("lat"), col("lng"),
-      BorYear.encode(col("basisOfRecord"), col("year"), borCodes).as("borYear"))
+      BorYear.encode(col("basisOfRecord"), col("year")).as("borYear"))
 
   /** t1: global-pixel projection + per-pixel sum (`TileMapBuilder.java:113-127`).
     *
@@ -100,9 +96,8 @@ object Pyramid {
     */
   def pixelCountsDirect(occ: DataFrame,
       mapKeysArray: org.apache.spark.sql.Column, proj: Projection,
-      zoom: Int, tileSize: Int,
-      borCodes: Seq[(String, Int)] = BorYear.EventTypeCodes): DataFrame =
-    pixelCounts(views(occ, mapKeysArray, borCodes).withColumn("occCount", lit(1L)),
+      zoom: Int, tileSize: Int): DataFrame =
+    pixelCounts(views(occ, mapKeysArray).withColumn("occCount", lit(1L)),
       proj, zoom, tileSize)
 
   /** t2: collect per-pixel features (`TileMapBuilder.java:130-136`). */

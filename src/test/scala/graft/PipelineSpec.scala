@@ -10,7 +10,6 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.analog.{OccurrenceAnalog => OA}
-import graft.expr.BorYear
 import graft.io.Sinks
 import graft.ops.PlanCapture
 import graft.tiles.{Projections, Pyramid}
@@ -173,7 +172,7 @@ class PipelineSpec extends SparkSpec {
     // prune partitions instead of scanning the whole pyramid
     val events = Tables.events(spark, "/root/testdata/sf0.001")
     val occ = OA.occurrences(events)
-    val prepared = Pyramid.prepareInput(occ, OA.mapKeysArray, BorYear.EventTypeCodes)
+    val prepared = Pyramid.prepareInput(occ, OA.mapKeysArray)
     val proj = Projections.fromEpsg("EPSG:3857")
     val byZoom = (0 to 1).map { z =>
       Pyramid.build(prepared, proj, z, 512, 64, 10).withColumn("zoom", lit(z))
@@ -233,7 +232,7 @@ class PipelineSpec extends SparkSpec {
   test("deep zoom: z17 builds on bigint tile ids and conserves counts") {
     val events = Tables.events(spark, "/root/testdata/sf0.001")
     val occ = OA.occurrences(events)
-    val input = Pyramid.prepareInput(occ, OA.mapKeysArray, BorYear.EventTypeCodes)
+    val input = Pyramid.prepareInput(occ, OA.mapKeysArray)
       .localCheckpoint()
     val proj = Projections.fromEpsg("EPSG:3857")
 
@@ -368,7 +367,7 @@ class PipelineSpec extends SparkSpec {
         if (epsg == "EPSG:3031") spark.read.parquet(s"$work/tile_input_south") else res.tileInput
       val direct = Sinks.encodeTilesWithMvt(
         Pyramid.build(input, Projections.fromEpsg(epsg), z, cfg.tileSize, cfg.bufferSize,
-          cfg.saltModulo), cfg.tileSize, cfg.borCodes).toDF("key", "value", "mvt")
+          cfg.saltModulo), cfg.tileSize).toDF("key", "value", "mvt")
       val dir = s"$work/tiles/${epsg.replace(':', '_')}/z$z"
       val (n, h) = digest(spark.read.parquet(dir))
       assert(n > 0 && (n, h) == digest(direct), s"$dir equals the direct build")

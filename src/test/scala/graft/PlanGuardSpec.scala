@@ -119,6 +119,25 @@ class PlanGuardSpec extends SparkSpec {
     assertNoRdd(nodes)
   }
 
+  test("line_scrub / substring_scrub: one min(doc_id) owner aggregate — no count(distinct, no (unit, doc_id) exchange") {
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val helper = new AdaptiveSparkPlanHelper {}
+    for ((key, unit) <- Seq("line_scrub" -> "lh", "substring_scrub" -> "wh")) {
+      val plan = SparkEntry.queries(key)(spark, d).queryExecution.executedPlan
+      val shown = plan.toString
+      assert(!shown.toLowerCase.contains("count(distinct"), s"$key plans a distinct count:\n$shown")
+      val unitDocKeyed = helper.collect(plan) {
+        case e: ShuffleExchangeExec => e.outputPartitioning
+      }.collect { case h: HashPartitioning =>
+        h.expressions.collect { case a: AttributeReference => a.name }.toSet
+      }.filter(names => names.contains(unit) && names.contains("doc_id"))
+      assert(unitDocKeyed.isEmpty, s"$key has an exchange keyed on ($unit, doc_id):\n$shown")
+    }
+  }
+
   test("window_ntile matches the ntile(4) window definition row-for-row") {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.expressions.Window

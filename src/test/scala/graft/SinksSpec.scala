@@ -327,4 +327,27 @@ class SinksSpec extends SparkSpec {
       Seq(("25:view", 1.0, 2.0, 3, 1L)).toDF("key", "lat", "lng", "borYear", "occCount"), 20))
     assert(points.contains("key '25:view' has salt 25 >= modulo 20"), points)
   }
+
+  /** The message of the exception `sink` fails its action with. */
+  private def nullBorYearFailure(sink: DataFrame): String =
+    intercept[Exception](sink.collect()).getMessage
+
+  test("groupedTiles: a null borYear fails naming the key and the cause") {
+    implicit val s: SparkSession = spark
+    val rows = Seq(("3:view:0:0:0", 1, 2, Some(202403), 5L), ("3:view:0:0:0", 1, 3, None, 1L),
+        ("4:view:0:0:1", 1, 2, Some(202403), 5L))
+      .toDF("key", "x", "y", "borYear", "occCount")
+    val msg = nullBorYearFailure(Sinks.groupedTiles(rows, 10, 512))
+    assert(msg.contains("sink key '3:view:0:0:0' has a null borYear") &&
+      msg.contains("outside BorYear.EventTypeCodes"), msg)
+  }
+
+  test("groupedPoints: a null borYear fails naming the key and the cause") {
+    implicit val s: SparkSession = spark
+    val rows = Seq(("7:view", 1.0, 2.0, Option.empty[Int], 1L), ("7:view", 1.0, 3.0, Some(3), 2L))
+      .toDF("key", "lat", "lng", "borYear", "occCount")
+    val msg = nullBorYearFailure(Sinks.groupedPoints(rows, 10))
+    assert(msg.contains("sink key '7:view' has a null borYear") &&
+      msg.contains("outside BorYear.EventTypeCodes"), msg)
+  }
 }
